@@ -529,14 +529,11 @@ def main() -> None:
         (REPO / "BENCH").mkdir(exist_ok=True)
         (REPO / "BENCH" / "QUERIES.json").write_text(json.dumps(full, indent=1))
     if "queries" in res:
-        try:
-            from georaster_spark.plans.contract import GATE_FIRST
-        except Exception:
-            GATE_FIRST = []
+        from georaster_spark.plans import contract
+
         q = res["queries"]
-        order = [n for n in GATE_FIRST if n in q] + [
-            n for n in q if n not in GATE_FIRST
-        ]
+        # the registry is already in scoreboard order
+        order = [n for n in contract.spatial_queries() if n in q]
         slim: dict[str, float] = {}
         base = dict(res)
         base["queries"] = slim

@@ -39,27 +39,11 @@ from ..functions import cells
 MAX_UNROLL_EDGES = 16
 
 
-def convex_pip(ring: Column, px: Column, py: Column, max_edges: int | None = None) -> Column:
-    """True iff (px, py) is inside/on the convex CCW closed ring — the
-    GENERAL entry point (any ring size), and the engine twin of
-    oracle_sql.pip_where.
-
-    Dispatch: with a caller-supplied `max_edges` bound it takes the
-    unrolled whole-stage-codegen fast path (runtime-guarded — a ring
-    exceeding the bound raises rather than silently passing untested
-    edges); without a bound it takes the interpreted higher-order-function
-    path, correct for arbitrary convex rings.  pip_join computes the bound
-    from the zones side once and passes it down.
-    """
-    if max_edges is None:
-        return convex_pip_hof(ring, px, py)
-    return convex_pip_unrolled(ring, px, py, max_edges=max_edges)
-
-
 def convex_pip_unrolled(
     ring: Column, px: Column, py: Column, max_edges: int = MAX_UNROLL_EDGES
 ) -> Column:
-    """Unrolled codegen fast path of convex_pip.
+    """True iff (px, py) is inside/on the convex CCW closed ring — the
+    unrolled whole-stage-codegen fast path of the half-plane test.
 
     Edge tests over plain Column primitives (`get` + struct field +
     arithmetic) so the whole refine predicate stays inside whole-stage
@@ -98,9 +82,11 @@ def convex_pip_unrolled(
 
 
 def convex_pip_hof(ring: Column, px: Column, py: Column) -> Column:
-    """Higher-order-function variant for arbitrary ring sizes (interpreted:
-    zip_with/exists are CodegenFallback) — the general-case fallback and
-    the differential-test twin of the unrolled fast path."""
+    """True iff (px, py) is inside/on the convex CCW closed ring, for any
+    ring size — the engine twin of oracle_sql.pip_where.  Interpreted
+    (zip_with/exists are CodegenFallback); the general-case fallback and
+    the differential-test twin of the unrolled fast path
+    (tests/test_pip_refine.py)."""
     n = F.size(ring)
     p1 = F.slice(ring, 1, n - 1)
     p2 = F.slice(ring, 2, n - 1)
@@ -571,7 +557,7 @@ def star_ring_edges(zones: DataFrame) -> DataFrame:
     snapped bbox center.  The deflation keeps every star vertex inside
     the original ring, so the original bbox remains a valid prefilter,
     while the polygon itself is genuinely non-convex — the shape class
-    the half-plane test (convex_pip) cannot answer and the even-odd
+    the half-plane test (convex_pip_hof) cannot answer and the even-odd
     ray cast (raycast_pip_star) exists for."""
     verts = (
         zones.select(

@@ -10,10 +10,8 @@ Distributed shape (SURVEY §2.1 R12):
 
   1. CANDIDATES (slim) — points compute their res-r cell (pure
      Column); tiles project METADATA ONLY (no `bytes`) and explode
-     cover_cells; equi-join on cell_id.  The points side is broadcast
-     by default (query-sized), so the tile side never shuffles.  Flip
-     broadcast_points=False for point sets too big to broadcast: same
-     plan, shuffled hash join on cell_id.
+     cover_cells; equi-join on cell_id.  The points side is always
+     broadcast (query-sized), so the tile side never shuffles.
   2. EXACT containment filter: xmin <= x < xmax AND ymin < y <= ymax
      (closed-open so a point on a shared tile edge hits exactly one
      side; y edge is open at the bottom per the north-up convention).
@@ -46,20 +44,15 @@ from ..functions import cells
 _GATHER_SCHEMA = "point_id long, image_id string, val double"
 
 
-def _candidates(
-    points: DataFrame,
-    tiles: DataFrame,
-    r: int,
-    broadcast_points: bool,
-) -> DataFrame:
-    pts = points.select(
-        "point_id",
-        "x",
-        "y",
-        cells.cell_encode(F.col("x"), F.col("y"), r).alias("cell_id"),
+def _candidates(points: DataFrame, tiles: DataFrame, r: int) -> DataFrame:
+    pts = F.broadcast(
+        points.select(
+            "point_id",
+            "x",
+            "y",
+            cells.cell_encode(F.col("x"), F.col("y"), r).alias("cell_id"),
+        )
     )
-    if broadcast_points:
-        pts = F.broadcast(pts)
     tl = tiles.select(
         "image_id",
         "xmin",
@@ -236,10 +229,8 @@ def _sample(
     r: int = DEFAULT_RES,
     window: int | None = None,
     reducer: str = "mean",
-    broadcast_points: bool = True,
-    value_name: str = "val",
 ) -> DataFrame:
-    cand = _candidates(points, tiles, r, broadcast_points)
+    cand = _candidates(points, tiles, r)
     win = Window.partitionBy("point_id").orderBy("image_id")
     winners = (
         cand.select("point_id", "x", "y", "image_id")
@@ -254,9 +245,9 @@ def _sample(
     gather_in = tiles.select(
         "image_id", "bytes", "w", "h", "fmt", "gt_x0", "gt_y0", "gt_xres", "gt_yres",
         nodata_col.alias("nodata"),
-    ).join(F.broadcast(winners) if broadcast_points else winners, "image_id")
+    ).join(F.broadcast(winners), "image_id")
     vals = gather_in.mapInPandas(_gather_fn(mode, window, reducer), schema=_GATHER_SCHEMA)
-    return vals.select("point_id", "image_id", F.col("val").alias(value_name))
+    return vals.select("point_id", "image_id", "val")
 
 
 def value_at_coords(
@@ -265,16 +256,12 @@ def value_at_coords(
     r: int = DEFAULT_RES,
     window: int | None = None,
     reducer: str = "mean",
-    broadcast_points: bool = True,
 ) -> DataFrame:
     """R12: (point_id, image_id, val) — value of the pixel containing each
     point, from the lowest-image_id containing tile.  `window=k` averages
     (or `reducer`s) the clipped k x k neighborhood, matching upstream's
     `window=` argument."""
-    return _sample(
-        points, tiles, "value", r=r, window=window, reducer=reducer,
-        broadcast_points=broadcast_points,
-    )
+    return _sample(points, tiles, "value", r=r, window=window, reducer=reducer)
 
 
 def interp(
@@ -282,28 +269,25 @@ def interp(
     tiles: DataFrame,
     order: int = 1,
     r: int = DEFAULT_RES,
-    broadcast_points: bool = True,
 ) -> DataFrame:
     """R14: nearest (order=0), bilinear (order=1), quadratic Dodgson r=1
     (order=2), bicubic Keys a=-0.5 (order=3), or prefiltered B-spline
     (orders 4/5 — the scipy map_coordinates semantics, mirror boundary;
     oracle.interp_bspline)."""
     if order == 0:
-        return value_at_coords(points, tiles, r=r, broadcast_points=broadcast_points)
+        return value_at_coords(points, tiles, r=r)
     if order == 2:
-        return _sample(points, tiles, "interp2", r=r, broadcast_points=broadcast_points)
+        return _sample(points, tiles, "interp2", r=r)
     if order == 3:
-        return _sample(points, tiles, "interp3", r=r, broadcast_points=broadcast_points)
+        return _sample(points, tiles, "interp3", r=r)
     if order in (4, 5):
-        return _sample(
-            points, tiles, f"interp{order}", r=r, broadcast_points=broadcast_points
-        )
+        return _sample(points, tiles, f"interp{order}", r=r)
     if order != 1:
         raise NotImplementedError(
             "only orders 0 (nearest), 1 (bilinear), 2 (quadratic), 3 (bicubic),"
             " 4 (quartic B-spline), 5 (quintic B-spline) are supported"
         )
-    return _sample(points, tiles, "interp", r=r, broadcast_points=broadcast_points)
+    return _sample(points, tiles, "interp", r=r)
 
 
 def coord_to_px(points: DataFrame, tiles: DataFrame, r: int = DEFAULT_RES) -> DataFrame:

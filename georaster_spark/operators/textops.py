@@ -2157,100 +2157,6 @@ FROM ch GROUP BY doc_id ORDER BY doc_id
 """
 
 
-def text_queries():
-    return {
-        "text_stats": text_stats,
-        "text_quality": text_quality,
-        "lang_id": lang_id,
-        "langid_confusion": langid_confusion,
-        "doc_fingerprint": doc_fingerprint,
-        "dedup_exact": dedup_exact,
-        "jaccard_pairs": jaccard_pairs,
-        "containment_pairs": containment_pairs,
-        "minhash_lsh_pairs": minhash_lsh_pairs,
-        "simhash_pairs": simhash_pairs,
-        "tfidf_topterms": tfidf_topterms,
-        "decontaminate": decontaminate,
-        "passage_dedup": passage_dedup,
-        "doc_repetition": doc_repetition,
-        "collocations": collocations,
-        "lsh_recall_gate": lsh_recall_gate,
-        "source_quality_rollup": source_quality_rollup,
-        "ngram_novelty": ngram_novelty,
-        "pii_scan": pii_scan,
-        "seq_packing": seq_packing,
-        "url_domains": url_domains,
-        "oov_rate": oov_rate,
-        "bpe_pair_census": bpe_pair_census,
-        "bm25_topk": bm25_topk,
-        "lm_doc_likelihood": lm_doc_likelihood,
-        "source_mixture_sample": source_mixture_sample,
-        "dsir_importance": dsir_importance,
-        "chunking_audit": chunking_audit,
-        "winnowing_fp": winnowing_fingerprint,
-        "boilerplate_prefix": boilerplate_prefix,
-        "cm_heavy_hitters": cm_heavy_hitters,
-        "cdc_chunking": cdc_chunking,
-        "edit_distance_join": edit_distance_join,
-        "vocab_growth": vocab_growth,
-        "bpe_merge_apply": bpe_merge_apply,
-        "tfidf_doc_similarity": tfidf_doc_similarity,
-        "prefix_autocomplete": prefix_autocomplete,
-        "prf_expansion": prf_expansion,
-        "rrf_fusion": rrf_fusion,
-        "zipf_slope": zipf_slope,
-        "dataset_split": dataset_split,
-        "lcs_pairs": lcs_pairs,
-    }
-
-
-def text_oracles() -> dict[str, str]:
-    return {
-        "text_stats": text_stats_sql(),
-        "text_quality": text_quality_sql(),
-        "lang_id": lang_id_sql(),
-        "langid_confusion": langid_confusion_sql(),
-        "doc_fingerprint": doc_fingerprint_sql(),
-        "dedup_exact": dedup_exact_sql(),
-        "jaccard_pairs": jaccard_pairs_sql(),
-        "containment_pairs": containment_pairs_sql(),
-        "minhash_lsh_pairs": minhash_lsh_pairs_sql(),
-        "simhash_pairs": simhash_pairs_sql(),
-        "tfidf_topterms": tfidf_topterms_sql(),
-        "decontaminate": decontaminate_sql(),
-        "passage_dedup": passage_dedup_sql(),
-        "doc_repetition": doc_repetition_sql(),
-        "collocations": collocations_sql(),
-        "lsh_recall_gate": lsh_recall_gate_sql(),
-        "source_quality_rollup": source_quality_rollup_sql(),
-        "ngram_novelty": ngram_novelty_sql(),
-        "pii_scan": pii_scan_sql(),
-        "seq_packing": seq_packing_sql(),
-        "url_domains": url_domains_sql(),
-        "oov_rate": oov_rate_sql(),
-        "bpe_pair_census": bpe_pair_census_sql(),
-        "bm25_topk": bm25_topk_sql(),
-        "lm_doc_likelihood": lm_doc_likelihood_sql(),
-        "source_mixture_sample": source_mixture_sample_sql(),
-        "dsir_importance": dsir_importance_sql(),
-        "chunking_audit": chunking_audit_sql(),
-        "winnowing_fp": winnowing_fingerprint_sql(),
-        "boilerplate_prefix": boilerplate_prefix_sql(),
-        "cm_heavy_hitters": cm_heavy_hitters_sql(),
-        "cdc_chunking": cdc_chunking_sql(),
-        "edit_distance_join": edit_distance_join_sql(),
-        "vocab_growth": vocab_growth_sql(),
-        "bpe_merge_apply": bpe_merge_apply_sql(),
-        "tfidf_doc_similarity": tfidf_doc_similarity_sql(),
-        "prefix_autocomplete": prefix_autocomplete_sql(),
-        "prf_expansion": prf_expansion_sql(),
-        "rrf_fusion": rrf_fusion_sql(),
-        "zipf_slope": zipf_slope_sql(),
-        "dataset_split": dataset_split_sql(),
-        "lcs_pairs": lcs_pairs_sql(),
-    }
-
-
 # ---------------------------------------------------------------------------
 # D6 — winnowing fingerprints (MOSS)
 # ---------------------------------------------------------------------------

@@ -843,48 +843,6 @@ GROUP BY cell ORDER BY cell
 """
 
 
-def vector_queries():
-    return {
-        "cosine_near_dup": cosine_near_dup,
-        "ann_topk_brute": ann_topk_brute,
-        "ann_lsh": ann_lsh,
-        "ann_ivf": ann_ivf,
-        "ann_sq8": ann_sq8,
-        "semdedup": semdedup,
-        "ann_pq": ann_pq,
-        "ann_ivfpq": ann_ivfpq,
-        "kmeans_embed": kmeans_embed,
-        "jl_projection": jl_projection,
-        "dim_truncation_recall": dim_truncation_recall,
-        "ivf_nprobe_sweep": ivf_nprobe_sweep,
-        "ann_binary_hamming": ann_binary_hamming,
-        "ivf_cell_purity": ivf_cell_purity,
-        "mmr_rerank": mmr_rerank,
-        "hard_negatives": hard_negative_mining,
-    }
-
-
-def vector_oracles() -> dict[str, str]:
-    return {
-        "cosine_near_dup": cosine_near_dup_sql(),
-        "ann_topk_brute": ann_topk_brute_sql(),
-        "ann_lsh": ann_lsh_sql(),
-        "ann_ivf": ann_ivf_sql(),
-        "ann_sq8": ann_sq8_sql(),
-        "semdedup": semdedup_sql(),
-        "ann_pq": ann_pq_sql(),
-        "ann_ivfpq": ann_ivfpq_sql(),
-        "kmeans_embed": kmeans_embed_sql(),
-        "jl_projection": jl_projection_sql(),
-        "dim_truncation_recall": dim_truncation_recall_sql(),
-        "ivf_nprobe_sweep": ivf_nprobe_sweep_sql(),
-        "ann_binary_hamming": ann_binary_hamming_sql(),
-        "ivf_cell_purity": ivf_cell_purity_sql(),
-        "mmr_rerank": mmr_rerank_sql(),
-        "hard_negatives": hard_negative_mining_sql(),
-    }
-
-
 # ---------------------------------------------------------------------------
 # V7 — Product-quantization ANN (ADC scan) (round 3)
 # ---------------------------------------------------------------------------

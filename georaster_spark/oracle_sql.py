@@ -102,7 +102,7 @@ PIP_WHERE = """
 
 def pip_where(px: str, py: str) -> str:
     """Convex half-plane containment (boundary inside) — twin of
-    operators/pip.convex_pip.  Bbox prefilter must accompany it in the
+    operators/pip.convex_pip_hof.  Bbox prefilter must accompany it in the
     join ON (polygon ⊆ bbox ⊆ covered cells, so sets match the engine)."""
     return PIP_WHERE.format(px=px, py=py)
 

@@ -1,0 +1,46 @@
+"""The query registry (contract.QUERY_TABLE) is well formed: one row per
+query name, and every row either has an oracle builder or says why it is
+checked on rows only.  Needs no Spark session."""
+
+from __future__ import annotations
+
+from collections import Counter
+
+from georaster_spark.plans import contract
+
+SCOREBOARD = 50  # the driver's correctness gate scores the first 50 rows
+
+
+def _rows_only() -> set[str]:
+    return {name for name, _, oracle in contract.QUERY_TABLE if isinstance(oracle, str)}
+
+
+def test_rows_are_name_query_oracle_triples():
+    bad = [row[0] for row in contract.QUERY_TABLE if len(row) != 3 or not callable(row[1])]
+    assert not bad, bad
+
+
+def test_names_are_unique():
+    counts = Counter(name for name, *_ in contract.QUERY_TABLE)
+    assert not [n for n, c in counts.items() if c > 1]
+
+
+def test_every_row_has_an_oracle_or_a_reason():
+    bad = [
+        name
+        for name, _, oracle in contract.QUERY_TABLE
+        if not (callable(oracle) or (isinstance(oracle, str) and oracle.strip()))
+    ]
+    assert not bad, bad
+
+
+def test_oracle_keys_are_the_queries_minus_rows_only():
+    oracles = contract.spatial_oracles("sf0.01")
+    assert set(oracles) == set(contract.spatial_queries()) - _rows_only()
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
+
+
+def test_scoreboard_rows_all_have_oracles():
+    scored = [name for name, *_ in contract.QUERY_TABLE[:SCOREBOARD]]
+    assert len(scored) == SCOREBOARD
+    assert not _rows_only() & set(scored)
