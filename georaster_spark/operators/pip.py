@@ -4,13 +4,23 @@ Filter-refine, Sedona-style but library-level (SURVEY §4.3):
 
   1. COARSE: each zone's bbox is covered by res-r cells (cell_cover,
      higher-order fns); `explode` yields the small broadcast side
-     (zone_id, cell_id, ring).  Each point computes its single res-r
+     (zone_id, cell_id, edges).  Each point computes its single res-r
      cell — so the candidate equi-join emits every (point, zone) pair at
      most once (no dedup pass needed).
-  2. REFINE: exact convex half-plane test as a pure Column expression
-     (zip_with over ring edges — stays in whole-stage codegen, no UDF).
-     Boundary counts as inside (cross >= 0 on every CCW edge), matching
-     oracle.pip_halfplane and the DuckDB oracle verbatim.
+  2. REFINE: exact convex half-plane test as a pure Column expression,
+     no UDF.  Each zone's edges are precomputed once, before the
+     explode, as a flat array padded to the unroll width (ring_edges);
+     the per-candidate test (convex_pip_unrolled) is then a short
+     unrolled run of `get`s and arithmetic in the BroadcastHashJoin's
+     whole-stage-codegen stage.  That stage's generated method must stay
+     under HotSpot's 8,000-byte huge-method limit or it runs interpreted:
+     the earlier per-candidate form, reading ring structs with a
+     size(ring) check per edge, was 8,498 bytes (pip_join count)
+     and 10,958 bytes (zone_image_stats) at 8 edges; this one is 4,036
+     and 6,496.  Rings wider than MAX_UNROLL_EDGES use the interpreted
+     zip_with form (convex_pip_hof).  Boundary counts as inside
+     (cross >= 0 on every CCW edge), matching oracle.pip_halfplane and
+     the DuckDB oracle verbatim.
 
 Scale notes (100 TB posture): the zones side is dims-sized -> broadcast;
 if zones ever outgrow the broadcast threshold the same plan degrades
@@ -35,58 +45,65 @@ from ..constants import DEFAULT_RES
 from ..functions import cells
 
 
-# Rings with at most this many edges take the unrolled codegen fast path.
-MAX_UNROLL_EDGES = 16
+# Rings with at most this many edges take the unrolled codegen fast path:
+# the largest width whose candidate stage keeps its generated method
+# under HotSpot's 8,000-byte DontCompileHugeMethods limit in both
+# pip_join and zone_image_stats (tests/test_plan_quality.py).
+MAX_UNROLL_EDGES = 11
 
 
-def convex_pip_unrolled(
-    ring: Column, px: Column, py: Column, max_edges: int = MAX_UNROLL_EDGES
-) -> Column:
-    """True iff (px, py) is inside/on the convex CCW closed ring — the
-    unrolled whole-stage-codegen fast path of the half-plane test.
+def ring_edges(ring: Column, n_edges: int) -> Column:
+    """Flat array<double> of a closed ring's edges, [x1, y1, x2-x1, y2-y1]
+    per edge, padded to exactly `n_edges` edges — the zone-side half of
+    the unrolled refine, evaluated once per zone.
 
-    Edge tests over plain Column primitives (`get` + struct field +
-    arithmetic) so the whole refine predicate stays inside whole-stage
-    codegen.  The higher-order-function variant (convex_pip_hof) is
-    CodegenFallback in Spark 4 — interpreted per row, allocating two
-    `slice` copies of the ring plus a `zip_with` array per candidate —
-    measured several-fold slower on the candidate stream of the broadcast
-    PIP join.  ONLY correct for rings with size(ring)-1 <= max_edges
-    edges; a runtime assert raises on any wider ring instead of silently
-    returning containment with untested edges.
+    A shorter ring repeats its first edge: the refine ANDs the edge
+    tests, so testing one edge twice changes nothing.  A ring with more
+    than `n_edges` edges raises instead of silently dropping an edge."""
+    n = F.size(ring) - 1
 
-    Out-of-range `get` returns NULL (never errors, ANSI-safe): for edge
-    index k >= size-1 the guard `k >= size-1` is true, so `true OR NULL`
-    keeps the conjunction exact.
-    """
-    n = F.size(ring)
-    out = F.lit(True)
-    for k in range(max_edges):
-        a = F.get(ring, k)
-        b = F.get(ring, k + 1)
-        cross = (b["x"] - a["x"]) * (py - a["y"]) - (b["y"] - a["y"]) * (px - a["x"])
-        out = out & ((F.lit(k) >= n - 1) | (cross >= 0))
-    # assert_true -> NULL when the bound holds (coalesce restores TRUE),
-    # raises when a ring exceeds it — never a silent wrong answer.
-    guard = F.coalesce(
-        F.assert_true(
-            n - 1 <= F.lit(max_edges),
+    def edge(k: Column) -> Column:
+        e = F.when(k < n, k).otherwise(F.lit(0))
+        a, b = F.get(ring, e), F.get(ring, e + 1)
+        return F.array(a["x"], a["y"], b["x"] - a["x"], b["y"] - a["y"])
+
+    edges = F.flatten(F.transform(F.sequence(F.lit(0), F.lit(n_edges - 1)), edge))
+    return F.when(n <= F.lit(n_edges), edges).otherwise(
+        F.raise_error(
             F.concat(
-                F.lit(f"convex_pip_unrolled: ring edges exceed max_edges={max_edges}: "),
-                (n - 1).cast("string"),
-            ),
-        ).cast("boolean"),
-        F.lit(True),
+                F.lit(f"ring_edges: ring edges exceed n_edges={n_edges}: "),
+                n.cast("string"),
+            )
+        )
     )
-    return out & guard
+
+
+def convex_pip_unrolled(edges: Column, px: Column, py: Column, n_edges: int) -> Column:
+    """True iff (px, py) is inside/on the convex CCW ring whose
+    `ring_edges(ring, n_edges)` array is `edges` — the unrolled
+    whole-stage-codegen fast path of the half-plane test.
+
+    Per edge, dx*(py-y1) - dy*(px-x1) >= 0 over plain `get`s and
+    arithmetic: the same operations in the same order as
+    oracle.pip_halfplane and oracle_sql.PIP_WHERE, so results are
+    bit-identical.  The higher-order-function variant (convex_pip_hof)
+    is CodegenFallback in Spark 4 — interpreted per candidate, allocating
+    two ring slices and a zipped array each.  The code grows about 500
+    bytes per edge, which MAX_UNROLL_EDGES bounds."""
+    out = None
+    for k in range(n_edges):
+        x1, y1, dx, dy = (F.get(edges, 4 * k + i) for i in range(4))
+        test = dx * (py - y1) - dy * (px - x1) >= 0
+        out = test if out is None else out & test
+    return out
 
 
 def convex_pip_hof(ring: Column, px: Column, py: Column) -> Column:
     """True iff (px, py) is inside/on the convex CCW closed ring, for any
     ring size — the engine twin of oracle_sql.pip_where.  Interpreted
-    (zip_with/exists are CodegenFallback); the general-case fallback and
-    the differential-test twin of the unrolled fast path
-    (tests/test_pip_refine.py)."""
+    (zip_with/exists are CodegenFallback); the path for rings wider than
+    MAX_UNROLL_EDGES and the differential-test twin of the unrolled fast
+    path (tests/test_pip_refine.py)."""
     n = F.size(ring)
     p1 = F.slice(ring, 1, n - 1)
     p2 = F.slice(ring, 2, n - 1)
@@ -98,11 +115,11 @@ def convex_pip_hof(ring: Column, px: Column, py: Column) -> Column:
     return ~F.exists(crosses, lambda c: c < 0)
 
 
-def zone_cells(zones: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
-    """(zone_id, ring, cell_id) — one row per covering cell of the bbox."""
+def zone_cells(zones: DataFrame, r: int = DEFAULT_RES, shape: str = "ring") -> DataFrame:
+    """(zone_id, <shape>, cell_id) — one row per covering cell of the bbox."""
     return zones.select(
         "zone_id",
-        "ring",
+        shape,
         F.explode(
             cells.cell_cover(F.col("xmin"), F.col("xmax"), F.col("ymin"), F.col("ymax"), r)
         ).alias("cell_id"),
@@ -121,7 +138,7 @@ def pip_join(
     """All (point-row, zone_id) containment pairs.
 
     `points` is any DataFrame; `x`/`y` are Column expressions over it.
-    Result = points columns + zone_id (ring/cell_id dropped).
+    Result = points columns + zone_id (edges or ring, and cell_id, dropped).
     `max_ring` is an optional caller-supplied bound on size(ring) over the
     zones side.  NOTE: when max_ring is None this function EAGERLY runs a
     tiny Spark job (max(size(ring)) over the dim table) at plan-construction
@@ -129,7 +146,28 @@ def pip_join(
     issuing several pip_joins against the same zones table, should compute
     the bound once and pass it (zone_image_stats does).
     """
-    zc = zone_cells(zones, r)
+    # Dispatch the refine predicate on the zones side's actual max ring
+    # size: one tiny driver-side agg over the dim table (broadcast-small
+    # by definition) buys the codegen fast path for the candidate stream.
+    if max_ring is None:
+        max_ring = zones.agg(F.max(F.size("ring"))).first()[0]
+    pts = points.withColumn("_px", x).withColumn("_py", y).withColumn(
+        "cell_id", cells.cell_encode(F.col("_px"), F.col("_py"), r)
+    )
+    px, py = F.col("_px"), F.col("_py")
+    if max_ring is not None and max_ring - 1 <= MAX_UNROLL_EDGES:
+        # Edges are built per zone, below the cell explode; the candidate
+        # stream only reads them.
+        shape = "edges"
+        zones = zones.select(
+            "zone_id", "xmin", "xmax", "ymin", "ymax",
+            ring_edges(F.col("ring"), max_ring - 1).alias(shape),
+        )
+        refine = convex_pip_unrolled(F.col(shape), px, py, max_ring - 1)
+    else:
+        shape = "ring"
+        refine = convex_pip_hof(F.col(shape), px, py)
+    zc = zone_cells(zones, r, shape)
     if broadcast_zones:
         zc = F.broadcast(zc)
     else:
@@ -138,22 +176,8 @@ def pip_join(
         # statistics (or AQE) re-broadcast a dim-sized test fixture and
         # the fallback plan is never actually exercised.
         zc = zc.hint("shuffle_hash")
-    pts = points.withColumn("_px", x).withColumn("_py", y).withColumn(
-        "cell_id", cells.cell_encode(F.col("_px"), F.col("_py"), r)
-    )
-    # Dispatch the refine predicate on the zones side's actual max ring
-    # size: one tiny driver-side agg over the dim table (broadcast-small
-    # by definition) buys the codegen fast path for the candidate stream.
-    if max_ring is None:
-        max_ring = zones.agg(F.max(F.size("ring"))).first()[0]
-    if max_ring is not None and max_ring - 1 <= MAX_UNROLL_EDGES:
-        refine = convex_pip_unrolled(
-            F.col("ring"), F.col("_px"), F.col("_py"), max_edges=max_ring - 1
-        )
-    else:
-        refine = convex_pip_hof(F.col("ring"), F.col("_px"), F.col("_py"))
     joined = pts.join(zc, "cell_id").where(refine)
-    return joined.drop("ring", "cell_id", "_px", "_py")
+    return joined.drop(shape, "cell_id", "_px", "_py")
 
 
 def zone_geometry(zones: DataFrame) -> DataFrame:

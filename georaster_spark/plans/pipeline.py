@@ -5,9 +5,16 @@ mean of their mean-pixel value."
 
 Spine exercised: parquet scan (column-pruned) -> E1 georegister (map-only
 Column math) -> fused decode+mean pandas UDF (single JVM<->Python Arrow
-hop, ONLY for rows that need pixels) -> E5 broadcast PIP join ->
-partial+final hash aggregation.  One shuffle total (the final groupBy);
-the PIP join is broadcast so the big side never moves.
+hop) -> E5 broadcast PIP join -> partial+final hash aggregation.  One
+shuffle total (the final groupBy); the PIP join is broadcast so the big
+side never moves.
+
+The decode runs BEFORE the join, so it decodes every image, including
+those whose centroid lands in no zone: at sf0.1 all 100,000 images
+(411.6 MB over Arrow per job), of which 59,883 land in a zone.  Moving
+pixel_mean after the join was measured slower on a 4-vCPU host (2.88 s
+against 2.50 s, median of 6 sf0.1 runs each), so the plan keeps the
+decode first.
 """
 
 from __future__ import annotations

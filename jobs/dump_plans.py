@@ -2,6 +2,13 @@
 BENCH/PLANS.md — an auditable artifact of the plan-quality claims
 (pruned scans, broadcast joins, single exchanges, codegen spans).
 
+Each plan is followed by a codegen-size audit: the maxMethodCodeSize of
+every WholeStageCodegen subtree, flagging those over HotSpot's
+8,000-byte huge-method limit (such a method is never JIT-compiled).
+Sizes come from the non-adaptive plan, because AQE creates the
+subtrees only when the query runs.  The flagged queries are also
+printed to standard output.
+
 Usage: python jobs/dump_plans.py [sf_dir] [query ...]
 """
 
@@ -106,6 +113,33 @@ DEFAULT = [
 ]
 
 
+# HotSpot's DontCompileHugeMethods limit, in bytes of bytecode.
+HUGE_METHOD_LIMIT = 8000
+
+
+def codegen_sizes(df) -> list[tuple[str, int]]:
+    """(subtree, maxMethodCodeSize) of every WholeStageCodegen subtree of
+    `df`'s plan as planned with AQE off; `subtree` is the tree string."""
+    spark = df.sparkSession
+    jvm = spark._jvm
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        qe = spark._jsparkSession.sessionState().executePlan(
+            df._jdf.queryExecution().logical(),
+            jvm.org.apache.spark.sql.execution.CommandExecutionMode.ALL(),
+        )
+        plan = qe.executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    seq = jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    out = []
+    for i in range(seq.size()):
+        t = seq.apply(i)
+        out.append((t._1(), t._3().maxMethodCodeSize()))
+    return out
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or DEFAULT
@@ -118,15 +152,32 @@ def main() -> None:
     queries = contract.spatial_queries()
     jvm = spark._jvm
     out = ["# Physical plans (generated by jobs/dump_plans.py)\n"]
+    flagged = []
     for name in names:
         df = queries[name](spark, sf_dir)
         txt = jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        out.append(f"\n## {name}\n\n```\n{txt}\n```\n")
+        sizes = codegen_sizes(df)
+        lines = [
+            f"{size:>6}{'  OVER' if size > HUGE_METHOD_LIMIT else ''}  "
+            + tree.split("\n", 1)[0][:100]
+            for tree, size in sizes
+        ]
+        over = [size for _, size in sizes if size > HUGE_METHOD_LIMIT]
+        if over:
+            flagged.append(name)
+            print(f"{name}: {len(over)} of {len(sizes)} codegen stages over "
+                  f"{HUGE_METHOD_LIMIT} bytes: {sorted(over, reverse=True)}")
+        out.append(
+            f"\n## {name}\n\n```\n{txt}\n```\n\n"
+            f"Codegen method sizes (bytes; OVER > {HUGE_METHOD_LIMIT}):\n\n"
+            "```\n" + "\n".join(lines) + "\n```\n"
+        )
     dest = REPO / "BENCH" / "PLANS.md"
     dest.write_text("".join(out))
-    print(f"wrote {dest} ({len(names)} plans)")
+    print(f"wrote {dest} ({len(names)} plans; {len(flagged)} with a stage over "
+          f"{HUGE_METHOD_LIMIT} bytes: {' '.join(flagged)})")
 
 
 if __name__ == "__main__":

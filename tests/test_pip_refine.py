@@ -1,21 +1,32 @@
-"""Differential test of the two convex half-plane refine predicates in
-operators/pip.py: the unrolled codegen fast path (convex_pip_unrolled,
-which pip_join takes for small rings) and the higher-order-function path
-(convex_pip_hof) must agree on every (point, zone) pair of the sf0.001
-fixture, including the boundary cases — each ring's own vertices and
-edge midpoints."""
+"""Differential test of the convex half-plane refine in operators/pip.py:
+the unrolled codegen fast path (ring_edges + convex_pip_unrolled, which
+pip_join takes for rings up to MAX_UNROLL_EDGES edges), the
+higher-order-function path (convex_pip_hof) and the NumPy spec
+(oracle.pip_halfplane) must agree on every (point, zone) pair of the
+sf0.001 fixture, including the boundary cases — each ring's own vertices
+and edge midpoints — and with short rings (the 4-edge `rect` zones)
+padded up to the full unroll width."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from georaster_spark.operators.pip import convex_pip_hof, convex_pip_unrolled
+from georaster_spark import oracle
+from georaster_spark.operators import georegister as geo
+from georaster_spark.operators.pip import (
+    MAX_UNROLL_EDGES,
+    convex_pip_hof,
+    convex_pip_unrolled,
+    pip_join,
+    ring_edges,
+)
 
 
 @pytest.fixture(scope="module")
 def zones(spark, sf0001_dir):
-    return spark.read.parquet(str(sf0001_dir / "zones.parquet")).select("zone_id", "ring")
+    return spark.read.parquet(str(sf0001_dir / "zones.parquet")).select("zone_id", "kind", "ring")
 
 
 @pytest.fixture(scope="module")
@@ -44,44 +55,75 @@ def probes(spark, sf0001_dir, zones):
 
 
 def test_unrolled_and_hof_agree(zones, probes, max_ring):
+    """At the width pip_join picks for this fixture (max_ring - 1) and
+    at MAX_UNROLL_EDGES, which pads every ring, the 4-edge rects
+    included, to the full unroll width."""
+    rings = {r["zone_id"]: r for r in zones.collect()}
+    assert {r["kind"] for r in rings.values()} == {"rect", "convex"}
     ring, px, py = F.col("ring"), F.col("px"), F.col("py")
-    rows = (
-        probes.crossJoin(zones)
-        .select(
-            "zone_id",
-            "px",
-            "py",
-            convex_pip_unrolled(ring, px, py, max_edges=max_ring - 1).alias("unrolled"),
-            convex_pip_hof(ring, px, py).alias("hof"),
+    for n_edges in (max_ring - 1, MAX_UNROLL_EDGES):
+        rows = (
+            probes.crossJoin(zones.withColumn("edges", ring_edges(ring, n_edges)))
+            .select(
+                "zone_id",
+                "px",
+                "py",
+                convex_pip_unrolled(F.col("edges"), px, py, n_edges).alias("unrolled"),
+                convex_pip_hof(ring, px, py).alias("hof"),
+            )
+            .collect()
         )
-        .collect()
-    )
-    diff = [r for r in rows if r["unrolled"] is not r["hof"]]
-    assert not diff, diff[:5]
-    inside = sum(r["hof"] for r in rows)
-    assert 0 < inside < len(rows)  # both outcomes are exercised
+        diff = [r for r in rows if r["unrolled"] is not r["hof"]]
+        assert not diff, (n_edges, diff[:5])
+        for zid, zr in rings.items():
+            mine = [r for r in rows if r["zone_id"] == zid]
+            rx = np.array([p["x"] for p in zr["ring"]])
+            ry = np.array([p["y"] for p in zr["ring"]])
+            want = oracle.pip_halfplane(rx, ry, [r["px"] for r in mine], [r["py"] for r in mine])
+            assert [r["unrolled"] for r in mine] == want.tolist(), (n_edges, zid)
+        inside = sum(r["hof"] for r in rows)
+        assert 0 < inside < len(rows)  # both outcomes are exercised
 
 
 def test_ring_vertices_are_inside_their_own_ring(zones):
     ring = F.col("ring")
-    v = zones.select("zone_id", "ring", F.explode("ring").alias("p"))
+    v = zones.select(
+        "zone_id", "ring", ring_edges(ring, MAX_UNROLL_EDGES).alias("edges"),
+        F.explode("ring").alias("p"),
+    )
     px, py = F.col("p.x"), F.col("p.y")
     got = v.select(
         convex_pip_hof(ring, px, py).alias("hof"),
-        convex_pip_unrolled(ring, px, py).alias("unrolled"),
+        convex_pip_unrolled(F.col("edges"), px, py, MAX_UNROLL_EDGES).alias("unrolled"),
     ).collect()
     assert got and all(r["hof"] and r["unrolled"] for r in got)
 
 
-def test_unrolled_guard_raises_on_wider_ring(zones, max_ring):
-    """A probe that passes every tested edge would silently skip the
-    untested one, so the guard must raise.  (A probe outside a tested
-    edge is a correct False and short-circuits the guard.)  The ring's
-    first vertex lies on two edges and inside the rest, so it passes."""
+def test_unrolled_guard_raises_on_wider_ring(spark, sf0001_dir, zones, max_ring):
+    """The zone-side guard raises on a ring wider than the unroll width,
+    whatever the probe: one that passes every tested edge (the ring's
+    first vertex lies on two edges and inside the rest) and one that
+    fails the first edge (its midpoint pushed outward by the edge's
+    normal).  pip_join given too small a `max_ring` bound raises too."""
     wide = zones.where(F.size("ring") == max_ring)
-    first = F.get("ring", 0)
-    refine = convex_pip_unrolled(
-        F.col("ring"), first["x"], first["y"], max_edges=max_ring - 2
-    )
-    with pytest.raises(Exception, match="ring edges exceed max_edges"):
-        wide.select(refine.alias("inside")).collect()
+    a, b = F.get("ring", 0), F.get("ring", 1)
+    dx, dy = b["x"] - a["x"], b["y"] - a["y"]
+    on_vertex = (a["x"], a["y"])
+    outside_edge0 = ((a["x"] + b["x"]) / 2 + dy, (a["y"] + b["y"]) / 2 - dx)
+    n_edges = max_ring - 2
+    edges = ring_edges(F.col("ring"), n_edges)
+    for px, py in (on_vertex, outside_edge0):
+        refine = convex_pip_unrolled(edges, px, py, n_edges)
+        with pytest.raises(Exception, match="ring edges exceed n_edges"):
+            wide.select(refine.alias("inside")).collect()
+
+    # The outside probe really fails the first edge: test that edge alone.
+    first_edge = convex_pip_unrolled(ring_edges(F.col("ring"), max_ring - 1), *outside_edge0, 1)
+    assert not any(r[0] for r in wide.select(first_edge).collect())
+
+    imgs = spark.read.parquet(str(sf0001_dir / "images.parquet"))
+    zones_full = spark.read.parquet(str(sf0001_dir / "zones.parquet"))
+    tiles = geo.georegister(imgs.select("image_id", "w", "h"))
+    q = pip_join(tiles, zones_full, x=geo.centroid_x(), y=geo.centroid_y(), max_ring=max_ring - 1)
+    with pytest.raises(Exception, match="ring edges exceed n_edges"):
+        q.count()

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from georaster_spark.operators import georegister as geo
-from georaster_spark.operators.pip import pip_join
+from georaster_spark.operators.pip import MAX_UNROLL_EDGES, pip_join
 
 
 def _explain(df, mode: str = "formatted") -> str:
@@ -45,6 +45,30 @@ def test_pip_join_is_broadcast(spark, sf0001_dir):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_pip_refine_stage_is_jit_compilable(spark, sf0001_dir):
+    """The PIP candidate stage (the BroadcastHashJoin and its refine) must
+    stay JIT-compilable at the fixture's ring size and at the widest
+    unrolled ring, in pip_join as the headline counts it and in
+    zone_image_stats."""
+    from georaster_spark.plans.pipeline import zone_image_stats
+    from jobs.dump_plans import HUGE_METHOD_LIMIT, codegen_sizes
+
+    imgs = spark.read.parquet(str(sf0001_dir / "images.parquet"))
+    zones = spark.read.parquet(str(sf0001_dir / "zones.parquet"))
+    tiles = geo.georegister(imgs.select("image_id", "w", "h"))
+    fixture_ring = zones.agg(F.max(F.size("ring"))).first()[0]
+    for max_ring in (fixture_ring, MAX_UNROLL_EDGES + 1):
+        plans = {
+            "pip_join": pip_join(
+                tiles, zones, x=geo.centroid_x(), y=geo.centroid_y(), max_ring=max_ring
+            ).agg(F.count(F.lit(1))),
+            "zone_image_stats": zone_image_stats(imgs, zones, max_ring=max_ring),
+        }
+        for name, df in plans.items():
+            sizes = [size for tree, size in codegen_sizes(df) if "BroadcastHashJoin" in tree]
+            assert sizes and max(sizes) <= HUGE_METHOD_LIMIT, (name, max_ring, sizes)
 
 
 def test_filter_pushdown_reaches_scan(spark, sf0001_dir):
