@@ -3,7 +3,7 @@ deduplication (pairs -> clusters -> canonical doc election).
 
 The reference has no graph operators (it is a raster library); this is
 part of the LLM-training-data-pipeline tier the task mandates: LSH
-near-dup joins (textops D2-D4, vectors V1-V4) emit PAIRS, but dedup
+near-dup joins (textops MinHash/SimHash, vectors V1-V4) emit PAIRS, but dedup
 needs per-document CLUSTER ids so exactly one canonical survives per
 duplicate group.
 
@@ -1061,8 +1061,8 @@ def fof_recommendations(edges: DataFrame) -> DataFrame:
 
     Scale shape: the wedge self-join runs on the SYMMETRIC adjacency
     (exactness needs every apex, so per-apex fan-out is deg² — at
-    10¹² rows cap or sample apex degrees like the D2 module header
-    mandates; the fixture's degrees are bounded); existing edges are
+    10¹² rows cap or sample apex degrees, as for any hot join key;
+    the fixture's degrees are bounded); existing edges are
     removed by ONE anti-join on the canonical pair; ranking is
     TakeOrdered."""
     und = (
@@ -1106,7 +1106,7 @@ def resource_allocation(edges: DataFrame) -> DataFrame:
     Scale shape: same degree-keyed wedge machinery as
     fof_recommendations — one shuffle for degrees, a wedge self-join on
     the apex (per-apex fan-out deg²; cap or sample hot apexes at 10¹²
-    rows as the D2 module header mandates), a broadcast-or-shuffle
+    rows), a broadcast-or-shuffle
     apex→deg lookup, one partial+final agg on the candidate pair, one
     anti-join against the existing edge set, TakeOrdered for the top-K.
     The deduped edge list is pinned (lazy localCheckpoint) because the

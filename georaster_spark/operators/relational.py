@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..functions.util import h40
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -2248,7 +2250,6 @@ def kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — never a global sort); the estimate is a
     1-row reduce.  At 10¹² rows the K-minimum pass is exactly how a
     Theta-sketch union would shard."""
-    from .textops import h40
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
     hashes = li.select(
@@ -3382,8 +3383,8 @@ def duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
     submission).  The synthetic order book carries no natural
     duplicates (amounts are high-entropy), so every 100th order injects
     a deterministic resubmission twin — same customer, same cents,
-    +3 days, key offset by 10⁹ — mirrored exactly in the oracle (the
-    pii_scan injection precedent); the audited behavior is the NEEDLE
+    +3 days, key offset by 10⁹ — mirrored exactly in the oracle; the
+    audited behavior is the NEEDLE
     SEARCH: the pair join must fish exactly the injected twins out of
     the clean corpus.
 
@@ -6294,7 +6295,6 @@ def hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-only hash + ONE 64-group partial+final agg — the
     exact shape a distributed HLL union takes at 10¹² rows; no row
     ever carries more than (bucket, rank)."""
-    from .textops import h40
 
     d = _t(spark, sf_dir, "documents").select(
         h40(F.col("doc_id").cast("string")).alias("hv")
@@ -6547,7 +6547,6 @@ def hash_ring_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the ring is a 128-row broadcast dim; routing is a
     broadcast min-over-qualifying-points aggregation keyed by doc —
     no shuffle wider than the final 8-group rollup."""
-    from .textops import h40
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", h40(F.col("doc_id").cast("string")).alias("hd")
@@ -6644,7 +6643,6 @@ def bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-way position semi-join counted per key; exactly how a distributed
     bloom build/probe pair shards at 10^12 keys, with the final rollup
     a tiny per-segment agg."""
-    from .textops import h40
 
     o = _t(spark, sf_dir, "orders").select("o_custkey").distinct()
     pos = [
@@ -6773,7 +6771,6 @@ def lpm_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE groupBy(flow).max(struct) picks the longest — then a tiny
     per-route rollup.  At 10¹² flows this is the standard broadcast
     LPM shape (real routers trie it; the relational plan need not)."""
-    from .textops import h40
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -7029,7 +7026,6 @@ def poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only multiplicity arithmetic + one 8-group
     partial+final agg; exactly how a 10¹²-row pipeline bootstraps."""
-    from .textops import h40
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     reps = spark.range(POISSON_REPS).select(F.col("id").cast("int").alias("r"))
@@ -7341,7 +7337,6 @@ def ring_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: two broadcast ring lookups + one doc-keyed equi-join
     of the assignments + an 8-group rollup."""
-    from .textops import h40
 
     def route(n_nodes: int, tag: str) -> DataFrame:
         docs = _t(spark, sf_dir, "documents").select(
@@ -8276,7 +8271,6 @@ def hll_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared bucket-by-bucket to the registers built over the whole
     corpus.  Emits per bucket the merged and global registers plus the
     equality flag — 64 TRUE rows is the proof, computed not assumed."""
-    from .textops import h40
 
     d = _t(spark, sf_dir, "documents").select(
         "source", h40(F.col("doc_id").cast("string")).alias("hv")
@@ -11005,7 +10999,6 @@ def randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     users = ev.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("t")
     )
-    from ..operators.textops import h40
 
     x = users.select(
         "user_id", "t",

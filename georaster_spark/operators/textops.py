@@ -2,6 +2,10 @@
 table (doc_id, text, lang, source, n_chars) — the training-data-pipeline
 layer the north rule's 10^12-row posture needs next to the spatial ops.
 
+These are the seven text/dedup queries on the driver's scoreboard;
+``minhash_lsh_pairs`` also feeds the dedup->CC pipeline
+(``contract.q_dedup_components``).
+
 Every operator here is a PAIR: a Spark builder ``(spark, sf_dir) ->
 DataFrame`` and a DuckDB oracle SQL string computing the identical
 result.  All cross-engine-compared values are integers, ratios of
@@ -21,22 +25,20 @@ Scale notes (10^12 rows — SURVEY §4 posture):
 
 * Everything below the pair-generation joins is map-side Column math
   (whole-stage codegen; zero Python).
-* ``jaccard_pairs``'s inverted-index join explodes one row per
-  (doc, shingle); frequent shingles are hot keys — at scale that join
-  MUST be replaced by ``minhash_lsh_pairs`` (bounded 4 rows/band/doc)
-  which is why both are implemented.  AQE skew-join is the backstop.
+* An exact inverted-index Jaccard join explodes one row per
+  (doc, shingle), and frequent shingles are hot keys; so near-dup pairs
+  come from ``minhash_lsh_pairs`` (bounded 4 rows/band/doc), which runs
+  the exact Jaccard test on band-join candidates only.
 * ``simhash``/``minhash`` signatures are groupBy(doc_id) with map-side
   partial aggregation; band-bucket joins are equi-joins on small keys.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
-from pyspark.sql import Window as W
+
+from ..functions.util import fan_out, h40
 
 # ---------------------------------------------------------------------------
 # shared constants (mirrored into the SQL strings below)
@@ -71,21 +73,7 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Local-input parallelism guard: the sf-scale documents parquet is
-    ONE small row group, which scans as a single partition and
-    serializes every downstream map stage (shingling, hashing, scoring)
-    on one core of a many-core executor.  Round-robin repartition to the
-    session's default parallelism when the scan is narrower — the
-    shuffle moves only the raw corpus bytes once, and at production
-    scale (thousands of files/row groups) the branch never fires."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
+    return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -99,10 +87,6 @@ def norm_text(col: Column = None) -> Column:
 
 def words_col() -> Column:
     return F.split(norm_text(), r"\s+")
-
-
-def h40(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 10), 16, 10).cast("long")
 
 
 def shingles_col(ws: Column) -> Column:
@@ -350,129 +334,6 @@ ORDER BY canonical_doc_id
 
 
 # ---------------------------------------------------------------------------
-# D2 — n-gram Jaccard near-dup (inverted-index join)
-# ---------------------------------------------------------------------------
-
-
-def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-3-gram Jaccard >= tau via inverted-index self-join:
-    explode(shingle) -> equi-join on shingle -> per-pair intersection
-    count -> exact Jaccard.  CAUTION at scale: frequent shingles are hot
-    join keys; 10^12-row corpora use minhash_lsh_pairs instead (this op
-    is the exact small/medium-corpus tier and the verifier's oracle)."""
-    # lazy localCheckpoint: both self-join sides re-run scan+shingle+md5
-    # otherwise (same reuse note as minhash_lsh_pairs)
-    d = (
-        _with_shingles(_docs(spark, sf_dir))
-        .select("doc_id", "sh", "n_sh")
-        .localCheckpoint(eager=False)
-    )
-    ex = d.select("doc_id", "n_sh", F.explode("sh").alias("s"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"),
-            F.col("b.doc_id").alias("b_id"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    jac = F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni"))
-    return (
-        inter.where(jac >= JACCARD_TAU)
-        .select("a_id", "b_id", F.round(jac, 6).alias("jac"))
-        .repartition(1).sortWithinPartitions("a_id", "b_id")
-    )
-
-
-def jaccard_pairs_sql() -> str:
-    return f"""
-WITH w AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
-s AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM w WHERE len(ws) >= 3)
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       round(len(list_intersect(a.sh, b.sh))
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jac
-FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE len(list_intersect(a.sh, b.sh))
-      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= {JACCARD_TAU}
-ORDER BY a_id, b_id
-"""
-
-
-CONTAIN_TAU = 0.8
-
-
-def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ASYMMETRIC containment dedup: directed pairs (sub, sup) with
-    C(sub→sup) = |shingles(sub) ∩ shingles(sup)| / |shingles(sub)| >= tau
-    — the curation rule Jaccard misses: a short doc quoted inside a much
-    longer one has tiny Jaccard but containment ~1, and the SHORT side is
-    the one a training pipeline drops.  Same exact inverted-index shape
-    as jaccard_pairs (one shingle equi-join, per-unordered-pair
-    intersection count), then BOTH directions are tested from the single
-    aggregated pair row and emitted via a tiny array-filter explode — the
-    join and agg are not run twice.  Scale caveat as D2: hot shingles are
-    hot join keys; the 10^12-row tier prefilters candidates with
-    minhash_lsh_pairs and runs this exact test on survivors only."""
-    d = _with_shingles(_docs(spark, sf_dir)).select("doc_id", "sh", "n_sh")
-    ex = d.select("doc_id", "n_sh", F.explode("sh").alias("s"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"),
-            F.col("b.doc_id").alias("b_id"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    ca = F.col("ni") / F.col("na")
-    cb = F.col("ni") / F.col("nb")
-    pair = lambda sub, sup, c: F.when(  # noqa: E731
-        c >= CONTAIN_TAU,
-        F.struct(
-            F.col(sub).alias("sub_id"),
-            F.col(sup).alias("sup_id"),
-            F.round(c, 6).alias("cont"),
-        ),
-    )
-    both = inter.select(
-        F.explode(
-            F.filter(
-                F.array(pair("a_id", "b_id", ca), pair("b_id", "a_id", cb)),
-                lambda x: x.isNotNull(),
-            )
-        ).alias("p")
-    )
-    return (
-        both.select("p.sub_id", "p.sup_id", "p.cont")
-        .repartition(1).sortWithinPartitions("sub_id", "sup_id")
-    )
-
-
-def containment_pairs_sql() -> str:
-    return f"""
-WITH w AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
-s AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM w WHERE len(ws) >= 3),
-p AS (
-  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         len(a.sh) AS na, len(b.sh) AS nb,
-         len(list_intersect(a.sh, b.sh)) AS ni
-  FROM s a JOIN s b ON a.doc_id < b.doc_id
-)
-SELECT sub_id, sup_id, round(c, 6) AS cont FROM (
-  SELECT a_id AS sub_id, b_id AS sup_id, CAST(ni AS DOUBLE) / na AS c FROM p
-  UNION ALL
-  SELECT b_id AS sub_id, a_id AS sup_id, CAST(ni AS DOUBLE) / nb AS c FROM p
-) WHERE c >= {CONTAIN_TAU}
-ORDER BY sub_id, sup_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # D3 — MinHash + LSH near-dup (the 10^12-row scale path)
 # ---------------------------------------------------------------------------
 
@@ -658,6160 +519,4 @@ FROM bands a JOIN bands b
   ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_T}
 ORDER BY a_id, b_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-
-
-
-TFIDF_TOPK = 3
-
-
-def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF term salience, integer-exact: per document the top-3 terms
-    ranked by (tf DESC, df ASC, term ASC) — monotone in tf/df exactly as
-    tf*idf orders them for fixed corpus size, with a total tie-break, so
-    no float logarithm enters the hash surface.
-
-    Plan shape: explode -> two partial+final hash aggs (tf on
-    (doc, term), df on term) -> equi-join on term -> per-doc window
-    top-k.  Scale note (10^12 docs): the df side's hot keys are
-    stopwords — exactly the D2 hot-shingle profile — so at scale the
-    join wants a min-df/stopword cap or salting (operators/skew.py);
-    the tf agg itself is skew-free (doc_id is the dominant key)."""
-    tf = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(words_col()).alias("term"))
-        .where(F.col("term") != "")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    w = W.partitionBy("doc_id").orderBy(
-        F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()
-    )
-    return (
-        tf.join(dfq, "term")
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TFIDF_TOPK)
-        .select("doc_id", "rnk", "term", "tf", "df")
-        .repartition(1).sortWithinPartitions("doc_id", "rnk")
-    )
-
-
-def tfidf_topterms_sql() -> str:
-    return f"""
-WITH w AS (SELECT doc_id, unnest({_SQL_WS}) AS term FROM documents),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM w WHERE term <> '' GROUP BY doc_id, term),
-dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-ranked AS (
-  SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-         ROW_NUMBER() OVER (PARTITION BY tf.doc_id
-                            ORDER BY tf.tf DESC, dfq.df ASC, tf.term ASC) AS rnk
-  FROM tf JOIN dfq USING (term)
-)
-SELECT doc_id, rnk, term, tf, df FROM ranked
-WHERE rnk <= {TFIDF_TOPK} ORDER BY doc_id, rnk
-"""
-
-
-# ---------------------------------------------------------------------------
-# D5 — benchmark decontamination (n-gram overlap vs a held-out set)
-# ---------------------------------------------------------------------------
-
-DECON_N = 5  # word n-gram length (long enough that random text never collides)
-DECON_BENCH_MOD = 37  # benchmark membership: doc_id % 37 == 0
-
-
-def _ngrams_col(ws: Column, n: int) -> Column:
-    """Distinct word n-grams joined by one space (size(ws) >= n)."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(ws, i + j) for j in range(n)]
-            ),
-        )
-    )
-
-
-def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination — the eval-leakage scan every LLM
-    training pipeline runs before a corpus ships: for each corpus
-    document, the number of distinct word-5-grams it shares with each
-    document of a held-out benchmark set (here the deterministic
-    doc_id % 37 == 0 subset standing in for an eval suite).  A non-empty
-    result names the (corpus, benchmark) pairs to drop.
-
-    Plan: both sides shingle map-side (array HOFs, distinct per doc),
-    the benchmark side — tiny by construction, as real benchmark suites
-    are — broadcasts, and the overlap count is one partial+final agg on
-    (doc_id, bench_id).  At 10^12 corpus rows the corpus side never
-    shuffles: shingle explode, broadcast-hash probe, and the pair agg's
-    map-side combine all happen in the scan stage; only the (rare) hits
-    move."""
-    d = _docs(spark, sf_dir).withColumn("ws", words_col()).where(
-        F.size("ws") >= DECON_N
-    )
-    sh = d.select(
-        "doc_id", F.explode(_ngrams_col(F.col("ws"), DECON_N)).alias("sh")
-    )
-    bench = sh.where(F.col("doc_id") % DECON_BENCH_MOD == 0).select(
-        F.col("doc_id").alias("bench_id"), "sh"
-    )
-    corpus = sh.where(F.col("doc_id") % DECON_BENCH_MOD != 0)
-    return (
-        corpus.join(F.broadcast(bench), "sh")
-        .groupBy("doc_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .repartition(1).sortWithinPartitions("doc_id", "bench_id")
-    )
-
-
-def decontaminate_sql() -> str:
-    n = DECON_N
-    return f"""
-WITH w AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
-s AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, len(ws) - {n - 2}),
-           i -> array_to_string(ws[i:i+{n - 1}], ' ')))) AS sh
-  FROM w WHERE len(ws) >= {n}
-)
-SELECT c.doc_id AS doc_id, b.doc_id AS bench_id, COUNT(*) AS n_shared
-FROM s c JOIN s b USING (sh)
-WHERE b.doc_id % {DECON_BENCH_MOD} = 0 AND c.doc_id % {DECON_BENCH_MOD} <> 0
-GROUP BY 1, 2 ORDER BY doc_id, bench_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# D6 — passage-level dedup (fixed-width chunk fingerprints)
-# ---------------------------------------------------------------------------
-
-PASSAGE_W = 16  # words per passage chunk
-
-
-def passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Passage-level exact dedup — the sub-document granularity
-    (boilerplate headers, repeated paragraphs) document-level dedup
-    misses: each document splits into fixed 16-word passages, each
-    passage fingerprints to a 40-bit hash, global passage multiplicity
-    counts once, and every document reports its duplicated-passage
-    ratio.
-
-    Plan: chunking is map-side (sequence + slice HOFs, no UDF); the
-    multiplicity count and the count-back join both key on the SLIM
-    40-bit fingerprint — passage text never shuffles — then one final
-    per-doc agg.  Hot fingerprints (the corpus's most-repeated
-    boilerplate) are the E8 skew profile; AQE skew-join is the
-    backstop."""
-    d = _docs(spark, sf_dir).withColumn("ws", words_col()).where(F.size("ws") >= 1)
-    n_chunks = F.ceil(F.size("ws") / F.lit(PASSAGE_W)).cast("long")
-    chunks = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0).cast("long"), n_chunks - 1),
-                lambda c: F.concat_ws(
-                    " ", F.slice("ws", (c * PASSAGE_W + 1).cast("int"), PASSAGE_W)
-                ),
-            )
-        ).alias("passage"),
-    ).select("doc_id", h40(F.col("passage")).alias("ph"))
-    counts = chunks.groupBy("ph").agg(F.count(F.lit(1)).alias("m"))
-    dup = F.when(F.col("m") > 1, 1).otherwise(0)
-    return (
-        chunks.join(counts, "ph")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_passages"),
-            F.sum(dup).alias("n_dup_passages"),
-            F.round(F.sum(dup) / F.count(F.lit(1)), 6).alias("dup_ratio"),
-        )
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-def passage_dedup_sql() -> str:
-    w = PASSAGE_W
-    return f"""
-WITH wd AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents WHERE len(trim(text)) >= 0),
-c AS (
-  SELECT doc_id,
-         unnest(list_transform(range(0, CAST(ceil(len(ws) / {w}.0) AS BIGINT)),
-                c -> array_to_string(ws[c*{w}+1:c*{w}+{w}], ' '))) AS passage
-  FROM wd WHERE len(ws) >= 1
-), h AS (
-  SELECT doc_id, {_SQL_H40.format(s='passage')} AS ph FROM c
-), m AS (
-  SELECT ph, COUNT(*) AS m FROM h GROUP BY ph
-)
-SELECT doc_id,
-       COUNT(*) AS n_passages,
-       CAST(SUM(CASE WHEN m.m > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_passages,
-       round(SUM(CASE WHEN m.m > 1 THEN 1 ELSE 0 END) / COUNT(*), 6) AS dup_ratio
-FROM h JOIN m USING (ph)
-GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# T5 — document repetition metrics (Gopher-style quality rules)
-# ---------------------------------------------------------------------------
-
-
-def _clean_words() -> Column:
-    """Tokenized text with empties dropped — position-stable on both
-    engines (filter AFTER split so bigram adjacency matches the oracle's
-    list_filter)."""
-    return F.filter(words_col(), lambda t: t != "")
-
-
-def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document repetition metrics — the Gopher/C4 'repetitious
-    text' quality rules (Rae et al. 2021 §A1.1, PAPERS.md): fraction of
-    tokens/characters in repeated words and the top word/bigram
-    multiplicities.  A filter pipeline thresholds these columns; here
-    they are emitted exactly so the oracle pins every count.
-
-      n_words / n_distinct     total and distinct token counts
-      top_word_cnt             multiplicity of the most repeated word
-      dup_tokens               tokens whose word occurs > 1 time
-      dup_chars                characters (space-free) in those tokens
-      top_bigram_cnt           multiplicity of the most repeated
-                               adjacent word pair
-      n_distinct_bigrams       distinct adjacent pairs
-
-    Plan shape: two doc-keyed explode->count aggs (words, bigrams)
-    joined on doc_id — every shuffle is keyed by doc_id or
-    (doc_id, term), so there is no corpus-global hot key at any scale
-    (unlike df/stopword-keyed joins); a doc's rows stay one group."""
-    ws = _clean_words()
-    bigrams = F.when(
-        F.size(ws) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    docs = _docs(spark, sf_dir)
-    uni = (
-        docs.select("doc_id", F.explode(ws).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_words"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.max("cnt").cast("long").alias("top_word_cnt"),
-            F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0))
-            .cast("long").alias("dup_tokens"),
-            F.sum(
-                F.when(F.col("cnt") > 1, F.col("cnt") * F.length("term")).otherwise(0)
-            ).cast("long").alias("dup_chars"),
-        )
-    )
-    bi = (
-        docs.select("doc_id", F.explode(bigrams).alias("big"))
-        .groupBy("doc_id", "big")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.max("cnt").cast("long").alias("top_bigram_cnt"),
-            F.count(F.lit(1)).alias("n_distinct_bigrams"),
-        )
-    )
-    return (
-        uni.join(bi, "doc_id")
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-def doc_repetition_sql() -> str:
-    return f"""
-WITH d AS (SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS l FROM documents),
-w AS (SELECT doc_id, unnest(l) AS term FROM d),
-uni AS (SELECT doc_id, term, COUNT(*) AS cnt FROM w GROUP BY doc_id, term),
-um AS (
-  SELECT doc_id,
-         CAST(SUM(cnt) AS BIGINT) AS n_words,
-         CAST(COUNT(*) AS BIGINT) AS n_distinct,
-         CAST(MAX(cnt) AS BIGINT) AS top_word_cnt,
-         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_tokens,
-         CAST(SUM(CASE WHEN cnt > 1 THEN cnt * length(term) ELSE 0 END) AS BIGINT)
-           AS dup_chars
-  FROM uni GROUP BY doc_id
-),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(l)), i -> l[i] || ' ' || l[i + 1])) AS big
-  FROM d
-),
-bic AS (SELECT doc_id, big, COUNT(*) AS cnt FROM bg GROUP BY doc_id, big),
-bm AS (
-  SELECT doc_id, CAST(MAX(cnt) AS BIGINT) AS top_bigram_cnt,
-         CAST(COUNT(*) AS BIGINT) AS n_distinct_bigrams
-  FROM bic GROUP BY doc_id
-)
-SELECT um.doc_id, um.n_words, um.n_distinct, um.top_word_cnt, um.dup_tokens,
-       um.dup_chars, bm.top_bigram_cnt, bm.n_distinct_bigrams
-FROM um JOIN bm USING (doc_id) ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# T6 — corpus collocations (integer-exact PMI-lift bigram ranking)
-# ---------------------------------------------------------------------------
-
-COLLOC_TOPK = 20
-
-
-def collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level collocation mining: the top-20 adjacent word pairs by
-    corpus frequency, each carrying its component unigram counts and an
-    integer-exact pointwise-mutual-information sign —
-
-        lift_pos  <=>  P(w1 w2) > P(w1) P(w2)
-                  <=>  bc * n_tokens > uc1 * uc2      (all int64)
-
-    (the standard PMI > 0 association test, cross-multiplied so no float
-    log/ratio reaches the hash surface).
-
-    Plan shape: one bigram explode -> partial+final count -> global
-    top-k via TakeOrderedAndProject (orderBy+limit, never a full sort);
-    the 20 survivors then BROADCAST-join the unigram counts twice — the
-    big side of each join is 20 rows, so the stopword-hot unigram
-    relation never shuffles for this query."""
-    ws = _clean_words()
-    bigrams = F.when(
-        F.size(ws) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    docs = _docs(spark, sf_dir)
-    uni = (
-        docs.select(F.explode(ws).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("uc"))
-    )
-    n_tokens = docs.select(F.sum(F.size(ws)).cast("long").alias("n_tokens"))
-    top = (
-        docs.select(F.explode(bigrams).alias("big"))
-        .groupBy("big")
-        .agg(F.count(F.lit(1)).alias("bc"))
-        .orderBy(F.col("bc").desc(), F.col("big").asc())
-        .limit(COLLOC_TOPK)
-        .withColumn("w1", F.split_part(F.col("big"), F.lit(" "), F.lit(1)))
-        .withColumn("w2", F.split_part(F.col("big"), F.lit(" "), F.lit(2)))
-    )
-    u1 = uni.select(F.col("term").alias("w1"), F.col("uc").alias("uc1"))
-    u2 = uni.select(F.col("term").alias("w2"), F.col("uc").alias("uc2"))
-    out = (
-        u1.join(F.broadcast(top), "w1")
-        .join(F.broadcast(u2), "w2", "inner")
-        .crossJoin(F.broadcast(n_tokens))
-    )
-    rnk = W.orderBy(F.col("bc").desc(), F.col("big").asc())
-    return (
-        out.withColumn("rnk", F.row_number().over(rnk))
-        .select(
-            "rnk", "big", F.col("bc").cast("long").alias("bc"),
-            F.col("uc1").cast("long").alias("uc1"),
-            F.col("uc2").cast("long").alias("uc2"),
-            (F.col("bc") * F.col("n_tokens") > F.col("uc1") * F.col("uc2"))
-            .alias("lift_pos"),
-        )
-        .repartition(1).sortWithinPartitions("rnk")
-    )
-
-
-def collocations_sql() -> str:
-    return f"""
-WITH d AS (SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS l FROM documents),
-w AS (SELECT unnest(l) AS term FROM d),
-uni AS (SELECT term, COUNT(*) AS uc FROM w GROUP BY term),
-tot AS (SELECT COUNT(*) AS n_tokens FROM w),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(l)), i -> l[i] || ' ' || l[i + 1])) AS big
-  FROM d
-),
-bc AS (
-  SELECT big, string_split(big, ' ')[1] AS w1, string_split(big, ' ')[2] AS w2,
-         COUNT(*) AS bc
-  FROM bg GROUP BY big
-  ORDER BY bc DESC, big ASC LIMIT {COLLOC_TOPK}
-),
-ranked AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY bc DESC, big ASC) AS rnk, *
-  FROM bc
-)
-SELECT CAST(r.rnk AS INT) AS rnk, r.big, CAST(r.bc AS BIGINT) AS bc,
-       CAST(u1.uc AS BIGINT) AS uc1, CAST(u2.uc AS BIGINT) AS uc2,
-       r.bc * t.n_tokens > u1.uc * u2.uc AS lift_pos
-FROM ranked r
-JOIN uni u1 ON u1.term = r.w1
-JOIN uni u2 ON u2.term = r.w2
-CROSS JOIN tot t
-ORDER BY rnk
-"""
-
-
-def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID ACCURACY GATE (the eval twin of lang_id, same class
-    as sketch_accuracy): confusion matrix of the heuristic's prediction
-    against the corpus's planted `lang` label — per (label, prediction)
-    cell: doc count + Σdoc_id checksum pinning the exact cell SET.
-
-    (The synthetic corpus shares one vocabulary across labels so the
-    matrix skews toward 'en' — the graded surface is the exact,
-    cross-engine-reproducible evaluation harness, the shape a real
-    curation pipeline audits its classifier with.)  Map-only scoring +
-    ONE tiny group shuffle; at 10^12 docs the matrix is |L|² rows."""
-    d = _docs(spark, sf_dir)
-    pred = lang_id(spark, sf_dir).select("doc_id", "pred_lang")
-    return (
-        pred.join(d.select("doc_id", "lang"), "doc_id")
-        .groupBy("lang", "pred_lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_id").alias("doc_checksum"),
-        )
-        .repartition(1).sortWithinPartitions("lang", "pred_lang")
-    )
-
-
-def langid_confusion_sql() -> str:
-    return f"""
-WITH pred AS ({lang_id_sql()})
-SELECT d.lang, p.pred_lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(d.doc_id) AS BIGINT) AS doc_checksum
-FROM pred p JOIN documents d USING (doc_id)
-GROUP BY d.lang, p.pred_lang
-ORDER BY d.lang, p.pred_lang
-"""
-
-
-def lsh_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-tier ACCURACY GATE (same class as sketch_accuracy /
-    langid_confusion): the banded-MinHash candidate path (D3, the
-    10^12-row tier) audited against the exact inverted-index Jaccard
-    tier (D2) on the same corpus and threshold — pair-set sizes, the
-    intersection, integer recall/precision percentages, and Σ(a+b)
-    checksums pinning both exact pair SETS.  A regression in the LSH
-    banding (missed bands, wrong row grouping) turns the row red.
-
-    Scale shape: both tiers' outputs are tiny pair relations; the audit
-    is one full-outer join + one global agg over them."""
-    ex = jaccard_pairs(spark, sf_dir).select("a_id", "b_id", F.lit(1).alias("_e"))
-    ls = minhash_lsh_pairs(spark, sf_dir).select(
-        "a_id", "b_id", F.lit(1).alias("_l")
-    )
-    j = ex.join(ls, ["a_id", "b_id"], "full_outer")
-    return j.agg(
-        F.count("_e").alias("n_exact"),
-        F.count("_l").alias("n_lsh"),
-        F.count(F.when(F.col("_e").isNotNull() & F.col("_l").isNotNull(), 1)).alias("n_common"),
-        (F.count(F.when(F.col("_e").isNotNull() & F.col("_l").isNotNull(), 1)) * 100
-         / F.greatest(F.count("_e"), F.lit(1))).cast("long").alias("recall_pct"),
-        (F.count(F.when(F.col("_e").isNotNull() & F.col("_l").isNotNull(), 1)) * 100
-         / F.greatest(F.count("_l"), F.lit(1))).cast("long").alias("precision_pct"),
-        F.sum(F.when(F.col("_e").isNotNull(), F.col("a_id") + F.col("b_id"))).alias("exact_checksum"),
-        F.sum(F.when(F.col("_l").isNotNull(), F.col("a_id") + F.col("b_id"))).alias("lsh_checksum"),
-    )
-
-
-def lsh_recall_gate_sql() -> str:
-    return f"""
-WITH ex AS ({jaccard_pairs_sql()}),
-ls AS ({minhash_lsh_pairs_sql()}),
-j AS (
-  SELECT coalesce(e.a_id, l.a_id) AS a_id, coalesce(e.b_id, l.b_id) AS b_id,
-         e.a_id IS NOT NULL AS in_e, l.a_id IS NOT NULL AS in_l
-  FROM ex e FULL OUTER JOIN ls l ON e.a_id = l.a_id AND e.b_id = l.b_id
-)
-SELECT CAST(SUM(CASE WHEN in_e THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN in_l THEN 1 ELSE 0 END) AS BIGINT) AS n_lsh,
-       CAST(SUM(CASE WHEN in_e AND in_l THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
-       CAST(SUM(CASE WHEN in_e AND in_l THEN 1 ELSE 0 END) * 100
-            / greatest(SUM(CASE WHEN in_e THEN 1 ELSE 0 END), 1) AS BIGINT) AS recall_pct,
-       CAST(SUM(CASE WHEN in_e AND in_l THEN 1 ELSE 0 END) * 100
-            / greatest(SUM(CASE WHEN in_l THEN 1 ELSE 0 END), 1) AS BIGINT) AS precision_pct,
-       CAST(SUM(CASE WHEN in_e THEN a_id + b_id END) AS BIGINT) AS exact_checksum,
-       CAST(SUM(CASE WHEN in_l THEN a_id + b_id END) AS BIGINT) AS lsh_checksum
-FROM j
-"""
-
-
-def source_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source curation dashboard — the grouped audit a corpus
-    operator reads before dropping a crawl source: per `source`, doc
-    count, total whitespace tokens, low-quality count (integer rule:
-    n_tokens < 30 OR 2·n_stopwords > n_tokens, i.e. stopword ratio
-    > 1/2 — exact, no float threshold), short-doc count (n_chars <
-    100), and the Σdoc_id checksum pinning each source's exact doc set.
-
-    Scale shape: quality features are map-only Column math (D/T-tier
-    reuse); ONE tiny group shuffle on `source` (|sources| rows out)."""
-    d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    q = text_quality(spark, sf_dir).select("doc_id", "n_tokens", "n_stopwords")
-    j = d.join(q, "doc_id")
-    low_q = (F.col("n_tokens") < 30) | (2 * F.col("n_stopwords") > F.col("n_tokens"))
-    return (
-        j.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("tok_sum"),
-            F.sum(low_q.cast("long")).alias("n_low_quality"),
-            F.sum((F.col("n_chars") < 100).cast("long")).alias("n_short"),
-            F.sum("doc_id").alias("doc_checksum"),
-        )
-        .repartition(1).sortWithinPartitions("source")
-    )
-
-
-def source_quality_rollup_sql() -> str:
-    return f"""
-WITH q AS ({text_quality_sql()})
-SELECT d.source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(q.n_tokens) AS BIGINT) AS tok_sum,
-       CAST(SUM(CASE WHEN q.n_tokens < 30 OR 2 * q.n_stopwords > q.n_tokens
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_low_quality,
-       CAST(SUM(CASE WHEN d.n_chars < 100 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
-       CAST(SUM(d.doc_id) AS BIGINT) AS doc_checksum
-FROM documents d JOIN q USING (doc_id)
-GROUP BY d.source ORDER BY d.source
-"""
-
-
-
-
-# ---------------------------------------------------------------------------
-# rare-shingle novelty scoring
-# ---------------------------------------------------------------------------
-
-NOVELTY_RARE_MAX = 1  # a shingle is "rare" if <= this many docs contain it
-
-
-def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-novelty scoring — the curation signal complementary to
-    dedup: for each document, the fraction of its distinct word-3-gram
-    shingles that are RARE in the corpus (document frequency <=
-    NOVELTY_RARE_MAX).  Low novelty => boilerplate/template text (its
-    n-grams are everywhere); high novelty => unique content.  The same
-    signal drives "repetitive corpus slice" pruning in large-scale
-    pretraining pipelines (C4/Gopher lineage).
-
-    Emitted per doc: n_sh (distinct shingles), n_rare, and the exact
-    integer novelty_pm = 1000 * n_rare // n_sh (no float ever).
-
-    Scale shape: one explode + groupBy(shingle) exact DF count (partial
-    + final, combiner-friendly since keys repeat within partitions),
-    one slim join back on the shingle key, one per-doc re-agg.  The
-    shingle key space is hot-skewed like jaccard's inverted index —
-    at 100 TB the DF count is fine (agg, not join); the join-back is
-    the skewed leg and rides AQE skew handling (the rare keys that
-    matter are by definition NOT hot)."""
-    d = _with_shingles(_docs(spark, sf_dir))
-    ex = d.select("doc_id", F.explode("sh").alias("s"))
-    df_cnt = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (
-        ex.join(df_cnt, "s")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sh"),
-            F.sum(
-                F.when(F.col("df") <= NOVELTY_RARE_MAX, 1).otherwise(0)
-            ).alias("n_rare"),
-        )
-        .select(
-            "doc_id", "n_sh", "n_rare",
-            F.expr("1000 * n_rare DIV n_sh").alias("novelty_pm"),
-        )
-    )
-    return per_doc.repartition(1).sortWithinPartitions("doc_id")
-
-
-def ngram_novelty_sql() -> str:
-    return f"""
-WITH w AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
-s AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM w WHERE len(ws) >= 3),
-ex AS (SELECT doc_id, unnest(sh) AS s FROM s),
-dfc AS (SELECT s, COUNT(*) AS df FROM ex GROUP BY s)
-SELECT e.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_sh,
-       CAST(SUM(CASE WHEN d.df <= {NOVELTY_RARE_MAX} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_rare,
-       CAST(1000 * SUM(CASE WHEN d.df <= {NOVELTY_RARE_MAX} THEN 1 ELSE 0 END)
-            // COUNT(*) AS BIGINT) AS novelty_pm
-FROM ex e JOIN dfc d USING (s)
-GROUP BY e.doc_id ORDER BY e.doc_id
-"""
-
-# ---------------------------------------------------------------------------
-# PII scan + redaction audit
-# ---------------------------------------------------------------------------
-
-# Patterns restricted to syntax valid in BOTH Java regex (Spark) and RE2
-# (DuckDB): character classes, bounded repetition, no backrefs/lookaround.
-PII_EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-PII_PHONE_RE = "555-[0-9]{4}"
-PII_IP_RE = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
-
-
-def _pii_augmented(d: DataFrame) -> Column:
-    """The synthetic corpus carries no natural PII, so inject it
-    DETERMINISTICALLY inside the query (same expression mirrored in the
-    SQL twin): docs with doc_id % 7 == 0 gain an e-mail, % 11 a phone
-    number, % 13 an IPv4 — overlapping moduli give multi-PII docs."""
-    did = F.col("doc_id")
-    return F.concat(
-        F.col("text"),
-        F.when(
-            did % 7 == 0,
-            F.concat(F.lit(" contact user"), did.cast("string"), F.lit("@example.com")),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 11 == 0,
-            F.concat(F.lit(" call 555-0"), (100 + did % 900).cast("string")),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 13 == 0,
-            F.concat(
-                F.lit(" host 10.0."), (did % 256).cast("string"),
-                F.lit("."), (did % 250).cast("string"),
-            ),
-        ).otherwise(F.lit("")),
-    )
-
-
-_SQL_PII_AUG = """
-text
-|| CASE WHEN doc_id % 7 = 0
-        THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-        ELSE '' END
-|| CASE WHEN doc_id % 11 = 0
-        THEN ' call 555-0' || CAST(100 + doc_id % 900 AS VARCHAR)
-        ELSE '' END
-|| CASE WHEN doc_id % 13 = 0
-        THEN ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-             || '.' || CAST(doc_id % 250 AS VARCHAR)
-        ELSE '' END
-"""
-
-
-def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection + redaction audit — the compliance pass every
-    large-scale training-data pipeline runs before a corpus ships
-    (C4 removed pages on badword lists; modern pipelines regex-scrub
-    emails/phones/IPs).  Per source: docs containing each PII class,
-    total match counts, and the Σh40(redacted_text) checksum pinning the
-    EXACT post-redaction bytes — so the oracle verifies the scrubbing
-    itself, not just the counts.
-
-    Redaction order is normative: e-mail -> phone -> IP (the classes are
-    syntactically disjoint here, but the order is still pinned so both
-    engines rewrite identically).
-
-    Scale shape: pure map-side regexp Column math (JVM codegen, zero
-    Python), ONE tiny group shuffle on `source`."""
-    d = _docs(spark, sf_dir)
-    aug = _pii_augmented(d)
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(aug, PII_EMAIL_RE, "<EMAIL>"),
-            PII_PHONE_RE, "<PHONE>",
-        ),
-        PII_IP_RE, "<IP>",
-    )
-    per_doc = d.select(
-        "source",
-        F.regexp_count(aug, F.lit(PII_EMAIL_RE)).alias("ne"),
-        F.regexp_count(aug, F.lit(PII_PHONE_RE)).alias("np"),
-        F.regexp_count(aug, F.lit(PII_IP_RE)).alias("ni"),
-        h40(red).alias("rh"),
-    )
-    return (
-        per_doc.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("ne").alias("n_emails"),
-            F.sum("np").alias("n_phones"),
-            F.sum("ni").alias("n_ips"),
-            F.sum(((F.col("ne") + F.col("np") + F.col("ni")) > 0).cast("long")).alias(
-                "n_docs_pii"
-            ),
-            F.sum("rh").alias("redact_checksum"),
-        )
-        .repartition(1).sortWithinPartitions("source")
-    )
-
-
-def pii_scan_sql() -> str:
-    h = _SQL_H40.format(s="red")
-    return f"""
-WITH aug AS (
-  SELECT source, doc_id, ({_SQL_PII_AUG}) AS t FROM documents
-),
-per_doc AS (
-  SELECT source,
-         len(regexp_extract_all(t, '{PII_EMAIL_RE}')) AS ne,
-         len(regexp_extract_all(t, '{PII_PHONE_RE}')) AS np,
-         len(regexp_extract_all(t, '{PII_IP_RE}')) AS ni,
-         regexp_replace(regexp_replace(regexp_replace(t,
-             '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
-             '{PII_PHONE_RE}', '<PHONE>', 'g'),
-             '{PII_IP_RE}', '<IP>', 'g') AS red
-  FROM aug
-)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(ne) AS BIGINT) AS n_emails,
-       CAST(SUM(np) AS BIGINT) AS n_phones,
-       CAST(SUM(ni) AS BIGINT) AS n_ips,
-       CAST(SUM(CASE WHEN ne + np + ni > 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_docs_pii,
-       CAST(SUM({h}) AS BIGINT) AS redact_checksum
-FROM per_doc GROUP BY source ORDER BY source
-"""
-
-
-# ---------------------------------------------------------------------------
-# URL extraction + domain rollup (blocklist curation signal)
-# ---------------------------------------------------------------------------
-
-URL_RE = "https?://[a-z0-9.-]+/[a-z0-9/._-]*"
-DOMAIN_RE = "https?://([a-z0-9.-]+)/"
-
-
-def _url_augmented(d: DataFrame) -> Column:
-    """Deterministic URL injection (the corpus has no natural URLs):
-    docs with doc_id % 5 == 0 cite host<doc_id%50>.example.org, docs
-    with doc_id % 9 == 0 cite www.site<doc_id%30>.net — overlapping
-    moduli give multi-URL docs; the expression is mirrored in SQL."""
-    did = F.col("doc_id")
-    return F.concat(
-        F.col("text"),
-        F.when(
-            did % 5 == 0,
-            F.concat(
-                F.lit(" see https://host"), (did % 50).cast("string"),
-                F.lit(".example.org/page"), did.cast("string"), F.lit("/"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 9 == 0,
-            F.concat(
-                F.lit(" via http://www.site"), (did % 30).cast("string"),
-                F.lit(".net/item"), did.cast("string"), F.lit("/"),
-            ),
-        ).otherwise(F.lit("")),
-    )
-
-
-_SQL_URL_AUG = """
-text
-|| CASE WHEN doc_id % 5 = 0
-        THEN ' see https://host' || CAST(doc_id % 50 AS VARCHAR)
-             || '.example.org/page' || CAST(doc_id AS VARCHAR) || '/'
-        ELSE '' END
-|| CASE WHEN doc_id % 9 = 0
-        THEN ' via http://www.site' || CAST(doc_id % 30 AS VARCHAR)
-             || '.net/item' || CAST(doc_id AS VARCHAR) || '/'
-        ELSE '' END
-"""
-
-
-def url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL extraction + per-domain rollup — the domain-blocklist signal
-    web-scale curation runs first (C4 dropped blocklisted domains;
-    RefinedWeb ranks domains by quality before sampling).  Per domain:
-    URL count, distinct citing docs, Σdoc_id checksum pinning the exact
-    doc set, and the normative blocklist flag (here: host index ≡ 7
-    mod 10 — the rule is the plumbing under any real list).
-
-    Scale shape: map-side regexp extract + ONE explode (bounded: URLs
-    per doc, not tokens) + group shuffle on domain.  Domains are
-    Zipf-hot at 100 TB — counts are an agg (combiner-friendly), not a
-    join, so hot domains cost map-side partials only."""
-    d = _docs(spark, sf_dir)
-    urls = d.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(_url_augmented(d), F.lit(URL_RE), 0)
-        ).alias("url"),
-    )
-    dom = urls.select(
-        "doc_id",
-        F.regexp_extract(F.col("url"), DOMAIN_RE, 1).alias("domain"),
-    )
-    host_idx = F.regexp_extract(F.col("domain"), "host([0-9]+)", 1)
-    return (
-        dom.groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).alias("n_urls"),
-            F.count_distinct(F.col("doc_id")).alias("n_docs"),
-            F.sum_distinct(F.col("doc_id")).alias("doc_checksum"),
-        )
-        .withColumn(
-            "is_blocked",
-            F.when(host_idx == "", F.lit(0)).otherwise(
-                (host_idx.cast("long") % 10 == 7).cast("long")
-            ),
-        )
-        .repartition(1).sortWithinPartitions("domain")
-    )
-
-
-def url_domains_sql() -> str:
-    return f"""
-WITH aug AS (
-  SELECT doc_id, ({_SQL_URL_AUG}) AS t FROM documents
-),
-u AS (
-  SELECT doc_id, unnest(regexp_extract_all(t, '{URL_RE}')) AS url FROM aug
-),
-dom AS (
-  SELECT doc_id, regexp_extract(url, '{DOMAIN_RE}', 1) AS domain FROM u
-)
-SELECT domain,
-       CAST(COUNT(*) AS BIGINT) AS n_urls,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       CAST(SUM(DISTINCT doc_id) AS BIGINT) AS doc_checksum,
-       CAST(CASE WHEN regexp_extract(domain, 'host([0-9]+)', 1) = '' THEN 0
-                 WHEN CAST(regexp_extract(domain, 'host([0-9]+)', 1) AS BIGINT)
-                      % 10 = 7 THEN 1 ELSE 0 END AS BIGINT) AS is_blocked
-FROM dom GROUP BY domain ORDER BY domain
-"""
-
-
-# ---------------------------------------------------------------------------
-# vocabulary coverage / OOV-rate audit
-# ---------------------------------------------------------------------------
-
-VOCAB_K = 16  # vocabulary = top-K corpus tokens by (count DESC, token ASC)
-# (the synthetic corpus has ~31 distinct words; K=16 keeps genuine OOV mass)
-
-
-def oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-coverage audit — before committing a tokenizer, a
-    training pipeline measures what fraction of the corpus a candidate
-    vocabulary leaves out-of-vocabulary (BPE training's coverage curve;
-    SentencePiece's `character_coverage` analog at the word level).
-    Vocabulary here is the top-VOCAB_K corpus tokens by (count DESC,
-    token ASC) — a deterministic total order.  Per source: total token
-    occurrences, OOV occurrences, and the exact integer
-    oov_pm = 1000·oov // total.
-
-    Scale shape: one token-count agg (combiner-friendly), a top-K rank
-    over the DISTINCT-TOKEN relation — tiny by definition (vocabulary
-    candidates, not occurrences), so the single-partition window is a
-    planner metadata step, same policy as the skew census — then a
-    BROADCAST left join of the vocab onto the exploded tokens and one
-    group shuffle on source."""
-    d = _docs(spark, sf_dir)
-    toks = d.select("source", F.explode(words_col()).alias("tok"))
-    vocab = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "tok",
-            F.row_number()
-            .over(W.partitionBy().orderBy(F.col("cnt").desc(), F.col("tok")))
-            .alias("rnk"),
-        )
-        .where(F.col("rnk") <= VOCAB_K)
-        .select(F.col("tok").alias("vtok"))
-    )
-    j = toks.join(F.broadcast(vocab), toks.tok == vocab.vtok, "left")
-    return (
-        j.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            F.sum(F.col("vtok").isNull().cast("long")).alias("n_oov"),
-        )
-        .select(
-            "source", "n_tok", "n_oov",
-            F.expr("1000 * n_oov DIV n_tok").alias("oov_pm"),
-        )
-        .repartition(1).sortWithinPartitions("source")
-    )
-
-
-def oov_rate_sql() -> str:
-    return f"""
-WITH w AS (SELECT source, unnest({_SQL_WS}) AS tok FROM documents),
-vc AS (
-  SELECT tok, row_number() OVER (ORDER BY COUNT(*) DESC, tok) AS rnk
-  FROM w GROUP BY tok
-),
-vocab AS (SELECT tok FROM vc WHERE rnk <= {VOCAB_K})
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_tok,
-       CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-       CAST(1000 * SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END)
-            // COUNT(*) AS BIGINT) AS oov_pm
-FROM w LEFT JOIN vocab v USING (tok)
-GROUP BY source ORDER BY source
-"""
-
-
-# ---------------------------------------------------------------------------
-# sequence packing (training-batch construction)
-# ---------------------------------------------------------------------------
-
-PACK_B = 1024  # context-window budget in chars (stand-in for tokens)
-
-
-def seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence-packing audit — training pipelines concatenate documents
-    into fixed context windows (GPT-style "packing"); the operational
-    questions are how many windows a shard needs, how many documents get
-    SPLIT across a window boundary (straddlers lose coherence), and the
-    worst-case docs-per-window (attention-mask segment count).
-
-    Normative deterministic packing: within each `source`, order docs by
-    (n_chars DESC, doc_id) — first-fit-decreasing's sort with a total
-    tie-break — then pack CONTIGUOUSLY by running cumulative sum; a doc
-    lands in bin (cum-1) DIV B and straddles iff its span crosses a
-    B-boundary.  Everything is int64 window/agg math — bit-identical in
-    both engines.
-
-    Per source: n_docs, total_chars, n_bins (= ceil(total/B)),
-    n_straddle, max_bin_docs (docs whose END falls in the fullest bin).
-
-    Scale shape: ONE window sort partitioned by `source` — parallel
-    across sources, no global order.  At 10^12 rows a single source
-    outgrows one task: sub-shard the window key to (source,
-    hash(doc_id) % n_shards) and pack per shard — the metrics stay
-    exact per shard and additive per source (bins don't cross shards
-    by construction)."""
-    d = _docs(spark, sf_dir).select("source", "doc_id", "n_chars")
-    w = (
-        W.partitionBy("source")
-        .orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    b = d.withColumn("cum", F.sum("n_chars").over(w)).select(
-        "source", "n_chars",
-        F.expr(f"(cum - 1) DIV {PACK_B}").alias("bin_id"),
-        F.expr(
-            f"CASE WHEN (cum - n_chars) DIV {PACK_B} <> (cum - 1) DIV {PACK_B}"
-            " THEN 1 ELSE 0 END"
-        ).alias("straddle"),
-    )
-    agg = b.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.expr(f"(sum(n_chars) + {PACK_B - 1}) DIV {PACK_B}").alias("n_bins"),
-        F.sum("straddle").alias("n_straddle"),
-    )
-    mx = (
-        b.groupBy("source", "bin_id")
-        .agg(F.count(F.lit(1)).alias("n_in_bin"))
-        .groupBy("source")
-        .agg(F.max("n_in_bin").alias("max_bin_docs"))
-    )
-    return agg.join(mx, "source").repartition(1).sortWithinPartitions("source")
-
-
-def seq_packing_sql() -> str:
-    return f"""
-WITH c AS (
-  SELECT source, doc_id, n_chars,
-         SUM(n_chars) OVER (PARTITION BY source
-                            ORDER BY n_chars DESC, doc_id
-                            ROWS UNBOUNDED PRECEDING) AS cum
-  FROM documents
-),
-b AS (
-  SELECT source, n_chars,
-         (cum - 1) // {PACK_B} AS bin_id,
-         CASE WHEN (cum - n_chars) // {PACK_B} <> (cum - 1) // {PACK_B}
-              THEN 1 ELSE 0 END AS straddle
-  FROM c
-),
-agg AS (
-  SELECT source,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-         CAST((SUM(n_chars) + {PACK_B - 1}) // {PACK_B} AS BIGINT) AS n_bins,
-         CAST(SUM(straddle) AS BIGINT) AS n_straddle
-  FROM b GROUP BY source
-),
-mx AS (
-  SELECT source, CAST(MAX(n_in_bin) AS BIGINT) AS max_bin_docs
-  FROM (SELECT source, bin_id, COUNT(*) AS n_in_bin
-        FROM b GROUP BY source, bin_id)
-  GROUP BY source
-)
-SELECT agg.*, mx.max_bin_docs
-FROM agg JOIN mx USING (source) ORDER BY source
-"""
-
-
-
-
-# ---------------------------------------------------------------------------
-# Round 3: BPE merge-pair census + integer-exact BM25 retrieval
-# ---------------------------------------------------------------------------
-
-BPE_TOPK = 20
-
-
-def bpe_pair_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The counting round of a BPE tokenizer-training step: frequency of
-    every adjacent character pair WITHIN whitespace words, top-20 by
-    (count DESC, pair ASC).  This is merge round 0 of Sennrich et al.'s
-    byte-pair encoding — the hot loop of vocab induction over a corpus.
-
-    Plan: explode words -> explode in-word bigrams via a codegen
-    transform(sequence(...)) (zero Python) -> ONE combiner-friendly agg
-    on a ~10^3-key domain -> TakeOrdered 20.  At 10^12 docs the pair
-    domain stays tiny (alphabet²), so the final agg is skew-free."""
-    w = (
-        _docs(spark, sf_dir)
-        .select(F.explode(words_col()).alias("wrd"))
-        .where(F.length("wrd") >= 2)
-    )
-    bi = w.select(
-        F.explode(
-            F.expr("transform(sequence(1, length(wrd) - 1),"
-                   " i -> substring(wrd, i, 2))")
-        ).alias("pair")
-    )
-    return (
-        bi.groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("pair").asc())
-        .limit(BPE_TOPK)
-    )
-
-
-def bpe_pair_census_sql() -> str:
-    return f"""
-WITH w AS (SELECT unnest({_SQL_WS}) AS wrd FROM documents),
-bi AS (
-  SELECT unnest(list_transform(range(1, len(wrd)),
-                i -> substr(wrd, i, 2))) AS pair
-  FROM w WHERE len(wrd) >= 2
-)
-SELECT pair, COUNT(*) AS n FROM bi
-GROUP BY pair ORDER BY n DESC, pair LIMIT {BPE_TOPK}
-"""
-
-
-BM25_TOPK = 10
-BM25_QRANKS = (10, 20, 30)  # query terms: df-ranks 10/20/30 (mid-frequency)
-
-
-def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 retrieval top-10 for a deterministic 3-term query (the terms
-    at df-rank 10/20/30), INTEGER-EXACT: the float log-idf is replaced
-    by the rational surrogate ((N-df)<<10) DIV (df+1) (order-equivalent
-    for fixed N) and the k1=1.2 / b=0.75 saturation is cross-multiplied
-    into one exact integer floor division:
-
-        s_term = idf' * 44*TL*tf  DIV  (20*TL*tf + 6*TL + 18*dl*N)
-
-    (k1=6/5, b=3/4, avgdl=TL/N multiplied out by 20·TL).  No float ever
-    enters the ranking, so Spark and the SQL oracle agree bit-for-bit.
-
-    Plan: tf/df/dl are partial+final hash aggs over one explode; the
-    3-row query-term table and the two scalar totals broadcast; ranking
-    is TakeOrdered(10) — never a global sort.  Scale: identical to any
-    inverted-index scoring join; df hot keys are capped by the 3-term
-    query list itself."""
-    scored = _bm25_scored(_docs(spark, sf_dir))
-    top = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(BM25_TOPK)
-    wr = W.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return top.withColumn("rnk", F.row_number().over(wr)).select(
-        "rnk", "doc_id", "score", "n_terms"
-    )
-
-
-def _bm25_scored(d: DataFrame) -> DataFrame:
-    """(doc_id, score, n_terms) for every doc matching ≥1 query term —
-    the shared integer-exact BM25 scorer behind bm25_topk and
-    rrf_fusion (see bm25_topk's docstring for the rational surrogate)."""
-    toks = (
-        d.select("doc_id", F.explode(words_col()).alias("term"))
-        .where(F.col("term") != "")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    wq = W.orderBy(F.col("df").desc(), F.col("term").asc())
-    qterms = (
-        dfq.withColumn("qrnk", F.row_number().over(wq))
-        .where(F.col("qrnk").isin(*BM25_QRANKS))
-        .select("term", "df")
-    )
-    nrow = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    tlrow = toks.agg(F.count(F.lit(1)).alias("tl"))
-    scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(nrow))
-        .crossJoin(F.broadcast(tlrow))
-        .withColumn("idf", F.expr("((n_docs - df) * 1024) DIV (df + 1)"))
-        .withColumn(
-            "s_term",
-            F.expr("(idf * (44 * tl * tf))"
-                   " DIV (20 * tl * tf + 6 * tl + 18 * dl * n_docs)"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("s_term").alias("score"), F.count(F.lit(1)).alias("n_terms"))
-    )
-    return scored
-
-
-def bm25_topk_sql() -> str:
-    ranks = ", ".join(str(r) for r in BM25_QRANKS)
-    return f"""
-WITH w AS (SELECT doc_id, unnest({_SQL_WS}) AS term FROM documents),
-t AS (SELECT doc_id, term FROM w WHERE term <> ''),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY doc_id, term),
-dl AS (SELECT doc_id, COUNT(*) AS dl FROM t GROUP BY doc_id),
-dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-q AS (
-  SELECT term, df FROM (
-    SELECT term, df, ROW_NUMBER() OVER (ORDER BY df DESC, term) AS qrnk
-    FROM dfq) WHERE qrnk IN ({ranks})
-),
-consts AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-         (SELECT COUNT(*) FROM t) AS tl
-),
-sc AS (
-  SELECT tf.doc_id,
-         CAST(((n_docs - df) * 1024) // (df + 1) AS HUGEINT)
-           * CAST(44 * tl * tf AS HUGEINT)
-           // CAST(20 * tl * tf + 6 * tl + 18 * dl.dl * n_docs AS HUGEINT)
-           AS s_term
-  FROM tf JOIN q USING (term) JOIN dl USING (doc_id), consts
-),
-agg AS (
-  SELECT doc_id, CAST(SUM(s_term) AS BIGINT) AS score, COUNT(*) AS n_terms
-  FROM sc GROUP BY doc_id
-)
-SELECT * FROM (
-  SELECT ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rnk,
-         doc_id, score, n_terms
-  FROM agg) WHERE rnk <= {BM25_TOPK} ORDER BY rnk
-"""
-
-
-def lm_doc_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM document scoring — the CCNet perplexity-filter stage
-    (Wenzek et al. 2020, PAPERS.md) made integer-exact: the corpus
-    trains its own add-one-smoothed bigram model, then every document
-    is scored by its per-transition smoothed conditional likelihood
-
-        lik(w1 w2) = ((bc + 1) << 10) DIV (uc1 + V)      (all int64)
-
-    with bc = corpus bigram count, uc1 = prefix unigram count, V =
-    vocabulary size.  lik is monotone in the add-one bigram probability
-    P(w2|w1), so ranking documents by lik_mean orders them exactly as
-    the float model would — and no float/log ever reaches the hash
-    surface.  Low lik_mean = out-of-distribution text (gibberish,
-    wrong-language, OCR noise): CCNet's 'tail' bucket; lik_min flags a
-    single catastrophic transition.  Docs with < 2 tokens have no
-    transitions and are absent (same as CCNet, which skips empties).
-
-    Plan: two combiner-friendly count aggs (bigram, unigram) + one
-    1-row vocabulary census broadcast; the exploded doc-bigram relation
-    equi-joins the count tables on their keys and re-groups by doc_id.
-    At corpus scale both join sides are key-partitioned; hot stopword
-    keys are single rows on the count side (AQE skew-split covers the
-    probe side), and every agg is partial+final — nothing is
-    all-pairs."""
-    ws = _clean_words()
-    bigrams = F.when(
-        F.size(ws) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    docs = _docs(spark, sf_dir)
-    bg = docs.select("doc_id", F.explode(bigrams).alias("big")).localCheckpoint(
-        eager=False
-    )  # feeds BOTH the model counts and the scoring join — one compute
-    uni = (
-        docs.select(F.explode(ws).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("uc"))
-        .localCheckpoint(eager=False)  # vocabulary census + scoring join
-    )
-    vsz = uni.agg(F.count(F.lit(1)).alias("vsz"))
-    bc = bg.groupBy("big").agg(F.count(F.lit(1)).alias("bc"))
-    scored = (
-        bg.withColumn("w1", F.split_part(F.col("big"), F.lit(" "), F.lit(1)))
-        .join(bc, "big")
-        .join(uni.withColumnRenamed("term", "w1"), "w1")
-        .crossJoin(F.broadcast(vsz))
-        .withColumn("lik", F.expr("((bc + 1) * 1024) div (uc + vsz)"))
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_big"),
-            F.sum("lik").alias("lik_sum"),
-            F.min("lik").alias("lik_min"),
-        )
-        .withColumn("lik_mean", F.expr("lik_sum div n_big"))
-        .select("doc_id", "n_big", "lik_sum", "lik_min", "lik_mean")
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-def lm_doc_likelihood_sql() -> str:
-    return f"""
-WITH d AS (SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS l FROM documents),
-w AS (SELECT unnest(l) AS term FROM d),
-uni AS (SELECT term, COUNT(*) AS uc FROM w GROUP BY term),
-v AS (SELECT COUNT(*) AS vsz FROM uni),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(l)), i -> l[i] || ' ' || l[i + 1])) AS big
-  FROM d
-),
-bc AS (SELECT big, COUNT(*) AS bc FROM bg GROUP BY big),
-scored AS (
-  SELECT g.doc_id, ((c.bc + 1) * 1024) // (u.uc + v.vsz) AS lik
-  FROM bg g
-  JOIN bc c USING (big)
-  JOIN uni u ON u.term = string_split(g.big, ' ')[1]
-  CROSS JOIN v
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_big,
-       CAST(SUM(lik) AS BIGINT) AS lik_sum,
-       CAST(MIN(lik) AS BIGINT) AS lik_min,
-       CAST(SUM(lik) // COUNT(*) AS BIGINT) AS lik_mean
-FROM scored GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-MIX_BUDGET = 1000  # total target docs across sources (demo budget)
-
-
-def source_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-weighted multi-source mixing subsample — the
-    Gopher/Pile data-mixing stage (Rae et al. 2021 §A3, PAPERS.md):
-    each source's sampling budget is proportional to n_docs^0.5 (sqrt
-    temperature flattens the source distribution so giant crawls don't
-    drown curated sets), and membership is decided by a deterministic
-    content hash, never an RNG:
-
-        w_s   = FLOOR(SQRT(n_s))           (IEEE-exact: correctly
-                                            rounded sqrt on both engines)
-        t_s   = (w_s * BUDGET) DIV Σw      (integer expected take)
-        keep  = h40(doc_id) % n_s < t_s    (map-only, reshuffle-proof)
-
-    Hash-threshold selection is the production shape (exact-rank
-    selection would need a per-source sort; the hash rule is one
-    map-side comparison and keeps E[kept] = t_s).  Output per source:
-    census, weight, target, the EXACT kept count and the Σdoc_id
-    checksum pinning the kept set.
-
-    Plan: one tiny groupBy(source) census + 1-row Σw broadcast back
-    onto the scan; everything else is map-side; final agg is
-    partial+final on the handful of source keys."""
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    census = (
-        docs.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("w", F.floor(F.sqrt(F.col("n_docs"))).cast("long"))
-    )
-    tot = census.agg(F.sum("w").alias("wsum"))
-    tgt = census.crossJoin(F.broadcast(tot)).withColumn(
-        "t", F.expr(f"(w * {MIX_BUDGET}) div wsum")
-    )
-    kept = (
-        docs.join(F.broadcast(tgt), "source")
-        .withColumn(
-            "keep", h40(F.col("doc_id").cast("string")) % F.col("n_docs") < F.col("t")
-        )
-    )
-    return (
-        kept.groupBy("source")
-        .agg(
-            F.first("n_docs").alias("n_docs"),
-            F.first("w").alias("w"),
-            F.first("t").alias("t"),
-            F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long").alias("n_kept"),
-            F.coalesce(
-                F.sum(F.when(F.col("keep"), F.col("doc_id"))), F.lit(0)
-            ).cast("long").alias("kept_id_sum"),
-        )
-        .repartition(1).sortWithinPartitions("source")
-    )
-
-
-def source_mixture_sample_sql() -> str:
-    hk = _SQL_H40.format(s="CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH census AS (
-  SELECT source, COUNT(*) AS n_docs,
-         CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT) AS w
-  FROM documents GROUP BY source
-),
-tot AS (SELECT SUM(w) AS wsum FROM census),
-tgt AS (
-  SELECT source, n_docs, w, (w * {MIX_BUDGET}) // wsum AS t
-  FROM census CROSS JOIN tot
-),
-k AS (
-  SELECT d.source, d.doc_id, g.n_docs, g.w, g.t,
-         ({hk}) % g.n_docs < g.t AS keep
-  FROM documents d JOIN tgt g USING (source)
-)
-SELECT source,
-       CAST(ANY_VALUE(n_docs) AS BIGINT) AS n_docs,
-       CAST(ANY_VALUE(w) AS BIGINT) AS w,
-       CAST(ANY_VALUE(t) AS BIGINT) AS t,
-       CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST(COALESCE(SUM(CASE WHEN keep THEN doc_id END), 0) AS BIGINT) AS kept_id_sum
-FROM k GROUP BY source ORDER BY source
-"""
-
-
-_DSIR_B = 1024  # hashed-feature buckets (DSIR hashes n-grams into a fixed table)
-
-
-def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR data-selection importance weighting (Xie et al. 2023,
-    "Data Selection for Language Models via Importance Resampling",
-    PAPERS.md): rank raw documents by how target-like their hashed
-    unigram features are.  Target here = the `lang = 'en'` subcorpus
-    (the labeled in-domain slice); features are h40(term) % 1024 hash
-    buckets, exactly DSIR's hashed-feature trick that bounds the model
-    at B buckets regardless of vocabulary.
-
-    Integer surface: per bucket the add-one likelihood surrogates
-
-        lt = ((ct + 1) << 10) DIV (nt + B)      target model
-        lr = ((cr + 1) << 10) DIV (nr + B)      raw model
-
-    and per document Σlt, Σlr and the ratio surrogate
-    imp = (Σlt << 10) DIV Σlr — monotone proxy for the DSIR
-    log-likelihood-ratio (sums of per-bucket surrogates instead of sums
-    of logs: a documented deviation that keeps the statistic int64-exact
-    on both engines; ranking quality is the same corpus-separation
-    signal).  High imp = target-like; resampling keeps top-weighted.
-
-    Plan: the bucket model is B<=1024 rows — ONE combiner-friendly agg
-    each for target and raw, then a BROADCAST join onto the exploded
-    term stream (map-only scoring) and a re-group by doc_id.  Nothing
-    scales with vocabulary; the two 1-row totals broadcast too."""
-    ws = _clean_words()
-    docs = _docs(spark, sf_dir)
-    terms = (
-        docs.select("doc_id", "lang", F.explode(ws).alias("term"))
-        .select("doc_id", "lang", (h40(F.col("term")) % _DSIR_B).alias("b"))
-        .localCheckpoint(eager=False)  # feeds both models AND the scoring join
-    )
-    raw = terms.groupBy("b").agg(F.count(F.lit(1)).alias("cr"))
-    tgt = (
-        terms.where(F.col("lang") == "en")
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("ct"))
-    )
-    model = (
-        raw.join(tgt, "b", "left")
-        .withColumn("ct", F.coalesce("ct", F.lit(0)))
-        .crossJoin(F.broadcast(raw.agg(F.sum("cr").alias("nr"))))
-        .crossJoin(F.broadcast(tgt.agg(F.sum("ct").alias("nt"))))
-        .select(
-            "b",
-            F.expr(f"((ct + 1) * 1024) div (nt + {_DSIR_B})").alias("lt"),
-            F.expr(f"((cr + 1) * 1024) div (nr + {_DSIR_B})").alias("lr"),
-        )
-    )
-    return (
-        terms.join(F.broadcast(model), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.sum("lt").alias("lt_sum"),
-            F.sum("lr").alias("lr_sum"),
-        )
-        .withColumn("imp", F.expr("(lt_sum * 1024) div lr_sum"))
-        .select("doc_id", "n_terms", "lt_sum", "lr_sum", "imp")
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-def dsir_importance_sql() -> str:
-    hb = _SQL_H40.format(s="t.term")
-    return f"""
-WITH d AS (SELECT doc_id, lang, list_filter({_SQL_WS}, t -> t <> '') AS l FROM documents),
-terms AS (
-  SELECT doc_id, lang, ({hb}) % {_DSIR_B} AS b
-  FROM (SELECT doc_id, lang, unnest(l) AS term FROM d) t
-),
-raw AS (SELECT b, COUNT(*) AS cr FROM terms GROUP BY b),
-tgt AS (SELECT b, COUNT(*) AS ct FROM terms WHERE lang = 'en' GROUP BY b),
-nr AS (SELECT SUM(cr) AS nr FROM raw),
-nt AS (SELECT SUM(ct) AS nt FROM tgt),
-model AS (
-  SELECT r.b,
-         ((COALESCE(g.ct, 0) + 1) * 1024) // (nt.nt + {_DSIR_B}) AS lt,
-         ((r.cr + 1) * 1024) // (nr.nr + {_DSIR_B}) AS lr
-  FROM raw r LEFT JOIN tgt g USING (b) CROSS JOIN nr CROSS JOIN nt
-)
-SELECT t.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_terms,
-       CAST(SUM(m.lt) AS BIGINT) AS lt_sum,
-       CAST(SUM(m.lr) AS BIGINT) AS lr_sum,
-       CAST((SUM(m.lt) * 1024) // SUM(m.lr) AS BIGINT) AS imp
-FROM terms t JOIN model m USING (b)
-GROUP BY t.doc_id ORDER BY t.doc_id
-"""
-
-
-CHUNK_LEN = 64
-CHUNK_STRIDE = 48
-
-
-def chunking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping-window document chunker audit — the RAG / context-
-    window packing stage (chunk 64 tokens, stride 48 = overlap 16, the
-    LangChain/LlamaIndex default shape): per document the token count,
-    the chunk count 1 + ceil(max(n-64,0)/48), the length of the final
-    (ragged) chunk, and a position-weighted checksum over each chunk's
-    FIRST token ((h40 % 997) * chunk_no) — pinning every chunk boundary
-    without shipping chunk text anywhere.
-
-    Plan: map-only per-doc Column math + one bounded explode of chunk
-    indices (n/48 per doc); the final agg re-groups by doc_id.  Empty
-    docs (0 tokens) produce no chunks and are absent on both engines."""
-    ws = _clean_words()
-    docs = _docs(spark, sf_dir).select("doc_id", ws.alias("l"))
-    n = F.size("l")
-    nch = F.when(n <= CHUNK_LEN, F.lit(1)).otherwise(
-        F.lit(1) + (n - CHUNK_LEN + CHUNK_STRIDE - 1).cast("long") / F.lit(CHUNK_STRIDE)
-    )
-    base = docs.where(n >= 1).select(
-        "doc_id",
-        "l",
-        n.cast("long").alias("n_tokens"),
-        F.floor(nch).cast("long").alias("n_chunks"),
-    )
-    c = (
-        base.withColumn("c", F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)))
-        .withColumn(
-            "first_tok", F.element_at("l", (F.col("c") * CHUNK_STRIDE + 1).cast("int"))
-        )
-        .withColumn("piece", (h40(F.col("first_tok")) % 997) * (F.col("c") + 1))
-    )
-    return (
-        c.groupBy("doc_id")
-        .agg(
-            F.first("n_tokens").alias("n_tokens"),
-            F.first("n_chunks").alias("n_chunks"),
-            (
-                F.first("n_tokens") - (F.first("n_chunks") - 1) * CHUNK_STRIDE
-            ).alias("last_len"),
-            F.sum("piece").alias("boundary_checksum"),
-        )
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-def chunking_audit_sql() -> str:
-    hk = _SQL_H40.format(s="first_tok")
-    return f"""
-WITH d AS (
-  SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS l FROM documents
-),
-base AS (
-  SELECT doc_id, l, len(l) AS n_tokens,
-         CASE WHEN len(l) <= {CHUNK_LEN} THEN 1
-              ELSE 1 + (len(l) - {CHUNK_LEN} + {CHUNK_STRIDE} - 1) // {CHUNK_STRIDE}
-         END AS n_chunks
-  FROM d WHERE len(l) >= 1
-),
-ch AS (
-  SELECT doc_id, n_tokens, n_chunks, c,
-         l[c * {CHUNK_STRIDE} + 1] AS first_tok
-  FROM base, unnest(range(0, n_chunks)) AS u(c)
-)
-SELECT doc_id,
-       CAST(ANY_VALUE(n_tokens) AS BIGINT) AS n_tokens,
-       CAST(ANY_VALUE(n_chunks) AS BIGINT) AS n_chunks,
-       CAST(ANY_VALUE(n_tokens) - (ANY_VALUE(n_chunks) - 1) * {CHUNK_STRIDE} AS BIGINT) AS last_len,
-       CAST(SUM((({hk}) % 997) * (c + 1)) AS BIGINT) AS boundary_checksum
-FROM ch GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# D6 — winnowing fingerprints (MOSS)
-# ---------------------------------------------------------------------------
-
-WINNOW_W = 4  # winnowing window over the k-gram hash sequence
-
-
-def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
-    "Winnowing: Local Algorithms for Document Fingerprinting",
-    SIGMOD'03 — the MOSS algorithm): slide a W-window over the
-    POSITIONAL word-3-gram h40 sequence, select each window's rightmost
-    minimal hash, and keep the distinct selections.  Guarantees any
-    match of length >= W+k-1 shares a fingerprint, at ~2/(W+1) density.
-
-    Emitted per doc: n_grams, n_fingerprints, density in ppm, the min
-    fingerprint, and a position-weighted checksum pinning the exact
-    selected (position, hash) SET.
-
-    Scale shape: the gram hashes are one map-side array transform (no
-    per-gram rows carry the word array); windows explode bounded W rows
-    per gram; the rightmost-min argmin is ONE partial+final struct-min
-    agg keyed (doc, window) — docs partition freely, no doc ever
-    straddles keys hotter than its own length."""
-    d = _docs(spark, sf_dir)
-    base = (
-        d.select("doc_id", words_col().alias("ws"))
-        .withColumn("m", F.size("ws") - 2)
-        .where(F.col("m") >= WINNOW_W)
-    )
-    hs = F.transform(
-        F.sequence(F.lit(1), F.col("m")),
-        lambda i: h40(
-            F.concat_ws(
-                " ",
-                F.element_at(F.col("ws"), i),
-                F.element_at(F.col("ws"), i + 1),
-                F.element_at(F.col("ws"), i + 2),
-            )
-        ),
-    )
-    g = base.select(
-        "doc_id", "m", F.posexplode(hs).alias("p0", "h")
-    ).select("doc_id", "m", (F.col("p0") + 1).alias("p"), "h")
-    wnd = g.select(
-        "doc_id",
-        "m",
-        "p",
-        "h",
-        F.explode(
-            F.sequence(
-                F.greatest(F.lit(1), F.col("p") - WINNOW_W + 1),
-                F.least(F.col("p"), F.col("m") - WINNOW_W + 1),
-            )
-        ).alias("s"),
-    )
-    sel = (
-        wnd.groupBy("doc_id", "s")
-        .agg(
-            F.min(F.struct(F.col("h"), (-F.col("p")).alias("np"))).alias("mn"),
-            F.min("m").alias("m"),
-        )
-        .select(
-            "doc_id", "m", (-F.col("mn.np")).alias("p"), F.col("mn.h").alias("h")
-        )
-        .distinct()
-    )
-    return (
-        sel.groupBy("doc_id")
-        .agg(
-            F.min("m").alias("n_grams"),
-            F.count(F.lit(1)).alias("n_fingerprints"),
-            F.min("h").alias("min_fp"),
-            F.sum(F.col("h") * F.col("p")).alias("fp_checksum"),
-        )
-        .withColumn(
-            "density_ppm",
-            F.expr("div(n_fingerprints * 1000000, n_grams)"),
-        )
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-def winnowing_fingerprint_sql() -> str:
-    gram = "ws[p] || ' ' || ws[p+1] || ' ' || ws[p+2]"
-    return f"""
-WITH w AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
-b AS (SELECT doc_id, ws, len(ws) - 2 AS m FROM w WHERE len(ws) - 2 >= {WINNOW_W}),
-g AS (
-  SELECT doc_id, m, unnest(range(1, m + 1)) AS p, ws FROM b
-),
-gh AS (SELECT doc_id, m, p, {_SQL_H40.format(s=gram)} AS h FROM g),
-wnd AS (
-  SELECT doc_id, m, p, h,
-         unnest(range(greatest(1, p - {WINNOW_W} + 1),
-                      least(p, m - {WINNOW_W} + 1) + 1)) AS s
-  FROM gh
-),
-sel AS (
-  SELECT DISTINCT doc_id, m, p, h FROM (
-    SELECT doc_id, m, p, h, s,
-           row_number() OVER (PARTITION BY doc_id, s ORDER BY h, p DESC) AS rn
-    FROM wnd
-  ) WHERE rn = 1
-)
-SELECT doc_id,
-       CAST(MIN(m) AS BIGINT) AS n_grams,
-       COUNT(*) AS n_fingerprints,
-       CAST(MIN(h) AS BIGINT) AS min_fp,
-       CAST(SUM(h * p) AS BIGINT) AS fp_checksum,
-       CAST((COUNT(*) * 1000000) // MIN(m) AS BIGINT) AS density_ppm
-FROM sel GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# T5 — boilerplate prefix detection
-# ---------------------------------------------------------------------------
-
-BOILER_WORDS = 8  # leading words that define a template prefix
-
-
-def boilerplate_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boilerplate/template detection (the CCNet/RefinedWeb curation
-    step that strips shared page chrome): docs from the same source
-    whose first BOILER_WORDS words coincide are template candidates.
-    Per source: distinct prefix groups, groups with >= 2 docs, docs in
-    such groups, and a doc_id checksum over them.
-
-    Scale shape: one map-side prefix hash + ONE (source, prefix) agg +
-    ONE source agg — both partial+final; group keys are bounded by
-    distinct prefixes, never by raw rows."""
-    d = _docs(spark, sf_dir)
-    ws = words_col()
-    base = d.select(
-        "doc_id",
-        "source",
-        h40(F.concat_ws(" ", F.slice(ws, 1, BOILER_WORDS))).alias("ph"),
-    ).where(F.size(ws) >= BOILER_WORDS)
-    grp = base.groupBy("source", "ph").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("doc_id").alias("ds"),
-    )
-    boiler = F.col("n") >= 2
-    return (
-        grp.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_prefix_groups"),
-            F.sum(F.when(boiler, 1).otherwise(0)).alias("n_boiler_groups"),
-            F.sum(F.when(boiler, F.col("n")).otherwise(0)).alias("n_boiler_docs"),
-            F.sum(F.when(boiler, F.col("ds")).otherwise(0)).alias("boiler_checksum"),
-        )
-        .repartition(1).sortWithinPartitions("source")
-    )
-
-
-def boilerplate_prefix_sql() -> str:
-    prefix = f"array_to_string(ws[1:{BOILER_WORDS}], ' ')"
-    return f"""
-WITH w AS (SELECT doc_id, source, {_SQL_WS} AS ws FROM documents),
-b AS (
-  SELECT doc_id, source, {_SQL_H40.format(s=prefix)} AS ph
-  FROM w WHERE len(ws) >= {BOILER_WORDS}
-),
-g AS (
-  SELECT source, ph, COUNT(*) AS n, SUM(doc_id) AS ds
-  FROM b GROUP BY source, ph
-)
-SELECT source,
-       COUNT(*) AS n_prefix_groups,
-       CAST(SUM(CASE WHEN n >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler_groups,
-       CAST(SUM(CASE WHEN n >= 2 THEN n ELSE 0 END) AS BIGINT) AS n_boiler_docs,
-       CAST(SUM(CASE WHEN n >= 2 THEN ds ELSE 0 END) AS BIGINT) AS boiler_checksum
-FROM g GROUP BY source ORDER BY source
-"""
-
-
-# ---------------------------------------------------------------------------
-# T6 — Count-Min sketch heavy hitters, exactness-audited
-# ---------------------------------------------------------------------------
-
-CMS_ROWS = 4
-CMS_WIDTH = 256
-CMS_TOPK = 10
-
-
-def cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch heavy hitters with an exact audit (Cormode &
-    Muthukrishnan 2005 — the streaming frequent-items sketch): build a
-    CMS_ROWS x CMS_WIDTH sketch over the corpus word stream with
-    deterministic salted-h40 row hashes, then report the exact top-K
-    words alongside their sketch estimate and overestimate.  The CMS
-    invariant est >= exact is part of the audited surface.
-
-    Scale shape: the sketch is ONE partial+final agg onto a bounded
-    (row, bucket) key domain (CMS_ROWS*CMS_WIDTH cells — broadcastable);
-    the exact top-K is one word agg + TakeOrdered; estimates come from
-    a broadcast join of K*CMS_ROWS probe rows against the cell table.
-    The sketch side never grows with vocabulary — that is its point."""
-    d = _docs(spark, sf_dir)
-    wd = d.select(F.explode(words_col()).alias("wd")).where(F.length("wd") > 0)
-    wd = wd.localCheckpoint(eager=False)  # sketch + exact share one scan
-    cells = (
-        wd.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        (h40(F.concat(F.lit(f"cms{r}:"), F.col("wd"))) % CMS_WIDTH).alias("b"),
-                    )
-                    for r in range(CMS_ROWS)
-                ])
-            ).alias("rb")
-        )
-        .groupBy(F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    exact = (
-        wd.groupBy("wd")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("wd"))
-        .limit(CMS_TOPK)
-    )
-    probes = exact.select(
-        "wd",
-        "n",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(r).alias("r"),
-                    (h40(F.concat(F.lit(f"cms{r}:"), F.col("wd"))) % CMS_WIDTH).alias("b"),
-                )
-                for r in range(CMS_ROWS)
-            ])
-        ).alias("rb"),
-    ).select("wd", "n", F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
-    est = (
-        probes.join(F.broadcast(cells), ["r", "b"])
-        .groupBy("wd", "n")
-        .agg(F.min("c").alias("cms_est"))
-    )
-    return (
-        est.select(
-            "wd",
-            F.col("n").alias("exact_n"),
-            "cms_est",
-            (F.col("cms_est") - F.col("n")).alias("overestimate"),
-        )
-        .repartition(1).sortWithinPartitions(F.desc("exact_n"), F.asc("wd"))
-    )
-
-
-def cm_heavy_hitters_sql() -> str:
-    return f"""
-WITH w AS (SELECT {_SQL_WS} AS ws FROM documents),
-wd AS (SELECT unnest(ws) AS wd FROM w),
-wdn AS (SELECT wd FROM wd WHERE length(wd) > 0),
-cells AS (
-  SELECT r, b, COUNT(*) AS c FROM (
-    SELECT u.r AS r,
-           {_SQL_H40.format(s="('cms' || u.r || ':') || wd")} % {CMS_WIDTH} AS b
-    FROM wdn, (SELECT unnest(range(0, {CMS_ROWS})) AS r) u
-  ) GROUP BY r, b
-),
-exact AS (
-  SELECT wd, COUNT(*) AS n FROM wdn GROUP BY wd
-  ORDER BY n DESC, wd LIMIT {CMS_TOPK}
-),
-probes AS (
-  SELECT wd, n, u.r AS r,
-         {_SQL_H40.format(s="('cms' || u.r || ':') || wd")} % {CMS_WIDTH} AS b
-  FROM exact, (SELECT unnest(range(0, {CMS_ROWS})) AS r) u
-)
-SELECT p.wd, CAST(p.n AS BIGINT) AS exact_n,
-       CAST(MIN(c.c) AS BIGINT) AS cms_est,
-       CAST(MIN(c.c) - p.n AS BIGINT) AS overestimate
-FROM probes p JOIN cells c ON p.r = c.r AND p.b = c.b
-GROUP BY p.wd, p.n ORDER BY exact_n DESC, p.wd
-"""
-
-# ---------------------------------------------------------------------------
-# T7 — content-defined chunking
-# ---------------------------------------------------------------------------
-
-CDC_GRAM = 4  # boundary decided by the 4-gram starting at each position
-CDC_MASK = 16  # boundary iff h40(gram) % CDC_MASK == 0 (expected len ~16)
-
-
-def cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking (the FastCDC/Rabin boundary rule of
-    dedup storage and shift-robust passage dedup): a chunk boundary
-    opens AFTER position i whenever the CDC_GRAM-gram starting at i
-    hashes to 0 mod CDC_MASK — an insertion shifts every fixed-window
-    chunk (cf. chunking_audit) but only the local CDC boundaries.
-
-    Emitted per doc: n_chunks (= boundaries + 1), first-chunk length,
-    max chunk length, boundary position checksum Σ i.
-
-    Scale shape: map-only higher-order-function pipeline (transform →
-    filter over the in-doc position sequence, then zip_with for chunk
-    lengths) — per-doc arrays, zero UDF, zero shuffle beyond the final
-    contract sort."""
-    d = _docs(spark, sf_dir)
-    txt = norm_text()
-    base = d.select("doc_id", txt.alias("t")).where(
-        F.length("t") >= CDC_GRAM
-    )
-    bpos = F.filter(
-        F.sequence(F.lit(1), F.length("t") - CDC_GRAM + 1),
-        lambda i: h40(F.substring(F.col("t"), i, F.lit(CDC_GRAM))) % CDC_MASK == 0,
-    )
-    withb = base.select("doc_id", F.length("t").alias("len"), bpos.alias("bp"))
-    # chunk ends: boundaries then doc end; chunk starts: 1 then boundary+1
-    ends = F.concat(F.col("bp"), F.array(F.col("len")))
-    starts = F.concat(F.array(F.lit(0)), F.col("bp"))
-    lens = F.zip_with(ends, starts, lambda e, s: e - s)
-    return (
-        withb.select(
-            "doc_id",
-            (F.size("bp") + 1).cast("long").alias("n_chunks"),
-            F.element_at(lens, 1).cast("long").alias("first_chunk"),
-            F.array_max(lens).cast("long").alias("max_chunk"),
-            F.coalesce(
-                F.aggregate("bp", F.lit(0).cast("long"), lambda a, x: a + x),
-                F.lit(0).cast("long"),
-            ).alias("boundary_checksum"),
-        )
-        .repartition(1).sortWithinPartitions("doc_id")
-    )
-
-
-def cdc_chunking_sql() -> str:
-    gram = f"substr(t, CAST(i AS INTEGER), {CDC_GRAM})"
-    return f"""
-WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents
-           WHERE length(lower(trim(text))) >= {CDC_GRAM}),
-b AS (
-  SELECT doc_id, length(t) AS len,
-         list_filter(range(1, length(t) - {CDC_GRAM} + 2),
-                     i -> {_SQL_H40.format(s=gram)} % {CDC_MASK} = 0) AS bp
-  FROM d
-),
-c AS (
-  SELECT doc_id, len, bp,
-         list_concat(bp, [len]) AS ends,
-         list_concat([0], bp) AS starts
-  FROM b
-)
-SELECT doc_id,
-       CAST(len(bp) + 1 AS BIGINT) AS n_chunks,
-       CAST(ends[1] - starts[1] AS BIGINT) AS first_chunk,
-       CAST(list_max(list_transform(range(1, len(ends) + 1),
-                                    k -> ends[k] - starts[k])) AS BIGINT) AS max_chunk,
-       CAST(COALESCE(list_sum(bp), 0) AS BIGINT) AS boundary_checksum
-FROM c ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# T8 — SymSpell deletion-indexed edit-distance join
-# ---------------------------------------------------------------------------
-
-ED_MIN_LEN = 4  # only words this long enter the join
-ED_TYPO_MOD = 7  # docs with doc_id % MOD == 0 contribute one injected typo
-
-
-def edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance-1 word join via the SymSpell deletion index
-    (Garbe's SymSpell / FastSS, Bocek et al. 2007 — the spelling-
-    variant blocking scheme of query correction and OCR cleanup): each
-    vocab word emits itself plus every 1-deletion variant; two words
-    within Levenshtein distance 1 ALWAYS share a variant, so the
-    equi-join on the variant key finds all candidates, and an exact
-    levenshtein() refine removes the false positives (sharing a
-    deletion does NOT imply ed<=1 — e.g. a transposition).
-
-    The synthetic corpus has no natural typos (24-word vocabulary), so
-    docs with doc_id % ED_TYPO_MOD == 0 inject one deterministic typo
-    of their first long word — an 'x' appended (insertion class) or the
-    first letter swapped to 'z' (substitution class) by doc_id parity;
-    the oracle mirrors the same expressions (pii_scan precedent).
-
-    Output: the exact (w1 < w2) pair list with distance and the
-    per-word corpus frequencies.
-
-    Scale shape: the explode is x(len+1) on the DISTINCT VOCABULARY
-    (not the corpus stream) — the whole point of SymSpell at 10^9-word
-    vocab scale; the join shuffles on the variant key (bounded groups:
-    a variant collides only with ed-neighbors), and the refine is
-    codegen'd levenshtein.  Zero UDFs."""
-    d = _docs(spark, sf_dir)
-    base = (
-        d.select(F.explode(words_col()).alias("wd"))
-        .where(F.length("wd") >= ED_MIN_LEN)
-        .groupBy("wd")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    first_long = F.element_at(
-        F.filter(words_col(), lambda x: F.length(x) >= ED_MIN_LEN), 1
-    )
-    typo_word = F.when(
-        F.col("doc_id") % 2 == 0, F.concat(first_long, F.lit("x"))
-    ).otherwise(F.concat(F.lit("z"), F.substring(first_long, 2, 1000)))
-    typos = (
-        d.where((F.col("doc_id") % ED_TYPO_MOD == 0) & first_long.isNotNull())
-        .select(typo_word.alias("wd"))
-        .groupBy("wd")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    # injected typos that collide with a real word count as that word
-    vocab = (
-        base.unionByName(typos)
-        .groupBy("wd")
-        .agg(F.sum("n").alias("n"))
-    )
-    # deletion index: position 0 = the word itself, i >= 1 deletes char i
-    variants = vocab.select(
-        "wd",
-        "n",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.length("wd")),
-                lambda i: F.when(i == 0, F.col("wd")).otherwise(
-                    F.concat(
-                        F.substring(F.col("wd"), F.lit(1), i - 1),
-                        F.col("wd").substr(i + 1, F.length("wd")),
-                    )
-                ),
-            )
-        ).alias("var"),
-    ).distinct()
-    a = variants.select(
-        F.col("wd").alias("w1"), F.col("n").alias("n1"), "var"
-    )
-    b = variants.select(
-        F.col("wd").alias("w2"), F.col("n").alias("n2"), "var"
-    )
-    cand = (
-        a.join(b, "var")
-        .where(F.col("w1") < F.col("w2"))
-        .select("w1", "n1", "w2", "n2")
-        .distinct()
-    )
-    return (
-        cand.where(F.levenshtein("w1", "w2") <= 1)
-        .select("w1", "w2", "n1", "n2", F.levenshtein("w1", "w2").cast("long").alias("dist"))
-        .repartition(1).sortWithinPartitions("w1", "w2")
-    )
-
-
-def edit_distance_join_sql() -> str:
-    return f"""
-WITH docs AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
-base AS (
-  SELECT wd, COUNT(*) AS n FROM (SELECT unnest(ws) AS wd FROM docs)
-  WHERE length(wd) >= {ED_MIN_LEN} GROUP BY wd
-),
-fl AS (
-  SELECT doc_id, list_filter(ws, x -> length(x) >= {ED_MIN_LEN})[1] AS w
-  FROM docs WHERE doc_id % {ED_TYPO_MOD} = 0
-),
-typos AS (
-  SELECT CASE WHEN doc_id % 2 = 0 THEN w || 'x'
-              ELSE 'z' || substring(w, 2) END AS wd,
-         COUNT(*) AS n
-  FROM fl WHERE w IS NOT NULL GROUP BY 1
-),
-vocab AS (
-  SELECT wd, SUM(n) AS n FROM (
-    SELECT * FROM base UNION ALL SELECT * FROM typos
-  ) GROUP BY wd
-),
-variants AS (
-  SELECT DISTINCT wd, n,
-         unnest(list_transform(range(0, length(wd) + 1),
-                i -> CASE WHEN i = 0 THEN wd
-                          ELSE substring(wd, 1, i - 1) || substring(wd, i + 1) END))
-           AS var
-  FROM vocab
-),
-cand AS (
-  SELECT DISTINCT a.wd AS w1, a.n AS n1, b.wd AS w2, b.n AS n2
-  FROM variants a JOIN variants b ON a.var = b.var AND a.wd < b.wd
-)
-SELECT w1, w2, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-       CAST(levenshtein(w1, w2) AS BIGINT) AS dist
-FROM cand WHERE levenshtein(w1, w2) <= 1
-ORDER BY w1, w2
-"""
-
-
-# ---------------------------------------------------------------------------
-# T9 — Heaps'-law vocabulary growth audit
-# ---------------------------------------------------------------------------
-
-VG_BUCKET = 25  # docs per growth bucket (500-doc corpus -> 20 curve points)
-
-
-def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary-growth audit (Heaps 1978; the V(n) ~ K·n^β
-    curve every tokenizer-budget and dedup-saturation analysis plots):
-    docs are bucketed in corpus order (doc_id // VG_BUCKET), the type
-    inventory is word BIGRAMS (the unigram vocabulary here is a
-    24-word synthetic closed set — bigrams give the curve room), and
-    each bucket reports its token throughput plus how many types appear
-    there FIRST, with running cumulative totals.
-
-    Scale shape: the first-occurrence bucket per type is ONE
-    combiner-friendly min-agg over the exploded bigram stream (types
-    never re-shuffle per bucket); per-bucket rollups are dims-sized
-    (corpus/VG_BUCKET rows), so the running-sum window runs on
-    planner-metadata scale — same single-partition-window policy as the
-    skew census."""
-    d = _docs(spark, sf_dir)
-    ws = words_col()
-    bg = F.filter(
-        F.zip_with(
-            ws,
-            F.slice(ws, 2, F.greatest(F.size(ws) - 1, F.lit(0))),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-        lambda s: ~s.endswith(" "),
-    )
-    toks = d.select(
-        (F.col("doc_id") / VG_BUCKET).cast("long").alias("bucket"),
-        F.explode(bg).alias("tp"),
-    )
-    toks = toks.localCheckpoint(eager=False)  # token counts + firsts share one explode
-    per_bucket = toks.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_tokens"))
-    firsts = (
-        toks.groupBy("tp")
-        .agg(F.min("bucket").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_new_types"))
-    )
-    joined = per_bucket.join(firsts, "bucket", "left").select(
-        "bucket",
-        "n_tokens",
-        F.coalesce(F.col("n_new_types"), F.lit(0)).alias("n_new_types"),
-    )
-    w = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, 0)
-    return (
-        joined.repartition(1)
-        .select(
-            "bucket",
-            "n_tokens",
-            "n_new_types",
-            F.sum("n_tokens").over(w).alias("cum_tokens"),
-            F.sum("n_new_types").over(w).alias("cum_types"),
-        )
-        .sortWithinPartitions("bucket")
-    )
-
-
-def vocab_growth_sql() -> str:
-    return f"""
-WITH docs AS (SELECT doc_id, {_SQL_WS} AS ws FROM documents),
-toks AS (
-  SELECT doc_id // {VG_BUCKET} AS bucket,
-         unnest(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])) AS tp
-  FROM docs
-),
-pb AS (SELECT bucket, COUNT(*) AS n_tokens FROM toks GROUP BY bucket),
-fs AS (
-  SELECT bucket, COUNT(*) AS n_new_types
-  FROM (SELECT tp, MIN(bucket) AS bucket FROM toks GROUP BY tp)
-  GROUP BY bucket
-)
-SELECT pb.bucket,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(COALESCE(n_new_types, 0) AS BIGINT) AS n_new_types,
-       CAST(SUM(n_tokens) OVER (ORDER BY pb.bucket) AS BIGINT) AS cum_tokens,
-       CAST(SUM(COALESCE(n_new_types, 0)) OVER (ORDER BY pb.bucket) AS BIGINT)
-         AS cum_types
-FROM pb LEFT JOIN fs ON pb.bucket = fs.bucket
-ORDER BY pb.bucket
-"""
-
-
-# ---------------------------------------------------------------------------
-# T10 — BPE merge application (round 1 of tokenizer training)
-# ---------------------------------------------------------------------------
-
-
-def bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One full BPE training step (Sennrich et al. 2016): take round
-    0's winning pair (count DESC, pair ASC — bpe_pair_census's rule),
-    MERGE it everywhere (left-to-right non-overlapping, the BPE
-    convention: both Java regex and RE2 with 'g' replace exactly so),
-    and report the corpus compression it bought: words touched, symbol
-    counts before/after, and the h40 checksum of the rewritten word
-    stream pinning the exact merge output.
-
-    Scale shape: the winner is ONE combiner-friendly agg + limit 1,
-    broadcast back onto the word stream (a 1-row cross join, not a
-    collect); the merge itself is map-side codegen'd regexp_replace.
-    This is the loop body a full tokenizer trainer iterates — each
-    round is one census + one broadcast rewrite."""
-    w = (
-        _docs(spark, sf_dir)
-        .select(F.explode(words_col()).alias("wrd"))
-        .where(F.length("wrd") >= 2)
-    )
-    w = w.localCheckpoint(eager=False)  # census + rewrite share one explode
-    winner = (
-        w.select(
-            F.explode(
-                F.expr("transform(sequence(1, length(wrd) - 1),"
-                       " i -> substring(wrd, i, 2))")
-            ).alias("pair")
-        )
-        .groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("pair").asc())
-        .limit(1)
-        .select("pair")
-    )
-    merged = w.crossJoin(F.broadcast(winner)).select(
-        "pair",
-        "wrd",
-        F.expr("regexp_replace(wrd, pair, '#')").alias("mrg"),
-    )
-    return merged.groupBy("pair").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum((F.col("mrg") != F.col("wrd")).cast("long")).alias("n_words_changed"),
-        F.sum(F.length("wrd")).alias("symbols_before"),
-        F.sum(F.length("mrg")).alias("symbols_after"),
-        F.sum(h40(F.col("mrg"))).alias("merged_checksum"),
-    )
-
-
-def bpe_merge_apply_sql() -> str:
-    return f"""
-WITH w AS (
-  SELECT unnest({_SQL_WS}) AS wrd FROM documents
-),
-w2 AS (SELECT wrd FROM w WHERE length(wrd) >= 2),
-winner AS (
-  SELECT pair FROM (
-    SELECT unnest(list_transform(range(1, len(wrd)), i -> substr(wrd, i, 2))) AS pair
-    FROM w2
-  ) GROUP BY pair ORDER BY COUNT(*) DESC, pair ASC LIMIT 1
-),
-m AS (
-  SELECT pair, wrd, regexp_replace(wrd, pair, '#', 'g') AS mrg
-  FROM w2, winner
-)
-SELECT pair,
-       COUNT(*) AS n_words,
-       CAST(SUM(CASE WHEN mrg <> wrd THEN 1 ELSE 0 END) AS BIGINT) AS n_words_changed,
-       CAST(SUM(length(wrd)) AS BIGINT) AS symbols_before,
-       CAST(SUM(length(mrg)) AS BIGINT) AS symbols_after,
-       CAST(SUM({_SQL_H40.format(s='mrg')}) AS BIGINT) AS merged_checksum
-FROM m GROUP BY pair
-"""
-
-
-# ---------------------------------------------------------------------------
-# T11 — Simpson diversity index per source
-# ---------------------------------------------------------------------------
-
-
-def simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source Simpson diversity of the word distribution (1 − Σp²;
-    the entropy-free diversity index — unlike Shannon it is an EXACT
-    RATIONAL, so the cross-engine surface needs no logarithm): reported
-    as ppm via (N² − Σc²)·10⁶ // N², plus the raw moments.
-
-    A skewed source (one word dominating) scores near 0; a uniform one
-    approaches 1 − 1/V.  This is the cheap corpus-mix diagnostic next
-    to the χ²/perplexity filters.
-
-    Scale shape: ONE (source, word) partial+final count agg, then a
-    source-keyed rollup of Σc and Σc² — both combiner-friendly; no
-    joins, no windows."""
-    d = _docs(spark, sf_dir)
-    wc = (
-        d.select("source", F.explode(words_col()).alias("wd"))
-        .where(F.length("wd") > 0)
-        .groupBy("source", "wd")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        wc.groupBy("source")
-        .agg(
-            F.sum("c").alias("n_tokens"),
-            F.count(F.lit(1)).alias("n_types"),
-            F.sum(F.col("c") * F.col("c")).alias("sum_c2"),
-        )
-        .select(
-            "source",
-            "n_tokens",
-            "n_types",
-            "sum_c2",
-            F.expr(
-                "div(1000000 * (n_tokens * n_tokens - sum_c2),"
-                " n_tokens * n_tokens)"
-            ).alias("simpson_ppm"),
-        )
-        .repartition(1).sortWithinPartitions("source")
-    )
-
-
-def simpson_diversity_sql() -> str:
-    return f"""
-WITH wc AS (
-  SELECT source, wd, COUNT(*) AS c FROM (
-    SELECT source, unnest({_SQL_WS}) AS wd FROM documents
-  ) WHERE length(wd) > 0 GROUP BY source, wd
-)
-SELECT source,
-       CAST(SUM(c) AS BIGINT) AS n_tokens,
-       COUNT(*) AS n_types,
-       CAST(SUM(c * c) AS BIGINT) AS sum_c2,
-       CAST((1000000 * (SUM(c) * SUM(c) - SUM(c * c)))
-            // (SUM(c) * SUM(c)) AS BIGINT) AS simpson_ppm
-FROM wc GROUP BY source ORDER BY source
-"""
-
-
-# ---------------------------------------------------------------------------
-# T12 — TF-IDF document-pair cosine similarity (inverted-index join)
-# ---------------------------------------------------------------------------
-
-TDS_DOC_MOD = 20   # audited docs: doc_id % 20 == 0 (pairs stay plottable)
-TDS_IDF_SHIFT = 6  # idf surrogate scale (keeps the dot product < 2^53)
-
-
-def tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF document-pair cosine similarity through the classic
-    inverted-index join (the pairwise scoring behind near-dup triage
-    and related-document panels): integer weights w = tf·idf' with the
-    BM25-family rational idf surrogate ((N−df)<<6) // (df+1), pair dot
-    products accumulated over the shared-term join, norms per doc, and
-    the cosine in milli from the exact integer moments (one double
-    sqrt+divide on identical exact inputs — deterministic cross-engine).
-
-    Scale shape: weights = ONE (doc, term) agg + a broadcast df table;
-    the pair join is the inverted index (term-keyed — candidates are
-    bounded by per-term posting lists, the production cap point); norms
-    join back on doc keys.  Output: every audited pair with its exact
-    moments, so the hash pins the integer surface."""
-    d = _docs(spark, sf_dir)
-    toks = d.select("doc_id", F.explode(words_col()).alias("t")).where(
-        F.length("t") > 0
-    )
-    tf = toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.localCheckpoint(eager=False)  # df + weights share one agg
-    dfq = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
-    nrow = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    w = (
-        tf.join(F.broadcast(dfq), "t")
-        .crossJoin(F.broadcast(nrow))
-        .select(
-            "doc_id",
-            "t",
-            F.expr(f"tf * (((n_docs - df) * {1 << TDS_IDF_SHIFT}) DIV (df + 1))").alias("w"),
-        )
-    )
-    wa = w.where(F.col("doc_id") % TDS_DOC_MOD == 0)
-    norms = wa.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("norm2"))
-    a = wa.select(F.col("doc_id").alias("d1"), "t", F.col("w").alias("w1"))
-    b = wa.select(F.col("doc_id").alias("d2"), "t", F.col("w").alias("w2"))
-    dots = (
-        a.join(b, "t")
-        .where(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.sum(F.col("w1") * F.col("w2")).alias("dot"))
-    )
-    na = norms.select(F.col("doc_id").alias("d1"), F.col("norm2").alias("n1"))
-    nb = norms.select(F.col("doc_id").alias("d2"), F.col("norm2").alias("n2"))
-    return (
-        dots.join(na, "d1").join(nb, "d2")
-        .select(
-            "d1",
-            "d2",
-            "dot",
-            "n1",
-            "n2",
-            F.floor(
-                F.lit(1000.0) * F.col("dot")
-                / F.sqrt(F.col("n1").cast("double") * F.col("n2").cast("double"))
-            ).cast("long").alias("cos_milli"),
-        )
-        .repartition(1).sortWithinPartitions("d1", "d2")
-    )
-
-
-def tfidf_doc_similarity_sql() -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_SQL_WS}) AS t FROM documents
-),
-tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM toks WHERE length(t) > 0
-       GROUP BY doc_id, t),
-dfq AS (SELECT t, COUNT(*) AS df FROM tf GROUP BY t),
-nn AS (SELECT COUNT(*) AS n_docs FROM documents),
-w AS (
-  SELECT doc_id, tf.t,
-         tf * (((n_docs - df) * {1 << TDS_IDF_SHIFT}) // (df + 1)) AS w
-  FROM tf JOIN dfq ON tf.t = dfq.t, nn
-  WHERE doc_id % {TDS_DOC_MOD} = 0
-),
-norms AS (SELECT doc_id, SUM(w * w) AS norm2 FROM w GROUP BY doc_id),
-dots AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, SUM(a.w * b.w) AS dot
-  FROM w a JOIN w b ON a.t = b.t AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT d1, d2,
-       CAST(dot AS BIGINT) AS dot,
-       CAST(na.norm2 AS BIGINT) AS n1,
-       CAST(nb.norm2 AS BIGINT) AS n2,
-       CAST(floor(1000.0 * dot / sqrt(CAST(na.norm2 AS DOUBLE) * CAST(nb.norm2 AS DOUBLE))) AS BIGINT)
-         AS cos_milli
-FROM dots
-JOIN norms na ON na.doc_id = d1
-JOIN norms nb ON nb.doc_id = d2
-ORDER BY d1, d2
-"""
-
-
-# ---------------------------------------------------------------------------
-# T13 — prefix autocomplete census
-# ---------------------------------------------------------------------------
-
-AC_MAX_PREFIX = 3
-
-
-def prefix_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-autocomplete table (the search-suggest/trie top-1
-    completion per prefix, lengths 1..AC_MAX_PREFIX): for each observed
-    prefix, the most frequent completing word (count DESC, word ASC —
-    deterministic), its corpus count, and how many distinct words share
-    the prefix.
-
-    Scale shape: ONE word-count agg; the prefix explode is bounded by
-    AC_MAX_PREFIX; the per-prefix argmax runs on the DISTINCT-PREFIX
-    relation (alphabet-bounded — planner-metadata scale, the oov_rate
-    window policy)."""
-    d = _docs(spark, sf_dir)
-    wc = (
-        d.select(F.explode(words_col()).alias("wd"))
-        .where(F.length("wd") > 0)
-        .groupBy("wd")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    pref = wc.select(
-        "wd",
-        "n",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, least(length(wd), {AC_MAX_PREFIX})),"
-                " i -> substring(wd, 1, i))"
-            )
-        ).alias("prefix"),
-    )
-    w = W.partitionBy("prefix").orderBy(F.desc("n"), F.asc("wd"))
-    return (
-        pref.repartition(1)
-        .select(
-            "prefix",
-            "wd",
-            "n",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(W.partitionBy("prefix")).alias("n_words"),
-        )
-        .where(F.col("rn") == 1)
-        .select(
-            F.length("prefix").cast("long").alias("prefix_len"),
-            "prefix",
-            F.col("wd").alias("top_word"),
-            F.col("n").alias("top_count"),
-            F.col("n_words").cast("long").alias("n_words"),
-        )
-        .sortWithinPartitions("prefix")
-    )
-
-
-def prefix_autocomplete_sql() -> str:
-    return f"""
-WITH wc AS (
-  SELECT wd, COUNT(*) AS n FROM (
-    SELECT unnest({_SQL_WS}) AS wd FROM documents
-  ) WHERE length(wd) > 0 GROUP BY wd
-),
-pref AS (
-  SELECT wd, n,
-         unnest(list_transform(range(1, least(length(wd), {AC_MAX_PREFIX}) + 1),
-                i -> substr(wd, 1, i))) AS prefix
-  FROM wc
-)
-SELECT CAST(length(prefix) AS BIGINT) AS prefix_len,
-       prefix,
-       wd AS top_word,
-       CAST(n AS BIGINT) AS top_count,
-       CAST(n_words AS BIGINT) AS n_words
-FROM (
-  SELECT prefix, wd, n,
-         row_number() OVER (PARTITION BY prefix ORDER BY n DESC, wd ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY prefix) AS n_words
-  FROM pref
-) WHERE rn = 1 ORDER BY prefix
-"""
-
-
-# ---------------------------------------------------------------------------
-# T14 — pseudo-relevance-feedback query expansion (two-round BM25)
-# ---------------------------------------------------------------------------
-
-PRF_FEEDBACK_DOCS = 3
-PRF_EXPANSION_TERMS = 2
-PRF_TOPK = 5
-
-
-def _bm25_score_round(tf, dl, qterms, nrow, tlrow):
-    """One BM25 scoring round (the exact-integer surrogate of
-    bm25_topk) against a broadcast query-term frame."""
-    return (
-        tf.join(F.broadcast(qterms), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(nrow))
-        .crossJoin(F.broadcast(tlrow))
-        .withColumn("idf", F.expr("((n_docs - df) * 1024) DIV (df + 1)"))
-        .withColumn(
-            "s_term",
-            F.expr("(idf * (44 * tl * tf))"
-                   " DIV (20 * tl * tf + 6 * tl + 18 * dl * n_docs)"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("s_term").alias("score"), F.count(F.lit(1)).alias("n_terms"))
-    )
-
-
-def prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pseudo-relevance-feedback query expansion (Rocchio/RM1 — the
-    classic two-round IR pipeline: retrieve, mine the top documents for
-    new terms, retrieve again): round 1 scores the fixed 3-term query
-    (bm25_topk's integer-exact surrogate), the PRF_FEEDBACK_DOCS best
-    documents donate PRF_EXPANSION_TERMS new terms (Σtf DESC, term ASC,
-    original terms excluded), and round 2 ranks with the expanded
-    query.  Output: the round-2 top-K with scores.
-
-    Scale shape: tf/dl/df build ONCE (localCheckpoint'd — both rounds
-    and the mining step share them); each round is the bm25 contract
-    (broadcast query frame + partial+final agg + TakeOrdered); the
-    feedback-doc term mining is one semi-join + tiny agg."""
-    d = _docs(spark, sf_dir)
-    toks = (
-        d.select("doc_id", F.explode(words_col()).alias("term"))
-        .where(F.col("term") != "")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.localCheckpoint(eager=False)
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).localCheckpoint(
-        eager=False
-    )
-    dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).localCheckpoint(
-        eager=False
-    )
-    wq = W.orderBy(F.col("df").desc(), F.asc("term"))
-    q1 = (
-        dfq.withColumn("qrnk", F.row_number().over(wq))
-        .where(F.col("qrnk").isin(*BM25_QRANKS))
-        .select("term", "df")
-    )
-    nrow = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    tlrow = toks.agg(F.count(F.lit(1)).alias("tl"))
-    r1 = _bm25_score_round(tf, dl, q1, nrow, tlrow)
-    fb = (
-        r1.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(PRF_FEEDBACK_DOCS)
-        .select("doc_id")
-    )
-    mined = (
-        tf.join(F.broadcast(fb), "doc_id", "left_semi")
-        .join(F.broadcast(q1.select("term")), "term", "left_anti")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("fb_tf"))
-        .orderBy(F.desc("fb_tf"), F.asc("term"))
-        .limit(PRF_EXPANSION_TERMS)
-        .select("term")
-    )
-    q2 = (
-        q1.select("term")
-        .unionByName(mined)
-        .join(dfq, "term")
-        .select("term", "df")
-    )
-    r2 = _bm25_score_round(tf, dl, q2, nrow, tlrow)
-    wr = W.orderBy(F.col("score").desc(), F.asc("doc_id"))
-    return (
-        r2.repartition(1)
-        .withColumn("rnk", F.row_number().over(wr))
-        .where(F.col("rnk") <= PRF_TOPK)
-        .select("rnk", "doc_id", "score", "n_terms")
-        .sortWithinPartitions("rnk")
-    )
-
-
-def prf_expansion_sql() -> str:
-    ranks = ", ".join(str(r) for r in BM25_QRANKS)
-    score_round = """
-  SELECT tf.doc_id,
-         CAST(((n_docs - df) * 1024) // (df + 1) AS HUGEINT)
-           * CAST(44 * tl * tf AS HUGEINT)
-           // CAST(20 * tl * tf + 6 * tl + 18 * dl.dl * n_docs AS HUGEINT)
-           AS s_term
-  FROM tf JOIN {q} USING (term) JOIN dl USING (doc_id), consts
-"""
-    return f"""
-WITH w AS (SELECT doc_id, unnest({_SQL_WS}) AS term FROM documents),
-t AS (SELECT doc_id, term FROM w WHERE term <> ''),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY doc_id, term),
-dl AS (SELECT doc_id, COUNT(*) AS dl FROM t GROUP BY doc_id),
-dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-q1 AS (
-  SELECT term, df FROM (
-    SELECT term, df, ROW_NUMBER() OVER (ORDER BY df DESC, term) AS qrnk
-    FROM dfq) WHERE qrnk IN ({ranks})
-),
-consts AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-         (SELECT COUNT(*) FROM t) AS tl
-),
-r1 AS (
-  SELECT doc_id, CAST(SUM(s_term) AS BIGINT) AS score FROM (
-{score_round.format(q='q1')}
-  ) GROUP BY doc_id
-),
-fb AS (SELECT doc_id FROM r1 ORDER BY score DESC, doc_id LIMIT {PRF_FEEDBACK_DOCS}),
-mined AS (
-  SELECT term FROM (
-    SELECT tf.term, SUM(tf.tf) AS fb_tf
-    FROM tf JOIN fb USING (doc_id)
-    WHERE tf.term NOT IN (SELECT term FROM q1)
-    GROUP BY tf.term
-  ) ORDER BY fb_tf DESC, term LIMIT {PRF_EXPANSION_TERMS}
-),
-q2 AS (
-  SELECT dfq.term, dfq.df FROM dfq
-  WHERE dfq.term IN (SELECT term FROM q1 UNION ALL SELECT term FROM mined)
-),
-r2 AS (
-  SELECT doc_id, CAST(SUM(s_term) AS BIGINT) AS score, COUNT(*) AS n_terms FROM (
-{score_round.format(q='q2')}
-  ) GROUP BY doc_id
-)
-SELECT * FROM (
-  SELECT ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rnk,
-         doc_id, score, n_terms
-  FROM r2) WHERE rnk <= {PRF_TOPK} ORDER BY rnk
-"""
-
-
-# ---------------------------------------------------------------------------
-# Hybrid retrieval: reciprocal-rank fusion of BM25 + dense cosine
-# ---------------------------------------------------------------------------
-
-RRF_K = 60        # the standard RRF damping constant (Cormack et al. 2009)
-RRF_TOPK = 20
-RRF_QVEC = 0      # dense query = embedding of vec_id 0
-RRF_SCALE = 1_000_000  # contribution = RRF_SCALE // (RRF_K + rank), exact int
-
-
-def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid-retrieval reciprocal-rank fusion (Cormack, Clarke &
-    Büttcher 2009) — the standard way production search fuses a sparse
-    (BM25) and a dense (embedding-cosine) ranker without score
-    calibration: fused(d) = Σ_r 1/(k + rank_r(d)).  Kept integer-exact:
-    contributions are RRF_SCALE // (k + rank); the dense score is the
-    integer dot product of ppm-floor-quantized embeddings (monotone in
-    the float cosine for fixed-norm rankings and bit-reproducible —
-    floor(v·10⁶) is exact on both engines, unlike round with its
-    half-even vs half-away split).
-
-    The doc corpus and the embedding table share the id space
-    (doc_id == vec_id, TESTDATA.md), which is exactly the
-    text-plus-embedding layout of a multimodal training corpus.
-
-    Plan: the BM25 leg is the shared _bm25_scored agg; the dense leg is
-    one map-only quantized dot against a 1-row broadcast query vector;
-    each leg ranks independently (at 10^12 rows: per-ranker top-k
-    TakeOrdered, never a global sort — ranks beyond top-k cannot enter
-    the fused top-k because contributions are monotone-decreasing), and
-    the fusion is a tiny full-outer join on doc_id."""
-    d = _docs(spark, sf_dir)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    qv = emb.where(F.col("vec_id") == RRF_QVEC).select(
-        F.col("embedding").alias("q_emb")
-    )
-    dense = emb.crossJoin(F.broadcast(qv)).select(
-        F.col("vec_id").alias("doc_id"),
-        F.expr(
-            "aggregate(zip_with(embedding, q_emb,"
-            " (a, b) -> floor(CAST(a AS DOUBLE) * 1000000)"
-            "         * floor(CAST(b AS DOUBLE) * 1000000)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("dscore"),
-    )
-    wd = W.orderBy(F.col("dscore").desc(), F.col("doc_id").asc())
-    dense_rnk = dense.withColumn("dense_rnk", F.row_number().over(wd)).select(
-        "doc_id", "dense_rnk"
-    )
-    ws = W.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    sparse_rnk = (
-        _bm25_scored(d)
-        .withColumn("sparse_rnk", F.row_number().over(ws))
-        .select("doc_id", "sparse_rnk")
-    )
-    fused = (
-        sparse_rnk.join(dense_rnk, "doc_id", "full_outer")
-        .withColumn(
-            "rrf_score",
-            F.coalesce(
-                F.expr(f"{RRF_SCALE} DIV ({RRF_K} + sparse_rnk)"), F.lit(0)
-            )
-            + F.coalesce(
-                F.expr(f"{RRF_SCALE} DIV ({RRF_K} + dense_rnk)"), F.lit(0)
-            ),
-        )
-        .withColumn("sparse_rnk", F.coalesce("sparse_rnk", F.lit(-1)))
-        .withColumn("dense_rnk", F.coalesce("dense_rnk", F.lit(-1)))
-    )
-    top = fused.orderBy(
-        F.col("rrf_score").desc(), F.col("doc_id").asc()
-    ).limit(RRF_TOPK)
-    wr = W.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-    return top.withColumn("rnk", F.row_number().over(wr)).select(
-        "rnk", "doc_id", "rrf_score", "sparse_rnk", "dense_rnk"
-    )
-
-
-def rrf_fusion_sql() -> str:
-    ranks = ", ".join(str(r) for r in BM25_QRANKS)
-    return f"""
-WITH w AS (SELECT doc_id, unnest({_SQL_WS}) AS term FROM documents),
-t AS (SELECT doc_id, term FROM w WHERE term <> ''),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY doc_id, term),
-dl AS (SELECT doc_id, COUNT(*) AS dl FROM t GROUP BY doc_id),
-dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-q AS (
-  SELECT term, df FROM (
-    SELECT term, df, ROW_NUMBER() OVER (ORDER BY df DESC, term) AS qrnk
-    FROM dfq) WHERE qrnk IN ({ranks})
-),
-consts AS (
-  SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-         (SELECT COUNT(*) FROM t) AS tl
-),
-sc AS (
-  SELECT tf.doc_id,
-         CAST(((n_docs - df) * 1024) // (df + 1) AS HUGEINT)
-           * CAST(44 * tl * tf AS HUGEINT)
-           // CAST(20 * tl * tf + 6 * tl + 18 * dl.dl * n_docs AS HUGEINT)
-           AS s_term
-  FROM tf JOIN q USING (term) JOIN dl USING (doc_id), consts
-),
-sagg AS (
-  SELECT doc_id, CAST(SUM(s_term) AS BIGINT) AS score FROM sc GROUP BY doc_id
-),
-srnk AS (
-  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS sparse_rnk
-  FROM sagg
-),
-qv AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = {RRF_QVEC}),
-dsc AS (
-  SELECT e.vec_id AS doc_id,
-         SUM(CAST(floor(CAST(e.embedding[g.k] AS DOUBLE) * 1000000) AS BIGINT)
-           * CAST(floor(CAST(qv.q_emb[g.k] AS DOUBLE) * 1000000) AS BIGINT))
-           AS dscore
-  FROM embeddings e, qv, generate_series(1, 64) AS g(k)
-  GROUP BY e.vec_id
-),
-drnk AS (
-  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY dscore DESC, doc_id) AS dense_rnk
-  FROM dsc
-),
-fused AS (
-  SELECT COALESCE(s.doc_id, d.doc_id) AS doc_id,
-         COALESCE({RRF_SCALE} // ({RRF_K} + s.sparse_rnk), 0)
-           + COALESCE({RRF_SCALE} // ({RRF_K} + d.dense_rnk), 0) AS rrf_score,
-         COALESCE(s.sparse_rnk, -1) AS sparse_rnk,
-         COALESCE(d.dense_rnk, -1) AS dense_rnk
-  FROM srnk s FULL OUTER JOIN drnk d ON d.doc_id = s.doc_id
-)
-SELECT * FROM (
-  SELECT ROW_NUMBER() OVER (ORDER BY rrf_score DESC, doc_id) AS rnk,
-         doc_id, CAST(rrf_score AS BIGINT) AS rrf_score,
-         CAST(sparse_rnk AS BIGINT) AS sparse_rnk,
-         CAST(dense_rnk AS BIGINT) AS dense_rnk
-  FROM fused) WHERE rnk <= {RRF_TOPK} ORDER BY rnk
-"""
-
-
-# ---------------------------------------------------------------------------
-# Zipf rank-frequency slope
-# ---------------------------------------------------------------------------
-
-ZIPF_N = 100  # top-N terms by frequency enter the log-log regression
-
-
-def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law fit over the corpus vocabulary: OLS slope of
-    ln(frequency) on ln(rank) for the top-{ZIPF_N} terms — the classic
-    corpus-health diagnostic (natural language sits near −1; template
-    spam and gibberish drift far off).  The only float surface is the
-    final slope, emitted µ-quantized (floor(slope·10⁶)); the moment sums
-    are over just {ZIPF_N} doubles so cross-engine accumulation error
-    (~1e-13) cannot move the µ-floor.
-
-    Plan: one explode + partial+final term-count agg, a top-N
-    TakeOrdered (never a global sort of the vocabulary), and a 100-row
-    single-partition regression — the same shape at any corpus size."""
-    d = _docs(spark, sf_dir)
-    freq = (
-        d.select(F.explode(words_col()).alias("term"))
-        .where(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    top = freq.orderBy(F.col("f").desc(), F.col("term").asc()).limit(ZIPF_N)
-    wr = W.orderBy(F.col("f").desc(), F.col("term").asc())
-    pts = top.withColumn("r", F.row_number().over(wr)).select(
-        F.log(F.col("r").cast("double")).alias("x"),
-        F.log(F.col("f").cast("double")).alias("y"),
-    )
-    agg = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    return agg.select(
-        F.col("n").cast("long").alias("n_terms"),
-        F.floor(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-            * F.lit(1_000_000.0)
-        ).cast("long").alias("slope_micros"),
-    )
-
-
-def zipf_slope_sql() -> str:
-    return f"""
-WITH w AS (SELECT unnest({_SQL_WS}) AS term FROM documents),
-freq AS (
-  SELECT term, COUNT(*) AS f FROM w WHERE term <> '' GROUP BY term
-),
-top AS (
-  SELECT ln(ROW_NUMBER() OVER (ORDER BY f DESC, term)) AS x,
-         ln(CAST(f AS DOUBLE)) AS y
-  FROM freq ORDER BY f DESC, term LIMIT {ZIPF_N}
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
-       CAST(floor((COUNT(*) * SUM(x*y) - SUM(x) * SUM(y))
-            / (COUNT(*) * SUM(x*x) - SUM(x) * SUM(x)) * 1000000) AS BIGINT)
-         AS slope_micros
-FROM top
-"""
-
-
-# ---------------------------------------------------------------------------
-# Deterministic train/val/test split census
-# ---------------------------------------------------------------------------
-
-SPLIT_TRAIN_MOD = 8  # h % 10: 0-7 train, 8 val, 9 test (80/10/10)
-
-
-def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based train/val/test split census — the
-    assignment every training pipeline needs to be reproducible AND
-    stable under corpus growth: split(doc) = md5(doc_id) % 10 (0-7
-    train, 8 val, 9 test), so a document never migrates between splits
-    when new data arrives (unlike fraction-based randomSplit).  The
-    census reports per (split, lang) document and character counts —
-    the leakage/imbalance audit reviewers ask for.
-
-    Scale shape: map-only hash + one partial+final agg on a ≤30-key
-    surface; no joins, no windows."""
-    d = _docs(spark, sf_dir)
-    h = h40(F.col("doc_id").cast("string")) % 10
-    split = (
-        F.when(h < SPLIT_TRAIN_MOD, F.lit("train"))
-        .when(h == SPLIT_TRAIN_MOD, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    return (
-        d.select(split.alias("split"), "lang", "n_chars")
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("n_chars").cast("long")).alias("sum_chars"),
-        )
-        .repartition(1).sortWithinPartitions("split", "lang")
-    )
-
-
-def dataset_split_sql() -> str:
-    h = _SQL_H40.format(s="CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH d AS (
-  SELECT lang, n_chars,
-         CASE WHEN {h} % 10 < {SPLIT_TRAIN_MOD} THEN 'train'
-              WHEN {h} % 10 = {SPLIT_TRAIN_MOD} THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents
-)
-SELECT split, lang, COUNT(*) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM d GROUP BY split, lang ORDER BY split, lang
-"""
-
-
-# ---------------------------------------------------------------------------
-# D7 — longest-common-subsequence alignment between consecutive documents
-# ---------------------------------------------------------------------------
-
-LCS_N = 48  # character prefix per side entering the DP grid
-
-
-def lcs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest-common-subsequence length between consecutive documents
-    (Wagner & Fischer 1974) — the order-preserving overlap measure
-    diff/plagiarism pipelines use where bag-of-words similarity can't
-    see reordering: L[i,j] = a_i==b_j ? L[i-1,j-1]+1 :
-    max(L[i-1,j], L[i,j-1]) over the first LCS_N chars of each side.
-    Evaluated anti-diagonal by anti-diagonal exactly like dtw_pairs
-    (multimodal.dtw_stats): diagonal d depends only on d-1 and d-2, so
-    the DP vectorizes across the whole pair batch in numpy and the
-    DuckDB twin replays it with two carried list columns.  Sides are
-    padded to LCS_N with distinct sentinels (-1 vs -2) that can never
-    match, leaving the LCS invariant.  Also emits the positional match
-    count (the Hamming-style diagonal), a cheap lower-bound cross-check.
-
-    Scale shape: one shifted self-equi-join on doc_id to form pairs,
-    then a map-only Arrow pass; 2N-1 numpy steps per batch."""
-    import numpy as np
-    import pandas as pd
-
-    n = LCS_N
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.substring("text", 1, n).alias("pfx")
-    )
-    a = d.where(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("pair_id"), F.col("pfx").alias("ta")
-    )
-    b = d.where(F.col("doc_id") % 2 == 1).select(
-        (F.col("doc_id") - 1).alias("pair_id"), F.col("pfx").alias("tb")
-    )
-    pairs = a.join(b, "pair_id")
-
-    def gen(batches):
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                yield pd.DataFrame({"pair_id": [], "lcs": [], "eq_pos": []})
-                continue
-            def enc(col, pad):
-                return np.array(
-                    [[ord(c) for c in s[:n]] + [pad] * (n - min(len(s), n))
-                     for s in col],
-                    dtype=np.int64,
-                )
-            av = enc(pdf["ta"], -1)
-            bv = enc(pdf["tb"], -2)
-            prev = np.zeros((m, n), dtype=np.int64)   # diagonal d-2
-            cur = np.zeros((m, n), dtype=np.int64)    # diagonal d-1
-            cur[:, 0] = (av[:, 0] == bv[:, 0]).astype(np.int64)
-            i = np.arange(n)
-            for dd in range(1, 2 * n - 1):
-                j = dd - i
-                valid = (j >= 0) & (j <= n - 1)
-                bj = bv[:, np.clip(j, 0, n - 1)]
-                eq = (av == bj) & valid[None, :]
-                up = np.zeros((m, n), dtype=np.int64)
-                up[:, 1:] = cur[:, :-1]               # (i-1, j)  on d-1
-                left = cur                            # (i, j-1)  on d-1
-                diag = np.zeros((m, n), dtype=np.int64)
-                diag[:, 1:] = prev[:, :-1]            # (i-1,j-1) on d-2
-                new = np.maximum(up, left)
-                new = np.where(eq, np.maximum(new, diag + 1), new)
-                new = np.where(valid[None, :], new, 0)
-                prev, cur = cur, new
-            out = pd.DataFrame(
-                {
-                    "pair_id": pdf["pair_id"].to_numpy(dtype=np.int64),
-                    "lcs": cur[:, n - 1],
-                    "eq_pos": (av == bv).sum(axis=1),
-                }
-            )
-            yield out
-
-    res = pairs.mapInPandas(gen, schema="pair_id long, lcs long, eq_pos long")
-    return res.repartition(1).sortWithinPartitions("pair_id")
-
-
-def lcs_pairs_sql() -> str:
-    n = LCS_N
-    la = (
-        f"list_transform(range(0, {n}), t -> CASE WHEN t < length(ta) "
-        f"THEN CAST(unicode(substr(ta, CAST(t + 1 AS INT), 1)) AS BIGINT) "
-        f"ELSE -1 END)"
-    )
-    lb = (
-        f"list_transform(range(0, {n}), t -> CASE WHEN t < length(tb) "
-        f"THEN CAST(unicode(substr(tb, CAST(t + 1 AS INT), 1)) AS BIGINT) "
-        f"ELSE -2 END)"
-    )
-    return f"""
-WITH RECURSIVE d AS (
-  SELECT doc_id, substr(text, 1, {n}) AS pfx FROM documents
-),
-pairs AS (
-  SELECT a.doc_id AS pair_id, a.pfx AS ta, b.pfx AS tb
-  FROM d a JOIN d b ON b.doc_id = a.doc_id + 1
-  WHERE a.doc_id % 2 = 0
-),
-base AS MATERIALIZED (
-  SELECT pair_id, {la} AS la, {lb} AS lb FROM pairs
-),
-rec(pair_id, d, prev, cur) AS (
-  SELECT pair_id, 0,
-         list_transform(range(0, {n}), i -> CAST(0 AS BIGINT)),
-         list_transform(range(0, {n}), i ->
-           CASE WHEN i = 0 AND la[1] = lb[1] THEN CAST(1 AS BIGINT)
-                ELSE CAST(0 AS BIGINT) END)
-  FROM base
-  UNION ALL
-  SELECT r.pair_id, r.d + 1, r.cur,
-         list_transform(range(0, {n}), i ->
-           CASE WHEN r.d + 1 - i BETWEEN 0 AND {n - 1} THEN
-             GREATEST(
-               CASE WHEN i > 0 THEN r.cur[i] ELSE 0 END,
-               COALESCE(r.cur[i + 1], 0),
-               CASE WHEN b.la[i + 1] = b.lb[r.d + 2 - i]
-                    THEN (CASE WHEN i > 0 THEN r.prev[i] ELSE 0 END) + 1
-                    ELSE 0 END)
-           ELSE CAST(0 AS BIGINT) END)
-  FROM rec r JOIN base b USING (pair_id)
-  WHERE r.d < {2 * n - 2}
-),
-eqp AS (
-  SELECT pair_id,
-         CAST(list_sum(list_transform(range(0, {n}),
-              t -> CASE WHEN la[t + 1] = lb[t + 1] THEN 1 ELSE 0 END))
-              AS BIGINT) AS eq_pos
-  FROM base
-)
-SELECT r.pair_id, CAST(r.cur[{n}] AS BIGINT) AS lcs, eqp.eq_pos
-FROM rec r JOIN eqp USING (pair_id)
-WHERE r.d = {2 * n - 2} ORDER BY r.pair_id
-"""
-
-
-BWT_LEN = 16
-BWT_MOD = 7
-
-
-def bwt_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burrows-Wheeler transform census (Burrows & Wheeler 1994 — the
-    reversible permutation behind bzip2 and FM-indexes): for every
-    BWT_MOD-th document, the BWT of the first BWT_LEN letters of its
-    lowercased a-z skeleton (all rotations sorted bytewise, last
-    column concatenated — equal rotations share their last character,
-    so ties cannot disagree), with the md5 digest, the count of
-    equal-adjacent symbol pairs (the run-coalescing the transform
-    exists to create), and the distinct-symbol count.
-
-    Everything is built-in column algebra: transform() builds the
-    rotation array, array_sort orders it, aggregate folds the last
-    column — no UDF; the oracle replays it with generate_series +
-    string_agg under DuckDB's bytewise default collation.
-
-    Scale shape: map-only per-doc expression work + nothing shuffled
-    but the slim output rows."""
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") % BWT_MOD == 0)
-    s = F.substring(
-        F.regexp_replace(F.lower(F.col("text")), "[^a-z]", ""), 1, BWT_LEN
-    )
-    d = docs.select("doc_id", s.alias("s")).where(F.length("s") == BWT_LEN)
-    n = BWT_LEN
-    rot = F.transform(
-        F.sequence(F.lit(0), F.lit(n - 1)),
-        lambda k: F.concat(
-            F.col("s").substr(k + 1, F.lit(n) - k), F.col("s").substr(F.lit(1), k)
-        ),
-    )
-    srt = F.array_sort(rot)
-    bwt = F.aggregate(
-        srt, F.lit(""), lambda acc, r: F.concat(acc, F.substring(r, n, 1))
-    )
-    out = d.select("doc_id", bwt.alias("bwt"))
-    runs = F.size(
-        F.filter(
-            F.sequence(F.lit(1), F.lit(n - 1)),
-            lambda i: F.substring(F.col("bwt"), i, 1)
-            == F.substring(F.col("bwt"), i + 1, 1),
-        )
-    )
-    return (
-        out.select(
-            "doc_id",
-            F.md5(F.col("bwt")).alias("bwt_md5"),
-            runs.cast("long").alias("n_equal_adjacent"),
-            F.size(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.lit(BWT_LEN)),
-                        lambda i: F.substring(F.col("bwt"), i, 1),
-                    )
-                )
-            ).cast("long").alias("n_symbols"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
-
-
-def bwt_census_sql() -> str:
-    n = BWT_LEN
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         substring(regexp_replace(lower(text), '[^a-z]', '', 'g'), 1, {n}) AS s
-  FROM documents WHERE doc_id % {BWT_MOD} = 0
-),
-d2 AS (SELECT doc_id, s FROM d WHERE length(s) = {n}),
-rot AS (
-  SELECT doc_id, k.k AS k,
-         substring(s, k.k + 1, {n} - k.k) || substring(s, 1, k.k) AS r
-  FROM d2, generate_series(0, {n - 1}) AS k(k)
-),
-bwt AS (
-  SELECT doc_id, string_agg(substring(r, {n}, 1), '' ORDER BY r, k) AS bwt
-  FROM rot GROUP BY doc_id
-)
-SELECT doc_id,
-       md5(bwt) AS bwt_md5,
-       CAST((SELECT COUNT(*) FROM generate_series(1, {n - 1}) AS g(i)
-             WHERE substring(bwt, i, 1) = substring(bwt, i + 1, 1))
-            AS BIGINT) AS n_equal_adjacent,
-       CAST(length(list_distinct(list_transform(range(1, {n + 1}),
-             i -> substring(bwt, i, 1)))) AS BIGINT) AS n_symbols
-FROM bwt ORDER BY doc_id
-"""
-
-
-DEBRUIJN_K = 3  # edges are word 3-grams; nodes are word 2-grams
-
-
-def debruijn_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """De Bruijn graph census over word n-grams (the assembly-graph
-    framing of corpus redundancy — Pevzner's Eulerian path view, here
-    on tokens instead of nucleotides): nodes are distinct word
-    2-grams, a directed edge joins prefix 2-gram -> suffix 2-gram for
-    every DISTINCT word 3-gram, per language.  Emits per lang: node
-    and edge counts, the number of Eulerian-BALANCED nodes
-    (in-degree == out-degree — the walkability surface), max out-degree,
-    and the count of branching nodes (out-degree > 1, where assembly
-    ambiguity lives).
-
-    Scale shape: explode to distinct 3-grams (one doc-keyed dedup
-    shuffle), then two (lang, node) degree aggs joined FULL OUTER —
-    every shuffle keyed on (lang, 2-gram), no corpus-global hot key."""
-    ws = _clean_words()
-    docs = _docs(spark, sf_dir)
-    tri = F.when(
-        F.size(ws) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(ws, i),
-                F.element_at(ws, i + 1),
-                F.element_at(ws, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    edges = (
-        docs.select("lang", F.explode(tri).alias("g"))
-        .select(
-            "lang",
-            F.concat_ws(" ", F.slice(F.split(F.col("g"), " "), 1, 2)).alias("pre"),
-            F.concat_ws(" ", F.slice(F.split(F.col("g"), " "), 2, 2)).alias("suf"),
-        )
-        .distinct()
-    )
-    outd = edges.groupBy("lang", F.col("pre").alias("node")).agg(
-        F.count(F.lit(1)).alias("outd")
-    )
-    ind = edges.groupBy("lang", F.col("suf").alias("node")).agg(
-        F.count(F.lit(1)).alias("ind")
-    )
-    deg = outd.join(ind, ["lang", "node"], "full_outer").select(
-        "lang",
-        "node",
-        F.coalesce("outd", F.lit(0)).alias("outd"),
-        F.coalesce("ind", F.lit(0)).alias("ind"),
-    )
-    return (
-        deg.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum("outd").alias("n_edges"),
-            F.sum((F.col("outd") == F.col("ind")).cast("long")).alias("n_balanced"),
-            F.max("outd").alias("max_outd"),
-            F.sum((F.col("outd") > 1).cast("long")).alias("n_branching"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("lang")
-    )
-
-
-def debruijn_stats_sql() -> str:
-    return f"""
-WITH w AS (
-  SELECT lang, list_filter({_SQL_WS}, t -> t <> '') AS ws FROM documents
-),
-tri AS (
-  SELECT DISTINCT lang,
-         ws[i] || ' ' || ws[i + 1] AS pre,
-         ws[i + 1] || ' ' || ws[i + 2] AS suf
-  FROM w, unnest(range(1, len(ws) - 1)) t(i)
-  WHERE len(ws) >= 3
-),
-outd AS (SELECT lang, pre AS node, COUNT(*) AS outd FROM tri GROUP BY lang, pre),
-ind  AS (SELECT lang, suf AS node, COUNT(*) AS ind FROM tri GROUP BY lang, suf),
-deg AS (
-  SELECT COALESCE(o.lang, i.lang) AS lang,
-         COALESCE(o.node, i.node) AS node,
-         COALESCE(o.outd, 0) AS outd, COALESCE(i.ind, 0) AS ind
-  FROM outd o FULL OUTER JOIN ind i ON i.lang = o.lang AND i.node = o.node
-)
-SELECT lang,
-       CAST(COUNT(*) AS BIGINT) AS n_nodes,
-       CAST(SUM(outd) AS BIGINT) AS n_edges,
-       CAST(SUM(CASE WHEN outd = ind THEN 1 ELSE 0 END) AS BIGINT) AS n_balanced,
-       CAST(MAX(outd) AS BIGINT) AS max_outd,
-       CAST(SUM(CASE WHEN outd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_branching
-FROM deg GROUP BY lang ORDER BY lang
-"""
-
-
-EXPORT_SHARDS = 16
-EXPORT_MIN_CHARS = 200
-
-
-def export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-shard export manifest — the terminal pipeline query a
-    dataset release runs (curate -> exact-dedup -> shard -> manifest),
-    composed from the same primitives the individual gate entries
-    verify: keep documents with n_chars >= EXPORT_MIN_CHARS, exact-
-    dedup on md5(text) electing the smallest doc_id per group, assign
-    survivors to EXPORT_SHARDS shards by the h40 doc hash, and emit
-    per shard the manifest a release signs: doc count, total chars,
-    Σdoc_id checksum, and the md5 over the sorted doc-id list (the
-    shard's content address).
-
-    Scale shape: one dedup shuffle on the text hash (the D1 shape),
-    one shard groupBy; the manifest fold is sort_array(collect_list)
-    per shard — bounded by shard size, the exact structure a 10¹²-row
-    export would write per output file."""
-    d = _docs(spark, sf_dir).select("doc_id", "text", "n_chars").where(
-        F.col("n_chars") >= EXPORT_MIN_CHARS
-    )
-    canon = (
-        d.withColumn("th", F.md5("text"))
-        .groupBy("th")
-        .agg(F.min("doc_id").alias("doc_id"), F.first("n_chars").alias("n_chars"))
-    )
-    shard = canon.select(
-        (h40(F.col("doc_id").cast("string")) % EXPORT_SHARDS).alias("shard"),
-        "doc_id",
-        "n_chars",
-    )
-    return (
-        shard.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.sum("doc_id").alias("id_checksum"),
-            F.md5(
-                F.concat_ws(",", F.sort_array(F.collect_list(F.col("doc_id"))))
-            ).alias("content_md5"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("shard")
-    )
-
-
-def export_shards_sql() -> str:
-    h = "CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 10) AS BIGINT)"
-    return f"""
-WITH d AS (
-  SELECT doc_id, text, n_chars FROM documents WHERE n_chars >= {EXPORT_MIN_CHARS}
-),
-canon AS (
-  SELECT MIN(doc_id) AS doc_id, ANY_VALUE(n_chars) AS n_chars
-  FROM d GROUP BY md5(text)
-),
-shard AS (
-  SELECT {h} % {EXPORT_SHARDS} AS shard, doc_id, n_chars FROM canon
-)
-SELECT CAST(shard AS BIGINT) AS shard,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       CAST(SUM(doc_id) AS BIGINT) AS id_checksum,
-       md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
-         AS content_md5
-FROM shard GROUP BY shard ORDER BY shard
-"""
-
-
-ADLER_MOD = 65521
-ADLER_PREFIX = 256
-
-
-def adler32_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adler-32 checksum census (RFC 1950 — zlib's integrity check):
-    A = (1 + Σ bytes) mod 65521 and B = (n + Σ (n−i+1)·byte_i) mod
-    65521 over the first ADLER_PREFIX characters — both plain weighted
-    sums, so the 'rolling' checksum is order-free column algebra on
-    every engine (no scan dependency, unlike CRC's GF(2) fold).
-    Emits per doc the A and B halves and the packed 32-bit value.
-
-    Scale shape: map-only per-doc expression work (one transform +
-    aggregate over the char positions), nothing shuffled but the slim
-    output."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.substring("text", 1, ADLER_PREFIX).alias("s")
-    )
-    n = F.length("s")
-    codes = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.ascii(F.substring(F.col("s"), i, 1)).cast("long"),
-    )
-    asum = F.aggregate(codes, F.lit(0).cast("long"), lambda a, c: a + c)
-    bsum = F.aggregate(
-        F.zip_with(
-            codes,
-            F.sequence(F.lit(1), n),
-            lambda c, i: c * (n - i + 1),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    a = (1 + asum) % ADLER_MOD
-    b = (n.cast("long") + bsum) % ADLER_MOD
-    return (
-        d.select(
-            "doc_id",
-            a.alias("adler_a"),
-            b.alias("adler_b"),
-            (b * 65536 + a).alias("adler32"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
-
-
-def adler32_census_sql() -> str:
-    return f"""
-WITH d AS (
-  SELECT doc_id, substring(text, 1, {ADLER_PREFIX}) AS s FROM documents
-),
-c AS (
-  SELECT doc_id, length(s) AS n, i.i AS i,
-         ascii(substring(s, i.i, 1)) AS code
-  FROM d, generate_series(1, {ADLER_PREFIX}) AS i(i)
-  WHERE i.i <= length(s)
-),
-agg AS (
-  SELECT doc_id, ANY_VALUE(n) AS n,
-         SUM(code) AS asum,
-         SUM(code * i) AS wsum
-  FROM c GROUP BY doc_id
-),
-fin AS (
-  SELECT doc_id, n, asum, (n + 1) * asum - wsum AS bsum FROM agg
-)
-SELECT doc_id,
-       CAST((1 + asum) % {ADLER_MOD} AS BIGINT) AS adler_a,
-       CAST((n + bsum) % {ADLER_MOD} AS BIGINT) AS adler_b,
-       CAST(((n + bsum) % {ADLER_MOD}) * 65536 + (1 + asum) % {ADLER_MOD}
-            AS BIGINT) AS adler32
-FROM fin ORDER BY doc_id
-"""
-
-
-RSYNC_BLOCK = 8
-RSYNC_PREFIX = 128
-RSYNC_MOD = 13
-
-
-def rsync_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rsync rolling-block match census (Tridgell's delta-sync: the
-    receiver hashes fixed blocks, the sender slides a rolling window
-    and looks each position up): doc d is the 'basis' split into 16
-    non-overlapping 8-char blocks of its first 128 chars, doc d+1 is
-    the 'new file' probed at every offset with its rolling 8-gram; the
-    census reports per pair how many offsets hit some basis block, how
-    many distinct basis blocks were hit, and the earliest hit offset —
-    the delta-encoding potential between adjacent documents.
-
-    Scale shape: block and window tables explode key-locally per pair
-    (≤ 16 + 121 slim rows each), join on (pair, hash) — the shape a
-    distributed delta-store dedup takes, with no corpus-global key."""
-    d = _docs(spark, sf_dir).where(F.col("doc_id") % RSYNC_MOD == 0).select(
-        "doc_id", F.substring("text", 1, RSYNC_PREFIX).alias("s")
-    )
-    nxt = _docs(spark, sf_dir).where((F.col("doc_id") - 1) % RSYNC_MOD == 0).select(
-        (F.col("doc_id") - 1).alias("doc_id"),
-        F.substring("text", 1, RSYNC_PREFIX).alias("t"),
-    )
-    nb = RSYNC_PREFIX // RSYNC_BLOCK
-    blocks = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nb - 1)),
-                lambda k: F.substring(
-                    F.col("s"), k * RSYNC_BLOCK + 1, RSYNC_BLOCK
-                ),
-            )
-        ).alias("blk"),
-    ).where(F.length("blk") == RSYNC_BLOCK).select(
-        "doc_id", h40(F.col("blk")).alias("bh")
-    ).distinct()
-    wins = nxt.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("t") - RSYNC_BLOCK + 1),
-                lambda o: F.substring(F.col("t"), o, RSYNC_BLOCK),
-            )
-        ).alias("off0", "win"),
-    ).select("doc_id", (F.col("off0") + 1).alias("off"), h40(F.col("win")).alias("wh"))
-    hit = wins.join(
-        blocks, (wins["doc_id"] == blocks["doc_id"]) & (wins["wh"] == blocks["bh"])
-    ).select(wins["doc_id"].alias("doc_id"), "off", "bh")
-    return (
-        hit.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_hits"),
-            F.countDistinct("bh").alias("n_blocks_hit"),
-            F.min("off").alias("first_hit_off"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
-
-
-def rsync_matches_sql() -> str:
-    h = "CAST('0x' || substring(md5({c}), 1, 10) AS BIGINT)"
-    nb = RSYNC_PREFIX // RSYNC_BLOCK
-    return f"""
-WITH d AS (
-  SELECT doc_id, substring(text, 1, {RSYNC_PREFIX}) AS s
-  FROM documents WHERE doc_id % {RSYNC_MOD} = 0
-),
-nxt AS (
-  SELECT doc_id - 1 AS doc_id, substring(text, 1, {RSYNC_PREFIX}) AS t
-  FROM documents WHERE (doc_id - 1) % {RSYNC_MOD} = 0
-),
-blocks AS (
-  SELECT DISTINCT doc_id,
-         {h.format(c=f"substring(s, k.k * {RSYNC_BLOCK} + 1, {RSYNC_BLOCK})")} AS bh
-  FROM d, generate_series(0, {nb - 1}) AS k(k)
-  WHERE length(substring(s, k.k * {RSYNC_BLOCK} + 1, {RSYNC_BLOCK})) = {RSYNC_BLOCK}
-),
-wins AS (
-  SELECT doc_id, o.o AS off,
-         {h.format(c=f"substring(t, o.o, {RSYNC_BLOCK})")} AS wh
-  FROM nxt, generate_series(1, {RSYNC_PREFIX - RSYNC_BLOCK + 1}) AS o(o)
-  WHERE o.o <= length(t) - {RSYNC_BLOCK} + 1
-),
-hit AS (
-  SELECT w.doc_id, w.off, b.bh
-  FROM wins w JOIN blocks b ON b.doc_id = w.doc_id AND b.bh = w.wh
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_hits,
-       CAST(COUNT(DISTINCT bh) AS BIGINT) AS n_blocks_hit,
-       CAST(MIN(off) AS BIGINT) AS first_hit_off
-FROM hit GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-SN_KEY_LEN = 12
-SN_WINDOW = 2
-
-
-def sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sorted-neighborhood dedup blocking (Hernández & Stolfo 1995 —
-    the third classic blocking family next to LSH banding and exact
-    keys): documents sort by a normalized 12-char skeleton key and
-    only records within SN_WINDOW positions become candidate pairs,
-    each verified with the exact word-set Jaccard (integer ppm).
-    Emits every candidate pair with its ppm Jaccard and whether the
-    two keys matched exactly — the precision/recall surface of the
-    blocking choice.
-
-    Scale shape: at fixture scale the rank is one ordered window; at
-    production the same key range-partitions with an SN_WINDOW-row
-    boundary halo per partition (the standard distributed
-    sorted-neighborhood construction), which changes no output."""
-    from pyspark.sql import Window as W
-
-    ws = _clean_words()
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.substring(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", ""), 1, SN_KEY_LEN
-        ).alias("k"),
-        F.array_distinct(ws).alias("wset"),
-    )
-    w = W.orderBy("k", "doc_id")
-    lead_cols = []
-    for j in range(1, SN_WINDOW + 1):
-        lead_cols += [
-            F.lead("doc_id", j).over(w).alias(f"nid{j}"),
-            F.lead("k", j).over(w).alias(f"nk{j}"),
-            F.lead("wset", j).over(w).alias(f"nw{j}"),
-        ]
-    led = d.select("doc_id", "k", "wset", *lead_cols)
-    pairs = None
-    for j in range(1, SN_WINDOW + 1):
-        p = (
-            led.where(F.col(f"nid{j}").isNotNull())
-            .select(
-                F.col("doc_id").alias("a"),
-                F.col(f"nid{j}").alias("b"),
-                (F.col("k") == F.col(f"nk{j}")).cast("int").alias("same_key"),
-                F.size(F.array_intersect("wset", f"nw{j}")).cast("long").alias("i"),
-                F.size(F.array_union("wset", f"nw{j}")).cast("long").alias("u"),
-            )
-            .select(
-                "a", "b", "same_key",
-                F.when(F.col("u") > 0, F.expr("div(1000000 * i, u)"))
-                .otherwise(F.lit(0)).alias("jac_ppm"),
-            )
-        )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    return pairs.repartition(1).sortWithinPartitions("a", "b")
-
-
-def sorted_neighborhood_sql() -> str:
-    leads = []
-    arms = []
-    for j in range(1, SN_WINDOW + 1):
-        leads.append(
-            f"lead(doc_id, {j}) OVER w AS nid{j}, lead(k, {j}) OVER w AS nk{j},"
-            f" lead(wset, {j}) OVER w AS nw{j}"
-        )
-        arms.append(f"""
-SELECT doc_id AS a, nid{j} AS b,
-       CAST(CASE WHEN k = nk{j} THEN 1 ELSE 0 END AS INT) AS same_key,
-       CAST(CASE WHEN len(list_distinct(list_concat(wset, nw{j}))) > 0
-            THEN 1000000 * len(list_intersect(wset, nw{j}))
-                 // len(list_distinct(list_concat(wset, nw{j})))
-            ELSE 0 END AS BIGINT) AS jac_ppm
-FROM led WHERE nid{j} IS NOT NULL""")
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         substring(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'), 1, {SN_KEY_LEN}) AS k,
-         list_distinct(list_filter({_SQL_WS}, t -> t <> '')) AS wset
-  FROM documents
-),
-led AS (
-  SELECT doc_id, k, wset, {", ".join(leads)}
-  FROM d WINDOW w AS (ORDER BY k, doc_id)
-)
-SELECT a, b, same_key, jac_ppm FROM ({" UNION ALL ".join(arms)})
-ORDER BY a, b
-"""
-
-
-POSTINGS_MIN_DF = 50
-
-
-def postings_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index posting-list sizing census (the delta-gap +
-    varint arithmetic every search index runs when budgeting storage —
-    Zobel & Moffat 2006): for each term with df >= POSTINGS_MIN_DF,
-    the sorted doc-id posting list's gap sequence encoded as LEB128
-    varints — bytes(g) = 1 for g < 2^7, 2 for g < 2^14, 3 for g <
-    2^21, else 4 (the first entry stores the raw doc id).  Emits per
-    term: df, total encoded bytes, max gap, and the mean gap numerator
-    (sum of gaps) — the compression planning surface.
-
-    Scale shape: one (term, doc) distinct shuffle, one term-keyed
-    window lag, one term rollup — every key is the term, the classic
-    index-build shape."""
-    ws = _clean_words()
-    from pyspark.sql import Window as W
-
-    posting = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(F.array_distinct(ws)).alias("term"))
-        .distinct()
-    )
-    w = W.partitionBy("term").orderBy("doc_id")
-    g = posting.withColumn("gap", F.col("doc_id") - F.lag("doc_id").over(w))
-    vb = (
-        F.when(F.col("gap").isNull(), 5)  # head entry: fixed 5-byte raw id slot
-        .when(F.col("gap") < 1 << 7, 1)
-        .when(F.col("gap") < 1 << 14, 2)
-        .when(F.col("gap") < 1 << 21, 3)
-        .otherwise(4)
-    )
-    agg = (
-        g.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum(vb).cast("long").alias("encoded_bytes"),
-            F.max("gap").alias("max_gap"),
-            F.coalesce(F.sum("gap"), F.lit(0)).alias("gap_sum"),
-        )
-        .where(F.col("df") >= POSTINGS_MIN_DF)
-    )
-    return agg.repartition(1).sortWithinPartitions("term")
-
-
-def postings_gaps_sql() -> str:
-    return f"""
-WITH w AS (SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS ws FROM documents),
-posting AS (SELECT DISTINCT doc_id, unnest(ws) AS term FROM w),
-g AS (
-  SELECT term, doc_id,
-         doc_id - lag(doc_id) OVER (PARTITION BY term ORDER BY doc_id) AS gap
-  FROM posting
-),
-vb AS (
-  SELECT term, gap,
-         CASE WHEN gap IS NULL THEN 5
-              WHEN gap < 128 THEN 1
-              WHEN gap < 16384 THEN 2
-              WHEN gap < 2097152 THEN 3
-              ELSE 4 END AS b
-  FROM g
-)
-SELECT term,
-       CAST(COUNT(*) AS BIGINT) AS df,
-       CAST(SUM(b) AS BIGINT) AS encoded_bytes,
-       CAST(MAX(gap) AS BIGINT) AS max_gap,
-       CAST(COALESCE(SUM(gap), 0) AS BIGINT) AS gap_sum
-FROM vb GROUP BY term HAVING COUNT(*) >= {POSTINGS_MIN_DF}
-ORDER BY term
-"""
-
-
-SNIPPET_TERMS = ("data", "model", "system")
-SNIPPET_WIN = 16
-SNIPPET_MOD = 5
-
-
-def best_snippet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best-snippet selection (the search-results highlighter: the
-    token window covering the most distinct query terms, earliest such
-    window on ties): for the fixed 3-term query, every SNIPPET_MOD-th
-    document explodes to (position, token); per query term a ROWS
-    window max of its presence flag over the trailing SNIPPET_WIN
-    tokens, and the coverage at a position is the SUM of the three
-    maxima — no distinct-in-window needed.  Emits per doc the best
-    coverage, the earliest window end achieving it, and the doc's
-    total query-term hits.
-
-    Scale shape: one doc-keyed explode + per-doc windows — the
-    shuffle key is doc_id throughout."""
-    ws = _clean_words()
-    from pyspark.sql import Window as W
-
-    toks = (
-        _docs(spark, sf_dir)
-        .where(F.col("doc_id") % SNIPPET_MOD == 0)
-        .select("doc_id", F.posexplode(ws).alias("pos", "tok"))
-    )
-    flags = toks.select(
-        "doc_id", "pos",
-        *[
-            (F.col("tok") == t).cast("long").alias(f"f{i}")
-            for i, t in enumerate(SNIPPET_TERMS)
-        ],
-    )
-    w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(-(SNIPPET_WIN - 1), 0)
-    cov = flags.select(
-        "doc_id", "pos",
-        sum(
-            [F.max(f"f{i}").over(w) for i in range(len(SNIPPET_TERMS))],
-            F.lit(0),
-        ).alias("cov"),
-        sum([F.col(f"f{i}") for i in range(len(SNIPPET_TERMS))], F.lit(0))
-        .alias("hit"),
-    )
-    return (
-        cov.groupBy("doc_id")
-        .agg(
-            F.max(F.struct(F.col("cov"), (-F.col("pos")).alias("np"))).alias("m"),
-            F.sum("hit").alias("total_hits"),
-        )
-        .where(F.col("m.cov") > 0)
-        .select(
-            "doc_id",
-            F.col("m.cov").cast("long").alias("best_cov"),
-            (-F.col("m.np")).cast("long").alias("best_end_pos"),
-            "total_hits",
-        )
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
-
-
-def best_snippet_sql() -> str:
-    flags = ", ".join(
-        f"CASE WHEN tok = '{t}' THEN 1 ELSE 0 END AS f{i}"
-        for i, t in enumerate(SNIPPET_TERMS)
-    )
-    maxes = " + ".join(
-        f"MAX(f{i}) OVER (PARTITION BY doc_id ORDER BY pos"
-        f" ROWS BETWEEN {SNIPPET_WIN - 1} PRECEDING AND CURRENT ROW)"
-        for i in range(len(SNIPPET_TERMS))
-    )
-    hits = " + ".join(f"f{i}" for i in range(len(SNIPPET_TERMS)))
-    return f"""
-WITH d AS (
-  SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS ws
-  FROM documents WHERE doc_id % {SNIPPET_MOD} = 0
-),
-toks AS (
-  SELECT doc_id, i.i - 1 AS pos, ws[i.i] AS tok
-  FROM d, unnest(range(1, len(ws) + 1)) i(i)
-),
-flags AS (SELECT doc_id, pos, {flags} FROM toks),
-cov AS (
-  SELECT doc_id, pos, {maxes} AS cov, {hits} AS hit FROM flags
-),
-best AS (
-  SELECT doc_id,
-         MAX(struct_pack(cov := cov, np := -pos)) AS m,
-         SUM(hit) AS total_hits
-  FROM cov GROUP BY doc_id
-)
-SELECT doc_id,
-       CAST(m.cov AS BIGINT) AS best_cov,
-       CAST(-(m.np) AS BIGINT) AS best_end_pos,
-       CAST(total_hits AS BIGINT) AS total_hits
-FROM best WHERE m.cov > 0 ORDER BY doc_id
-"""
-
-
-# --- smallest-period stringology census ----------------------------------------
-
-PERIOD_PREFIX_LEN = 48
-
-
-def string_period_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Smallest-period census (the combinatorics-on-words primitive
-    under KMP failure functions and Fine-Wilf: the least p with
-    s[i] = s[i+p] for all valid i; p = |s| means the prefix is
-    aperiodic/primitive): for each document's first 48 characters,
-    the smallest period found by the definitional overlap test
-    substr(s, 1, L-p) = substr(s, p+1, L-p) — one vectorized substring
-    comparison per candidate p, no per-character Python.
-
-    Output per doc: prefix length, smallest period, the periodicity
-    ratio in ppm (L/p scaled), and the primitivity flag.
-
-    Scale shape: map-only — a bounded 47-way explode per row with a
-    codegen'd substring equality; no shuffle except the final census
-    ordering."""
-    L = F.least(F.char_length(F.col("text")), F.lit(PERIOD_PREFIX_LEN))
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.substring(F.col("text"), 1, PERIOD_PREFIX_LEN).alias("s"),
-        L.alias("len"),
-    )
-    cand = d.select(
-        "doc_id",
-        "len",
-        F.explode(F.expr("sequence(1, greatest(len - 1, 1))")).alias("p"),
-    ).where(
-        (F.col("p") < F.col("len"))
-        & (
-            F.expr("substring(s, 1, len - p)")
-            == F.expr("substring(s, p + 1, len - p)")
-        )
-    )
-    period = cand.groupBy("doc_id").agg(F.min("p").alias("minp"))
-    out = d.join(period, "doc_id", "left").select(
-        "doc_id",
-        F.col("len").cast("long").alias("prefix_len"),
-        F.coalesce(F.col("minp"), F.col("len")).cast("long").alias("period"),
-        F.expr(
-            "CAST(div(1000000 * len, coalesce(minp, len)) AS BIGINT)"
-        ).alias("rep_ratio_ppm"),
-        F.when(F.coalesce(F.col("minp"), F.col("len")) == F.col("len"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("primitive"),
-    )
-    return out.repartition(1).sortWithinPartitions("doc_id")
-
-
-def string_period_census_sql() -> str:
-    n = PERIOD_PREFIX_LEN
-    return f"""
-WITH d AS (
-  SELECT doc_id, substring(text, 1, {n}) AS s,
-         least(length(text), {n}) AS len
-  FROM documents
-),
-cand AS (
-  SELECT doc_id, len, p
-  FROM d, unnest(range(1, greatest(len, 2))) t(p)
-  WHERE p < len
-    AND substring(s, 1, CAST(len - p AS INT)) = substring(s, CAST(p + 1 AS INT), CAST(len - p AS INT))
-),
-period AS (SELECT doc_id, MIN(p) AS minp FROM cand GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(len AS BIGINT) AS prefix_len,
-       CAST(COALESCE(minp, len) AS BIGINT) AS period,
-       CAST((1000000 * len) // COALESCE(minp, len) AS BIGINT) AS rep_ratio_ppm,
-       CAST(CASE WHEN COALESCE(minp, len) = len THEN 1 ELSE 0 END AS INT) AS primitive
-FROM d LEFT JOIN period USING (doc_id)
-ORDER BY doc_id
-"""
-
-
-# --- Elias-Fano posting-list sizing census --------------------------------------
-
-
-def elias_fano_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Elias-Fano posting-list sizing census (Vigna 2013, the
-    quasi-succinct index encoding every modern search engine budgets
-    against): for each term with df >= POSTINGS_MIN_DF over the same
-    inverted index as postings_gaps, the EXACT EF bit cost — low part
-    n*l with l = floor(log2(U/n)) (0 when U < 2n so the div is 0),
-    high part n ones + (U >> l) unary zeros — versus the plain 32-bit
-    array, with the savings in ppm. floor(log2 x) is length(bin(x))-1
-    on both engines: integer-exact, no log() float anywhere.
-
-    Scale shape: one (term, doc) distinct shuffle + one term census —
-    identical to the index-build shape; the sizing math is map-only
-    column arithmetic."""
-    ws = _clean_words()
-    posting = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(F.array_distinct(ws)).alias("term"))
-        .distinct()
-    )
-    agg = (
-        posting.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            (F.max("doc_id") + 1).alias("universe"),
-        )
-        .where(F.col("df") >= POSTINGS_MIN_DF)
-    )
-    out = agg.select(
-        "term",
-        "df",
-        "universe",
-        F.expr(
-            "CASE WHEN div(universe, df) >= 1"
-            " THEN length(bin(div(universe, df))) - 1 ELSE 0 END"
-        ).alias("l"),
-    ).select(
-        "term",
-        "df",
-        "universe",
-        F.col("l").cast("long").alias("low_bits_per_doc"),
-        (F.col("df") * F.col("l") + F.col("df") + F.expr("shiftright(universe, CAST(l AS INT))"))
-        .cast("long")
-        .alias("ef_bits"),
-        (F.lit(32) * F.col("df")).cast("long").alias("plain_bits"),
-    )
-    return (
-        out.select(
-            "*",
-            F.expr("CAST(div(1000000 * ef_bits, plain_bits) AS BIGINT)").alias(
-                "ef_ratio_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("term")
-    )
-
-
-def elias_fano_size_sql() -> str:
-    return f"""
-WITH w AS (SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS ws FROM documents),
-posting AS (SELECT DISTINCT doc_id, unnest(ws) AS term FROM w),
-agg AS (
-  SELECT term, COUNT(*) AS df, MAX(doc_id) + 1 AS universe
-  FROM posting GROUP BY term HAVING COUNT(*) >= {POSTINGS_MIN_DF}
-),
-lo AS (
-  SELECT term, df, universe,
-         CASE WHEN universe // df >= 1
-              THEN length(bin(universe // df)) - 1 ELSE 0 END AS l
-  FROM agg
-),
-sized AS (
-  SELECT term, df, universe, l,
-         df * l + df + (universe >> l) AS ef_bits,
-         32 * df AS plain_bits
-  FROM lo
-)
-SELECT term, CAST(df AS BIGINT) AS df, CAST(universe AS BIGINT) AS universe,
-       CAST(l AS BIGINT) AS low_bits_per_doc,
-       CAST(ef_bits AS BIGINT) AS ef_bits,
-       CAST(plain_bits AS BIGINT) AS plain_bits,
-       CAST((1000000 * ef_bits) // plain_bits AS BIGINT) AS ef_ratio_ppm
-FROM sized ORDER BY term
-"""
-
-
-# --- exact Adjusted Rand Index between two document partitions ------------------
-
-
-def ari_clusterings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adjusted Rand Index between the language partition and the
-    source partition of the corpus, EXACT (Hubert & Arabie 1985): from
-    the (lang, source) contingency table, S = sum_ij C(n_ij,2),
-    A = sum_i C(a_i,2), B = sum_j C(b_j,2), and ARI's numerator /
-    denominator cleared of fractions — num2 = 2*(C(n,2)*S - A*B),
-    den2 = C(n,2)*(A+B) - 2*A*B — reported as exact integers (the
-    clustering-agreement yardstick dedup pipelines use to compare
-    detector partitions without floats; int64-safe to ~3e9 docs).
-
-    Scale shape: one (lang, source) census — partial+final agg on a
-    handful of keys — then single-row closed-form arithmetic."""
-    d = _docs(spark, sf_dir).select("lang", "source")
-    ct = d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("nij"))
-    S = ct.agg(
-        F.sum(F.expr("div(nij * (nij - 1), 2)")).alias("S"),
-        F.sum("nij").alias("n"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
-    A = (
-        ct.groupBy("lang")
-        .agg(F.sum("nij").alias("ai"))
-        .agg(
-            F.sum(F.expr("div(ai * (ai - 1), 2)")).alias("A"),
-            F.count(F.lit(1)).alias("n_lang"),
-        )
-    )
-    B = (
-        ct.groupBy("source")
-        .agg(F.sum("nij").alias("bj"))
-        .agg(
-            F.sum(F.expr("div(bj * (bj - 1), 2)")).alias("B"),
-            F.count(F.lit(1)).alias("n_source"),
-        )
-    )
-    joined = S.crossJoin(A).crossJoin(B).select(
-        "n", "n_lang", "n_source", "S", "A", "B",
-        F.expr("div(n * (n - 1), 2)").alias("pairs"),
-    )
-    return joined.select(
-        "n", "n_lang", "n_source",
-        F.col("S").cast("long").alias("sum_cells_c2"),
-        F.col("A").cast("long").alias("sum_rows_c2"),
-        F.col("B").cast("long").alias("sum_cols_c2"),
-        (F.lit(2) * (F.col("pairs") * F.col("S") - F.col("A") * F.col("B")))
-        .cast("long")
-        .alias("ari_num2"),
-        (F.col("pairs") * (F.col("A") + F.col("B")) - F.lit(2) * F.col("A") * F.col("B"))
-        .cast("long")
-        .alias("ari_den2"),
-    )
-
-
-def ari_clusterings_sql() -> str:
-    return """
-WITH ct AS (
-  SELECT lang, source, COUNT(*) AS nij FROM documents GROUP BY lang, source
-),
-s AS (
-  SELECT SUM(nij * (nij - 1) // 2) AS S, SUM(nij) AS n FROM ct
-),
-a AS (
-  SELECT SUM(ai * (ai - 1) // 2) AS A, COUNT(*) AS n_lang
-  FROM (SELECT lang, SUM(nij) AS ai FROM ct GROUP BY lang)
-),
-b AS (
-  SELECT SUM(bj * (bj - 1) // 2) AS B, COUNT(*) AS n_source
-  FROM (SELECT source, SUM(nij) AS bj FROM ct GROUP BY source)
-)
-SELECT CAST(n AS BIGINT) AS n,
-       CAST(n_lang AS BIGINT) AS n_lang,
-       CAST(n_source AS BIGINT) AS n_source,
-       CAST(S AS BIGINT) AS sum_cells_c2,
-       CAST(A AS BIGINT) AS sum_rows_c2,
-       CAST(B AS BIGINT) AS sum_cols_c2,
-       CAST(2 * ((n * (n - 1) // 2) * S - A * B) AS BIGINT) AS ari_num2,
-       CAST((n * (n - 1) // 2) * (A + B) - 2 * A * B AS BIGINT) AS ari_den2
-FROM s, a, b
-"""
-
-
-# --- dedup cascade: marginal removal per stage ----------------------------------
-
-
-def dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-cascade effectiveness census — the marginal-removal table
-    a training-data pipeline publishes for each dedup stage run IN
-    SEQUENCE (each stage sees only the previous stage's survivors):
-    stage 1 exact (md5 of raw text), stage 2 reorder-invariant (md5 of
-    the sorted distinct token set — catches shuffled boilerplate),
-    stage 3 fuzzy (MinHash band buckets, K=16 in 4x4 bands, star
-    canonicalization: a doc is removed when ANY of its band buckets
-    holds a smaller surviving doc id). Per stage: docs in, removed,
-    out, and the removed-id checksum pinning exactly which docs died.
-
-    Scale shape: stages 1-2 are one hash-key shuffle each; stage 3 is
-    the bounded 4-rows-per-doc band join of minhash_lsh_pairs — no
-    all-pairs anywhere, so the cascade is three bounded shuffles at
-    any corpus size."""
-    base = _docs(spark, sf_dir).select(
-        "doc_id", "text", F.md5("text").alias("k1")
-    )
-    w1 = Window.partitionBy("k1")
-    s1 = base.select("doc_id", "text", F.min("doc_id").over(w1).alias("c1"))
-    surv1 = s1.where(F.col("doc_id") == F.col("c1")).select("doc_id", "text")
-    key2 = F.md5(F.array_join(F.array_sort(F.array_distinct(_clean_words())), " "))
-    w2 = Window.partitionBy("k2")
-    s2 = surv1.select("doc_id", "text", key2.alias("k2")).select(
-        "doc_id", "text", F.min("doc_id").over(w2).alias("c2")
-    )
-    surv2 = s2.where(F.col("doc_id") == F.col("c2")).select("doc_id", "text")
-    sig = (
-        _with_shingles(surv2)
-        .select("doc_id", F.transform("sh", h40).alias("hs"))
-        .select("doc_id", *_minhash_cols(F.col("hs")))
-    )
-    rows_per_band = MH_K // MH_BANDS
-    keys = [
-        F.concat_ws(
-            ":",
-            F.lit(b),
-            *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)],
-        )
-        for b in range(MH_BANDS)
-    ]
-    banded = sig.select("doc_id", F.explode(F.array(*keys)).alias("band_key"))
-    wb = Window.partitionBy("band_key")
-    c3 = (
-        banded.select("doc_id", F.min("doc_id").over(wb).alias("bmin"))
-        .groupBy("doc_id")
-        .agg(F.min("bmin").alias("c3"))
-    )
-    s3 = surv2.join(c3, "doc_id", "left").select(
-        "doc_id", F.coalesce(F.col("c3"), F.col("doc_id")).alias("c3")
-    )
-
-    def census(stage, df, canon):
-        agg = df.agg(
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(F.when(F.col("doc_id") != F.col(canon), 1).otherwise(0)).alias(
-                "n_removed"
-            ),
-            F.sum(F.when(F.col("doc_id") == F.col(canon), 1).otherwise(0)).alias(
-                "n_out"
-            ),
-            F.coalesce(
-                F.sum(F.when(F.col("doc_id") != F.col(canon), F.col("doc_id"))),
-                F.lit(0),
-            ).alias("removed_checksum"),
-        )
-        return agg.select(F.lit(stage).alias("stage"), "*")
-
-    out = (
-        census("1_exact", s1, "c1")
-        .unionByName(census("2_sorted_tokens", s2, "c2"))
-        .unionByName(census("3_minhash_band", s3, "c3"))
-    )
-    return out.repartition(1).sortWithinPartitions("stage")
-
-
-def dedup_cascade_sql() -> str:
-    rows_per_band = MH_K // MH_BANDS
-    mh = ",\n  ".join(
-        f"list_min(list_transform(hs, h -> ({MH_A[k]} * h + {MH_B[k]}) % {MH_P})) AS m{k}"
-        for k in range(MH_K)
-    )
-    band_sel = "\nUNION ALL\n".join(
-        "SELECT doc_id, '{b}:' || {key} AS band_key FROM sig".format(
-            b=b,
-            key=" || ':' || ".join(
-                f"m{b * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(MH_BANDS)
-    )
-    return f"""
-WITH s1 AS (
-  SELECT doc_id, text,
-         MIN(doc_id) OVER (PARTITION BY md5(text)) AS c1
-  FROM documents
-),
-surv1 AS (SELECT doc_id, text FROM s1 WHERE doc_id = c1),
-s2 AS (
-  SELECT doc_id, text,
-         MIN(doc_id) OVER (PARTITION BY md5(array_to_string(
-           list_sort(list_distinct(list_filter({_SQL_WS}, t -> t <> ''))), ' '))) AS c2
-  FROM surv1
-),
-surv2 AS (SELECT doc_id, text FROM s2 WHERE doc_id = c2),
-w AS (SELECT doc_id, {_SQL_WS} AS ws FROM surv2),
-sh AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM w WHERE len(ws) >= 3),
-hsx AS (SELECT doc_id, list_transform(sh, s -> {_SQL_H40.format(s='s')}) AS hs FROM sh),
-sig AS (SELECT doc_id, {mh} FROM hsx),
-bands AS ({band_sel}),
-bucket_min AS (
-  SELECT band_key, MIN(doc_id) AS bm FROM bands GROUP BY band_key
-),
-c3 AS (
-  SELECT bands.doc_id, MIN(bm) AS c3
-  FROM bands JOIN bucket_min USING (band_key) GROUP BY bands.doc_id
-),
-s3 AS (
-  SELECT surv2.doc_id, COALESCE(c3.c3, surv2.doc_id) AS c3
-  FROM surv2 LEFT JOIN c3 ON c3.doc_id = surv2.doc_id
-),
-census AS (
-  SELECT '1_exact' AS stage, COUNT(*) AS n_in,
-         SUM(CASE WHEN doc_id != c1 THEN 1 ELSE 0 END) AS n_removed,
-         SUM(CASE WHEN doc_id = c1 THEN 1 ELSE 0 END) AS n_out,
-         COALESCE(SUM(CASE WHEN doc_id != c1 THEN doc_id END), 0) AS removed_checksum
-  FROM s1
-  UNION ALL
-  SELECT '2_sorted_tokens', COUNT(*),
-         SUM(CASE WHEN doc_id != c2 THEN 1 ELSE 0 END),
-         SUM(CASE WHEN doc_id = c2 THEN 1 ELSE 0 END),
-         COALESCE(SUM(CASE WHEN doc_id != c2 THEN doc_id END), 0)
-  FROM s2
-  UNION ALL
-  SELECT '3_minhash_band', COUNT(*),
-         SUM(CASE WHEN doc_id != c3 THEN 1 ELSE 0 END),
-         SUM(CASE WHEN doc_id = c3 THEN 1 ELSE 0 END),
-         COALESCE(SUM(CASE WHEN doc_id != c3 THEN doc_id END), 0)
-  FROM s3
-)
-SELECT stage, CAST(n_in AS BIGINT) AS n_in,
-       CAST(n_removed AS BIGINT) AS n_removed,
-       CAST(n_out AS BIGINT) AS n_out,
-       CAST(removed_checksum AS BIGINT) AS removed_checksum
-FROM census ORDER BY stage
-"""
-
-
-# --- RAKE keyword extraction (integer-exact scores) -----------------------------
-
-
-def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyword extraction (Rose et al. 2010) with integer-exact
-    scoring: tokens split into candidate phrases at the STOPWORDS
-    boundary set, per-document word stats freq(w) = occurrences in
-    phrases and deg(w) = sum of lengths of phrases containing w, a
-    phrase's score the sum of div(10^6 * deg, freq) over its word
-    occurrences, and each document reports its best phrase (score
-    desc, phrase asc tie-break) — the keyword surface a corpus index
-    publishes, floats nowhere.
-
-    Scale shape: one bounded explode per doc (positions), phrase
-    grouping by a prefix-sum of stop flags (one doc-key window), two
-    doc-local censuses and a doc-key top-1 window — all keys are
-    doc-scoped, so no hot keys at corpus scale."""
-    toks = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.posexplode(_clean_words()).alias("pos", "w"))
-    )
-    wst = Window.partitionBy("doc_id").orderBy("pos")
-    ph = toks.select(
-        "doc_id", "pos", "w",
-        F.col("w").isin(*STOPWORDS).cast("int").alias("stop"),
-    ).select(
-        "doc_id", "pos", "w", "stop",
-        F.sum("stop").over(wst.rowsBetween(Window.unboundedPreceding, 0)).alias("pid"),
-    ).where(F.col("stop") == 0)
-    plen = ph.groupBy("doc_id", "pid").agg(
-        F.count(F.lit(1)).alias("plen"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "w"))), lambda s: s["w"]
-            ),
-            " ",
-        ).alias("phrase"),
-    )
-    words = ph.join(plen.select("doc_id", "pid", "plen"), ["doc_id", "pid"])
-    wstats = words.groupBy("doc_id", "w").agg(
-        F.count(F.lit(1)).alias("freq"),
-        F.sum("plen").alias("deg"),
-    )
-    scored = (
-        words.join(wstats, ["doc_id", "w"])
-        .groupBy("doc_id", "pid")
-        .agg(F.sum(F.expr("div(1000000 * deg, freq)")).alias("score_ppm"))
-        .join(plen, ["doc_id", "pid"])
-    )
-    wtop = Window.partitionBy("doc_id").orderBy(
-        F.col("score_ppm").desc(), F.col("phrase").asc()
-    )
-    nph = scored.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_phrases"))
-    best = (
-        scored.select("doc_id", "phrase", "score_ppm",
-                      F.row_number().over(wtop).alias("rn"))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-        .join(nph, "doc_id")
-    )
-    return best.repartition(1).sortWithinPartitions("doc_id")
-
-
-def rake_keywords_sql() -> str:
-    stop = ", ".join(f"'{w}'" for w in STOPWORDS)
-    return f"""
-WITH toks AS (
-  SELECT doc_id, i - 1 AS pos, ws[i] AS w
-  FROM (SELECT doc_id, list_filter({_SQL_WS}, t -> t <> '') AS ws FROM documents),
-       unnest(range(1, len(ws) + 1)) t(i)
-),
-flagged AS (
-  SELECT doc_id, pos, w,
-         CASE WHEN w IN ({stop}) THEN 1 ELSE 0 END AS stop
-  FROM toks
-),
-ph AS (
-  SELECT doc_id, pos, w,
-         SUM(stop) OVER (PARTITION BY doc_id ORDER BY pos
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pid
-  FROM flagged QUALIFY stop = 0
-),
-plen AS (
-  SELECT doc_id, pid, COUNT(*) AS plen,
-         string_agg(w, ' ' ORDER BY pos) AS phrase
-  FROM ph GROUP BY doc_id, pid
-),
-words AS (
-  SELECT ph.doc_id, ph.pid, ph.w, plen.plen
-  FROM ph JOIN plen ON plen.doc_id = ph.doc_id AND plen.pid = ph.pid
-),
-wstats AS (
-  SELECT doc_id, w, COUNT(*) AS freq, SUM(plen) AS deg
-  FROM words GROUP BY doc_id, w
-),
-scored AS (
-  SELECT w2.doc_id, w2.pid,
-         SUM((1000000 * deg) // freq) AS score_ppm
-  FROM words w2 JOIN wstats ON wstats.doc_id = w2.doc_id AND wstats.w = w2.w
-  GROUP BY w2.doc_id, w2.pid
-),
-withp AS (
-  SELECT scored.doc_id, phrase, score_ppm
-  FROM scored JOIN plen ON plen.doc_id = scored.doc_id AND plen.pid = scored.pid
-),
-nph AS (SELECT doc_id, COUNT(*) AS n_phrases FROM scored GROUP BY doc_id),
-best AS (
-  SELECT doc_id, phrase, score_ppm,
-         row_number() OVER (PARTITION BY doc_id ORDER BY score_ppm DESC, phrase ASC) AS rn
-  FROM withp QUALIFY rn = 1
-)
-SELECT best.doc_id, phrase, CAST(score_ppm AS BIGINT) AS score_ppm,
-       CAST(n_phrases AS BIGINT) AS n_phrases
-FROM best JOIN nph ON nph.doc_id = best.doc_id
-ORDER BY best.doc_id
-"""
-
-
-# --- group-aware k-fold split audit ---------------------------------------------
-
-_KFOLD_K = 5
-
-
-def group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-aware k-fold split audit (sklearn's GroupKFold contract,
-    the contamination guard for eval splits: correlated documents —
-    here a source, where near-duplicates concentrate — must land in
-    ONE fold): folds are assigned per GROUP by a 40-bit md5 hash of
-    the group key mod k, so the no-straddle invariant holds by
-    construction; the audit table reports per fold its group count,
-    doc count, corpus share, largest group, and how many of its
-    groups a naive doc_id % k split would have FRAGMENTED across
-    folds — the leakage the group-aware split prevented.
-
-    Scale shape: one group-key census (fold = pure hash arithmetic),
-    one fold census; deterministic, rerunnable, no RNG state."""
-    d = _docs(spark, sf_dir).select("doc_id", "source")
-    per_doc = d.select(
-        "doc_id", "source",
-        (h40(F.col("source")) % _KFOLD_K).alias("fold"),
-        (F.col("doc_id") % _KFOLD_K).alias("naive_fold"),
-    )
-    groups = per_doc.groupBy("source", "fold").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("naive_fold").alias("n_naive_folds"),
-    )
-    total = d.count()
-    out = groups.groupBy("fold").agg(
-        F.count(F.lit(1)).alias("n_groups"),
-        F.sum("n_docs").alias("n_docs"),
-        F.max("n_docs").alias("max_group_docs"),
-        F.sum(F.when(F.col("n_naive_folds") > 1, 1).otherwise(0)).alias(
-            "naive_frag_groups"
-        ),
-    )
-    return (
-        out.select(
-            F.col("fold").cast("long").alias("fold"),
-            "n_groups", "n_docs", "max_group_docs", "naive_frag_groups",
-            F.expr(f"CAST(div(1000000 * n_docs, {total}) AS BIGINT)").alias(
-                "share_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("fold")
-    )
-
-
-def group_kfold_sql() -> str:
-    h = _SQL_H40.format(s="source")
-    return f"""
-WITH per_doc AS (
-  SELECT doc_id, source,
-         {h} % {_KFOLD_K} AS fold,
-         doc_id % {_KFOLD_K} AS naive_fold
-  FROM documents
-),
-groups AS (
-  SELECT source, fold, COUNT(*) AS n_docs,
-         COUNT(DISTINCT naive_fold) AS n_naive_folds
-  FROM per_doc GROUP BY source, fold
-),
-total AS (SELECT COUNT(*) AS n FROM documents)
-SELECT CAST(fold AS BIGINT) AS fold,
-       COUNT(*) AS n_groups,
-       CAST(SUM(n_docs) AS BIGINT) AS n_docs,
-       CAST(MAX(n_docs) AS BIGINT) AS max_group_docs,
-       CAST(SUM(CASE WHEN n_naive_folds > 1 THEN 1 ELSE 0 END) AS BIGINT) AS naive_frag_groups,
-       CAST((1000000 * SUM(n_docs)) // (SELECT n FROM total) AS BIGINT) AS share_ppm
-FROM groups GROUP BY fold ORDER BY fold
-"""
-
-
-# --- readability census (integer-exact Flesch family) ---------------------------
-
-
-def readability_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Readability census with the Flesch reading-ease surface in
-    EXACT milli-units (Flesch 1948: 206.835 - 1.015 w/s - 84.6 sy/w,
-    here x1000 with floor division so no float ever rounds): sentences
-    are [.!?]+ runs, words the cleaned whitespace tokens, and
-    syllables the standard vowel-group heuristic (runs of [aeiouy]
-    per word, min 1) — counted with one regexp_count per column, the
-    content-quality signal C4-style corpus filters bucket on.
-
-    Scale shape: map-only regex counting + per-doc arithmetic; the
-    only shuffle is the final ordering."""
-    d = _docs(spark, sf_dir)
-    txt = F.lower(F.trim(F.col("text")))
-    n_sent = F.greatest(F.regexp_count(txt, F.lit("[.!?]+")), F.lit(1))
-    words = F.filter(
-        F.split(txt, r"\s+"), lambda t: t != ""
-    )
-    n_words = F.greatest(F.size(words), F.lit(1))
-    syl = F.aggregate(
-        words,
-        F.lit(0),
-        lambda acc, w: acc
-        + F.greatest(F.regexp_count(w, F.lit("[aeiouy]+")), F.lit(1)),
-    )
-    out = d.select(
-        "doc_id",
-        n_sent.alias("n_sentences"),
-        n_words.alias("n_words"),
-        syl.alias("n_syllables"),
-    ).select(
-        "doc_id",
-        F.col("n_sentences").cast("long").alias("n_sentences"),
-        F.col("n_words").cast("long").alias("n_words"),
-        F.col("n_syllables").cast("long").alias("n_syllables"),
-        F.expr(
-            "CAST(206835 - div(1015 * n_words, n_sentences)"
-            " - div(84600 * n_syllables, n_words) AS BIGINT)"
-        ).alias("flesch_milli"),
-    )
-    return out.repartition(1).sortWithinPartitions("doc_id")
-
-
-def readability_census_sql() -> str:
-    return """
-WITH d AS (
-  SELECT doc_id, lower(trim(text)) AS t,
-         list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS ws
-  FROM documents
-),
-c AS (
-  SELECT doc_id,
-         greatest(len(regexp_extract_all(t, '[.!?]+')), 1) AS n_sentences,
-         greatest(len(ws), 1) AS n_words,
-         list_sum(list_transform(ws,
-           w -> greatest(len(regexp_extract_all(w, '[aeiouy]+')), 1))) AS n_syllables
-  FROM d
-)
-SELECT doc_id,
-       CAST(n_sentences AS BIGINT) AS n_sentences,
-       CAST(n_words AS BIGINT) AS n_words,
-       CAST(n_syllables AS BIGINT) AS n_syllables,
-       CAST(206835 - (1015 * n_words) // n_sentences
-                   - (84600 * n_syllables) // n_words AS BIGINT) AS flesch_milli
-FROM c ORDER BY doc_id
-"""
-
-
-# --- Good-Turing frequency-of-frequencies census --------------------------------
-
-
-def good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good-Turing count-of-counts census (Good 1953, the smoothing
-    table under Katz backoff and the SGT estimator): term frequencies
-    r over the whole corpus, the frequency-of-frequencies N_r, the
-    probability mass r*N_r at each count, and the raw Turing
-    adjusted count r* = (r+1) * N_{r+1} / N_r in exact ppm via floor
-    division (0 where N_{r+1} is absent — the gap the smoothed
-    variants interpolate).
-
-    Scale shape: one term census, one r census (both partial+final),
-    one lead() over the tiny r table — the classic two-level
-    vocabulary-statistics shape."""
-    ws = _clean_words()
-    tf = (
-        _docs(spark, sf_dir)
-        .select(F.explode(ws).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("r"))
-    )
-    nr = tf.groupBy("r").agg(F.count(F.lit(1)).alias("n_r"))
-    w = Window.orderBy("r")
-    out = nr.select(
-        "r", "n_r",
-        (F.col("r") * F.col("n_r")).alias("mass"),
-        F.when(F.lead("r").over(w) == F.col("r") + 1, F.lead("n_r").over(w))
-        .otherwise(0)
-        .alias("n_r1"),
-    )
-    return (
-        out.select(
-            F.col("r").cast("long").alias("r"),
-            "n_r", "mass",
-            F.expr("CAST(div(1000000 * (r + 1) * n_r1, n_r) AS BIGINT)").alias(
-                "r_star_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("r")
-    )
-
-
-def good_turing_sql() -> str:
-    return f"""
-WITH tf AS (
-  SELECT term, COUNT(*) AS r
-  FROM (SELECT unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term FROM documents)
-  GROUP BY term
-),
-nr AS (SELECT r, COUNT(*) AS n_r FROM tf GROUP BY r),
-led AS (
-  SELECT r, n_r, r * n_r AS mass,
-         CASE WHEN lead(r) OVER (ORDER BY r) = r + 1
-              THEN lead(n_r) OVER (ORDER BY r) ELSE 0 END AS n_r1
-  FROM nr
-)
-SELECT CAST(r AS BIGINT) AS r,
-       CAST(n_r AS BIGINT) AS n_r,
-       CAST(mass AS BIGINT) AS mass,
-       CAST((1000000 * (r + 1) * n_r1) // n_r AS BIGINT) AS r_star_ppm
-FROM led ORDER BY r
-"""
-
-
-# --- AMS F2 sketch accuracy audit -----------------------------------------------
-
-_AMS_K = 8
-
-
-def ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMS second-frequency-moment sketch audit (Alon, Matias &
-    Szegedy 1996 — the tug-of-war sketch): for each of 8 salted +-1
-    hash functions s_k(x) = 1 - 2*(h40(salt||x) & 1), the sketch is
-    the signed sum over the token stream, its square the F2 estimate,
-    and the audit reports each estimator against the EXACT
-    F2 = sum f_x^2 with the signed error in ppm — the
-    repetition-mass / self-join-size estimator every streaming
-    optimizer quotes, here pinned deterministically.
-
-    Scale shape: sketches are one map-only pass + an 8-value agg
-    (each salt one conditional sum); exact F2 is one term census —
-    the only shuffle."""
-    tf = (
-        _docs(spark, sf_dir)
-        .select(F.explode(_clean_words()).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    signs = [
-        (F.lit(1) - F.lit(2) * (h40(F.concat(F.lit(f"ams{k}:"), F.col("term"))) % 2))
-        .alias(f"s{k}")
-        for k in range(_AMS_K)
-    ]
-    sk = tf.select("f", *signs).agg(
-        F.sum(F.expr("f * f")).alias("f2"),
-        *[F.sum(F.col(f"s{k}") * F.col("f")).alias(f"z{k}") for k in range(_AMS_K)],
-    )
-    stack = ", ".join(f"{k}, z{k}" for k in range(_AMS_K))
-    rows = sk.selectExpr("f2", f"stack({_AMS_K}, {stack}) AS (sketch_id, z)")
-    return (
-        rows.select(
-            F.col("sketch_id").cast("long").alias("sketch_id"),
-            F.col("z").cast("long").alias("sketch"),
-            (F.col("z") * F.col("z")).alias("f2_est"),
-            F.col("f2").cast("long").alias("f2_exact"),
-            F.expr("CAST(div(1000000 * (z * z - f2), f2) AS BIGINT)").alias(
-                "err_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("sketch_id")
-    )
-
-
-def ams_f2_sql() -> str:
-    zsum = ",\n         ".join(
-        "SUM((1 - 2 * ({h} % 2)) * f) AS z{k}".format(
-            h=_SQL_H40.format(s=f"'ams{k}:' || term"), k=k
-        )
-        for k in range(_AMS_K)
-    )
-    rows = "\n  UNION ALL\n".join(
-        f"  SELECT {k} AS sketch_id, z{k} AS z, f2 FROM sk" for k in range(_AMS_K)
-    )
-    return f"""
-WITH tf AS (
-  SELECT term, COUNT(*) AS f
-  FROM (SELECT unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term FROM documents)
-  GROUP BY term
-),
-sk AS (
-  SELECT SUM(f * f) AS f2,
-         {zsum}
-  FROM tf
-),
-rows_ AS (
-{rows}
-)
-SELECT CAST(sketch_id AS BIGINT) AS sketch_id,
-       CAST(z AS BIGINT) AS sketch,
-       CAST(z * z AS BIGINT) AS f2_est,
-       CAST(f2 AS BIGINT) AS f2_exact,
-       CAST((1000000 * (z * z - f2)) // f2 AS BIGINT) AS err_ppm
-FROM rows_ ORDER BY sketch_id
-"""
-
-
-# --- feature-hashing collision census -------------------------------------------
-
-_FHASH_BITS = 12
-
-
-def feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-hashing (hashing-trick, Weinberger et al. 2009)
-    collision census at 2^12 buckets: vocabulary terms hash to
-    h40 % 4096 and the audit reports bucket occupancy, colliding
-    buckets and terms, the worst bucket, and the token MASS sitting in
-    collision buckets (the share of training signal that gets mixed) —
-    in ppm, the table that picks the hash width before a
-    hashed-features model ships.
-
-    Scale shape: one term census then one bucket census — two
-    bounded shuffles; the report is a single row."""
-    tf = (
-        _docs(spark, sf_dir)
-        .select(F.explode(_clean_words()).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    b = tf.select(
-        (h40(F.col("term")) % (1 << _FHASH_BITS)).alias("bucket"), "f"
-    )
-    per_bucket = b.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_terms"), F.sum("f").alias("mass")
-    )
-    return per_bucket.agg(
-        F.sum("n_terms").alias("vocab"),
-        F.count(F.lit(1)).alias("buckets_used"),
-        F.sum(F.when(F.col("n_terms") > 1, 1).otherwise(0)).alias(
-            "collision_buckets"
-        ),
-        F.sum(F.when(F.col("n_terms") > 1, F.col("n_terms"))).alias(
-            "collided_terms"
-        ),
-        F.max("n_terms").alias("max_bucket_terms"),
-        F.sum("mass").alias("total_mass"),
-        F.sum(F.when(F.col("n_terms") > 1, F.col("mass"))).alias("collided_mass"),
-    ).select(
-        "vocab", "buckets_used", "collision_buckets",
-        F.coalesce(F.col("collided_terms"), F.lit(0)).alias("collided_terms"),
-        "max_bucket_terms", "total_mass",
-        F.coalesce(F.col("collided_mass"), F.lit(0)).alias("collided_mass"),
-        F.expr(
-            "CAST(div(1000000 * coalesce(collided_mass, 0), total_mass) AS BIGINT)"
-        ).alias("collided_mass_ppm"),
-    )
-
-
-def feature_hash_collisions_sql() -> str:
-    h = _SQL_H40.format(s="term")
-    return f"""
-WITH tf AS (
-  SELECT term, COUNT(*) AS f
-  FROM (SELECT unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term FROM documents)
-  GROUP BY term
-),
-per_bucket AS (
-  SELECT {h} % {1 << _FHASH_BITS} AS bucket,
-         COUNT(*) AS n_terms, SUM(f) AS mass
-  FROM tf GROUP BY bucket
-)
-SELECT CAST(SUM(n_terms) AS BIGINT) AS vocab,
-       COUNT(*) AS buckets_used,
-       CAST(SUM(CASE WHEN n_terms > 1 THEN 1 ELSE 0 END) AS BIGINT) AS collision_buckets,
-       CAST(COALESCE(SUM(CASE WHEN n_terms > 1 THEN n_terms END), 0) AS BIGINT) AS collided_terms,
-       CAST(MAX(n_terms) AS BIGINT) AS max_bucket_terms,
-       CAST(SUM(mass) AS BIGINT) AS total_mass,
-       CAST(COALESCE(SUM(CASE WHEN n_terms > 1 THEN mass END), 0) AS BIGINT) AS collided_mass,
-       CAST((1000000 * COALESCE(SUM(CASE WHEN n_terms > 1 THEN mass END), 0)) // SUM(mass) AS BIGINT) AS collided_mass_ppm
-FROM per_bucket
-"""
-
-
-# --- Cohen's kappa over the langid confusion matrix -----------------------------
-
-
-def cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa (Cohen 1960) between the planted language label
-    and the lang_id heuristic, EXACT: from the confusion matrix,
-    observed agreement D = sum of diagonal counts and chance agreement
-    S = sum over labels of row-marginal x column-marginal; kappa =
-    (N*D - S) / (N^2 - S) reported as integer numerator/denominator
-    plus a sign-aware ppm (sign * div(1e6*|num|, den), so both
-    engines floor the same positive quantity — 'div' truncates and
-    '//' floors, which disagree on negatives).
-
-    Scale shape: one |L|^2 confusion census + marginal rollups — all
-    tiny-key aggregates."""
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
-    pred = lang_id(spark, sf_dir).select("doc_id", "pred_lang")
-    cm = pred.join(d, "doc_id").groupBy("lang", "pred_lang").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    tot = cm.agg(
-        F.sum("c").alias("n"),
-        F.sum(F.when(F.col("lang") == F.col("pred_lang"), F.col("c"))).alias("diag"),
-    )
-    rows = cm.groupBy("lang").agg(F.sum("c").alias("rn"))
-    colsm = cm.groupBy("pred_lang").agg(F.sum("c").alias("cn"))
-    S = (
-        rows.join(colsm, rows["lang"] == colsm["pred_lang"])
-        .agg(F.coalesce(F.sum(F.col("rn") * F.col("cn")), F.lit(0)).alias("s"))
-    )
-    one = tot.crossJoin(S)
-    return one.select(
-        F.col("n").cast("long").alias("n_docs"),
-        F.coalesce(F.col("diag"), F.lit(0)).cast("long").alias("sum_diag"),
-        F.col("s").cast("long").alias("chance_sum"),
-        (F.col("n") * F.coalesce(F.col("diag"), F.lit(0)) - F.col("s"))
-        .cast("long")
-        .alias("kappa_num"),
-        (F.col("n") * F.col("n") - F.col("s")).cast("long").alias("kappa_den"),
-        F.expr(
-            "CAST(CASE WHEN n * n - s = 0 THEN 0 ELSE"
-            " CAST(sign(n * coalesce(diag, 0) - s) AS BIGINT)"
-            " * div(1000000 * abs(n * coalesce(diag, 0) - s), n * n - s) END"
-            " AS BIGINT)"
-        ).alias("kappa_ppm"),
-    )
-
-
-def cohens_kappa_sql() -> str:
-    return f"""
-WITH pred AS ({lang_id_sql()}),
-cm AS (
-  SELECT d.lang, p.pred_lang, COUNT(*) AS c
-  FROM pred p JOIN documents d USING (doc_id)
-  GROUP BY d.lang, p.pred_lang
-),
-tot AS (
-  SELECT SUM(c) AS n,
-         COALESCE(SUM(CASE WHEN lang = pred_lang THEN c END), 0) AS diag
-  FROM cm
-),
-r AS (SELECT lang, SUM(c) AS rn FROM cm GROUP BY lang),
-cl AS (SELECT pred_lang, SUM(c) AS cn FROM cm GROUP BY pred_lang),
-sx AS (
-  SELECT COALESCE(SUM(rn * cn), 0) AS s
-  FROM r JOIN cl ON cl.pred_lang = r.lang
-)
-SELECT CAST(n AS BIGINT) AS n_docs,
-       CAST(diag AS BIGINT) AS sum_diag,
-       CAST(s AS BIGINT) AS chance_sum,
-       CAST(n * diag - s AS BIGINT) AS kappa_num,
-       CAST(n * n - s AS BIGINT) AS kappa_den,
-       CAST(CASE WHEN n * n - s = 0 THEN 0 ELSE
-            CAST(sign(n * diag - s) AS BIGINT)
-            * ((1000000 * abs(n * diag - s)) // (n * n - s)) END AS BIGINT) AS kappa_ppm
-FROM tot, sx
-"""
-
-
-# --- front-coded dictionary sizing census ---------------------------------------
-
-
-def front_coding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Front-coded term-dictionary sizing census (the prefix-omission
-    encoding of Lucene's term dictionary and every FST-backed
-    vocabulary): terms in sorted order, each term's longest common
-    prefix with its predecessor measured exactly (one vectorized
-    comparison per candidate length — no per-char Python), and the
-    dictionary cost modeled as 2 length bytes + the unshared suffix
-    vs the raw byte size.  Rolled up per first-letter bucket: terms,
-    raw bytes, shared prefix bytes, front-coded bytes, saving ppm.
-
-    Scale shape: one vocabulary census + one global sort window (the
-    dictionary build itself) + a 26-key rollup."""
-    vocab = (
-        _docs(spark, sf_dir)
-        .select(F.explode(_clean_words()).alias("term"))
-        .distinct()
-    )
-    w = Window.orderBy("term")
-    pairs = vocab.select(
-        "term", F.lag("term").over(w).alias("prev")
-    )
-    # prefix equality is monotone in length, so LCP = #matching prefixes
-    lcp = F.expr(
-        "CASE WHEN prev IS NULL THEN 0 ELSE"
-        " size(filter(sequence(1, least(length(term), length(prev))),"
-        " i -> substring(term, 1, CAST(i AS INT)) = substring(prev, 1, CAST(i AS INT))))"
-        " END"
-    )
-    x = pairs.select(
-        "term",
-        F.octet_length("term").alias("raw_b"),
-        lcp.cast("long").alias("lcp"),
-    )
-    return (
-        x.groupBy(F.substring("term", 1, 1).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.sum("raw_b").alias("raw_bytes"),
-            F.sum("lcp").alias("shared_bytes"),
-            F.sum(F.lit(2) + F.col("raw_b") - F.col("lcp")).alias("fc_bytes"),
-        )
-        .select(
-            "*",
-            F.expr("CAST(div(1000000 * fc_bytes, raw_bytes) AS BIGINT)").alias(
-                "fc_ratio_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("bucket")
-    )
-
-
-def front_coding_sql() -> str:
-    return f"""
-WITH vocab AS (
-  SELECT DISTINCT unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term FROM documents
-),
-pairs AS (
-  SELECT term, lag(term) OVER (ORDER BY term) AS prev FROM vocab
-),
-x AS (
-  SELECT term, CAST(strlen(term) AS BIGINT) AS raw_b,
-         CAST(CASE WHEN prev IS NULL THEN 0 ELSE
-           len(list_filter(range(1, least(length(term), length(prev)) + 1),
-               i -> substring(term, 1, CAST(i AS INT)) = substring(prev, 1, CAST(i AS INT))))
-         END AS BIGINT) AS lcp
-  FROM pairs
-)
-SELECT substring(term, 1, 1) AS bucket,
-       COUNT(*) AS n_terms,
-       CAST(SUM(raw_b) AS BIGINT) AS raw_bytes,
-       CAST(SUM(lcp) AS BIGINT) AS shared_bytes,
-       CAST(SUM(2 + raw_b - lcp) AS BIGINT) AS fc_bytes,
-       CAST((1000000 * SUM(2 + raw_b - lcp)) // SUM(raw_b) AS BIGINT) AS fc_ratio_ppm
-FROM x GROUP BY bucket ORDER BY bucket
-"""
-
-
-# --- prefix-filter (ppjoin) candidate reduction audit ---------------------------
-
-_PF_TAU_NUM, _PF_TAU_DEN = 7, 10  # Jaccard threshold 0.7 as an exact fraction
-
-
-def prefix_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtering audit (the ppjoin/AllPairs principle, Xiao et
-    al. 2008 / Bayardo et al. 2007): for Jaccard >= 0.7, two token
-    SETS must share a token among the first |x| - ceil(0.7|x|) + 1
-    tokens of the global rarest-first ordering — so the candidate join
-    only touches prefixes.  The audit builds BOTH joins — full
-    inverted-index candidates and prefix-filtered candidates — counts
-    the true pairs by exact integer cross-multiplied Jaccard, and
-    proves losslessness (missed = 0) plus the candidate-reduction
-    ratio in ppm: the number that justifies the prefix filter at
-    10^12 rows.
-
-    Scale shape: the audit itself runs both joins (it must, to
-    compare); production keeps only the prefix join — bounded
-    fan-out on rare tokens instead of hot-key explosion."""
-    # deterministic 500-doc audit slice: the reduction RATIO is the
-    # deliverable and is corpus-size-free; without the cap the full
-    # inverted-index side of the audit is Theta(sum df^2) on hot
-    # tokens — quadratic in corpus size, which only the prefix side
-    # avoids (that asymmetry is exactly what the audit demonstrates).
-    toks = (
-        _docs(spark, sf_dir)
-        .where(F.col("doc_id") < 500)
-        .select("doc_id", F.explode(F.array_distinct(_clean_words())).alias("tok"))
-        .distinct()
-    )
-    df = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    sz = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    wtok = Window.partitionBy("doc_id").orderBy("df", "tok")
-    ranked = (
-        toks.join(df, "tok")
-        .select("doc_id", "tok", F.row_number().over(wtok).alias("r"))
-        .join(sz, "doc_id")
-    )
-    plen = F.col("n") - F.expr(
-        f"div({_PF_TAU_NUM} * n + {_PF_TAU_DEN} - 1, {_PF_TAU_DEN})"
-    ) + 1
-    prefix = ranked.where(F.col("r") <= plen).select("doc_id", "tok")
-
-    def pairs(rel):
-        a = rel.select(F.col("doc_id").alias("a"), "tok")
-        b = rel.select(F.col("doc_id").alias("b"), "tok")
-        return (
-            a.join(b, "tok").where(F.col("a") < F.col("b")).select("a", "b").distinct()
-        )
-    full_pairs = pairs(toks)
-    pref_pairs = pairs(prefix)
-    inter = (
-        toks.select(F.col("doc_id").alias("a"), "tok")
-        .join(toks.select(F.col("doc_id").alias("b"), "tok"), "tok")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    sa = sz.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
-    sb = sz.select(F.col("doc_id").alias("b"), F.col("n").alias("nb"))
-    true_pairs = (
-        inter.join(sa, "a").join(sb, "b")
-        .where(
-            F.lit(_PF_TAU_DEN) * F.col("ni")
-            >= F.lit(_PF_TAU_NUM) * (F.col("na") + F.col("nb") - F.col("ni"))
-        )
-        .select("a", "b")
-    )
-    missed = true_pairs.join(pref_pairs, ["a", "b"], "left_anti")
-    c_full = full_pairs.agg(F.count(F.lit(1)).alias("n_full"))
-    c_pref = pref_pairs.agg(F.count(F.lit(1)).alias("n_prefix"))
-    c_true = true_pairs.agg(F.count(F.lit(1)).alias("n_true"))
-    c_miss = missed.agg(F.count(F.lit(1)).alias("n_missed"))
-    n_docs = sz.agg(F.count(F.lit(1)).alias("n_docs"))
-    one = n_docs.crossJoin(c_full).crossJoin(c_pref).crossJoin(c_true).crossJoin(c_miss)
-    return one.select(
-        "n_docs", "n_full", "n_prefix", "n_true", "n_missed",
-        F.expr("CAST(div(1000000 * n_prefix, n_full) AS BIGINT)").alias(
-            "candidate_ratio_ppm"
-        ),
-    )
-
-
-def prefix_filter_audit_sql() -> str:
-    return f"""
-WITH toks AS (
-  SELECT DISTINCT doc_id, unnest(list_distinct(list_filter({_SQL_WS}, t -> t <> ''))) AS tok
-  FROM documents WHERE doc_id < 500
-),
-df AS (SELECT tok, COUNT(*) AS df FROM toks GROUP BY tok),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
-ranked AS (
-  SELECT toks.doc_id, toks.tok, n,
-         row_number() OVER (PARTITION BY toks.doc_id ORDER BY df.df, toks.tok) AS r
-  FROM toks JOIN df ON df.tok = toks.tok JOIN sz ON sz.doc_id = toks.doc_id
-),
-prefix AS (
-  SELECT doc_id, tok FROM ranked
-  WHERE r <= n - ({_PF_TAU_NUM} * n + {_PF_TAU_DEN} - 1) // {_PF_TAU_DEN} + 1
-),
-full_pairs AS (
-  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-  FROM toks a JOIN toks b ON b.tok = a.tok AND a.doc_id < b.doc_id
-),
-pref_pairs AS (
-  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-  FROM prefix a JOIN prefix b ON b.tok = a.tok AND a.doc_id < b.doc_id
-),
-inter AS (
-  SELECT a.doc_id AS a, b.doc_id AS b, COUNT(*) AS ni
-  FROM toks a JOIN toks b ON b.tok = a.tok AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-true_pairs AS (
-  SELECT inter.a, inter.b
-  FROM inter JOIN sz za ON za.doc_id = inter.a JOIN sz zb ON zb.doc_id = inter.b
-  WHERE {_PF_TAU_DEN} * ni >= {_PF_TAU_NUM} * (za.n + zb.n - ni)
-),
-missed AS (
-  SELECT * FROM true_pairs tp WHERE NOT EXISTS
-    (SELECT 1 FROM pref_pairs pp WHERE pp.a = tp.a AND pp.b = tp.b)
-)
-SELECT (SELECT COUNT(*) FROM sz) AS n_docs,
-       (SELECT COUNT(*) FROM full_pairs) AS n_full,
-       (SELECT COUNT(*) FROM pref_pairs) AS n_prefix,
-       (SELECT COUNT(*) FROM true_pairs) AS n_true,
-       (SELECT COUNT(*) FROM missed) AS n_missed,
-       CAST((1000000 * (SELECT COUNT(*) FROM pref_pairs))
-            // (SELECT COUNT(*) FROM full_pairs) AS BIGINT) AS candidate_ratio_ppm
-"""
-
-
-# --- case-folding collision census ----------------------------------------------
-
-
-def case_folding_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Case-folding collision census (the normalization audit a
-    tokenizer publishes before folding: how many RAW surface forms
-    collapse per folded form, and how much token mass rides on
-    collided forms): raw whitespace tokens (no lowercasing) fold via
-    lower(); per folded form the distinct raw variants; rolled up to
-    one row — vocabulary before/after, collided forms, worst class,
-    and collided token mass ppm.
-
-    Scale shape: two vocabulary censuses (raw, folded) — the
-    canonical normalization-planning shape."""
-    raw = _docs(spark, sf_dir).select(
-        F.explode(
-            F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
-        ).alias("rawtok")
-    )
-    per_raw = raw.groupBy("rawtok").agg(F.count(F.lit(1)).alias("f"))
-    folded = per_raw.groupBy(F.lower("rawtok").alias("ftok")).agg(
-        F.count(F.lit(1)).alias("n_variants"),
-        F.sum("f").alias("mass"),
-    )
-    return folded.agg(
-        F.sum("n_variants").alias("raw_vocab"),
-        F.count(F.lit(1)).alias("folded_vocab"),
-        F.sum(F.when(F.col("n_variants") > 1, 1).otherwise(0)).alias(
-            "collided_forms"
-        ),
-        F.max("n_variants").alias("max_variants"),
-        F.sum("mass").alias("total_mass"),
-        F.coalesce(
-            F.sum(F.when(F.col("n_variants") > 1, F.col("mass"))), F.lit(0)
-        ).alias("collided_mass"),
-    ).select(
-        "*",
-        F.expr(
-            "CAST(div(1000000 * collided_mass, total_mass) AS BIGINT)"
-        ).alias("collided_mass_ppm"),
-    )
-
-
-def case_folding_census_sql() -> str:
-    return """
-WITH raw AS (
-  SELECT unnest(list_filter(string_split_regex(trim(text), '\\s+'), t -> t <> '')) AS rawtok
-  FROM documents
-),
-per_raw AS (SELECT rawtok, COUNT(*) AS f FROM raw GROUP BY rawtok),
-folded AS (
-  SELECT lower(rawtok) AS ftok, COUNT(*) AS n_variants, SUM(f) AS mass
-  FROM per_raw GROUP BY ftok
-)
-SELECT CAST(SUM(n_variants) AS BIGINT) AS raw_vocab,
-       COUNT(*) AS folded_vocab,
-       CAST(SUM(CASE WHEN n_variants > 1 THEN 1 ELSE 0 END) AS BIGINT) AS collided_forms,
-       CAST(MAX(n_variants) AS BIGINT) AS max_variants,
-       CAST(SUM(mass) AS BIGINT) AS total_mass,
-       CAST(COALESCE(SUM(CASE WHEN n_variants > 1 THEN mass END), 0) AS BIGINT) AS collided_mass,
-       CAST((1000000 * COALESCE(SUM(CASE WHEN n_variants > 1 THEN mass END), 0)) // SUM(mass) AS BIGINT) AS collided_mass_ppm
-FROM folded
-"""
-
-
-# --- SymSpell delete-1 neighborhood blocking ------------------------------------
-
-
-def symspell_block(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SymSpell delete-neighborhood blocking (Garbe's symmetric-delete
-    trick, the industry spell-correction index): every vocabulary term
-    emits itself plus its |w| delete-1 variants; two terms are
-    candidates when their variant sets intersect (covers all edit
-    distance <= 1 and the delete-delete half of distance 2 with only
-    O(|w|) keys per term — no alphabet-size fanout), then the exact
-    Levenshtein (both engines' native implementation) verifies <= 1.
-    Census: vocabulary, candidate pairs, verified pairs, all-pairs
-    baseline C(V,2), and the candidate-reduction ratio in ppm.
-
-    Scale shape: a bounded |w|+1-key explode per term + one key
-    equi-join — the all-pairs edit-distance join becomes linear
-    fan-out, the reason SymSpell exists."""
-    vocab = (
-        _docs(spark, sf_dir)
-        .select(F.explode(_clean_words()).alias("term"))
-        .distinct()
-        .where(F.length("term") >= 3)
-    )
-    variants = vocab.select(
-        "term",
-        F.explode(
-            F.expr(
-                "array_union(array(term),"
-                " transform(sequence(1, length(term)),"
-                "  i -> concat(substring(term, 1, CAST(i - 1 AS INT)),"
-                "              substring(term, CAST(i + 1 AS INT), length(term)))))"
-            )
-        ).alias("v"),
-    ).distinct()
-    a = variants.select(F.col("term").alias("ta"), "v")
-    b = variants.select(F.col("term").alias("tb"), "v")
-    cand = (
-        a.join(b, "v").where(F.col("ta") < F.col("tb")).select("ta", "tb").distinct()
-    )
-    ver = cand.where(F.expr("levenshtein(ta, tb) <= 1"))
-    nv = vocab.agg(F.count(F.lit(1)).alias("vocab"))
-    nc = cand.agg(F.count(F.lit(1)).alias("cand_pairs"))
-    nr = ver.agg(
-        F.count(F.lit(1)).alias("verified_pairs"),
-        F.coalesce(F.sum(F.length("ta") + F.length("tb")), F.lit(0)).alias(
-            "pair_len_checksum"
-        ),
-    )
-    one = nv.crossJoin(nc).crossJoin(nr)
-    return one.select(
-        "vocab", "cand_pairs", "verified_pairs", "pair_len_checksum",
-        F.expr("div(vocab * (vocab - 1), 2)").alias("all_pairs"),
-        F.expr(
-            "CAST(div(1000000 * cand_pairs, div(vocab * (vocab - 1), 2)) AS BIGINT)"
-        ).alias("cand_ratio_ppm"),
-    )
-
-
-def symspell_block_sql() -> str:
-    return f"""
-WITH vocab AS (
-  SELECT DISTINCT unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term
-  FROM documents
-),
-v3 AS (SELECT term FROM vocab WHERE length(term) >= 3),
-variants AS (
-  SELECT DISTINCT term, v FROM (
-    SELECT term, unnest(list_concat([term],
-      list_transform(range(1, length(term) + 1),
-        i -> substring(term, 1, CAST(i - 1 AS INT))
-             || substring(term, CAST(i + 1 AS INT), length(term))))) AS v
-    FROM v3
-  )
-),
-cand AS (
-  SELECT DISTINCT a.term AS ta, b.term AS tb
-  FROM variants a JOIN variants b ON b.v = a.v AND a.term < b.term
-),
-ver AS (
-  SELECT * FROM cand WHERE levenshtein(ta, tb) <= 1
-),
-nv AS (SELECT COUNT(*) AS vocab FROM v3),
-nc AS (SELECT COUNT(*) AS cand_pairs FROM cand),
-nr AS (
-  SELECT COUNT(*) AS verified_pairs,
-         COALESCE(SUM(length(ta) + length(tb)), 0) AS pair_len_checksum
-  FROM ver
-)
-SELECT CAST(vocab AS BIGINT) AS vocab,
-       CAST(cand_pairs AS BIGINT) AS cand_pairs,
-       CAST(verified_pairs AS BIGINT) AS verified_pairs,
-       CAST(pair_len_checksum AS BIGINT) AS pair_len_checksum,
-       CAST(vocab * (vocab - 1) // 2 AS BIGINT) AS all_pairs,
-       CAST((1000000 * cand_pairs) // (vocab * (vocab - 1) // 2) AS BIGINT) AS cand_ratio_ppm
-FROM nv, nc, nr
-"""
-
-
-# --- palindromic-substring census -----------------------------------------------
-
-_PAL_PREFIX = 32
-
-
-def palindrome_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Palindromic-substring census over each document's first 32
-    characters (the stringology classic, computed definitionally: a
-    substring is a palindrome iff it equals its reverse — one
-    vectorized reverse+compare per (start, length) candidate, O(L^2)
-    bounded candidates per doc, no Manacher state): per doc the
-    longest palindrome length >= 2, its earliest start, and the count
-    of palindromic substrings of length >= 3.
-
-    Scale shape: bounded explode (L^2/2 candidates) + codegen'd
-    reverse/substring compares + one doc census."""
-    L = F.least(F.char_length(F.col("text")), F.lit(_PAL_PREFIX))
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.lower(F.substring(F.col("text"), 1, _PAL_PREFIX)).alias("s"),
-        L.alias("len"),
-    )
-    cand = d.select(
-        "doc_id", "len", "s",
-        F.explode(F.expr("sequence(1, greatest(len, 1))")).alias("i"),
-    ).select(
-        "doc_id", "len", "s", "i",
-        F.explode(F.expr("sequence(2, greatest(len - i + 1, 2))")).alias("m"),
-    ).where(F.col("i") + F.col("m") - 1 <= F.col("len"))
-    pal = cand.where(
-        F.expr("substring(s, CAST(i AS INT), CAST(m AS INT))"
-               " = reverse(substring(s, CAST(i AS INT), CAST(m AS INT)))")
-    )
-    best = pal.groupBy("doc_id").agg(F.max("m").alias("max_pal"))
-    arg = (
-        pal.join(best, "doc_id")
-        .where(F.col("m") == F.col("max_pal"))
-        .groupBy("doc_id")
-        .agg(F.min("i").alias("best_start"), F.max("max_pal").alias("max_pal"))
-    )
-    n3 = pal.where(F.col("m") >= 3).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_pal3")
-    )
-    out = (
-        d.select("doc_id", "len")
-        .join(arg, "doc_id", "left")
-        .join(n3, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("len").cast("long").alias("prefix_len"),
-            F.coalesce(F.col("max_pal"), F.lit(1)).cast("long").alias("max_pal"),
-            F.coalesce(F.col("best_start"), F.lit(0)).cast("long").alias("best_start"),
-            F.coalesce(F.col("n_pal3"), F.lit(0)).cast("long").alias("n_pal3"),
-        )
-    )
-    return out.repartition(1).sortWithinPartitions("doc_id")
-
-
-def palindrome_census_sql() -> str:
-    n = _PAL_PREFIX
-    return f"""
-WITH d AS (
-  SELECT doc_id, lower(substring(text, 1, {n})) AS s,
-         least(length(text), {n}) AS len
-  FROM documents
-),
-cand AS (
-  SELECT doc_id, len, s, i, m
-  FROM d,
-       unnest(range(1, greatest(len, 1) + 1)) t(i),
-       unnest(range(2, greatest(len, 2) + 1)) u(m)
-  WHERE i + m - 1 <= len
-),
-pal AS (
-  SELECT doc_id, i, m FROM cand
-  WHERE substring(s, CAST(i AS INT), CAST(m AS INT))
-        = reverse(substring(s, CAST(i AS INT), CAST(m AS INT)))
-),
-best AS (SELECT doc_id, MAX(m) AS max_pal FROM pal GROUP BY doc_id),
-arg AS (
-  SELECT p.doc_id, MIN(i) AS best_start, MAX(best.max_pal) AS max_pal
-  FROM pal p JOIN best ON best.doc_id = p.doc_id AND p.m = best.max_pal
-  GROUP BY p.doc_id
-),
-n3 AS (SELECT doc_id, COUNT(*) AS n_pal3 FROM pal WHERE m >= 3 GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(len AS BIGINT) AS prefix_len,
-       CAST(COALESCE(max_pal, 1) AS BIGINT) AS max_pal,
-       CAST(COALESCE(best_start, 0) AS BIGINT) AS best_start,
-       CAST(COALESCE(n_pal3, 0) AS BIGINT) AS n_pal3
-FROM d
-LEFT JOIN arg ON arg.doc_id = d.doc_id
-LEFT JOIN n3 ON n3.doc_id = d.doc_id
-ORDER BY d.doc_id
-"""
-
-
-# --- evaluation learning curve: kappa at nested sample sizes --------------------
-
-_LC_SIZES = (50, 100, 200, 400)
-
-
-def learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evaluation learning curve (how agreement stabilizes with eval
-    size — the power-analysis table an eval harness publishes before
-    anyone trusts a metric): Cohen's-kappa components between the
-    planted language label and the lang_id heuristic at NESTED sample
-    sizes 50/100/200/400, the nesting fixed by a 40-bit hash rank of
-    doc_id (rerunnable, order-free). Per size: n, observed diagonal,
-    chance sum, and sign-aware kappa ppm — same exact arithmetic as
-    cohens_kappa, resolved per size.
-
-    Scale shape: one hash-rank window + a (size x |L|^2) census via a
-    bounded size-explode — evaluation-sized, not corpus-sized."""
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
-    pred = lang_id(spark, sf_dir).select("doc_id", "pred_lang")
-    base = pred.join(d, "doc_id").select(
-        "doc_id", "lang", "pred_lang",
-        F.row_number()
-        .over(Window.orderBy(h40(F.col("doc_id").cast("string")), "doc_id"))
-        .alias("rk"),
-    )
-    sizes = F.array(*[F.lit(x) for x in _LC_SIZES])
-    x = base.select(
-        "lang", "pred_lang", "rk", F.explode(sizes).alias("size")
-    ).where(F.col("rk") <= F.col("size"))
-    cm = x.groupBy("size", "lang", "pred_lang").agg(F.count(F.lit(1)).alias("c"))
-    tot = cm.groupBy("size").agg(
-        F.sum("c").alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("lang") == F.col("pred_lang"), F.col("c"))), F.lit(0)
-        ).alias("diag"),
-    )
-    rows = cm.groupBy("size", "lang").agg(F.sum("c").alias("rn"))
-    cols = cm.groupBy("size", "pred_lang").agg(F.sum("c").alias("cn"))
-    S = (
-        rows.join(
-            cols,
-            (rows["size"] == cols["size"]) & (rows["lang"] == cols["pred_lang"]),
-        )
-        .drop(cols["size"])
-        .groupBy("size")
-        .agg(F.coalesce(F.sum(F.col("rn") * F.col("cn")), F.lit(0)).alias("s"))
-    )
-    one = tot.join(S, "size")
-    return (
-        one.select(
-            F.col("size").cast("long").alias("size"),
-            F.col("n").cast("long").alias("n_docs"),
-            F.col("diag").cast("long").alias("sum_diag"),
-            F.col("s").cast("long").alias("chance_sum"),
-            F.expr(
-                "CAST(CASE WHEN n * n - s = 0 THEN 0 ELSE"
-                " CAST(sign(n * diag - s) AS BIGINT)"
-                " * div(1000000 * abs(n * diag - s), n * n - s) END AS BIGINT)"
-            ).alias("kappa_ppm"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("size")
-    )
-
-
-def learning_curve_sql() -> str:
-    h = _SQL_H40.format(s="CAST(doc_id AS VARCHAR)")
-    sizes = ", ".join(str(x) for x in _LC_SIZES)
-    return f"""
-WITH pred AS ({lang_id_sql()}),
-base AS (
-  SELECT d.doc_id, d.lang, p.pred_lang,
-         row_number() OVER (ORDER BY {h}, doc_id) AS rk
-  FROM pred p JOIN documents d USING (doc_id)
-),
-x AS (
-  SELECT lang, pred_lang, size
-  FROM base, unnest([{sizes}]) t(size)
-  WHERE rk <= size
-),
-cm AS (
-  SELECT size, lang, pred_lang, COUNT(*) AS c FROM x GROUP BY ALL
-),
-tot AS (
-  SELECT size, SUM(c) AS n,
-         COALESCE(SUM(CASE WHEN lang = pred_lang THEN c END), 0) AS diag
-  FROM cm GROUP BY size
-),
-r AS (SELECT size, lang, SUM(c) AS rn FROM cm GROUP BY size, lang),
-cl AS (SELECT size, pred_lang, SUM(c) AS cn FROM cm GROUP BY size, pred_lang),
-sx AS (
-  SELECT r.size, COALESCE(SUM(rn * cn), 0) AS s
-  FROM r JOIN cl ON cl.size = r.size AND cl.pred_lang = r.lang
-  GROUP BY r.size
-)
-SELECT CAST(tot.size AS BIGINT) AS size,
-       CAST(n AS BIGINT) AS n_docs,
-       CAST(diag AS BIGINT) AS sum_diag,
-       CAST(s AS BIGINT) AS chance_sum,
-       CAST(CASE WHEN n * n - s = 0 THEN 0 ELSE
-            CAST(sign(n * diag - s) AS BIGINT)
-            * ((1000000 * abs(n * diag - s)) // (n * n - s)) END AS BIGINT) AS kappa_ppm
-FROM tot JOIN sx ON sx.size = tot.size
-ORDER BY size
-"""
-
-
-# --- ranking exposure-share fairness census -------------------------------------
-
-_EXP_TOP = 100
-# Position weights 1/log2(pos+1) in parts-per-billion, precomputed once
-# here and embedded in both engines — the DCG discount without libm.
-_EXP_PPB = [round(1e9 / math.log2(p + 1)) for p in range(1, _EXP_TOP + 1)]
-
-
-def exposure_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking exposure-share fairness census (Singh & Joachims 2018:
-    exposure ~ the DCG position discount, here the shared integer ppb
-    table so both engines weigh positions identically): documents
-    ranked by (n_chars desc, doc_id) — any deterministic relevance
-    proxy exercises the same surface — and each SOURCE's share of the
-    top-100 exposure mass is reported exactly: slots held, exposure
-    ppb, share ppm, and the uniform-share baseline for the
-    disparity read.
-
-    Scale shape: one global top-k window over the doc dim + a source
-    census; the weight table is a 100-element broadcast literal."""
-    d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    arr = F.array(*[F.lit(v) for v in _EXP_PPB])
-    # TakeOrderedAndProject top-k first (no global sort at corpus
-    # scale); positions are assigned on the k surviving rows only.
-    w = Window.orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-    top = (
-        d.orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-        .limit(_EXP_TOP)
-        .select("doc_id", "source", "n_chars")
-        .select("source", F.row_number().over(w).alias("pos"))
-        .select("source", F.element_at(arr, F.col("pos")).alias("wt"))
-    )
-    tot = top.agg(F.sum("wt").alias("total_ppb"))
-    return (
-        top.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("slots"), F.sum("wt").alias("exposure_ppb"))
-        .crossJoin(tot)
-        .select(
-            "source", "slots", "exposure_ppb",
-            F.expr("CAST(div(1000000 * exposure_ppb, total_ppb) AS BIGINT)").alias(
-                "share_ppm"
-            ),
-            F.expr(f"CAST(div(1000000 * slots, {_EXP_TOP}) AS BIGINT)").alias(
-                "slot_share_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("source")
-    )
-
-
-def exposure_share_sql() -> str:
-    weights = ", ".join(str(v) for v in _EXP_PPB)
-    return f"""
-WITH ranked AS (
-  SELECT source,
-         row_number() OVER (ORDER BY n_chars DESC, doc_id) AS pos
-  FROM documents
-),
-top AS (
-  SELECT source, ([{weights}])[pos] AS wt FROM ranked WHERE pos <= {_EXP_TOP}
-),
-tot AS (SELECT SUM(wt) AS total_ppb FROM top)
-SELECT source, COUNT(*) AS slots,
-       CAST(SUM(wt) AS BIGINT) AS exposure_ppb,
-       CAST((1000000 * SUM(wt)) // (SELECT total_ppb FROM tot) AS BIGINT) AS share_ppm,
-       CAST((1000000 * COUNT(*)) // {_EXP_TOP} AS BIGINT) AS slot_share_ppm
-FROM top GROUP BY source ORDER BY source
-"""
-
-
-# --- source-level Jaccard: MinHash estimate vs exact ----------------------------
-
-
-def source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-level vocabulary similarity matrix, exact AND
-    MinHash-estimated on the same rows (the sketch-accuracy audit
-    lifted from documents to GROUPS — how a curation pipeline decides
-    which crawls duplicate each other without materializing vocab
-    sets): per source pair the exact vocabulary Jaccard (integer
-    num/den from a token join) next to the 16-permutation MinHash
-    match count (the estimator's numerator over 16) — the estimator
-    error is read directly off the two columns.
-
-    Scale shape: source vocabularies are token censuses; the exact
-    side joins distinct (source, token) pairs; the sketch side is 16
-    min-aggregates per source then a 20x20 signature compare."""
-    st = (
-        _docs(spark, sf_dir)
-        .select("source", F.explode(F.array_distinct(_clean_words())).alias("tok"))
-        .distinct()
-    )
-    sizes = st.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    a = st.select(F.col("source").alias("sa"), "tok")
-    b = st.select(F.col("source").alias("sb"), "tok")
-    inter = (
-        a.join(b, "tok")
-        .where(F.col("sa") < F.col("sb"))
-        .groupBy("sa", "sb")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    za = sizes.select(F.col("source").alias("sa"), F.col("n").alias("na"))
-    zb = sizes.select(F.col("source").alias("sb"), F.col("n").alias("nb"))
-    exact = inter.join(za, "sa").join(zb, "sb")
-    sig = st.select(
-        "source", h40(F.col("tok")).alias("h")
-    ).groupBy("source").agg(
-        *[
-            F.min((F.lit(MH_A[k]) * F.col("h") + F.lit(MH_B[k])) % F.lit(MH_P)).alias(
-                f"m{k}"
-            )
-            for k in range(MH_K)
-        ]
-    )
-    s1 = sig.select(F.col("source").alias("sa"), *[F.col(f"m{k}").alias(f"a{k}") for k in range(MH_K)])
-    s2 = sig.select(F.col("source").alias("sb"), *[F.col(f"m{k}").alias(f"b{k}") for k in range(MH_K)])
-    match = sum(
-        F.when(F.col(f"a{k}") == F.col(f"b{k}"), 1).otherwise(0) for k in range(MH_K)
-    )
-    est = s1.crossJoin(s2).where(F.col("sa") < F.col("sb")).select(
-        "sa", "sb", match.alias("mh_matches")
-    )
-    return (
-        exact.join(est, ["sa", "sb"])
-        .select(
-            "sa", "sb", "ni", "na", "nb",
-            F.expr("CAST(div(1000000 * ni, na + nb - ni) AS BIGINT)").alias(
-                "jaccard_ppm"
-            ),
-            F.col("mh_matches").cast("long").alias("mh_matches"),
-            F.expr(f"CAST(div(1000000 * mh_matches, {MH_K}) AS BIGINT)").alias(
-                "mh_est_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("sa", "sb")
-    )
-
-
-def source_jaccard_sql() -> str:
-    h = _SQL_H40.format(s="tok")
-    mh = ",\n         ".join(
-        f"MIN(({MH_A[k]} * {h} + {MH_B[k]}) % {MH_P}) AS m{k}" for k in range(MH_K)
-    )
-    match = " + ".join(
-        f"CASE WHEN s1.m{k} = s2.m{k} THEN 1 ELSE 0 END" for k in range(MH_K)
-    )
-    return f"""
-WITH st AS (
-  SELECT DISTINCT source,
-         unnest(list_distinct(list_filter({_SQL_WS}, t -> t <> ''))) AS tok
-  FROM documents
-),
-sizes AS (SELECT source, COUNT(*) AS n FROM st GROUP BY source),
-inter AS (
-  SELECT a.source AS sa, b.source AS sb, COUNT(*) AS ni
-  FROM st a JOIN st b ON b.tok = a.tok AND a.source < b.source
-  GROUP BY sa, sb
-),
-sig AS (
-  SELECT source,
-         {mh}
-  FROM st GROUP BY source
-),
-est AS (
-  SELECT s1.source AS sa, s2.source AS sb, {match} AS mh_matches
-  FROM sig s1 JOIN sig s2 ON s1.source < s2.source
-)
-SELECT inter.sa, inter.sb,
-       CAST(ni AS BIGINT) AS ni,
-       CAST(za.n AS BIGINT) AS na,
-       CAST(zb.n AS BIGINT) AS nb,
-       CAST((1000000 * ni) // (za.n + zb.n - ni) AS BIGINT) AS jaccard_ppm,
-       CAST(mh_matches AS BIGINT) AS mh_matches,
-       CAST((1000000 * mh_matches) // {MH_K} AS BIGINT) AS mh_est_ppm
-FROM inter
-JOIN sizes za ON za.source = inter.sa
-JOIN sizes zb ON zb.source = inter.sb
-JOIN est ON est.sa = inter.sa AND est.sb = inter.sb
-ORDER BY inter.sa, inter.sb
-"""
-
-
-# --- n-gram release suppression audit -------------------------------------------
-
-_SUPP_KS = (2, 5, 10)
-
-
-def ngram_suppression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram release suppression audit (the k-threshold rule of every
-    public n-gram corpus: drop types with count < k): bigram counts
-    over the corpus, and per threshold k in {2, 5, 10} the surviving
-    type count, surviving token mass, and both in ppm of the
-    unsuppressed totals — the privacy/utility frontier a language-model
-    data release publishes.
-
-    Scale shape: one bigram census + a 3-row threshold sweep over the
-    aggregated type table."""
-    ws = _clean_words()
-    bg = (
-        _docs(spark, sf_dir)
-        .select(ws.alias("ws"))
-        .where(F.size("ws") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1),"
-                    " i -> concat(ws[i - 1], ' ', ws[i]))"
-                )
-            ).alias("bigram")
-        )
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    ks = spark.createDataFrame([(k,) for k in _SUPP_KS], "k long")
-    tot = bg.agg(
-        F.count(F.lit(1)).alias("types"), F.sum("c").alias("mass")
-    )
-    sweep = (
-        ks.crossJoin(bg)
-        .groupBy("k")
-        .agg(
-            F.sum(F.when(F.col("c") >= F.col("k"), 1).otherwise(0)).alias(
-                "kept_types"
-            ),
-            F.sum(F.when(F.col("c") >= F.col("k"), F.col("c"))).alias("kept_mass"),
-        )
-        .crossJoin(tot)
-    )
-    return (
-        sweep.select(
-            "k", "kept_types",
-            F.coalesce(F.col("kept_mass"), F.lit(0)).alias("kept_mass"),
-            "types", "mass",
-            F.expr("CAST(div(1000000 * kept_types, types) AS BIGINT)").alias(
-                "type_ppm"
-            ),
-            F.expr(
-                "CAST(div(1000000 * coalesce(kept_mass, 0), mass) AS BIGINT)"
-            ).alias("mass_ppm"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("k")
-    )
-
-
-def ngram_suppression_sql() -> str:
-    ks = ", ".join(f"({k})" for k in _SUPP_KS)
-    return f"""
-WITH w AS (SELECT list_filter({_SQL_WS}, t -> t <> '') AS ws FROM documents),
-bg AS (
-  SELECT ws[i] || ' ' || ws[i + 1] AS bigram, COUNT(*) AS c
-  FROM w, unnest(range(1, len(ws))) t(i)
-  GROUP BY bigram
-),
-tot AS (SELECT COUNT(*) AS types, SUM(c) AS mass FROM bg),
-ks AS (SELECT * FROM (VALUES {ks}) AS t(k)),
-sweep AS (
-  SELECT k,
-         SUM(CASE WHEN c >= k THEN 1 ELSE 0 END) AS kept_types,
-         COALESCE(SUM(CASE WHEN c >= k THEN c END), 0) AS kept_mass
-  FROM ks, bg GROUP BY k
-)
-SELECT CAST(k AS BIGINT) AS k,
-       CAST(kept_types AS BIGINT) AS kept_types,
-       CAST(kept_mass AS BIGINT) AS kept_mass,
-       CAST(types AS BIGINT) AS types,
-       CAST(mass AS BIGINT) AS mass,
-       CAST((1000000 * kept_types) // types AS BIGINT) AS type_ppm,
-       CAST((1000000 * kept_mass) // mass AS BIGINT) AS mass_ppm
-FROM sweep, tot ORDER BY k
-"""
-
-
-# --- LIKE-pattern selectivity estimator audit -----------------------------------
-
-_LIKE_PATTERNS = ("val", "tab", "spark", "row sc")
-
-
-def like_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring (LIKE '%p%') selectivity estimator audit — the
-    q-gram independence model every optimizer without full-text
-    statistics falls back on: a pattern's estimated selectivity is
-    the PRODUCT of its character-trigrams' document frequencies over
-    N (independence assumption), audited against the exact match
-    count. Estimates stay integer via INTERLEAVED floor division —
-    acc <- (acc * df_i) div N starting from acc = 10^6 — so every
-    intermediate is bounded by 10^6 * N and lives in int64 at any
-    gram count and any corpus size (a straight Π df / N^k overflows
-    DECIMAL(38)/HUGEINT once N^k passes ~1e38, and the two engines
-    overflow DIFFERENTLY: Spark nulls, DuckDB errors).  The
-    overestimate on correlated trigrams (inside one word) is the
-    textbook failure mode, measured here.
-
-    Scale shape: one doc-trigram census per pattern trigram (a tiny
-    IN-list probe) + one exact LIKE census — both map-only scans."""
-    d = _docs(spark, sf_dir).select("doc_id", F.lower("text").alias("t"))
-    n_docs = d.agg(F.count(F.lit(1)).alias("n"))
-    rows = []
-    for pat in _LIKE_PATTERNS:
-        grams = [pat[i : i + 3] for i in range(len(pat) - 2)] or [pat]
-        df_cols = [
-            F.sum(
-                F.when(F.col("t").contains(g), 1).otherwise(0)
-            ).alias(f"df{i}")
-            for i, g in enumerate(grams)
-        ]
-        agg = d.agg(
-            F.sum(F.when(F.col("t").contains(pat), 1).otherwise(0)).alias("exact"),
-            *df_cols,
-        ).crossJoin(n_docs)
-        est = "CAST(1000000 AS BIGINT)"
-        for i in range(len(grams)):
-            est = f"div(({est}) * df{i}, n)"
-        rows.append(
-            agg.select(
-                F.lit(pat).alias("pattern"),
-                F.lit(len(grams)).cast("long").alias("n_grams"),
-                F.col("exact").cast("long").alias("exact_matches"),
-                F.expr(f"CAST(div(1000000 * exact, n) AS BIGINT)").alias("exact_ppm"),
-                F.expr(f"CAST({est} AS BIGINT)").alias("est_ppm"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.repartition(1).sortWithinPartitions("pattern")
-
-
-def like_selectivity_sql() -> str:
-    parts = []
-    for pat in _LIKE_PATTERNS:
-        grams = [pat[i : i + 3] for i in range(len(pat) - 2)] or [pat]
-        dfs = ",\n         ".join(
-            f"SUM(CASE WHEN t LIKE '%{g}%' THEN 1 ELSE 0 END) AS df{i}"
-            for i, g in enumerate(grams)
-        )
-        est = "CAST(1000000 AS BIGINT)"
-        for i in range(len(grams)):
-            est = f"(({est}) * df{i}) // n"
-        parts.append(f"""
-  SELECT '{pat}' AS pattern, CAST({len(grams)} AS BIGINT) AS n_grams,
-         CAST(exact AS BIGINT) AS exact_matches,
-         CAST((1000000 * exact) // n AS BIGINT) AS exact_ppm,
-         CAST({est} AS BIGINT) AS est_ppm
-  FROM (
-    SELECT SUM(CASE WHEN t LIKE '%{pat}%' THEN 1 ELSE 0 END) AS exact,
-           {dfs},
-           COUNT(*) AS n
-    FROM (SELECT lower(text) AS t FROM documents)
-  )""")
-    u = "\n  UNION ALL\n".join(parts)
-    return f"SELECT * FROM (\n{u}\n) ORDER BY pattern"
-
-
-# --- Yule's K lexical-richness census -------------------------------------------
-
-
-def yules_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Yule's characteristic K (Yule 1944, the repeat-rate lexical
-    richness constant), EXACT from the frequency-of-frequencies
-    table: K = 10^4 * (sum r^2 N_r - N) / N^2, reported with its
-    integer numerator and N^2 denominator plus the floor-divided
-    K x 100 (the conventional scale) — the vocabulary-richness gate a
-    corpus card quotes, no float entering.
-
-    Scale shape: the same two-level token census as good_turing,
-    closed by single-row arithmetic."""
-    tf = (
-        _docs(spark, sf_dir)
-        .select(F.explode(_clean_words()).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("r"))
-    )
-    return tf.agg(
-        F.sum("r").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab"),
-        F.sum(F.expr("r * r")).alias("sum_r2"),
-    ).select(
-        "n_tokens", "vocab", "sum_r2",
-        (F.col("sum_r2") - F.col("n_tokens")).alias("k_num"),
-        (F.col("n_tokens") * F.col("n_tokens")).alias("k_den"),
-        F.expr(
-            "CAST(div(1000000 * (sum_r2 - n_tokens), n_tokens * n_tokens)"
-            " AS BIGINT)"
-        ).alias("k_x100"),
-    )
-
-
-def yules_k_sql() -> str:
-    return f"""
-WITH tf AS (
-  SELECT term, COUNT(*) AS r
-  FROM (SELECT unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term FROM documents)
-  GROUP BY term
-)
-SELECT CAST(SUM(r) AS BIGINT) AS n_tokens,
-       COUNT(*) AS vocab,
-       CAST(SUM(r * r) AS BIGINT) AS sum_r2,
-       CAST(SUM(r * r) - SUM(r) AS BIGINT) AS k_num,
-       CAST(SUM(r) * SUM(r) AS BIGINT) AS k_den,
-       CAST((1000000 * (SUM(r * r) - SUM(r))) // (SUM(r) * SUM(r)) AS BIGINT) AS k_x100
-FROM tf
-"""
-
-
-# --- term burstiness (Church adaptation) census ---------------------------------
-
-
-def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Term burstiness census (Church & Gale adaptation: having seen a
-    word once in a document, the chance of seeing it AGAIN far exceeds
-    the global rate): for every term with df >= POSTINGS_MIN_DF, the
-    document frequency, the count of documents where it repeats
-    (tf >= 2), the adaptation rate P(repeat | occurred) in exact ppm,
-    and the global per-document occurrence baseline — the gap between
-    the two columns IS the burstiness, the signal topical terms show
-    and function words don't.
-
-    Scale shape: one (doc, term) census with tf, one term rollup."""
-    dt = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(_clean_words()).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    n_docs = dt.select("doc_id").distinct().count()
-    out = (
-        dt.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum(F.when(F.col("tf") >= 2, 1).otherwise(0)).alias("df_repeat"),
-            F.sum("tf").alias("cf"),
-        )
-        .where(F.col("df") >= POSTINGS_MIN_DF)
-    )
-    return (
-        out.select(
-            "term", "df", "df_repeat", "cf",
-            F.expr("CAST(div(1000000 * df_repeat, df) AS BIGINT)").alias(
-                "adaptation_ppm"
-            ),
-            F.expr(f"CAST(div(1000000 * df, {n_docs}) AS BIGINT)").alias(
-                "base_rate_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("term")
-    )
-
-
-def term_burstiness_sql() -> str:
-    return f"""
-WITH dt AS (
-  SELECT doc_id, term, COUNT(*) AS tf
-  FROM (SELECT doc_id, unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term
-        FROM documents)
-  GROUP BY doc_id, term
-),
-nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM dt),
-agg AS (
-  SELECT term, COUNT(*) AS df,
-         SUM(CASE WHEN tf >= 2 THEN 1 ELSE 0 END) AS df_repeat,
-         SUM(tf) AS cf
-  FROM dt GROUP BY term HAVING COUNT(*) >= {POSTINGS_MIN_DF}
-)
-SELECT term, CAST(df AS BIGINT) AS df,
-       CAST(df_repeat AS BIGINT) AS df_repeat,
-       CAST(cf AS BIGINT) AS cf,
-       CAST((1000000 * df_repeat) // df AS BIGINT) AS adaptation_ppm,
-       CAST((1000000 * df) // (SELECT n FROM nd) AS BIGINT) AS base_rate_ppm
-FROM agg ORDER BY term
-"""
-
-
-# --- consonant-vowel phonotactic pattern census ---------------------------------
-
-
-def cv_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Phonotactic CV-pattern census (the consonant/vowel skeleton
-    linguists profile corpora with): each vocabulary term maps
-    letter-by-letter to c/v (aeiouy = v, other letters = c, anything
-    else = x) via one translate() call, and the census reports each
-    pattern's type count, token mass, and a term-length checksum —
-    the shape inventory of the corpus lexicon.
-
-    Scale shape: one vocabulary census + map-only translate + one
-    pattern census."""
-    tf = (
-        _docs(spark, sf_dir)
-        .select(F.explode(_clean_words()).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    src = "abcdefghijklmnopqrstuvwxyz"
-    dst = "".join("v" if ch in "aeiouy" else "c" for ch in src)
-    pat = F.translate(F.col("term"), src, dst)
-    x = tf.select(
-        pat.alias("pattern"), "f", F.length("term").alias("ln")
-    ).where(~F.col("pattern").rlike("[^cv]"))
-    return (
-        x.groupBy("pattern")
-        .agg(
-            F.count(F.lit(1)).alias("n_types"),
-            F.sum("f").alias("token_mass"),
-            F.sum("ln").alias("len_checksum"),
-        )
-        .where(F.col("n_types") >= 2)
-        .repartition(1)
-        .sortWithinPartitions("pattern")
-    )
-
-
-def cv_patterns_sql() -> str:
-    src = "abcdefghijklmnopqrstuvwxyz"
-    dst = "".join("v" if ch in "aeiouy" else "c" for ch in src)
-    return f"""
-WITH tf AS (
-  SELECT term, COUNT(*) AS f
-  FROM (SELECT unnest(list_filter({_SQL_WS}, t -> t <> '')) AS term FROM documents)
-  GROUP BY term
-),
-x AS (
-  SELECT translate(term, '{src}', '{dst}') AS pattern, f, length(term) AS ln
-  FROM tf
-  WHERE NOT regexp_matches(translate(term, '{src}', '{dst}'), '[^cv]')
-)
-SELECT pattern,
-       COUNT(*) AS n_types,
-       CAST(SUM(f) AS BIGINT) AS token_mass,
-       CAST(SUM(ln) AS BIGINT) AS len_checksum
-FROM x GROUP BY pattern HAVING COUNT(*) >= 2
-ORDER BY pattern
-"""
-
-
-# --- b-bit MinHash accuracy tradeoff --------------------------------------------
-
-
-def bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """b-bit MinHash audit (Li & Konig 2010: store only the lowest bit
-    of each minhash and debias): per source pair, the exact vocabulary
-    Jaccard, the full 16-permutation estimate, the RAW 1-bit match
-    rate, and the debiased 1-bit estimate 2*(rate - 1/2) clamped at 0
-    — all ppm integers on the same rows, so the storage/accuracy
-    frontier (16x compression vs added variance) is read directly.
-
-    Scale shape: same censuses as source_jaccard + a 16-term bit
-    compare; the audit is pairs-of-groups sized."""
-    st = (
-        _docs(spark, sf_dir)
-        .select("source", F.explode(F.array_distinct(_clean_words())).alias("tok"))
-        .distinct()
-    )
-    sizes = st.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    a = st.select(F.col("source").alias("sa"), "tok")
-    b = st.select(F.col("source").alias("sb"), "tok")
-    inter = (
-        a.join(b, "tok")
-        .where(F.col("sa") < F.col("sb"))
-        .groupBy("sa", "sb")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    za = sizes.select(F.col("source").alias("sa"), F.col("n").alias("na"))
-    zb = sizes.select(F.col("source").alias("sb"), F.col("n").alias("nb"))
-    sig = st.select("source", h40(F.col("tok")).alias("h")).groupBy("source").agg(
-        *[
-            F.min((F.lit(MH_A[k]) * F.col("h") + F.lit(MH_B[k])) % F.lit(MH_P)).alias(
-                f"m{k}"
-            )
-            for k in range(MH_K)
-        ]
-    )
-    s1 = sig.select(
-        F.col("source").alias("sa"),
-        *[F.col(f"m{k}").alias(f"a{k}") for k in range(MH_K)],
-    )
-    s2 = sig.select(
-        F.col("source").alias("sb"),
-        *[F.col(f"m{k}").alias(f"b{k}") for k in range(MH_K)],
-    )
-    full = sum(
-        F.when(F.col(f"a{k}") == F.col(f"b{k}"), 1).otherwise(0) for k in range(MH_K)
-    )
-    bit = sum(
-        F.when((F.col(f"a{k}") % 2) == (F.col(f"b{k}") % 2), 1).otherwise(0)
-        for k in range(MH_K)
-    )
-    est = s1.crossJoin(s2).where(F.col("sa") < F.col("sb")).select(
-        "sa", "sb", full.alias("full_matches"), bit.alias("bit_matches")
-    )
-    return (
-        inter.join(za, "sa").join(zb, "sb").join(est, ["sa", "sb"])
-        .select(
-            "sa", "sb",
-            F.expr("CAST(div(1000000 * ni, na + nb - ni) AS BIGINT)").alias(
-                "jaccard_ppm"
-            ),
-            F.expr(f"CAST(div(1000000 * full_matches, {MH_K}) AS BIGINT)").alias(
-                "full_est_ppm"
-            ),
-            F.expr(f"CAST(div(1000000 * bit_matches, {MH_K}) AS BIGINT)").alias(
-                "bit_rate_ppm"
-            ),
-            F.expr(
-                f"CAST(greatest(div(2000000 * bit_matches, {MH_K}) - 1000000, 0)"
-                " AS BIGINT)"
-            ).alias("bit_est_ppm"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("sa", "sb")
-    )
-
-
-def bbit_minhash_sql() -> str:
-    h = _SQL_H40.format(s="tok")
-    mh = ",\n         ".join(
-        f"MIN(({MH_A[k]} * {h} + {MH_B[k]}) % {MH_P}) AS m{k}" for k in range(MH_K)
-    )
-    full = " + ".join(
-        f"CASE WHEN s1.m{k} = s2.m{k} THEN 1 ELSE 0 END" for k in range(MH_K)
-    )
-    bit = " + ".join(
-        f"CASE WHEN s1.m{k} % 2 = s2.m{k} % 2 THEN 1 ELSE 0 END"
-        for k in range(MH_K)
-    )
-    return f"""
-WITH st AS (
-  SELECT DISTINCT source,
-         unnest(list_distinct(list_filter({_SQL_WS}, t -> t <> ''))) AS tok
-  FROM documents
-),
-sizes AS (SELECT source, COUNT(*) AS n FROM st GROUP BY source),
-inter AS (
-  SELECT a.source AS sa, b.source AS sb, COUNT(*) AS ni
-  FROM st a JOIN st b ON b.tok = a.tok AND a.source < b.source
-  GROUP BY sa, sb
-),
-sig AS (
-  SELECT source,
-         {mh}
-  FROM st GROUP BY source
-),
-est AS (
-  SELECT s1.source AS sa, s2.source AS sb,
-         {full} AS full_matches,
-         {bit} AS bit_matches
-  FROM sig s1 JOIN sig s2 ON s1.source < s2.source
-)
-SELECT inter.sa, inter.sb,
-       CAST((1000000 * ni) // (za.n + zb.n - ni) AS BIGINT) AS jaccard_ppm,
-       CAST((1000000 * full_matches) // {MH_K} AS BIGINT) AS full_est_ppm,
-       CAST((1000000 * bit_matches) // {MH_K} AS BIGINT) AS bit_rate_ppm,
-       CAST(greatest((2000000 * bit_matches) // {MH_K} - 1000000, 0) AS BIGINT) AS bit_est_ppm
-FROM inter
-JOIN sizes za ON za.source = inter.sa
-JOIN sizes zb ON zb.source = inter.sb
-JOIN est ON est.sa = inter.sa AND est.sb = inter.sb
-ORDER BY inter.sa, inter.sb
-"""
-
-
-# --- stopword-profile drift between sources -------------------------------------
-
-
-def stopword_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-profile drift census (the cheap register/style
-    fingerprint: function-word frequencies are topic-free, so a
-    source whose stopword mix diverges from the corpus was crawled or
-    generated differently): per source, each STOPWORDS member's rate
-    in ppm of the source's tokens vs the corpus rate, reduced to the
-    L1 profile distance — the drift score in exact integers.
-
-    Scale shape: one (source, stopword) census + a broadcast corpus
-    profile join + a source rollup."""
-    toks = _docs(spark, sf_dir).select(
-        "source", F.explode(_clean_words()).alias("t")
-    )
-    tot_src = toks.groupBy("source").agg(F.count(F.lit(1)).alias("nt"))
-    sw = toks.where(F.col("t").isin(*STOPWORDS))
-    per = sw.groupBy("source", "t").agg(F.count(F.lit(1)).alias("c"))
-    corpus_tot = toks.agg(F.count(F.lit(1)).alias("gn"))
-    corpus_sw = sw.groupBy("t").agg(F.count(F.lit(1)).alias("gc"))
-    grid = tot_src.crossJoin(corpus_sw.crossJoin(corpus_tot))
-    filled = grid.join(per, ["source", "t"], "left").select(
-        "source", "t", "nt", "gn", "gc",
-        F.coalesce(F.col("c"), F.lit(0)).alias("c"),
-    )
-    x = filled.select(
-        "source",
-        F.abs(
-            F.expr("div(1000000 * c, nt) - div(1000000 * gc, gn)")
-        ).alias("d"),
-    )
-    return (
-        x.groupBy("source")
-        .agg(F.sum("d").alias("l1_drift_ppm"), F.count(F.lit(1)).alias("n_stopwords"))
-        .repartition(1)
-        .sortWithinPartitions("source")
-    )
-
-
-def stopword_drift_sql() -> str:
-    stop = ", ".join(f"'{w}'" for w in STOPWORDS)
-    return f"""
-WITH toks AS (
-  SELECT source, unnest(list_filter({_SQL_WS}, t -> t <> '')) AS t FROM documents
-),
-tot_src AS (SELECT source, COUNT(*) AS nt FROM toks GROUP BY source),
-sw AS (SELECT * FROM toks WHERE t IN ({stop})),
-per AS (SELECT source, t, COUNT(*) AS c FROM sw GROUP BY source, t),
-corpus_tot AS (SELECT COUNT(*) AS gn FROM toks),
-corpus_sw AS (SELECT t, COUNT(*) AS gc FROM sw GROUP BY t),
-grid AS (
-  SELECT source, nt, t, gc, gn FROM tot_src, corpus_sw, corpus_tot
-),
-filled AS (
-  SELECT grid.source, grid.t, nt, gn, gc, COALESCE(c, 0) AS c
-  FROM grid LEFT JOIN per ON per.source = grid.source AND per.t = grid.t
-)
-SELECT source,
-       CAST(SUM(abs((1000000 * c) // nt - (1000000 * gc) // gn)) AS BIGINT) AS l1_drift_ppm,
-       COUNT(*) AS n_stopwords
-FROM filled GROUP BY source ORDER BY source
-"""
-
-
-# --- per-source document-length bands (exact order statistics) ------------------
-
-
-def length_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source document-length bands by EXACT discrete order
-    statistics (the corpus-card table: how long are this source's
-    documents really?): for each source the count plus the lower
-    median and lower 90th percentile of n_chars — the value at rank
-    ceil(q * n), no interpolation, so both engines pick the identical
-    element.
-
-    Scale shape: one source-key rank window over the doc dim + two
-    rank picks per source."""
-    d = _docs(spark, sf_dir).select("source", "n_chars", "doc_id")
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    wn = Window.partitionBy("source")
-    x = d.select(
-        "source", "n_chars",
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    p50 = x.where(
-        F.col("rk") == F.expr("CAST(ceil(n / 2.0) AS BIGINT)")
-    ).select("source", F.col("n_chars").alias("p50_chars"), "n")
-    p90 = x.where(
-        F.col("rk") == F.expr("CAST(ceil(9 * n / 10.0) AS BIGINT)")
-    ).select(F.col("source").alias("s2"), F.col("n_chars").alias("p90_chars"))
-    return (
-        p50.join(p90, p50["source"] == p90["s2"])
-        .select(
-            "source", F.col("n").alias("n_docs"), "p50_chars", "p90_chars",
-            F.expr("CAST(div(1000000 * p90_chars, p50_chars) AS BIGINT)").alias(
-                "tail_ratio_ppm"
-            ),
-        )
-        .repartition(1)
-        .sortWithinPartitions("source")
-    )
-
-
-def length_bands_sql() -> str:
-    return """
-WITH x AS (
-  SELECT source, n_chars,
-         row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rk,
-         COUNT(*) OVER (PARTITION BY source) AS n
-  FROM documents
-),
-p50 AS (
-  SELECT source, n_chars AS p50_chars, n FROM x
-  WHERE rk = CAST(ceil(n / 2.0) AS BIGINT)
-),
-p90 AS (
-  SELECT source, n_chars AS p90_chars FROM x
-  WHERE rk = CAST(ceil(9 * n / 10.0) AS BIGINT)
-)
-SELECT p50.source, CAST(n AS BIGINT) AS n_docs,
-       CAST(p50_chars AS BIGINT) AS p50_chars,
-       CAST(p90_chars AS BIGINT) AS p90_chars,
-       CAST((1000000 * p90_chars) // p50_chars AS BIGINT) AS tail_ratio_ppm
-FROM p50 JOIN p90 ON p90.source = p50.source
-ORDER BY p50.source
-"""
-
-
-# --- weighted bottom-k corpus sample (Cohen-Kaplan sketch) ----------------------
-
-
-WBK_K = 200  # sample size
-
-
-def weighted_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted bottom-k corpus sample (Cohen & Kaplan
-    2007 "Summarizing data using bottom-k sketches" — the
-    coordinated-sampling analog of A-ES weighted reservoir sampling):
-    each doc's priority is the integer h40(doc_id) DIV weight (weight =
-    n_chars, so long documents sample proportionally more often); the
-    sample is the global bottom-k by (priority, doc_id).  Hash-based
-    priorities make the sample reshuffle-proof, reproducible across
-    engines, and COORDINATED: two corpora sampled with the same hash
-    share members in their overlap, which is what makes bottom-k
-    sketches unionable.  Emits the per-source census of the sample —
-    docs taken, weight mass taken, priority extremes, doc_id checksum.
-
-    Scale shape: the bottom-k is TakeOrdered (per-partition partial
-    top-k + driver merge of k·P candidates), never a global sort; the
-    census is a tiny groupBy.  At 10^12 docs this is the textbook
-    distributed sketch."""
-    d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
-    # integer div (never float `/` + cast: the double quotient can round
-    # up across the integer boundary where DuckDB's `//` floors)
-    scored = d.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        h40(F.col("doc_id").cast("string")).alias("hv"),
-        F.greatest(F.col("n_chars"), F.lit(1)).alias("wv"),
-    ).select(
-        "doc_id", "source", "n_chars", F.expr("div(hv, wv)").alias("prio")
-    )
-    sample = scored.orderBy("prio", "doc_id").limit(WBK_K)
-    return (
-        sample.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_sampled"),
-            F.sum("n_chars").alias("weight_taken"),
-            F.min("prio").alias("min_prio"),
-            F.max("prio").alias("max_prio"),
-            F.sum("doc_id").alias("doc_checksum"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("source")
-    )
-
-
-def weighted_bottomk_sample_sql() -> str:
-    h = "CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 10) AS BIGINT)"
-    return f"""
-WITH scored AS (
-  SELECT doc_id, source, n_chars,
-         {h} // greatest(n_chars, 1) AS prio
-  FROM documents
-),
-sample AS (
-  SELECT * FROM scored ORDER BY prio, doc_id LIMIT {WBK_K}
-)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_sampled,
-       CAST(SUM(n_chars) AS BIGINT) AS weight_taken,
-       CAST(MIN(prio) AS BIGINT) AS min_prio,
-       CAST(MAX(prio) AS BIGINT) AS max_prio,
-       CAST(SUM(doc_id) AS BIGINT) AS doc_checksum
-FROM sample GROUP BY source ORDER BY source
-"""
-
-
-# --- train/val/test split with exact-duplicate leakage audit --------------------
-
-
-def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split + cross-split exact-duplicate
-    leakage audit — the eval-integrity gate every corpus release runs
-    (eval contamination via duplicated documents is the canonical
-    benchmark-inflation bug): docs split 80/10/10 by h40(doc_id) % 10
-    (hash split = reshuffle-proof, join-free, stable under appends);
-    docs sharing an IDENTICAL text (md5) that land in different splits
-    are leakage.  Emits one row per ordered split pair with the number
-    of leaking duplicate groups and the number of leaking PAIRS
-    (Σ cnt_a·cnt_b over groups), plus each split's doc census.
-
-    Scale shape: one md5 groupBy with per-split conditional counts
-    (combiner-friendly), then a 3-row constant rollup — one shuffle
-    over the corpus at any scale."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.md5("text").alias("th"),
-        (h40(F.col("doc_id").cast("string")) % 10).alias("b"),
-    )
-    split = (
-        F.when(F.col("b") <= 7, F.lit("train"))
-        .when(F.col("b") == 8, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    g = d.withColumn("split", split).groupBy("th").agg(
-        F.sum((F.col("split") == "train").cast("long")).alias("ctr"),
-        F.sum((F.col("split") == "val").cast("long")).alias("cva"),
-        F.sum((F.col("split") == "test").cast("long")).alias("cte"),
-    )
-    pairs = [("train", "val", "ctr", "cva"), ("train", "test", "ctr", "cte"),
-             ("val", "test", "cva", "cte")]
-    outs = []
-    for sa, sb, ca, cb in pairs:
-        outs.append(
-            g.agg(
-                F.lit(sa).alias("split_a"),
-                F.lit(sb).alias("split_b"),
-                F.sum(((F.col(ca) > 0) & (F.col(cb) > 0)).cast("long")).alias(
-                    "leaking_groups"
-                ),
-                F.sum(F.col(ca) * F.col(cb)).alias("leaking_pairs"),
-                F.sum(F.col(ca)).alias("n_docs_a"),
-                F.sum(F.col(cb)).alias("n_docs_b"),
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res.repartition(1).sortWithinPartitions("split_a", "split_b")
-
-
-def split_leakage_sql() -> str:
-    h = "CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 10) AS BIGINT)"
-    return f"""
-WITH d AS (
-  SELECT doc_id, md5(text) AS th,
-         CASE WHEN ({h}) % 10 <= 7 THEN 'train'
-              WHEN ({h}) % 10 = 8 THEN 'val' ELSE 'test' END AS split
-  FROM documents
-),
-g AS (
-  SELECT th,
-         SUM(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS ctr,
-         SUM(CASE WHEN split = 'val' THEN 1 ELSE 0 END) AS cva,
-         SUM(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS cte
-  FROM d GROUP BY th
-)
-SELECT * FROM (
-  SELECT 'train' AS split_a, 'val' AS split_b,
-         CAST(SUM(CASE WHEN ctr > 0 AND cva > 0 THEN 1 ELSE 0 END) AS BIGINT) AS leaking_groups,
-         CAST(SUM(ctr * cva) AS BIGINT) AS leaking_pairs,
-         CAST(SUM(ctr) AS BIGINT) AS n_docs_a, CAST(SUM(cva) AS BIGINT) AS n_docs_b
-  FROM g
-  UNION ALL
-  SELECT 'train', 'test',
-         CAST(SUM(CASE WHEN ctr > 0 AND cte > 0 THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(SUM(ctr * cte) AS BIGINT),
-         CAST(SUM(ctr) AS BIGINT), CAST(SUM(cte) AS BIGINT)
-  FROM g
-  UNION ALL
-  SELECT 'val', 'test',
-         CAST(SUM(CASE WHEN cva > 0 AND cte > 0 THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(SUM(cva * cte) AS BIGINT),
-         CAST(SUM(cva) AS BIGINT), CAST(SUM(cte) AS BIGINT)
-  FROM g
-) ORDER BY split_a, split_b
 """

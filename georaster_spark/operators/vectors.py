@@ -53,6 +53,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.util import fan_out
+
 DIM = 64
 
 COS_TAU = 0.46  # near-dup threshold; >= 6e-4 from any sf0.01 pair value
@@ -73,8 +75,7 @@ def _planes() -> np.ndarray:
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textops import _fan_out
-    return _fan_out(_emb_scan(spark, sf_dir))
+    return fan_out(_emb_scan(spark, sf_dir))
 
 
 def _emb_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,7 +574,7 @@ def ann_sq8(
     overlap, and the corpus-level recall histogram.  Both rankings are
     pure int64 arithmetic with vec_id tie-break — bit-reproducible
     cross-engine, so the gate row is hash-exact (same accuracy-gate
-    pattern as lsh_recall_gate / sketch_accuracy).
+    pattern as sketch_accuracy).
 
     Plan shape: the dims agg above, then ONE block-GEMM pass in the
     ann_topk_brute grid (no counting job, no driver collect of vectors)
@@ -2006,9 +2007,7 @@ def ivf_cell_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell, label) count agg, argmax via max(struct) on the dims-sized
     relation — no windows over data-sized relations."""
     e = _emb_scan(spark, sf_dir).select("vec_id", "embedding", "label")
-    from .textops import _fan_out
-
-    coded = _with_ivf_cell(_fan_out(e).select("vec_id", "embedding"), nprobe=1)
+    coded = _with_ivf_cell(fan_out(e).select("vec_id", "embedding"), nprobe=1)
     j = coded.join(e.select("vec_id", "label"), "vec_id")
     cl = j.groupBy("cell", "label").agg(F.count(F.lit(1)).alias("c"))
     best = cl.groupBy("cell").agg(

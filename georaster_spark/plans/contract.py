@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .. import oracle_sql as osql
 from ..constants import DEFAULT_RES, DOMAIN, RES_SHIFT
 from ..functions import cells
+from ..functions.util import fan_out, h40
 from ..operators import georegister as geo
 from ..operators import relational as rel
 from ..operators import textops, vectors
@@ -40,13 +41,13 @@ def _fx(sf_dir: str) -> Path:
 
 
 def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same local-input parallelism guard as textops._docs: the sf-scale
+    # fan_out is the local-input parallelism guard: the sf-scale
     # images parquet is ONE ~30 MB file, which Spark's split math opens
     # as ~8 partitions — serializing every pixel-decode stage on a
     # quarter of a 32-core executor.  Catalyst prunes columns through
     # the round-robin exchange, so slim queries shuffle slim rows; at
     # production scale (thousands of files) the branch never fires.
-    return textops._fan_out(spark.read.parquet(str(_fx(sf_dir) / "images.parquet")))
+    return fan_out(spark.read.parquet(str(_fx(sf_dir) / "images.parquet")))
 
 
 def _zones(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8918,7 +8919,7 @@ def q_partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE combiner-friendly cell count agg; the rank and the
     rollup run on the OCCUPIED-CELL relation (dims-sized — the
-    single-partition-window policy of oov_rate/skew census)."""
+    single-partition-window policy of the skew census)."""
     from ..functions import cells
 
     tiles = geo.georegister(_images(spark, sf_dir))
@@ -13371,7 +13372,6 @@ def q_radix_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     b ∈ {{4, 8, 12}}, and each depth reports bucket count, min/max
     bucket size, and the max/ideal skew in ppm — the imbalance curve
     that decides shuffle partition counts at 10¹² rows."""
-    from ..operators.textops import h40
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         h40(F.col("doc_id").cast("string")).alias("hv")
@@ -14734,7 +14734,6 @@ def q_freivalds_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("i") != F.col("j"))
         & ((F.abs(F.col("ax") - F.col("bx")) + F.abs(F.col("ay") - F.col("by"))) <= _FV_D),
     ).select("i", "j")
-    from ..operators.textops import h40
 
     r = z.select(
         F.col("zone_id").alias("j"),
@@ -16198,45 +16197,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("user_sessions", rel.user_sessions, lambda *_: rel.user_sessions_sql()),
     ("sketch_accuracy", rel.sketch_accuracy, lambda *_: rel.sketch_accuracy_sql()),
     ("orders_exists_semi", rel.orders_exists_semi, lambda *_: rel.orders_exists_semi_sql()),
-    ("langid_confusion", textops.langid_confusion, lambda *_: textops.langid_confusion_sql()),
-    ("jaccard_pairs", textops.jaccard_pairs, lambda *_: textops.jaccard_pairs_sql()),
-    ("containment_pairs", textops.containment_pairs, lambda *_: textops.containment_pairs_sql()),
-    ("tfidf_topterms", textops.tfidf_topterms, lambda *_: textops.tfidf_topterms_sql()),
-    ("decontaminate", textops.decontaminate, lambda *_: textops.decontaminate_sql()),
-    ("passage_dedup", textops.passage_dedup, lambda *_: textops.passage_dedup_sql()),
-    ("doc_repetition", textops.doc_repetition, lambda *_: textops.doc_repetition_sql()),
-    ("collocations", textops.collocations, lambda *_: textops.collocations_sql()),
-    ("lsh_recall_gate", textops.lsh_recall_gate, lambda *_: textops.lsh_recall_gate_sql()),
-    ("source_quality_rollup", textops.source_quality_rollup,
-     lambda *_: textops.source_quality_rollup_sql()),
-    ("ngram_novelty", textops.ngram_novelty, lambda *_: textops.ngram_novelty_sql()),
-    ("pii_scan", textops.pii_scan, lambda *_: textops.pii_scan_sql()),
-    ("seq_packing", textops.seq_packing, lambda *_: textops.seq_packing_sql()),
-    ("url_domains", textops.url_domains, lambda *_: textops.url_domains_sql()),
-    ("oov_rate", textops.oov_rate, lambda *_: textops.oov_rate_sql()),
-    ("bpe_pair_census", textops.bpe_pair_census, lambda *_: textops.bpe_pair_census_sql()),
-    ("bm25_topk", textops.bm25_topk, lambda *_: textops.bm25_topk_sql()),
-    ("lm_doc_likelihood", textops.lm_doc_likelihood, lambda *_: textops.lm_doc_likelihood_sql()),
-    ("source_mixture_sample", textops.source_mixture_sample,
-     lambda *_: textops.source_mixture_sample_sql()),
-    ("dsir_importance", textops.dsir_importance, lambda *_: textops.dsir_importance_sql()),
-    ("chunking_audit", textops.chunking_audit, lambda *_: textops.chunking_audit_sql()),
-    ("winnowing_fp", textops.winnowing_fingerprint, lambda *_: textops.winnowing_fingerprint_sql()),
-    ("boilerplate_prefix", textops.boilerplate_prefix, lambda *_: textops.boilerplate_prefix_sql()),
-    ("cm_heavy_hitters", textops.cm_heavy_hitters, lambda *_: textops.cm_heavy_hitters_sql()),
-    ("cdc_chunking", textops.cdc_chunking, lambda *_: textops.cdc_chunking_sql()),
-    ("edit_distance_join", textops.edit_distance_join, lambda *_: textops.edit_distance_join_sql()),
-    ("vocab_growth", textops.vocab_growth, lambda *_: textops.vocab_growth_sql()),
-    ("bpe_merge_apply", textops.bpe_merge_apply, lambda *_: textops.bpe_merge_apply_sql()),
-    ("tfidf_doc_similarity", textops.tfidf_doc_similarity,
-     lambda *_: textops.tfidf_doc_similarity_sql()),
-    ("prefix_autocomplete", textops.prefix_autocomplete,
-     lambda *_: textops.prefix_autocomplete_sql()),
-    ("prf_expansion", textops.prf_expansion, lambda *_: textops.prf_expansion_sql()),
-    ("rrf_fusion", textops.rrf_fusion, lambda *_: textops.rrf_fusion_sql()),
-    ("zipf_slope", textops.zipf_slope, lambda *_: textops.zipf_slope_sql()),
-    ("dataset_split", textops.dataset_split, lambda *_: textops.dataset_split_sql()),
-    ("lcs_pairs", textops.lcs_pairs, lambda *_: textops.lcs_pairs_sql()),
     ("ann_topk_brute", vectors.ann_topk_brute, lambda *_: vectors.ann_topk_brute_sql()),
     ("ann_lsh", vectors.ann_lsh, lambda *_: vectors.ann_lsh_sql()),
     ("ann_sq8", vectors.ann_sq8, lambda *_: vectors.ann_sq8_sql()),
@@ -16309,7 +16269,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("degree_assortativity", q_assortativity, lambda *_: _sql_assortativity()),
     ("cost_distance", q_cost_distance, lambda fx, w, *_: _sql_cost_distance(fx, w)),
     ("bracket_revenue", rel.bracket_revenue, lambda *_: rel.bracket_revenue_sql()),
-    ("simpson_diversity", textops.simpson_diversity, lambda *_: textops.simpson_diversity_sql()),
     ("tone_census", q_tone_census, lambda fx, *_: _sql_tone_census(fx)),
     ("late_priority_census", rel.late_priority_census, lambda *_: rel.late_priority_census_sql()),
     ("partition_skew_audit", q_partition_skew_audit, lambda fx, *_: _sql_partition_skew_audit(fx)),
@@ -16430,8 +16389,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("delaunay_edges", q_delaunay_edges, lambda fx, *_: _sql_delaunay_edges(fx)),
     ("apsp_paths", q_apsp_paths, lambda fx, *_: _sql_apsp_paths(fx)),
     ("bellman_ford", q_bellman_ford, lambda fx, *_: _sql_bellman_ford(fx)),
-    ("bwt_census", textops.bwt_census, lambda *_: textops.bwt_census_sql()),
-    ("debruijn_stats", textops.debruijn_stats, lambda *_: textops.debruijn_stats_sql()),
     ("jenks_breaks", rel.jenks_breaks, lambda *_: rel.jenks_breaks_sql()),
     ("pip_anti", q_pip_anti, lambda fx, *_: _sql_pip_anti(fx)),
     ("seam_audit", q_seam_audit, lambda fx, w, *_: _sql_seam_audit(fx, w)),
@@ -16440,19 +16397,13 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("snapshot_expire", q_snapshot_expire, lambda fx, *_: _sql_snapshot_expire(fx)),
     ("stream_quality", q_stream_quality, lambda fx, w, *_: _sql_stream_quality(fx, w)),
     ("hamming_code", q_hamming_code, lambda fx, w, *_: _sql_hamming_code(fx, w)),
-    ("export_shards", textops.export_shards, lambda *_: textops.export_shards_sql()),
-    ("adler32_census", textops.adler32_census, lambda *_: textops.adler32_census_sql()),
     ("facility_location", q_facility_location, lambda fx, *_: _sql_facility_location(fx)),
-    ("rsync_matches", textops.rsync_matches, lambda *_: textops.rsync_matches_sql()),
-    ("sorted_neighborhood", textops.sorted_neighborhood,
-     lambda *_: textops.sorted_neighborhood_sql()),
     ("snowflake_audit", rel.snowflake_audit, lambda *_: rel.snowflake_audit_sql()),
     ("leaky_bucket", rel.leaky_bucket, lambda *_: rel.leaky_bucket_sql()),
     ("psi_drift", rel.psi_drift, lambda *_: rel.psi_drift_sql()),
     ("png_filters", q_png_filters, lambda fx, w, *_: _sql_png_filters(fx, w)),
     ("brief_descriptor", q_brief_descriptor, lambda fx, w, *_: _sql_brief_descriptor(fx, w)),
     ("wasserstein_tiles", q_wasserstein_tiles, lambda fx, w, *_: _sql_wasserstein_tiles(fx, w)),
-    ("postings_gaps", textops.postings_gaps, lambda *_: textops.postings_gaps_sql()),
     ("max_rectangle", q_max_rectangle, lambda fx, w, *_: _sql_max_rectangle(fx, w)),
     ("lof_zones", q_lof_zones, lambda fx, *_: _sql_lof_zones(fx)),
     ("ransac_line", q_ransac_line, lambda fx, *_: _sql_ransac_line(fx)),
@@ -16477,52 +16428,37 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("selectivity_audit", q_selectivity_audit, lambda fx, *_: _sql_selectivity_audit(fx)),
     ("join_card_audit", rel.join_card_audit, lambda *_: rel.join_card_audit_sql()),
     ("hll_union_merge", rel.hll_union_merge, lambda *_: rel.hll_union_merge_sql()),
-    ("best_snippet", textops.best_snippet, lambda *_: textops.best_snippet_sql()),
     ("two_opt_census", q_two_opt_census, lambda fx, *_: _sql_two_opt_census(fx)),
     ("compactness", q_compactness, lambda fx, *_: _sql_compactness(fx)),
     ("record_breaks", rel.record_breaks, lambda *_: rel.record_breaks_sql()),
     ("business_latency", rel.business_latency, lambda *_: rel.business_latency_sql()),
     ("shapley_attribution", rel.shapley_attribution, lambda *_: rel.shapley_attribution_sql()),
     ("absorbing_chain", rel.absorbing_chain, lambda *_: rel.absorbing_chain_sql()),
-    ("string_period_census", textops.string_period_census,
-     lambda *_: textops.string_period_census_sql()),
-    ("elias_fano_size", textops.elias_fano_size, lambda *_: textops.elias_fano_size_sql()),
     ("rowgroup_pruning", rel.rowgroup_pruning, lambda *_: rel.rowgroup_pruning_sql()),
     ("sad_matrix_profile", rel.sad_matrix_profile, lambda *_: rel.sad_matrix_profile_sql()),
-    ("ari_clusterings", textops.ari_clusterings, lambda *_: textops.ari_clusterings_sql()),
     ("calibration_bins", rel.calibration_bins, lambda *_: rel.calibration_bins_sql()),
     ("l_diversity", rel.l_diversity, lambda *_: rel.l_diversity_sql()),
     ("weighted_sample_ares", rel.weighted_sample_ares, lambda *_: rel.weighted_sample_ares_sql()),
-    ("dedup_cascade", textops.dedup_cascade, lambda *_: textops.dedup_cascade_sql()),
-    ("rake_keywords", textops.rake_keywords, lambda *_: textops.rake_keywords_sql()),
-    ("group_kfold", textops.group_kfold, lambda *_: textops.group_kfold_sql()),
     ("clip_equalize", q_clip_equalize, lambda fx, w, *_: _sql_clip_equalize(fx, w)),
     ("convexity_defect", q_convexity_defect, lambda fx, *_: _sql_convexity_defect(fx)),
     ("watermark_audit", rel.watermark_audit, lambda *_: rel.watermark_audit_sql()),
     ("roaring_size", rel.roaring_size, lambda *_: rel.roaring_size_sql()),
     ("time_to_convert", rel.time_to_convert, lambda *_: rel.time_to_convert_sql()),
-    ("readability_census", textops.readability_census, lambda *_: textops.readability_census_sql()),
     ("join_order_audit", rel.join_order_audit, lambda *_: rel.join_order_audit_sql()),
-    ("good_turing", textops.good_turing, lambda *_: textops.good_turing_sql()),
     ("rlsa_smear", q_rlsa_smear, lambda fx, w, *_: _sql_rlsa_smear(fx, w)),
     ("fifo_allocation", rel.fifo_allocation, lambda *_: rel.fifo_allocation_sql()),
     ("ring_validity", q_ring_validity, lambda fx, *_: _sql_ring_validity(fx)),
     ("copeland_ranking", rel.copeland_ranking, lambda *_: rel.copeland_ranking_sql()),
-    ("ams_f2", textops.ams_f2, lambda *_: textops.ams_f2_sql()),
-    ("feature_hash_collisions", textops.feature_hash_collisions,
-     lambda *_: textops.feature_hash_collisions_sql()),
     ("waterfill_fairshare", rel.waterfill_fairshare, lambda *_: rel.waterfill_fairshare_sql()),
     ("pr_curve_audit", q_pr_curve_audit, lambda fx, *_: _sql_pr_curve_audit(fx)),
     ("freivalds_verify", q_freivalds_verify, lambda fx, *_: _sql_freivalds_verify(fx)),
     ("bullwhip", rel.bullwhip, lambda *_: rel.bullwhip_sql()),
-    ("cohens_kappa", textops.cohens_kappa, lambda *_: textops.cohens_kappa_sql()),
     ("knapsack_census", rel.knapsack_census, lambda *_: rel.knapsack_census_sql()),
     ("runs_test", rel.runs_test, lambda *_: rel.runs_test_sql()),
     ("asof_interp", rel.asof_interp, lambda *_: rel.asof_interp_sql()),
     ("ring_centroid", q_ring_centroid, lambda fx, *_: _sql_ring_centroid(fx)),
     ("apportionment_census", rel.apportionment_census, lambda *_: rel.apportionment_census_sql()),
     ("johnson_schedule", rel.johnson_schedule, lambda *_: rel.johnson_schedule_sql()),
-    ("front_coding", textops.front_coding, lambda *_: textops.front_coding_sql()),
     ("zone_diameter", q_zone_diameter, lambda fx, *_: _sql_zone_diameter(fx)),
     ("btc_encode", q_btc_encode, lambda fx, w, *_: _sql_btc_encode(fx, w)),
     ("dhondt_seats", rel.dhondt_seats, lambda *_: rel.dhondt_seats_sql()),
@@ -16530,17 +16466,11 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("soundex_blocking", rel.soundex_blocking, lambda *_: rel.soundex_blocking_sql()),
     ("knapsack_greedy_gap", rel.knapsack_greedy_gap, lambda *_: rel.knapsack_greedy_gap_sql()),
     ("randomized_response", rel.randomized_response, lambda *_: rel.randomized_response_sql()),
-    ("prefix_filter_audit", textops.prefix_filter_audit,
-     lambda *_: textops.prefix_filter_audit_sql()),
-    ("case_folding_census", textops.case_folding_census,
-     lambda *_: textops.case_folding_census_sql()),
     ("abc_xyz", rel.abc_xyz, lambda *_: rel.abc_xyz_sql()),
     ("t_closeness", rel.t_closeness, lambda *_: rel.t_closeness_sql()),
     ("layout_whatif", rel.layout_whatif, lambda *_: rel.layout_whatif_sql()),
     ("item_cosine2", rel.item_cosine2, lambda *_: rel.item_cosine2_sql()),
     ("npv_census", rel.npv_census, lambda *_: rel.npv_census_sql()),
-    ("symspell_block", textops.symspell_block, lambda *_: textops.symspell_block_sql()),
-    ("palindrome_census", textops.palindrome_census, lambda *_: textops.palindrome_census_sql()),
     ("vat_rounding", rel.vat_rounding, lambda *_: rel.vat_rounding_sql()),
     ("inversions_census", rel.inversions_census, lambda *_: rel.inversions_census_sql()),
     ("stationary_dist", rel.stationary_dist, lambda *_: rel.stationary_dist_sql()),
@@ -16550,20 +16480,13 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("stream_topn", q_stream_topn, lambda fx, *_: _sql_stream_topn(fx)),
     ("littles_law", rel.littles_law, lambda *_: rel.littles_law_sql()),
     ("zeller_audit", rel.zeller_audit, lambda *_: rel.zeller_audit_sql()),
-    ("learning_curve", textops.learning_curve, lambda *_: textops.learning_curve_sql()),
-    ("exposure_share", textops.exposure_share, lambda *_: textops.exposure_share_sql()),
     ("kdtree_balance", q_kdtree_balance, lambda fx, *_: _sql_kdtree_balance(fx)),
     ("mean_reversion", rel.mean_reversion, lambda *_: rel.mean_reversion_sql()),
     ("median_of_medians", rel.median_of_medians, lambda *_: rel.median_of_medians_sql()),
     ("schmitt_census", q_schmitt_census, lambda fx, w, *_: _sql_schmitt_census(fx, w)),
     ("two_hop_census", rel.two_hop_census, lambda *_: rel.two_hop_census_sql()),
-    ("source_jaccard", textops.source_jaccard, lambda *_: textops.source_jaccard_sql()),
-    ("ngram_suppression", textops.ngram_suppression, lambda *_: textops.ngram_suppression_sql()),
     ("structure_tensor", q_structure_tensor, lambda fx, w, *_: _sql_structure_tensor(fx, w)),
-    ("like_selectivity", textops.like_selectivity, lambda *_: textops.like_selectivity_sql()),
-    ("yules_k", textops.yules_k, lambda *_: textops.yules_k_sql()),
     ("diff_in_diff", rel.diff_in_diff, lambda *_: rel.diff_in_diff_sql()),
-    ("term_burstiness", textops.term_burstiness, lambda *_: textops.term_burstiness_sql()),
     ("seasonal_index", rel.seasonal_index, lambda *_: rel.seasonal_index_sql()),
     ("caption_cell_audit", q_caption_cell_audit, lambda fx, *_: _sql_caption_cell_audit(fx)),
     ("phash_bit_bias", q_phash_bit_bias, lambda fx, *_: _sql_phash_bit_bias(fx)),
@@ -16578,10 +16501,8 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("turning_points", rel.turning_points, lambda *_: rel.turning_points_sql()),
     ("clustering_spectrum", rel.clustering_spectrum, lambda *_: rel.clustering_spectrum_sql()),
     ("otsu2_global", q_otsu2_global, lambda fx, w, *_: _sql_otsu2_global(fx, w)),
-    ("cv_patterns", textops.cv_patterns, lambda *_: textops.cv_patterns_sql()),
     ("triangle_orientation_audit", rel.triangle_orientation_audit,
      lambda *_: rel.triangle_orientation_audit_sql()),
-    ("bbit_minhash", textops.bbit_minhash, lambda *_: textops.bbit_minhash_sql()),
     ("birthday_census", rel.birthday_census, lambda *_: rel.birthday_census_sql()),
     ("markov_order_gain", rel.markov_order_gain, lambda *_: rel.markov_order_gain_sql()),
     ("repeat_by_first_size", rel.repeat_by_first_size, lambda *_: rel.repeat_by_first_size_sql()),
@@ -16592,14 +16513,9 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("zone_area_gini", q_zone_area_gini, lambda fx, *_: _sql_zone_area_gini(fx)),
     ("leaderboard_churn", rel.leaderboard_churn, lambda *_: rel.leaderboard_churn_sql()),
     ("peak_hours", rel.peak_hours, lambda *_: rel.peak_hours_sql()),
-    ("stopword_drift", textops.stopword_drift, lambda *_: textops.stopword_drift_sql()),
     ("quadrat_vmr", q_quadrat_vmr, lambda fx, *_: _sql_quadrat_vmr(fx)),
     ("ingest_drift", q_ingest_drift, lambda fx, *_: _sql_ingest_drift(fx)),
     ("cohort_ltv", rel.cohort_ltv, lambda *_: rel.cohort_ltv_sql()),
-    ("length_bands", textops.length_bands, lambda *_: textops.length_bands_sql()),
-    ("weighted_bottomk_sample", textops.weighted_bottomk_sample,
-     lambda *_: textops.weighted_bottomk_sample_sql()),
-    ("split_leakage", textops.split_leakage, lambda *_: textops.split_leakage_sql()),
     ("purchase_tails", rel.purchase_tails, lambda *_: rel.purchase_tails_sql()),
 )
 

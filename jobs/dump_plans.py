@@ -34,9 +34,7 @@ DEFAULT = [
     "mosaic_regions",     # A17: seam strips + fragment-graph CC rounds
     "zonal_quantiles",    # A23: histogram partials, O(pairs*values) shuffle
     "cell_rollup",        # A19: aggregates-of-aggregates up the cell tree
-    "tfidf_topterms",     # A20: tf/df aggs + term join + window top-k
     "user_sessions",      # A27: one-exchange lag/cumsum/agg sessionization
-    "decontaminate",      # A28: broadcast benchmark side, map-only corpus
     "zone_overlap",       # A26: cell-prefiltered pair join, no cross join
     "pagerank_graph",     # A30: checkpointed per-round join + agg
     "image_augment",      # A32: one fused Arrow hop, bytes never emitted
@@ -50,15 +48,11 @@ DEFAULT = [
     "flow_direction",     # A58: map-only fused D8 pass
     "curation_pipeline",  # A59: composed gates, no pixel shuffle
     "zonal_frac",         # A89: fractional-coverage zonal, fused partials
-    "pii_scan",           # A90: map-side regexp + one group shuffle
-    "seq_packing",        # A91: per-source window, no global sort
     "pansharpen",         # A92: map-only fused Brovey pass
     "viewshed",           # A93: map-only fused ray pass
     "stretch",            # A94: per-tile executor sort, no Spark sort
-    "url_domains",        # A95: bounded explode + combiner-friendly agg
     "reclassify",         # A96: census Arrow hop + broadcast range join
     "coverage_audit",     # A97: broadcast dim + tiny census LEFT join
-    "oov_rate",           # A98: tiny-vocab window + broadcast left join
     "geary_lattice",      # A99: co-located lattice join, two tiny aggs
     "semivariogram",      # A101: filter-refine pair join, slim bin agg
     "kde_heatmap",        # A103: cover-explode x anchor-cell equi-join
@@ -75,20 +69,15 @@ DEFAULT = [
     "lpm_route",          # R3b: broadcast CIDR table + struct argmax
     "poisson_bootstrap",  # R3b: map-only multiplicity + 8-group agg
     "route_burn",         # A108: broadcast waypoint join + codegen DDA
-    "bm25_topk",          # A111: partial+final aggs + TakeOrdered
     "semdedup",           # A112: IVF-cell groupBy applyInPandas GEMM
     "ann_ivfpq",          # A114: bucket-pruned compressed-domain scan
     "kmeans_embed",       # A115: map-only assign + K-row driver update
     "dedup_components_star",  # A116: star-contraction CC rounds
     "integrity_audit",    # A117: anti-join FK checks union
     "flow_length",        # A118: pointer jumping with additive weights
-    "lm_doc_likelihood",  # A119: count aggs + keyed scoring joins
-    "source_mixture_sample",  # A120: census + 1-row broadcast keep rule
     "adaptive_quadtree",  # A121: per-level census + bounded hot broadcasts
     "od_matrix",          # A122: one user-key window + OD-pair agg
     "scd2_history",       # A123: change-point filter between two windows
-    "dsir_importance",    # A124: 1024-row model broadcast onto term stream
-    "chunking_audit",     # A125: bounded chunk-index explode
     "resize_bilinear",    # A126: map-only fused fixed-point gather
     "payload_integrity",  # A127: map-only flags, single-row agg, stack()
     "geodesic_assign",    # A128: map-only chord argmin, codegen
@@ -99,7 +88,6 @@ DEFAULT = [
     "local_supplier_volume",  # A160: Q5 join pyramid, broadcast dims
     "box_nms",            # A165: named-column greedy cascade, zero shuffle
     "clustering_coeff",   # A166: degree-ordered wedges, 3-way corner credit
-    "edit_distance_join", # A168: SymSpell variant blocking + levenshtein refine
     "segment_intersections",  # A172: grid bucket join + ccw refine
     "hits_scores",        # A177: per-half-round edge join + sum agg
     "threshold_diffusion",    # A178: fused multi-round Arrow pass

@@ -29,12 +29,11 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# the 15 slowest sf0.1 queries of BENCH_r03 + the round-4 reworked ops
+# slow sf0.1 queries of BENCH_r03 + the round-4 reworked ops
 DEFAULT_QUERIES = [
     "single_linkage", "dbscan_clusters", "lru_mrc", "mst_boruvka",
     "polyline_simplify", "voronoi_assign", "sad_matrix_profile",
-    "k_truss", "debruijn_stats", "lm_doc_likelihood", "collocations",
-    "label_propagation", "doc_repetition", "triangle_count",
+    "k_truss", "label_propagation", "triangle_count",
     "clustering_coeff", "knn_zones", "zonal_quantiles", "dedup_components",
     "k_core",
 ]

@@ -18,7 +18,7 @@ QUERIES = [
     "cell_join_salted", "focal_mosaic", "asof_clicks",
     # round-3 additions: one per new operator family (shuffly shapes
     # where partition count could plausibly leak into the result)
-    "box_nms", "segment_intersections", "edit_distance_join",
+    "box_nms", "segment_intersections",
     "label_propagation", "histogram_quantile_audit", "basket_rules",
     "ann_binary_hamming", "percolation_sweep",
 ]

@@ -2,8 +2,6 @@
 synthetic inputs with hand-computed expectations, independent of the
 driver fixtures (which exercise the same ops against DuckDB oracles):
 
-* decontaminate  — n-gram leakage scan finds exactly the planted overlap
-* passage_dedup  — chunk-level dup ratios on planted repeated passages
 * user_sessions  — gap-based session boundaries at the 6h threshold
 * zone_overlap   — exact rect-rect overlay areas, buffered + unbuffered
 """
@@ -15,48 +13,8 @@ import datetime
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from georaster_spark.operators import relational, textops
+from georaster_spark.operators import relational
 from georaster_spark.operators.pip import zone_overlap
-
-DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars int"
-
-
-def _write_docs(spark, tmp_path, texts):
-    rows = [
-        Row(doc_id=i, text=t, lang="en", source="t", n_chars=len(t))
-        for i, t in enumerate(texts)
-    ]
-    spark.createDataFrame(rows, DOC_SCHEMA).write.mode("overwrite").parquet(
-        f"{tmp_path}/documents.parquet"
-    )
-    return str(tmp_path)
-
-
-def test_decontaminate_planted(spark, tmp_path):
-    # doc 0 (0 % 37 == 0) is the benchmark doc; doc 1 copies a 6-word
-    # run from it -> exactly two distinct shared 5-grams; doc 2 shares
-    # nothing 5 words long.
-    bench = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    leaked = "xx yy beta gamma delta epsilon zeta eta zz ww"
-    clean = "one two three four five six seven eight nine ten"
-    sf = _write_docs(spark, tmp_path, [bench, leaked, clean])
-    out = {(r.doc_id, r.bench_id): r.n_shared
-           for r in textops.decontaminate(spark, sf).collect()}
-    assert out == {(1, 0): 2}
-
-
-def test_passage_dedup_planted(spark, tmp_path):
-    # 16-word passages: doc 0 = P Q, doc 1 = P R  ->  each doc has one
-    # duplicated passage out of two; doc 2 = S (unique single chunk).
-    p = " ".join(f"p{i}" for i in range(16))
-    q = " ".join(f"q{i}" for i in range(16))
-    r = " ".join(f"r{i}" for i in range(16))
-    sf = _write_docs(spark, tmp_path, [f"{p} {q}", f"{p} {r}", "lonely words"])
-    rows = {r_.doc_id: r_ for r_ in textops.passage_dedup(spark, sf).collect()}
-    assert rows[0].n_passages == 2 and rows[0].n_dup_passages == 1
-    assert rows[1].n_passages == 2 and rows[1].n_dup_passages == 1
-    assert rows[0].dup_ratio == 0.5
-    assert rows[2].n_passages == 1 and rows[2].n_dup_passages == 0
 
 
 def test_user_sessions_gap_boundary(spark, tmp_path):

@@ -280,23 +280,6 @@ def test_user_sessions_single_shuffle(spark, tmp_path):
     assert schemas and all("props" not in s and "event_type" not in s for s in schemas)
 
 
-def test_decontaminate_broadcasts_benchmark(spark, tmp_path):
-    """A28: the benchmark side must broadcast — the corpus side never
-    shuffles before the (rare) hit aggregation."""
-    from pyspark.sql import Row
-
-    from georaster_spark.operators import textops
-
-    rows = [Row(doc_id=i, text="a b c d e f g", lang="en", source="t", n_chars=13)
-            for i in range(3)]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars int"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    plan = _plan(textops.decontaminate(spark, str(tmp_path)))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_pip_nonbroadcast_path_is_shuffled(spark, sf0001_dir):
     """A25: broadcast_zones=False must actually exercise the large-zones
     degradation plan — a shuffled hash join on cell_id — not get

@@ -1,11 +1,15 @@
 """The query registry (contract.QUERY_TABLE) is well formed: one row per
-query name, and every row either has an oracle builder or says why it is
-checked on rows only.  Needs no Spark session."""
+query name, every row either has an oracle builder or says why it is
+checked on rows only, and no operator module keeps a DuckDB twin that no
+row uses.  Needs no Spark session."""
 
 from __future__ import annotations
 
+import inspect
 from collections import Counter
+from types import ModuleType
 
+from georaster_spark.operators import relational, textops, vectors
 from georaster_spark.plans import contract
 
 SCOREBOARD = 50  # the driver's correctness gate scores the first 50 rows
@@ -44,3 +48,28 @@ def test_scoreboard_rows_all_have_oracles():
     scored = [name for name, *_ in contract.QUERY_TABLE[:SCOREBOARD]]
     assert len(scored) == SCOREBOARD
     assert not _rows_only() & set(scored)
+
+
+def _row_oracle_functions() -> set:
+    """Every module function a row's oracle builder names as `module.fn`."""
+    found = set()
+    for _, _, oracle in contract.QUERY_TABLE:
+        if isinstance(oracle, str):
+            continue
+        names = oracle.__code__.co_names
+        mods = [m for m in map(oracle.__globals__.get, names) if isinstance(m, ModuleType)]
+        found |= {getattr(m, n) for m in mods for n in names if hasattr(m, n)}
+    return found
+
+
+def test_every_sql_twin_is_a_row_oracle():
+    """A query removed from the table must take its `*_sql` twin with it."""
+    used = _row_oracle_functions()
+    orphans = [
+        f"{mod.__name__}.{name}"
+        for mod in (relational, textops, vectors)
+        for name, fn in vars(mod).items()
+        if name.endswith("_sql") and inspect.isfunction(fn)
+        and fn.__module__ == mod.__name__ and fn not in used
+    ]
+    assert not orphans, orphans

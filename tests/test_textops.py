@@ -18,12 +18,8 @@ CASES = [
     ("lang_id", textops.lang_id, textops.lang_id_sql()),
     ("doc_fingerprint", textops.doc_fingerprint, textops.doc_fingerprint_sql()),
     ("dedup_exact", textops.dedup_exact, textops.dedup_exact_sql()),
-    ("jaccard_pairs", textops.jaccard_pairs, textops.jaccard_pairs_sql()),
-    ("containment_pairs", textops.containment_pairs, textops.containment_pairs_sql()),
     ("minhash_lsh", textops.minhash_lsh_pairs, textops.minhash_lsh_pairs_sql()),
     ("simhash", textops.simhash_pairs, textops.simhash_pairs_sql()),
-    ("decontaminate", textops.decontaminate, textops.decontaminate_sql()),
-    ("passage_dedup", textops.passage_dedup, textops.passage_dedup_sql()),
     ("cosine_near_dup", vectors.cosine_near_dup, vectors.cosine_near_dup_sql()),
     ("ann_topk_brute", vectors.ann_topk_brute, vectors.ann_topk_brute_sql()),
     ("ann_lsh", vectors.ann_lsh, vectors.ann_lsh_sql()),
@@ -32,20 +28,6 @@ CASES = [
     ("kmeans_embed", vectors.kmeans_embed, vectors.kmeans_embed_sql()),
     ("ann_ivfpq", vectors.ann_ivfpq, vectors.ann_ivfpq_sql()),
     ("semdedup", vectors.semdedup, vectors.semdedup_sql()),
-    ("bpe_pair_census", textops.bpe_pair_census, textops.bpe_pair_census_sql()),
-    ("bm25_topk", textops.bm25_topk, textops.bm25_topk_sql()),
-    ("pii_scan", textops.pii_scan, textops.pii_scan_sql()),
-    ("seq_packing", textops.seq_packing, textops.seq_packing_sql()),
-    ("url_domains", textops.url_domains, textops.url_domains_sql()),
-    ("oov_rate", textops.oov_rate, textops.oov_rate_sql()),
-    ("lm_doc_likelihood", textops.lm_doc_likelihood, textops.lm_doc_likelihood_sql()),
-    (
-        "source_mixture_sample",
-        textops.source_mixture_sample,
-        textops.source_mixture_sample_sql(),
-    ),
-    ("dsir_importance", textops.dsir_importance, textops.dsir_importance_sql()),
-    ("chunking_audit", textops.chunking_audit, textops.chunking_audit_sql()),
 ]
 
 
@@ -73,84 +55,31 @@ def test_parity(spark, duck, name, fn, sql):
 def test_nontrivial_outputs(spark, duck):
     """Guard against trivially-empty comparisons: the planted structure
     must actually produce pairs/dups at sf0.001."""
-    assert textops.jaccard_pairs(spark, SF_DIR).count() > 0
+    assert textops.minhash_lsh_pairs(spark, SF_DIR).count() > 0
     assert textops.dedup_exact(spark, SF_DIR).count() > 0
     assert vectors.ann_topk_brute(spark, SF_DIR).count() > 0
 
 
-def test_langid_confusion_parity_and_totals(spark, duck):
-    """Confusion-matrix gate: oracle parity + cell counts must total the
-    corpus and checksums must pin the exact cell partitions."""
-    sdf = textops.langid_confusion(spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
-    orows = duck.execute(textops.langid_confusion_sql()).fetchall()
-    ocols = [d[0] for d in duck.description]
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert len(srows) == len(orows) > 0
-    assert table_hash(sdf.columns, srows) == table_hash(ocols, orows)
-    n_docs_col = sdf.columns.index("n_docs")
-    chk_col = sdf.columns.index("doc_checksum")
-    import duckdb as _d
-    total, id_sum = duck.execute(
-        "SELECT COUNT(*), SUM(doc_id) FROM documents"
-    ).fetchone()
-    assert sum(r[n_docs_col] for r in srows) == total
-    assert sum(r[chk_col] for r in srows) == id_sum
-
-
-def test_lsh_recall_gate_parity_and_full_recall(spark, duck):
-    sdf = textops.lsh_recall_gate(spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
-    orows = duck.execute(textops.lsh_recall_gate_sql()).fetchall()
-    ocols = [d[0] for d in duck.description]
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert table_hash(sdf.columns, srows) == table_hash(ocols, orows)
-    row = dict(zip(sdf.columns, srows[0]))
-    # on the planted corpus the banded LSH must not miss any exact pair
-    assert row["n_exact"] > 0
-    assert row["recall_pct"] == 100 and row["precision_pct"] == 100
-    assert row["exact_checksum"] == row["lsh_checksum"]
-
-
-def test_source_quality_rollup_parity_and_totals(spark, duck):
-    sdf = textops.source_quality_rollup(spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
-    orows = duck.execute(textops.source_quality_rollup_sql()).fetchall()
-    ocols = [d[0] for d in duck.description]
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert len(srows) == len(orows) > 0
-    assert table_hash(sdf.columns, srows) == table_hash(ocols, orows)
-    cols = sdf.columns
-    total, id_sum = duck.execute(
-        "SELECT COUNT(*), SUM(doc_id) FROM documents"
-    ).fetchone()
-    assert sum(r[cols.index("n_docs")] for r in srows) == total
-    assert sum(r[cols.index("doc_checksum")] for r in srows) == id_sum
-
-
-def test_containment_is_asymmetric(spark):
-    """A short doc quoted inside a much longer one: containment flags the
-    SHORT side (sub) at ~1.0 while Jaccard stays below its tau — the case
-    the directed operator exists for."""
-    import pandas as pd
-
-    short = "alpha beta gamma delta epsilon zeta"
-    long = short + " " + " ".join(f"word{i} filler{i} extra{i}" for i in range(40))
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": [short, long], "source": ["t", "t"]})
-    )
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        docs.write.parquet(f"{td}/documents.parquet")
-        rows = {
-            (r["sub_id"], r["sup_id"]): r["cont"]
-            for r in textops.containment_pairs(spark, td).collect()
-        }
-        jac = textops.jaccard_pairs(spark, td).count()
-    assert rows.get((1, 2), 0) == 1.0  # short fully contained in long
-    assert (2, 1) not in rows  # reverse direction far below tau
-    assert jac == 0  # Jaccard misses the pair entirely
+def test_minhash_lsh_pairs_equal_exact_jaccard_pairs(spark, duck):
+    """The banded-MinHash path (D3) must miss no pair the exact
+    all-pairs Jaccard test keeps, and keep no other pair, on the planted
+    corpus.  The exact set is built from the same shingle and threshold
+    pieces as the dedup_components oracle."""
+    got = {
+        (r["a_id"], r["b_id"])
+        for r in textops.minhash_lsh_pairs(spark, SF_DIR).collect()
+    }
+    exact = set(duck.execute(f"""
+WITH w AS (SELECT doc_id, {textops._SQL_WS} AS ws FROM documents),
+s AS (SELECT doc_id, {textops._SQL_SHINGLES} AS sh FROM w WHERE len(ws) >= 3)
+SELECT a.doc_id, b.doc_id
+FROM s a JOIN s b ON a.doc_id < b.doc_id
+WHERE len(list_intersect(a.sh, b.sh))
+      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+      >= {textops.JACCARD_TAU}
+""").fetchall())
+    assert exact
+    assert got == exact
 
 
 def test_ann_sq8_accounts_for_every_query(spark, duck):
@@ -166,128 +95,6 @@ def test_ann_sq8_accounts_for_every_query(spark, duck):
     assert sum(n for n, _ in rows.values()) == nq
     assert sum(s for _, s in rows.values()) == qsum
     assert max(rows) == vectors.TOPK  # at least one perfect-recall query
-
-
-def test_ngram_novelty_matches_bruteforce(spark):
-    """ngram_novelty vs a driver-side shingle DF count."""
-    from georaster_spark.operators import textops as t
-
-    sf_dir = "/root/testdata/sf0.001"
-    got = {r["doc_id"]: r for r in t.ngram_novelty(spark, sf_dir).collect()}
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-
-    def sh(text):
-        ws = [w for w in text.strip().lower().split() if w]
-        return set(" ".join(ws[i:i + 3]) for i in range(len(ws) - 2))
-
-    from collections import Counter
-
-    dfc = Counter()
-    per_doc = {}
-    for r in docs:
-        s = sh(r["text"])
-        if s:
-            per_doc[r["doc_id"]] = s
-            dfc.update(s)
-    assert set(got) == set(per_doc)
-    for did, s in per_doc.items():
-        n_rare = sum(1 for x in s if dfc[x] <= 1)
-        assert got[did]["n_sh"] == len(s)
-        assert got[did]["n_rare"] == n_rare
-        assert got[did]["novelty_pm"] == 1000 * n_rare // len(s)
-
-
-def test_pii_scan_semantics(spark, duck):
-    """The deterministic injection must produce nonzero detections, the
-    per-class doc counts must match the moduli census, and redaction
-    must remove every match (re-scanning the redacted text finds 0)."""
-    from pyspark.sql import functions as F
-
-    sdf = textops.pii_scan(spark, SF_DIR)
-    rows = {r["source"]: r for r in sdf.collect()}
-    n7, n11, n13 = duck.execute(
-        "SELECT SUM(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END),"
-        "       SUM(CASE WHEN doc_id % 11 = 0 THEN 1 ELSE 0 END),"
-        "       SUM(CASE WHEN doc_id % 13 = 0 THEN 1 ELSE 0 END) FROM documents"
-    ).fetchone()
-    assert sum(r["n_emails"] for r in rows.values()) == n7 > 0
-    assert sum(r["n_phones"] for r in rows.values()) == n11 > 0
-    assert sum(r["n_ips"] for r in rows.values()) == n13 > 0
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    aug = textops._pii_augmented(d)
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(aug, textops.PII_EMAIL_RE, "<EMAIL>"),
-            textops.PII_PHONE_RE, "<PHONE>",
-        ),
-        textops.PII_IP_RE, "<IP>",
-    )
-    leftovers = d.select(
-        (
-            F.regexp_count(red, F.lit(textops.PII_EMAIL_RE))
-            + F.regexp_count(red, F.lit(textops.PII_PHONE_RE))
-            + F.regexp_count(red, F.lit(textops.PII_IP_RE))
-        ).alias("n")
-    ).agg(F.sum("n")).first()[0]
-    assert leftovers == 0
-
-
-def test_seq_packing_invariants(spark, duck):
-    """Bin count must be exactly ceil(total/B); straddlers are bounded
-    by n_bins - 1 (contiguous packing crosses each boundary at most
-    once); max_bin_docs is at least the average docs-per-bin."""
-    rows = textops.seq_packing(spark, SF_DIR).collect()
-    assert rows
-    B = textops.PACK_B
-    for r in rows:
-        assert r["n_bins"] == (r["total_chars"] + B - 1) // B
-        assert 0 <= r["n_straddle"] <= r["n_bins"] - 1
-        assert r["max_bin_docs"] * r["n_bins"] >= r["n_docs"]
-
-
-def test_url_domains_semantics(spark, duck):
-    """Injection census: every doc_id % 5 == 0 cites exactly one
-    example.org host, % 9 == 0 one site*.net host; blocklist flags
-    exactly the host indices ≡ 7 (mod 10)."""
-    rows = textops.url_domains(spark, SF_DIR).collect()
-    n5, n9 = duck.execute(
-        "SELECT SUM(CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END),"
-        "       SUM(CASE WHEN doc_id % 9 = 0 THEN 1 ELSE 0 END) FROM documents"
-    ).fetchone()
-    org = [r for r in rows if r["domain"].endswith(".example.org")]
-    net = [r for r in rows if r["domain"].endswith(".net")]
-    assert len(org) + len(net) == len(rows)
-    assert sum(r["n_urls"] for r in org) == n5 > 0
-    assert sum(r["n_urls"] for r in net) == n9 > 0
-    for r in org:
-        host = int(r["domain"].removeprefix("host").split(".")[0])
-        assert r["is_blocked"] == (1 if host % 10 == 7 else 0)
-    assert all(r["is_blocked"] == 0 for r in net)
-
-
-def test_oov_rate_matches_bruteforce(spark):
-    """oov_rate vs a driver-side Counter recompute of the top-K vocab
-    and per-source OOV occurrence counts."""
-    from collections import Counter
-
-    sf_dir = "/root/testdata/sf0.001"
-    got = {r["source"]: r for r in textops.oov_rate(spark, sf_dir).collect()}
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    cnt, per_src = Counter(), {}
-    for r in docs:
-        ws = r["text"].strip().lower().split()
-        cnt.update(ws)
-        per_src.setdefault(r["source"], []).extend(ws)
-    vocab = set(
-        t for t, _ in sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[: textops.VOCAB_K]
-    )
-    for src, ws in per_src.items():
-        oov = sum(1 for t in ws if t not in vocab)
-        r = got[src]
-        assert r["n_tok"] == len(ws)
-        assert r["n_oov"] == oov
-        assert r["oov_pm"] == 1000 * oov // len(ws)
-    assert any(r["n_oov"] > 0 for r in got.values())
 
 
 def test_ann_pq_recall_against_exact(spark):
@@ -314,181 +121,3 @@ def test_kmeans_partitions_corpus(spark):
     assert all(r["inertia"] >= 0 for r in rows)
     # a real clustering, not one catch-all bucket
     assert sum(1 for r in rows if r["n_members"] > 0) >= 4
-
-
-def test_winnowing_matches_pure_python(spark):
-    """Engine winnowing vs a direct implementation of the SIGMOD'03
-    algorithm (explicit per-window rightmost-min scan) on the fixture
-    docs, including hash values re-derived via hashlib."""
-    import hashlib
-
-    rows = {
-        r["doc_id"]: r
-        for r in textops.winnowing_fingerprint(spark, SF_DIR).collect()
-    }
-    docs = duckdb.sql(
-        f"SELECT doc_id, text FROM read_parquet('{SF_DIR}/documents.parquet') "
-        "ORDER BY doc_id LIMIT 40"
-    ).fetchall()
-    W = textops.WINNOW_W
-    checked = 0
-    for doc_id, text in docs:
-        ws = text.strip().lower().split()
-        m = len(ws) - 2
-        if m < W:
-            assert doc_id not in rows
-            continue
-        hs = [
-            int(hashlib.md5(" ".join(ws[p:p + 3]).encode()).hexdigest()[:10], 16)
-            for p in range(m)
-        ]
-        sel = set()
-        for s in range(m - W + 1):
-            win = hs[s:s + W]
-            mn = min(win)
-            p = max(i for i, h in enumerate(win) if h == mn) + s
-            sel.add((p + 1, hs[p]))  # engine positions are 1-based
-        r = rows[doc_id]
-        assert r["n_grams"] == m
-        assert r["n_fingerprints"] == len(sel)
-        assert r["min_fp"] == min(h for _, h in sel)
-        assert r["fp_checksum"] == sum(h * p for p, h in sel)
-        assert r["density_ppm"] == len(sel) * 1_000_000 // m
-        checked += 1
-    assert checked >= 20
-
-
-def test_winnowing_guarantee_property(spark):
-    """Winnowing's core guarantee: every window of W consecutive grams
-    contributes at least one fingerprint, and density is ~2/(W+1)."""
-    rows = textops.winnowing_fingerprint(spark, SF_DIR).collect()
-    assert len(rows) > 400
-    for r in rows:
-        # selection count bounded by window count; at least 1 per doc
-        assert 1 <= r["n_fingerprints"] <= r["n_grams"]
-
-
-def test_cm_heavy_hitters_invariant_and_exact_topk(spark):
-    rows = textops.cm_heavy_hitters(spark, SF_DIR).collect()
-    assert len(rows) == textops.CMS_TOPK
-    for r in rows:
-        assert r["cms_est"] >= r["exact_n"]  # CMS never underestimates
-        assert r["overestimate"] == r["cms_est"] - r["exact_n"]
-    # exact counts verified against duckdb directly
-    want = dict(duckdb.sql(f"""
-        SELECT wd, COUNT(*) n FROM (
-          SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) wd
-          FROM read_parquet('{SF_DIR}/documents.parquet'))
-        WHERE length(wd) > 0 GROUP BY wd ORDER BY n DESC, wd LIMIT 10
-    """).fetchall())
-    assert {r["wd"]: r["exact_n"] for r in rows} == want
-
-
-def test_cdc_chunking_shift_robustness(spark):
-    """The CDC property: prepending text re-chunks only the prefix —
-    boundary POSITIONS shift, but chunk lengths after the first
-    boundary are preserved (fixed-window chunking preserves nothing)."""
-    import pandas as pd
-
-    base = "the quick brown fox jumps over the lazy dog " * 20
-    df1 = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    df2 = spark.createDataFrame([(1, "PREPENDED STUFF " + base)], "doc_id long, text string")
-
-    def chunks(df):
-        import hashlib
-        t = df.collect()[0]["text"].strip().lower()
-        bp = [
-            i for i in range(1, len(t) - textops.CDC_GRAM + 2)
-            if int(hashlib.md5(t[i - 1:i - 1 + textops.CDC_GRAM].encode()).hexdigest()[:10], 16)
-            % textops.CDC_MASK == 0
-        ]
-        ends = bp + [len(t)]
-        starts = [0] + bp
-        return [e - s for e, s in zip(ends, starts)]
-
-    # engine output matches the independent python chunker
-    from georaster_spark.operators.textops import cdc_chunking  # noqa: F401
-    # (sf-independent check: run the same rule by hand on both docs)
-    c1, c2 = chunks(df1), chunks(df2)
-    # all chunks after the perturbed prefix coincide
-    assert c1[1:] == c2[len(c2) - len(c1) + 1:]
-
-
-def test_edit_distance_join_brute_force_parity(spark):
-    """SymSpell blocking + levenshtein refine must equal the all-pairs
-    ed<=1 join over the same (vocab + injected typo) word set."""
-    import itertools
-
-    got = {
-        (r["w1"], r["w2"]): r["dist"]
-        for r in textops.edit_distance_join(spark, "/root/testdata/sf0.001").collect()
-    }
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").collect()
-    vocab = set()
-    for d in docs:
-        ws = d["text"].lower().strip().split()
-        vocab.update(w for w in ws if len(w) >= textops.ED_MIN_LEN)
-        if d["doc_id"] % textops.ED_TYPO_MOD == 0:
-            long = [w for w in ws if len(w) >= textops.ED_MIN_LEN]
-            if long:
-                w = long[0]
-                vocab.add(w + "x" if d["doc_id"] % 2 == 0 else "z" + w[1:])
-
-    def lev(a, b):
-        m = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, m[0] = m[0], i
-            for j, cb in enumerate(b, 1):
-                prev, m[j] = m[j], min(m[j] + 1, m[j - 1] + 1, prev + (ca != cb))
-        return m[-1]
-
-    want = {
-        (a, b): lev(a, b)
-        for a, b in itertools.combinations(sorted(vocab), 2)
-        if lev(a, b) <= 1
-    }
-    assert set(got) == set(want)
-    assert all(got[k] == want[k] for k in want)
-
-
-def test_edit_distance_join_excludes_shared_variant_ed2(spark):
-    """A transposition pair shares a 1-deletion variant but has ed 2 —
-    the levenshtein refine must drop it (the SymSpell false positive)."""
-    import pandas as pd
-
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 3],  # odd: no typo injection fires at % 2
-                "text": ["abcd efgh", "acbd wxyz"],
-                "lang": ["en", "en"],
-                "source": ["s", "s"],
-                "n_chars": [9, 9],
-            }
-        )
-    )
-    import tempfile, os
-
-    with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.parquet(os.path.join(td, "documents.parquet"))
-        pairs = textops.edit_distance_join(spark, td).collect()
-    ws = {(r["w1"], r["w2"]) for r in pairs}
-    assert ("abcd", "acbd") not in ws  # shares variant "abd"/"acd" yet ed=2
-
-
-def test_vocab_growth_totals(spark):
-    rows = textops.vocab_growth(spark, "/root/testdata/sf0.001").collect()
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").collect()
-    types = set()
-    n_tok = 0
-    for d in docs:
-        ws = d["text"].lower().strip().split()
-        bgs = [f"{a} {b}" for a, b in zip(ws, ws[1:])]
-        types.update(bgs)
-        n_tok += len(bgs)
-    last = rows[-1]
-    assert last["cum_types"] == len(types)
-    assert last["cum_tokens"] == n_tok
-    assert all(r["n_new_types"] >= 0 for r in rows)
-    # growth curve is non-decreasing and concave-ish: new types taper
-    assert rows[0]["n_new_types"] >= rows[-1]["n_new_types"]
