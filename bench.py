@@ -3,7 +3,8 @@
 
 Default mode: run the headline queries at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and print
-ONE JSON line::
+ONE JSON line (``$SPARK_GRAFT_CPUS`` defaults to the CPUs this process may
+run on)::
 
     {"metric": "...", "value": N, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": ..., "images_per_sec": ...}
@@ -424,7 +425,8 @@ def run_scaling(sf_dir: str, n: int, sf_cpus: int, repeats: int = 6,
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))))
     ap.add_argument("--headline-only", action="store_true")
     ap.add_argument("--concurrent", action="store_true",
                     help="submit the three headline actions concurrently")

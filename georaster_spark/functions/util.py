@@ -2,21 +2,39 @@
 
 from __future__ import annotations
 
+import functools
+import weakref
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def ordered(df: DataFrame, *cols: str) -> DataFrame:
-    """Total-order a SMALL result set without `orderBy`'s hidden cost.
+def per_jvm(build):
+    """Memoize `build(*args)` once per JVM.
 
-    A global `orderBy` runs a RangePartitioner sampling job that
-    re-executes the entire child plan when the child does not end in a
-    reusable exchange (ours usually end in mapInPandas) — measured 2-3x
-    wall time on the sampling operators.  Contract outputs are <= ~100k
-    rows, so shuffle them to one partition (upstream parallelism intact
-    — repartition is a real exchange, unlike coalesce) and sort there.
-    """
-    return df.repartition(1).sortWithinPartitions(*cols)
+    Building a Column expression in PySpark costs py4j round-trips: a
+    call per operation, plus reflection and call-site bookkeeping around
+    each one.  The fixed expression trees of the headline operators run
+    to hundreds of operations, so rebuilding them on every call cost
+    more Python-side time than Spark's planning.  A JVM Column is not
+    tied to a session or a plan, so the trees are built on the first
+    call with given arguments and reused after.
+
+    The cache is keyed on the py4j gateway object itself, not its `id()`:
+    a relaunched JVM comes with a new gateway and never sees a handle of
+    the old one.  Only for expressions without per-use identity: a
+    Python UDF call carries a result id, so it is never cached."""
+    built: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+    @functools.wraps(build)
+    def cached(*args):
+        memo = built.setdefault(SparkContext._gateway, {})
+        if args not in memo:
+            memo[args] = build(*args)
+        return memo[args]
+
+    return cached
 
 
 def fan_out(df: DataFrame) -> DataFrame:

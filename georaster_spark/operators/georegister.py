@@ -21,12 +21,13 @@ SURVEY §0) — here synthesized instead of read, per FIXTURES.md §3.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import (
     BASE_OFF,
     DEFAULT_RES,
+    DOMAIN,
     HOT_ANCHORS,
     HOT_EVERY,
     HOT_PHASE,
@@ -38,6 +39,7 @@ from ..constants import (
     GRID_W,
 )
 from ..functions import cells
+from ..functions.util import per_jvm
 
 
 def image_idx(image_id=None):
@@ -47,7 +49,10 @@ def image_idx(image_id=None):
     return F.substring(image_id, 4, 10).cast("long")
 
 
-def georegister(images: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
+@per_jvm
+def _georegister_levels(r: int) -> tuple[dict[str, Column], ...]:
+    """georegister's projection at resolution r, one dict per dependency
+    level, in output column order."""
     idx = image_idx()
     gx = idx % GRID_W
     gy = F.floor(idx / GRID_W)
@@ -63,22 +68,8 @@ def georegister(images: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
     gt_y0 = F.when(hot, ay + (idx % 89)).otherwise(
         F.lit(TILE_SPAN) * (gy + 1) + jy + F.lit(BASE_OFF)
     ).cast("double")
-
-    df = (
-        images.withColumn("gt_x0", gt_x0)
-        .withColumn("gt_y0", gt_y0)
-        .withColumn("gt_xres", F.lit(TILE_SPAN) / F.col("w"))
-        .withColumn("gt_yres", F.lit(TILE_SPAN) / F.col("h"))
-        .withColumn("crs", F.lit("EPSG:3857"))
-        .withColumn("nodata", F.lit(None).cast("double"))
-        .withColumn("nbands", F.lit(1))
-    )
-    df = (
-        df.withColumn("xmin", F.col("gt_x0"))
-        .withColumn("xmax", F.col("gt_x0") + F.col("w") * F.col("gt_xres"))
-        .withColumn("ymin", F.col("gt_y0") - F.col("h") * F.col("gt_yres"))
-        .withColumn("ymax", F.col("gt_y0"))
-    )
+    x0, y0 = F.col("gt_x0"), F.col("gt_y0")
+    w, h = F.col("w"), F.col("h")
     # Tiles here are exactly TILE_SPAN wide/tall by construction
     # (gt_xres = TILE_SPAN / w), so whenever the cell edge at r is
     # >= TILE_SPAN the footprint spans at most 2 cells per axis and the
@@ -87,17 +78,47 @@ def georegister(images: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
     # Spark 4 and was the dominant cost of the E4 ingest leg.  Static
     # dispatch is safe ONLY here, where the span bound holds by
     # construction; with_cells (arbitrary footprints) guards per row.
-    from ..constants import DOMAIN
-
     cover_fn = cells.cell_cover2 if (DOMAIN >> r) >= TILE_SPAN else cells.cell_cover
     return (
-        df.withColumn("cell_r", F.lit(r))
-        .withColumn("cell_id", cells.cell_encode(F.col("gt_x0"), F.col("gt_y0"), r))
-        .withColumn(
-            "cover_cells",
-            cover_fn(F.col("xmin"), F.col("xmax"), F.col("ymin"), F.col("ymax"), r),
-        )
+        {
+            "gt_x0": gt_x0,
+            "gt_y0": gt_y0,
+            "gt_xres": F.lit(TILE_SPAN) / w,
+            "gt_yres": F.lit(TILE_SPAN) / h,
+            "crs": F.lit("EPSG:3857"),
+            "nodata": F.lit(None).cast("double"),
+            "nbands": F.lit(1),
+        },
+        {
+            "xmin": x0,
+            "xmax": x0 + w * F.col("gt_xres"),
+            "ymin": y0 - h * F.col("gt_yres"),
+            "ymax": y0,
+            "cell_r": F.lit(r),
+            "cell_id": cells.cell_encode(x0, y0, r),
+        },
+        {
+            "cover_cells": cover_fn(
+                F.col("xmin"), F.col("xmax"), F.col("ymin"), F.col("ymax"), r
+            ),
+        },
     )
+
+
+def georegister(images: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
+    """images + the geo-metadata, extent and cell columns (module docstring).
+
+    The projection is about a hundred Column operations.  Building one
+    costs several py4j round-trips (method lookup, call-site bookkeeping,
+    the call), about 1,400 for the whole projection, and georegister
+    has hundreds of call sites.  So the expressions are built
+    once per JVM and resolution (util.per_jvm) and reused, and each
+    dependency level is applied as one `withColumns`: a repeated call
+    sends about 55 commands.  The levels match the Projects Spark keeps
+    after collapsing a `withColumn` chain, so the plan is unchanged."""
+    for level in _georegister_levels(r):
+        images = images.withColumns(level)
+    return images
 
 
 def with_cells(tiles: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
@@ -148,8 +169,6 @@ def with_cells(tiles: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
     # so cell_cover2's <=2-cells-per-axis precondition must be checked
     # PER ROW: take the codegen corner cover only when the box edge fits
     # inside one cell edge on both axes, else the general cover.
-    from ..constants import DOMAIN
-
     s = float(DOMAIN >> r)
     span_ok = ((F.col("xmax") - F.col("xmin")) <= F.lit(s)) & (
         (F.col("ymax") - F.col("ymin")) <= F.lit(s)
@@ -165,19 +184,24 @@ def with_cells(tiles: DataFrame, r: int = DEFAULT_RES) -> DataFrame:
     )
 
 
+@per_jvm
+def _assignment_cols() -> tuple[Column, ...]:
+    return F.col("image_id"), F.explode("cover_cells").alias("cell_id")
+
+
 def tile_assignments(tiles: DataFrame) -> DataFrame:
     """Op E4 — one row per (image, covering cell); the north-rule
     bit-for-bit surface.  Determinism by construction: integer math only."""
-    return tiles.select(
-        "image_id", F.explode("cover_cells").alias("cell_id")
-    )
+    return tiles.select(*_assignment_cols())
 
 
+@per_jvm
 def centroid_x(df_or_prefix=""):
     p = df_or_prefix
     return F.col(f"{p}gt_x0") + F.col(f"{p}w") * F.col(f"{p}gt_xres") / 2.0
 
 
+@per_jvm
 def centroid_y(df_or_prefix=""):
     p = df_or_prefix
     return F.col(f"{p}gt_y0") - F.col(f"{p}h") * F.col(f"{p}gt_yres") / 2.0

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..constants import DEFAULT_RES
 from ..functions import cells
+from ..functions.util import per_jvm
 
 
 # Rings with at most this many edges take the unrolled codegen fast path:
@@ -115,15 +116,42 @@ def convex_pip_hof(ring: Column, px: Column, py: Column) -> Column:
     return ~F.exists(crosses, lambda c: c < 0)
 
 
-def zone_cells(zones: DataFrame, r: int = DEFAULT_RES, shape: str = "ring") -> DataFrame:
-    """(zone_id, <shape>, cell_id) — one row per covering cell of the bbox."""
-    return zones.select(
-        "zone_id",
-        shape,
+@per_jvm
+def _zone_cells_cols(r: int, shape: str) -> tuple[Column, ...]:
+    return (
+        F.col("zone_id"),
+        F.col(shape),
         F.explode(
             cells.cell_cover(F.col("xmin"), F.col("xmax"), F.col("ymin"), F.col("ymax"), r)
         ).alias("cell_id"),
     )
+
+
+def zone_cells(zones: DataFrame, r: int = DEFAULT_RES, shape: str = "ring") -> DataFrame:
+    """(zone_id, <shape>, cell_id) — one row per covering cell of the bbox."""
+    return zones.select(*_zone_cells_cols(r, shape))
+
+
+@per_jvm
+def _pip_exprs(r: int, max_ring: int | None) -> tuple:
+    """pip_join's fixed expressions: the point cell, the zone-side
+    projection (None when the refine reads the ring itself), the refine
+    predicate and the name of the zone shape column it reads."""
+    px, py = F.col("_px"), F.col("_py")
+    point_cell = cells.cell_encode(px, py, r)
+    if max_ring is not None and max_ring - 1 <= MAX_UNROLL_EDGES:
+        # Edges are built per zone, below the cell explode; the candidate
+        # stream only reads them.
+        shape = "edges"
+        zone_cols = (
+            *[F.col(c) for c in ("zone_id", "xmin", "xmax", "ymin", "ymax")],
+            ring_edges(F.col("ring"), max_ring - 1).alias(shape),
+        )
+        refine = convex_pip_unrolled(F.col(shape), px, py, max_ring - 1)
+    else:
+        shape, zone_cols = "ring", None
+        refine = convex_pip_hof(F.col(shape), px, py)
+    return point_cell, zone_cols, refine, shape
 
 
 def pip_join(
@@ -145,28 +173,21 @@ def pip_join(
     time to pick the refine fast path; callers building plans lazily, or
     issuing several pip_joins against the same zones table, should compute
     the bound once and pass it (zone_image_stats does).
+
+    The point cell, zone edges, zone cover and unrolled refine depend
+    only on `r` and `max_ring`, and building them costs about 1,700 py4j
+    round-trips: they are built once per JVM (util.per_jvm) and reused,
+    so a repeated pip_join sends about 50 commands of its own.
     """
     # Dispatch the refine predicate on the zones side's actual max ring
     # size: one tiny driver-side agg over the dim table (broadcast-small
     # by definition) buys the codegen fast path for the candidate stream.
     if max_ring is None:
         max_ring = zones.agg(F.max(F.size("ring"))).first()[0]
-    pts = points.withColumn("_px", x).withColumn("_py", y).withColumn(
-        "cell_id", cells.cell_encode(F.col("_px"), F.col("_py"), r)
-    )
-    px, py = F.col("_px"), F.col("_py")
-    if max_ring is not None and max_ring - 1 <= MAX_UNROLL_EDGES:
-        # Edges are built per zone, below the cell explode; the candidate
-        # stream only reads them.
-        shape = "edges"
-        zones = zones.select(
-            "zone_id", "xmin", "xmax", "ymin", "ymax",
-            ring_edges(F.col("ring"), max_ring - 1).alias(shape),
-        )
-        refine = convex_pip_unrolled(F.col(shape), px, py, max_ring - 1)
-    else:
-        shape = "ring"
-        refine = convex_pip_hof(F.col(shape), px, py)
+    point_cell, zone_cols, refine, shape = _pip_exprs(r, max_ring)
+    pts = points.withColumns({"_px": x, "_py": y}).withColumn("cell_id", point_cell)
+    if zone_cols is not None:
+        zones = zones.select(*zone_cols)
     zc = zone_cells(zones, r, shape)
     if broadcast_zones:
         zc = F.broadcast(zc)

@@ -19,11 +19,12 @@ decode first.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import DEFAULT_RES
 from ..functions.codecs import pixel_mean
+from ..functions.util import per_jvm
 from ..operators import georegister as geo
 from ..operators.pip import pip_join
 from ..sources.fixtures import fixtures_for_sf_dir
@@ -34,6 +35,15 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(str(fdir / f"{name}.parquet"))
 
 
+@per_jvm
+def _stats_exprs(with_pixels: bool) -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """zone_image_stats' pixel-UDF arguments and per-zone aggregates."""
+    aggs = (F.count(F.lit(1)).alias("n_images"),)
+    if with_pixels:
+        aggs += (F.round(F.avg("tile_mean"), 6).alias("avg_tile_mean"),)
+    return tuple(F.col(c) for c in ("bytes", "w", "h", "fmt")), aggs
+
+
 def zone_image_stats(
     images: DataFrame,
     zones: DataFrame,
@@ -41,12 +51,15 @@ def zone_image_stats(
     with_pixels: bool = True,
     max_ring: int | None = None,
 ) -> DataFrame:
-    """Per-zone image count (+ mean of per-tile mean pixel value)."""
+    """Per-zone image count (+ mean of per-tile mean pixel value).
+
+    Every fixed expression is built once per JVM (util.per_jvm); the
+    pixel_mean call is built per call, because a Python UDF call carries
+    a result id that two plans must not share."""
+    pixel_args, aggs = _stats_exprs(with_pixels)
     tiles = geo.georegister(images, r)
     if with_pixels:
-        tiles = tiles.withColumn(
-            "tile_mean", pixel_mean(F.col("bytes"), F.col("w"), F.col("h"), F.col("fmt"))
-        )
+        tiles = tiles.withColumn("tile_mean", pixel_mean(*pixel_args))
     pairs = pip_join(
         tiles,
         zones,
@@ -55,9 +68,6 @@ def zone_image_stats(
         r=r,
         max_ring=max_ring,
     )
-    aggs = [F.count(F.lit(1)).alias("n_images")]
-    if with_pixels:
-        aggs.append(F.round(F.avg("tile_mean"), 6).alias("avg_tile_mean"))
     return pairs.groupBy("zone_id").agg(*aggs).repartition(1).sortWithinPartitions("zone_id")
 
 

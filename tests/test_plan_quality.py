@@ -71,6 +71,59 @@ def test_pip_refine_stage_is_jit_compilable(spark, sf0001_dir):
             assert sizes and max(sizes) <= HUGE_METHOD_LIMIT, (name, max_ring, sizes)
 
 
+def _py4j_commands(build) -> int:
+    """py4j commands Python sends to the JVM while `build()` runs, not
+    counting memory-release messages ("m"), whose timing follows
+    Python's GC."""
+    from pyspark import SparkContext
+
+    client = SparkContext._gateway._gateway_client
+    conn = client._get_connection()
+    client._give_back_connection(conn)
+    send, n = conn.send_command, 0
+
+    def counting(command):
+        nonlocal n
+        n += not command.startswith("m\n")
+        return send(command)
+
+    conn.send_command = counting
+    try:
+        build()
+    finally:
+        del conn.send_command
+    return n
+
+
+def test_repeated_builds_reuse_expressions(spark, sf0001_dir):
+    """A second build of each headline leg reuses the first build's
+    expression trees (functions/util.per_jvm), so it sends few py4j
+    commands.  Rebuilding them every call sent 1,434 (georegister),
+    3,329 (counted pip_join) and 3,452 (zone_image_stats); reuse sends
+    55, 123 and 154.  Bounds are about 1.5x those."""
+    from georaster_spark.plans.pipeline import zone_image_stats
+
+    imgs = spark.read.parquet(str(sf0001_dir / "images.parquet"))
+    zones = spark.read.parquet(str(sf0001_dir / "zones.parquet"))
+    slim = imgs.select("image_id", "w", "h")
+    max_ring = zones.agg(F.max(F.size("ring"))).first()[0]
+    builds = {
+        "georegister": (lambda: geo.georegister(imgs), 85),
+        "pip_join": (
+            lambda: pip_join(
+                geo.georegister(slim), zones, x=geo.centroid_x(), y=geo.centroid_y(),
+                max_ring=max_ring,
+            ).agg(F.count(F.lit(1))),
+            185,
+        ),
+        "zone_image_stats": (lambda: zone_image_stats(imgs, zones, max_ring=max_ring), 230),
+    }
+    for name, (build, bound) in builds.items():
+        build()
+        n = _py4j_commands(build)
+        assert n <= bound, (name, n, bound)
+
+
 def test_filter_pushdown_reaches_scan(spark, sf0001_dir):
     """A fmt filter must appear in PushedFilters at the parquet scan."""
     imgs = spark.read.parquet(str(sf0001_dir / "images.parquet"))
