@@ -573,8 +573,8 @@ def ann_sq8(
     Σ(x−mn)·(c−mn) vs top-K under the quantized-code dot, per-query
     overlap, and the corpus-level recall histogram.  Both rankings are
     pure int64 arithmetic with vec_id tie-break — bit-reproducible
-    cross-engine, so the gate row is hash-exact (same accuracy-gate
-    pattern as sketch_accuracy).
+    cross-engine, so the gate row is hash-exact: the approximate answer
+    is audited against its exact twin in the same row.
 
     Plan shape: the dims agg above, then ONE block-GEMM pass in the
     ann_topk_brute grid (no counting job, no driver collect of vectors)

@@ -6927,8 +6927,8 @@ FROM best GROUP BY station_id ORDER BY station_id
 def q_payload_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload contract audit over the image table — the ingest
     validation a 10^12-row media pipeline runs before registering a
-    snapshot (the blob twin of integrity_audit's relational checks):
-    byte length must equal w*h*bpp for the declared fmt, fmt must be a
+    snapshot (primary-key and foreign-key audits are its relational
+    counterpart): byte length must equal w*h*bpp for the declared fmt, fmt must be a
     known codec, dims must be positive and bounded, phash must be
     present.  One row per check with violation count, checked count and
     the Σidx checksum of the violating set (0 = clean).
@@ -16126,8 +16126,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("zonal_argmax", q_zonal_argmax, lambda fx, w, *_: _sql_zonal_argmax(fx, w)),
     ("temporal_trend", q_temporal_trend, lambda fx, w, *_: _sql_temporal_trend(fx, w)),
     ("idw_interpolate", q_idw, lambda fx, *_: _sql_idw(fx)),
-    ("value_outliers", rel.value_outliers, lambda *_: rel.value_outliers_sql()),
-    ("funnel_conversion", rel.funnel_conversion, lambda *_: rel.funnel_conversion_sql()),
     ("glcm_texture", q_glcm, lambda fx, w, *_: _sql_glcm(fx, w)),
     ("flow_direction", q_flow_direction, lambda fx, w, *_: _sql_flow_direction(fx, w)),
     ("flow_accum", q_flow_accum, lambda fx, w, *_: _sql_flow_accum(fx, w)),
@@ -16150,17 +16148,11 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("local_moran", q_local_moran, lambda fx, w, *_: _sql_local_moran(fx, w)),
     ("fast_corners", q_fast_corners, lambda fx, w, *_: _sql_fast_corners(fx, w)),
     ("dog_blobs", q_dog_blobs, lambda fx, w, *_: _sql_dog_blobs(fx, w)),
-    ("bloom_semi", rel.bloom_semi, lambda *_: rel.bloom_semi_sql()),
     ("bfs_hops", q_bfs_hops, lambda *_: _sql_bfs_hops()),
     ("harmonic_centrality", q_harmonic_centrality, lambda *_: _sql_harmonic_centrality()),
-    ("cohort_retention", rel.cohort_retention, lambda *_: rel.cohort_retention_sql()),
-    ("event_transitions", rel.event_transitions, lambda *_: rel.event_transitions_sql()),
-    ("scd2_history", rel.scd2_history, lambda *_: rel.scd2_history_sql()),
-    ("custdist", rel.custdist, lambda *_: rel.custdist_sql()),
     ("hilbert_rollup", q_hilbert, lambda fx, w, *_: _sql_hilbert(fx, w)),
     ("xmodal_align", q_xmodal_align, lambda fx, w, *_: _sql_xmodal_align(fx, w)),
     ("zonal_frac", q_zonal_frac, lambda fx, w, *_: _sql_zonal_frac(fx, w)),
-    ("skyline_orders", rel.skyline_orders, lambda *_: rel.skyline_orders_sql()),
     ("curation_pipeline", q_curation_pipeline, lambda fx, w, *_: _sql_curation_pipeline(fx, w)),
     ("mode_pool", q_mode_pool, lambda fx, w, *_: _sql_mode_pool(fx, w)),
     ("voronoi_assign", q_voronoi, lambda fx, *_: _sql_voronoi(fx)),
@@ -16188,15 +16180,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("shipping_priority", rel.shipping_priority, lambda *_: rel.shipping_priority_sql()),
     ("events_pivot", rel.events_pivot, lambda *_: rel.events_pivot_sql()),
     ("rolling_hour", rel.rolling_user_value, lambda *_: rel.rolling_user_value_sql()),
-    ("revenue_grouping_sets", rel.revenue_grouping_sets,
-     lambda *_: rel.revenue_grouping_sets_sql()),
-    ("nation_set_ops", rel.nation_set_ops, lambda *_: rel.nation_set_ops_sql()),
-    ("orders_above_avg", rel.orders_above_cust_avg, lambda *_: rel.orders_above_cust_avg_sql()),
-    ("order_date_strings", rel.order_date_string_stats,
-     lambda *_: rel.order_date_string_stats_sql()),
-    ("user_sessions", rel.user_sessions, lambda *_: rel.user_sessions_sql()),
-    ("sketch_accuracy", rel.sketch_accuracy, lambda *_: rel.sketch_accuracy_sql()),
-    ("orders_exists_semi", rel.orders_exists_semi, lambda *_: rel.orders_exists_semi_sql()),
     ("ann_topk_brute", vectors.ann_topk_brute, lambda *_: vectors.ann_topk_brute_sql()),
     ("ann_lsh", vectors.ann_lsh, lambda *_: vectors.ann_lsh_sql()),
     ("ann_sq8", vectors.ann_sq8, lambda *_: vectors.ann_sq8_sql()),
@@ -16217,7 +16200,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("template_match", q_template_match, lambda fx, w, *_: _sql_template_match(fx, w)),
     ("dedup_components_star", q_dedup_components_star, lambda *_: _sql_dedup_components()),
     ("getis_ord", q_getis_ord, lambda fx, w, *_: _sql_getis_ord(fx, w)),
-    ("integrity_audit", rel.integrity_audit, lambda *_: rel.integrity_audit_sql()),
     ("route_burn", q_route_burn, lambda fx, *_: _sql_route_burn(fx)),
     ("kde_heatmap", q_kde_heatmap, lambda fx, *_: _sql_kde_heatmap(fx)),
     ("transect_profile", q_transect_profile, lambda fx, *_: _sql_transect_profile(fx)),
@@ -16240,13 +16222,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("triangle_count", q_triangle_count, lambda *_: _sql_triangle_count()),
     ("box_iou", q_box_iou, lambda fx, *_: _sql_box_iou(fx)),
     ("ssim_pair", q_ssim_pair, lambda fx, w, *_: _sql_ssim_pair(fx, w)),
-    ("sole_late_shipper", rel.sole_late_shipper, lambda *_: rel.sole_late_shipper_sql()),
-    ("idle_customer_balance", rel.idle_customer_balance,
-     lambda *_: rel.idle_customer_balance_sql()),
-    ("local_supplier_volume", rel.local_supplier_volume,
-     lambda *_: rel.local_supplier_volume_sql()),
-    ("small_qty_revenue", rel.small_qty_revenue, lambda *_: rel.small_qty_revenue_sql()),
-    ("large_volume_orders", rel.large_volume_orders, lambda *_: rel.large_volume_orders_sql()),
     ("census_transform", q_census_transform, lambda fx, w, *_: _sql_census_transform(fx, w)),
     ("demosaic_bilinear", q_demosaic, lambda fx, w, *_: _sql_demosaic(fx, w)),
     ("box_nms", q_box_nms, lambda fx, *_: _sql_box_nms(fx)),
@@ -16254,51 +16229,22 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("label_propagation", q_label_propagation, lambda *_: _sql_label_propagation()),
     ("segment_intersections", q_segment_intersections,
      lambda fx, *_: _sql_segment_intersections(fx)),
-    ("autocorr_lags", rel.autocorr_lags, lambda *_: rel.autocorr_lags_sql()),
-    ("cusum_drift", rel.cusum_drift, lambda *_: rel.cusum_drift_sql()),
-    ("market_share", rel.market_share, lambda *_: rel.market_share_sql()),
-    ("promo_revenue", rel.promo_revenue, lambda *_: rel.promo_revenue_sql()),
     ("hits_scores", q_hits, lambda *_: _sql_hits()),
     ("threshold_diffusion", q_threshold_diffusion,
      lambda fx, w, *_: _sql_threshold_diffusion(fx, w)),
     ("bayer_dither", q_bayer_dither, lambda fx, w, *_: _sql_bayer_dither(fx, w)),
-    ("volume_shipping", rel.volume_shipping, lambda *_: rel.volume_shipping_sql()),
     ("haar_census", q_haar_census, lambda fx, w, *_: _sql_haar_census(fx, w)),
     ("shot_detect", q_shot_detect, lambda fx, *_: _sql_shot_detect(fx)),
-    ("kmv_distinct", rel.kmv_distinct, lambda *_: rel.kmv_distinct_sql()),
     ("degree_assortativity", q_assortativity, lambda *_: _sql_assortativity()),
     ("cost_distance", q_cost_distance, lambda fx, w, *_: _sql_cost_distance(fx, w)),
-    ("bracket_revenue", rel.bracket_revenue, lambda *_: rel.bracket_revenue_sql()),
     ("tone_census", q_tone_census, lambda fx, *_: _sql_tone_census(fx)),
-    ("late_priority_census", rel.late_priority_census, lambda *_: rel.late_priority_census_sql()),
     ("partition_skew_audit", q_partition_skew_audit, lambda fx, *_: _sql_partition_skew_audit(fx)),
-    ("bitmap_index_ops", rel.bitmap_index_ops, lambda *_: rel.bitmap_index_ops_sql()),
-    ("histogram_quantile_audit", rel.histogram_quantile_audit,
-     lambda *_: rel.histogram_quantile_audit_sql()),
-    ("seasonal_backtest", rel.seasonal_backtest, lambda *_: rel.seasonal_backtest_sql()),
-    ("rfm_segments", rel.rfm_segments, lambda *_: rel.rfm_segments_sql()),
-    ("basket_rules", rel.basket_rules, lambda *_: rel.basket_rules_sql()),
     ("rich_club", q_rich_club, lambda *_: _sql_rich_club()),
     ("box_counting", q_box_counting, lambda fx, w, *_: _sql_box_counting(fx, w)),
     ("ivm_audit", q_ivm_audit, lambda *_: _sql_ivm_audit()),
-    ("gini_split", rel.gini_split, lambda *_: rel.gini_split_sql()),
-    ("chisq_independence", rel.chisq_independence, lambda *_: rel.chisq_independence_sql()),
-    ("fano_dispersion", rel.fano_dispersion, lambda *_: rel.fano_dispersion_sql()),
     ("dag_layers", q_dag_layers, lambda *_: _sql_dag_layers()),
-    ("twap_value", rel.twap_value, lambda *_: rel.twap_value_sql()),
-    ("attribution_last_touch", rel.attribution_last_touch,
-     lambda *_: rel.attribution_last_touch_sql()),
     ("radial_profile", q_radial_profile, lambda fx, w, *_: _sql_radial_profile(fx, w)),
-    ("direction_rose", rel.direction_rose, lambda *_: rel.direction_rose_sql()),
-    ("ols_moments", rel.ols_moments, lambda *_: rel.ols_moments_sql()),
-    ("k_anonymity", rel.k_anonymity, lambda *_: rel.k_anonymity_sql()),
     ("ntile_deciles", rel.ntile_deciles, lambda *_: rel.ntile_deciles_sql()),
-    ("spearman_corr", rel.spearman_corr, lambda *_: rel.spearman_corr_sql()),
-    ("mann_whitney", rel.mann_whitney, lambda *_: rel.mann_whitney_sql()),
-    ("ks_statistic", rel.ks_statistic, lambda *_: rel.ks_statistic_sql()),
-    ("herfindahl_index", rel.herfindahl_index, lambda *_: rel.herfindahl_index_sql()),
-    ("ewma_drift", rel.ewma_drift, lambda *_: rel.ewma_drift_sql()),
-    ("kendall_tau", rel.kendall_tau, lambda *_: rel.kendall_tau_sql()),
     ("chamfer_distance", q_chamfer_distance, lambda fx, w, *_: _sql_chamfer_distance(fx, w)),
     ("bilateral_filter", q_bilateral_filter, lambda fx, w, *_: _sql_bilateral_filter(fx, w)),
     ("dbscan_clusters", q_dbscan_clusters, lambda fx, *_: _sql_dbscan_clusters(fx)),
@@ -16306,19 +16252,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("aniso_diffusion", q_aniso_diffusion, lambda fx, w, *_: _sql_aniso_diffusion(fx, w)),
     ("adaptive_threshold", q_adaptive_threshold, lambda fx, w, *_: _sql_adaptive_threshold(fx, w)),
     ("homography_warp", q_homography_warp, lambda fx, w, *_: _sql_homography_warp(fx, w)),
-    ("interval_union", rel.interval_union_len, lambda *_: rel.interval_union_len_sql()),
-    ("value_runs", rel.value_runs, lambda *_: rel.value_runs_sql()),
-    ("theil_sen", rel.theil_sen, lambda *_: rel.theil_sen_sql()),
-    ("allan_variance", rel.allan_variance, lambda *_: rel.allan_variance_sql()),
-    ("attribution_position", rel.attribution_position, lambda *_: rel.attribution_position_sql()),
-    ("revenue_drawdown", rel.revenue_drawdown, lambda *_: rel.revenue_drawdown_sql()),
-    ("part_hierarchy", rel.part_hierarchy_rollup, lambda *_: rel.part_hierarchy_rollup_sql()),
-    ("part_dominance", rel.part_dominance, lambda *_: rel.part_dominance_sql()),
-    ("edit_distance_pairs", rel.edit_distance_pairs, lambda *_: rel.edit_distance_pairs_sql()),
-    ("rescaled_range", rel.rescaled_range, lambda *_: rel.rescaled_range_sql()),
-    ("abc_classification", rel.abc_classification, lambda *_: rel.abc_classification_sql()),
-    ("sliding_distinct", rel.sliding_distinct, lambda *_: rel.sliding_distinct_sql()),
-    ("sax_words", rel.sax_words, lambda *_: rel.sax_words_sql()),
     ("edt_exact", q_edt_exact, lambda fx, w, *_: _sql_edt_exact(fx, w)),
     ("biquad_filter", q_biquad_filter, lambda fx, *_: _sql_biquad_filter(fx)),
     ("int_transform", q_int_transform, lambda fx, w, *_: _sql_int_transform(fx, w)),
@@ -16326,40 +16259,19 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("frechet_pairs", q_frechet_pairs, lambda fx, *_: _sql_frechet_pairs(fx)),
     ("polyline_simplify", q_polyline_simplify, lambda fx, *_: _sql_polyline_simplify(fx)),
     ("convex_hull", q_convex_hull, lambda fx, *_: _sql_convex_hull(fx)),
-    ("min_cost_supplier", rel.min_cost_supplier, lambda *_: rel.min_cost_supplier_sql()),
     ("percolation_sweep", q_percolation_sweep, lambda fx, w, *_: _sql_percolation_sweep(fx, w)),
     ("noise_mad", q_noise_mad, lambda fx, w, *_: _sql_noise_mad(fx, w)),
-    ("interarrival_census", rel.interarrival_census, lambda *_: rel.interarrival_census_sql()),
     ("zone_adjacency", q_zone_adjacency, lambda fx, *_: _sql_zone_adjacency(fx)),
     ("nn_zones", q_nn_zones, lambda fx, *_: _sql_nn_zones(fx)),
-    ("duplicate_payments", rel.duplicate_payments, lambda *_: rel.duplicate_payments_sql()),
-    ("benford_digits", rel.benford_digits, lambda *_: rel.benford_digits_sql()),
-    ("unit_price_spread", rel.unit_price_spread, lambda *_: rel.unit_price_spread_sql()),
-    ("cuped_moments", rel.cuped_moments, lambda *_: rel.cuped_moments_sql()),
-    ("range_frame_sums", rel.range_frame_sums, lambda *_: rel.range_frame_sums_sql()),
     ("pyramid_gap_census", q_pyramid_gap_census, lambda fx, *_: _sql_pyramid_gap_census(fx)),
-    ("native_session_window", rel.native_session_window,
-     lambda *_: rel.native_session_window_sql()),
-    ("forecast_revenue", rel.forecast_revenue, lambda *_: rel.forecast_revenue_sql()),
-    ("returned_item_report", rel.returned_item_report, lambda *_: rel.returned_item_report_sql()),
-    ("top_supplier", rel.top_supplier, lambda *_: rel.top_supplier_sql()),
-    ("important_parts", rel.important_parts, lambda *_: rel.important_parts_sql()),
-    ("part_supplier_census", rel.part_supplier_census, lambda *_: rel.part_supplier_census_sql()),
-    ("heavy_suppliers", rel.heavy_suppliers, lambda *_: rel.heavy_suppliers_sql()),
-    ("product_profit", rel.product_profit, lambda *_: rel.product_profit_sql()),
     ("affine_fit", q_affine_fit, lambda fx, *_: _sql_affine_fit(fx)),
-    ("gini_concentration", rel.gini_concentration, lambda *_: rel.gini_concentration_sql()),
-    ("asof_clicks_forward", rel.clicks_next_purchase, lambda *_: rel.clicks_next_purchase_sql()),
     ("curve_locality", q_curve_locality, lambda fx, *_: _sql_curve_locality(fx)),
-    ("latest_snapshot", rel.latest_snapshot, lambda *_: rel.latest_snapshot_sql()),
     ("fof_recommend", q_fof_recommend, lambda *_: _sql_fof_recommend()),
     ("resource_alloc", q_resource_alloc, lambda *_: _sql_resource_alloc()),
     ("hex_bin", q_hex_bin, lambda fx, *_: _sql_hex_bin(fx)),
     ("sssp_hops", q_sssp, lambda *_: _sql_sssp()),
     ("rle_census", q_rle_census, lambda fx, w, *_: _sql_rle_census(fx, w)),
     ("stream_sliding_rate", q_stream_sliding_rate, lambda fx, *_: _sql_stream_sliding_rate(fx)),
-    ("order_percentiles", rel.order_percentiles, lambda *_: rel.order_percentiles_sql()),
-    ("interval_join", rel.interval_join, lambda *_: rel.interval_join_sql()),
     ("block_motion", q_block_motion, lambda fx, w, *_: _sql_block_motion(fx, w)),
     ("buffer_area", q_buffer_area, lambda fx, *_: _sql_buffer_area(fx)),
     ("kring_smooth", q_kring_smooth, lambda fx, *_: _sql_kring_smooth(fx)),
@@ -16368,39 +16280,26 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("k_core", q_k_core, lambda *_: _sql_k_core()),
     ("mu_law_census", q_mu_law, lambda fx, *_: _sql_mu_law(fx)),
     ("join_counts", q_join_counts, lambda fx, w, *_: _sql_join_counts(fx, w)),
-    ("gorilla_size", rel.gorilla_size, lambda *_: rel.gorilla_size_sql()),
-    ("bollinger_breakouts", rel.bollinger_breakouts, lambda *_: rel.bollinger_breakouts_sql()),
-    ("hll_registers", rel.hll_registers, lambda *_: rel.hll_registers_sql()),
-    ("luhn_audit", rel.luhn_audit, lambda *_: rel.luhn_audit_sql()),
     ("cdf53_wavelet", q_cdf53, lambda fx, w, *_: _sql_cdf53(fx, w)),
     ("mst_boruvka", q_mst_boruvka, lambda fx, *_: _sql_mst_boruvka(fx)),
     ("k_truss", q_k_truss, lambda *_: _sql_k_truss()),
     ("pip_raycast", q_pip_raycast, lambda fx, *_: _sql_pip_raycast(fx)),
-    ("pacf_durbin", rel.pacf_durbin, lambda *_: rel.pacf_durbin_sql()),
     ("projection_profiles", q_projection_profiles,
      lambda fx, w, *_: _sql_projection_profiles(fx, w)),
     ("ntt_census", q_ntt_census, lambda fx, w, *_: _sql_ntt_census(fx, w)),
     ("merkle_cells", q_merkle_cells, lambda fx, w, *_: _sql_merkle_cells(fx, w)),
     ("haversine_chain", q_haversine_chain, lambda fx, *_: _sql_haversine_chain(fx)),
-    ("hash_ring_assign", rel.hash_ring_assign, lambda *_: rel.hash_ring_assign_sql()),
-    ("bloom_fpr", rel.bloom_fpr, lambda *_: rel.bloom_fpr_sql()),
     ("circular_xcorr", q_circular_xcorr, lambda fx, w, *_: _sql_circular_xcorr(fx, w)),
-    ("lpm_route", rel.lpm_route, lambda *_: rel.lpm_route_sql()),
     ("delaunay_edges", q_delaunay_edges, lambda fx, *_: _sql_delaunay_edges(fx)),
     ("apsp_paths", q_apsp_paths, lambda fx, *_: _sql_apsp_paths(fx)),
     ("bellman_ford", q_bellman_ford, lambda fx, *_: _sql_bellman_ford(fx)),
-    ("jenks_breaks", rel.jenks_breaks, lambda *_: rel.jenks_breaks_sql()),
     ("pip_anti", q_pip_anti, lambda fx, *_: _sql_pip_anti(fx)),
     ("seam_audit", q_seam_audit, lambda fx, w, *_: _sql_seam_audit(fx, w)),
     ("grid_crossings", q_grid_crossings, lambda fx, *_: _sql_grid_crossings(fx)),
-    ("poisson_bootstrap", rel.poisson_bootstrap, lambda *_: rel.poisson_bootstrap_sql()),
     ("snapshot_expire", q_snapshot_expire, lambda fx, *_: _sql_snapshot_expire(fx)),
     ("stream_quality", q_stream_quality, lambda fx, w, *_: _sql_stream_quality(fx, w)),
     ("hamming_code", q_hamming_code, lambda fx, w, *_: _sql_hamming_code(fx, w)),
     ("facility_location", q_facility_location, lambda fx, *_: _sql_facility_location(fx)),
-    ("snowflake_audit", rel.snowflake_audit, lambda *_: rel.snowflake_audit_sql()),
-    ("leaky_bucket", rel.leaky_bucket, lambda *_: rel.leaky_bucket_sql()),
-    ("psi_drift", rel.psi_drift, lambda *_: rel.psi_drift_sql()),
     ("png_filters", q_png_filters, lambda fx, w, *_: _sql_png_filters(fx, w)),
     ("brief_descriptor", q_brief_descriptor, lambda fx, w, *_: _sql_brief_descriptor(fx, w)),
     ("wasserstein_tiles", q_wasserstein_tiles, lambda fx, w, *_: _sql_wasserstein_tiles(fx, w)),
@@ -16408,115 +16307,42 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("lof_zones", q_lof_zones, lambda fx, *_: _sql_lof_zones(fx)),
     ("ransac_line", q_ransac_line, lambda fx, *_: _sql_ransac_line(fx)),
     ("walk_moments", q_walk_moments, lambda *_: _sql_walk_moments()),
-    ("ring_rebalance", rel.ring_rebalance, lambda *_: rel.ring_rebalance_sql()),
-    ("lru_mrc", rel.lru_mrc, lambda *_: rel.lru_mrc_sql()),
-    ("lru_mrc_shards", rel.lru_mrc_shards, lambda *_: rel.lru_mrc_shards_sql()),
     ("steiner_l1", q_steiner_l1, lambda fx, *_: _sql_steiner_l1(fx)),
     ("radix_balance", q_radix_balance, lambda *_: _sql_radix_balance()),
-    ("simpsons_check", rel.simpsons_check, lambda *_: rel.simpsons_check_sql()),
     ("stream_sessions_custom", q_stream_sessions_custom,
      lambda fx, *_: _sql_stream_sessions_custom(fx)),
-    ("encoding_selector", rel.encoding_selector, lambda *_: rel.encoding_selector_sql()),
-    ("kaplan_meier", rel.kaplan_meier, lambda *_: rel.kaplan_meier_sql()),
     ("dedup_eval", q_dedup_eval, lambda fx, *_: _sql_dedup_eval(fx)),
     ("modularity", q_modularity, lambda *_: _sql_modularity()),
     ("rnn_census", q_rnn_census, lambda fx, *_: _sql_rnn_census(fx)),
-    ("ipf_raking", rel.ipf_raking, lambda *_: rel.ipf_raking_sql()),
     ("motif_census", q_motif_census, lambda *_: _sql_motif_census()),
     ("single_linkage", q_single_linkage, lambda fx, *_: _sql_single_linkage(fx)),
     ("farthest_first", q_farthest_first, lambda fx, *_: _sql_farthest_first(fx)),
     ("selectivity_audit", q_selectivity_audit, lambda fx, *_: _sql_selectivity_audit(fx)),
-    ("join_card_audit", rel.join_card_audit, lambda *_: rel.join_card_audit_sql()),
-    ("hll_union_merge", rel.hll_union_merge, lambda *_: rel.hll_union_merge_sql()),
     ("two_opt_census", q_two_opt_census, lambda fx, *_: _sql_two_opt_census(fx)),
     ("compactness", q_compactness, lambda fx, *_: _sql_compactness(fx)),
-    ("record_breaks", rel.record_breaks, lambda *_: rel.record_breaks_sql()),
-    ("business_latency", rel.business_latency, lambda *_: rel.business_latency_sql()),
-    ("shapley_attribution", rel.shapley_attribution, lambda *_: rel.shapley_attribution_sql()),
-    ("absorbing_chain", rel.absorbing_chain, lambda *_: rel.absorbing_chain_sql()),
-    ("rowgroup_pruning", rel.rowgroup_pruning, lambda *_: rel.rowgroup_pruning_sql()),
-    ("sad_matrix_profile", rel.sad_matrix_profile, lambda *_: rel.sad_matrix_profile_sql()),
-    ("calibration_bins", rel.calibration_bins, lambda *_: rel.calibration_bins_sql()),
-    ("l_diversity", rel.l_diversity, lambda *_: rel.l_diversity_sql()),
-    ("weighted_sample_ares", rel.weighted_sample_ares, lambda *_: rel.weighted_sample_ares_sql()),
     ("clip_equalize", q_clip_equalize, lambda fx, w, *_: _sql_clip_equalize(fx, w)),
     ("convexity_defect", q_convexity_defect, lambda fx, *_: _sql_convexity_defect(fx)),
-    ("watermark_audit", rel.watermark_audit, lambda *_: rel.watermark_audit_sql()),
-    ("roaring_size", rel.roaring_size, lambda *_: rel.roaring_size_sql()),
-    ("time_to_convert", rel.time_to_convert, lambda *_: rel.time_to_convert_sql()),
-    ("join_order_audit", rel.join_order_audit, lambda *_: rel.join_order_audit_sql()),
     ("rlsa_smear", q_rlsa_smear, lambda fx, w, *_: _sql_rlsa_smear(fx, w)),
-    ("fifo_allocation", rel.fifo_allocation, lambda *_: rel.fifo_allocation_sql()),
     ("ring_validity", q_ring_validity, lambda fx, *_: _sql_ring_validity(fx)),
-    ("copeland_ranking", rel.copeland_ranking, lambda *_: rel.copeland_ranking_sql()),
-    ("waterfill_fairshare", rel.waterfill_fairshare, lambda *_: rel.waterfill_fairshare_sql()),
     ("pr_curve_audit", q_pr_curve_audit, lambda fx, *_: _sql_pr_curve_audit(fx)),
     ("freivalds_verify", q_freivalds_verify, lambda fx, *_: _sql_freivalds_verify(fx)),
-    ("bullwhip", rel.bullwhip, lambda *_: rel.bullwhip_sql()),
-    ("knapsack_census", rel.knapsack_census, lambda *_: rel.knapsack_census_sql()),
-    ("runs_test", rel.runs_test, lambda *_: rel.runs_test_sql()),
-    ("asof_interp", rel.asof_interp, lambda *_: rel.asof_interp_sql()),
     ("ring_centroid", q_ring_centroid, lambda fx, *_: _sql_ring_centroid(fx)),
-    ("apportionment_census", rel.apportionment_census, lambda *_: rel.apportionment_census_sql()),
-    ("johnson_schedule", rel.johnson_schedule, lambda *_: rel.johnson_schedule_sql()),
     ("zone_diameter", q_zone_diameter, lambda fx, *_: _sql_zone_diameter(fx)),
     ("btc_encode", q_btc_encode, lambda fx, w, *_: _sql_btc_encode(fx, w)),
-    ("dhondt_seats", rel.dhondt_seats, lambda *_: rel.dhondt_seats_sql()),
-    ("max2_expectation", rel.max2_expectation, lambda *_: rel.max2_expectation_sql()),
-    ("soundex_blocking", rel.soundex_blocking, lambda *_: rel.soundex_blocking_sql()),
-    ("knapsack_greedy_gap", rel.knapsack_greedy_gap, lambda *_: rel.knapsack_greedy_gap_sql()),
-    ("randomized_response", rel.randomized_response, lambda *_: rel.randomized_response_sql()),
-    ("abc_xyz", rel.abc_xyz, lambda *_: rel.abc_xyz_sql()),
-    ("t_closeness", rel.t_closeness, lambda *_: rel.t_closeness_sql()),
-    ("layout_whatif", rel.layout_whatif, lambda *_: rel.layout_whatif_sql()),
-    ("item_cosine2", rel.item_cosine2, lambda *_: rel.item_cosine2_sql()),
-    ("npv_census", rel.npv_census, lambda *_: rel.npv_census_sql()),
-    ("vat_rounding", rel.vat_rounding, lambda *_: rel.vat_rounding_sql()),
-    ("inversions_census", rel.inversions_census, lambda *_: rel.inversions_census_sql()),
-    ("stationary_dist", rel.stationary_dist, lambda *_: rel.stationary_dist_sql()),
     ("hubness_census", vectors.hubness_census, lambda *_: vectors.hubness_census_sql()),
-    ("interval_stabbing", rel.interval_stabbing, lambda *_: rel.interval_stabbing_sql()),
-    ("isqrt_audit", rel.isqrt_audit, lambda *_: rel.isqrt_audit_sql()),
     ("stream_topn", q_stream_topn, lambda fx, *_: _sql_stream_topn(fx)),
-    ("littles_law", rel.littles_law, lambda *_: rel.littles_law_sql()),
-    ("zeller_audit", rel.zeller_audit, lambda *_: rel.zeller_audit_sql()),
     ("kdtree_balance", q_kdtree_balance, lambda fx, *_: _sql_kdtree_balance(fx)),
-    ("mean_reversion", rel.mean_reversion, lambda *_: rel.mean_reversion_sql()),
-    ("median_of_medians", rel.median_of_medians, lambda *_: rel.median_of_medians_sql()),
     ("schmitt_census", q_schmitt_census, lambda fx, w, *_: _sql_schmitt_census(fx, w)),
-    ("two_hop_census", rel.two_hop_census, lambda *_: rel.two_hop_census_sql()),
     ("structure_tensor", q_structure_tensor, lambda fx, w, *_: _sql_structure_tensor(fx, w)),
-    ("diff_in_diff", rel.diff_in_diff, lambda *_: rel.diff_in_diff_sql()),
-    ("seasonal_index", rel.seasonal_index, lambda *_: rel.seasonal_index_sql()),
     ("caption_cell_audit", q_caption_cell_audit, lambda fx, *_: _sql_caption_cell_audit(fx)),
     ("phash_bit_bias", q_phash_bit_bias, lambda fx, *_: _sql_phash_bit_bias(fx)),
-    ("stickiness", rel.stickiness, lambda *_: rel.stickiness_sql()),
     ("pip_snap_sensitivity", q_pip_snap_sensitivity, lambda fx, *_: _sql_pip_snap_sensitivity(fx)),
     ("vector_raster_consistency", q_vector_raster_consistency,
      lambda fx, w, *_: _sql_vector_raster_consistency(fx, w)),
-    ("ltv_curve", rel.ltv_curve, lambda *_: rel.ltv_curve_sql()),
-    ("suppression_cost", rel.suppression_cost, lambda *_: rel.suppression_cost_sql()),
-    ("backlog_age", rel.backlog_age, lambda *_: rel.backlog_age_sql()),
-    ("decimal_drift_audit", rel.decimal_drift_audit, lambda *_: rel.decimal_drift_audit_sql()),
-    ("turning_points", rel.turning_points, lambda *_: rel.turning_points_sql()),
-    ("clustering_spectrum", rel.clustering_spectrum, lambda *_: rel.clustering_spectrum_sql()),
     ("otsu2_global", q_otsu2_global, lambda fx, w, *_: _sql_otsu2_global(fx, w)),
-    ("triangle_orientation_audit", rel.triangle_orientation_audit,
-     lambda *_: rel.triangle_orientation_audit_sql()),
-    ("birthday_census", rel.birthday_census, lambda *_: rel.birthday_census_sql()),
-    ("markov_order_gain", rel.markov_order_gain, lambda *_: rel.markov_order_gain_sql()),
-    ("repeat_by_first_size", rel.repeat_by_first_size, lambda *_: rel.repeat_by_first_size_sql()),
-    ("event_study", rel.event_study, lambda *_: rel.event_study_sql()),
-    ("shipment_span", rel.shipment_span, lambda *_: rel.shipment_span_sql()),
-    ("reactivation", rel.reactivation, lambda *_: rel.reactivation_sql()),
-    ("event_streaks", rel.event_streaks, lambda *_: rel.event_streaks_sql()),
     ("zone_area_gini", q_zone_area_gini, lambda fx, *_: _sql_zone_area_gini(fx)),
-    ("leaderboard_churn", rel.leaderboard_churn, lambda *_: rel.leaderboard_churn_sql()),
-    ("peak_hours", rel.peak_hours, lambda *_: rel.peak_hours_sql()),
     ("quadrat_vmr", q_quadrat_vmr, lambda fx, *_: _sql_quadrat_vmr(fx)),
     ("ingest_drift", q_ingest_drift, lambda fx, *_: _sql_ingest_drift(fx)),
-    ("cohort_ltv", rel.cohort_ltv, lambda *_: rel.cohort_ltv_sql()),
-    ("purchase_tails", rel.purchase_tails, lambda *_: rel.purchase_tails_sql()),
 )
 
 

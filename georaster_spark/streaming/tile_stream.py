@@ -398,8 +398,8 @@ def sliding_rate(
 
 
 def stream_ewma(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch EWMA control chart
-    (relational.ewma_drift): per-user exponentially-weighted average as
+    """Streaming EWMA control chart, checked against the batch oracle
+    relational.ewma_drift_sql: per-user exponentially-weighted average as
     a custom stateful operator via applyInPandasWithState.  State per
     user = (s, ssum, n, spikes); each micro-batch's rows are applied in
     (ts, event_id) order continuing from stored state, so with an

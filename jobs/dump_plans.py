@@ -34,7 +34,6 @@ DEFAULT = [
     "mosaic_regions",     # A17: seam strips + fragment-graph CC rounds
     "zonal_quantiles",    # A23: histogram partials, O(pairs*values) shuffle
     "cell_rollup",        # A19: aggregates-of-aggregates up the cell tree
-    "user_sessions",      # A27: one-exchange lag/cumsum/agg sessionization
     "zone_overlap",       # A26: cell-prefiltered pair join, no cross join
     "pagerank_graph",     # A30: checkpointed per-round join + agg
     "image_augment",      # A32: one fused Arrow hop, bytes never emitted
@@ -44,7 +43,6 @@ DEFAULT = [
     "geohash_rollup",     # A49: 40-term interleave in one codegen Project
     "image_quality",      # A41: map-only fused Laplacian pass
     "idw_interpolate",    # A52: filter-refine neighbor candidates
-    "value_outliers",     # A53: one window exchange reused by the agg
     "flow_direction",     # A58: map-only fused D8 pass
     "curation_pipeline",  # A59: composed gates, no pixel shuffle
     "zonal_frac",         # A89: fractional-coverage zonal, fused partials
@@ -59,43 +57,31 @@ DEFAULT = [
     "getis_ord",          # A104: co-located lattice join + 2-scalar bcast
     "hough_lines",        # A106: map-only composite-bincount vote pass
     "watershed",          # A107: map-only pointer-jumping pass
-    "gorilla_size",       # R3b: one window shuffle, codegen CASE ladder
-    "hll_registers",      # R3b: map-only hash + 64-group partial+final
     "mst_boruvka",        # R3b: per-round min-struct agg + star contraction
     "k_truss",            # R3b: oriented triangle join + support filter
     "bellman_ford",       # R3b: per-round edge relax join + groupBy min
     "merkle_cells",       # R3b: one Arrow decode + sorted md5 folds
     "pip_raycast",        # R3b: broadcast edges + parity groupBy
-    "lpm_route",          # R3b: broadcast CIDR table + struct argmax
-    "poisson_bootstrap",  # R3b: map-only multiplicity + 8-group agg
     "route_burn",         # A108: broadcast waypoint join + codegen DDA
     "semdedup",           # A112: IVF-cell groupBy applyInPandas GEMM
     "ann_ivfpq",          # A114: bucket-pruned compressed-domain scan
     "kmeans_embed",       # A115: map-only assign + K-row driver update
     "dedup_components_star",  # A116: star-contraction CC rounds
-    "integrity_audit",    # A117: anti-join FK checks union
     "flow_length",        # A118: pointer jumping with additive weights
     "adaptive_quadtree",  # A121: per-level census + bounded hot broadcasts
     "od_matrix",          # A122: one user-key window + OD-pair agg
-    "scd2_history",       # A123: change-point filter between two windows
     "resize_bilinear",    # A126: map-only fused fixed-point gather
     "payload_integrity",  # A127: map-only flags, single-row agg, stack()
     "geodesic_assign",    # A128: map-only chord argmin, codegen
-    "event_transitions",  # A129: one user-key lead() window
     "hilbert_range_scan", # A130: driver range plan + OR-of-BETWEENs prune
     "voronoi_assign",     # A62 (round-3 replan): scalar least()+CASE argmin
     "zonal_majority",     # A50-family (round-3 replan): cached-decode hist partials
-    "local_supplier_volume",  # A160: Q5 join pyramid, broadcast dims
     "box_nms",            # A165: named-column greedy cascade, zero shuffle
     "clustering_coeff",   # A166: degree-ordered wedges, 3-way corner credit
     "segment_intersections",  # A172: grid bucket join + ccw refine
     "hits_scores",        # A177: per-half-round edge join + sum agg
     "threshold_diffusion",    # A178: fused multi-round Arrow pass
-    "kmv_distinct",       # A183: distinct-hash agg + TakeOrdered bottom-k
     "ivf_nprobe_sweep",   # A186: probe-once candidates + GEMM truth
-    "bitmap_index_ops",   # A193: bit_or word build + index-sized algebra
-    "histogram_quantile_audit",  # A194: sketch vs distributed global rank
-    "basket_rules",       # A198: pair self-join + broadcast marginals
     "ivm_audit",          # A201: delta-partition scan + dims outer merge
     "partition_skew_audit",   # A192: cell census + p99 order statistic
 ]

@@ -61,7 +61,7 @@ def main() -> int:
     )
     def fresh_con():
         # bound the sibling allocator AND recycle it periodically: the
-        # Spark JVM (48g driver heap) and DuckDB share one box, and a
+        # Spark JVM (heap = MemTotal/2) and DuckDB share one box, and a
         # 549-query session fragments DuckDB's native arenas until a
         # kilobyte-sized malloc fails (std::bad_alloc ~query 400, seen
         # twice in r5 even with memory_limit set).  A fresh connection

@@ -19,8 +19,9 @@ QUERIES = [
     # round-3 additions: one per new operator family (shuffly shapes
     # where partition count could plausibly leak into the result)
     "box_nms", "segment_intersections",
-    "label_propagation", "histogram_quantile_audit", "basket_rules",
-    "ann_binary_hamming", "percolation_sweep",
+    "label_propagation", "ann_binary_hamming", "percolation_sweep",
+    # a 3-way join with a distributed top-k, and a cross-partition NTILE
+    "shipping_priority", "ntile_deciles",
 ]
 
 

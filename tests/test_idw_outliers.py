@@ -1,5 +1,5 @@
-"""IDW interpolation + quantile-threshold outliers: contract parity at
-sf0.001 and semantic sanity checks."""
+"""IDW interpolation: contract parity at sf0.001 and a brute-force
+NumPy check."""
 
 from __future__ import annotations
 
@@ -10,31 +10,22 @@ from georaster_spark.operators import georegister as geo
 from georaster_spark.operators import spatial_index as si
 
 
-def test_idw_outliers_contract_vs_duckdb(spark):
+def test_idw_contract_vs_duckdb(spark):
     import duckdb
 
-    from georaster_spark.operators import relational as rel
     from georaster_spark.plans import contract as ct
     from tests.driver_sim import table_hash
 
     sf_dir = "/root/testdata/sf0.001"
-    fx = ct._fx(sf_dir)
+    sdf = ct.q_idw(spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
     con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
-    )
-    for name, qfn, sql in [
-        ("idw_interpolate", ct.q_idw, ct._sql_idw(fx)),
-        ("value_outliers", rel.value_outliers, rel.value_outliers_sql()),
-    ]:
-        sdf = qfn(spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
-        orows = con.execute(sql).fetchall()
-        ocols = [d[0] for d in con.description]
-        assert len(srows) > 0, name
-        assert len(srows) == len(orows), name
-        assert sorted(sdf.columns) == sorted(ocols), name
-        assert table_hash(sdf.columns, srows) == table_hash(ocols, orows), name
+    orows = con.execute(ct._sql_idw(ct._fx(sf_dir))).fetchall()
+    ocols = [d[0] for d in con.description]
+    assert len(srows) > 0
+    assert len(srows) == len(orows)
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert table_hash(sdf.columns, srows) == table_hash(ocols, orows)
 
 
 def test_idw_pred_matches_numpy_brute(spark, sf0001_dir):
@@ -69,17 +60,3 @@ def test_idw_pred_matches_numpy_brute(spark, sf0001_dir):
         assert abs(g["pred"] - pred) < 1e-5
         checked += 1
     assert checked > 0
-
-
-def test_outliers_rate_is_about_one_percent(spark):
-    from georaster_spark.operators import relational as rel
-
-    sf_dir = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    per_type = {r["event_type"]: r["cnt"] for r in
-                ev.groupBy("event_type").agg(F.count("*").alias("cnt")).collect()}
-    out = {r["event_type"]: r["n_outliers"]
-           for r in rel.value_outliers(spark, sf_dir).collect()}
-    for t, n in out.items():
-        # percent_rank >= .99 flags ~1% (plus ties); allow slack
-        assert 0 < n <= max(3, int(0.03 * per_type[t])), (t, n, per_type[t])

@@ -313,26 +313,6 @@ def test_terrain_stats_single_arrow_pass(spark, sf0001_dir):
     assert plan.count("MapInPandas") + plan.count("ArrowEvalPython") == 1
 
 
-def test_user_sessions_single_shuffle(spark, tmp_path):
-    """A27: the lag window, the cumsum window, and the session agg must
-    all reuse ONE user_id exchange; the scan must prune to the 4 used
-    columns."""
-    import datetime as dt
-
-    from georaster_spark.operators import relational as rel
-
-    spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1), 7, "click", 1.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    q = rel.user_sessions(spark, str(tmp_path))
-    plan = _plan(q)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    schemas = _scan_schemas(q)
-    assert schemas and all("props" not in s and "event_type" not in s for s in schemas)
-
-
 def test_pip_nonbroadcast_path_is_shuffled(spark, sf0001_dir):
     """A25: broadcast_zones=False must actually exercise the large-zones
     degradation plan — a shuffled hash join on cell_id — not get

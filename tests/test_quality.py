@@ -108,42 +108,24 @@ def test_glcm_matches_numpy(spark, tiles):
 
 
 def test_glcm_funnel_contract_vs_duckdb(spark):
+    """glcm_texture against its DuckDB oracle at sf0.001. The funnel
+    query this test once also compared is retired."""
     import duckdb
 
-    from georaster_spark.operators import relational as rel
     from georaster_spark.plans import contract as ct
     from tests.driver_sim import table_hash
 
     sf_dir = "/root/testdata/sf0.001"
     fx = ct._fx(sf_dir)
     con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
-    )
-    for name, qfn, sql in [
-        ("glcm_texture", ct.q_glcm, ct._sql_glcm(fx, 32)),
-        ("funnel_conversion", rel.funnel_conversion, rel.funnel_conversion_sql()),
-    ]:
-        sdf = qfn(spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
-        orows = con.execute(sql).fetchall()
-        ocols = [d[0] for d in con.description]
-        assert len(srows) > 0, name
-        assert len(srows) == len(orows), name
-        assert sorted(sdf.columns) == sorted(ocols), name
-        assert table_hash(sdf.columns, srows) == table_hash(ocols, orows), name
-
-
-def test_funnel_is_monotone(spark):
-    from georaster_spark.operators import relational as rel
-
-    rows = sorted(
-        rel.funnel_conversion(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["stage"],
-    )
-    counts = [r["n_users"] for r in rows]
-    assert counts == sorted(counts, reverse=True)
-    assert counts[0] > 0 and counts[-1] >= 0
+    sdf = ct.q_glcm(spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    orows = con.execute(ct._sql_glcm(fx, 32)).fetchall()
+    ocols = [d[0] for d in con.description]
+    assert len(srows) > 0
+    assert len(srows) == len(orows)
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert table_hash(sdf.columns, srows) == table_hash(ocols, orows)
 
 
 def test_curation_pipeline_funnel_semantics(spark):

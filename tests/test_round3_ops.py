@@ -1,6 +1,5 @@
 """Unit tests for the round-3 continuation operators: NumPy/pure-Python
-oracles for the new per-tile kernels (CLAHE clip, RLSA smear, BTC) and
-known-value checks for the Soundex code and the Cramer chain solvers.
+oracles for the new per-tile kernels (CLAHE clip, RLSA smear, BTC).
 
 The oracle gate (tests/driver_sim.py) already pins every query against
 DuckDB end-to-end; these tests pin the OPERATOR KERNELS against
@@ -11,7 +10,6 @@ even before the gate runs.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 
 def test_clip_histogram_conserves_mass_and_caps(spark):
@@ -86,62 +84,3 @@ def test_btc_encode_reconstruction_matches_numpy(spark):
     assert row["sum_lo"] == lo_s
     assert row["sum_hi"] == hi_s
     assert row["btc_checksum"] == ck
-
-
-@pytest.mark.parametrize(
-    "word,code",
-    [
-        ("robert", "R163"),
-        ("rupert", "R163"),
-        ("tymczak", "T522"),  # simplified (no h/w bridge) agrees here
-        ("pfister", "P236"),  # adjacent equal codes collapse (p,f -> one)
-        ("ring", "R52" + "0"),
-    ],
-)
-def test_soundex_known_values(spark, word, code):
-    from georaster_spark.operators import relational as rel
-
-    df = spark.createDataFrame([(1, f"x {word}")], "p_partkey long, p_name string")
-    # drive the same pipeline as the query, on a single word
-    import duckdb
-
-    con = duckdb.connect()
-    con.register("part", df.toPandas())
-    got = con.execute(rel.soundex_blocking_sql()).fetchall()
-    assert got[0][0] == code
-
-
-def test_absorbing_chain_small_closed_form(spark):
-    """On the sf0.01 events the Cramer solve must satisfy the balance
-    equation (diag(n) - T) t = n exactly: recompute both sides from
-    the raw transition counts in Python."""
-    from georaster_spark.operators import relational as rel
-
-    rows = rel.absorbing_chain(spark, "/root/testdata/sf0.01").collect()
-    assert len(rows) == 4
-    assert all(r["det_pos"] == 1 for r in rows)
-    # t_ppm within [1e6, 1e9]: at least one more step, bounded by 1000 steps
-    for r in rows:
-        assert 1_000_000 <= r["t_ppm"] < 1_000_000_000
-
-
-def test_stationary_dist_sums_to_one(spark):
-    from georaster_spark.operators import relational as rel
-
-    rows = rel.stationary_dist(spark, "/root/testdata/sf0.01").collect()
-    assert len(rows) == 5
-    assert all(r["solvable"] == 1 for r in rows)
-    s = sum(r["pi_ppm"] for r in rows)
-    # floor division loses < 1 ppm per state
-    assert 1_000_000 - 5 <= s <= 1_000_000
-
-
-def test_isqrt_audit_all_verified(spark):
-    from georaster_spark.operators import relational as rel
-
-    rows = rel.isqrt_audit(spark, "/root/testdata/sf0.01").collect()
-    assert rows and all(r["verified"] == 1 for r in rows)
-    for r in rows[:5]:
-        import math
-
-        assert r["isqrt"] == math.isqrt(r["n"])

@@ -246,39 +246,28 @@ def test_hilbert_rollup_locality_and_plan(spark, sf0001_dir):
 def test_round3_contract_vs_duckdb(spark):
     """sf0.001 parity for the round-3 batch: quadtree refinement,
     geodesic assignment, OD matrix, payload audit, bilinear resize,
-    SCD2 build, event transitions — the same compare the driver runs
-    at sf0.01."""
+    Hilbert range scan — the same compare the driver runs at sf0.01."""
     import duckdb
 
     from georaster_spark.plans import contract as ct
-    from georaster_spark.operators import relational as rel
     from tests.driver_sim import table_hash
 
     sf_dir = "/root/testdata/sf0.001"
     fx = ct._fx(sf_dir)
     con = duckdb.connect()
-    for t in ("events", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
     for name, qfn, sql in [
         ("adaptive_quadtree", ct.q_adaptive_quadtree, ct._sql_adaptive_quadtree(fx)),
         ("geodesic_assign", ct.q_geodesic_assign, ct._sql_geodesic_assign(fx)),
         ("od_matrix", ct.q_od_matrix, ct._sql_od_matrix(fx)),
         ("payload_integrity", ct.q_payload_integrity, ct._sql_payload_integrity(fx)),
         ("resize_bilinear", ct.q_resize_bilinear, ct._sql_resize_bilinear(fx)),
-        ("event_transitions", rel.event_transitions, rel.event_transitions_sql()),
-        ("scd2_history", rel.scd2_history, rel.scd2_history_sql()),
         (
             "hilbert_range_scan",
             ct.q_hilbert_range_scan,
             ct._sql_hilbert_range_scan(fx),
         ),
     ]:
-        if name in ("event_transitions", "scd2_history"):
-            sdf = qfn(spark, sf_dir)
-        else:
-            sdf = qfn(spark, sf_dir)
+        sdf = qfn(spark, sf_dir)
         srows = [tuple(r) for r in sdf.collect()]
         orows = con.execute(sql).fetchall()
         ocols = [d[0] for d in con.description]

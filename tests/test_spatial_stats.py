@@ -1,6 +1,5 @@
 """Round-3 spatial statistics + burn operators vs pure-NumPy oracles:
-Getis-Ord Gi* moments, KDE heatmap, DDA route burn, transect profile,
-integrity audit."""
+Getis-Ord Gi* moments, KDE heatmap, DDA route burn, transect profile."""
 
 from __future__ import annotations
 
@@ -140,26 +139,3 @@ def test_transect_profile_values(spark, sf0001_dir):
         jx = min(max(int((x - g["gt_x0"][best]) // (1000.0 / W)), 0), W - 1)
         iy = min(max(int((g["gt_y0"][best] - y) // (1000.0 / W)), 0), W - 1)
         assert r["val"] == float(arr[iy, jx])
-
-
-def test_integrity_audit_matches_duckdb(spark):
-    import duckdb
-
-    from georaster_spark.operators.relational import integrity_audit, integrity_audit_sql
-
-    td = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    for t in ("customer", "orders", "lineitem"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{td}/{t}.parquet')")
-    want = {r[0]: (r[1], r[2]) for r in con.execute(integrity_audit_sql()).fetchall()}
-    rows = {
-        r["check"]: (r["n_violations"], r["n_checked"])
-        for r in integrity_audit(spark, td).collect()
-    }
-    assert rows == want
-    assert len(rows) == 6
-    # the synthetic lineitem table has real duplicate PKs -- the audit
-    # must CATCH them, and the FK checks must come back clean
-    assert rows["lineitem_dup_pk"][0] > 0
-    assert rows["orders_orphan_custkey"][0] == 0
-    assert rows["lineitem_orphan_orderkey"][0] == 0
