@@ -37,10 +37,6 @@ def cell_encode(x: Column, y: Column, r: int) -> Column:
     ).cast("long")
 
 
-def cell_res(cell: Column) -> Column:
-    return F.shiftright(cell, RES_SHIFT)
-
-
 def cell_parent(cell: Column, r: int) -> Column:
     """Parent of a cell known to be at resolution r (static r keeps this a
     constant-folded expression)."""

@@ -3411,8 +3411,8 @@ def cost_distance(tiles: DataFrame) -> DataFrame:
     center, COST_ROUNDS rounds of dist = min(dist, min_nbr(dist) +
     v + 1) — entering a pixel costs its value + 1, so the relaxation is
     a Bellman-Ford step on the grid graph and after k rounds exactly
-    the k-hop cost-ball is settled (the bounded-round posture of
-    sssp_hops, per-tile).
+    the k-hop cost-ball is settled (bounded-round Bellman-Ford,
+    per-tile).
 
     Census per tile: pixels reached, Σ accumulated cost, max reached
     cost, and the position checksum over reached pixels.

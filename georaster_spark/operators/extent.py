@@ -1,4 +1,5 @@
-"""Ops R7/R8/R16 — extent math, extent reprojection, extent intersection.
+"""Ops R8/R16 — extent reprojection and extent intersection (R7's extent
+math is `plans/contract.q_extent`).
 
 Reference: georaster/georaster.py :: __Raster._load_ds extent (≈L180-200
 ⚠), get_extent_latlon (≈L230-260 ⚠), get_extent_projected (≈L260-300 ⚠),
@@ -22,30 +23,12 @@ from ..functions import cells
 R_EARTH = 6378137.0
 
 
-def with_extent(tiles: DataFrame) -> DataFrame:
-    """R7 — derive (xmin, xmax, ymin, ymax) from geotransform + size."""
-    return (
-        tiles.withColumn("xmin", F.col("gt_x0"))
-        .withColumn("xmax", F.col("gt_x0") + F.col("w") * F.col("gt_xres"))
-        .withColumn("ymin", F.col("gt_y0") - F.col("h") * F.col("gt_yres"))
-        .withColumn("ymax", F.col("gt_y0"))
-    )
-
-
 def merc_to_lon(x: Column) -> Column:
     return F.degrees(x / F.lit(R_EARTH))
 
 
 def merc_to_lat(y: Column) -> Column:
     return F.degrees(F.lit(2.0) * F.atan(F.exp(y / F.lit(R_EARTH))) - F.lit(math.pi / 2.0))
-
-
-def lon_to_merc(lon: Column) -> Column:
-    return F.lit(R_EARTH) * F.radians(lon)
-
-
-def lat_to_merc(lat: Column) -> Column:
-    return F.lit(R_EARTH) * F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / F.lit(2.0)))
 
 
 def extent_latlon(tiles: DataFrame) -> DataFrame:

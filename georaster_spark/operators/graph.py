@@ -1,6 +1,17 @@
 """Distributed connected components — the clustering stage of near-dup
 deduplication (pairs -> clusters -> canonical doc election).
 
+What the module holds:
+- ``connected_components``: min-label propagation (dedup, regions);
+- ``connected_components_star``: large-star/small-star contraction with
+  an optional ``forest_contract`` local pre-pass (dedup, dbscan,
+  zone_dissolve, single_linkage); its round count is read as
+  ``graph.last_star_rounds``;
+- ``canonical_docs``: one survivor per component;
+- ``boruvka_msf``: minimum spanning forest (mst_boruvka, single_linkage);
+- ``_pin`` / ``_pin_lazy``: the bounded registry of checkpointed round
+  frames these loops and knn.py share.
+
 The reference has no graph operators (it is a raster library); this is
 part of the LLM-training-data-pipeline tier the task mandates: LSH
 near-dup joins (textops MinHash/SimHash, vectors V1-V4) emit PAIRS, but dedup
@@ -186,99 +197,6 @@ def canonical_docs(components: DataFrame, vertex_col: str = "doc_id") -> DataFra
     return components.withColumn(
         "is_canonical", (F.col(vertex_col) == F.col("component")).cast("boolean")
     )
-
-
-def pagerank_int(
-    edges: DataFrame,
-    iters: int = 3,
-    scale: int = 1_000_000,
-    damp_pct: int = 85,
-) -> DataFrame:
-    """Damped PageRank with ALL-INTEGER arithmetic — the iterative graph
-    algorithm of the pipeline tier (link/influence analysis over the
-    near-dup, citation, or interaction graph).
-
-    ``edges`` is a directed (src:long, dst:long) list in which every
-    node occurs at least once as a src (symmetrize first for undirected
-    graphs — that also removes dangling-node mass loss).  Per iteration:
-
-        contrib(u->v) = rank(u) div outdeg(u)           (int64)
-        rank'(v)      = (100-damp_pct)*scale div 100
-                        + (damp_pct * sum(contrib)) div 100
-
-    Integer division and int64 sums make every iteration
-    order-independent, so the fixpoint trajectory is bit-identical on
-    any partitioning and any engine — floating-point PageRank cannot
-    cross-check this way (shuffle order perturbs the sums).
-
-    Plan shape: the (edges ⋈ outdeg) relation is localCheckpoint'ed ONCE
-    and re-probed each iteration; each round is one equi-join on src
-    (the rank side is nodes-sized — broadcastable when nodes ≪ edges)
-    plus one partial+final agg on dst, and each rank frame is
-    localCheckpoint'ed so the lineage stays one round deep (the
-    cell_rollup lesson: lazy DAGs duplicate upstream work into every
-    consumer).  At 10^12 edges the per-round cost is the two shuffles
-    any synchronous PageRank round needs; convergence-free fixed
-    ``iters`` keeps the job a static DAG."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    e = edges.join(deg, "src").transform(_pin)
-    base = int((100 - damp_pct) * scale // 100)
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(int(scale)).cast("long").alias("rank")
-    )
-    for _ in range(iters):
-        contrib = e.join(ranks, e["src"] == ranks["node"]).select(
-            F.col("dst"), F.expr("rank div deg").alias("c")
-        )
-        ranks = (
-            contrib.groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").alias("insum"))
-            .select(
-                "node",
-                (F.lit(base) + F.expr(f"({damp_pct} * insum) div 100"))
-                .cast("long")
-                .alias("rank"),
-            )
-            .transform(_pin)
-        )
-    return ranks
-
-
-def bfs_min_hops(
-    edges: DataFrame, seeds: DataFrame, max_hops: int = 4
-) -> DataFrame:
-    """Distributed BFS: minimum hop distance (0..max_hops) from a seed
-    set over a directed edge list (src:long, dst:long) — the
-    multi-hop-reachability primitive stock SQL engines express with
-    WITH RECURSIVE (the DuckDB oracle does exactly that) and Spark
-    expresses as an iterative frontier loop.
-
-    Frontier algorithm: visited holds (node, d); each round the
-    frontier joins edges, anti-joins visited (so a node keeps its FIRST
-    = minimum distance), and both sets advance.  `localCheckpoint`
-    truncates lineage per round — same policy as pagerank_int/
-    connected_components.  max_hops bounds rounds, so termination does
-    not depend on data.
-
-    Scale shape: per round one src-keyed equi-join + one node-keyed
-    anti-join; at 10^12 edges both are co-partitioned shuffles on the
-    same keys; frontiers shrink geometrically on expander-ish graphs."""
-    frontier = seeds.select(F.col("node").cast("long").alias("node")).distinct()
-    visited = frontier.withColumn("d", F.lit(0))
-    frontier = frontier.transform(_pin)
-    for d in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .transform(_pin)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt.withColumn("d", F.lit(d)))
-        frontier = nxt
-    return visited
 
 
 def forest_contract(edges: DataFrame, n_parts: int = 8) -> DataFrame:
@@ -472,722 +390,6 @@ def connected_components_star(
     )
 
 
-def triangle_census(edges: DataFrame) -> DataFrame:
-    """Exact distributed triangle counting with degree-ordered wedge
-    enumeration (Suri & Vassilvitskii, "Counting Triangles and the Curse
-    of the Last Reducer", WWW'11 — the MPC-standard algorithm; networkx
-    ``triangles`` / Spark GraphX ``triangleCount`` analog).
-
-    ``edges`` is an undirected simple edge list (u:long, v:long); rows
-    are deduped and self-loops dropped here, so callers may pass raw
-    co-occurrence pairs.
-
-    Orientation: every edge points from its lower-(degree, id) endpoint
-    to the higher one.  Each wedge (a->b, a->c) is then generated ONCE,
-    at its lowest-degree apex a, and closed by probing the oriented edge
-    (b, c).  This caps per-key fan-out at O(sqrt(m)) wedges for any
-    degree distribution — the whole point: a hot vertex of degree d no
-    longer contributes d^2 wedges, because high-degree endpoints never
-    serve as apex.
-
-    Returns ONE global census row: n_nodes, n_edges, n_triangles,
-    n_wedges (open paths of length 2 = sum C(deg, 2)), max_degree, and
-    an integer transitivity in parts-per-million (3*tri*1e6 // wedges).
-
-    Scale shape: two shuffles on vertex keys (degree agg + orientation
-    join), one adjacency-array build (groupBy apex, arrays O(sqrt m)
-    long by the orientation bound), then the edge-iterator pass — each
-    oriented edge joins its two endpoints' arrays and the triangle
-    count is Σ |N⁺(a) ∩ N⁺(b)| via codegen'd array_intersect.  Every
-    shuffled frame is Θ(m); the quadratic wedge work never materializes
-    as rows (the former wedge self-join shuffled ~30x the edge count on
-    dense graphs — the r4 sf1 wall).  No driver loops, no UDFs.
-
-    The deduped edge list, the degree table, and the oriented edges are
-    each consumed by several differently-pruned subtrees (union legs,
-    orientation join sides, wedge legs, the closing probe), which
-    defeats plan-level ReuseExchange — so all three slim intermediates
-    (2-3 longs per row) are pinned with lazy localCheckpoints and the
-    upstream edge derivation runs exactly once."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-        .transform(_pin)
-    )
-    # Broadcast tier (_direct_support): n_triangles = Σ|N(u) ∩ N(v)|/3
-    # over edges, degree stats straight off the adjacency arrays — one
-    # groupBy total.  Shuffled tier (10^12-edge posture): orient by
-    # (deg, id) — a -> b iff (deg_a, a) < (deg_b, b) — then one
-    # edge-iterator pass (_closed_edges): Σ |N⁺(a) ∩ N⁺(b)| — no wedge
-    # table exists on either tier.
-    badj = und.count() <= KTRUSS_BCAST_EDGES
-    if badj:
-        joined, adj = _direct_support(und)
-        tri = joined.agg(
-            F.expr(
-                "coalesce(sum(size(array_intersect(nu, nv))), 0) div 3"
-            ).cast("long").alias("n_triangles")
-        )
-        degsz = adj.select(F.size("nbrs").cast("long").alias("deg"))
-    else:
-        deg, nv = _degree_table(und)
-        bdeg = nv <= DEG_BCAST_VERTICES
-        oriented = _orient_by_degree(und, deg, bdeg, pin=True)
-        closed = _closed_edges(oriented, False)
-        tri = closed.agg(
-            F.coalesce(F.sum(F.size("cs")), F.lit(0))
-            .cast("long")
-            .alias("n_triangles")
-        )
-        degsz = deg.select("deg")
-
-    stats = degsz.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.shiftright(F.sum(F.col("deg") * (F.col("deg") - 1)), 1).alias("n_wedges"),
-        F.max("deg").alias("max_degree"),
-    )
-    ecnt = und.agg(F.count(F.lit(1)).alias("n_edges"))
-    return (
-        stats.crossJoin(ecnt)
-        .crossJoin(tri)
-        .select(
-            "n_nodes",
-            "n_edges",
-            "n_triangles",
-            "n_wedges",
-            "max_degree",
-            F.expr("div(n_triangles * 3 * 1000000, n_wedges)").alias(
-                "transitivity_ppm"
-            ),
-        )
-    )
-
-
-def sssp_rounds(
-    edges: DataFrame, seeds: DataFrame, rounds: int
-) -> DataFrame:
-    """Weighted single-source(-set) shortest paths by `rounds` Bellman-
-    Ford relaxations (the bounded-hop variant every MPC system ships;
-    GraphX Pregel ShortestPaths analog).  ``edges`` is directed
-    (src:long, dst:long, w:long), ``seeds`` is (node:long); all integer,
-    so the frontier is bit-comparable to an unrolled recursive-CTE
-    oracle.
-
-    Returns (node, dist) for every node reachable within `rounds` hops —
-    the exact distance if the true shortest path has <= `rounds` edges.
-
-    Scale shape: each round is ONE shuffle (relax join on src keyed to
-    the current distance frame) + a min agg on dst; the distance frame
-    stays nodes-sized.  Unbounded convergence loops belong to the
-    driver (cf. connected_components); a fixed unrolled round count
-    keeps the plan static and resumable."""
-    dist = seeds.select(F.col("node").cast("long").alias("node")).distinct()
-    dist = dist.withColumn("d", F.lit(0).cast("long"))
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("long").alias("w"),
-    )
-    for _ in range(rounds):
-        relax = (
-            e.join(dist, e["src"] == dist["node"])
-            .select(F.col("dst").alias("node"), (F.col("d") + F.col("w")).alias("d"))
-        )
-        # keep lineage one round deep (cf. connected_components note:
-        # AQE re-renders the nested tree per action, O(rounds²) planning)
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-            .transform(_pin)
-        )
-    return dist.select("node", F.col("d").alias("dist"))
-
-
-def k_core_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
-    """Bounded-round k-core peeling (Matula & Beck 1983; the
-    degeneracy-ordering building block of community mining and of
-    triangle-count work bounds): repeatedly drop vertices with degree
-    < k and the edges touching them.  `rounds` fixed peels make the
-    plan a static DAG; the true k-core is reached when a round removes
-    nothing (the census row shows convergence).
-
-    Returns one census row per round r (1-based): surviving n_nodes,
-    n_edges, and a node checksum — so the trajectory, not just the
-    fixpoint, is pinned.
-
-    Scale shape: per round ONE degree agg + ONE semi-join edge filter
-    (both combiner-friendly, keyed on vertices); frames are
-    localCheckpoint'd so lineage stays round-deep."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .transform(_pin)
-    )
-    out_rows = []
-    cur = und
-    for r in range(1, rounds + 1):
-        sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("u").transform(_pin)
-        # the survivor set is Θ(n_vertices) (8 B rows): broadcast it
-        # under the vertex gate so both semi joins over the Θ(m) edge
-        # list are map-side; past the gate they stay shuffled.
-        ku = keep
-        kv = keep.select(F.col("u").alias("v"))
-        if keep.count() <= DEG_BCAST_VERTICES:
-            ku, kv = F.broadcast(ku), F.broadcast(kv)
-        cur = (
-            cur.join(ku, "u", "left_semi")
-            .join(kv, "v", "left_semi")
-            # USING-joins move the join key to column 0, so the second
-            # join leaves columns ordered (v, u); the sym union below is
-            # POSITIONAL — re-pin the order or every edge flips.
-            .select("u", "v")
-            .transform(_pin)
-        )
-        survivors = cur.select(F.col("u").alias("n")).union(
-            cur.select(F.col("v").alias("n"))
-        ).distinct()
-        census = survivors.agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("node_checksum"),
-        ).crossJoin(cur.agg(F.count(F.lit(1)).alias("n_edges")))
-        out_rows.append(census.select(F.lit(r).cast("long").alias("round"), "n_nodes", "n_edges", "node_checksum"))
-    res = out_rows[0]
-    for df in out_rows[1:]:
-        res = res.unionByName(df)
-    return res
-
-
-def clustering_coefficients(edges: DataFrame, min_triangles: int = 1) -> DataFrame:
-    """Per-node local clustering coefficient (Watts & Strogatz 1998;
-    networkx ``clustering`` / GraphFrames motif analog): for each node,
-    the fraction of its neighbor pairs that are themselves adjacent,
-    reported as exact integer parts-per-million
-    2·t(v)·10⁶ // (deg·(deg−1)) — no float ratio ever materializes.
-
-    Reuses triangle_census's degree-ordered orientation (Suri &
-    Vassilvitskii WWW'11) so wedge fan-out stays O(sqrt m) per apex
-    under any skew; each closed triangle is found ONCE and then
-    credited to all three corners with a bounded 3-way explode.
-
-    Output: nodes with >= `min_triangles` triangles (deg, n_tri,
-    coeff_ppm) — the zero-triangle tail is pinned globally by
-    triangle_census, not re-listed per node.
-
-    Slim intermediates (edge list, degrees, oriented edges) are pinned
-    with lazy localCheckpoints exactly as in triangle_census — their
-    multiple pruning-specialized consumers would otherwise re-evaluate
-    the whole upstream edge derivation per use."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .transform(_pin)
-    )
-    # same tier gate as triangle_census — exact edge count from the pin
-    badj = und.count() <= KTRUSS_BCAST_EDGES
-    if badj:
-        # broadcast tier: t(v) = ½ Σ_{(u,v) incident} |N(u) ∩ N(v)| —
-        # 2 credit rows per EDGE (each carrying the endpoint's degree
-        # straight off its adjacency array) instead of 3 per TRIANGLE,
-        # and no degree-table join on the way out.
-        joined, _adj = _direct_support(und)
-        supj = joined.select(
-            "u",
-            "v",
-            F.size("nu").cast("long").alias("du"),
-            F.size("nv").cast("long").alias("dv"),
-            F.size(F.array_intersect("nu", "nv")).alias("sup"),
-        )
-        credits = supj.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("u").alias("node"),
-                        F.col("du").alias("deg"),
-                        F.col("sup"),
-                    ),
-                    F.struct(
-                        F.col("v").alias("node"),
-                        F.col("dv").alias("deg"),
-                        F.col("sup"),
-                    ),
-                )
-            ).alias("c")
-        ).select("c.node", "c.deg", "c.sup")
-        out = (
-            credits.groupBy("node")
-            .agg(
-                F.max("deg").alias("deg"),
-                F.expr("sum(sup) div 2").alias("n_tri"),
-            )
-            # the zero-triangle tail stays un-listed on this tier too:
-            # every triangle corner has n_tri >= 1, so min_triangles=0
-            # and 1 are the same set by construction on the shuffled
-            # tier — mirror that here.
-            .where(F.col("n_tri") >= max(min_triangles, 1))
-        )
-    else:
-        deg, nv = _degree_table(und)
-        bdeg = nv <= DEG_BCAST_VERTICES
-        oriented = _orient_by_degree(und, deg, bdeg, pin=True)
-        # edge-iterator enumeration (_closed_edges): triangle (a,b,c)
-        # appears once at its (a,b) edge; a and b each credit |cs| and
-        # every common neighbor c credits 1 — 3·triangles corner rows,
-        # output-sized, no wedge table.
-        closed = _closed_edges(oriented, False)
-        corners = closed.select(
-            F.explode(
-                F.concat(
-                    F.array_repeat(F.col("a"), F.size("cs")),
-                    F.array_repeat(F.col("b"), F.size("cs")),
-                    F.col("cs"),
-                )
-            ).alias("node")
-        )
-        pert = corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_tri"))
-        out = pert.join(deg, pert["node"] == deg["u"]).where(
-            F.col("n_tri") >= min_triangles
-        )
-    return out.select(
-        "node",
-        "deg",
-        "n_tri",
-        F.expr("div(2 * n_tri * 1000000, deg * (deg - 1))").alias("coeff_ppm"),
-    )
-
-
-def label_propagation_rounds(edges: DataFrame, rounds: int) -> DataFrame:
-    """Bounded-round synchronous label propagation (Raghavan et al.
-    2007; GraphX/GraphFrames ``labelPropagation``) with a DETERMINISTIC
-    tie rule: each node adopts the most frequent label among its
-    neighbors, ties to the SMALLEST label — so the trajectory is a pure
-    function of the graph, reshuffle-proof.  Nodes start labeled with
-    their own id; isolated nodes keep it.
-
-    Returns one census row per round r (1-based): n_labels (distinct
-    surviving labels), max_community (largest label class), and the
-    Σ node·label checksum pinning the full assignment.
-
-    Scale shape: per round ONE edge⋈label equi-join (shuffles on the
-    neighbor key) + ONE (node, label) count agg + ONE argmax-by-struct
-    agg per node; label frames are localCheckpoint'd so lineage stays
-    round-deep.  The argmax is a single max(struct(cnt, -label)) —
-    never a window sort."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-    )
-    sym = und.union(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(_pin)
-    labels = (
-        sym.select(F.col("u").alias("node")).distinct()
-        .select("node", F.col("node").alias("lbl"))
-        .transform(_pin)
-    )
-    # the label map is Θ(n_vertices) rows of 16 B and is re-joined
-    # against the Θ(m) symmetric edge list every round: broadcast it
-    # under the vertex gate so the per-round join is map-side and the
-    # edge list never re-shuffles (one groupBy shuffle per round
-    # remains — the (u, nlbl) count).  Past the gate the join stays a
-    # shuffled equi-join, the 10^12-edge posture.
-    blbl = labels.count() <= DEG_BCAST_VERTICES
-    out_rows = []
-    for r in range(1, rounds + 1):
-        lmap = labels.select(F.col("node").alias("v"), F.col("lbl").alias("nlbl"))
-        if blbl:
-            lmap = F.broadcast(lmap)
-        nbr = sym.join(lmap, "v")
-        cnt = nbr.groupBy("u", "nlbl").agg(F.count(F.lit(1)).alias("cnt"))
-        best = cnt.groupBy("u").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("nlbl")).alias("neg"))).alias("m")
-        )
-        labels = best.select(
-            F.col("u").alias("node"), (-F.col("m.neg")).alias("lbl")
-        ).transform(_pin)
-        census = labels.agg(
-            F.countDistinct("lbl").alias("n_labels"),
-            F.sum(F.col("node") * F.col("lbl")).alias("label_checksum"),
-        ).crossJoin(
-            labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("sz"))
-            .agg(F.max("sz").alias("max_community"))
-        )
-        out_rows.append(
-            census.select(
-                F.lit(r).cast("long").alias("round"),
-                "n_labels",
-                "max_community",
-                "label_checksum",
-            )
-        )
-    res = out_rows[0]
-    for df in out_rows[1:]:
-        res = res.unionByName(df)
-    return res
-
-
-def hits_rounds(edges: DataFrame, rounds: int) -> DataFrame:
-    """Bounded-round HITS (Kleinberg JACM'99 hubs & authorities) on a
-    DIRECTED edge list, kept integer-exact by running the UNNORMALIZED
-    power iteration — a(v) = Σ h(u) over in-edges, h(u) = Σ a(v) over
-    out-edges — for a fixed round count (normalization only rescales;
-    the RANKING after r rounds is identical, and int64 holds r=2 on
-    degree-bounded graphs: scores grow like (max_deg)^(2r)).
-
-    Returns one census row per round: Σh, Σa, max h, max a and the two
-    node-weighted checksums pinning both full score vectors.
-
-    Scale shape: per half-round ONE edge⋈score equi-join + ONE
-    combiner-friendly sum agg (shuffles on the vertex keys, exactly the
-    pagerank_int contract); score frames are localCheckpoint'd so
-    lineage stays round-deep."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
-    ).distinct().transform(_pin)
-    hubs = e.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1).cast("long").alias("h")
-    ).transform(_pin)
-    out_rows = []
-    for r in range(1, rounds + 1):
-        auth = (
-            e.join(hubs.select(F.col("node").alias("src"), "h"), "src")
-            .groupBy("dst")
-            .agg(F.sum("h").alias("a"))
-            .select(F.col("dst").alias("node"), "a")
-            .transform(_pin)
-        )
-        hubs = (
-            e.join(auth.select(F.col("node").alias("dst"), "a"), "dst")
-            .groupBy("src")
-            .agg(F.sum("a").alias("h"))
-            .select(F.col("src").alias("node"), "h")
-            .transform(_pin)
-        )
-        census = hubs.agg(
-            F.sum("h").alias("sum_h"),
-            F.max("h").alias("max_h"),
-            F.sum(F.col("node") * F.col("h")).alias("hub_checksum"),
-        ).crossJoin(
-            auth.agg(
-                F.sum("a").alias("sum_a"),
-                F.max("a").alias("max_a"),
-                F.sum(F.col("node") * F.col("a")).alias("auth_checksum"),
-            )
-        )
-        out_rows.append(
-            census.select(
-                F.lit(r).cast("long").alias("round"),
-                "sum_h", "max_h", "hub_checksum",
-                "sum_a", "max_a", "auth_checksum",
-            )
-        )
-    res = out_rows[0]
-    for df in out_rows[1:]:
-        res = res.unionByName(df)
-    return res
-
-
-def degree_assortativity_moments(edges: DataFrame) -> DataFrame:
-    """Degree-assortativity moments (Newman PRL'02 — do hubs attach to
-    hubs?): over the symmetrized edge list, the exact integer moments
-    M, Σx, Σx², Σxy of the endpoint-degree pairs, plus the Pearson
-    coefficient in MILLI units computed from them — on the symmetrized
-    list Σy = Σx and Σy² = Σx², so the usual sqrt(varx·vary) collapses
-    to the integer M·Σx² − (Σx)² exactly and the whole coefficient is
-    one truncating integer division (milli, not ppm, keeps 10³·num
-    inside int64).
-
-    Scale shape: one degree agg + two broadcast-able degree lookups on
-    the edge list + ONE global reduce — no window, no sort."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-    )
-    sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    du = deg.select(F.col("u").alias("_u"), F.col("deg").alias("dx"))
-    dv = deg.select(F.col("u").alias("_v"), F.col("deg").alias("dy"))
-    j = sym.join(du, sym["u"] == du["_u"]).join(dv, sym["v"] == dv["_v"])
-    m = j.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum("dx").alias("sum_x"),
-        F.sum(F.col("dx") * F.col("dx")).alias("sum_x2"),
-        F.sum(F.col("dx") * F.col("dy")).alias("sum_xy"),
-    )
-    num = F.col("m") * F.col("sum_xy") - F.col("sum_x") * F.col("sum_x")
-    den2 = F.col("m") * F.col("sum_x2") - F.col("sum_x") * F.col("sum_x")
-    return m.select(
-        "m",
-        "sum_x",
-        "sum_x2",
-        "sum_xy",
-        (F.lit(1000) * num).alias("num_milli"),
-        den2.alias("den"),
-    ).select(
-        "m",
-        "sum_x",
-        "sum_x2",
-        "sum_xy",
-        F.expr("div(num_milli, den)").alias("assortativity_milli"),
-    )
-
-
-RICH_CLUB_KS = (4, 8, 16)
-
-
-def rich_club(edges: DataFrame) -> DataFrame:
-    """Rich-club coefficient (Colizza et al. Nature Physics'06 — do
-    hubs preferentially interconnect?): for each degree threshold k,
-    the subgraph induced on nodes with degree > k, reported as exact
-    integers n_k (club size), e_k (club edges) and the normalized
-    φ = 2·e_k / (n_k·(n_k−1)) in ppm.
-
-    Scale shape: ONE degree agg; per threshold a broadcast-able
-    semi-join of the edge list against the club membership (the club
-    shrinks geometrically in k, so every filter after the first is
-    tiny); counts are global reduces."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .transform(_pin)
-    )
-    sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=False
-    )
-    rows = []
-    for k in RICH_CLUB_KS:
-        club = deg.where(F.col("deg") > k).select("u")
-        nk = club.agg(F.count(F.lit(1)).alias("n_club"))
-        ek = (
-            und.join(club, "u", "left_semi")
-            .join(club.select(F.col("u").alias("v")), "v", "left_semi")
-            .agg(F.count(F.lit(1)).alias("e_club"))
-        )
-        rows.append(
-            nk.crossJoin(ek).select(
-                F.lit(k).cast("long").alias("k"),
-                "n_club",
-                "e_club",
-                F.when(
-                    F.col("n_club") >= 2,
-                    F.expr("div(2000000 * e_club, n_club * (n_club - 1))"),
-                )
-                .otherwise(F.lit(0))
-                .alias("phi_ppm"),
-            )
-        )
-    res = rows[0]
-    for df in rows[1:]:
-        res = res.unionByName(df)
-    return res
-
-
-def dag_layer_census(edges: DataFrame, rounds: int) -> DataFrame:
-    """Topological layering by Kahn peeling (the scheduling/critical-
-    path primitive: layer k = nodes whose longest incoming path is k):
-    each round removes the current zero-in-degree set; the census row
-    per round pins layer size, node checksum, and surviving edges.
-    `edges` must be a DAG — callers orient by key (u < v), which is
-    acyclic by construction.
-
-    Scale shape: per round ONE in-degree agg (dst-keyed) + ONE anti/
-    semi-join pair removing the layer — the k-core contract with
-    in-degree-0 as the peel rule; frames localCheckpoint'd."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
-    ).where(F.col("src") != F.col("dst")).distinct().transform(_pin)
-    nodes = (
-        e.select(F.col("src").alias("n"))
-        .union(e.select(F.col("dst").alias("n")))
-        .distinct()
-        .transform(_pin)
-    )
-    out_rows = []
-    cur_e = e
-    cur_n = nodes
-    for r in range(1, rounds + 1):
-        with_in = cur_e.select(F.col("dst").alias("n")).distinct()
-        layer = cur_n.join(with_in, "n", "left_anti").transform(_pin)
-        cen = layer.agg(
-            F.count(F.lit(1)).alias("layer_size"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("layer_checksum"),
-        )
-        cur_n = cur_n.join(layer, "n", "left_anti").transform(_pin)
-        cur_e = (
-            cur_e.join(layer.select(F.col("n").alias("src")), "src", "left_anti")
-            .transform(_pin)
-        )
-        ecen = cur_e.agg(F.count(F.lit(1)).alias("n_edges_left"))
-        out_rows.append(
-            cen.crossJoin(ecen).select(
-                F.lit(r).cast("long").alias("round"),
-                "layer_size",
-                "layer_checksum",
-                "n_edges_left",
-            )
-        )
-    res = out_rows[0]
-    for df in out_rows[1:]:
-        res = res.unionByName(df)
-    return res
-
-
-FOF_TOPK = 20
-
-
-def fof_recommendations(edges: DataFrame) -> DataFrame:
-    """Friend-of-friend link recommendation (the common-neighbors
-    ranker of 'people you may know' / co-purchase 'bought together'
-    panels): for every NON-adjacent pair with at least one common
-    neighbor, the exact common-neighbor count, top-FOF_TOPK by
-    (common DESC, pair ASC).
-
-    Scale shape: the wedge self-join runs on the SYMMETRIC adjacency
-    (exactness needs every apex, so per-apex fan-out is deg² — at
-    10¹² rows cap or sample apex degrees, as for any hot join key;
-    the fixture's degrees are bounded); existing edges are
-    removed by ONE anti-join on the canonical pair; ranking is
-    TakeOrdered."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .transform(_pin)
-    )
-    sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    a = sym.select(F.col("u").alias("apex"), F.col("v").alias("p"))
-    b = sym.select(F.col("u").alias("apex"), F.col("v").alias("q"))
-    wedges = a.join(b, "apex").where(F.col("p") < F.col("q"))
-    cn = wedges.groupBy("p", "q").agg(F.count(F.lit(1)).alias("common"))
-    non_adj = cn.join(
-        und.select(F.col("u").alias("p"), F.col("v").alias("q")),
-        ["p", "q"],
-        "left_anti",
-    )
-    return non_adj.orderBy(
-        F.desc("common"), F.asc("p"), F.asc("q")
-    ).limit(FOF_TOPK)
-
-
-RA_SCALE = 10**12  # integer reciprocal scale: weight(z) = RA_SCALE div deg(z)
-RA_TOPK = 20
-
-
-def resource_allocation(edges: DataFrame) -> DataFrame:
-    """Resource-Allocation link prediction (Zhou, Lü & Zhang, EPJ B
-    2009): for every NON-adjacent pair (p, q) with at least one common
-    neighbor z, score RA(p,q) = Σ_z 1/deg(z) — common neighbors count
-    for less when they are promiscuous hubs.  Kept integer-exact by
-    scoring each apex as RA_SCALE div deg(z) (floor division on longs),
-    so the ranking is reproducible bit-for-bit across engines and
-    parallelism (no float summation order).
-
-    Output: top-RA_TOPK rows (p, q, ra_score, n_common) by
-    (ra_score DESC, p ASC, q ASC).
-
-    Scale shape: same degree-keyed wedge machinery as
-    fof_recommendations — one shuffle for degrees, a wedge self-join on
-    the apex (per-apex fan-out deg²; cap or sample hot apexes at 10¹²
-    rows), a broadcast-or-shuffle
-    apex→deg lookup, one partial+final agg on the candidate pair, one
-    anti-join against the existing edge set, TakeOrdered for the top-K.
-    The deduped edge list is pinned (lazy localCheckpoint) because the
-    wedge legs and the anti-join consume it with different pruning."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .transform(_pin)
-    )
-    sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    a = sym.select(F.col("u").alias("apex"), F.col("v").alias("p"))
-    b = sym.select(F.col("u").alias("apex"), F.col("v").alias("q"))
-    wedges = a.join(b, "apex").where(F.col("p") < F.col("q"))
-    scored = wedges.join(deg.withColumnRenamed("u", "apex"), "apex").select(
-        "p", "q", F.expr(f"{RA_SCALE}L div deg").alias("w")
-    )
-    cand = scored.groupBy("p", "q").agg(
-        F.sum("w").alias("ra_score"), F.count(F.lit(1)).alias("n_common")
-    )
-    non_adj = cand.join(
-        und.select(F.col("u").alias("p"), F.col("v").alias("q")),
-        ["p", "q"],
-        "left_anti",
-    )
-    return non_adj.orderBy(
-        F.desc("ra_score"), F.asc("p"), F.asc("q")
-    ).limit(RA_TOPK)
-
-
-def harmonic_centrality(
-    edges: DataFrame, seeds: DataFrame, max_hops: int = 3, scale: int = 6
-) -> DataFrame:
-    """Bounded-radius harmonic centrality for a seed set: for each seed
-    u, H(u) = Σ_{v: 0 < d(u,v) ≤ max_hops} 1/d(u,v) — the
-    disconnected-safe centrality (Boldi & Vigna 2014) that search and
-    influence ranking use where closeness diverges.  Kept integer-exact
-    by scaling with LCM(1..max_hops) (6 for the default radius 3):
-    h6 = Σ (6 DIV d) — 6, 3, 2 per hop ring — plus the plain reach
-    count, so no float enters the hash surface.
-
-    Algorithm: labeled multi-source BFS — the bfs_min_hops frontier loop
-    with a seed tag carried along, so each (seed, node) keeps its FIRST
-    (= minimum) distance via the per-round anti-join.  localCheckpoint
-    truncates lineage per round; max_hops bounds rounds.
-
-    Scale shape: each round is one src-keyed equi-join plus one
-    (seed,node)-keyed anti-join — co-partitioned shuffles; state is
-    O(seeds × reach), which the bounded radius caps.  At 10^12 edges
-    you shard the seed set and union the (tiny) per-seed aggregates."""
-    frontier = (
-        seeds.select(F.col("node").cast("long").alias("seed"))
-        .distinct()
-        .select("seed", F.col("seed").alias("node"))
-        .transform(_pin)
-    )
-    visited = frontier.withColumn("d", F.lit(0))
-    for d in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .transform(_pin)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt.withColumn("d", F.lit(d)))
-        frontier = nxt
-    return (
-        visited.where(F.col("d") > 0)
-        .groupBy("seed")
-        .agg(
-            F.sum(F.expr(f"{scale} DIV d")).alias(f"h{scale}"),
-            F.count(F.lit(1)).alias("n_reached"),
-        )
-    )
-
-
 def boruvka_msf(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     """Minimum spanning forest via Borůvka rounds (Borůvka 1926; the
     standard MST algorithm for bulk-parallel frameworks because every
@@ -1307,414 +509,4 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
         )
     return chosen.select(
         F.col("u").alias("za"), F.col("v").alias("zb"), F.col("w").alias("weight")
-    )
-
-
-# edge-count gate for the triangle family's broadcast plan: 4M edges x
-# 16 B ≈ 64 MB hashed/array relation — comfortably executor-sized;
-# above it the adjacency joins revert to shuffled equi-joins.
-# Two INDEPENDENT broadcast gates for the triangle family.  The frames
-# they guard scale differently, so keying both on the edge count (the
-# pre-r5c behavior) left the cheap one on the shuffle path for graphs
-# whose VERTEX set was tiny: the sf1 co-purchase graph has 12M edges
-# but only 200k vertices, and shuffling 12M rows twice per round
-# against a 200k-row degree table cost ~25% of the whole k_truss wall.
-#   - degree table: Θ(n_vertices) rows of 16 B — broadcast iff the
-#     vertex count fits (5M rows ≈ 80 MB per executor copy);
-#   - adjacency arrays: Θ(n_edges) longs total (the orientation bound
-#     caps each ROW at O(sqrt m), not the payload) — broadcast iff the
-#     edge count fits (16M longs ≈ 128 MB).  Measured at sf1 (12M
-#     edges): broadcast-adjacency beats the shuffled join because the
-#     shuffled plan re-shuffles per-edge ARRAY COPIES (~Σ|N⁺| longs)
-#     on the second join key.
-# Past either gate the joins fall back to shuffled equi-joins — the
-# 10^12-edge posture, where neither frame fits an executor.
-KTRUSS_BCAST_EDGES = 16_000_000
-DEG_BCAST_VERTICES = 5_000_000
-
-
-def _degree_table(cur: DataFrame) -> tuple[DataFrame, int]:
-    """Symmetrized degree table for an undirected u<v edge list, pinned
-    (it is consumed by both orientation join sides and by callers'
-    stats aggregates).  Returns (deg, n_vertices) — the count doubles
-    as the materialization barrier and the DEG_BCAST_VERTICES gate
-    input, so no extra job is spent deciding the broadcast."""
-    sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).transform(_pin_lazy)
-    return deg, deg.count()
-
-
-def _orient_by_degree(
-    cur: DataFrame, deg: DataFrame, bdeg: bool, pin: bool
-) -> DataFrame:
-    """Degree-ordered orientation (Suri & Vassilvitskii WWW'11): every
-    undirected u<v edge re-pointed from its lower-(deg, id) endpoint to
-    the higher one, so out-degrees are O(sqrt m) under ANY skew.  The
-    degree lookups broadcast under the vertex-count gate (`bdeg`).
-
-    `pin` should be False on the all-broadcast path: there the frame is
-    a pure map over the (already pinned) edge list and recomputing it
-    per consumer inside one codegen stage is cheaper than a
-    localCheckpoint materialization barrier (measured −20% on the sf1
-    k_truss round)."""
-    du = deg.select(F.col("u").alias("_au"), F.col("deg").alias("_da"))
-    dv = deg.select(F.col("u").alias("_bv"), F.col("deg").alias("_db"))
-    if bdeg:
-        du, dv = F.broadcast(du), F.broadcast(dv)
-    keyed = cur.join(du, cur["u"] == du["_au"]).join(dv, cur["v"] == dv["_bv"])
-    fwd = (F.col("_da") < F.col("_db")) | (
-        (F.col("_da") == F.col("_db")) & (F.col("u") < F.col("v"))
-    )
-    out = keyed.select(
-        F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-    )
-    return out.transform(_pin_lazy) if pin else out
-
-
-def _closed_edges(oriented: DataFrame, bcast: bool) -> DataFrame:
-    """(a, b, cs) for every oriented edge a→b that closes at least one
-    triangle: cs = N⁺(a) ∩ N⁺(b), the common out-neighbors.  Each
-    triangle (a, b, c) with a<b<c in the (deg, id) total order appears
-    EXACTLY once — at its (a, b) edge, with c ∈ cs.
-
-    This is the edge-iterator formulation: the classic wedge self-join
-    materializes and SHUFFLES Σ C(outdeg, 2) wedge rows for the closing
-    probe (~30x the edge count on the sf1 co-purchase graph — the r4
-    46 s sf1 wall), whereas here the only shuffled frames are the edge
-    list and the adjacency arrays (both Θ(m)); the quadratic work —
-    the intersections — runs inside codegen on sorted arrays that are
-    O(sqrt m) long by the orientation bound.  At 10^12 edges the same
-    plan holds: adjacency rows cap at ~sqrt(2m) longs and the joins
-    stay vertex-keyed equi-joins."""
-    adj = oriented.groupBy("a").agg(
-        F.sort_array(F.collect_list("b")).alias("nbrs")
-    )
-    if not bcast:
-        # shuffled tier: adj feeds two differently-keyed join sides —
-        # pin it so the groupBy runs once.  On the broadcast tier each
-        # side materializes into its own broadcast relation anyway, and
-        # a checkpoint barrier would only add a third materialization.
-        adj = adj.transform(_pin_lazy)
-    na = adj.select(F.col("a"), F.col("nbrs").alias("na"))
-    nb = adj.select(F.col("a").alias("b"), F.col("nbrs").alias("nb"))
-    if bcast:
-        na, nb = F.broadcast(na), F.broadcast(nb)
-    return (
-        oriented.join(na, "a")
-        .join(nb, "b")
-        .select("a", "b", F.array_intersect("na", "nb").alias("cs"))
-        .where(F.size("cs") > 0)
-    )
-
-
-def _direct_support(cur: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Broadcast-tier per-edge triangle support: for every edge (u, v)
-    of the undirected u<v list `cur`, attach both endpoints' FULL
-    sorted neighbor arrays; sup(u,v) = |N(u) ∩ N(v)| is then a single
-    codegen'd array_intersect per edge — no orientation pass, no
-    triangle explode, no support groupBy, and the truss peel becomes a
-    map-side filter.  Returns (joined, adj): `joined` is cur + nu/nv
-    arrays, `adj` the (vertex, sorted neighbors) table for degree
-    stats.
-
-    Cost model vs the oriented edge-iterator (_closed_edges): the
-    intersections do Σ_edges (deg u + deg v) = Σ deg² element ops —
-    more than the oriented Σ C(outdeg, 2) bound and not skew-robust
-    (a hub of degree h costs O(h) on each incident edge) — but every
-    shuffle after the adjacency build disappears.  Measured on the sf1
-    co-purchase graph (12M edges, max deg ~10³): 13.5 s vs 32-52 s for
-    the oriented broadcast plan, stable across interleaved reps.  This
-    tier only runs under KTRUSS_BCAST_EDGES (adjacency payload 2m
-    longs broadcast twice); past the gate callers use the oriented
-    shuffled plan, whose skew bound and Θ(m) frames are the
-    10^12-edge posture."""
-    sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    adj = sym.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("nbrs"))
-    nu = F.broadcast(adj.select(F.col("u"), F.col("nbrs").alias("nu")))
-    nv = F.broadcast(adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nv")))
-    return cur.join(nu, "u").join(nv, "v"), adj
-
-
-def k_truss_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
-    """Bounded-round k-truss peeling (Cohen 2008 — the triangle-support
-    sibling of k-core, the standard cohesive-subgraph definition for
-    community cores): repeatedly drop edges in fewer than k-2
-    triangles.  `rounds` fixed peels make the plan a static DAG; the
-    census row per round pins the whole trajectory (n_edges, triangle
-    count before the peel, and an edge checksum), so convergence is
-    visible when a round removes nothing.
-
-    Triangles enumerate once each via the DEGREE-ORDERED edge-iterator
-    pass (Suri & Vassilvitskii WWW'11 orientation + _closed_edges'
-    adjacency-array intersections: per-apex out-degree O(sqrt m) under
-    any skew, wedge work inside codegen, never as shuffled rows); each
-    triangle credits its three undirected edges and the support is ONE
-    streamed groupBy over the exploded triple — the triangle table is
-    never pinned or cached (VERDICT r4 item 1: pinning it was the
-    round's memory + wall regression).  The pre-peel triangle count
-    falls out of the support table for free (Σ sup = 3·triangles), so
-    no second enumeration pass either.
-
-    Scale shape per round: two vertex-keyed shuffles (degree agg +
-    orientation join), one adjacency build, the edge-iterator join,
-    one partial+final support count, one equi peel — all codegen'd
-    joins; only the EDGE-sized frames (peeled edges, oriented edges,
-    degrees, adjacency arrays, support) are pinned, every
-    triangle-sized intermediate streams.  Once a round removes nothing
-    the peel is at fixpoint and the remaining census rows are emitted
-    from the cached round-r aggregates without re-running the
-    enumeration."""
-    und = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .transform(_pin)
-    )
-    out_rows = []
-    cur = und
-    n_before = cur.count()
-    last_census = None
-    fixed = False
-    for r in range(1, rounds + 1):
-        if fixed:
-            # fixpoint: identical edge set ⟹ identical triangles,
-            # support, and census — emit from the cached aggregates.
-            out_rows.append(
-                last_census.select(
-                    F.lit(r).cast("long").alias("round"),
-                    "n_edges",
-                    "n_tris_pre",
-                    "edge_checksum",
-                )
-            )
-            continue
-        # the edge count is already materialized (the pin), so the tier
-        # gate costs nothing.  Broadcast tier (_direct_support): sup is
-        # a per-edge array_intersect size and the peel a map-side
-        # filter — ZERO edge-sized shuffles in the whole round.
-        # Shuffled tier (the 10^12-edge posture): degree-ordered
-        # edge-iterator enumeration + streamed 3-credit support groupBy,
-        # with the degree lookups broadcast under the separate
-        # vertex-count gate.
-        badj = n_before <= KTRUSS_BCAST_EDGES
-        if badj:
-            joined, _adj = _direct_support(cur)
-            sup = joined.select(
-                "u",
-                "v",
-                F.size(F.array_intersect("nu", "nv")).alias("sup"),
-            ).transform(_pin_lazy)
-            cur = (
-                sup.where(F.col("sup") >= k - 2)
-                .select("u", "v")
-                .transform(_pin)
-            )
-        else:
-            deg, nv = _degree_table(cur)
-            bdeg = nv <= DEG_BCAST_VERTICES
-            oriented = _orient_by_degree(cur, deg, bdeg, pin=True)
-            closed = _closed_edges(oriented, False)
-            # triangle (a,b,c) found once at its (a,b) edge; each of
-            # its three undirected id-sorted edges gets one support
-            # credit — 3·triangles rows, streamed straight into the
-            # groupBy.
-            tri3 = closed.select(
-                F.explode(
-                    F.flatten(
-                        F.transform(
-                            "cs",
-                            lambda c: F.array(
-                                F.struct(
-                                    F.least("a", "b").alias("u"),
-                                    F.greatest("a", "b").alias("v"),
-                                ),
-                                F.struct(
-                                    F.least(F.col("a"), c).alias("u"),
-                                    F.greatest(F.col("a"), c).alias("v"),
-                                ),
-                                F.struct(
-                                    F.least(F.col("b"), c).alias("u"),
-                                    F.greatest(F.col("b"), c).alias("v"),
-                                ),
-                            ),
-                        )
-                    )
-                ).alias("e")
-            ).select("e.u", "e.v")
-            sup = (
-                tri3.groupBy("u", "v")
-                .agg(F.count(F.lit(1)).alias("sup"))
-                .transform(_pin_lazy)
-            )
-            cur = (
-                cur.join(sup, ["u", "v"])
-                .where(F.col("sup") >= k - 2)
-                .select("u", "v")
-                .transform(_pin)
-            )
-        # n_tris_pre = Σ sup / 3 on either tier: the direct tier's sup
-        # frame carries sup=0 rows, which add nothing to the sum.
-        census = cur.agg(
-            F.count(F.lit(1)).alias("n_edges"),
-            F.coalesce(F.sum(F.col("u") * 100_003 + F.col("v")), F.lit(0)).alias(
-                "edge_checksum"
-            ),
-        ).crossJoin(
-            sup.agg(F.coalesce(F.sum("sup"), F.lit(0)).alias("_s3")).select(
-                F.expr("_s3 div 3").alias("n_tris_pre")
-            )
-        )
-        out_rows.append(
-            census.select(
-                F.lit(r).cast("long").alias("round"),
-                "n_edges",
-                "n_tris_pre",
-                "edge_checksum",
-            )
-        )
-        last_census = census
-        n_after = cur.count()
-        fixed = n_after == n_before
-        n_before = n_after
-    res = out_rows[0]
-    for df in out_rows[1:]:
-        res = res.unionByName(df)
-    return res
-
-
-def apsp_path_counts(edges: DataFrame, max_rounds: int = 24) -> DataFrame:
-    """All-pairs shortest-path distances AND multiplicities (the σ_st
-    path-counting layer of Brandes' betweenness, run to all pairs on a
-    dim-scale graph): level-synchronous BFS from every source at once —
-    frontier rows (s, v, n) carry the number of distinct shortest
-    s→v paths, each round sums counts over the edge fan-out and
-    anti-joins everything already settled (first-reach = shortest on
-    an unweighted graph).
-
-    Returns (src, dst, dist, npaths) for every reachable ordered pair
-    (including dist 0 self-rows), deterministic for any partitioning —
-    counts are additive and order-free.
-
-    Scale shape: each round is ONE join against the symmetric edge
-    list + ONE (s,v) groupBy-sum + ONE anti-join, all keyed on the
-    vertex — the textbook Pregel BFS; rounds = graph diameter.  At
-    10^12 edges the same loop shards by source-partition batches; the
-    settled set stays keyed and localCheckpoint'd so lineage is
-    round-deep."""
-    sym = (
-        edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .union(edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .distinct()
-        .transform(_pin)
-    )
-    verts = sym.select(F.col("a").alias("s")).distinct()
-    frontier = verts.select(
-        "s", F.col("s").alias("v"), F.lit(1).cast("long").alias("n")
-    ).transform(_pin)
-    done = frontier.select("s", "v", F.lit(0).alias("dist"), "n")
-    for k in range(1, max_rounds + 1):
-        if frontier.isEmpty():
-            break
-        nxt = (
-            frontier.join(sym, frontier["v"] == sym["a"])
-            .groupBy("s", F.col("b").alias("v2"))
-            .agg(F.sum("n").alias("n"))
-            .withColumnRenamed("v2", "v")
-            .join(done.select("s", "v").withColumn("seen", F.lit(1)),
-                  ["s", "v"], "left_anti")
-            .transform(_pin)
-        )
-        if nxt.isEmpty():
-            frontier = nxt
-            break
-        done = done.unionByName(
-            nxt.select("s", "v", F.lit(k).alias("dist"), "n")
-        ).transform(_pin)
-        frontier = nxt
-    else:
-        raise RuntimeError(f"apsp_path_counts: diameter exceeds {max_rounds}")
-    return (
-        done.select(
-            F.col("s").alias("src"), F.col("v").alias("dst"),
-            F.col("dist").cast("long").alias("dist"), F.col("n").alias("npaths"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("src", "dst")
-    )
-
-
-def bellman_ford_rounds(
-    edges: DataFrame, source: int, rounds: int
-) -> DataFrame:
-    """Single-source WEIGHTED shortest paths via bounded Bellman-Ford
-    relaxation rounds (the BSP shortest-path shape — Pregel's hello-
-    world — where Dijkstra's priority queue has no parallel analog):
-    ``edges`` is (u, v, w) undirected with positive integer weights;
-    each round relaxes every edge once, d_k(v) = min(d_{k-1}(v),
-    min_{(u,v)} d_{k-1}(u) + w).  ``rounds`` fixed relaxations make the
-    plan a static DAG; with rounds >= |V|-1 the fixpoint is exact, and
-    the emitted per-node round-of-last-improvement pins the whole
-    trajectory, not just the final distances.
-
-    Returns (node, dist, settled_round) for nodes reachable from
-    ``source`` within ``rounds`` relaxations.
-
-    Scale shape: per round ONE join of the frontier against the edge
-    list + ONE groupBy(v).min — both combiner-friendly; frames
-    localCheckpoint'd so lineage stays round-deep.  At 10^12 edges
-    this is delta-stepping's degenerate bucket, sharded on v."""
-    sym = (
-        edges.select("u", "v", "w")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-        .distinct()
-        .transform(_pin)
-    )
-    dist = (
-        sym.select(F.col("u").alias("node")).distinct()
-        .select(
-            "node",
-            F.when(F.col("node") == source, F.lit(0).cast("long")).alias("dist"),
-            F.when(F.col("node") == source, F.lit(0).cast("long")).alias("settled"),
-        )
-        .transform(_pin)
-    )
-    for k in range(1, rounds + 1):
-        cand = (
-            dist.where(F.col("dist").isNotNull())
-            .join(sym, dist["node"] == sym["u"])
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cdist"))
-        )
-        new = (
-            dist.join(cand, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce("dist", F.lit(None).cast("long")),
-                    F.coalesce("cdist", F.col("dist")),
-                ).alias("ndist"),
-                "dist",
-                "settled",
-            )
-            .select(
-                "node",
-                F.col("ndist").alias("dist_new"),
-                F.when(
-                    F.col("dist").isNull() & F.col("ndist").isNotNull(), F.lit(k)
-                )
-                .when(F.col("ndist") < F.col("dist"), F.lit(k))
-                .otherwise(F.col("settled"))
-                .alias("settled"),
-            )
-            .withColumnRenamed("dist_new", "dist")
-            .transform(_pin)
-        )
-        dist = new
-    return (
-        dist.where(F.col("dist").isNotNull())
-        .select("node", "dist", F.col("settled").cast("long").alias("settled_round"))
-        .repartition(1)
-        .sortWithinPartitions("node")
     )

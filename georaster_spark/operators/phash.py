@@ -23,15 +23,6 @@ from pyspark.sql import functions as F
 BANDS: list[tuple[int, int]] = [(0, 13), (13, 13), (26, 13), (39, 13), (52, 12)]
 
 
-def band_cols(phash: F.Column) -> list[F.Column]:
-    # arithmetic shift + mask gives identical band values in Spark and
-    # DuckDB even for negative (sign-bit-set) hashes
-    return [
-        (F.shiftright(phash, sh).bitwiseAND(F.lit((1 << wd) - 1))).alias(f"b{i}")
-        for i, (sh, wd) in enumerate(BANDS)
-    ]
-
-
 def phash_near_dup(images: DataFrame, t: int = 4, id_col: str = "image_id") -> DataFrame:
     """All unordered pairs (a_id < b_id) with hamming(phash) <= t.
     Lossless for t <= len(BANDS) - 1 = 4 by pigeonhole."""
@@ -46,6 +37,8 @@ def phash_near_dup(images: DataFrame, t: int = 4, id_col: str = "image_id") -> D
                 *[
                     F.struct(
                         F.lit(i).alias("band_id"),
+                        # arithmetic shift + mask: the same band values in
+                        # Spark and DuckDB even for sign-bit-set hashes
                         F.shiftright(F.col("phash"), sh)
                         .bitwiseAND(F.lit((1 << wd) - 1))
                         .alias("band_val"),

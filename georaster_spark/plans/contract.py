@@ -3287,71 +3287,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.repartition(1).sortWithinPartitions("doc_id")
 
 
-_PR_ITERS = 3
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative graph analytics (graph.pagerank_int): integer-exact
-    damped PageRank over the supplier<->customer interaction graph
-    (distinct (l_suppkey, o_custkey) pairs, symmetrized; suppliers are
-    even node ids, customers odd).  The all-integer arithmetic makes 3
-    iterations bit-comparable to the oracle's unrolled CTEs."""
-    from ..operators.graph import pagerank_int
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_suppkey", "l_orderkey"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey").cast("long") * 2).alias("s"),
-            (F.col("o_custkey").cast("long") * 2 + 1).alias("c"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")).unionByName(
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-    )
-    return (
-        pagerank_int(edges, iters=_PR_ITERS)
-        .repartition(1).sortWithinPartitions("node")
-    )
-
-
-def _sql_pagerank() -> str:
-    """DuckDB twin: the same 3 PageRank rounds unrolled as CTEs, all
-    arithmetic in integer division so the trajectory is bit-identical."""
-    rounds = []
-    prev = "r0"
-    for i in range(1, _PR_ITERS + 1):
-        rounds.append(f"""
-i{i} AS (
-  SELECT e.dst AS node, SUM(r.rank // d.deg) AS insum
-  FROM edges e JOIN deg d ON e.src = d.src JOIN {prev} r ON r.node = e.src
-  GROUP BY e.dst
-), r{i} AS (
-  SELECT node, 150000 + (85 * insum) // 100 AS rank FROM i{i}
-)""")
-        prev = f"r{i}"
-    return f"""
-WITH pairs AS (
-  SELECT DISTINCT l_suppkey * 2 AS s, o_custkey * 2 + 1 AS c
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), edges AS (
-  SELECT s AS src, c AS dst FROM pairs
-  UNION ALL SELECT c AS src, s AS dst FROM pairs
-), deg AS (
-  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
-), r0 AS (
-  SELECT src AS node, CAST(1000000 AS BIGINT) AS rank FROM deg
-),{",".join(rounds)}
-SELECT node, CAST(rank AS BIGINT) AS rank FROM {prev} ORDER BY node
-"""
-
-
 _BAND_OFF = 60  # multiple of QNT_STEP=4, so the qnt re-encode is a no-op
 
 
@@ -5880,73 +5815,6 @@ FROM px GROUP BY image_id ORDER BY image_id
 
 # --- round-2 batch: BFS / cohort / novelty wiring ---------------------------
 
-_BFS_HOPS = 4
-_BFS_SEED_MOD = 100
-
-
-def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-hop reachability (graph.bfs_min_hops) over the same
-    symmetrized supplier<->customer graph as q_pagerank; seeds =
-    suppliers with suppkey % 100 == 0.  The DuckDB twin is a genuine
-    WITH RECURSIVE — the relational-category row stock engines cover
-    with recursive CTEs."""
-    from ..operators.graph import bfs_min_hops
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_suppkey", "l_orderkey"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey").cast("long") * 2).alias("s"),
-            (F.col("o_custkey").cast("long") * 2 + 1).alias("c"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")).unionByName(
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-    )
-    seeds = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        .where(F.col("s_suppkey") % _BFS_SEED_MOD == 0)
-        .select((F.col("s_suppkey").cast("long") * 2).alias("node"))
-    )
-    return (
-        bfs_min_hops(edges, seeds, max_hops=_BFS_HOPS)
-        .select("node", F.col("d").cast("long").alias("d"))
-        .repartition(1).sortWithinPartitions("node")
-    )
-
-
-def _sql_bfs_hops() -> str:
-    return f"""
-WITH RECURSIVE pairs AS (
-  SELECT DISTINCT l.l_suppkey * 2 AS s, o.o_custkey * 2 + 1 AS c
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
-edges AS (
-  SELECT s AS src, c AS dst FROM pairs
-  UNION ALL SELECT c, s FROM pairs
-),
-seeds AS (
-  SELECT DISTINCT s_suppkey * 2 AS node FROM supplier
-  WHERE s_suppkey % {_BFS_SEED_MOD} = 0
-),
-reach(node, d) AS (
-  SELECT node, 0 FROM seeds
-  UNION
-  SELECT e.dst, r.d + 1
-  FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.d < {_BFS_HOPS}
-)
-SELECT CAST(node AS BIGINT) AS node, CAST(MIN(d) AS BIGINT) AS d
-FROM reach GROUP BY node ORDER BY node
-"""
-
-
 # --- round-2 batch: hilbert rollup ------------------------------------------
 
 _HILBERT_SHIFT = 10
@@ -7369,7 +7237,7 @@ GROUP BY image_id ORDER BY image_id
 """
 
 
-# --- round-3 batch: segment snap / triangle census / box IoU ---------------
+# --- round-3 batch: segment snap / box IoU ---------------------------------
 
 
 def q_segment_snap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7407,61 +7275,6 @@ SELECT point_id, CAST(seg_id AS BIGINT) AS seg_id, snap_x, snap_y, dist2
 FROM cand
 QUALIFY row_number() OVER (PARTITION BY point_id ORDER BY dist2, seg_id) = 1
 ORDER BY point_id
-"""
-
-
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distributed triangle counting (graph.triangle_census — Suri
-    & Vassilvitskii WWW'11 degree-ordered wedges) over the part
-    co-purchase graph: parts are adjacent iff they appear in the same
-    order.  One global census row; the orientation bounds per-apex
-    fan-out at O(sqrt m) regardless of skew."""
-    from ..operators.graph import triangle_census
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return triangle_census(pairs)
-
-
-def _sql_triangle_count() -> str:
-    return """
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
-o AS (
-  SELECT CASE WHEN (da.deg, e.u) < (db.deg, e.v) THEN e.u ELSE e.v END AS a,
-         CASE WHEN (da.deg, e.u) < (db.deg, e.v) THEN e.v ELSE e.u END AS b
-  FROM e JOIN deg da ON e.u = da.u JOIN deg db ON e.v = db.u
-),
-tri AS (
-  SELECT COUNT(*) AS n_triangles
-  FROM (SELECT w1.a AS apex, w1.b AS p, w2.b AS q
-        FROM o w1 JOIN o w2 ON w1.a = w2.a AND w1.b < w2.b) w
-  WHERE EXISTS (SELECT 1 FROM o
-                WHERE least(o.a, o.b) = w.p AND greatest(o.a, o.b) = w.q)
-),
-st AS (
-  SELECT COUNT(*) AS n_nodes,
-         SUM(deg * (deg - 1)) // 2 AS n_wedges,
-         MAX(deg) AS max_degree
-  FROM deg
-),
-ec AS (SELECT COUNT(*) AS n_edges FROM e)
-SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-       CAST(n_edges AS BIGINT) AS n_edges,
-       CAST(n_triangles AS BIGINT) AS n_triangles,
-       CAST(n_wedges AS BIGINT) AS n_wedges,
-       CAST(max_degree AS BIGINT) AS max_degree,
-       CAST((n_triangles * 3 * 1000000) // n_wedges AS BIGINT) AS transitivity_ppm
-FROM st, ec, tri
 """
 
 
@@ -7639,80 +7452,6 @@ adj AS (
 SELECT hq, hr, COUNT(*) AS n_points,
        CAST(SUM(point_id) AS BIGINT) AS id_checksum
 FROM adj GROUP BY hq, hr ORDER BY hq, hr
-"""
-
-
-_SSSP_ROUNDS = 4
-
-
-def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-hop weighted shortest paths (graph.sssp_rounds — GraphX
-    Pregel ShortestPaths analog): 4 Bellman-Ford relaxations over the
-    supplier<->customer graph weighted by min lineitem quantity, seeds =
-    suppliers with suppkey % 100 == 0.  All-integer, bit-comparable to
-    the unrolled recursive-CTE oracle."""
-    from ..operators.graph import sssp_rounds
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_suppkey", "l_orderkey", "l_quantity"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            (F.col("l_suppkey").cast("long") * 2).alias("s"),
-            (F.col("o_custkey").cast("long") * 2 + 1).alias("c"),
-        )
-        .agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
-    )
-    edges = pairs.select(
-        F.col("s").alias("src"), F.col("c").alias("dst"), "w"
-    ).unionByName(
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"), "w")
-    )
-    seeds = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        .where(F.col("s_suppkey") % 100 == 0)
-        .select((F.col("s_suppkey").cast("long") * 2).alias("node"))
-    )
-    return (
-        sssp_rounds(edges, seeds, rounds=_SSSP_ROUNDS)
-        .repartition(1).sortWithinPartitions("node")
-    )
-
-
-def _sql_sssp() -> str:
-    rounds = []
-    prev = "d0"
-    for i in range(1, _SSSP_ROUNDS + 1):
-        rounds.append(f"""
-d{i} AS (
-  SELECT node, MIN(d) AS d FROM (
-    SELECT node, d FROM {prev}
-    UNION ALL
-    SELECT e.dst AS node, p.d + e.w AS d
-    FROM e JOIN {prev} p ON e.src = p.node
-  ) GROUP BY node
-)""")
-        prev = f"d{i}"
-    return f"""
-WITH pairs AS (
-  SELECT l_suppkey * 2 AS s, o_custkey * 2 + 1 AS c,
-         CAST(MIN(l_quantity) AS BIGINT) AS w
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-),
-e AS (
-  SELECT s AS src, c AS dst, w FROM pairs
-  UNION ALL SELECT c AS src, s AS dst, w FROM pairs
-),
-d0 AS (
-  SELECT s_suppkey * 2 AS node, CAST(0 AS BIGINT) AS d
-  FROM supplier WHERE s_suppkey % 100 = 0
-),{",".join(rounds)}
-SELECT node, CAST(d AS BIGINT) AS dist FROM {prev} ORDER BY node
 """
 
 
@@ -8062,70 +7801,6 @@ FROM bs JOIN lp ON bs.image_id = lp.image_id ORDER BY bs.image_id
 """
 
 
-# k chosen so the fixture graph actually peels round over round (min
-# degree is 42; at k=100 ~a quarter of the nodes fall in round 1 and the
-# cascade continues) — a k below the min degree would make every census
-# row identical and the probe vacuous.
-_KCORE_K = 100
-_KCORE_ROUNDS = 3
-
-
-def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round k-core peeling (graph.k_core_rounds — Matula &
-    Beck degeneracy peeling) over the part co-purchase graph: per-round
-    survivor census, 3 unrolled peels at a k that actually cascades."""
-    from ..operators.graph import k_core_rounds
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return k_core_rounds(pairs, k=_KCORE_K, rounds=_KCORE_ROUNDS)
-
-
-def _sql_k_core() -> str:
-    rounds_sql = []
-    prev = "e0"
-    for r in range(1, _KCORE_ROUNDS + 1):
-        rounds_sql.append(f"""
-deg{r} AS (
-  SELECT u, COUNT(*) AS deg FROM (
-    SELECT u, v FROM {prev} UNION ALL SELECT v AS u, u AS v FROM {prev}
-  ) GROUP BY u
-),
-keep{r} AS (SELECT u FROM deg{r} WHERE deg >= {_KCORE_K}),
-e{r} AS (
-  SELECT e.u, e.v FROM {prev} e
-  WHERE EXISTS (SELECT 1 FROM keep{r} WHERE keep{r}.u = e.u)
-    AND EXISTS (SELECT 1 FROM keep{r} k2 WHERE k2.u = e.v)
-),
-c{r} AS (
-  SELECT {r} AS round,
-         (SELECT COUNT(*) FROM (SELECT u AS n FROM e{r} UNION SELECT v FROM e{r})) AS n_nodes,
-         (SELECT COALESCE(SUM(n), 0) FROM (SELECT u AS n FROM e{r} UNION SELECT v FROM e{r})) AS node_checksum,
-         (SELECT COUNT(*) FROM e{r}) AS n_edges
-)""")
-        prev = f"e{r}"
-    unions = " UNION ALL ".join(
-        f"SELECT round, n_nodes, n_edges, node_checksum FROM c{r}"
-        for r in range(1, _KCORE_ROUNDS + 1)
-    )
-    return f"""
-WITH e0 AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),{",".join(rounds_sql)}
-SELECT CAST(round AS BIGINT) AS round,
-       CAST(n_nodes AS BIGINT) AS n_nodes,
-       CAST(n_edges AS BIGINT) AS n_edges,
-       CAST(node_checksum AS BIGINT) AS node_checksum
-FROM ({unions}) ORDER BY round
-"""
-
-
 # --- round-3 batch: census transform / demosaic / box NMS ----------------------
 
 _CENSUS_MOD = 127
@@ -8315,127 +7990,6 @@ FROM ({union}) ORDER BY image_id, rank_pos
 """
 
 
-def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node local clustering coefficient (graph.clustering_coefficients
-    — Watts-Strogatz over degree-ordered wedges) on the part co-purchase
-    graph; exact integer ppm, no float ratio."""
-    from ..operators.graph import clustering_coefficients
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return (
-        clustering_coefficients(pairs)
-        .repartition(1).sortWithinPartitions("node")
-    )
-
-
-def _sql_clustering_coeff() -> str:
-    return """
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
-o AS (
-  SELECT CASE WHEN (da.deg, e.u) < (db.deg, e.v) THEN e.u ELSE e.v END AS a,
-         CASE WHEN (da.deg, e.u) < (db.deg, e.v) THEN e.v ELSE e.u END AS b
-  FROM e JOIN deg da ON e.u = da.u JOIN deg db ON e.v = db.u
-),
-closed AS (
-  SELECT w.apex, w.p, w.q
-  FROM (SELECT w1.a AS apex, w1.b AS p, w2.b AS q
-        FROM o w1 JOIN o w2 ON w1.a = w2.a AND w1.b < w2.b) w
-  JOIN o ON least(o.a, o.b) = w.p AND greatest(o.a, o.b) = w.q
-),
-pert AS (
-  SELECT node, COUNT(*) AS n_tri
-  FROM (SELECT unnest([apex, p, q]) AS node FROM closed)
-  GROUP BY node
-)
-SELECT CAST(node AS BIGINT) AS node,
-       CAST(deg AS BIGINT) AS deg,
-       CAST(n_tri AS BIGINT) AS n_tri,
-       CAST((2 * n_tri * 1000000) // (deg * (deg - 1)) AS BIGINT) AS coeff_ppm
-FROM pert JOIN deg ON node = deg.u
-WHERE n_tri >= 1
-ORDER BY node
-"""
-
-
-_LPA_ROUNDS = 3
-
-
-def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round synchronous label propagation (graph.
-    label_propagation_rounds — Raghavan et al. 2007, deterministic
-    smallest-label tie rule) over the part co-purchase graph; per-round
-    census rows pin the whole trajectory."""
-    from ..operators.graph import label_propagation_rounds
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return (
-        label_propagation_rounds(pairs, _LPA_ROUNDS)
-        .repartition(1).sortWithinPartitions("round")
-    )
-
-
-def _sql_label_propagation() -> str:
-    rounds = []
-    prev = "l0"
-    for r in range(1, _LPA_ROUNDS + 1):
-        rounds.append(f"""
-c{r} AS (
-  SELECT s.u, {prev}.lbl AS nlbl, COUNT(*) AS cnt
-  FROM sym s JOIN {prev} ON s.v = {prev}.node
-  GROUP BY s.u, {prev}.lbl
-),
-l{r} AS (
-  SELECT u AS node, nlbl AS lbl FROM (
-    SELECT u, nlbl,
-           row_number() OVER (PARTITION BY u ORDER BY cnt DESC, nlbl ASC) AS rn
-    FROM c{r}
-  ) WHERE rn = 1
-),
-cen{r} AS (
-  SELECT {r} AS round,
-         COUNT(DISTINCT lbl) AS n_labels,
-         (SELECT MAX(sz) FROM (SELECT COUNT(*) AS sz FROM l{r} GROUP BY lbl))
-           AS max_community,
-         SUM(node * lbl) AS label_checksum
-  FROM l{r}
-)""")
-        prev = f"l{r}"
-    union = " UNION ALL ".join(
-        f"SELECT * FROM cen{r}" for r in range(1, _LPA_ROUNDS + 1)
-    )
-    return f"""
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM sym),
-{", ".join(r.lstrip() for r in rounds)}
-SELECT CAST(round AS BIGINT) AS round,
-       CAST(n_labels AS BIGINT) AS n_labels,
-       CAST(max_community AS BIGINT) AS max_community,
-       CAST(label_checksum AS BIGINT) AS label_checksum
-FROM ({union}) ORDER BY round
-"""
-
-
 def q_segment_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise proper segment crossings (spatial_index.
     segment_intersections — grid-bucketed Bentley-Ottmann census, exact
@@ -8454,67 +8008,6 @@ def _sql_segment_intersections(fx: Path) -> str:
     from ..operators import spatial_index as si
 
     return si.segment_intersections_sql(str(fx / "points.parquet"))
-
-
-_HITS_ROUNDS = 2
-
-
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round integer HITS (graph.hits_rounds — Kleinberg
-    hubs/authorities, unnormalized power iteration) on the directed
-    supplier→customer shipping graph."""
-    from ..operators.graph import hits_rounds
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    edges = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
-        F.col("l_suppkey").alias("src"), F.col("o_custkey").alias("dst")
-    )
-    return hits_rounds(edges, _HITS_ROUNDS).repartition(1).sortWithinPartitions("round")
-
-
-def _sql_hits() -> str:
-    rounds = []
-    prev_h = "h0"
-    for r in range(1, _HITS_ROUNDS + 1):
-        rounds.append(f"""
-a{r} AS (
-  SELECT dst AS node, SUM(h) AS a
-  FROM e JOIN {prev_h} ON e.src = {prev_h}.node GROUP BY dst
-),
-h{r} AS (
-  SELECT src AS node, SUM(a) AS h
-  FROM e JOIN a{r} ON e.dst = a{r}.node GROUP BY src
-),
-cen{r} AS (
-  SELECT {r} AS round,
-         (SELECT SUM(h) FROM h{r}) AS sum_h,
-         (SELECT MAX(h) FROM h{r}) AS max_h,
-         (SELECT SUM(node * h) FROM h{r}) AS hub_checksum,
-         (SELECT SUM(a) FROM a{r}) AS sum_a,
-         (SELECT MAX(a) FROM a{r}) AS max_a,
-         (SELECT SUM(node * a) FROM a{r}) AS auth_checksum
-)""")
-        prev_h = f"h{r}"
-    union = " UNION ALL ".join(f"SELECT * FROM cen{r}" for r in range(1, _HITS_ROUNDS + 1))
-    return f"""
-WITH e AS (
-  SELECT DISTINCT l_suppkey AS src, o_custkey AS dst
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-h0 AS (SELECT DISTINCT src AS node, 1 AS h FROM e),
-{", ".join(r.lstrip() for r in rounds)}
-SELECT CAST(round AS BIGINT) AS round,
-       CAST(sum_h AS BIGINT) AS sum_h, CAST(max_h AS BIGINT) AS max_h,
-       CAST(hub_checksum AS BIGINT) AS hub_checksum,
-       CAST(sum_a AS BIGINT) AS sum_a, CAST(max_a AS BIGINT) AS max_a,
-       CAST(auth_checksum AS BIGINT) AS auth_checksum
-FROM ({union}) ORDER BY round
-"""
 
 
 _DIFF_MOD = 139
@@ -8760,48 +8253,6 @@ FROM d ORDER BY media_id, frame_no
 """
 
 
-def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-assortativity moments (graph.degree_assortativity_moments
-    — Newman PRL'02) on the part co-purchase graph; all-integer, the
-    symmetric-list identity collapses the sqrt away."""
-    from ..operators.graph import degree_assortativity_moments
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return degree_assortativity_moments(pairs)
-
-
-def _sql_assortativity() -> str:
-    return """
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
-j AS (
-  SELECT dx.deg AS dx, dy.deg AS dy
-  FROM sym JOIN deg dx ON sym.u = dx.u JOIN deg dy ON sym.v = dy.u
-),
-mom AS (
-  SELECT COUNT(*) AS m,
-         CAST(SUM(dx) AS BIGINT) AS sum_x,
-         CAST(SUM(dx * dx) AS BIGINT) AS sum_x2,
-         CAST(SUM(dx * dy) AS BIGINT) AS sum_xy
-  FROM j
-)
-SELECT m, sum_x, sum_x2, sum_xy,
-       CAST((1000 * (m * sum_xy - sum_x * sum_x))
-            // (m * sum_x2 - sum_x * sum_x) AS BIGINT) AS assortativity_milli
-FROM mom
-"""
-
-
 _COST_MOD = 163
 
 
@@ -8973,50 +8424,6 @@ FROM tot, p99
 """
 
 
-def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rich-club coefficient (graph.rich_club — Colizza et al.) at 3
-    degree thresholds on the part co-purchase graph."""
-    from ..operators.graph import rich_club
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return rich_club(pairs).repartition(1).sortWithinPartitions("k")
-
-
-def _sql_rich_club() -> str:
-    from ..operators.graph import RICH_CLUB_KS
-
-    arms = " UNION ALL ".join(
-        f"""
-SELECT {k} AS k,
-       (SELECT COUNT(*) FROM deg WHERE deg > {k}) AS n_club,
-       (SELECT COUNT(*) FROM e
-        WHERE u IN (SELECT u FROM deg WHERE deg > {k})
-          AND v IN (SELECT u FROM deg WHERE deg > {k})) AS e_club"""
-        for k in RICH_CLUB_KS
-    )
-    return f"""
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u)
-SELECT CAST(k AS BIGINT) AS k,
-       CAST(n_club AS BIGINT) AS n_club,
-       CAST(e_club AS BIGINT) AS e_club,
-       CAST(CASE WHEN n_club >= 2
-                 THEN (2000000 * e_club) // (n_club * (n_club - 1))
-                 ELSE 0 END AS BIGINT) AS phi_ppm
-FROM ({arms}) ORDER BY k
-"""
-
-
 _BOXC_MOD = 167
 
 
@@ -9152,64 +8559,6 @@ SELECT f.c_nationkey,
        CAST(f.cents = m.cents_merged AS BIGINT) AS rev_ok
 FROM full_v f JOIN merged m ON f.c_nationkey = m.c_nationkey
 ORDER BY f.c_nationkey
-"""
-
-
-_DAG_ROUNDS = 3
-
-
-def q_dag_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topological Kahn-layer census (graph.dag_layer_census) on the
-    key-oriented (acyclic by construction) part co-purchase DAG."""
-    from ..operators.graph import dag_layer_census
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = (
-        a.join(b, "k").where(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    )
-    return (
-        dag_layer_census(pairs, _DAG_ROUNDS)
-        .repartition(1).sortWithinPartitions("round")
-    )
-
-
-def _sql_dag_layers() -> str:
-    rounds = []
-    pe, pn = "e0", "n0"
-    for r in range(1, _DAG_ROUNDS + 1):
-        rounds.append(f"""
-lay{r} AS (
-  SELECT n FROM {pn}
-  WHERE n NOT IN (SELECT DISTINCT dst FROM {pe})
-),
-n{r} AS (SELECT n FROM {pn} WHERE n NOT IN (SELECT n FROM lay{r})),
-e{r} AS (SELECT src, dst FROM {pe} WHERE src NOT IN (SELECT n FROM lay{r})),
-cen{r} AS (
-  SELECT {r} AS round,
-         (SELECT COUNT(*) FROM lay{r}) AS layer_size,
-         (SELECT COALESCE(SUM(n), 0) FROM lay{r}) AS layer_checksum,
-         (SELECT COUNT(*) FROM e{r}) AS n_edges_left
-)""")
-        pe, pn = f"e{r}", f"n{r}"
-    union = " UNION ALL ".join(f"SELECT * FROM cen{r}" for r in range(1, _DAG_ROUNDS + 1))
-    return f"""
-WITH e0 AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-n0 AS (SELECT DISTINCT n FROM (SELECT src AS n FROM e0 UNION ALL SELECT dst FROM e0)),
-{", ".join(r.lstrip() for r in rounds)}
-SELECT CAST(round AS BIGINT) AS round,
-       CAST(layer_size AS BIGINT) AS layer_size,
-       CAST(layer_checksum AS BIGINT) AS layer_checksum,
-       CAST(n_edges_left AS BIGINT) AS n_edges_left
-FROM ({union}) ORDER BY round
 """
 
 
@@ -9653,90 +9002,6 @@ ORDER BY curve
 """
 
 
-def q_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resource-Allocation link prediction (graph.resource_allocation —
-    hub-discounted common neighbors, integer-exact RA_SCALE div deg
-    weights) on the same low-order-restricted part co-purchase graph as
-    fof_recommend; the two rankers disagree exactly where a common
-    neighbor is a hub, which the gate pins."""
-    from ..operators.graph import resource_allocation
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    ).where(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return resource_allocation(pairs)
-
-
-def _sql_resource_alloc() -> str:
-    from ..operators.graph import RA_SCALE, RA_TOPK
-
-    return f"""
-WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0),
-e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
-cand AS (
-  SELECT a.v AS p, b.v AS q,
-         SUM({RA_SCALE} // d.deg) AS ra_score,
-         COUNT(*) AS n_common
-  FROM sym a JOIN sym b ON a.u = b.u AND a.v < b.v
-  JOIN deg d ON d.u = a.u
-  GROUP BY a.v, b.v
-)
-SELECT p, q, CAST(ra_score AS BIGINT) AS ra_score,
-       CAST(n_common AS BIGINT) AS n_common
-FROM cand
-WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.u = cand.p AND e.v = cand.q)
-ORDER BY ra_score DESC, p, q LIMIT {RA_TOPK}
-"""
-
-
-def q_fof_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Friend-of-friend recommendations (graph.fof_recommendations —
-    common-neighbor ranking of non-adjacent pairs) on the part
-    co-purchase graph restricted to low-order orders (keeps the wedge
-    fan-out honest at the gate scale)."""
-    from ..operators.graph import fof_recommendations
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    ).where(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return fof_recommendations(pairs)
-
-
-def _sql_fof_recommend() -> str:
-    from ..operators.graph import FOF_TOPK
-
-    return f"""
-WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0),
-e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-sym AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-cn AS (
-  SELECT a.v AS p, b.v AS q, COUNT(*) AS common
-  FROM sym a JOIN sym b ON a.u = b.u AND a.v < b.v
-  GROUP BY a.v, b.v
-)
-SELECT p, q, CAST(common AS BIGINT) AS common
-FROM cn
-WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.u = cn.p AND e.v = cn.q)
-ORDER BY common DESC, p, q LIMIT {FOF_TOPK}
-"""
-
-
 # --- round-3 batch: D4 dihedral / jigsaw / chroma 4:2:0 / gray-world --------
 
 _D4_MOD = 83
@@ -9911,78 +9176,6 @@ SELECT bs.image_id, CAST(bs.band AS INT) AS band, bs.band_sum,
             ELSE 0 END AS gain_ppm
 FROM bs JOIN tot ON tot.image_id = bs.image_id
 ORDER BY bs.image_id, bs.band
-"""
-
-
-_HARM_SEED_MOD = 20
-_HARM_HOPS = 3
-
-
-def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-radius harmonic centrality (graph.harmonic_centrality)
-    over the symmetrized supplier<->customer graph; seeds = suppliers
-    with suppkey % 20 == 0.  Integer-exact via the LCM(1..3)=6 scaling;
-    the DuckDB twin is a labeled WITH RECURSIVE BFS."""
-    from ..operators.graph import harmonic_centrality
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_suppkey", "l_orderkey"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey").cast("long") * 2).alias("s"),
-            (F.col("o_custkey").cast("long") * 2 + 1).alias("c"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")).unionByName(
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-    )
-    seeds = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        .where(F.col("s_suppkey") % _HARM_SEED_MOD == 0)
-        .select((F.col("s_suppkey").cast("long") * 2).alias("node"))
-    )
-    return (
-        harmonic_centrality(edges, seeds, max_hops=_HARM_HOPS)
-        .select("seed", F.col("h6").cast("long").alias("h6"),
-                F.col("n_reached").cast("long").alias("n_reached"))
-        .repartition(1).sortWithinPartitions("seed")
-    )
-
-
-def _sql_harmonic_centrality() -> str:
-    return f"""
-WITH RECURSIVE pairs AS (
-  SELECT DISTINCT l.l_suppkey * 2 AS s, o.o_custkey * 2 + 1 AS c
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
-edges AS (
-  SELECT s AS src, c AS dst FROM pairs
-  UNION ALL SELECT c, s FROM pairs
-),
-seeds AS (
-  SELECT DISTINCT s_suppkey * 2 AS seed FROM supplier
-  WHERE s_suppkey % {_HARM_SEED_MOD} = 0
-),
-reach(seed, node, d) AS (
-  SELECT seed, seed, 0 FROM seeds
-  UNION
-  SELECT r.seed, e.dst, r.d + 1
-  FROM reach r JOIN edges e ON e.src = r.node
-  WHERE r.d < {_HARM_HOPS}
-),
-md AS (
-  SELECT seed, node, MIN(d) AS d FROM reach GROUP BY seed, node
-)
-SELECT CAST(seed AS BIGINT) AS seed,
-       CAST(SUM(6 // d) AS BIGINT) AS h6,
-       COUNT(*) AS n_reached
-FROM md WHERE d > 0 GROUP BY seed ORDER BY seed
 """
 
 
@@ -11412,75 +10605,6 @@ ORDER BY za, zb
 """
 
 
-_KTRUSS_K = 12
-_KTRUSS_ROUNDS = 3
-
-
-def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round k-truss peeling (graph.k_truss_rounds — Cohen's
-    triangle-support cohesion) over the part co-purchase graph:
-    per-round survivor census, 3 unrolled peels at k=12 (edges must
-    sit in >= 10 triangles — a threshold that actually cascades:
-    69588 -> 22275 -> 2565 survivors at sf0.01)."""
-    from ..operators.graph import k_truss_rounds
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    pairs = a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v")
-    return k_truss_rounds(pairs, k=_KTRUSS_K, rounds=_KTRUSS_ROUNDS)
-
-
-def _sql_k_truss() -> str:
-    rounds_sql = []
-    prev = "e0"
-    for r in range(1, _KTRUSS_ROUNDS + 1):
-        rounds_sql.append(f"""
-tri{r} AS MATERIALIZED (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM {prev} e1
-  JOIN {prev} e2 ON e2.u = e1.v
-  JOIN {prev} e3 ON e3.u = e1.u AND e3.v = e2.v
-),
-sup{r} AS (
-  SELECT u, v, COUNT(*) AS sup FROM (
-    SELECT a AS u, b AS v FROM tri{r}
-    UNION ALL SELECT b, c FROM tri{r}
-    UNION ALL SELECT a, c FROM tri{r}
-  ) GROUP BY u, v
-),
-e{r} AS MATERIALIZED (
-  SELECT e.u, e.v FROM {prev} e
-  JOIN sup{r} s ON s.u = e.u AND s.v = e.v
-  WHERE s.sup >= {_KTRUSS_K - 2}
-),
-c{r} AS (
-  SELECT {r} AS round,
-         (SELECT COUNT(*) FROM e{r}) AS n_edges,
-         (SELECT COUNT(*) FROM tri{r}) AS n_tris_pre,
-         (SELECT COALESCE(SUM(u * 100003 + v), 0) FROM e{r}) AS edge_checksum
-)""")
-        prev = f"e{r}"
-    unions = " UNION ALL ".join(
-        f"SELECT round, n_edges, n_tris_pre, edge_checksum FROM c{r}"
-        for r in range(1, _KTRUSS_ROUNDS + 1)
-    )
-    return f"""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),{",".join(rounds_sql)}
-SELECT CAST(round AS BIGINT) AS round,
-       CAST(n_edges AS BIGINT) AS n_edges,
-       CAST(n_tris_pre AS BIGINT) AS n_tris_pre,
-       CAST(edge_checksum AS BIGINT) AS edge_checksum
-FROM ({unions}) ORDER BY round
-"""
-
-
 def q_pip_raycast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Even-odd ray-cast PIP against concave star polygons
     (pip.raycast_pip_star): the general-polygon membership rule the
@@ -11922,126 +11046,6 @@ edges AS (
 SELECT aid AS za, bid AS zb,
        CAST((bx - ax)*(bx - ax) + (by - ay)*(by - ay) AS BIGINT) AS len2
 FROM edges ORDER BY za, zb
-"""
-
-
-_APSP_ROUNDS = 20
-
-
-def q_apsp_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs shortest-path distance + multiplicity census
-    (graph.apsp_path_counts — the σ_st layer of Brandes betweenness)
-    over the zone proximity graph; oracle replays the level-synchronous
-    expansion as unrolled materialized frontier CTEs."""
-    from ..operators.graph import apsp_path_counts
-
-    edges = _zone_prox_edges(spark, sf_dir).select("u", "v")
-    return apsp_path_counts(edges, max_rounds=_APSP_ROUNDS)
-
-
-def _sql_apsp_paths(fx: Path) -> str:
-    zs = str(fx / "zones.parquet")
-    ctes = []
-    prev_f = "f0"
-    done_terms = ["SELECT s, v, 0 AS dist, n FROM f0"]
-    for k in range(1, _APSP_ROUNDS + 1):
-        seen = " UNION ALL ".join(
-            f"SELECT s, v FROM f{j}" for j in range(k)
-        )
-        ctes.append(f"""
-f{k} AS MATERIALIZED (
-  SELECT p.s, e.b AS v, SUM(p.n) AS n
-  FROM {prev_f} p JOIN sym e ON e.a = p.v
-  WHERE NOT EXISTS (
-    SELECT 1 FROM ({seen}) q WHERE q.s = p.s AND q.v = e.b
-  )
-  GROUP BY p.s, e.b
-)""")
-        done_terms.append(f"SELECT s, v, {k} AS dist, n FROM f{k}")
-        prev_f = f"f{k}"
-    return f"""
-WITH z AS (
-  SELECT zone_id,
-         CAST(floor((xmin + xmax) / 2 + 0.5) AS BIGINT) AS cx,
-         CAST(floor((ymin + ymax) / 2 + 0.5) AS BIGINT) AS cy
-  FROM read_parquet('{zs}')
-),
-e AS (
-  SELECT a.zone_id AS u, b.zone_id AS v
-  FROM z a JOIN z b ON b.zone_id > a.zone_id
-  WHERE abs(a.cx - b.cx) + abs(a.cy - b.cy) <= {MST_CUTOFF}
-),
-sym AS MATERIALIZED (
-  SELECT u AS a, v AS b FROM e UNION SELECT v, u FROM e
-),
-f0 AS MATERIALIZED (
-  SELECT DISTINCT a AS s, a AS v, 1::BIGINT AS n FROM sym
-),{",".join(ctes)}
-SELECT s AS src, v AS dst, CAST(dist AS BIGINT) AS dist,
-       CAST(n AS BIGINT) AS npaths
-FROM ({" UNION ALL ".join(done_terms)})
-ORDER BY src, dst
-"""
-
-
-_BF_ROUNDS = 24
-
-
-def q_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted single-source shortest paths via bounded Bellman-Ford
-    relaxation (graph.bellman_ford_rounds) over the zone proximity
-    graph with L1 centroid weights; per-node settled-round pins the
-    trajectory.  Oracle replays the identical 24 unrolled
-    relaxations."""
-    from ..operators.graph import bellman_ford_rounds
-
-    edges = _zone_prox_edges(spark, sf_dir).select("u", "v", F.col("d").alias("w"))
-    return bellman_ford_rounds(edges, source=0, rounds=_BF_ROUNDS)
-
-
-def _sql_bellman_ford(fx: Path) -> str:
-    zs = str(fx / "zones.parquet")
-    ctes = []
-    for k in range(1, _BF_ROUNDS + 1):
-        p = f"d{k - 1}"
-        ctes.append(f"""
-d{k} AS MATERIALIZED (
-  SELECT d.node,
-         CASE WHEN c.cdist IS NOT NULL AND (d.dist IS NULL OR c.cdist < d.dist)
-              THEN c.cdist ELSE d.dist END AS dist,
-         CASE WHEN c.cdist IS NOT NULL AND (d.dist IS NULL OR c.cdist < d.dist)
-              THEN {k} ELSE d.settled END AS settled
-  FROM {p} d LEFT JOIN (
-    SELECT e.b AS node, MIN(p.dist + e.w) AS cdist
-    FROM {p} p JOIN sym e ON e.a = p.node
-    WHERE p.dist IS NOT NULL GROUP BY e.b
-  ) c ON c.node = d.node
-)""")
-    return f"""
-WITH z AS (
-  SELECT zone_id,
-         CAST(floor((xmin + xmax) / 2 + 0.5) AS BIGINT) AS cx,
-         CAST(floor((ymin + ymax) / 2 + 0.5) AS BIGINT) AS cy
-  FROM read_parquet('{zs}')
-),
-e AS (
-  SELECT a.zone_id AS u, b.zone_id AS v,
-         abs(a.cx - b.cx) + abs(a.cy - b.cy) AS w
-  FROM z a JOIN z b ON b.zone_id > a.zone_id
-  WHERE abs(a.cx - b.cx) + abs(a.cy - b.cy) <= {MST_CUTOFF}
-),
-sym AS MATERIALIZED (
-  SELECT u AS a, v AS b, w FROM e UNION SELECT v, u, w FROM e
-),
-d0 AS MATERIALIZED (
-  SELECT node,
-         CASE WHEN node = 0 THEN 0::BIGINT END AS dist,
-         CASE WHEN node = 0 THEN 0::BIGINT END AS settled
-  FROM (SELECT DISTINCT a AS node FROM sym)
-),{",".join(ctes)}
-SELECT node, CAST(dist AS BIGINT) AS dist,
-       CAST(settled AS BIGINT) AS settled_round
-FROM d{_BF_ROUNDS} WHERE dist IS NOT NULL ORDER BY node
 """
 
 
@@ -13233,8 +12237,8 @@ def q_walk_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fourth moments.
 
     Scale shape: tr A⁴ is ONE groupBy over the wedge join + a scalar
-    sum of squares — the standard 2-path semiring shape; the oriented
-    triangle join bounds A³ exactly as triangle_census does."""
+    sum of squares — the standard 2-path semiring shape; A³ is the
+    u<v<w triangle join over the id-oriented edge list."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey"
     ).where(F.col("l_partkey") % 4 == 0)  # 4x node subsample: A^2 stays
@@ -16148,8 +15152,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("local_moran", q_local_moran, lambda fx, w, *_: _sql_local_moran(fx, w)),
     ("fast_corners", q_fast_corners, lambda fx, w, *_: _sql_fast_corners(fx, w)),
     ("dog_blobs", q_dog_blobs, lambda fx, w, *_: _sql_dog_blobs(fx, w)),
-    ("bfs_hops", q_bfs_hops, lambda *_: _sql_bfs_hops()),
-    ("harmonic_centrality", q_harmonic_centrality, lambda *_: _sql_harmonic_centrality()),
     ("hilbert_rollup", q_hilbert, lambda fx, w, *_: _sql_hilbert(fx, w)),
     ("xmodal_align", q_xmodal_align, lambda fx, w, *_: _sql_xmodal_align(fx, w)),
     ("zonal_frac", q_zonal_frac, lambda fx, w, *_: _sql_zonal_frac(fx, w)),
@@ -16172,7 +15174,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("spectral_angle", q_spectral_angle, lambda fx, w, *_: _sql_spectral_angle(fx, w)),
     ("video_frames", q_video_frames, lambda fx, *_: _sql_video_frames(fx)),
     ("dedup_components", q_dedup_components, lambda *_: _sql_dedup_components()),
-    ("pagerank_graph", q_pagerank, lambda *_: _sql_pagerank()),
     ("cell_sessions", q_cell_sessions, lambda fx, *_: _sql_cell_sessions(fx)),
     ("time_travel", q_time_travel, lambda fx, *_: _sql_time_travel(fx)),
     ("merge_upsert", q_merge_upsert, lambda fx, *_: _sql_merge_upsert(fx)),
@@ -16219,30 +15220,23 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("euler_blobs", q_euler_blobs, lambda fx, w, *_: _sql_euler_blobs(fx, w)),
     ("integral_image", q_integral_image, lambda fx, w, *_: _sql_integral_image(fx, w)),
     ("segment_snap", q_segment_snap, lambda fx, *_: _sql_segment_snap(fx)),
-    ("triangle_count", q_triangle_count, lambda *_: _sql_triangle_count()),
     ("box_iou", q_box_iou, lambda fx, *_: _sql_box_iou(fx)),
     ("ssim_pair", q_ssim_pair, lambda fx, w, *_: _sql_ssim_pair(fx, w)),
     ("census_transform", q_census_transform, lambda fx, w, *_: _sql_census_transform(fx, w)),
     ("demosaic_bilinear", q_demosaic, lambda fx, w, *_: _sql_demosaic(fx, w)),
     ("box_nms", q_box_nms, lambda fx, *_: _sql_box_nms(fx)),
-    ("clustering_coeff", q_clustering_coeff, lambda *_: _sql_clustering_coeff()),
-    ("label_propagation", q_label_propagation, lambda *_: _sql_label_propagation()),
     ("segment_intersections", q_segment_intersections,
      lambda fx, *_: _sql_segment_intersections(fx)),
-    ("hits_scores", q_hits, lambda *_: _sql_hits()),
     ("threshold_diffusion", q_threshold_diffusion,
      lambda fx, w, *_: _sql_threshold_diffusion(fx, w)),
     ("bayer_dither", q_bayer_dither, lambda fx, w, *_: _sql_bayer_dither(fx, w)),
     ("haar_census", q_haar_census, lambda fx, w, *_: _sql_haar_census(fx, w)),
     ("shot_detect", q_shot_detect, lambda fx, *_: _sql_shot_detect(fx)),
-    ("degree_assortativity", q_assortativity, lambda *_: _sql_assortativity()),
     ("cost_distance", q_cost_distance, lambda fx, w, *_: _sql_cost_distance(fx, w)),
     ("tone_census", q_tone_census, lambda fx, *_: _sql_tone_census(fx)),
     ("partition_skew_audit", q_partition_skew_audit, lambda fx, *_: _sql_partition_skew_audit(fx)),
-    ("rich_club", q_rich_club, lambda *_: _sql_rich_club()),
     ("box_counting", q_box_counting, lambda fx, w, *_: _sql_box_counting(fx, w)),
     ("ivm_audit", q_ivm_audit, lambda *_: _sql_ivm_audit()),
-    ("dag_layers", q_dag_layers, lambda *_: _sql_dag_layers()),
     ("radial_profile", q_radial_profile, lambda fx, w, *_: _sql_radial_profile(fx, w)),
     ("ntile_deciles", rel.ntile_deciles, lambda *_: rel.ntile_deciles_sql()),
     ("chamfer_distance", q_chamfer_distance, lambda fx, w, *_: _sql_chamfer_distance(fx, w)),
@@ -16266,10 +15260,7 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("pyramid_gap_census", q_pyramid_gap_census, lambda fx, *_: _sql_pyramid_gap_census(fx)),
     ("affine_fit", q_affine_fit, lambda fx, *_: _sql_affine_fit(fx)),
     ("curve_locality", q_curve_locality, lambda fx, *_: _sql_curve_locality(fx)),
-    ("fof_recommend", q_fof_recommend, lambda *_: _sql_fof_recommend()),
-    ("resource_alloc", q_resource_alloc, lambda *_: _sql_resource_alloc()),
     ("hex_bin", q_hex_bin, lambda fx, *_: _sql_hex_bin(fx)),
-    ("sssp_hops", q_sssp, lambda *_: _sql_sssp()),
     ("rle_census", q_rle_census, lambda fx, w, *_: _sql_rle_census(fx, w)),
     ("stream_sliding_rate", q_stream_sliding_rate, lambda fx, *_: _sql_stream_sliding_rate(fx)),
     ("block_motion", q_block_motion, lambda fx, w, *_: _sql_block_motion(fx, w)),
@@ -16277,12 +15268,10 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("kring_smooth", q_kring_smooth, lambda fx, *_: _sql_kring_smooth(fx)),
     ("gap_fill", q_gap_fill, lambda *_: _sql_gap_fill()),
     ("laplacian_residual", q_laplacian, lambda fx, w, *_: _sql_laplacian(fx, w)),
-    ("k_core", q_k_core, lambda *_: _sql_k_core()),
     ("mu_law_census", q_mu_law, lambda fx, *_: _sql_mu_law(fx)),
     ("join_counts", q_join_counts, lambda fx, w, *_: _sql_join_counts(fx, w)),
     ("cdf53_wavelet", q_cdf53, lambda fx, w, *_: _sql_cdf53(fx, w)),
     ("mst_boruvka", q_mst_boruvka, lambda fx, *_: _sql_mst_boruvka(fx)),
-    ("k_truss", q_k_truss, lambda *_: _sql_k_truss()),
     ("pip_raycast", q_pip_raycast, lambda fx, *_: _sql_pip_raycast(fx)),
     ("projection_profiles", q_projection_profiles,
      lambda fx, w, *_: _sql_projection_profiles(fx, w)),
@@ -16291,8 +15280,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("haversine_chain", q_haversine_chain, lambda fx, *_: _sql_haversine_chain(fx)),
     ("circular_xcorr", q_circular_xcorr, lambda fx, w, *_: _sql_circular_xcorr(fx, w)),
     ("delaunay_edges", q_delaunay_edges, lambda fx, *_: _sql_delaunay_edges(fx)),
-    ("apsp_paths", q_apsp_paths, lambda fx, *_: _sql_apsp_paths(fx)),
-    ("bellman_ford", q_bellman_ford, lambda fx, *_: _sql_bellman_ford(fx)),
     ("pip_anti", q_pip_anti, lambda fx, *_: _sql_pip_anti(fx)),
     ("seam_audit", q_seam_audit, lambda fx, w, *_: _sql_seam_audit(fx, w)),
     ("grid_crossings", q_grid_crossings, lambda fx, *_: _sql_grid_crossings(fx)),

@@ -14,12 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _default_driver_memory() -> str:
-    """Half of the host's MemTotal; the other half is left to the Python
-    workers and, in the gate harness, the DuckDB oracle beside the JVM."""
+def mem_total_mb() -> int:
+    """The host's MemTotal in MiB."""
     with open("/proc/meminfo") as f:
         kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
-    return f"{kb // 2 // 1024}m"
+    return kb // 1024
+
+
+def _default_driver_memory() -> str:
+    """Half of the host's MemTotal; the other half is left to the Python
+    workers and, in the gate harness, the DuckDB oracle beside the JVM
+    (capped there at a quarter)."""
+    return f"{mem_total_mb() // 2}m"
 
 
 def get_spark(

@@ -35,7 +35,6 @@ DEFAULT = [
     "zonal_quantiles",    # A23: histogram partials, O(pairs*values) shuffle
     "cell_rollup",        # A19: aggregates-of-aggregates up the cell tree
     "zone_overlap",       # A26: cell-prefiltered pair join, no cross join
-    "pagerank_graph",     # A30: checkpointed per-round join + agg
     "image_augment",      # A32: one fused Arrow hop, bytes never emitted
     "region_geometry",    # A33: map-only per-region geometry
     "radius_join",        # A46: cell filter-refine, no cross join
@@ -58,8 +57,6 @@ DEFAULT = [
     "hough_lines",        # A106: map-only composite-bincount vote pass
     "watershed",          # A107: map-only pointer-jumping pass
     "mst_boruvka",        # R3b: per-round min-struct agg + star contraction
-    "k_truss",            # R3b: oriented triangle join + support filter
-    "bellman_ford",       # R3b: per-round edge relax join + groupBy min
     "merkle_cells",       # R3b: one Arrow decode + sorted md5 folds
     "pip_raycast",        # R3b: broadcast edges + parity groupBy
     "route_burn",         # A108: broadcast waypoint join + codegen DDA
@@ -77,9 +74,7 @@ DEFAULT = [
     "voronoi_assign",     # A62 (round-3 replan): scalar least()+CASE argmin
     "zonal_majority",     # A50-family (round-3 replan): cached-decode hist partials
     "box_nms",            # A165: named-column greedy cascade, zero shuffle
-    "clustering_coeff",   # A166: degree-ordered wedges, 3-way corner credit
     "segment_intersections",  # A172: grid bucket join + ccw refine
-    "hits_scores",        # A177: per-half-round edge join + sum agg
     "threshold_diffusion",    # A178: fused multi-round Arrow pass
     "ivf_nprobe_sweep",   # A186: probe-once candidates + GEMM truth
     "ivm_audit",          # A201: delta-partition scan + dims outer merge

@@ -32,10 +32,8 @@ sys.path.insert(0, str(REPO))
 # slow sf0.1 queries of BENCH_r03 + the round-4 reworked ops
 DEFAULT_QUERIES = [
     "single_linkage", "dbscan_clusters", "mst_boruvka",
-    "polyline_simplify", "voronoi_assign", "k_truss",
-    "label_propagation", "triangle_count",
-    "clustering_coeff", "knn_zones", "zonal_quantiles", "dedup_components",
-    "k_core",
+    "polyline_simplify", "voronoi_assign", "knn_zones", "zonal_quantiles",
+    "dedup_components",
 ]
 
 

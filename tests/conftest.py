@@ -8,7 +8,7 @@ from georaster_spark.sources.fixtures import ensure_fixtures
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="georaster-tests", shuffle_partitions=16)
+    s = get_spark(app_name="georaster-tests", shuffle_partitions=16)
     yield s
     s.stop()
 

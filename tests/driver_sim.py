@@ -51,24 +51,22 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as ent
-    from georaster_spark.session import get_spark
+    from georaster_spark.session import get_spark, mem_total_mb
 
     import os
 
-    spark = get_spark(
-        master=os.environ.get("SPARK_GRAFT_MASTER", "local[8]"),
-        app_name="driver-sim",
-    )
+    spark = get_spark(master=os.environ.get("SPARK_GRAFT_MASTER"), app_name="driver-sim")
     def fresh_con():
         # bound the sibling allocator AND recycle it periodically: the
-        # Spark JVM (heap = MemTotal/2) and DuckDB share one box, and a
+        # Spark JVM (heap = MemTotal/2) and DuckDB (MemTotal/4, the rest
+        # left to the Python workers) share one box, and a
         # 549-query session fragments DuckDB's native arenas until a
         # kilobyte-sized malloc fails (std::bad_alloc ~query 400, seen
         # twice in r5 even with memory_limit set).  A fresh connection
         # every DUCK_RECYCLE queries returns the arenas to the OS; the
         # views are stateless so recreation is free.
         c = duckdb.connect()
-        c.execute("SET memory_limit='8GB'")
+        c.execute(f"SET memory_limit='{mem_total_mb() // 4}MiB'")
         c.execute("SET temp_directory='/tmp/duckdb_spill'")
         for t in [
             "region", "nation", "customer", "supplier", "part", "orders",

@@ -61,52 +61,6 @@ def test_nonconvergence_raises(spark):
         graph.connected_components(e, v, max_iter=1)
 
 
-def test_bfs_min_hops_matches_python_bfs(spark):
-    """bfs_min_hops vs a driver-side collections.deque BFS on the same
-    tiny graph (sf0.001)."""
-    from collections import deque
-
-    from pyspark.sql import functions as F
-
-    from georaster_spark.plans.contract import q_bfs_hops
-
-    sf_dir = "/root/testdata/sf0.001"
-    got = {r["node"]: r["d"] for r in q_bfs_hops(spark, sf_dir).collect()}
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey").cast("long") * 2).alias("s"),
-            (F.col("o_custkey").cast("long") * 2 + 1).alias("c"),
-        )
-        .distinct()
-        .collect()
-    )
-    adj: dict = {}
-    for r in pairs:
-        adj.setdefault(r["s"], set()).add(r["c"])
-        adj.setdefault(r["c"], set()).add(r["s"])
-    seeds = [
-        r["s_suppkey"] * 2
-        for r in spark.read.parquet(f"{sf_dir}/supplier.parquet").collect()
-        if r["s_suppkey"] % 100 == 0
-    ]
-    dist = {s: 0 for s in seeds}
-    q = deque(seeds)
-    while q:
-        u = q.popleft()
-        if dist[u] >= 4:
-            continue
-        for v in adj.get(u, ()):
-            if v not in dist:
-                dist[v] = dist[u] + 1
-                q.append(v)
-    assert got == dist
-    assert max(got.values()) >= 2  # the graph actually expands
-
-
 def _cc_star(spark, edges, vertices):
     e = spark.createDataFrame(edges or [(None, None)], "a_id long, b_id long")
     if not edges:
@@ -138,226 +92,6 @@ def test_star_no_edges_and_self_loops(spark):
     assert got == {3: 3, 4: 4}
 
 
-def test_triangle_census_known_graphs(spark):
-    from georaster_spark.operators.graph import triangle_census
-
-    def census(edges):
-        df = spark.createDataFrame(edges, schema="u long, v long")
-        return triangle_census(df).collect()[0]
-
-    # K4: 4 triangles, 6 edges, wedges = 4*C(3,2)=12, transitivity = 1
-    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    r = census(k4)
-    assert (r["n_nodes"], r["n_edges"], r["n_triangles"]) == (4, 6, 4)
-    assert r["n_wedges"] == 12 and r["transitivity_ppm"] == 1_000_000
-
-    # triangle + pendant; duplicate + reversed + self-loop rows ignored
-    g = [(0, 1), (1, 2), (2, 0), (2, 3), (1, 0), (0, 1), (3, 3)]
-    r = census(g)
-    assert (r["n_edges"], r["n_triangles"]) == (4, 1)
-    assert r["max_degree"] == 3
-
-    # star K1,5: many wedges, zero triangles
-    r = census([(0, i) for i in range(1, 6)])
-    assert r["n_triangles"] == 0 and r["n_wedges"] == 10
-
-
-def test_triangle_census_matches_bruteforce(spark):
-    """Pseudo-random-ish deterministic graph vs O(n^3) brute force."""
-    from itertools import combinations
-
-    from georaster_spark.operators.graph import triangle_census
-
-    n = 24
-    edges = [
-        (a, b)
-        for a, b in combinations(range(n), 2)
-        if (a * 7 + b * 13 + a * b) % 5 < 2
-    ]
-    adj = {i: set() for i in range(n)}
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    want = sum(
-        1 for a, b, c in combinations(range(n), 3)
-        if b in adj[a] and c in adj[a] and c in adj[b]
-    )
-    df = spark.createDataFrame(edges, schema="u long, v long")
-    r = triangle_census(df).collect()[0]
-    assert r["n_triangles"] == want
-    assert r["n_edges"] == len(edges)
-
-
-def test_sssp_rounds_matches_dijkstra(spark):
-    import heapq
-
-    from georaster_spark.operators.graph import sssp_rounds
-
-    # deterministic weighted graph, two seeds
-    n = 30
-    edges = []
-    for a in range(n):
-        for b in range(a + 1, n):
-            if (a * 11 + b * 7 + a * b) % 6 == 0:
-                edges.append((a, b, 1 + (a + b) % 9))
-    sym = edges + [(b, a, w) for a, b, w in edges]
-    seeds = [0, 17]
-
-    def dijkstra_capped(max_hops):
-        # exact min-cost over paths with <= max_hops edges
-        INF = float("inf")
-        d = {(s): 0 for s in seeds}
-        cur = {s: 0 for s in seeds}
-        best = dict(cur)
-        for _ in range(max_hops):
-            nxt = dict(best)
-            for a, b, w in sym:
-                if a in best and best[a] + w < nxt.get(b, INF):
-                    nxt[b] = best[a] + w
-            best = nxt
-        return best
-
-    e = spark.createDataFrame(sym, schema="src long, dst long, w long")
-    s = spark.createDataFrame([(x,) for x in seeds], schema="node long")
-    got = {r["node"]: r["dist"] for r in sssp_rounds(e, s, rounds=4).collect()}
-    assert got == dijkstra_capped(4)
-    # more rounds converge to true shortest paths
-    got8 = {r["node"]: r["dist"] for r in sssp_rounds(e, s, rounds=12).collect()}
-    assert got8 == dijkstra_capped(12)
-
-
-def test_k_core_matches_pure_python(spark):
-    from georaster_spark.operators.graph import k_core_rounds
-
-    # a 5-clique (4-regular) + a tail chain hanging off it
-    clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    chain = [(4, 10), (10, 11), (11, 12)]
-    edges = clique + chain
-
-    def peel(es, k, rounds):
-        es = {tuple(sorted(e)) for e in es}
-        out = []
-        for r in range(1, rounds + 1):
-            deg = {}
-            for a, b in es:
-                deg[a] = deg.get(a, 0) + 1
-                deg[b] = deg.get(b, 0) + 1
-            keep = {n for n, d in deg.items() if d >= k}
-            es = {(a, b) for a, b in es if a in keep and b in keep}
-            nodes = {n for e in es for n in e}
-            out.append((r, len(nodes), len(es), sum(nodes)))
-        return out
-
-    df = spark.createDataFrame(edges, schema="u long, v long")
-    got = [tuple(r) for r in k_core_rounds(df, k=2, rounds=3).collect()]
-    assert got == peel(edges, 2, 3)
-    got3 = [tuple(r) for r in k_core_rounds(df, k=4, rounds=2).collect()]
-    assert got3 == peel(edges, 4, 2)
-    # 4-core of the structure is exactly the 5-clique
-    assert got3[-1][1:3] == (5, 10)
-
-
-def test_clustering_coefficients_known_graph(spark):
-    # triangle 1-2-3 plus pendant 4 on node 1; a second triangle 5-6-7
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (1, 4), (5, 6), (6, 7), (5, 7)], "u long, v long"
-    )
-    got = {r["node"]: r for r in graph.clustering_coefficients(edges).collect()}
-    # node 1: deg 3, 1 triangle -> 2*1e6/(3*2) = 333333
-    assert got[1]["deg"] == 3 and got[1]["n_tri"] == 1
-    assert got[1]["coeff_ppm"] == 333333
-    # nodes 2,3,5,6,7: deg 2, 1 triangle -> coefficient 1.0
-    for n in (2, 3, 5, 6, 7):
-        assert got[n]["coeff_ppm"] == 1000000, n
-    assert 4 not in got  # pendant has no triangle
-
-
-def test_label_propagation_two_cliques(spark):
-    # two 4-cliques bridged by one edge; labels must settle to each
-    # clique's minimum id
-    def clique(ns):
-        return [(a, b) for i, a in enumerate(ns) for b in ns[i + 1:]]
-
-    edges = spark.createDataFrame(
-        clique([1, 2, 3, 4]) + clique([10, 11, 12, 13]) + [(4, 10)],
-        "u long, v long",
-    )
-    rows = {r["round"]: r for r in graph.label_propagation_rounds(edges, 3).collect()}
-    # brute-force replay of the synchronous min-tie rule
-    import collections
-
-    adj = collections.defaultdict(set)
-    for u, v in clique([1, 2, 3, 4]) + clique([10, 11, 12, 13]) + [(4, 10)]:
-        adj[u].add(v)
-        adj[v].add(u)
-    lbl = {n: n for n in adj}
-    for r in range(1, 4):
-        nxt = {}
-        for n in adj:
-            cnt = collections.Counter(lbl[m] for m in adj[n])
-            best = max(cnt.values())
-            nxt[n] = min(l for l, c in cnt.items() if c == best)
-        lbl = nxt
-        assert rows[r]["n_labels"] == len(set(lbl.values())), r
-        assert rows[r]["label_checksum"] == sum(n * l for n, l in lbl.items()), r
-        sizes = collections.Counter(lbl.values())
-        assert rows[r]["max_community"] == max(sizes.values()), r
-
-
-def test_hits_rounds_bruteforce(spark):
-    # small directed bipartite-ish graph, exact integer replay
-    E = [(1, 10), (1, 11), (2, 10), (3, 11), (3, 12), (2, 12), (1, 12)]
-    edges = spark.createDataFrame(E, "src long, dst long")
-    rows = {r["round"]: r for r in graph.hits_rounds(edges, 2).collect()}
-    h = {u: 1 for u in {e[0] for e in E}}
-    for r in (1, 2):
-        a = {}
-        for u, v in E:
-            a[v] = a.get(v, 0) + h[u]
-        h = {}
-        for u, v in E:
-            h[u] = h.get(u, 0) + a[v]
-        g = rows[r]
-        assert g["sum_h"] == sum(h.values())
-        assert g["max_h"] == max(h.values())
-        assert g["hub_checksum"] == sum(k * v for k, v in h.items())
-        assert g["sum_a"] == sum(a.values())
-        assert g["auth_checksum"] == sum(k * v for k, v in a.items())
-
-
-def test_resource_allocation_known_graph(spark):
-    # Path 1-2-3 plus hub 4 adjacent to everything: deg(1)=2, deg(2)=3,
-    # deg(3)=2, deg(4)=3.  Non-adjacent pairs with common neighbors:
-    # only (1,3) — common neighbors {2 (deg 3), 4 (deg 3)}.
-    S = graph.RA_SCALE
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 4), (2, 4), (3, 4)], "u long, v long"
-    )
-    rows = graph.resource_allocation(e).collect()
-    assert [(r["p"], r["q"], r["ra_score"], r["n_common"]) for r in rows] == [
-        (1, 3, 2 * (S // 3), 2)
-    ]
-
-
-def test_resource_allocation_ranks_hub_discount(spark):
-    # Two candidate pairs with ONE common neighbor each: (1,3) via node
-    # 2 (degree inflated to 4 by pendant leaves) and (5,7) via node 6
-    # (degree 2).  Plain common-neighbor count ties them 1:1; RA must
-    # rank (5,7) first because its witness is not a hub.
-    S = graph.RA_SCALE
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (2, 8), (2, 9), (5, 6), (6, 7)], "u long, v long"
-    )
-    got = [
-        (r["p"], r["q"], r["ra_score"])
-        for r in graph.resource_allocation(e).collect()
-    ]
-    assert got[0] == (5, 7, S // 2)
-    assert (1, 3, S // 4) in got
-    ra = {(p, q): s for p, q, s in got}
-    assert ra[(5, 7)] > ra[(1, 3)]
-
-
 def test_msf_weight_packing_injective_past_1000_zones(spark):
     # ADVICE r4 (medium): the old decimal packing d*10^6 + u*10^3 + v
     # aliased (d, u, v) with (d+1, u-1000, v) once zone ids reached
@@ -383,42 +117,3 @@ def test_msf_weight_packing_guard_trips_on_wide_zone_id(spark):
     df = spark.createDataFrame([(1, 2048, 3)], "d long, u long, v long")
     with pytest.raises(Exception, match="msf weight packing"):
         df.select(_msf_weight().alias("w")).collect()
-
-
-def test_triangle_family_tier_equivalence(spark, monkeypatch):
-    """The broadcast (_direct_support) and shuffled (degree-ordered
-    edge-iterator) tiers of triangle_census / clustering_coefficients /
-    k_truss_rounds must produce identical rows: force the shuffled tier
-    by zeroing the edge gate and diff against the default tier."""
-    from itertools import combinations
-
-    from georaster_spark.operators import graph
-
-    n = 40
-    edges = [
-        (a, b)
-        for a, b in combinations(range(n), 2)
-        if (a * 11 + b * 17 + a * b * 3) % 7 < 3
-    ]
-    df = spark.createDataFrame(edges, schema="u long, v long")
-
-    def run_all():
-        cen = triangle = graph.triangle_census(df).collect()
-        cc = sorted(
-            tuple(r) for r in graph.clustering_coefficients(df).collect()
-        )
-        kt = sorted(
-            tuple(r) for r in graph.k_truss_rounds(df, k=4, rounds=3).collect()
-        )
-        return cen, cc, kt
-
-    cen_b, cc_b, kt_b = run_all()
-    monkeypatch.setattr(graph, "KTRUSS_BCAST_EDGES", 0)
-    cen_s, cc_s, kt_s = run_all()
-    assert cen_b == cen_s
-    assert cc_b == cc_s
-    assert kt_b == kt_s
-    # and the shuffled tier's own sub-gate (degree broadcast) off too
-    monkeypatch.setattr(graph, "DEG_BCAST_VERTICES", 0)
-    cen_s2, cc_s2, kt_s2 = run_all()
-    assert cen_b == cen_s2 and cc_b == cc_s2 and kt_b == kt_s2

@@ -49,25 +49,3 @@ def test_zone_overlap_buffer_pairs_disjoint_zones(spark):
     buffered = zone_overlap(zones, buffer=300.0).collect()  # dilated by 300
     # dilated boxes: A x[700,2300], B x[2100,3300], y both [700,2300]
     assert len(buffered) == 1 and buffered[0].area_u == (2300 - 2100) * (2300 - 700)
-
-
-def test_pagerank_int_matches_reference(spark):
-    """graph.pagerank_int vs a dict-based reference implementation on a
-    planted asymmetric graph (hub + chain + isolated pair)."""
-    from georaster_spark.operators.graph import pagerank_int
-
-    pairs = [(1, 2), (1, 3), (1, 4), (2, 3), (5, 6)]
-    edges = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.rank for r in pagerank_int(df, iters=3).collect()}
-
-    deg = {}
-    for s, _ in edges:
-        deg[s] = deg.get(s, 0) + 1
-    rank = {n: 1_000_000 for n in deg}
-    for _ in range(3):
-        nxt = {}
-        for s, d in edges:
-            nxt[d] = nxt.get(d, 0) + rank[s] // deg[s]
-        rank = {n: 150_000 + (85 * v) // 100 for n, v in nxt.items()}
-    assert got == rank

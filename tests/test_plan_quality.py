@@ -341,7 +341,7 @@ def test_zone_overlap_no_cartesian(spark, sf0001_dir):
 
 
 def test_zone_prox_edges_no_nested_loop_join(spark):
-    """VERDICT r3 item 4: the MST/APSP/Bellman-Ford edge candidates come
+    """VERDICT r3 item 4: the MST and single-linkage edge candidates come
     from the cell-bucketed equi-join — NO BroadcastNestedLoopJoin may
     appear in the plan (the zones x zones theta join was one)."""
     from georaster_spark.plans.contract import _zone_prox_edges

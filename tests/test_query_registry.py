@@ -1,13 +1,13 @@
 """The query registry (contract.QUERY_TABLE) is well formed: one row per
 query name, every row either has an oracle builder or says why it is
-checked on rows only, and no operator module keeps a DuckDB twin that no
-row uses.  Needs no Spark session."""
+checked on rows only, and neither an operator module nor contract.py
+keeps a query or DuckDB twin that no row uses.  Needs no Spark session."""
 
 from __future__ import annotations
 
 import inspect
 from collections import Counter
-from types import ModuleType
+from types import CodeType, ModuleType
 
 from georaster_spark.operators import relational, textops, vectors
 from georaster_spark.plans import contract
@@ -72,4 +72,34 @@ def test_every_sql_twin_is_a_row_oracle():
         if name.endswith("_sql") and inspect.isfunction(fn)
         and fn.__module__ == mod.__name__ and fn not in used
     ]
+    assert not orphans, orphans
+
+
+def _code_names(fn) -> set[str]:
+    """co_names of `fn` and of every code object nested in it."""
+    names, stack = set(), [fn.__code__]
+    while stack:
+        code = stack.pop()
+        names |= set(code.co_names)
+        stack += [c for c in code.co_consts if isinstance(c, CodeType)]
+    return names
+
+
+def test_every_contract_query_and_twin_is_reached_from_a_row():
+    """A `q_*` or `_sql_*` in contract.py that no row reaches, directly or
+    through other contract functions, is dead and must go with its row."""
+    defined = {
+        name: fn
+        for name, fn in vars(contract).items()
+        if inspect.isfunction(fn) and fn.__module__ == contract.__name__
+    }
+    stack = [f for _, query, oracle in contract.QUERY_TABLE for f in (query, oracle) if callable(f)]
+    reached = {name for name, fn in defined.items() if fn in stack}
+    while stack:
+        for name in _code_names(stack.pop()) & defined.keys() - reached:
+            reached.add(name)
+            stack.append(defined[name])
+    orphans = sorted(
+        name for name in defined if name.startswith(("q_", "_sql_")) and name not in reached
+    )
     assert not orphans, orphans
