@@ -14,17 +14,15 @@ Design note (SURVEY §4.3): operators FUSE decode with their pixel
 computation inside one applyInPandas/pandas_udf rather than materialising
 decoded arrays between stages — `bytes` crosses JVM->Python once per
 stage, and queries that don't touch pixels never deserialize it (column
-pruning).  The UDFs here are for codec-level use (stats, verification,
-re-encode sinks).
+pruning).  The UDFs here are for codec-level use (stats, verification).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, DoubleType
+from pyspark.sql.types import DoubleType
 
 from .. import oracle
 
@@ -70,54 +68,17 @@ def pixel_mean(data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> p
     return pd.Series(out)
 
 
-def _dtype_of(fmt: str):
-    return "<u2" if fmt == "raw16" else np.uint8
-
-
-@F.pandas_udf(DoubleType())
-def pixel_psnr(
-    data_a: pd.Series, data_b: pd.Series, w: pd.Series, h: pd.Series,
-    fmt_a: pd.Series, fmt_b: pd.Series,
-) -> pd.Series:
-    """Per-row PSNR(dB) between two encodings of a tile (op E10).
-    inf (identical) is mapped to 99.0 so SQL aggregation stays finite.
-
-    Vectorized by (pixel-count, dtype-pair) group: equal-shaped rows
-    decode as two (n, npix) blocks and reduce with one vectorized MSE
-    (exact — squared integer diffs sum exactly in float64), matching
-    oracle.psnr bit-for-bit.
-    """
-    n = len(data_a)
-    out = np.empty(n, dtype=np.float64)
-    a16, b16 = _raw16_mask(fmt_a), _raw16_mask(fmt_b)
-    keys = [(len(data_a.iat[k]), bool(a16[k]), bool(b16[k])) for k in range(n)]
-    groups: dict[tuple, list[int]] = {}
-    for k, key in enumerate(keys):
-        groups.setdefault(key, []).append(k)
-    for (nbytes_a, a16, b16), idx in groups.items():
-        dt_a = "<u2" if a16 else np.uint8
-        dt_b = "<u2" if b16 else np.uint8
-        a = np.frombuffer(b"".join(data_a.iat[k] for k in idx), dtype=dt_a).reshape(len(idx), -1)
-        b = np.frombuffer(b"".join(data_b.iat[k] for k in idx), dtype=dt_b).reshape(len(idx), -1)
-        diff = a.astype(np.float64) - b.astype(np.float64)
-        mse = np.mean(diff * diff, axis=1)
-        with np.errstate(divide="ignore"):
-            p = 10.0 * np.log10((255.0 * 255.0) / mse)
-        out[np.asarray(idx)] = np.where(mse == 0.0, 99.0, p)
-    return pd.Series(out)
-
-
 @F.pandas_udf(DoubleType())
 def psnr_after_qnt(data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
     """Fused quantize+PSNR (op E10 hot path): PSNR(dB) between a tile and
     its 'qnt' re-encoding, computed from `bytes` ALONE — the quantizer is
     elementwise, so the quantized payload is never materialized and pixel
     bytes cross the JVM->Python Arrow boundary ONCE.  Bit-identical to
-    pixel_psnr(bytes, reencode('qnt')(bytes, ...), ...), which shipped the
-    pixels across Arrow three times (re-encode out, then both payloads
-    back in) and was the dominant cost of q_verification_report.
+    oracle.psnr against a materialized 'qnt' re-encode, which as two UDFs
+    shipped the pixels across Arrow three times (re-encode out, then both
+    payloads back in) and was the dominant cost of q_verification_report.
 
-    Vectorized by (byte-length, dtype) group like pixel_psnr; identical
+    Vectorized by (byte-length, dtype) group like pixel_mean; identical
     tiles (already-quantized 'qnt' input — the quantizer is idempotent)
     map inf -> 99.0 so SQL aggregation stays finite.
     """
@@ -140,33 +101,3 @@ def psnr_after_qnt(data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) 
                 p = 10.0 * np.log10((255.0 * 255.0) / mse)
             out[np.asarray(idx)] = np.where(mse == 0.0, 99.0, p)
     return pd.Series(out)
-
-
-def reencode(fmt_to: str) -> Column:
-    """Factory: returns a pandas-UDF Column re-encoding `bytes` to fmt_to."""
-
-    @F.pandas_udf(BinaryType())
-    def _reenc(data: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
-        # Codecs are elementwise, so a batch re-encodes as ONE NumPy op
-        # over the concatenated buffer per source-dtype group, then is
-        # split back on the (byte-precise) row offsets.
-        n = len(data)
-        out: list[bytes | None] = [None] * n
-        is16 = _raw16_mask(fmt)
-        for dtype, mask in ((np.uint8, ~is16), ("<u2", is16)):
-            idx = np.nonzero(mask)[0]
-            if len(idx) == 0:
-                continue
-            bufs = [data.iat[int(k)] for k in idx]
-            arr = np.frombuffer(b"".join(bufs), dtype=dtype)
-            enc = oracle.encode_pixels(arr, fmt_to)
-            itemsize = np.dtype(_dtype_of(fmt_to)).itemsize
-            src_itemsize = np.dtype(dtype).itemsize
-            off = 0
-            for k, buf in zip(idx, bufs):
-                npix = len(buf) // src_itemsize
-                out[int(k)] = enc[off * itemsize:(off + npix) * itemsize]
-                off += npix
-        return pd.Series(out)
-
-    return _reenc

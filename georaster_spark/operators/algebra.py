@@ -1,18 +1,26 @@
-"""Raster map algebra between two co-registered rasters (change
-detection).  Reference analog: the elementwise NumPy arithmetic a
-georaster user writes between two loaded rasters' ``self.r`` arrays
-after checking extents match (`georaster/georaster.py ::
+"""Raster map algebra beyond georaster's per-raster surface: change
+detection between two co-registered rasters; focal, terrain and
+hydrology kernels (focal statistics and median, proximity, slope and
+aspect, hillshade, curvature, TPI/TRI, openness, horizon shadow,
+viewshed, D8 flow direction, accumulation and length, watershed basins,
+accumulated cost distance); stretch, Otsu and crosstab classification
+with Sobel orientation; and the kernels of the rows INVENTORY.md lists
+as "unplaced" (chamfer and exact distance transforms, bilateral and
+Perona-Malik smoothing, adaptive and Schmitt thresholds, a homography
+warp, integer transforms, codec censuses, RLSA smearing, the structure
+tensor).  Reference analog: the NumPy a georaster user runs over loaded
+rasters' ``self.r`` arrays (`georaster/georaster.py ::
 SingleBandRaster.__init__` eager-load ≈L620-700 ⚠ UNVERIFIED, SURVEY
-§0) — here lifted to a distributed two-table join over tile corpora.
+§0), lifted to distributed passes over tile corpora.
 
-Scale shape: the pair join is a plain equi-join on the tile key, so at
-100 TB both sides co-partition on that key and Catalyst picks SMJ/AQE;
-if both corpora are written as bucketed tables on the key
+Scale shape: the change-detection pair join is a plain equi-join on the
+tile key, so at 100 TB both sides co-partition on that key and Catalyst
+picks SMJ/AQE; if both corpora are written as bucketed tables on the key
 (sources/bucketed.py) the join is SHUFFLE-FREE — neither side's pixel
-bytes ever move.  The diff statistics are then ONE fused pandas UDF per
-pair: both payloads cross the JVM->Python Arrow boundary exactly once
-and nothing pixel-sized is ever materialized between stages (the
-anti-pattern VERDICT r1 flagged on the E10 path).
+bytes ever move.  Every kernel is then ONE fused pandas UDF or
+``mapInPandas`` pass: pixels cross the JVM->Python Arrow boundary
+exactly once and only per-tile integer statistics come back, so nothing
+pixel-sized is materialized between stages.
 """
 
 from __future__ import annotations
@@ -42,9 +50,9 @@ def diff_stats(
     difference.  Integer-exact (int64 arithmetic), so the DuckDB oracle
     re-derives the same values from the pixel formulas.
 
-    Vectorized by byte-length group like codecs.pixel_psnr: equal-shaped
-    pairs decode as two (n, npix) blocks and reduce with three
-    vectorized axis-1 ops — no per-row Python loop.
+    Vectorized by byte-length group: equal-shaped pairs decode as two
+    (n, npix) blocks and reduce with three vectorized axis-1 ops — no
+    per-row Python loop.
     """
 
     @F.pandas_udf(_DIFF_SCHEMA)
@@ -1219,519 +1227,6 @@ def openness_stats(tiles: DataFrame) -> DataFrame:
     return slim.mapInPandas(_open, schema=_OPEN_SCHEMA)
 
 
-_MORPH_SCHEMA = (
-    "image_id string, n_interior long, sum_erode long, sum_dilate long, "
-    "n_grad long, grad_checksum long"
-)
-
-
-def morphology_stats(tiles: DataFrame) -> DataFrame:
-    """3x3 greyscale morphology census — erosion (min-of-9), dilation
-    (max-of-9) and the morphological gradient (dilate - erode), the
-    scipy ``grey_erosion``/``grey_dilation`` step a georaster user runs
-    on a loaded ``self.r`` before edge/region work (SURVEY §0 ⚠,
-    nothing on disk).  Min/max of 9 integers are exact integers, so the
-    DuckDB oracle replays them as least(...)/greatest(...) over the ramp
-    formula.  Per tile: interior count, sum of eroded values, sum of
-    dilated values, count of nonzero-gradient pixels (edge census) and
-    the position-weighted gradient checksum.
-
-    Scale shape: map-only fused Arrow pass (pixels cross once, output is
-    5 slim columns); min/max run as vectorized reductions over the
-    (tiles, 9, ih, iw) neighbor block per (w,h,fmt) group — no
-    per-pixel Python."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _morph(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "sum_erode", "sum_dilate", "n_grad",
-                      "grad_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                stack = np.stack(
-                    [
-                        z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                        for di in (-1, 0, 1)
-                        for dj in (-1, 0, 1)
-                    ],
-                    axis=1,
-                )  # (b, 9, ih, iw)
-                ero = stack.min(axis=1)
-                dil = stack.max(axis=1)
-                grad = dil - ero
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["sum_erode"][rows] = ero.sum(axis=(1, 2))
-                out["sum_dilate"][rows] = dil.sum(axis=(1, 2))
-                out["n_grad"][rows] = (grad > 0).sum(axis=(1, 2))
-                out["grad_checksum"][rows] = (grad * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_morph, schema=_MORPH_SCHEMA)
-
-
-_LBP_SCHEMA = (
-    "image_id string, n_interior long, sum_code long, n_uniform long, "
-    "code_checksum long"
-)
-
-# circular neighbor order for LBP bit k = 0..7 (clockwise from top-left),
-# so that bits k and k+1 are spatially adjacent — required for the
-# uniform-pattern (<= 2 circular transitions) definition to be the
-# standard one (Ojala et al. 2002).
-_LBP_RING = ((-1, -1), (-1, 0), (-1, 1), (0, 1), (1, 1), (1, 0), (1, -1), (0, -1))
-
-
-def lbp_stats(tiles: DataFrame) -> DataFrame:
-    """Local-binary-pattern texture census (Ojala et al. 2002; skimage
-    ``local_binary_pattern`` analog over a loaded ``self.r`` — SURVEY §0
-    ⚠).  Each interior pixel gets the 8-bit code with bit k set iff
-    neighbor_k >= center (circular clockwise ring), an exact integer —
-    the DuckDB oracle replays the identical bit sum from the ramp
-    formula.  "Uniform" patterns are codes with <= 2 circular 0/1
-    transitions, i.e. bit_count(code XOR rol8(code)) <= 2.
-
-    Per tile: interior count, sum of codes, uniform-pattern count, and
-    the position-weighted code checksum.  Map-only fused Arrow pass;
-    the ring compare runs as one vectorized pass over the (tiles, 8,
-    ih, iw) neighbor block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _lbp(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "sum_code", "n_uniform", "code_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                c0 = z[:, 1:-1, 1:-1]
-                code = np.zeros((b, ih, iw), dtype=np.int64)
-                for k, (di, dj) in enumerate(_LBP_RING):
-                    nb = z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    code += (nb >= c0).astype(np.int64) << k
-                rol = ((code << 1) & 0xFF) | (code >> 7)
-                trans = code ^ rol
-                pc = np.zeros_like(trans)
-                for k in range(8):
-                    pc += (trans >> k) & 1
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["sum_code"][rows] = code.sum(axis=(1, 2))
-                out["n_uniform"][rows] = (pc <= 2).sum(axis=(1, 2))
-                out["code_checksum"][rows] = (code * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_lbp, schema=_LBP_SCHEMA)
-
-
-_MS_SCHEMA = "image_id string, ms_case int, n_blocks long"
-
-_MS_THRESHOLD = 127
-
-
-def marching_squares_census(tiles: DataFrame, t: int = _MS_THRESHOLD) -> DataFrame:
-    """Marching-squares case census — the isoline-extraction step
-    (gdal_contour / skimage ``find_contours`` analog — SURVEY §0 ⚠)
-    reduced to its exact combinatorial core: each 2x2 pixel block gets
-    case = b_tl + 2*b_tr + 4*b_br + 8*b_bl with b = (v > t), and the
-    output is the per-tile count of each of the 16 cases (cases 5/10
-    are the ambiguous saddles; 0/15 carry no contour).  Pure integer
-    compares, replayed bit-for-bit by the DuckDB oracle.
-
-    One output row per (tile, case present).  Map-only fused Arrow
-    pass; the 16-way histogram is one offset-bincount over the
-    (tiles, bh, bw) case grid."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _ms(batches):
-        for pdf in batches:
-            groups: dict[tuple, list[int]] = {}
-            for r in range(len(pdf)):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            cols: dict[str, list] = {"image_id": [], "ms_case": [], "n_blocks": []}
-            for (w, h, fmt), idx in groups.items():
-                if w < 2 or h < 2:
-                    continue
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                m = (z > t).astype(np.int64)
-                case = (
-                    m[:, :-1, :-1]          # top-left
-                    + 2 * m[:, :-1, 1:]     # top-right
-                    + 4 * m[:, 1:, 1:]      # bottom-right
-                    + 8 * m[:, 1:, :-1]     # bottom-left
-                )
-                flat = np.arange(b, dtype=np.int64)[:, None, None] * 16 + case
-                cnt = np.bincount(flat.ravel(), minlength=b * 16).reshape(b, 16)
-                ids = pdf["image_id"].to_numpy(dtype=object)[np.asarray(idx)]
-                bi, ci = np.nonzero(cnt)
-                cols["image_id"].extend(ids[bi])
-                cols["ms_case"].extend(ci.astype(np.int32))
-                cols["n_blocks"].extend(cnt[bi, ci])
-            yield pd.DataFrame(cols) if cols["image_id"] else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-
-    return slim.mapInPandas(_ms, schema=_MS_SCHEMA)
-
-
-_MOM_SCHEMA = (
-    "image_id string, m00 long, m10 long, m01 long, m11 long, m20 long, "
-    "m02 long, mu20_num long, mu02_num long, mu11_num long"
-)
-
-
-def image_moments(tiles: DataFrame) -> DataFrame:
-    """Raw + central image moments (cv2.moments analog — the
-    centroid/orientation step a georaster user runs on a loaded
-    ``self.r`` or a binarized mask; SURVEY §0 ⚠).  Raw moments
-    m_pq = sum(i^p * j^q * v) are exact int64; the central second
-    moments are emitted as the EXACT integer numerators over the common
-    denominator m00:
-
-        mu20_num = m00*m20 - m10^2      (= m00^2 * mu20)
-        mu02_num = m00*m02 - m01^2
-        mu11_num = m00*m11 - m10*m01
-
-    (|m20| <= 255*31^2*1024 < 2.6e8 at 32x32, so the products stay well
-    inside int64; orientation/eccentricity are pure functions of these
-    three).  Map-only fused Arrow pass; the six sums are matrix products
-    of the (tiles, N) pixel block with fixed weight vectors."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _mom(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("m00", "m10", "m01", "m11", "m20", "m02",
-                      "mu20_num", "mu02_num", "mu11_num"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h * w)
-                    .astype(np.int64)
-                )
-                ii = np.repeat(np.arange(h, dtype=np.int64), w)
-                jj = np.tile(np.arange(w, dtype=np.int64), h)
-                rows = np.asarray(idx)
-                m00 = z.sum(axis=1)
-                m10 = z @ ii
-                m01 = z @ jj
-                m11 = z @ (ii * jj)
-                m20 = z @ (ii * ii)
-                m02 = z @ (jj * jj)
-                out["m00"][rows] = m00
-                out["m10"][rows] = m10
-                out["m01"][rows] = m01
-                out["m11"][rows] = m11
-                out["m20"][rows] = m20
-                out["m02"][rows] = m02
-                out["mu20_num"][rows] = m00 * m20 - m10 * m10
-                out["mu02_num"][rows] = m00 * m02 - m01 * m01
-                out["mu11_num"][rows] = m00 * m11 - m10 * m01
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_mom, schema=_MOM_SCHEMA)
-
-
-_HARRIS_SCHEMA = (
-    "image_id string, n_window long, n_corners long, sum_trace long, "
-    "sum_det long"
-)
-
-# 20*det > trace^2  <=>  det - 0.05*trace^2 > 0: the Harris response
-# R = det(M) - k*trace(M)^2 at the textbook k = 0.05, kept exact by
-# multiplying through by 20.
-_HARRIS_K20 = 20
-
-
-def harris_stats(tiles: DataFrame) -> DataFrame:
-    """Harris corner-response census (Harris & Stephens 1988; cv2
-    ``cornerHarris`` analog — SURVEY §0 ⚠) on an exact integer surface.
-    Sobel gradients gx, gy over the 3x3-valid interior; the structure
-    tensor is the UNWEIGHTED 3x3 window sum (box window, not Gaussian —
-    the documented deviation that keeps every quantity an integer):
-
-        Sxx = sum gx^2,  Syy = sum gy^2,  Sxy = sum gx*gy
-        det = Sxx*Syy - Sxy^2,  trace = Sxx + Syy
-        corner  <=>  20*det > trace^2      (k = 0.05 exactly)
-
-    |gx| <= 4*255 so Sxx <= 9*1020^2 < 9.4e6, det < 8.8e13, and the
-    per-tile sum of dets < 7e16 — all inside int64; the DuckDB oracle
-    replays the identical arithmetic from the ramp formula.  Per tile:
-    valid-window count, corner count, sum of traces, sum of dets.
-
-    Map-only fused Arrow pass; gradients and window sums are stacked
-    vectorized slices — no per-pixel Python."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _harris(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_window", "n_corners", "sum_trace", "sum_det"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 5 or h < 5:
-                    continue
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                # Sobel over the (h-2, w-2) interior
-                gx = (
-                    (z[:, 2:, :-2] + 2 * z[:, 2:, 1:-1] + z[:, 2:, 2:])
-                    - (z[:, :-2, :-2] + 2 * z[:, :-2, 1:-1] + z[:, :-2, 2:])
-                )
-                gy = (
-                    (z[:, :-2, 2:] + 2 * z[:, 1:-1, 2:] + z[:, 2:, 2:])
-                    - (z[:, :-2, :-2] + 2 * z[:, 1:-1, :-2] + z[:, 2:, :-2])
-                )
-                ih, iw = h - 4, w - 4  # window-valid interior
-                def wsum(a):
-                    s = np.zeros((b, ih, iw), dtype=np.int64)
-                    for di in (0, 1, 2):
-                        for dj in (0, 1, 2):
-                            s += a[:, di : di + ih, dj : dj + iw]
-                    return s
-                sxx = wsum(gx * gx)
-                syy = wsum(gy * gy)
-                sxy = wsum(gx * gy)
-                det = sxx * syy - sxy * sxy
-                trace = sxx + syy
-                rows = np.asarray(idx)
-                out["n_window"][rows] = ih * iw
-                out["n_corners"][rows] = (
-                    _HARRIS_K20 * det > trace * trace
-                ).sum(axis=(1, 2))
-                out["sum_trace"][rows] = trace.sum(axis=(1, 2))
-                out["sum_det"][rows] = det.sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_harris, schema=_HARRIS_SCHEMA)
-
-
-_FAST_SCHEMA = (
-    "image_id string, n_interior long, n_bright long, n_dark long, "
-    "corner_checksum long"
-)
-
-# Bresenham circle of radius 3 — the FAST-9 ring, clockwise from 12
-# o'clock (Rosten & Drummond 2006, Fig. 1 ordering).
-_FAST_RING = (
-    (-3, 0), (-3, 1), (-2, 2), (-1, 3), (0, 3), (1, 3), (2, 2), (3, 1),
-    (3, 0), (3, -1), (2, -2), (1, -3), (0, -3), (-1, -3), (-2, -2), (-3, -1),
-)
-_FAST_T = 20  # intensity margin
-_FAST_N = 9   # contiguous-arc length
-
-
-def fast_corner_stats(tiles: DataFrame) -> DataFrame:
-    """FAST-9 corner census (Rosten & Drummond 2006; cv2
-    ``FastFeatureDetector`` analog, no NMS — SURVEY §0 ⚠).  A pixel is
-    a bright corner iff >= 9 CONTIGUOUS pixels of its radius-3 Bresenham
-    ring exceed center + t, dark likewise below center - t.  The
-    circular-run test is exact integer bit logic: pack the ring into a
-    16-bit mask m, duplicate it as m2 = m * 65537 (= m | m<<16, disjoint
-    bits), AND-fold 9 shifts — a run of 9 exists iff
-    (m2 & m2>>1 & ... & m2>>8) has a bit in the low 16.  The DuckDB
-    oracle replays the identical mask arithmetic from the ramp formula.
-
-    Per tile: interior count (margin 3), bright/dark corner counts, and
-    the position-weighted (bright - dark) checksum.  Map-only fused
-    Arrow pass; the ring compares run over a (tiles, 16, ih, iw)
-    block — no per-pixel Python."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _fast(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "n_bright", "n_dark", "corner_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 7 or h < 7:
-                    continue
-                b = len(idx)
-                ih, iw = h - 6, w - 6
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                c0 = z[:, 3 : h - 3, 3 : w - 3]
-
-                def run9(mask):
-                    m2 = mask * 65537  # m | m << 16 (bits disjoint)
-                    acc = m2.copy()
-                    for s in range(1, _FAST_N):
-                        acc &= m2 >> s
-                    return (acc & 0xFFFF) != 0
-
-                mb = np.zeros((b, ih, iw), dtype=np.int64)
-                md = np.zeros((b, ih, iw), dtype=np.int64)
-                for k, (di, dj) in enumerate(_FAST_RING):
-                    nb = z[:, 3 + di : h - 3 + di, 3 + dj : w - 3 + dj]
-                    mb |= (nb > c0 + _FAST_T).astype(np.int64) << k
-                    md |= (nb < c0 - _FAST_T).astype(np.int64) << k
-                bright = run9(mb)
-                dark = run9(md)
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["n_bright"][rows] = bright.sum(axis=(1, 2))
-                out["n_dark"][rows] = dark.sum(axis=(1, 2))
-                out["corner_checksum"][rows] = (
-                    (bright.astype(np.int64) - dark.astype(np.int64)) * wt
-                ).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_fast, schema=_FAST_SCHEMA)
-
-
-_DOG_SCHEMA = (
-    "image_id string, n_interior long, n_pos long, n_neg long, "
-    "sum_resp long, resp_checksum long"
-)
-
-# response > 0 iff the 3x3 box mean exceeds the 5x5 box mean: the
-# integer cross-multiplied difference 25*S3 - 9*S5 (scale 225).
-_DOG_T = 450  # = 2 * 225: |mean difference| > 2 intensity levels
-
-
-def dog_blob_stats(tiles: DataFrame) -> DataFrame:
-    """Difference-of-boxes blob census — the integer-exact core of
-    difference-of-Gaussians blob detection (SIFT's DoG pyramid /
-    skimage ``blob_dog`` analog; box windows instead of Gaussians is
-    the documented deviation that keeps every quantity an integer —
-    SURVEY §0 ⚠).  Response at each margin-2 interior pixel:
-
-        resp = 25*S3 - 9*S5        (S3/S5 = 3x3 / 5x5 box sums)
-
-    = 225 * (mean3 - mean5), so resp > 450 flags a bright blob center
-    (local mean 2 levels above surround), resp < -450 a dark one.  The
-    DuckDB oracle replays the identical sums from the ramp formula via
-    a 25-offset VALUES join.
-
-    Per tile: interior count, bright/dark blob counts, total response,
-    position-weighted response checksum.  Map-only fused Arrow pass;
-    box sums are stacked-slice reductions."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _dog(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "n_pos", "n_neg", "sum_resp",
-                      "resp_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 5 or h < 5:
-                    continue
-                b = len(idx)
-                ih, iw = h - 4, w - 4
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                s3 = np.zeros((b, ih, iw), dtype=np.int64)
-                for di in (-1, 0, 1):
-                    for dj in (-1, 0, 1):
-                        s3 += z[:, 2 + di : h - 2 + di, 2 + dj : w - 2 + dj]
-                s5 = np.zeros((b, ih, iw), dtype=np.int64)
-                for di in range(-2, 3):
-                    for dj in range(-2, 3):
-                        s5 += z[:, 2 + di : h - 2 + di, 2 + dj : w - 2 + dj]
-                resp = 25 * s3 - 9 * s5
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["n_pos"][rows] = (resp > _DOG_T).sum(axis=(1, 2))
-                out["n_neg"][rows] = (resp < -_DOG_T).sum(axis=(1, 2))
-                out["sum_resp"][rows] = resp.sum(axis=(1, 2))
-                out["resp_checksum"][rows] = (resp * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_dog, schema=_DOG_SCHEMA)
-
-
 _VIEW_SCHEMA = (
     "image_id string, dir int, n_visible long, furthest_k int, "
     "first_blocked int, vis_checksum long"
@@ -1885,172 +1380,6 @@ def stretch_stats(tiles: DataFrame) -> DataFrame:
             )
 
     return slim.mapInPandas(_st, schema=_STRETCH_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Template matching (round 3) — matched-filter argmax census
-# ---------------------------------------------------------------------------
-
-# Zero-sum 4x4 integer template (every row sums to 0, so the score is
-# invariant to a constant DC offset — the integer analog of zero-mean
-# NCC template matching).  Identical literal in the DuckDB oracle.
-TEMPLATE_4X4 = (
-    (2, -1, 3, -4),
-    (-3, 1, -2, 4),
-    (1, 4, -1, -4),
-    (0, -4, 0, 4),
-)
-
-_TMATCH_SCHEMA = (
-    "image_id string, best_i int, best_j int, best_score long"
-)
-
-
-def template_match(tiles: DataFrame) -> DataFrame:
-    """Sliding integer cross-correlation of TEMPLATE_4X4 over every tile
-    — the template-matching / matched-filter primitive (cv2.matchTemplate
-    TM_CCORR with a zero-sum kernel).  Per tile: the argmax position
-    (ties -> smallest (i, j), row-major) and the exact integer score.
-
-    Plan: map-only fused Arrow pass, pixels cross the boundary once; the
-    sliding correlation is 16 shifted-slice multiply-adds on the whole
-    (batch, h, w) block — never a per-position Python loop.  Output is 4
-    slim columns; composes with any upstream cell/zone filter."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-    T = np.asarray(TEMPLATE_4X4, dtype=np.int64)
-
-    def _tm(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "image_id": pdf["image_id"].to_numpy(dtype=object),
-                "best_i": np.zeros(n, dtype=np.int32),
-                "best_j": np.zeros(n, dtype=np.int32),
-                "best_score": np.zeros(n, dtype=np.int64),
-            }
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                b = len(idx)
-                z = np.frombuffer(
-                    b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                ).reshape(b, h, w)
-                if fmt == "raw16":
-                    z = z >> 8
-                z = z.astype(np.int64)
-                hh, ww = h - 3, w - 3  # valid positions
-                score = np.zeros((b, hh, ww), dtype=np.int64)
-                for a in range(4):
-                    for c in range(4):
-                        if T[a, c]:
-                            score += T[a, c] * z[:, a:a + hh, c:c + ww]
-                flat = score.reshape(b, -1)
-                best = np.argmax(flat, axis=1)  # first max: row-major => min (i,j)
-                rows = np.asarray(idx)
-                out["best_i"][rows] = (best // ww).astype(np.int32)
-                out["best_j"][rows] = (best % ww).astype(np.int32)
-                out["best_score"][rows] = flat[np.arange(b), best]
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_tm, schema=_TMATCH_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Hough line transform (round 3) — integer vote census
-# ---------------------------------------------------------------------------
-
-# cos/sin of t*pi/8 (t = 0..7) scaled by 1024 and rounded — the exact
-# integer tables both engines share (no trig at runtime anywhere).
-HOUGH_COS = (1024, 946, 724, 392, 0, -392, -724, -946)
-HOUGH_SIN = (0, 392, 724, 946, 1024, 946, 724, 392)
-HOUGH_T = 500        # Sobel |gx|+|gy| edge threshold (wrap seams >> 500)
-HOUGH_RHO_OFF = 65536  # shift rho nonnegative before the bin division
-HOUGH_RHO_W = 2048   # rho bin width (scaled units)
-
-_HOUGH_SCHEMA = (
-    "image_id string, n_edges long, best_theta int, best_bin int, "
-    "best_votes long"
-)
-
-
-def hough_lines(tiles: DataFrame) -> DataFrame:
-    """Hough line-detection census (cv2.HoughLines analog): Sobel edge
-    pixels vote into an 8-angle x rho accumulator with INTEGER
-    cos/sin tables (HOUGH_COS/HOUGH_SIN, scale 1024); per tile the
-    winning (theta, rho-bin) cell and its vote count — the dominant
-    straight line.  rho = j*cos + i*sin is an exact integer, binned by
-    one nonnegative floor division, so any engine replays it
-    bit-for-bit.  Ties resolve to the smallest (theta, bin).
-
-    Plan: ONE fused Arrow pass; the Sobel and the 8-angle vote keys are
-    whole-batch NumPy (votes via one bincount over a composite
-    image x theta x bin key — no per-pixel Python); output is 5 slim
-    columns.  Map-only: composes with any upstream filter and shuffles
-    nothing."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-    n_bins = 2 * HOUGH_RHO_OFF // HOUGH_RHO_W  # 64
-
-    def _hough(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "image_id": pdf["image_id"].to_numpy(dtype=object),
-                "n_edges": np.zeros(n, dtype=np.int64),
-                "best_theta": np.zeros(n, dtype=np.int32),
-                "best_bin": np.zeros(n, dtype=np.int32),
-                "best_votes": np.zeros(n, dtype=np.int64),
-            }
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-
-                def sh(di, dj):
-                    return z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-
-                gx = (sh(-1, 1) + 2 * sh(0, 1) + sh(1, 1)) - (
-                    sh(-1, -1) + 2 * sh(0, -1) + sh(1, -1)
-                )
-                gy = (sh(1, -1) + 2 * sh(1, 0) + sh(1, 1)) - (
-                    sh(-1, -1) + 2 * sh(-1, 0) + sh(-1, 1)
-                )
-                edge = (np.abs(gx) + np.abs(gy)) >= HOUGH_T
-                bi, ei, ej = np.nonzero(edge)       # batch idx, interior i, j
-                ii, jj = ei + 1, ej + 1             # full-image coordinates
-                rows = np.asarray(idx)
-                out["n_edges"][rows] = edge.sum(axis=(1, 2))
-                if len(bi) == 0:
-                    continue
-                # composite vote key: (img, theta, rho_bin) -> one bincount
-                votes = np.zeros(b * 8 * n_bins, dtype=np.int64)
-                for t in range(8):
-                    rho = jj * HOUGH_COS[t] + ii * HOUGH_SIN[t]
-                    rbin = (rho + HOUGH_RHO_OFF) // HOUGH_RHO_W
-                    key = (bi * 8 + t) * n_bins + rbin
-                    votes += np.bincount(key, minlength=len(votes))
-                acc = votes.reshape(b, 8 * n_bins)
-                best = np.argmax(acc, axis=1)       # first max = min (theta, bin)
-                out["best_theta"][rows] = (best // n_bins).astype(np.int32)
-                out["best_bin"][rows] = (best % n_bins).astype(np.int32)
-                out["best_votes"][rows] = acc[np.arange(b), best]
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_hough, schema=_HOUGH_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2264,91 +1593,6 @@ def flow_length_stats(tiles: DataFrame) -> DataFrame:
 # Fixed-point bilinear resize (round 3) — gdalwarp -r bilinear upsample
 # ---------------------------------------------------------------------------
 
-_RESIZE_OUT = 48  # 32x32 -> 48x48 (scale 2/3 source-per-target step)
-
-_RESIZE_SCHEMA = (
-    "image_id string, n_px long, sum36 long, min36 long, max36 long, "
-    "resize_checksum long"
-)
-
-
-def _resize_grid(src: int, dst: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-target-index (i0, i1, frac-in-sixths) for the 1-D bilinear
-    gather at scale src/dst with pixel-center alignment:
-    si = (i + 0.5) * src/dst - 0.5, expressed exactly in sixths for
-    src/dst = 2/3 (si_num = 4i - 1 over denominator 6).  Edge clamp =
-    GDAL convention (frac 0 at both borders)."""
-    si_num = 4 * np.arange(dst, dtype=np.int64) - 1
-    i0 = si_num // 6
-    f = si_num % 6
-    lo = si_num < 0
-    hi = i0 >= src - 1
-    i0 = np.where(lo, 0, np.where(hi, src - 1, i0))
-    f = np.where(lo | hi, 0, f)
-    i1 = np.minimum(i0 + 1, src - 1)
-    return i0, i1, f
-
-
-def resize_bilinear_stats(tiles: DataFrame) -> DataFrame:
-    """Fixed-point bilinear 1.5x upsample census (`gdalwarp -r bilinear`
-    / cv2.resize INTER_LINEAR analog, upstream georaster's missing
-    resample-on-read — SURVEY §2.1 R2 ⚠): each 32x32 tile is resampled
-    to 48x48 with pixel-center alignment; the fractional weights at
-    scale 2/3 are exact SIXTHS, so every output value x36
-    ((6-fi)(6-fj)z00 + (6-fi)fj z01 + fi(6-fj)z10 + fi fj z11) is an
-    exact int64 and the whole statistic is bit-reproducible — no float
-    resampling ever happens.  Per tile: target census (n, Σ, min, max of
-    v36) + the position-weighted checksum pinning every output pixel.
-
-    Plan: map-only fused Arrow pass, one decode per tile, gathers are
-    vectorized fancy-indexing over the precomputed 1-D grids — zero
-    shuffle, no per-pixel Python."""
-    slim = tiles.where((F.col("w") == 32) & (F.col("h") == 32)).select(
-        "image_id", "bytes", "w", "h", "fmt"
-    )
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-    i0, i1, fi = _resize_grid(32, _RESIZE_OUT)
-
-    def _rsz(batches):
-        wt = np.arange(1, _RESIZE_OUT * _RESIZE_OUT + 1, dtype=np.int64).reshape(
-            _RESIZE_OUT, _RESIZE_OUT
-        )
-        wi0 = (6 - fi)[:, None]
-        wi1 = fi[:, None]
-        wj0 = (6 - fi)[None, :]
-        wj1 = fi[None, :]
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_px", "sum36", "min36", "max36", "resize_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[str, list[int]] = {}
-            for r in range(n):
-                groups.setdefault(pdf["fmt"].iat[r], []).append(r)
-            for fmt, idx in groups.items():
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, 32, 32)
-                    .astype(np.int64)
-                )
-                z00 = z[:, i0][:, :, i0]
-                z01 = z[:, i0][:, :, i1]
-                z10 = z[:, i1][:, :, i0]
-                z11 = z[:, i1][:, :, i1]
-                v36 = wi0 * wj0 * z00 + wi0 * wj1 * z01 + wi1 * wj0 * z10 + wi1 * wj1 * z11
-                rows = np.asarray(idx)
-                out["n_px"][rows] = _RESIZE_OUT * _RESIZE_OUT
-                out["sum36"][rows] = v36.sum(axis=(1, 2))
-                out["min36"][rows] = v36.min(axis=(1, 2))
-                out["max36"][rows] = v36.max(axis=(1, 2))
-                out["resize_checksum"][rows] = (v36 * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_rsz, schema=_RESIZE_SCHEMA)
-
 
 _CURV_SCHEMA = (
     "image_id string, n_interior long, lap_sum long, lap_abs_sum long, "
@@ -2490,914 +1734,7 @@ def horizon_shadow_stats(tiles: DataFrame) -> DataFrame:
     return slim.mapInPandas(_horizon, schema=_HORIZON_SCHEMA)
 
 
-_SEAM_SCHEMA = (
-    "image_id string, seam_rows long, energy_sum long, seam_cost long, "
-    "seam_end long, n_min_cols long, dp_checksum long"
-)
-
-# DP depth: fixed row count so the oracle's unrolled CTE chain is
-# sf-independent (tiles are 32 or 64 tall; 16 interior rows fit both).
-SEAM_ROWS = 16
-
-
-def seam_carve_stats(tiles: DataFrame) -> DataFrame:
-    """Minimum-energy vertical seam (Avidan & Shamir 2007 seam carving,
-    the content-aware-resize primitive; cv2/scikit-image analog) over
-    the first SEAM_ROWS interior rows, integer-exact.
-
-    energy e[r,c] (interior coords i=r+1, j=c+1):
-      |z[i,j+1] - z[i,j-1]| + |z[i+1,j] - z[i-1,j]|
-    DP: d[0,:] = e[0,:];  d[r,c] = e[r,c] + min(d[r-1,c-1..c+1])
-    (out-of-range neighbors excluded).  Per tile: total interior
-    energy, min seam cost, its endpoint column (ties -> smallest),
-    tie census, and the position-weighted checksum over the last DP row
-    pinning the whole table.
-
-    The DuckDB oracle unrolls the SEAM_ROWS-deep recurrence as chained
-    CTEs (r-th row from (r-1)-th via two LEFT self-joins + LEAST) —
-    exact, no recursion limits.
-
-    Scale shape: map-only fused mapInPandas; the DP loop is SEAM_ROWS
-    vectorized row sweeps across all tiles in the batch at once."""
-    slim = tiles.where(F.col("h") >= SEAM_ROWS + 2).select(
-        "image_id", "bytes", "w", "h", "fmt"
-    )
-
-    def _seam(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = (
-            "seam_rows", "energy_sum", "seam_cost", "seam_end",
-            "n_min_cols", "dp_checksum",
-        )
-        big = np.int64(1) << 50
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int32)
-                )
-                r1, r2 = 1, SEAM_ROWS + 1  # interior rows i in [1, SEAM_ROWS]
-                e = np.abs(z[:, r1:r2, 2:] - z[:, r1:r2, :-2]) + np.abs(
-                    z[:, r1 + 1:r2 + 1, 1:-1] - z[:, r1 - 1:r2 - 1, 1:-1]
-                )
-                e = e.astype(np.int64)  # (b, SEAM_ROWS, w-2)
-                d = e[:, 0].copy()
-                for r in range(1, SEAM_ROWS):
-                    left = np.concatenate(
-                        [np.full((d.shape[0], 1), big), d[:, :-1]], axis=1
-                    )
-                    right = np.concatenate(
-                        [d[:, 1:], np.full((d.shape[0], 1), big)], axis=1
-                    )
-                    d = e[:, r] + np.minimum(d, np.minimum(left, right))
-                iw = w - 2
-                cost = d.min(axis=1)
-                is_min = d == cost[:, None]
-                ii = np.asarray(idx)
-                out["seam_rows"][ii] = SEAM_ROWS
-                out["energy_sum"][ii] = e.sum(axis=(1, 2))
-                out["seam_cost"][ii] = cost
-                out["seam_end"][ii] = is_min.argmax(axis=1)
-                out["n_min_cols"][ii] = is_min.sum(axis=1)
-                out["dp_checksum"][ii] = (
-                    d * np.arange(1, iw + 1, dtype=np.int64)
-                ).sum(axis=1)
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_seam, schema=_SEAM_SCHEMA)
-
-
-_EULER_SCHEMA = (
-    "image_id string, n_fg long, q1 long, q3 long, qd long, "
-    "euler4 long, euler8 long, fg_checksum long"
-)
-
-# Foreground threshold for the binary topology census.
-EULER_THRESH = 128
-
-
-def euler_blobs(tiles: DataFrame) -> DataFrame:
-    """Euler-number blob topology census (Gray 1971 quad counting; the
-    MATLAB ``bweuler`` / cv2.connectedComponents topology invariant)
-    over the thresholded tile: E = #components - #holes, computed
-    WITHOUT any labeling pass from the 2x2 quad pattern censuses of the
-    zero-padded binary image:
-
-      euler4 = (Q1 - Q3 + 2*QD) / 4     (4-connectivity)
-      euler8 = (Q1 - Q3 - 2*QD) / 4     (8-connectivity)
-
-    Q1/Q3 = quads with exactly one/three foreground corners, QD = the
-    two diagonal checker patterns.  Everything is an integer census, so
-    the DuckDB oracle re-derives the identical surface from the ramp
-    formula with four CASE corner probes per quad.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle; the quad
-    sums are four shifted uint8 adds over the whole batch block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _euler(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("n_fg", "q1", "q3", "qd", "euler4", "euler8", "fg_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                )
-                b = (z >= EULER_THRESH).astype(np.uint8)
-                bp = np.zeros((len(idx), h + 2, w + 2), dtype=np.uint8)
-                bp[:, 1 : h + 1, 1 : w + 1] = b
-                tl = bp[:, :-1, :-1]
-                tr = bp[:, :-1, 1:]
-                bl = bp[:, 1:, :-1]
-                br = bp[:, 1:, 1:]
-                s = tl + tr + bl + br  # uint8-safe: max 4
-                q1 = (s == 1).sum(axis=(1, 2), dtype=np.int64)
-                q3 = (s == 3).sum(axis=(1, 2), dtype=np.int64)
-                qd = ((s == 2) & (tl == br)).sum(axis=(1, 2), dtype=np.int64)
-                wt = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
-                ii = np.asarray(idx)
-                out["n_fg"][ii] = b.sum(axis=(1, 2), dtype=np.int64)
-                out["q1"][ii] = q1
-                out["q3"][ii] = q3
-                out["qd"][ii] = qd
-                out["euler4"][ii] = (q1 - q3 + 2 * qd) // 4
-                out["euler8"][ii] = (q1 - q3 - 2 * qd) // 4
-                out["fg_checksum"][ii] = np.einsum(
-                    "bij,ij->b", b.astype(np.int64), wt
-                )
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_euler, schema=_EULER_SCHEMA)
-
-
-_SAT_SCHEMA = (
-    "image_id string, total_sum long, sat_sum long, box_sum long, "
-    "center_sum long"
-)
-
-
-def integral_box_stats(tiles: DataFrame) -> DataFrame:
-    """Summed-area-table box sums (Crow 1984 / Viola-Jones integral
-    image; cv2.integral + boxFilter primitive): the tile's SAT is built
-    once and every box query is four corner lookups, O(1) per box.
-
-    Surfaces (all int64-exact): total_sum (SAT corner), sat_sum =
-    sum of ALL SAT entries (equals sum z[i,j]*(h-i)*(w-j) — pins every
-    prefix sum without shipping the SAT), an idx-parameterized roaming
-    box and the centered quarter box, both read off SAT corners.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle; the SAT is
-    two cumsums over the batch block and box reads are fancy-indexed
-    per-tile corner gathers."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _sat(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("total_sum", "sat_sum", "box_sum", "center_sum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            tidx = (
-                pdf["image_id"].str.slice(3).astype(np.int64).to_numpy()
-            )
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                # SAT padded with a zero row/col so box reads never branch.
-                sat = np.zeros((len(idx), h + 1, w + 1), dtype=np.int64)
-                np.cumsum(np.cumsum(z, axis=1), axis=2, out=sat[:, 1:, 1:])
-                ii = np.asarray(idx)
-                bi = np.arange(len(idx))
-
-                def box(y0, x0, bh, bw):
-                    return (
-                        sat[bi, y0 + bh, x0 + bw]
-                        - sat[bi, y0, x0 + bw]
-                        - sat[bi, y0 + bh, x0]
-                        + sat[bi, y0, x0]
-                    )
-
-                t = tidx[ii]
-                x0 = (t * 3) % (w // 2)
-                y0 = (t * 5) % (h // 2)
-                out["total_sum"][ii] = sat[:, h, w]
-                out["sat_sum"][ii] = np.einsum(
-                    "bij,i,j->b",
-                    z,
-                    np.arange(h, 0, -1, dtype=np.int64),
-                    np.arange(w, 0, -1, dtype=np.int64),
-                )
-                out["box_sum"][ii] = box(y0, x0, h // 4, w // 4)
-                out["center_sum"][ii] = box(
-                    np.full(len(ii), 3 * h // 8),
-                    np.full(len(ii), 3 * w // 8),
-                    h // 4,
-                    w // 4,
-                )
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_sat, schema=_SAT_SCHEMA)
-
-
-_SSIM_SCHEMA = (
-    "pair_id long, n_px long, sum_a long, sum_b long, sum_ab long, "
-    "sq_err long, ssim double"
-)
-
-# Standard SSIM stabilizers for L=255 (Wang et al. 2004): C1=(0.01L)^2,
-# C2=(0.03L)^2.  Written as exact double literals so the DuckDB twin
-# parses bit-identical constants.
-SSIM_C1 = 6.5025
-SSIM_C2 = 58.5225
-
-
-def ssim_pair(a: DataFrame, b: DataFrame, key: str = "pair_id") -> DataFrame:
-    """Global-window SSIM between co-registered tile pairs (Wang et al.,
-    "Image quality assessment: from error visibility to structural
-    similarity", IEEE TIP 2004 — skimage structural_similarity with one
-    full-image window): luminance/contrast/structure from the five
-    exact integer moment sums, which are also emitted (so the driver
-    hash pins the integer surface, not just the float).
-
-    Float determinism: every engine derives ssim from the SAME integer
-    sums with the SAME expression shape (mu = s/n, v = sq/n - mu*mu,
-    cov = sab/n - mua*mub), so the IEEE doubles agree bit-for-bit.
-
-    Scale shape: one key equi-join of the two corpora, then a fused
-    mapInPandas — both payloads cross Arrow exactly once, stats are
-    whole-batch einsums."""
-    lhs = a.select(
-        key, F.col("bytes").alias("ba"), F.col("fmt").alias("fa"),
-        F.col("w").alias("w"), F.col("h").alias("h"),
-    )
-    rhs = b.select(key, F.col("bytes").alias("bb"), F.col("fmt").alias("fb"))
-    joined = lhs.join(rhs, key)
-
-    def _ssim(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "pair_id": pdf[key].to_numpy(dtype=np.int64),
-                "n_px": np.zeros(n, dtype=np.int64),
-                "sum_a": np.zeros(n, dtype=np.int64),
-                "sum_b": np.zeros(n, dtype=np.int64),
-                "sum_ab": np.zeros(n, dtype=np.int64),
-                "sq_err": np.zeros(n, dtype=np.int64),
-                "ssim": np.zeros(n, dtype=np.float64),
-            }
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                gk = (
-                    int(pdf["w"].iat[k]), int(pdf["h"].iat[k]),
-                    pdf["fa"].iat[k], pdf["fb"].iat[k],
-                )
-                groups.setdefault(gk, []).append(k)
-            for (w, h, fa, fb), idx in groups.items():
-                za = np.frombuffer(
-                    b"".join(pdf["ba"].iat[k] for k in idx), dtype=dt[fa]
-                ).reshape(len(idx), h * w).astype(np.int64)
-                zb = np.frombuffer(
-                    b"".join(pdf["bb"].iat[k] for k in idx), dtype=dt[fb]
-                ).reshape(len(idx), h * w).astype(np.int64)
-                npx = np.float64(w * h)
-                sa = za.sum(axis=1)
-                sb = zb.sum(axis=1)
-                saa = np.einsum("bi,bi->b", za, za)
-                sbb = np.einsum("bi,bi->b", zb, zb)
-                sab = np.einsum("bi,bi->b", za, zb)
-                mua = sa / npx
-                mub = sb / npx
-                va = saa / npx - mua * mua
-                vb = sbb / npx - mub * mub
-                cov = sab / npx - mua * mub
-                ssim = ((2.0 * mua * mub + SSIM_C1) * (2.0 * cov + SSIM_C2)) / (
-                    (mua * mua + mub * mub + SSIM_C1) * (va + vb + SSIM_C2)
-                )
-                ii = np.asarray(idx)
-                out["n_px"][ii] = w * h
-                out["sum_a"][ii] = sa
-                out["sum_b"][ii] = sb
-                out["sum_ab"][ii] = sab
-                out["sq_err"][ii] = saa + sbb - 2 * sab
-                out["ssim"][ii] = ssim
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(_ssim, schema=_SSIM_SCHEMA)
-
-
-_RLE_SCHEMA = (
-    "image_id string, n_px long, n_runs_h long, n_runs_v long, "
-    "longest_run long, run_start_checksum long"
-)
-
-
-def rle_census(tiles: DataFrame) -> DataFrame:
-    """Run-length-encoding census (the compressibility probe behind
-    every RLE/CCITT raster codec decision, and the span extraction
-    under raster polygonization): maximal constant-value horizontal and
-    vertical runs per tile.
-
-    Surfaces: n_runs_h / n_runs_v (RLE symbol counts along each axis —
-    their ratio is the anisotropy of the tile's level sets),
-    longest_run (horizontal), and a position checksum over horizontal
-    run starts (Σ (i*w + j + 1)) pinning the exact run structure.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle; run starts
-    are one shifted != compare over the batch block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _rle(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("n_px", "n_runs_h", "n_runs_v", "longest_run", "run_start_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                start_h = np.ones((len(idx), h, w), dtype=bool)
-                start_h[:, :, 1:] = z[:, :, 1:] != z[:, :, :-1]
-                start_v = np.ones((len(idx), h, w), dtype=bool)
-                start_v[:, 1:, :] = z[:, 1:, :] != z[:, :-1, :]
-                wt = (
-                    np.arange(h * w, dtype=np.int64).reshape(h, w) + 1
-                )
-                ii = np.asarray(idx)
-                out["n_px"][ii] = w * h
-                out["n_runs_h"][ii] = start_h.sum(axis=(1, 2), dtype=np.int64)
-                out["n_runs_v"][ii] = start_v.sum(axis=(1, 2), dtype=np.int64)
-                out["run_start_checksum"][ii] = np.einsum(
-                    "bij,ij->b", start_h.astype(np.int64), wt
-                )
-                # longest horizontal run: distance between consecutive
-                # run starts within each row, vectorized via position
-                # census per (tile, row).
-                flat = start_h.reshape(len(idx), h * w)
-                longest = np.zeros(len(idx), dtype=np.int64)
-                for b in range(len(idx)):
-                    best = 0
-                    for row in range(h):
-                        pos = np.flatnonzero(start_h[b, row])
-                        ends = np.append(pos[1:], w)
-                        best = max(best, int((ends - pos).max()))
-                    longest[b] = best
-                out["longest_run"][ii] = longest
-                del flat
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_rle, schema=_RLE_SCHEMA)
-
-
-_MOTION_SCHEMA = (
-    "pair_id long, best_dy long, best_dx long, best_ssd long, "
-    "best_score_ppm long, ssd_zero long"
-)
-
-MOTION_R = 2  # search radius in pixels: shifts in [-R, R]^2
-
-
-def block_motion(a: DataFrame, b: DataFrame, key: str = "pair_id") -> DataFrame:
-    """Block-matching motion estimation (the exhaustive-search ME of
-    every video codec / cv2.phaseCorrelate's integer cousin): find the
-    integer shift (dy, dx) minimizing the mean squared difference over
-    the valid overlap, with the pairing a(i, j) <-> b(i - dy, j - dx)
-    (so content of b displaced DOWN-RIGHT by (r, c) is reported as
-    (dy, dx) = (-r, -c) — the displacement from b to a).
-
-    Normalization is exact: score_ppm = (ssd * 1_000_000) // n_overlap
-    (the overlap shrinks with |shift|, so raw SSD would bias large
-    shifts); argmin by (score_ppm, dy, dx) — bit-identical in every
-    engine, no float ratio.
-
-    Scale shape: one key equi-join + one fused Arrow hop; the 25 shifted
-    SSDs are whole-batch vectorized slice differences."""
-    lhs = a.select(
-        key, F.col("bytes").alias("ba"), F.col("fmt").alias("fa"),
-        F.col("w").alias("w"), F.col("h").alias("h"),
-    )
-    rhs = b.select(key, F.col("bytes").alias("bb"), F.col("fmt").alias("fb"))
-    joined = lhs.join(rhs, key)
-    R = MOTION_R
-
-    def _motion(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("best_dy", "best_dx", "best_ssd", "best_score_ppm", "ssd_zero")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"pair_id": pdf[key].to_numpy(dtype=np.int64)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                gk = (
-                    int(pdf["w"].iat[k]), int(pdf["h"].iat[k]),
-                    pdf["fa"].iat[k], pdf["fb"].iat[k],
-                )
-                groups.setdefault(gk, []).append(k)
-            for (w, h, fa, fb), idx in groups.items():
-                za = np.frombuffer(
-                    b"".join(pdf["ba"].iat[k] for k in idx), dtype=dt[fa]
-                ).reshape(len(idx), h, w).astype(np.int64)
-                zb = np.frombuffer(
-                    b"".join(pdf["bb"].iat[k] for k in idx), dtype=dt[fb]
-                ).reshape(len(idx), h, w).astype(np.int64)
-                best = None
-                zero_ssd = None
-                for dy in range(-R, R + 1):
-                    for dx in range(-R, R + 1):
-                        a_i0, a_i1 = max(0, dy), min(h, h + dy)
-                        a_j0, a_j1 = max(0, dx), min(w, w + dx)
-                        sa = za[:, a_i0:a_i1, a_j0:a_j1]
-                        sb = zb[:, a_i0 - dy:a_i1 - dy, a_j0 - dx:a_j1 - dx]
-                        d = sa - sb
-                        ssd = np.einsum("bij,bij->b", d, d)
-                        novl = (a_i1 - a_i0) * (a_j1 - a_j0)
-                        ppm = ssd * 1_000_000 // novl
-                        if dy == 0 and dx == 0:
-                            zero_ssd = ssd
-                        if best is None:
-                            best = [ppm.copy(), np.full(len(idx), dy), np.full(len(idx), dx), ssd.copy()]
-                        else:
-                            # lexicographic (ppm, dy, dx) strict improve
-                            better = ppm < best[0]
-                            best[0] = np.where(better, ppm, best[0])
-                            best[1] = np.where(better, dy, best[1])
-                            best[2] = np.where(better, dx, best[2])
-                            best[3] = np.where(better, ssd, best[3])
-                ii = np.asarray(idx)
-                out["best_dy"][ii] = best[1]
-                out["best_dx"][ii] = best[2]
-                out["best_ssd"][ii] = best[3]
-                out["best_score_ppm"][ii] = best[0]
-                out["ssd_zero"][ii] = zero_ssd
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(_motion, schema=_MOTION_SCHEMA)
-
-
-_LAP_SCHEMA = (
-    "image_id string, base_sum long, lap_abs_sum long, lap_max long, "
-    "lap_checksum long"
-)
-
-
-def laplacian_residual(tiles: DataFrame) -> DataFrame:
-    """Laplacian-pyramid residual census (Burt & Adelson 1983 — the
-    band-pass layer of pyramid blending and of every octave-style
-    detail/compression analysis): base = 2x2 floor-mean downsample,
-    residual L = v − nearest-upsample(base).  Surfaces: base sum,
-    Σ|L|, max|L| (high-frequency energy) and the signed position
-    checksum Σ L·(i·w+j+1) pinning the exact residual plane.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle; the base is
-    a 4-way strided add, the residual one broadcasted subtract."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _lap(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("base_sum", "lap_abs_sum", "lap_max", "lap_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                base = (
-                    z[:, 0::2, 0::2] + z[:, 0::2, 1::2]
-                    + z[:, 1::2, 0::2] + z[:, 1::2, 1::2]
-                ) // 4
-                up = np.repeat(np.repeat(base, 2, axis=1), 2, axis=2)
-                lap = z - up
-                wt = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
-                ii = np.asarray(idx)
-                out["base_sum"][ii] = base.sum(axis=(1, 2))
-                out["lap_abs_sum"][ii] = np.abs(lap).sum(axis=(1, 2))
-                out["lap_max"][ii] = np.abs(lap).max(axis=(1, 2))
-                out["lap_checksum"][ii] = np.einsum("bij,ij->b", lap, wt)
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_lap, schema=_LAP_SCHEMA)
-
-
-# --- census transform ---------------------------------------------------------
-# 8-neighbor order for the census bitmask: bit b set iff neighbor b is
-# strictly greater than the center.  Row-major scan of the 3x3 ring.
-_CENSUS_NBRS = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
-
-_CENSUS_SCHEMA = (
-    "image_id string, n_interior long, census_sum long, popcount_sum long, "
-    "n_uniform long, census_checksum long"
-)
-
-
-def census_transform(tiles: DataFrame) -> DataFrame:
-    """Census transform census (Zabih & Woodfill ECCV'94 — the
-    illumination-invariant stereo/optical-flow matching primitive of
-    OpenCV StereoSGBM): per interior pixel an 8-bit code whose bit b is
-    set iff neighbor b (row-major 3x3 ring) is STRICTLY greater than
-    the center.  Surfaces per tile: interior count, code sum, total
-    popcount (= #greater-than relations), uniform-code census (0 or
-    255: local extrema), and the position checksum pinning every code.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle; the 8
-    comparisons are shifted-slice compares on the whole batch block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _census(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("n_interior", "census_sum", "popcount_sum", "n_uniform", "census_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                c = z[:, 1:-1, 1:-1]
-                code = np.zeros_like(c)
-                pop = np.zeros_like(c)
-                for b, (di, dj) in enumerate(_CENSUS_NBRS):
-                    nb = z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    gt = (nb > c).astype(np.int64)
-                    code += gt << b
-                    pop += gt
-                ii = np.asarray(idx)
-                wt = (
-                    np.arange(1, h - 1, dtype=np.int64)[:, None] * w
-                    + np.arange(1, w - 1, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["n_interior"][ii] = code.shape[1] * code.shape[2]
-                out["census_sum"][ii] = code.sum(axis=(1, 2))
-                out["popcount_sum"][ii] = pop.sum(axis=(1, 2))
-                out["n_uniform"][ii] = ((code == 0) | (code == 255)).sum(axis=(1, 2))
-                out["census_checksum"][ii] = np.einsum("bij,ij->b", code, wt)
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_census, schema=_CENSUS_SCHEMA)
-
-
-# --- Bayer demosaic -----------------------------------------------------------
-_DEMOSAIC_SCHEMA = (
-    "image_id string, sum_r long, sum_g long, sum_b long, demosaic_checksum long"
-)
-
-
-def demosaic_bilinear(tiles: DataFrame) -> DataFrame:
-    """Bayer-CFA bilinear demosaic census (OpenCV COLOR_BayerRG2RGB /
-    libdc1394 bilinear — the first stage of every raw-image pipeline):
-    the tile is read as an RGGB mosaic (R at even/even, G at even/odd
-    and odd/even, B at odd/odd) and the missing channels are
-    reconstructed per interior pixel by floor-mean of the 2 or 4
-    relevant neighbors.  Surfaces: per-channel interior sums and the
-    position checksum of R + 2G + 3B pinning all three planes.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle; the
-    reconstruction is nine shifted slices combined through parity
-    masks, vectorized over the whole batch block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _demosaic(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("sum_r", "sum_g", "sum_b", "demosaic_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                c = z[:, 1:-1, 1:-1]
-                up = z[:, :-2, 1:-1]
-                dn = z[:, 2:, 1:-1]
-                lf = z[:, 1:-1, :-2]
-                rt = z[:, 1:-1, 2:]
-                ul = z[:, :-2, :-2]
-                ur = z[:, :-2, 2:]
-                dl = z[:, 2:, :-2]
-                dr = z[:, 2:, 2:]
-                cross4 = (up + dn + lf + rt) // 4
-                diag4 = (ul + ur + dl + dr) // 4
-                vert2 = (up + dn) // 2
-                horz2 = (lf + rt) // 2
-                pi = np.arange(1, h - 1, dtype=np.int64)[:, None] % 2
-                pj = np.arange(1, w - 1, dtype=np.int64)[None, :] % 2
-                at_r = (pi == 0) & (pj == 0)
-                at_g1 = (pi == 0) & (pj == 1)  # G in an R row
-                at_g2 = (pi == 1) & (pj == 0)  # G in a B row
-                at_b = (pi == 1) & (pj == 1)
-                r = np.where(at_r, c, np.where(at_g1, horz2, np.where(at_g2, vert2, diag4)))
-                g = np.where(at_g1 | at_g2, c, cross4)
-                b = np.where(at_b, c, np.where(at_g1, vert2, np.where(at_g2, horz2, diag4)))
-                ii = np.asarray(idx)
-                wt = (
-                    np.arange(1, h - 1, dtype=np.int64)[:, None] * w
-                    + np.arange(1, w - 1, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["sum_r"][ii] = r.sum(axis=(1, 2))
-                out["sum_g"][ii] = g.sum(axis=(1, 2))
-                out["sum_b"][ii] = b.sum(axis=(1, 2))
-                out["demosaic_checksum"][ii] = np.einsum(
-                    "bij,ij->b", r + 2 * g + 3 * b, wt
-                )
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_demosaic, schema=_DEMOSAIC_SCHEMA)
-
-
-# --- threshold diffusion (Perona-Malik quantized) -------------------------------
-DIFF_K = 32      # edge-stopping threshold: |delta| >= K contributes no flux
-DIFF_ROUNDS = 2
-
-_TDIFF_SCHEMA = (
-    "image_id string, round long, sum_v long, abs_delta long, max_delta long, "
-    "diff_checksum long"
-)
-
-
-def threshold_diffusion(tiles: DataFrame) -> DataFrame:
-    """Edge-preserving threshold diffusion (the integer-quantized
-    Perona-Malik scheme — anisotropic smoothing that never crosses an
-    edge): per round each pixel gains Σ_nbr flux // 4 where the flux
-    from a 4-neighbor is sign(Δ)·(|Δ| // 2) if |Δ| < DIFF_K else 0
-    (the hard edge-stopping function; division is TRUNCATING —
-    sign·abs-quotient — because DuckDB's // truncates negatives while
-    NumPy floors, so the quantized rule is written sign-symmetrically
-    in both engines).  Borders replicate (Δ = 0 → no flux), matching
-    the zero-flux Neumann boundary of the PDE.
-
-    Emits one census row per (image, round): Σv, Σ|v_r − v_{r-1}|,
-    max |change|, and the position checksum pinning the full plane.
-
-    Scale shape: map-only fused mapInPandas — the whole round loop runs
-    per tile inside one Arrow hop, zero shuffle."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _diff(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "image_id": [], "round": [], "sum_v": [], "abs_delta": [],
-                "max_delta": [], "diff_checksum": [],
-            }
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                wt = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                    + 1
-                )
-                cur = z
-                for r in range(1, DIFF_ROUNDS + 1):
-                    p = np.pad(cur, ((0, 0), (1, 1), (1, 1)), mode="edge")
-                    flux = np.zeros_like(cur)
-                    for di, dj in ((-1, 0), (1, 0), (0, -1), (0, 1)):
-                        d = p[:, 1 + di : 1 + di + h, 1 + dj : 1 + dj + w] - cur
-                        f = np.sign(d) * (np.abs(d) // 2)
-                        flux += np.where(np.abs(d) < DIFF_K, f, 0)
-                    nxt = cur + np.sign(flux) * (np.abs(flux) // 4)
-                    delta = nxt - cur
-                    for b, k in enumerate(idx):
-                        out["image_id"].append(pdf["image_id"].iat[k])
-                        out["round"].append(r)
-                        out["sum_v"].append(int(nxt[b].sum()))
-                        out["abs_delta"].append(int(np.abs(delta[b]).sum()))
-                        out["max_delta"].append(int(np.abs(delta[b]).max()))
-                        out["diff_checksum"].append(int((nxt[b] * wt).sum()))
-                    cur = nxt
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_diff, schema=_TDIFF_SCHEMA)
-
-
-# --- ordered Bayer dithering -----------------------------------------------------
-# the standard 4x4 Bayer index matrix
-_BAYER4 = [
-    [0, 8, 2, 10],
-    [12, 4, 14, 6],
-    [3, 11, 1, 9],
-    [15, 7, 13, 5],
-]
-
-_DITHER_SCHEMA = (
-    "image_id string, n_ones long, n_transitions long, dither_checksum long"
-)
-
-
-def bayer_dither(tiles: DataFrame) -> DataFrame:
-    """Ordered (Bayer) dithering census (Bayer 1973; the 1-bit
-    halftoning of every e-ink/thermal-print pipeline): pixel (i, j)
-    emits 1 iff v > (B4[i%4][j%4] · 255 + 8) // 16 — the threshold
-    matrix tiled over the plane, all-integer.  Surfaces: ones census,
-    horizontal 0↔1 transition count (halftone frequency), and the
-    position checksum pinning the exact bit plane.
-
-    Scale shape: map-only fused mapInPandas, zero shuffle; the
-    threshold plane is one 4x4 tile broadcast over the batch block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _dith(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        bay = np.array(_BAYER4, dtype=np.int64)
-        cols = ("n_ones", "n_transitions", "dither_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                thr = (
-                    bay[np.arange(h)[:, None] % 4, np.arange(w)[None, :] % 4] * 255 + 8
-                ) // 16
-                bits = (z > thr[None, :, :]).astype(np.int64)
-                ii = np.asarray(idx)
-                wt = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["n_ones"][ii] = bits.sum(axis=(1, 2))
-                out["n_transitions"][ii] = (
-                    (bits[:, :, 1:] != bits[:, :, :-1]).sum(axis=(1, 2))
-                )
-                out["dither_checksum"][ii] = np.einsum("bij,ij->b", bits, wt)
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_dith, schema=_DITHER_SCHEMA)
-
-
 # --- 2-level Haar S-transform census ---------------------------------------------
-_HAAR_SCHEMA = (
-    "image_id string, ll2_sum long, e_lh1 long, e_hl1 long, e_hh1 long, "
-    "e_l2 long, haar_checksum long"
-)
-
-
-def haar_census(tiles: DataFrame) -> DataFrame:
-    """Two-level 2-D Haar S-transform energy census (the integer
-    lifting scheme of JPEG2000's reversible path / CDF(1,1)): level
-    smooth = floor-mean of pairs, details kept as EXACT sums/
-    differences — divisions only ever touch the (non-negative) smooth
-    band, so floor-vs-truncate never diverges across engines.
-
-    Per tile: LL2 sum, level-1 band energies Σ|LH|, Σ|HL|, Σ|HH|,
-    total level-2 detail energy, and the LL2 position checksum.
-
-    Scale shape: map-only fused mapInPandas — strided-slice adds on the
-    whole batch block, zero shuffle."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _level(z):
-        # horizontal: smooth (floor-mean, non-negative) + detail (difference)
-        sh = (z[:, :, 0::2] + z[:, :, 1::2]) // 2
-        dh = z[:, :, 0::2] - z[:, :, 1::2]
-        ll = (sh[:, 0::2, :] + sh[:, 1::2, :]) // 2
-        lh = sh[:, 0::2, :] - sh[:, 1::2, :]
-        hl = dh[:, 0::2, :] + dh[:, 1::2, :]
-        hh = dh[:, 0::2, :] - dh[:, 1::2, :]
-        return ll, lh, hl, hh
-
-    def _haar(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("ll2_sum", "e_lh1", "e_hl1", "e_hh1", "e_l2", "haar_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                ll1, lh1, hl1, hh1 = _level(z)
-                ll2, lh2, hl2, hh2 = _level(ll1)
-                ii = np.asarray(idx)
-                q = w // 4
-                wt = (
-                    np.arange(h // 4, dtype=np.int64)[:, None] * q
-                    + np.arange(q, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["ll2_sum"][ii] = ll2.sum(axis=(1, 2))
-                out["e_lh1"][ii] = np.abs(lh1).sum(axis=(1, 2))
-                out["e_hl1"][ii] = np.abs(hl1).sum(axis=(1, 2))
-                out["e_hh1"][ii] = np.abs(hh1).sum(axis=(1, 2))
-                out["e_l2"][ii] = (
-                    np.abs(lh2).sum(axis=(1, 2))
-                    + np.abs(hl2).sum(axis=(1, 2))
-                    + np.abs(hh2).sum(axis=(1, 2))
-                )
-                out["haar_checksum"][ii] = np.einsum("bij,ij->b", ll2, wt)
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_haar, schema=_HAAR_SCHEMA)
 
 
 # --- bounded-round cost distance ---------------------------------------------------
@@ -3474,335 +1811,6 @@ def cost_distance(tiles: DataFrame) -> DataFrame:
             "cost_checksum long"
         ),
     )
-
-
-# --- box-counting occupancy census ---------------------------------------------------
-BOXC_SCALES = (1, 2, 4, 8)
-BOXC_THRESHOLD = 128  # binary mask: v >= threshold
-
-
-def box_counting(tiles: DataFrame) -> DataFrame:
-    """Box-counting occupancy census (the fractal-dimension / Minkowski
-    estimator of coastline and texture complexity; the log-log slope is
-    a client-side fit over these exact counts): the v >= threshold mask
-    is tiled by s×s boxes at scales 1/2/4/8 and each scale reports its
-    occupied-box count.
-
-    Output: one row per (image, scale).
-
-    Scale shape: map-only fused mapInPandas; each scale is one strided
-    reshape-max on the batch block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _boxes(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": [], "scale": [], "n_boxes": [], "n_occupied": []}
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                mask = z >= BOXC_THRESHOLD
-                for s in BOXC_SCALES:
-                    hh, ww = h // s, w // s
-                    m = (
-                        mask[:, : hh * s, : ww * s]
-                        .reshape(len(idx), hh, s, ww, s)
-                        .any(axis=(2, 4))
-                    )
-                    occ = m.sum(axis=(1, 2))
-                    for b, k in enumerate(idx):
-                        out["image_id"].append(pdf["image_id"].iat[k])
-                        out["scale"].append(s)
-                        out["n_boxes"].append(hh * ww)
-                        out["n_occupied"].append(int(occ[b]))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(
-        _boxes,
-        schema="image_id string, scale long, n_boxes long, n_occupied long",
-    )
-
-
-# --- radial ring profile --------------------------------------------------------------
-RADIAL_RING_Q = 16  # ring index = d2 // Q  (squared-distance buckets)
-
-
-def radial_profile(tiles: DataFrame) -> DataFrame:
-    """Radial ring profile about the tile center (the rotational-energy
-    / radial-PSD-proxy census of lens-shading and texture isotropy
-    checks): rings are SQUARED-distance buckets d² // RADIAL_RING_Q —
-    integer-exact, no square root — each reporting its pixel count,
-    value sum and value-weighted checksum.
-
-    Output: one row per (image, ring).
-
-    Scale shape: map-only fused mapInPandas; the ring index plane is
-    computed once per (w, h) group and reused across the batch."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _rad(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": [], "ring": [], "n_px": [], "v_sum": [], "ring_checksum": []}
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                ci, cj = h // 2, w // 2
-                d2 = (
-                    (np.arange(h, dtype=np.int64)[:, None] - ci) ** 2
-                    + (np.arange(w, dtype=np.int64)[None, :] - cj) ** 2
-                )
-                ring = d2 // RADIAL_RING_Q
-                wt = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                    + 1
-                )
-                rings = np.unique(ring)
-                for b, k in enumerate(idx):
-                    for r in rings:
-                        m = ring == r
-                        out["image_id"].append(pdf["image_id"].iat[k])
-                        out["ring"].append(int(r))
-                        out["n_px"].append(int(m.sum()))
-                        out["v_sum"].append(int(z[b][m].sum()))
-                        out["ring_checksum"].append(int((z[b] * wt)[m].sum()))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(
-        _rad,
-        schema="image_id string, ring long, n_px long, v_sum long, ring_checksum long",
-    )
-
-
-# --- Laplacian-MAD noise estimation ---------------------------------------------------
-
-
-def noise_mad(tiles: DataFrame) -> DataFrame:
-    """Noise estimation by the median absolute 4-neighbor Laplacian
-    (Immerkær 1996 fast noise variance / the MAD-of-detail rule
-    denoisers use to set their threshold): per tile the EXACT rank
-    statistics — median |L| where L = 4v − up − down − left − right
-    over the interior (low-rank convention sorted[(n−1)//2]), the MAD
-    of |L| about that median, and the interior |L| sum.
-
-    Scale shape: map-only fused mapInPandas; the per-tile sorts happen
-    inside the executor on n = (h−2)(w−2) values (the stretch-op
-    convention — never a Spark sort)."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _mad(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("lap_abs_median", "lap_abs_mad", "lap_abs_sum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                c = z[:, 1:-1, 1:-1]
-                lap = (
-                    4 * c
-                    - z[:, :-2, 1:-1]
-                    - z[:, 2:, 1:-1]
-                    - z[:, 1:-1, :-2]
-                    - z[:, 1:-1, 2:]
-                )
-                al = np.abs(lap).reshape(len(idx), -1)
-                sal = np.sort(al, axis=1)
-                m = sal[:, (al.shape[1] - 1) // 2]
-                dev = np.abs(al - m[:, None])
-                sdev = np.sort(dev, axis=1)
-                mad = sdev[:, (al.shape[1] - 1) // 2]
-                ii = np.asarray(idx)
-                out["lap_abs_median"][ii] = m
-                out["lap_abs_mad"][ii] = mad
-                out["lap_abs_sum"][ii] = al.sum(axis=1)
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(
-        _mad,
-        schema=(
-            "image_id string, lap_abs_median long, lap_abs_mad long, "
-            "lap_abs_sum long"
-        ),
-    )
-
-
-CUTMIX_SMOD = 8  # half-size cycle: s = 4 + pair_id % 8
-
-
-def cutmix_checksum(a: DataFrame, b: DataFrame, key: str = "pair_id") -> DataFrame:
-    """CutMix data augmentation (Yun et al., ICCV 2019) with a
-    DETERMINISTIC box schedule: paste a window of co-registered tile B
-    into tile A and pin the mixed result exactly — the augmentation
-    stage of a training pipeline, keyed so every worker (and the
-    oracle) derives the identical box with no RNG state.
-
-    Box schedule per pair p (clipped to tile bounds):
-      s  = 4 + p % CUTMIX_SMOD          (half-size)
-      cy = (p * 13) % h,  cx = (p * 7) % w
-      rows [max(0,cy-s), min(h,cy+s)) x cols [max(0,cx-s), min(w,cx+s))
-
-    Output per pair: the box (y0,x0,y1,x1), mix_area_ppm =
-    (10^6 * box_area) div (w*h) (the 1-lambda of the CutMix loss mix),
-    mixed_sum = sum of mixed pixels and mixed_checksum =
-    sum of (i*w + j + 1) * v -- position-weighted, so ANY misplaced
-    pixel flips it.  All int64-exact.
-
-    Scale shape: one equi-join of the two corpora on the pair key (at
-    10^12 rows both sides arrive bucketed on it -- sources/bucketed.py
-    -- making it shuffle-free) and ONE fused Arrow hop that decodes,
-    masks, and reduces per (w,h,fmt_a,fmt_b) group with a broadcasted
-    per-pair box mask; mixed pixels are never materialized to storage,
-    only their checksums leave the worker."""
-    lhs = a.select(key, F.col("bytes").alias("_ba"), F.col("fmt").alias("_fa"),
-                   F.col("w").alias("w"), F.col("h").alias("h"))
-    rhs = b.select(key, F.col("bytes").alias("_bb"), F.col("fmt").alias("_fb"))
-    joined = lhs.join(rhs, key)
-
-    def _mix(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                key: pdf[key].to_numpy(dtype=np.int64),
-                "y0": np.zeros(n, dtype=np.int32),
-                "x0": np.zeros(n, dtype=np.int32),
-                "y1": np.zeros(n, dtype=np.int32),
-                "x1": np.zeros(n, dtype=np.int32),
-                "mix_area_ppm": np.zeros(n, dtype=np.int64),
-                "mixed_sum": np.zeros(n, dtype=np.int64),
-                "mixed_checksum": np.zeros(n, dtype=np.int64),
-            }
-            groups: dict[tuple, list[int]] = {}
-            for i in range(n):
-                gk = (int(pdf["w"].iat[i]), int(pdf["h"].iat[i]),
-                      pdf["_fa"].iat[i], pdf["_fb"].iat[i])
-                groups.setdefault(gk, []).append(i)
-            for (w, h, fa, fb), idx in groups.items():
-                ii = np.asarray(idx)
-                p = out[key][ii]
-                s = 4 + p % CUTMIX_SMOD
-                cy, cx = (p * 13) % h, (p * 7) % w
-                y0 = np.maximum(0, cy - s)
-                y1 = np.minimum(h, cy + s)
-                x0 = np.maximum(0, cx - s)
-                x1 = np.minimum(w, cx + s)
-                A = np.stack([
-                    oracle.decode_pixels(pdf["_ba"].iat[i], w, h, fa) for i in idx
-                ]).astype(np.int64)
-                B = np.stack([
-                    oracle.decode_pixels(pdf["_bb"].iat[i], w, h, fb) for i in idx
-                ]).astype(np.int64)
-                rows = np.arange(h)
-                cols = np.arange(w)
-                mask = (
-                    (rows[None, :, None] >= y0[:, None, None])
-                    & (rows[None, :, None] < y1[:, None, None])
-                    & (cols[None, None, :] >= x0[:, None, None])
-                    & (cols[None, None, :] < x1[:, None, None])
-                )
-                mixed = np.where(mask, B, A)
-                pw = (np.arange(h * w, dtype=np.int64) + 1).reshape(h, w)
-                out["y0"][ii], out["x0"][ii] = y0, x0
-                out["y1"][ii], out["x1"][ii] = y1, x1
-                out["mix_area_ppm"][ii] = (
-                    1_000_000 * (y1 - y0) * (x1 - x0)
-                ) // (w * h)
-                out["mixed_sum"][ii] = mixed.sum(axis=(1, 2))
-                out["mixed_checksum"][ii] = (mixed * pw).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    schema = (
-        f"{key} long, y0 int, x0 int, y1 int, x1 int, "
-        "mix_area_ppm long, mixed_sum long, mixed_checksum long"
-    )
-    return joined.mapInPandas(_mix, schema=schema)
-
-
-MIXUP_WMOD = 7  # weight cycle: w_a = 1 + pair_id % 7 (eighths), w_b = 8 - w_a
-
-
-def mixup_checksum(a: DataFrame, b: DataFrame, key: str = "pair_id") -> DataFrame:
-    """Mixup data augmentation (Zhang et al., ICLR 2018) with a
-    DETERMINISTIC rational weight schedule: the global convex blend
-    mixed = (w_a * A + w_b * B) div 8 with w_a = 1 + pair_id % MIXUP_WMOD
-    eighths — integer floor arithmetic end to end, so the blended tile
-    is pinned exactly with no RNG and no float rounding ambiguity.
-
-    Output per pair: w_a (eighths), mixed_sum, and the position-weighted
-    mixed_checksum sum((i*w + j + 1) * v).  Scale shape: identical to
-    cutmix_checksum — one bucketable pair-key equi-join + ONE fused
-    Arrow hop; blended pixels never leave the worker."""
-    lhs = a.select(key, F.col("bytes").alias("_ba"), F.col("fmt").alias("_fa"),
-                   F.col("w").alias("w"), F.col("h").alias("h"))
-    rhs = b.select(key, F.col("bytes").alias("_bb"), F.col("fmt").alias("_fb"))
-    joined = lhs.join(rhs, key)
-
-    def _mix(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                key: pdf[key].to_numpy(dtype=np.int64),
-                "w_a": np.zeros(n, dtype=np.int32),
-                "mixed_sum": np.zeros(n, dtype=np.int64),
-                "mixed_checksum": np.zeros(n, dtype=np.int64),
-            }
-            groups: dict[tuple, list[int]] = {}
-            for i in range(n):
-                gk = (int(pdf["w"].iat[i]), int(pdf["h"].iat[i]),
-                      pdf["_fa"].iat[i], pdf["_fb"].iat[i])
-                groups.setdefault(gk, []).append(i)
-            for (w, h, fa, fb), idx in groups.items():
-                ii = np.asarray(idx)
-                p = out[key][ii]
-                wa = (1 + p % MIXUP_WMOD).astype(np.int64)
-                A = np.stack([
-                    oracle.decode_pixels(pdf["_ba"].iat[i], w, h, fa) for i in idx
-                ]).astype(np.int64)
-                B = np.stack([
-                    oracle.decode_pixels(pdf["_bb"].iat[i], w, h, fb) for i in idx
-                ]).astype(np.int64)
-                mixed = (wa[:, None, None] * A + (8 - wa)[:, None, None] * B) // 8
-                pw = (np.arange(h * w, dtype=np.int64) + 1).reshape(h, w)
-                out["w_a"][ii] = wa
-                out["mixed_sum"][ii] = mixed.sum(axis=(1, 2))
-                out["mixed_checksum"][ii] = (mixed * pw).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    schema = f"{key} long, w_a int, mixed_sum long, mixed_checksum long"
-    return joined.mapInPandas(_mix, schema=schema)
 
 
 # --- chamfer 3-4 distance transform ----------------------------------------------------

@@ -11,10 +11,9 @@ map-only EXPLODING pass — each input row yields (w/P)*(h/P) output rows,
 no shuffle, no join; downstream training shards re-partition the patch
 table however the loader wants.
 
-The full-bytes variant (`extract_patches`) re-encodes each patch's
-pixels for a real training sink; the contract query uses the fused
-checksum variant (`patch_summaries`) so patch bytes never cross the
-Arrow boundary twice just to be hashed.
+`patch_summaries` emits integer checksums rather than re-encoded patch
+bytes, so patch pixels never cross the Arrow boundary twice just to be
+hashed; a training sink that needs the bytes slices the same grid.
 
 Vectorization: per (w,h,fmt) batch group, the (n, h, w) block is
 reshaped to (n, h/P, P, w/P, P) and reduced with einsum over the
@@ -28,8 +27,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-
-from .. import oracle
 
 _SUMMARY_SCHEMA = (
     "image_id string, pi int, pj int, patch_sum long, patch_checksum long, "
@@ -110,54 +107,3 @@ def patch_summaries(tiles: DataFrame, p: int = 8) -> DataFrame:
             )
 
     return slim.mapInPandas(_patches, schema=_SUMMARY_SCHEMA)
-
-
-def extract_patches(tiles: DataFrame, p: int = 8) -> DataFrame:
-    """Full patch dataset: one row per patch with re-encoded pixel bytes
-    and the patch's world-space anchor (training-sink variant; the
-    contract checks the fused summary path above)."""
-    slim = tiles.select(
-        "image_id", "bytes", "w", "h", "fmt", "gt_x0", "gt_y0", "gt_xres", "gt_yres"
-    )
-
-    def _cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "image_id": [], "pi": [], "pj": [], "px0": [], "py0": [],
-                "bytes": [], "w": [], "h": [], "fmt": [],
-            }
-            for k in range(len(pdf)):
-                w, h = int(pdf["w"].iat[k]), int(pdf["h"].iat[k])
-                fmt = pdf["fmt"].iat[k]
-                gy, gx = h // p, w // p
-                if gy == 0 or gx == 0:
-                    continue
-                arr = oracle.decode_pixels(pdf["bytes"].iat[k], w, h, fmt)
-                for i in range(gy):
-                    for j in range(gx):
-                        rows["image_id"].append(pdf["image_id"].iat[k])
-                        rows["pi"].append(i)
-                        rows["pj"].append(j)
-                        rows["px0"].append(
-                            float(pdf["gt_x0"].iat[k]) + j * p * float(pdf["gt_xres"].iat[k])
-                        )
-                        rows["py0"].append(
-                            float(pdf["gt_y0"].iat[k]) - i * p * float(pdf["gt_yres"].iat[k])
-                        )
-                        rows["bytes"].append(
-                            oracle.encode_pixels(
-                                arr[i * p : (i + 1) * p, j * p : (j + 1) * p], fmt
-                            )
-                        )
-                        rows["w"].append(p)
-                        rows["h"].append(p)
-                        rows["fmt"].append(fmt)
-            yield pd.DataFrame(rows)
-
-    return slim.mapInPandas(
-        _cut,
-        schema=(
-            "image_id string, pi int, pj int, px0 double, py0 double, "
-            "bytes binary, w int, h int, fmt string"
-        ),
-    )

@@ -285,8 +285,8 @@ def q_extent_latlon(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_psnr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op E10: PSNR verification aggregate — raw tiles vs their lossy qnt
     re-encoding; per-image PSNR (gate: min >= 40 dB).  Uses the fused
-    quantize+PSNR kernel: pixel bytes cross Arrow once (was 3x via
-    reencode + pixel_psnr)."""
+    quantize+PSNR kernel: pixel bytes cross Arrow once (3x when the
+    re-encode and the PSNR were separate UDFs)."""
     from ..functions.codecs import psnr_after_qnt
 
     imgs = _images(spark, sf_dir).where(F.col("fmt") == "raw")
@@ -657,68 +657,6 @@ def q_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_cutmix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CutMix augmentation checksums (algebra.cutmix_checksum):
-    deterministic-box paste of odd tiles into their even partners, the
-    mixed result pinned by a position-weighted checksum plus the CutMix
-    area ratio (ppm).  One pair-key equi-join + one fused Arrow hop."""
-    from ..operators import algebra
-
-    im = _images(spark, sf_dir).where(geo.image_idx() < _DIFF_LIM)
-    pair = F.shiftright(geo.image_idx(), 1).alias("pair_id")
-    a = im.where(geo.image_idx() % 2 == 0).select(pair, "bytes", "fmt", "w", "h")
-    b = im.where(geo.image_idx() % 2 == 1).select(pair, "bytes", "fmt")
-    return (
-        algebra.cutmix_checksum(a, b, key="pair_id")
-        .repartition(1).sortWithinPartitions("pair_id")
-    )
-
-
-def _sql_cutmix(fx: Path, w: int) -> str:
-    """DuckDB twin of q_cutmix: both ramps re-derived, the box schedule
-    recomputed from the pair id, the mixed pixel chosen per (i, j)."""
-    from ..operators.algebra import CUTMIX_SMOD
-
-    va = osql.ramp_value_expr("gi.i", "gj.j", idx="ia", fmt="fmt_a")
-    vb = osql.ramp_value_expr("gi.i", "gj.j", idx="ib", fmt="fmt_b")
-    return f"""
-WITH img AS (
-  SELECT CAST(substr(image_id, 4, 10) AS BIGINT) AS idx, fmt
-  FROM read_parquet('{fx / 'images.parquet'}')
-),
-pairs AS (
-  SELECT a.idx // 2 AS pair_id, a.idx AS ia, b.idx AS ib,
-         a.fmt AS fmt_a, b.fmt AS fmt_b
-  FROM img a JOIN img b ON b.idx = a.idx + 1
-  WHERE a.idx % 2 = 0 AND a.idx < {_DIFF_LIM}
-),
-boxed AS (
-  SELECT *,
-         greatest(0, (pair_id * 13) % {w} - (4 + pair_id % {CUTMIX_SMOD})) AS y0,
-         least({w}, (pair_id * 13) % {w} + (4 + pair_id % {CUTMIX_SMOD})) AS y1,
-         greatest(0, (pair_id * 7) % {w} - (4 + pair_id % {CUTMIX_SMOD})) AS x0,
-         least({w}, (pair_id * 7) % {w} + (4 + pair_id % {CUTMIX_SMOD})) AS x1
-  FROM pairs
-),
-px AS (
-  SELECT pair_id, y0, x0, y1, x1,
-         gi.i * {w} + gj.j + 1 AS pw,
-         CASE WHEN gi.i >= y0 AND gi.i < y1 AND gj.j >= x0 AND gj.j < x1
-              THEN CAST({vb} AS BIGINT) ELSE CAST({va} AS BIGINT) END AS v
-  FROM boxed,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-)
-SELECT pair_id,
-       CAST(MIN(y0) AS INT) AS y0, CAST(MIN(x0) AS INT) AS x0,
-       CAST(MIN(y1) AS INT) AS y1, CAST(MIN(x1) AS INT) AS x1,
-       CAST((1000000 * (MIN(y1) - MIN(y0)) * (MIN(x1) - MIN(x0))) // {w * w} AS BIGINT)
-         AS mix_area_ppm,
-       CAST(SUM(v) AS BIGINT) AS mixed_sum,
-       CAST(SUM(v * pw) AS BIGINT) AS mixed_checksum
-FROM px GROUP BY pair_id ORDER BY pair_id
-"""
-
-
 def q_bitplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bit-plane slicing census (raster_stats.bitplane_census): per
     (image, plane) the set-bit count and position-weighted checksum --
@@ -749,54 +687,6 @@ SELECT image_id, CAST(gp.plane AS INT) AS plane,
        CAST(SUM(((v >> gp.plane) & 1) * pw) AS BIGINT) AS pos_checksum
 FROM px, generate_series(0, 7) AS gp(plane)
 GROUP BY image_id, gp.plane ORDER BY image_id, gp.plane
-"""
-
-
-def q_mixup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixup augmentation checksums (algebra.mixup_checksum): global
-    convex blend of paired tiles at deterministic rational weights,
-    integer floor arithmetic end to end.  Same join/Arrow shape as
-    cutmix_augment; the two together cover both classic mixing
-    augmentations of an image training pipeline."""
-    from ..operators import algebra
-
-    im = _images(spark, sf_dir).where(geo.image_idx() < _DIFF_LIM)
-    pair = F.shiftright(geo.image_idx(), 1).alias("pair_id")
-    a = im.where(geo.image_idx() % 2 == 0).select(pair, "bytes", "fmt", "w", "h")
-    b = im.where(geo.image_idx() % 2 == 1).select(pair, "bytes", "fmt")
-    return (
-        algebra.mixup_checksum(a, b, key="pair_id")
-        .repartition(1).sortWithinPartitions("pair_id")
-    )
-
-
-def _sql_mixup(fx: Path, w: int) -> str:
-    from ..operators.algebra import MIXUP_WMOD
-
-    va = osql.ramp_value_expr("gi.i", "gj.j", idx="ia", fmt="fmt_a")
-    vb = osql.ramp_value_expr("gi.i", "gj.j", idx="ib", fmt="fmt_b")
-    return f"""
-WITH img AS (
-  SELECT CAST(substr(image_id, 4, 10) AS BIGINT) AS idx, fmt
-  FROM read_parquet('{fx / 'images.parquet'}')
-),
-pairs AS (
-  SELECT a.idx // 2 AS pair_id, a.idx AS ia, b.idx AS ib,
-         a.fmt AS fmt_a, b.fmt AS fmt_b,
-         1 + (a.idx // 2) % {MIXUP_WMOD} AS wa
-  FROM img a JOIN img b ON b.idx = a.idx + 1
-  WHERE a.idx % 2 = 0 AND a.idx < {_DIFF_LIM}
-),
-px AS (
-  SELECT pair_id, wa, gi.i * {w} + gj.j + 1 AS pw,
-         (wa * CAST({va} AS BIGINT) + (8 - wa) * CAST({vb} AS BIGINT)) // 8 AS v
-  FROM pairs,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-)
-SELECT pair_id, CAST(MIN(wa) AS INT) AS w_a,
-       CAST(SUM(v) AS BIGINT) AS mixed_sum,
-       CAST(SUM(v * pw) AS BIGINT) AS mixed_checksum
-FROM px GROUP BY pair_id ORDER BY pair_id
 """
 
 
@@ -2632,8 +2522,7 @@ _PATCH_P = 8
 def q_patch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ViT-style training-patch extraction (patches.patch_summaries):
     each tile -> non-overlapping 8x8 patch rows with position-pinning
-    integer checksums — map-only exploding pass, no shuffle; the
-    full-bytes sink variant (patches.extract_patches) shares the grid."""
+    integer checksums — map-only exploding pass, no shuffle."""
     from ..operators import patches
 
     tiles = geo.georegister(_images(spark, sf_dir)).where(
@@ -3738,10 +3627,11 @@ ORDER BY image_id
 
 
 def _warp_mosaic_ctes(fx: Path, method: str = "nearest") -> tuple[str, dict]:
-    """Shared CTE prefix for the warped-mosaic oracles (_sql_reproject and
-    _sql_focal_mosaic): grid enumeration, inverse-mapped pixel centers,
-    first-valid source hit, and the gathered ramp value per target pixel.
-    Returns (cte_text, grid_constants)."""
+    """Shared CTE prefix for the warped-mosaic oracles (_sql_reproject,
+    _sql_reproject_bilinear, _sql_mosaic_blend, _sql_mosaic_regions,
+    _sql_proximity and _sql_focal_mosaic): grid enumeration,
+    inverse-mapped pixel centers, first-valid source hit, and the gathered
+    ramp value per target pixel.  Returns (cte_text, grid_constants)."""
     from .. import oracle as orc
 
     r_e = 6378137.0
@@ -4679,99 +4569,6 @@ FROM sh GROUP BY image_id ORDER BY image_id
 _SEAM_MOD = 149
 
 
-def q_seam_carve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimum-energy vertical seam DP (operators/algebra.
-    seam_carve_stats — Avidan & Shamir content-aware resize): 16-row
-    integer DP per tile, fused map-only Arrow pass; the oracle unrolls
-    the recurrence as chained CTEs."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _SEAM_MOD == 0
-    )
-    return (
-        algebra.seam_carve_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_seam_carve(fx: Path, w: int) -> str:
-    """DuckDB twin of q_seam_carve: the SEAM_ROWS-deep DP recurrence
-    unrolled as chained CTEs, row r from row r-1 via two LEFT self-joins
-    + LEAST (standard SQL forbids aggregating a recursive reference, so
-    the bounded recursion is generated instead)."""
-    from ..operators.algebra import SEAM_ROWS
-
-    iw = w - 2
-
-    def rv(i_expr: str, j_expr: str, pfx: str) -> str:
-        return (
-            f"CAST({osql.ramp_value_expr(i_expr, j_expr, idx=f'{pfx}.idx', fmt=f'{pfx}.fmt')}"
-            " AS BIGINT)"
-        )
-
-    def e_expr(i_expr: str, c_expr: str, pfx: str) -> str:
-        ip1 = f"({i_expr}) + 1"
-        im1 = f"({i_expr}) - 1"
-        return (
-            f"(abs({rv(i_expr, f'({c_expr}) + 2', pfx)} - {rv(i_expr, c_expr, pfx)})"
-            f" + abs({rv(ip1, f'({c_expr}) + 1', pfx)} - {rv(im1, f'({c_expr}) + 1', pfx)}))"
-        )
-
-    # AS MATERIALIZED is load-bearing: each r{{r}} is referenced 3x by
-    # r{{r+1}}; inlined, the chain expands 3^SEAM_ROWS base scans and
-    # exhausts file descriptors before it exhausts patience.
-    chain = [
-        f"""r0 AS MATERIALIZED (
-  SELECT t.idx, t.fmt, gc.c AS c, {e_expr('1', 'gc.c', 't')} AS d
-  FROM sel t, generate_series(0, {iw - 1}) AS gc(c)
-)"""
-    ]
-    for r in range(1, SEAM_ROWS):
-        chain.append(
-            f"""r{r} AS MATERIALIZED (
-  SELECT p.idx, p.fmt, p.c,
-         {e_expr(str(r + 1), 'p.c', 'p')}
-         + LEAST(p.d, COALESCE(pl.d, p.d), COALESCE(pr.d, p.d)) AS d
-  FROM r{r - 1} p
-  LEFT JOIN r{r - 1} pl ON pl.idx = p.idx AND pl.c = p.c - 1
-  LEFT JOIN r{r - 1} pr ON pr.idx = p.idx AND pr.c = p.c + 1
-)"""
-        )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (
-  SELECT idx, fmt, image_id FROM tiles WHERE idx % {_SEAM_MOD} = 0
-),
-{','.join(chain)},
-esum AS (
-  SELECT t.idx, SUM({e_expr('gr.r + 1', 'gc.c', 't')}) AS energy_sum
-  FROM sel t,
-       generate_series(0, {SEAM_ROWS - 1}) AS gr(r),
-       generate_series(0, {iw - 1}) AS gc(c)
-  GROUP BY t.idx
-),
-agg AS (SELECT idx, MIN(d) AS seam_cost FROM r{SEAM_ROWS - 1} GROUP BY idx),
-fin AS (
-  SELECT l.idx, a.seam_cost,
-         MIN(CASE WHEN l.d = a.seam_cost THEN l.c END) AS seam_end,
-         SUM(CASE WHEN l.d = a.seam_cost THEN 1 ELSE 0 END) AS n_min_cols,
-         SUM(l.d * (l.c + 1)) AS dp_checksum
-  FROM r{SEAM_ROWS - 1} l JOIN agg a USING (idx)
-  GROUP BY l.idx, a.seam_cost
-)
-SELECT s.image_id,
-       CAST({SEAM_ROWS} AS BIGINT) AS seam_rows,
-       CAST(e.energy_sum AS BIGINT) AS energy_sum,
-       CAST(f.seam_cost AS BIGINT) AS seam_cost,
-       CAST(f.seam_end AS BIGINT) AS seam_end,
-       CAST(f.n_min_cols AS BIGINT) AS n_min_cols,
-       CAST(f.dp_checksum AS BIGINT) AS dp_checksum
-FROM sel s JOIN fin f USING (idx) JOIN esum e USING (idx)
-ORDER BY image_id
-"""
-
-
 def q_zone_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector dissolve (QGIS/ogr2ogr `dissolve` analog): zones whose
     buffered bboxes touch merge transitively into super-zones —
@@ -5360,257 +5157,7 @@ ORDER BY a_id, b_id
 """
 
 
-# --- round-2 batch: morphology / LBP / marching squares / moments / harris --
-
-_MORPH_MOD = 59
-
-
-def q_morphology(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3x3 greyscale morphology census (algebra.morphology_stats —
-    scipy grey_erosion/grey_dilation analog).  Map-only fused Arrow
-    pass; min/max of 9 ints are exact."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _MORPH_MOD == 0
-    )
-    return (
-        algebra.morphology_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_morphology(fx: Path, w: int) -> str:
-    def rv(di: int, dj: int) -> str:
-        return (
-            f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-        )
-
-    nine = ", ".join(rv(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1))
-    lo, hi = 1, w - 2
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         least({nine}) AS ero, greatest({nine}) AS dil
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_MORPH_MOD} = 0
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(ero) AS BIGINT) AS sum_erode,
-       CAST(SUM(dil) AS BIGINT) AS sum_dilate,
-       CAST(SUM(CASE WHEN dil > ero THEN 1 ELSE 0 END) AS BIGINT) AS n_grad,
-       CAST(SUM((dil - ero) * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT)
-         AS grad_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-_LBP_MOD = 61
-
-
-def q_lbp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LBP texture census (algebra.lbp_stats — skimage
-    local_binary_pattern analog) incl. the Ojala uniform-pattern count
-    via exact circular bit transitions."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _LBP_MOD == 0
-    )
-    return (
-        algebra.lbp_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_lbp(fx: Path, w: int) -> str:
-    from ..operators.algebra import _LBP_RING
-
-    c0 = osql.ramp_value_expr("gi.i", "gj.j")
-    bits = " + ".join(
-        f"CASE WHEN ({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')})"
-        f" >= ({c0}) THEN {1 << k} ELSE 0 END"
-        for k, (di, dj) in enumerate(_LBP_RING)
-    )
-    lo, hi = 1, w - 2
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, CAST({bits} AS BIGINT) AS code
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_LBP_MOD} = 0
-),
-coded AS (
-  SELECT *, xor(code, (code * 2) % 256 + code // 128) AS trans FROM px
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(code) AS BIGINT) AS sum_code,
-       CAST(SUM(CASE WHEN bit_count(trans) <= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_uniform,
-       CAST(SUM(code * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT)
-         AS code_checksum
-FROM coded GROUP BY image_id ORDER BY image_id
-"""
-
-
-_MS_MOD = 71
-
-
-def q_marching_squares(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marching-squares case census (algebra.marching_squares_census —
-    gdal_contour / find_contours analog, exact combinatorial core)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _MS_MOD == 0
-    )
-    return (
-        algebra.marching_squares_census(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "ms_case")
-    )
-
-
-def _sql_marching_squares(fx: Path, w: int) -> str:
-    from ..operators.algebra import _MS_THRESHOLD as T
-
-    def b(di: int, dj: int) -> str:
-        return (
-            f"CASE WHEN ({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')})"
-            f" > {T} THEN 1 ELSE 0 END"
-        )
-
-    case = f"({b(0,0)} + 2*{b(0,1)} + 4*{b(1,1)} + 8*{b(1,0)})"
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-blocks AS (
-  SELECT image_id, CAST({case} AS INTEGER) AS ms_case
-  FROM tiles,
-       generate_series(0, {w - 2}) AS gi(i), generate_series(0, {w - 2}) AS gj(j)
-  WHERE idx % {_MS_MOD} = 0
-)
-SELECT image_id, ms_case, CAST(COUNT(*) AS BIGINT) AS n_blocks
-FROM blocks GROUP BY image_id, ms_case ORDER BY image_id, ms_case
-"""
-
-
-_MOM_MOD = 73
-
-
-def q_image_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw + central image moments (algebra.image_moments —
-    cv2.moments analog) as exact int64 sums / numerators."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _MOM_MOD == 0
-    )
-    return (
-        algebra.image_moments(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_image_moments(fx: Path, w: int) -> str:
-    v = osql.ramp_value_expr("gi.i", "gj.j")
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-raw AS (
-  SELECT image_id,
-         CAST(SUM({v}) AS BIGINT) AS m00,
-         CAST(SUM(gi.i * ({v})) AS BIGINT) AS m10,
-         CAST(SUM(gj.j * ({v})) AS BIGINT) AS m01,
-         CAST(SUM(gi.i * gj.j * ({v})) AS BIGINT) AS m11,
-         CAST(SUM(gi.i * gi.i * ({v})) AS BIGINT) AS m20,
-         CAST(SUM(gj.j * gj.j * ({v})) AS BIGINT) AS m02
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_MOM_MOD} = 0
-  GROUP BY image_id
-)
-SELECT image_id, m00, m10, m01, m11, m20, m02,
-       m00 * m20 - m10 * m10 AS mu20_num,
-       m00 * m02 - m01 * m01 AS mu02_num,
-       m00 * m11 - m10 * m01 AS mu11_num
-FROM raw ORDER BY image_id
-"""
-
-
-_HARRIS_MOD = 79
-
-
-def q_harris(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Harris corner-response census (algebra.harris_stats — cv2
-    cornerHarris analog, box window, k = 0.05 exact via 20*det >
-    trace^2)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _HARRIS_MOD == 0
-    )
-    return (
-        algebra.harris_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_harris(fx: Path, w: int) -> str:
-    from ..operators.algebra import _HARRIS_K20 as K20
-
-    def rv(i: str, j: str) -> str:
-        return f"CAST({osql.ramp_value_expr(i, j)} AS BIGINT)"
-
-    # Sobel at pixel (i + d.di, j + d.dj): gx = bottom row - top row,
-    # gy = right col - left col (twin of algebra.harris_stats).
-    pi, pj = "(gi.i + d.di)", "(gj.j + d.dj)"
-    gx = (
-        f"(({rv(f'{pi} + 1', f'{pj} - 1')} + 2*{rv(f'{pi} + 1', pj)}"
-        f" + {rv(f'{pi} + 1', f'{pj} + 1')})"
-        f" - ({rv(f'{pi} - 1', f'{pj} - 1')} + 2*{rv(f'{pi} - 1', pj)}"
-        f" + {rv(f'{pi} - 1', f'{pj} + 1')}))"
-    )
-    gy = (
-        f"(({rv(f'{pi} - 1', f'{pj} + 1')} + 2*{rv(pi, f'{pj} + 1')}"
-        f" + {rv(f'{pi} + 1', f'{pj} + 1')})"
-        f" - ({rv(f'{pi} - 1', f'{pj} - 1')} + 2*{rv(pi, f'{pj} - 1')}"
-        f" + {rv(f'{pi} + 1', f'{pj} - 1')}))"
-    )
-    lo, hi = 2, w - 3
-    offs = ",".join(f"({di},{dj})" for di in (-1, 0, 1) for dj in (-1, 0, 1))
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-terms AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, {gx} AS gx, {gy} AS gy
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j),
-       (VALUES {offs}) AS d(di, dj)
-  WHERE idx % {_HARRIS_MOD} = 0
-),
-win AS (
-  SELECT image_id, i, j,
-         SUM(gx * gx) AS sxx, SUM(gy * gy) AS syy, SUM(gx * gy) AS sxy
-  FROM terms GROUP BY image_id, i, j
-),
-scored AS (
-  SELECT image_id, sxx + syy AS trace, sxx * syy - sxy * sxy AS det FROM win
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_window,
-       CAST(SUM(CASE WHEN {K20} * det > trace * trace THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_corners,
-       CAST(SUM(trace) AS BIGINT) AS sum_trace,
-       CAST(SUM(det) AS BIGINT) AS sum_det
-FROM scored GROUP BY image_id ORDER BY image_id
-"""
-
-
-# --- round-2 batch: kdop / local moran / FAST / DoG / bloom semi ------------
+# --- round-2 batch: kdop / local moran ---------------------------------------
 
 
 def q_kdop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5702,118 +5249,6 @@ FROM m t LEFT JOIN lag l ON l.gx = t.gx AND l.gy = t.gy, base
 ORDER BY t.gx, t.gy
 """
 
-
-_FAST_MOD = 83
-
-
-def q_fast_corners(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FAST-9 corner census (algebra.fast_corner_stats) — exact 16-bit
-    circular-run mask logic, replayed bit-for-bit by the oracle."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _FAST_MOD == 0
-    )
-    return (
-        algebra.fast_corner_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_fast_corners(fx: Path, w: int) -> str:
-    from ..operators.algebra import _FAST_N, _FAST_RING, _FAST_T
-
-    c0 = f"CAST({osql.ramp_value_expr('gi.i', 'gj.j')} AS BIGINT)"
-
-    def mask(op: str, thr: str) -> str:
-        return " + ".join(
-            f"CASE WHEN CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')}"
-            f" AS BIGINT) {op} {thr} THEN {1 << k} ELSE 0 END"
-            for k, (di, dj) in enumerate(_FAST_RING)
-        )
-
-    def run9(m2: str) -> str:
-        acc = " & ".join(f"({m2} >> {s})" for s in range(_FAST_N))
-        return f"(({acc}) & 65535) <> 0"
-
-    lo, hi = 3, w - 4
-    iw = w - 6
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         CAST({mask('>', f'({c0} + {_FAST_T})')} AS BIGINT) * 65537 AS mb2,
-         CAST({mask('<', f'({c0} - {_FAST_T})')} AS BIGINT) * 65537 AS md2
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_FAST_MOD} = 0
-),
-flags AS (
-  SELECT image_id, i, j,
-         CASE WHEN {run9('mb2')} THEN 1 ELSE 0 END AS bright,
-         CASE WHEN {run9('md2')} THEN 1 ELSE 0 END AS dark
-  FROM px
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(bright) AS BIGINT) AS n_bright,
-       CAST(SUM(dark) AS BIGINT) AS n_dark,
-       CAST(SUM((bright - dark) * ((i - 3) * {iw} + (j - 3) + 1)) AS BIGINT)
-         AS corner_checksum
-FROM flags GROUP BY image_id ORDER BY image_id
-"""
-
-
-_DOG_MOD = 89
-
-
-def q_dog_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-of-boxes blob census (algebra.dog_blob_stats — the
-    integer-exact DoG core)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _DOG_MOD == 0
-    )
-    return (
-        algebra.dog_blob_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_dog_blobs(fx: Path, w: int) -> str:
-    from ..operators.algebra import _DOG_T
-
-    v = osql.ramp_value_expr("(gi.i + d.di)", "(gj.j + d.dj)")
-    offs = ",".join(f"({di},{dj})" for di in range(-2, 3) for dj in range(-2, 3))
-    lo, hi = 2, w - 3
-    iw = w - 4
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-terms AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, d.di, d.dj, CAST({v} AS BIGINT) AS v
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j),
-       (VALUES {offs}) AS d(di, dj)
-  WHERE idx % {_DOG_MOD} = 0
-),
-px AS (
-  SELECT image_id, i, j,
-         25 * SUM(CASE WHEN abs(di) <= 1 AND abs(dj) <= 1 THEN v ELSE 0 END)
-           - 9 * SUM(v) AS resp
-  FROM terms GROUP BY image_id, i, j
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(CASE WHEN resp > {_DOG_T} THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-       CAST(SUM(CASE WHEN resp < -{_DOG_T} THEN 1 ELSE 0 END) AS BIGINT) AS n_neg,
-       CAST(SUM(resp) AS BIGINT) AS sum_resp,
-       CAST(SUM(resp * ((i - 2) * {iw} + (j - 2) + 1)) AS BIGINT) AS resp_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-# --- round-2 batch: BFS / cohort / novelty wiring ---------------------------
 
 # --- round-2 batch: hilbert rollup ------------------------------------------
 
@@ -6084,54 +5519,6 @@ FROM ks LEFT JOIN hist USING (k) ORDER BY k
 """
 
 
-# --- round-3: template matching ---------------------------------------------
-
-_TMATCH_MOD = 53
-
-
-def q_template_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matched-filter argmax (algebra.template_match): sliding zero-sum
-    4x4 integer cross-correlation over every 53rd tile's real decoded
-    pixels; exact argmax position + score vs the ramp-formula oracle."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _TMATCH_MOD == 0
-    )
-    return (
-        algebra.template_match(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_template_match(fx: Path, w: int) -> str:
-    from ..operators.algebra import TEMPLATE_4X4
-
-    terms = " + ".join(
-        f"({TEMPLATE_4X4[a][c]}) * ({osql.ramp_value_expr(f'(gi.i + {a})', f'(gj.j + {c})')})"
-        for a in range(4) for c in range(4) if TEMPLATE_4X4[a][c]
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-pos AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, CAST({terms} AS BIGINT) AS score
-  FROM tiles,
-       generate_series(0, {w - 4}) AS gi(i),
-       generate_series(0, {w - 4}) AS gj(j)
-  WHERE idx % {_TMATCH_MOD} = 0
-),
-ranked AS (
-  SELECT image_id, i, j, score,
-         row_number() OVER (PARTITION BY image_id
-                            ORDER BY score DESC, i, j) AS rn
-  FROM pos
-)
-SELECT image_id, CAST(i AS INT) AS best_i, CAST(j AS INT) AS best_j,
-       score AS best_score
-FROM ranked WHERE rn = 1 ORDER BY image_id
-"""
-
-
 # --- round-3: star-contraction connected components --------------------------
 
 
@@ -6337,86 +5724,6 @@ def _sql_transect_profile(fx: Path) -> str:
     return osql.value_at_coords_sql(
         str(fx / "images.parquet"), "", pts_sql=pts
     )
-
-
-# --- round-3: Hough line census ----------------------------------------------
-
-_HOUGH_MOD = 59
-
-
-def q_hough_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hough line-detection census (algebra.hough_lines): integer
-    cos/sin vote tables over Sobel edge pixels of every 59th tile's
-    real decoded bytes; the oracle replays the votes from the ramp
-    formula."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _HOUGH_MOD == 0
-    )
-    return (
-        algebra.hough_lines(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_hough_lines(fx: Path, w: int) -> str:
-    from ..operators.algebra import (
-        HOUGH_COS,
-        HOUGH_RHO_OFF,
-        HOUGH_RHO_W,
-        HOUGH_SIN,
-        HOUGH_T,
-    )
-
-    def rv(di: int, dj: int) -> str:
-        return osql.ramp_value_expr(f"(gi.i + {di})", f"(gj.j + {dj})")
-
-    gx = (
-        f"(({rv(-1, 1)}) + 2 * ({rv(0, 1)}) + ({rv(1, 1)}))"
-        f" - (({rv(-1, -1)}) + 2 * ({rv(0, -1)}) + ({rv(1, -1)}))"
-    )
-    gy = (
-        f"(({rv(1, -1)}) + 2 * ({rv(1, 0)}) + ({rv(1, 1)}))"
-        f" - (({rv(-1, -1)}) + 2 * ({rv(-1, 0)}) + ({rv(-1, 1)}))"
-    )
-    thetas = ", ".join(
-        f"({t}, {HOUGH_COS[t]}, {HOUGH_SIN[t]})" for t in range(8)
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (SELECT image_id, idx, fmt FROM tiles WHERE idx % {_HOUGH_MOD} = 0),
-edges AS (
-  SELECT image_id, gi.i AS i, gj.j AS j
-  FROM sel,
-       generate_series(1, {w - 2}) AS gi(i),
-       generate_series(1, {w - 2}) AS gj(j)
-  WHERE abs({gx}) + abs({gy}) >= {HOUGH_T}
-),
-nedge AS (
-  SELECT s.image_id, COUNT(e.i) AS n_edges
-  FROM sel s LEFT JOIN edges e USING (image_id) GROUP BY s.image_id
-),
-votes AS (
-  SELECT image_id, th.t AS t,
-         (j * th.c + i * th.s + {HOUGH_RHO_OFF}) // {HOUGH_RHO_W} AS rbin,
-         COUNT(*) AS v
-  FROM edges, (VALUES {thetas}) AS th(t, c, s)
-  GROUP BY image_id, th.t, rbin
-),
-ranked AS (
-  SELECT image_id, t, rbin, v,
-         row_number() OVER (PARTITION BY image_id
-                            ORDER BY v DESC, t, rbin) AS rn
-  FROM votes
-)
-SELECT n.image_id, n.n_edges,
-       CAST(COALESCE(r.t, 0) AS INT) AS best_theta,
-       CAST(COALESCE(r.rbin, 0) AS INT) AS best_bin,
-       CAST(COALESCE(r.v, 0) AS BIGINT) AS best_votes
-FROM nedge n LEFT JOIN ranked r ON r.image_id = n.image_id AND r.rn = 1
-ORDER BY n.image_id
-"""
 
 
 # --- round-3: watershed basin labeling ---------------------------------------
@@ -6882,75 +6189,6 @@ ORDER BY check_name
 """
 
 
-_RSZ_MOD = 101
-
-
-def q_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point bilinear 1.5x upsample (algebra.resize_bilinear_stats
-    — gdalwarp -r bilinear analog): 32x32 -> 48x48 with pixel-center
-    alignment, weights exact sixths so v36 is int64-exact.  Oracle
-    re-derives every output pixel from the ramp formula at the gathered
-    source indices."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _RSZ_MOD == 0
-    )
-    return (
-        algebra.resize_bilinear_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_resize_bilinear(fx: Path) -> str:
-    from ..operators.algebra import _RESIZE_OUT
-
-    a0 = (
-        "CASE WHEN 4 * {t} - 1 < 0 THEN 0"
-        " WHEN (4 * {t} - 1) // 6 >= 31 THEN 31"
-        " ELSE (4 * {t} - 1) // 6 END"
-    )
-    fa = (
-        "CASE WHEN 4 * {t} - 1 < 0 THEN 0"
-        " WHEN (4 * {t} - 1) // 6 >= 31 THEN 0"
-        " ELSE (4 * {t} - 1) % 6 END"
-    )
-    lim = _RESIZE_OUT - 1
-    npx = _RESIZE_OUT * _RESIZE_OUT
-
-    def rv(i: str, j: str) -> str:
-        return f"CAST({osql.ramp_value_expr(i, j)} AS BIGINT)"
-
-    v36 = (
-        "(6 - gi.fa) * (6 - gj.fa) * " + rv("gi.a0", "gj.a0")
-        + " + (6 - gi.fa) * gj.fa * " + rv("gi.a0", "gj.a1")
-        + " + gi.fa * (6 - gj.fa) * " + rv("gi.a1", "gj.a0")
-        + " + gi.fa * gj.fa * " + rv("gi.a1", "gj.a1")
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-g AS (
-  SELECT t.ti,
-         {a0.format(t='t.ti')} AS a0,
-         least(({a0.format(t='t.ti')}) + 1, 31) AS a1,
-         {fa.format(t='t.ti')} AS fa
-  FROM generate_series(0, {lim}) AS t(ti)
-),
-px AS (
-  SELECT image_id, gi.ti AS ti, gj.ti AS tj, {v36} AS v36
-  FROM tiles, g gi, g gj
-  WHERE idx % {_RSZ_MOD} = 0 AND w = 32 AND h = 32
-)
-SELECT image_id,
-       CAST({npx} AS BIGINT) AS n_px,
-       CAST(SUM(v36) AS BIGINT) AS sum36,
-       CAST(MIN(v36) AS BIGINT) AS min36,
-       CAST(MAX(v36) AS BIGINT) AS max36,
-       CAST(SUM(v36 * (ti * {_RESIZE_OUT} + tj + 1)) AS BIGINT) AS resize_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
 _OD_RES = 10
 _OD_USERS = 997
 
@@ -7114,129 +6352,6 @@ FROM lvl0
 """
 
 
-# --- round-3 batch: euler blobs / integral image / segment snap ------------
-
-_EULER_MOD = 103
-
-
-def q_euler_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Euler-number blob topology census (operators/algebra.euler_blobs
-    — MATLAB bweuler / Gray quad-count analog): #components − #holes of
-    the thresholded tile from 2×2 quad pattern censuses, no labeling
-    pass, map-only fused Arrow kernel."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _EULER_MOD == 0
-    )
-    return (
-        algebra.euler_blobs(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_euler_blobs(fx: Path, w: int) -> str:
-    """DuckDB twin of q_euler_blobs: quad corner probes straight off the
-    ramp formula over the zero-padded (w+1)² quad lattice."""
-    from ..operators.algebra import EULER_THRESH
-
-    def corner(i_expr: str, j_expr: str) -> str:
-        return (
-            f"(CASE WHEN ({i_expr}) BETWEEN 0 AND {w - 1}"
-            f" AND ({j_expr}) BETWEEN 0 AND {w - 1}"
-            f" AND {osql.ramp_value_expr(i_expr, j_expr)} >= {EULER_THRESH}"
-            f" THEN 1 ELSE 0 END)"
-        )
-
-    tl = corner("gq.qi - 1", "gq.qj - 1")
-    tr = corner("gq.qi - 1", "gq.qj")
-    bl = corner("gq.qi", "gq.qj - 1")
-    br = corner("gq.qi", "gq.qj")
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (SELECT idx, image_id, fmt FROM tiles WHERE idx % {_EULER_MOD} = 0),
-quads AS (
-  SELECT image_id,
-         {tl} AS tl, {tr} AS tr, {bl} AS bl, {br} AS br
-  FROM sel, (SELECT gi.qi, gj.qj
-             FROM generate_series(0, {w}) AS gi(qi),
-                  generate_series(0, {w}) AS gj(qj)) AS gq
-),
-qc AS (
-  SELECT image_id,
-         SUM(CASE WHEN tl+tr+bl+br = 1 THEN 1 ELSE 0 END) AS q1,
-         SUM(CASE WHEN tl+tr+bl+br = 3 THEN 1 ELSE 0 END) AS q3,
-         SUM(CASE WHEN tl+tr+bl+br = 2 AND tl = br THEN 1 ELSE 0 END) AS qd
-  FROM quads GROUP BY image_id
-),
-fg AS (
-  SELECT image_id,
-         SUM(CASE WHEN {osql.ramp_value_expr('gi.i', 'gj.j')} >= {EULER_THRESH}
-             THEN 1 ELSE 0 END) AS n_fg,
-         SUM(CASE WHEN {osql.ramp_value_expr('gi.i', 'gj.j')} >= {EULER_THRESH}
-             THEN gi.i * {w} + gj.j + 1 ELSE 0 END) AS fg_checksum
-  FROM sel,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  GROUP BY image_id
-)
-SELECT qc.image_id,
-       CAST(fg.n_fg AS BIGINT) AS n_fg,
-       CAST(qc.q1 AS BIGINT) AS q1,
-       CAST(qc.q3 AS BIGINT) AS q3,
-       CAST(qc.qd AS BIGINT) AS qd,
-       CAST((qc.q1 - qc.q3 + 2*qc.qd) // 4 AS BIGINT) AS euler4,
-       CAST((qc.q1 - qc.q3 - 2*qc.qd) // 4 AS BIGINT) AS euler8,
-       CAST(fg.fg_checksum AS BIGINT) AS fg_checksum
-FROM qc JOIN fg USING (image_id) ORDER BY qc.image_id
-"""
-
-
-_SAT_MOD = 107
-
-
-def q_integral_image(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Summed-area-table box sums (operators/algebra.integral_box_stats
-    — cv2.integral / Viola-Jones primitive): per-tile SAT built once,
-    boxes answered in four corner lookups; sat_sum pins every prefix
-    sum.  Map-only fused Arrow kernel."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _SAT_MOD == 0
-    )
-    return (
-        algebra.integral_box_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_integral_image(fx: Path, w: int) -> str:
-    """DuckDB twin of q_integral_image: the box reads re-derived as
-    direct conditional sums over the ramp pixels (the SAT identity
-    box = Σ v over the box is the ground truth the 4-corner read must
-    match)."""
-    v = osql.ramp_value_expr("gi.i", "gj.j")
-    x0 = f"((idx * 3) % {w // 2})"
-    y0 = f"((idx * 5) % {w // 2})"
-    cx0, cb = 3 * w // 8, w // 4
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (SELECT idx, image_id, fmt FROM tiles WHERE idx % {_SAT_MOD} = 0)
-SELECT image_id,
-       CAST(SUM({v}) AS BIGINT) AS total_sum,
-       CAST(SUM({v} * ({w} - gi.i) * ({w} - gj.j)) AS BIGINT) AS sat_sum,
-       CAST(SUM(CASE WHEN gi.i >= {y0} AND gi.i < {y0} + {cb}
-                      AND gj.j >= {x0} AND gj.j < {x0} + {cb}
-                THEN {v} ELSE 0 END) AS BIGINT) AS box_sum,
-       CAST(SUM(CASE WHEN gi.i BETWEEN {cx0} AND {cx0 + cb - 1}
-                      AND gj.j BETWEEN {cx0} AND {cx0 + cb - 1}
-                THEN {v} ELSE 0 END) AS BIGINT) AS center_sum
-FROM sel,
-     generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-GROUP BY image_id ORDER BY image_id
-"""
-
-
 # --- round-3 batch: segment snap / box IoU ---------------------------------
 
 
@@ -7338,77 +6453,6 @@ FROM sc ORDER BY image_id, pred_id
 """
 
 
-_SSIM_MOD = 23
-
-
-def q_ssim_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual pair similarity (algebra.ssim_pair — Wang et al. 2004
-    global-window SSIM, the near-dup quality gate cheaper than decode-
-    level PSNR inspection): consecutive scenes paired, five exact moment
-    sums + the IEEE-deterministic ssim double, one fused Arrow hop."""
-    from ..operators import algebra
-
-    im = _images(spark, sf_dir).where(
-        (F.shiftright(geo.image_idx(), 1) % _SSIM_MOD == 0)
-    )
-    pair = F.shiftright(geo.image_idx(), 1).alias("pair_id")
-    a = im.where(geo.image_idx() % 2 == 0).select(pair, "bytes", "fmt", "w", "h")
-    b = im.where(geo.image_idx() % 2 == 1).select(pair, "bytes", "fmt")
-    return (
-        algebra.ssim_pair(a, b, key="pair_id")
-        .repartition(1).sortWithinPartitions("pair_id")
-    )
-
-
-def _sql_ssim_pair(fx: Path, w: int) -> str:
-    from ..operators.algebra import SSIM_C1, SSIM_C2
-
-    va = osql.ramp_value_expr("gi.i", "gj.j", idx="ia", fmt="fmt_a")
-    vb = osql.ramp_value_expr("gi.i", "gj.j", idx="ib", fmt="fmt_b")
-    n = float(w * w)
-    return f"""
-WITH img AS (
-  SELECT CAST(substr(image_id, 4, 10) AS BIGINT) AS idx, fmt
-  FROM read_parquet('{fx / 'images.parquet'}')
-),
-pairs AS (
-  SELECT a.idx // 2 AS pair_id, a.idx AS ia, b.idx AS ib,
-         a.fmt AS fmt_a, b.fmt AS fmt_b
-  FROM img a JOIN img b ON b.idx = a.idx + 1
-  WHERE a.idx % 2 = 0 AND (a.idx // 2) % {_SSIM_MOD} = 0
-),
-px AS (
-  SELECT pair_id, CAST({va} AS BIGINT) AS pa, CAST({vb} AS BIGINT) AS pb
-  FROM pairs,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-),
-sums AS (
-  SELECT pair_id,
-         CAST(SUM(pa) AS BIGINT) AS sa, CAST(SUM(pb) AS BIGINT) AS sb,
-         CAST(SUM(pa*pa) AS BIGINT) AS saa, CAST(SUM(pb*pb) AS BIGINT) AS sbb,
-         CAST(SUM(pa*pb) AS BIGINT) AS sab
-  FROM px GROUP BY pair_id
-),
-m AS (
-  SELECT pair_id, sa, sb, sab, saa + sbb - 2*sab AS sq_err,
-         CAST(sa AS DOUBLE) / {n} AS mua,
-         CAST(sb AS DOUBLE) / {n} AS mub,
-         CAST(saa AS DOUBLE) / {n} AS eaa,
-         CAST(sbb AS DOUBLE) / {n} AS ebb,
-         CAST(sab AS DOUBLE) / {n} AS eab
-  FROM sums
-)
-SELECT pair_id,
-       CAST({w * w} AS BIGINT) AS n_px,
-       sa AS sum_a, sb AS sum_b, sab AS sum_ab,
-       CAST(sq_err AS BIGINT) AS sq_err,
-       ((2.0 * mua * mub + {SSIM_C1}) * (2.0 * (eab - mua * mub) + {SSIM_C2}))
-       / ((mua * mua + mub * mub + {SSIM_C1})
-          * ((eaa - mua * mua) + (ebb - mub * mub) + {SSIM_C2})) AS ssim
-FROM m ORDER BY pair_id
-"""
-
-
 def q_hex_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hexagonal density binning (spatial_index.hex_bin — H3-style
     isotropic rollup the quad cells can't express): exact axial
@@ -7452,55 +6496,6 @@ adj AS (
 SELECT hq, hr, COUNT(*) AS n_points,
        CAST(SUM(point_id) AS BIGINT) AS id_checksum
 FROM adj GROUP BY hq, hr ORDER BY hq, hr
-"""
-
-
-_RLE_MOD = 109
-
-
-def q_rle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RLE compressibility census (algebra.rle_census): maximal
-    horizontal/vertical constant runs + longest run + run-start position
-    checksum, one map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _RLE_MOD == 0
-    )
-    return (
-        algebra.rle_census(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_rle_census(fx: Path, w: int) -> str:
-    v = osql.ramp_value_expr("gi.i", "gj.j")
-    v_left = osql.ramp_value_expr("gi.i", "gj.j - 1")
-    v_up = osql.ramp_value_expr("gi.i - 1", "gj.j")
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (SELECT idx, image_id, fmt FROM tiles WHERE idx % {_RLE_MOD} = 0),
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         CASE WHEN gj.j = 0 OR ({v}) <> ({v_left}) THEN 1 ELSE 0 END AS sh,
-         CASE WHEN gi.i = 0 OR ({v}) <> ({v_up}) THEN 1 ELSE 0 END AS sv
-  FROM sel,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-),
-runs AS (
-  SELECT image_id, i, j,
-         lead(j, 1, {w}) OVER (PARTITION BY image_id, i ORDER BY j) - j AS rl
-  FROM px WHERE sh = 1
-),
-longest AS (SELECT image_id, MAX(rl) AS longest_run FROM runs GROUP BY image_id)
-SELECT px.image_id,
-       CAST({w * w} AS BIGINT) AS n_px,
-       CAST(SUM(sh) AS BIGINT) AS n_runs_h,
-       CAST(SUM(sv) AS BIGINT) AS n_runs_v,
-       CAST(MIN(longest.longest_run) AS BIGINT) AS longest_run,
-       CAST(SUM(sh * (i * {w} + j + 1)) AS BIGINT) AS run_start_checksum
-FROM px JOIN longest ON px.image_id = longest.image_id
-GROUP BY px.image_id ORDER BY px.image_id
 """
 
 
@@ -7555,73 +6550,6 @@ SELECT TIMESTAMP '{T0}' + to_seconds(w) AS win_start,
 FROM wnd, mx
 WHERE w + 120 <= max_idx - 30
 GROUP BY w ORDER BY win_start
-"""
-
-
-_MOTION_MOD = 31
-
-
-def q_block_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-matching motion estimation (algebra.block_motion — the
-    exhaustive-search ME of video codecs): argmin integer shift by
-    exact ppm-normalized SSD over consecutive-scene pairs."""
-    from ..operators import algebra
-
-    im = _images(spark, sf_dir).where(
-        (F.shiftright(geo.image_idx(), 1) % _MOTION_MOD == 0)
-    )
-    pair = F.shiftright(geo.image_idx(), 1).alias("pair_id")
-    a = im.where(geo.image_idx() % 2 == 0).select(pair, "bytes", "fmt", "w", "h")
-    b = im.where(geo.image_idx() % 2 == 1).select(pair, "bytes", "fmt")
-    return (
-        algebra.block_motion(a, b, key="pair_id")
-        .repartition(1).sortWithinPartitions("pair_id")
-    )
-
-
-def _sql_block_motion(fx: Path, w: int) -> str:
-    from ..operators.algebra import MOTION_R
-
-    va = osql.ramp_value_expr("gi.i", "gj.j", idx="ia", fmt="fmt_a")
-    vb = osql.ramp_value_expr("gi.i - dy", "gj.j - dx", idx="ib", fmt="fmt_b")
-    shifts = ", ".join(
-        f"({dy}, {dx}, {(w - abs(dy)) * (w - abs(dx))})"
-        for dy in range(-MOTION_R, MOTION_R + 1)
-        for dx in range(-MOTION_R, MOTION_R + 1)
-    )
-    return f"""
-WITH img AS (
-  SELECT CAST(substr(image_id, 4, 10) AS BIGINT) AS idx, fmt
-  FROM read_parquet('{fx / 'images.parquet'}')
-),
-pairs AS (
-  SELECT a.idx // 2 AS pair_id, a.idx AS ia, b.idx AS ib,
-         a.fmt AS fmt_a, b.fmt AS fmt_b
-  FROM img a JOIN img b ON b.idx = a.idx + 1
-  WHERE a.idx % 2 = 0 AND (a.idx // 2) % {_MOTION_MOD} = 0
-),
-sh(dy, dx, novl) AS (VALUES {shifts}),
-ssd AS (
-  SELECT pair_id, dy, dx, novl,
-         CAST(SUM((CAST({va} AS BIGINT) - CAST({vb} AS BIGINT))
-                * (CAST({va} AS BIGINT) - CAST({vb} AS BIGINT))) AS BIGINT) AS ssd
-  FROM pairs, sh,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE gi.i >= greatest(0, dy) AND gi.i <= least({w - 1}, {w - 1} + dy)
-    AND gj.j >= greatest(0, dx) AND gj.j <= least({w - 1}, {w - 1} + dx)
-  GROUP BY pair_id, dy, dx, novl
-),
-scored AS (
-  SELECT pair_id, dy, dx, ssd, (ssd * 1000000) // novl AS ppm FROM ssd
-),
-z AS (SELECT pair_id, ssd AS ssd_zero FROM ssd WHERE dy = 0 AND dx = 0)
-SELECT s.pair_id,
-       CAST(dy AS BIGINT) AS best_dy, CAST(dx AS BIGINT) AS best_dx,
-       ssd AS best_ssd, CAST(ppm AS BIGINT) AS best_score_ppm,
-       z.ssd_zero
-FROM scored s JOIN z ON s.pair_id = z.pair_id
-QUALIFY row_number() OVER (PARTITION BY s.pair_id ORDER BY ppm, dy, dx) = 1
-ORDER BY s.pair_id
 """
 
 
@@ -7741,175 +6669,7 @@ FROM f GROUP BY user_id ORDER BY user_id
 """
 
 
-_LAP_MOD = 113
-
-
-def q_laplacian(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laplacian-pyramid residual census (algebra.laplacian_residual —
-    Burt & Adelson band-pass layer): 2x2 floor-mean base + nearest
-    upsample residual, map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _LAP_MOD == 0
-    )
-    return (
-        algebra.laplacian_residual(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_laplacian(fx: Path, w: int) -> str:
-    hw = w // 2
-
-    def vat(i: str, j: str) -> str:
-        return f"CAST({osql.ramp_value_expr(i, j)} AS BIGINT)"
-
-    base = (
-        f"({vat('2*gb.bi', '2*gb2.bj')} + {vat('2*gb.bi', '2*gb2.bj + 1')}"
-        f" + {vat('2*gb.bi + 1', '2*gb2.bj')} + {vat('2*gb.bi + 1', '2*gb2.bj + 1')}) // 4"
-    )
-    lap_base = (
-        f"({vat('2*(gi.i // 2)', '2*(gj.j // 2)')} + {vat('2*(gi.i // 2)', '2*(gj.j // 2) + 1')}"
-        f" + {vat('2*(gi.i // 2) + 1', '2*(gj.j // 2)')} + {vat('2*(gi.i // 2) + 1', '2*(gj.j // 2) + 1')}) // 4"
-    )
-    lap = f"({vat('gi.i', 'gj.j')} - ({lap_base}))"
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (SELECT idx, image_id, fmt FROM tiles WHERE idx % {_LAP_MOD} = 0),
-bs AS (
-  SELECT image_id, SUM({base}) AS base_sum
-  FROM sel,
-       generate_series(0, {hw - 1}) AS gb(bi), generate_series(0, {hw - 1}) AS gb2(bj)
-  GROUP BY image_id
-),
-lp AS (
-  SELECT image_id,
-         SUM(abs({lap})) AS lap_abs_sum,
-         MAX(abs({lap})) AS lap_max,
-         SUM(({lap}) * (gi.i * {w} + gj.j + 1)) AS lap_checksum
-  FROM sel,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  GROUP BY image_id
-)
-SELECT bs.image_id,
-       CAST(base_sum AS BIGINT) AS base_sum,
-       CAST(lap_abs_sum AS BIGINT) AS lap_abs_sum,
-       CAST(lap_max AS BIGINT) AS lap_max,
-       CAST(lap_checksum AS BIGINT) AS lap_checksum
-FROM bs JOIN lp ON bs.image_id = lp.image_id ORDER BY bs.image_id
-"""
-
-
-# --- round-3 batch: census transform / demosaic / box NMS ----------------------
-
-_CENSUS_MOD = 127
-
-
-def q_census_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Census-transform census (algebra.census_transform — Zabih &
-    Woodfill stereo matching primitive): 8-bit greater-than bitmask per
-    interior pixel, map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _CENSUS_MOD == 0
-    )
-    return (
-        algebra.census_transform(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_census_transform(fx: Path, w: int) -> str:
-    from ..operators.algebra import _CENSUS_NBRS
-
-    c = f"CAST({osql.ramp_value_expr('gi.i', 'gj.j')} AS BIGINT)"
-    bits = []
-    pops = []
-    for b, (di, dj) in enumerate(_CENSUS_NBRS):
-        nb = f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-        gt = f"(CASE WHEN {nb} > {c} THEN 1 ELSE 0 END)"
-        bits.append(f"{gt} * {1 << b}")
-        pops.append(gt)
-    code = "(" + " + ".join(bits) + ")"
-    pop = "(" + " + ".join(pops) + ")"
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, {code} AS code, {pop} AS pop,
-         gi.i * {w} + gj.j + 1 AS wt
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_CENSUS_MOD} = 0
-)
-SELECT image_id,
-       COUNT(*) AS n_interior,
-       CAST(SUM(code) AS BIGINT) AS census_sum,
-       CAST(SUM(pop) AS BIGINT) AS popcount_sum,
-       CAST(SUM(CASE WHEN code IN (0, 255) THEN 1 ELSE 0 END) AS BIGINT) AS n_uniform,
-       CAST(SUM(code * wt) AS BIGINT) AS census_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-_DEMOSAIC_MOD = 131
-
-
-def q_demosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bayer bilinear demosaic census (algebra.demosaic_bilinear —
-    RGGB reconstruction, floor-mean of 2/4 neighbors), map-only fused
-    Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _DEMOSAIC_MOD == 0
-    )
-    return (
-        algebra.demosaic_bilinear(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_demosaic(fx: Path, w: int) -> str:
-    def v(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    c = v(0, 0)
-    cross4 = f"(({v(-1, 0)} + {v(1, 0)} + {v(0, -1)} + {v(0, 1)}) // 4)"
-    diag4 = f"(({v(-1, -1)} + {v(-1, 1)} + {v(1, -1)} + {v(1, 1)}) // 4)"
-    vert2 = f"(({v(-1, 0)} + {v(1, 0)}) // 2)"
-    horz2 = f"(({v(0, -1)} + {v(0, 1)}) // 2)"
-    # RGGB parity: R at (0,0), G at (0,1)/(1,0), B at (1,1)
-    r = (
-        f"(CASE WHEN gi.i % 2 = 0 AND gj.j % 2 = 0 THEN {c}"
-        f" WHEN gi.i % 2 = 0 AND gj.j % 2 = 1 THEN {horz2}"
-        f" WHEN gi.i % 2 = 1 AND gj.j % 2 = 0 THEN {vert2}"
-        f" ELSE {diag4} END)"
-    )
-    g = f"(CASE WHEN (gi.i + gj.j) % 2 = 1 THEN {c} ELSE {cross4} END)"
-    b = (
-        f"(CASE WHEN gi.i % 2 = 1 AND gj.j % 2 = 1 THEN {c}"
-        f" WHEN gi.i % 2 = 0 AND gj.j % 2 = 1 THEN {vert2}"
-        f" WHEN gi.i % 2 = 1 AND gj.j % 2 = 0 THEN {horz2}"
-        f" ELSE {diag4} END)"
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, {r} AS r, {g} AS g, {b} AS b,
-         gi.i * {w} + gj.j + 1 AS wt
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_DEMOSAIC_MOD} = 0
-)
-SELECT image_id,
-       CAST(SUM(r) AS BIGINT) AS sum_r,
-       CAST(SUM(g) AS BIGINT) AS sum_g,
-       CAST(SUM(b) AS BIGINT) AS sum_b,
-       CAST(SUM((r + 2 * g + 3 * b) * wt) AS BIGINT) AS demosaic_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
+# --- round-3 batch: box NMS ----------------------------------------------------
 
 
 _NMS_MOD = 137
@@ -8008,207 +6768,6 @@ def _sql_segment_intersections(fx: Path) -> str:
     from ..operators import spatial_index as si
 
     return si.segment_intersections_sql(str(fx / "points.parquet"))
-
-
-_DIFF_MOD = 139
-
-
-def q_threshold_diffusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantized Perona-Malik threshold diffusion (algebra.
-    threshold_diffusion): 2 edge-preserving rounds per tile, map-only
-    fused Arrow pass; oracle iterates the same rule over the pixel
-    relation (DuckDB // truncates negatives, matching the operator's
-    sign-symmetric quantized divisions)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _DIFF_MOD == 0
-    )
-    return (
-        algebra.threshold_diffusion(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "round")
-    )
-
-
-def _sql_threshold_diffusion(fx: Path, w: int) -> str:
-    from ..operators.algebra import DIFF_K, DIFF_ROUNDS
-
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    rounds = []
-    prev = "p0"
-    for r in range(1, DIFF_ROUNDS + 1):
-        rounds.append(f"""
-f{r} AS (
-  SELECT a.image_id, a.i, a.j, a.v,
-         COALESCE(SUM(CASE WHEN abs(b.v - a.v) < {DIFF_K}
-                           THEN (b.v - a.v) // 2 ELSE 0 END), 0) // 4 AS delta
-  FROM {prev} a
-  CROSS JOIN (VALUES (-1, 0), (1, 0), (0, -1), (0, 1)) o(di, dj)
-  LEFT JOIN {prev} b
-    ON b.image_id = a.image_id AND b.i = a.i + o.di AND b.j = a.j + o.dj
-  GROUP BY a.image_id, a.i, a.j, a.v
-),
-p{r} AS (SELECT image_id, i, j, v + delta AS v, delta FROM f{r}),
-cen{r} AS (
-  SELECT image_id, {r} AS round,
-         SUM(v) AS sum_v,
-         SUM(abs(delta)) AS abs_delta,
-         MAX(abs(delta)) AS max_delta,
-         SUM(v * (i * {w} + j + 1)) AS diff_checksum
-  FROM p{r} GROUP BY image_id
-)""")
-        prev = f"p{r}"
-    union = " UNION ALL ".join(f"SELECT * FROM cen{r}" for r in range(1, DIFF_ROUNDS + 1))
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-p0 AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, CAST({ramp} AS BIGINT) AS v
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_DIFF_MOD} = 0
-),
-{", ".join(r.lstrip() for r in rounds)}
-SELECT image_id, CAST(round AS BIGINT) AS round,
-       CAST(sum_v AS BIGINT) AS sum_v,
-       CAST(abs_delta AS BIGINT) AS abs_delta,
-       CAST(max_delta AS BIGINT) AS max_delta,
-       CAST(diff_checksum AS BIGINT) AS diff_checksum
-FROM ({union}) ORDER BY image_id, round
-"""
-
-
-_DITHER_MOD = 151
-
-
-def q_bayer_dither(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered Bayer dithering census (algebra.bayer_dither): 4x4
-    threshold matrix tiled over the plane, map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _DITHER_MOD == 0
-    )
-    return (
-        algebra.bayer_dither(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_bayer_dither(fx: Path, w: int) -> str:
-    from ..operators.algebra import _BAYER4
-
-    flat = ", ".join(str(v) for row in _BAYER4 for v in row)
-    thr = f"(([{flat}])[(gi.i % 4) * 4 + (gj.j % 4) + 1] * 255 + 8) // 16"
-    v = f"CAST({osql.ramp_value_expr('gi.i', 'gj.j')} AS BIGINT)"
-    v_r = f"CAST({osql.ramp_value_expr('gi.i', 'gj.j + 1')} AS BIGINT)"
-    thr_r = f"(([{flat}])[(gi.i % 4) * 4 + ((gj.j + 1) % 4) + 1] * 255 + 8) // 16"
-    bit = f"(CASE WHEN {v} > {thr} THEN 1 ELSE 0 END)"
-    bit_r = f"(CASE WHEN {v_r} > {thr_r} THEN 1 ELSE 0 END)"
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-bits AS (
-  SELECT image_id, {bit} AS b, gi.i * {w} + gj.j + 1 AS wt
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_DITHER_MOD} = 0
-),
-tr AS (
-  SELECT image_id,
-         SUM(CASE WHEN {bit} <> {bit_r} THEN 1 ELSE 0 END) AS n_transitions
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 2}) AS gj(j)
-  WHERE idx % {_DITHER_MOD} = 0
-  GROUP BY image_id
-)
-SELECT b.image_id,
-       CAST(SUM(b.b) AS BIGINT) AS n_ones,
-       CAST(ANY_VALUE(tr.n_transitions) AS BIGINT) AS n_transitions,
-       CAST(SUM(b.b * b.wt) AS BIGINT) AS dither_checksum
-FROM bits b JOIN tr ON b.image_id = tr.image_id
-GROUP BY b.image_id ORDER BY b.image_id
-"""
-
-
-_HAAR_MOD = 157
-
-
-def q_haar_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-level Haar S-transform energy census (algebra.haar_census —
-    JPEG2000 reversible-path lifting): floor-mean smooth bands,
-    sum/difference detail bands (no negative division anywhere)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _HAAR_MOD == 0
-    )
-    return (
-        algebra.haar_census(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_haar_census(fx: Path, w: int) -> str:
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    q = w // 4
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, CAST({ramp} AS BIGINT) AS v
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_HAAR_MOD} = 0
-),
-h1 AS (
-  SELECT a.image_id, a.i, a.j // 2 AS j,
-         (a.v + b.v) // 2 AS sh, a.v - b.v AS dh
-  FROM px a JOIN px b
-    ON b.image_id = a.image_id AND b.i = a.i AND b.j = a.j + 1
-  WHERE a.j % 2 = 0
-),
-l1 AS (
-  SELECT a.image_id, a.i // 2 AS i, a.j,
-         (a.sh + b.sh) // 2 AS ll, a.sh - b.sh AS lh,
-         a.dh + b.dh AS hl, a.dh - b.dh AS hh
-  FROM h1 a JOIN h1 b
-    ON b.image_id = a.image_id AND b.i = a.i + 1 AND b.j = a.j
-  WHERE a.i % 2 = 0
-),
-h2 AS (
-  SELECT a.image_id, a.i, a.j // 2 AS j,
-         (a.ll + b.ll) // 2 AS sh, a.ll - b.ll AS dh
-  FROM l1 a JOIN l1 b
-    ON b.image_id = a.image_id AND b.i = a.i AND b.j = a.j + 1
-  WHERE a.j % 2 = 0
-),
-l2 AS (
-  SELECT a.image_id, a.i // 2 AS i, a.j,
-         (a.sh + b.sh) // 2 AS ll, a.sh - b.sh AS lh,
-         a.dh + b.dh AS hl, a.dh - b.dh AS hh
-  FROM h2 a JOIN h2 b
-    ON b.image_id = a.image_id AND b.i = a.i + 1 AND b.j = a.j
-  WHERE a.i % 2 = 0
-),
-c1 AS (
-  SELECT image_id, SUM(abs(lh)) AS e_lh1, SUM(abs(hl)) AS e_hl1,
-         SUM(abs(hh)) AS e_hh1
-  FROM l1 GROUP BY image_id
-),
-c2 AS (
-  SELECT image_id, SUM(ll) AS ll2_sum,
-         SUM(abs(lh)) + SUM(abs(hl)) + SUM(abs(hh)) AS e_l2,
-         SUM(ll * (i * {q} + j + 1)) AS haar_checksum
-  FROM l2 GROUP BY image_id
-)
-SELECT c1.image_id,
-       CAST(ll2_sum AS BIGINT) AS ll2_sum,
-       CAST(e_lh1 AS BIGINT) AS e_lh1,
-       CAST(e_hl1 AS BIGINT) AS e_hl1,
-       CAST(e_hh1 AS BIGINT) AS e_hh1,
-       CAST(e_l2 AS BIGINT) AS e_l2,
-       CAST(haar_checksum AS BIGINT) AS haar_checksum
-FROM c1 JOIN c2 ON c1.image_id = c2.image_id
-ORDER BY c1.image_id
-"""
 
 
 def q_shot_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8424,54 +6983,6 @@ FROM tot, p99
 """
 
 
-_BOXC_MOD = 167
-
-
-def q_box_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Box-counting occupancy census (algebra.box_counting — fractal
-    dimension estimator surface), map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _BOXC_MOD == 0
-    )
-    return (
-        algebra.box_counting(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "scale")
-    )
-
-
-def _sql_box_counting(fx: Path, w: int) -> str:
-    from ..operators.algebra import BOXC_SCALES, BOXC_THRESHOLD
-
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    # LEFT JOIN from the image grid: an all-below-threshold tile still
-    # emits its (image, scale) row with 0 occupied boxes (the engine
-    # side reports every tile; bare GROUP BY would drop empty groups)
-    arms = " UNION ALL ".join(
-        f"""
-SELECT img.image_id, {s} AS scale, {(w // s) * (w // s)} AS n_boxes,
-       COALESCE(o.cnt, 0) AS n_occupied
-FROM sel img LEFT JOIN (
-  SELECT image_id, COUNT(*) AS cnt
-  FROM (SELECT image_id, gi.i // {s} AS bi, gj.j // {s} AS bj
-        FROM sel,
-             generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-        WHERE CAST({ramp} AS BIGINT) >= {BOXC_THRESHOLD}
-        GROUP BY image_id, gi.i // {s}, gj.j // {s})
-  GROUP BY image_id) o ON o.image_id = img.image_id"""
-        for s in BOXC_SCALES
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (SELECT image_id, idx, fmt FROM tiles WHERE idx % {_BOXC_MOD} = 0)
-SELECT image_id, CAST(scale AS BIGINT) AS scale,
-       CAST(n_boxes AS BIGINT) AS n_boxes,
-       CAST(n_occupied AS BIGINT) AS n_occupied
-FROM ({arms}) ORDER BY image_id, scale
-"""
-
-
 def q_ivm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-view-maintenance audit (the delta-merge correctness
     check behind every materialized-view refresh / streaming upsert):
@@ -8562,48 +7073,6 @@ ORDER BY f.c_nationkey
 """
 
 
-_RADIAL_MOD = 173
-
-
-def q_radial_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Radial ring profile (algebra.radial_profile — squared-distance
-    buckets, no sqrt), map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _RADIAL_MOD == 0
-    )
-    return (
-        algebra.radial_profile(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "ring")
-    )
-
-
-def _sql_radial_profile(fx: Path, w: int) -> str:
-    from ..operators.algebra import RADIAL_RING_Q
-
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    c = w // 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id,
-         ((gi.i - {c}) * (gi.i - {c}) + (gj.j - {c}) * (gj.j - {c}))
-           // {RADIAL_RING_Q} AS ring,
-         CAST({ramp} AS BIGINT) AS v,
-         gi.i * {w} + gj.j + 1 AS wt
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_RADIAL_MOD} = 0
-)
-SELECT image_id, CAST(ring AS BIGINT) AS ring,
-       COUNT(*) AS n_px,
-       CAST(SUM(v) AS BIGINT) AS v_sum,
-       CAST(SUM(v * wt) AS BIGINT) AS ring_checksum
-FROM px GROUP BY image_id, ring ORDER BY image_id, ring
-"""
-
-
 def q_percolation_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Site-percolation threshold sweep (regions.percolation_sweep):
     cluster-size trajectory across 4 occupancy levels, decode-once
@@ -8678,64 +7147,6 @@ SELECT g.image_id, CAST(g.threshold AS BIGINT) AS threshold,
        CAST(COALESCE(u.region_checksum, 0) AS BIGINT) AS region_checksum
 FROM g LEFT JOIN u ON u.image_id = g.image_id AND u.threshold = g.threshold
 ORDER BY g.image_id, g.threshold
-"""
-
-
-_NOISE_MOD = 179
-
-
-def q_noise_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laplacian-MAD noise estimation (algebra.noise_mad — Immerkær
-    fast noise variance, exact rank statistics per tile)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _NOISE_MOD == 0
-    )
-    return (
-        algebra.noise_mad(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_noise_mad(fx: Path, w: int) -> str:
-    def v(di, dj):
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    lap = f"abs(4 * {v(0, 0)} - {v(-1, 0)} - {v(1, 0)} - {v(0, -1)} - {v(0, 1)})"
-    n_int = (w - 2) * (w - 2)
-    med_rank = (n_int - 1) // 2 + 1  # 1-based low-median rank
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-al AS (
-  SELECT image_id, {lap} AS a
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_NOISE_MOD} = 0
-),
-rk AS (
-  SELECT image_id, a,
-         row_number() OVER (PARTITION BY image_id ORDER BY a) AS rn
-  FROM al
-),
-med AS (SELECT image_id, a AS m FROM rk WHERE rn = {med_rank}),
-dev AS (
-  SELECT al.image_id, abs(al.a - med.m) AS d, med.m
-  FROM al JOIN med ON al.image_id = med.image_id
-),
-drk AS (
-  SELECT image_id, d, m,
-         row_number() OVER (PARTITION BY image_id ORDER BY d) AS rn
-  FROM dev
-),
-mad AS (SELECT image_id, m, d AS mad FROM drk WHERE rn = {med_rank}),
-s AS (SELECT image_id, SUM(a) AS lap_abs_sum FROM al GROUP BY image_id)
-SELECT s.image_id,
-       CAST(mad.m AS BIGINT) AS lap_abs_median,
-       CAST(mad.mad AS BIGINT) AS lap_abs_mad,
-       CAST(s.lap_abs_sum AS BIGINT) AS lap_abs_sum
-FROM s JOIN mad ON s.image_id = mad.image_id
-ORDER BY s.image_id
 """
 
 
@@ -15098,8 +13509,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("pixel_histogram", q_pixel_histogram, lambda fx, w, *_: _sql_pixel_histogram(fx, w)),
     ("pixel_quantiles", q_pixel_quantiles, lambda fx, w, *_: _sql_pixel_quantiles(fx, w)),
     ("change_detect", q_change_detect, lambda fx, w, *_: _sql_change_detect(fx, w)),
-    ("cutmix_augment", q_cutmix, lambda fx, w, *_: _sql_cutmix(fx, w)),
-    ("mixup_augment", q_mixup, lambda fx, w, *_: _sql_mixup(fx, w)),
     ("bitplane_census", q_bitplane, lambda fx, w, *_: _sql_bitplane(fx, w)),
     ("randaugment_census", q_randaugment, lambda fx, w, *_: _sql_randaugment(fx, w)),
     ("d4_transforms", q_d4_transforms, lambda fx, w, *_: _sql_d4_transforms(fx, w)),
@@ -15143,15 +13552,8 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("openness", q_openness, lambda fx, w, *_: _sql_openness(fx, w)),
     ("dhash_compute", q_dhash_compute, lambda fx, w, *_: _sql_dhash_compute(fx, w)),
     ("dhash_near_dup", q_dhash_near_dup, lambda fx, w, *_: _sql_dhash_near_dup(fx, w)),
-    ("morphology", q_morphology, lambda fx, w, *_: _sql_morphology(fx, w)),
-    ("lbp_census", q_lbp, lambda fx, w, *_: _sql_lbp(fx, w)),
-    ("contour_cases", q_marching_squares, lambda fx, w, *_: _sql_marching_squares(fx, w)),
-    ("image_moments", q_image_moments, lambda fx, w, *_: _sql_image_moments(fx, w)),
-    ("harris_corners", q_harris, lambda fx, w, *_: _sql_harris(fx, w)),
     ("kdop_support", q_kdop, lambda fx, w, *_: _sql_kdop(fx, w)),
     ("local_moran", q_local_moran, lambda fx, w, *_: _sql_local_moran(fx, w)),
-    ("fast_corners", q_fast_corners, lambda fx, w, *_: _sql_fast_corners(fx, w)),
-    ("dog_blobs", q_dog_blobs, lambda fx, w, *_: _sql_dog_blobs(fx, w)),
     ("hilbert_rollup", q_hilbert, lambda fx, w, *_: _sql_hilbert(fx, w)),
     ("xmodal_align", q_xmodal_align, lambda fx, w, *_: _sql_xmodal_align(fx, w)),
     ("zonal_frac", q_zonal_frac, lambda fx, w, *_: _sql_zonal_frac(fx, w)),
@@ -15198,46 +13600,31 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("hard_negatives", vectors.hard_negative_mining, lambda *_: vectors.hard_negative_mining_sql()),
     ("semivariogram", q_semivariogram, lambda fx, *_: _sql_semivariogram(fx)),
     ("ripley_k", q_ripley_k, lambda fx, *_: _sql_ripley_k(fx)),
-    ("template_match", q_template_match, lambda fx, w, *_: _sql_template_match(fx, w)),
     ("dedup_components_star", q_dedup_components_star, lambda *_: _sql_dedup_components()),
     ("getis_ord", q_getis_ord, lambda fx, w, *_: _sql_getis_ord(fx, w)),
     ("route_burn", q_route_burn, lambda fx, *_: _sql_route_burn(fx)),
     ("kde_heatmap", q_kde_heatmap, lambda fx, *_: _sql_kde_heatmap(fx)),
     ("transect_profile", q_transect_profile, lambda fx, *_: _sql_transect_profile(fx)),
-    ("hough_lines", q_hough_lines, lambda fx, w, *_: _sql_hough_lines(fx, w)),
     ("watershed", q_watershed, lambda fx, w, *_: _sql_watershed(fx, w)),
     ("flow_length", q_flow_length, lambda fx, w, *_: _sql_flow_length(fx, w)),
     ("adaptive_quadtree", q_adaptive_quadtree, lambda fx, *_: _sql_adaptive_quadtree(fx)),
     ("geodesic_assign", q_geodesic_assign, lambda fx, *_: _sql_geodesic_assign(fx)),
     ("payload_integrity", q_payload_integrity, lambda fx, *_: _sql_payload_integrity(fx)),
-    ("resize_bilinear", q_resize_bilinear, lambda fx, *_: _sql_resize_bilinear(fx)),
     ("od_matrix", q_od_matrix, lambda fx, *_: _sql_od_matrix(fx)),
     ("hilbert_range_scan", q_hilbert_range_scan, lambda fx, *_: _sql_hilbert_range_scan(fx)),
     ("terrain_curvature", q_terrain_curvature, lambda fx, w, *_: _sql_terrain_curvature(fx, w)),
     ("horizon_shadow", q_horizon_shadow, lambda fx, w, *_: _sql_horizon_shadow(fx, w)),
-    ("seam_carve", q_seam_carve, lambda fx, w, *_: _sql_seam_carve(fx, w)),
     ("zone_dissolve", q_zone_dissolve, lambda fx, *_: _sql_zone_dissolve(fx)),
-    ("euler_blobs", q_euler_blobs, lambda fx, w, *_: _sql_euler_blobs(fx, w)),
-    ("integral_image", q_integral_image, lambda fx, w, *_: _sql_integral_image(fx, w)),
     ("segment_snap", q_segment_snap, lambda fx, *_: _sql_segment_snap(fx)),
     ("box_iou", q_box_iou, lambda fx, *_: _sql_box_iou(fx)),
-    ("ssim_pair", q_ssim_pair, lambda fx, w, *_: _sql_ssim_pair(fx, w)),
-    ("census_transform", q_census_transform, lambda fx, w, *_: _sql_census_transform(fx, w)),
-    ("demosaic_bilinear", q_demosaic, lambda fx, w, *_: _sql_demosaic(fx, w)),
     ("box_nms", q_box_nms, lambda fx, *_: _sql_box_nms(fx)),
     ("segment_intersections", q_segment_intersections,
      lambda fx, *_: _sql_segment_intersections(fx)),
-    ("threshold_diffusion", q_threshold_diffusion,
-     lambda fx, w, *_: _sql_threshold_diffusion(fx, w)),
-    ("bayer_dither", q_bayer_dither, lambda fx, w, *_: _sql_bayer_dither(fx, w)),
-    ("haar_census", q_haar_census, lambda fx, w, *_: _sql_haar_census(fx, w)),
     ("shot_detect", q_shot_detect, lambda fx, *_: _sql_shot_detect(fx)),
     ("cost_distance", q_cost_distance, lambda fx, w, *_: _sql_cost_distance(fx, w)),
     ("tone_census", q_tone_census, lambda fx, *_: _sql_tone_census(fx)),
     ("partition_skew_audit", q_partition_skew_audit, lambda fx, *_: _sql_partition_skew_audit(fx)),
-    ("box_counting", q_box_counting, lambda fx, w, *_: _sql_box_counting(fx, w)),
     ("ivm_audit", q_ivm_audit, lambda *_: _sql_ivm_audit()),
-    ("radial_profile", q_radial_profile, lambda fx, w, *_: _sql_radial_profile(fx, w)),
     ("ntile_deciles", rel.ntile_deciles, lambda *_: rel.ntile_deciles_sql()),
     ("chamfer_distance", q_chamfer_distance, lambda fx, w, *_: _sql_chamfer_distance(fx, w)),
     ("bilateral_filter", q_bilateral_filter, lambda fx, w, *_: _sql_bilateral_filter(fx, w)),
@@ -15254,20 +13641,16 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("polyline_simplify", q_polyline_simplify, lambda fx, *_: _sql_polyline_simplify(fx)),
     ("convex_hull", q_convex_hull, lambda fx, *_: _sql_convex_hull(fx)),
     ("percolation_sweep", q_percolation_sweep, lambda fx, w, *_: _sql_percolation_sweep(fx, w)),
-    ("noise_mad", q_noise_mad, lambda fx, w, *_: _sql_noise_mad(fx, w)),
     ("zone_adjacency", q_zone_adjacency, lambda fx, *_: _sql_zone_adjacency(fx)),
     ("nn_zones", q_nn_zones, lambda fx, *_: _sql_nn_zones(fx)),
     ("pyramid_gap_census", q_pyramid_gap_census, lambda fx, *_: _sql_pyramid_gap_census(fx)),
     ("affine_fit", q_affine_fit, lambda fx, *_: _sql_affine_fit(fx)),
     ("curve_locality", q_curve_locality, lambda fx, *_: _sql_curve_locality(fx)),
     ("hex_bin", q_hex_bin, lambda fx, *_: _sql_hex_bin(fx)),
-    ("rle_census", q_rle_census, lambda fx, w, *_: _sql_rle_census(fx, w)),
     ("stream_sliding_rate", q_stream_sliding_rate, lambda fx, *_: _sql_stream_sliding_rate(fx)),
-    ("block_motion", q_block_motion, lambda fx, w, *_: _sql_block_motion(fx, w)),
     ("buffer_area", q_buffer_area, lambda fx, *_: _sql_buffer_area(fx)),
     ("kring_smooth", q_kring_smooth, lambda fx, *_: _sql_kring_smooth(fx)),
     ("gap_fill", q_gap_fill, lambda *_: _sql_gap_fill()),
-    ("laplacian_residual", q_laplacian, lambda fx, w, *_: _sql_laplacian(fx, w)),
     ("mu_law_census", q_mu_law, lambda fx, *_: _sql_mu_law(fx)),
     ("join_counts", q_join_counts, lambda fx, w, *_: _sql_join_counts(fx, w)),
     ("cdf53_wavelet", q_cdf53, lambda fx, w, *_: _sql_cdf53(fx, w)),

@@ -54,7 +54,6 @@ DEFAULT = [
     "semivariogram",      # A101: filter-refine pair join, slim bin agg
     "kde_heatmap",        # A103: cover-explode x anchor-cell equi-join
     "getis_ord",          # A104: co-located lattice join + 2-scalar bcast
-    "hough_lines",        # A106: map-only composite-bincount vote pass
     "watershed",          # A107: map-only pointer-jumping pass
     "mst_boruvka",        # R3b: per-round min-struct agg + star contraction
     "merkle_cells",       # R3b: one Arrow decode + sorted md5 folds
@@ -67,7 +66,6 @@ DEFAULT = [
     "flow_length",        # A118: pointer jumping with additive weights
     "adaptive_quadtree",  # A121: per-level census + bounded hot broadcasts
     "od_matrix",          # A122: one user-key window + OD-pair agg
-    "resize_bilinear",    # A126: map-only fused fixed-point gather
     "payload_integrity",  # A127: map-only flags, single-row agg, stack()
     "geodesic_assign",    # A128: map-only chord argmin, codegen
     "hilbert_range_scan", # A130: driver range plan + OR-of-BETWEENs prune
@@ -75,7 +73,6 @@ DEFAULT = [
     "zonal_majority",     # A50-family (round-3 replan): cached-decode hist partials
     "box_nms",            # A165: named-column greedy cascade, zero shuffle
     "segment_intersections",  # A172: grid bucket join + ccw refine
-    "threshold_diffusion",    # A178: fused multi-round Arrow pass
     "ivf_nprobe_sweep",   # A186: probe-once candidates + GEMM truth
     "ivm_audit",          # A201: delta-partition scan + dims outer merge
     "partition_skew_audit",   # A192: cell census + p99 order statistic

@@ -2,6 +2,7 @@
 __spark_entry__.queries() entry at a given sf and compare with its
 oracle_sql() via DuckDB — row count, schema width, and an
 order-insensitive value hash (columns sorted by name, rows sorted).
+Each result line ends with the Spark time and the DuckDB oracle time.
 
 Usage: python tests/driver_sim.py [sf0.01] [query ...]
 """
@@ -118,6 +119,7 @@ def main() -> int:
             n_since = 0
         orows = con.execute(oracles[name]).fetchall()
         ocols = [d[0] for d in con.description]
+        t2 = time.time()
         sh = table_hash(scols, [tuple(r) for r in srows])
         oh = table_hash(ocols, orows)
         ok = len(srows) == len(orows) and sorted(scols) == sorted(ocols) and sh == oh
@@ -125,6 +127,7 @@ def main() -> int:
         print(
             f"{name:24s} {status} spark={len(srows):8d} duck={len(orows):8d} "
             f"hash {sh} vs {oh}  cols {sorted(scols) == sorted(ocols)}  {t1-t0:5.1f}s"
+            f"  oracle {t2-t1:5.1f}s"
         )
         if not ok:
             failures += 1

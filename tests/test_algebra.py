@@ -433,175 +433,6 @@ def test_new_ops_single_arrow_hop(spark, sf0001_dir):
         assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1, (op, plan)
 
 
-def test_morphology_matches_numpy(spark, sf0001_dir):
-    got = {r["image_id"]: r for r in algebra.morphology_stats(_tiles(spark, sf0001_dir)).collect()}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        win = np.stack(
-            [z[1 + di:31 + di, 1 + dj:31 + dj] for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-        )
-        ero, dil = win.min(axis=0), win.max(axis=0)
-        r = got[f"img{idx:08d}"]
-        assert r["sum_erode"] == int(ero.sum())
-        assert r["sum_dilate"] == int(dil.sum())
-        assert r["n_grad"] == int((dil > ero).sum())
-
-
-def test_lbp_matches_bruteforce(spark, sf0001_dir):
-    """lbp_stats vs a per-pixel Python brute force, incl. the circular
-    uniform-pattern rule."""
-    got = {r["image_id"]: r for r in algebra.lbp_stats(_tiles(spark, sf0001_dir)).collect()}
-    ring = ((-1, -1), (-1, 0), (-1, 1), (0, 1), (1, 1), (1, 0), (1, -1), (0, -1))
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        codes, nuni = [], 0
-        for i in range(1, 31):
-            for j in range(1, 31):
-                code = sum(
-                    1 << k
-                    for k, (di, dj) in enumerate(ring)
-                    if z[i + di, j + dj] >= z[i, j]
-                )
-                codes.append(code)
-                bits = [(code >> k) & 1 for k in range(8)]
-                trans = sum(bits[k] != bits[(k + 1) % 8] for k in range(8))
-                nuni += trans <= 2
-        r = got[f"img{idx:08d}"]
-        assert r["sum_code"] == sum(codes)
-        assert r["n_uniform"] == nuni
-
-
-def test_marching_squares_matches_numpy(spark, sf0001_dir):
-    rows = algebra.marching_squares_census(_tiles(spark, sf0001_dir)).collect()
-    got = {(r["image_id"], r["ms_case"]): r["n_blocks"] for r in rows}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        m = (z > 127).astype(int)
-        case = m[:-1, :-1] + 2 * m[:-1, 1:] + 4 * m[1:, 1:] + 8 * m[1:, :-1]
-        cnt = np.bincount(case.ravel(), minlength=16)
-        iid = f"img{idx:08d}"
-        for c in range(16):
-            assert got.get((iid, c), 0) == cnt[c]
-    # per-tile cases partition the block grid
-    per_tile: dict = {}
-    for (iid, _c), nb in got.items():
-        per_tile[iid] = per_tile.get(iid, 0) + nb
-    assert all(v == 31 * 31 for v in per_tile.values())
-
-
-def test_image_moments_match_numpy(spark, sf0001_dir):
-    got = {r["image_id"]: r for r in algebra.image_moments(_tiles(spark, sf0001_dir)).collect()}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        ii, jj = np.indices(z.shape)
-        r = got[f"img{idx:08d}"]
-        m00, m10, m01 = int(z.sum()), int((ii * z).sum()), int((jj * z).sum())
-        m20 = int((ii * ii * z).sum())
-        assert r["m00"] == m00 and r["m10"] == m10 and r["m01"] == m01
-        assert r["m11"] == int((ii * jj * z).sum())
-        assert r["mu20_num"] == m00 * m20 - m10 * m10
-        # central moment identity: mu20_num / m00^2 equals the float mu20
-        mu20 = ((ii - m10 / m00) ** 2 * z).sum()
-        assert abs(r["mu20_num"] / m00**2 - mu20 / m00) < 1e-6
-
-
-def test_harris_matches_bruteforce(spark, sf0001_dir):
-    got = {r["image_id"]: r for r in algebra.harris_stats(_tiles(spark, sf0001_dir)).collect()}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx).astype(np.int64)
-        gx = np.zeros((30, 30), dtype=np.int64)
-        gy = np.zeros((30, 30), dtype=np.int64)
-        for i in range(1, 31):
-            for j in range(1, 31):
-                gx[i - 1, j - 1] = (
-                    z[i + 1, j - 1] + 2 * z[i + 1, j] + z[i + 1, j + 1]
-                    - z[i - 1, j - 1] - 2 * z[i - 1, j] - z[i - 1, j + 1]
-                )
-                gy[i - 1, j - 1] = (
-                    z[i - 1, j + 1] + 2 * z[i, j + 1] + z[i + 1, j + 1]
-                    - z[i - 1, j - 1] - 2 * z[i, j - 1] - z[i + 1, j - 1]
-                )
-        ncorn = strace = sdet = 0
-        for i in range(1, 29):
-            for j in range(1, 29):
-                sxx = int((gx[i - 1:i + 2, j - 1:j + 2] ** 2).sum())
-                syy = int((gy[i - 1:i + 2, j - 1:j + 2] ** 2).sum())
-                sxy = int((gx[i - 1:i + 2, j - 1:j + 2] * gy[i - 1:i + 2, j - 1:j + 2]).sum())
-                det, trace = sxx * syy - sxy * sxy, sxx + syy
-                ncorn += 20 * det > trace * trace
-                strace += trace
-                sdet += det
-        r = got[f"img{idx:08d}"]
-        assert r["n_window"] == 28 * 28
-        assert r["n_corners"] == ncorn
-        assert r["sum_trace"] == strace
-        assert r["sum_det"] == sdet
-
-
-def test_round2b_ops_single_arrow_hop(spark, sf0001_dir):
-    for op in (algebra.morphology_stats, algebra.lbp_stats,
-               algebra.marching_squares_census, algebra.image_moments,
-               algebra.harris_stats):
-        plan = op(_tiles(spark, sf0001_dir))._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1, (op, plan)
-
-
-def test_fast_corners_match_bruteforce(spark, sf0001_dir):
-    """fast_corner_stats vs a per-pixel Python run-scan (NOT the bit
-    trick, so the m*65537 AND-fold itself is under test)."""
-    from georaster_spark.operators.algebra import _FAST_RING, _FAST_T
-
-    got = {r["image_id"]: r for r in algebra.fast_corner_stats(_tiles(spark, sf0001_dir)).collect()}
-
-    def has_run(flags):
-        dbl = flags + flags
-        run = 0
-        for f in dbl:
-            run = run + 1 if f else 0
-            if run >= 9:
-                return True
-        return False
-
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        nb_cnt = nd_cnt = 0
-        for i in range(3, 29):
-            for j in range(3, 29):
-                c = int(z[i, j])
-                ring = [int(z[i + di, j + dj]) for di, dj in _FAST_RING]
-                nb_cnt += has_run([v > c + _FAST_T for v in ring])
-                nd_cnt += has_run([v < c - _FAST_T for v in ring])
-        r = got[f"img{idx:08d}"]
-        assert r["n_interior"] == 26 * 26
-        assert r["n_bright"] == nb_cnt
-        assert r["n_dark"] == nd_cnt
-
-
-def test_dog_blobs_match_numpy(spark, sf0001_dir):
-    got = {r["image_id"]: r for r in algebra.dog_blob_stats(_tiles(spark, sf0001_dir)).collect()}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx).astype(np.int64)
-        s3 = sum(
-            z[2 + di:30 + di, 2 + dj:30 + dj]
-            for di in (-1, 0, 1) for dj in (-1, 0, 1)
-        )
-        s5 = sum(
-            z[2 + di:30 + di, 2 + dj:30 + dj]
-            for di in range(-2, 3) for dj in range(-2, 3)
-        )
-        resp = 25 * s3 - 9 * s5
-        r = got[f"img{idx:08d}"]
-        assert r["n_pos"] == int((resp > 450).sum())
-        assert r["n_neg"] == int((resp < -450).sum())
-        assert r["sum_resp"] == int(resp.sum())
-
-
-def test_fast_dog_single_arrow_hop(spark, sf0001_dir):
-    for op in (algebra.fast_corner_stats, algebra.dog_blob_stats):
-        plan = op(_tiles(spark, sf0001_dir))._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1, (op, plan)
-
-
 def test_viewshed_matches_bruteforce(spark, sf0001_dir):
     """viewshed_stats vs a Fraction-compare running-max brute force
     (exercises the strict-compare rule, observer height, and the
@@ -658,48 +489,6 @@ def test_stretch_matches_bruteforce(spark, sf0001_dir):
         assert r["n_sat_hi"] == (int((z >= hi).sum()) if hi > lo else 0)
         assert r["out_sum"] == sum(out)
         assert r["out_checksum"] == sum(o * (i + 1) for i, o in enumerate(out))
-
-
-def test_hough_lines_matches_numpy(spark, sf0001_dir):
-    from georaster_spark.operators.algebra import (
-        HOUGH_COS,
-        HOUGH_RHO_OFF,
-        HOUGH_RHO_W,
-        HOUGH_SIN,
-        HOUGH_T,
-        hough_lines,
-    )
-
-    tiles = geo.georegister(
-        spark.read.parquet(str(sf0001_dir / "images.parquet"))
-    ).where(geo.image_idx() % 97 == 0)
-    got = {r["image_id"]: r for r in hough_lines(tiles).collect()}
-    assert len(got) == 11  # 1000 images / 97
-    n_bins = 2 * HOUGH_RHO_OFF // HOUGH_RHO_W
-    for image_id, r in got.items():
-        idx = int(image_id[3:])
-        z = oracle.ramp_tile(idx, 32, 32)
-        if idx % 10 == 3:
-            z = oracle.quantize(z)
-        z = z.astype(np.int64)
-        gx = (z[:-2, 2:] + 2 * z[1:-1, 2:] + z[2:, 2:]) - (
-            z[:-2, :-2] + 2 * z[1:-1, :-2] + z[2:, :-2]
-        )
-        gy = (z[2:, :-2] + 2 * z[2:, 1:-1] + z[2:, 2:]) - (
-            z[:-2, :-2] + 2 * z[:-2, 1:-1] + z[:-2, 2:]
-        )
-        ii, jj = np.nonzero(np.abs(gx) + np.abs(gy) >= HOUGH_T)
-        assert r["n_edges"] == len(ii)
-        if len(ii) == 0:
-            assert (r["best_theta"], r["best_bin"], r["best_votes"]) == (0, 0, 0)
-            continue
-        acc = np.zeros((8, n_bins), dtype=np.int64)
-        for t in range(8):
-            rho = (jj + 1) * HOUGH_COS[t] + (ii + 1) * HOUGH_SIN[t]
-            np.add.at(acc, (t, (rho + HOUGH_RHO_OFF) // HOUGH_RHO_W), 1)
-        best = np.argmax(acc)
-        assert (r["best_theta"], r["best_bin"]) == divmod(best, n_bins)
-        assert r["best_votes"] == acc.ravel()[best]
 
 
 def test_watershed_basins_matches_python(spark, sf0001_dir):
@@ -799,353 +588,6 @@ def test_flow_length_matches_python(spark, sf0001_dir):
             v * ((i - 1) * 30 + (j - 1) + 1) for (i, j), v in lengths.items()
         )
         assert r["len_checksum"] == cks
-
-
-def test_euler_blobs_matches_numpy(spark, sf0001_dir):
-    """Gray quad-count Euler numbers vs an independent flood-fill
-    component/hole count on the zero-padded binary tile — proves the
-    E = C - H identity, not just the quad arithmetic."""
-    got = {r["image_id"]: r for r in algebra.euler_blobs(_tiles(spark, sf0001_dir)).collect()}
-
-    def flood_count(mask: np.ndarray, conn8: bool) -> int:
-        seen = np.zeros_like(mask, dtype=bool)
-        h, w = mask.shape
-        n = 0
-        if conn8:
-            nbrs = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
-        else:
-            nbrs = [(-1, 0), (1, 0), (0, -1), (0, 1)]
-        for si in range(h):
-            for sj in range(w):
-                if mask[si, sj] and not seen[si, sj]:
-                    n += 1
-                    stack = [(si, sj)]
-                    seen[si, sj] = True
-                    while stack:
-                        ci, cj = stack.pop()
-                        for di, dj in nbrs:
-                            ni, nj = ci + di, cj + dj
-                            if 0 <= ni < h and 0 <= nj < w and mask[ni, nj] and not seen[ni, nj]:
-                                seen[ni, nj] = True
-                                stack.append((ni, nj))
-        return n
-
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        b = z >= algebra.EULER_THRESH
-        r = got[f"img{idx:08d}"]
-        assert r["n_fg"] == int(b.sum())
-        # 4-conn foreground components minus 8-conn holes = euler4
-        # (holes = 8-conn background components of the padded image − 1).
-        pad = np.zeros((34, 34), dtype=bool)
-        pad[1:33, 1:33] = b
-        c4 = flood_count(pad, conn8=False)
-        h8 = flood_count(~pad, conn8=True) - 1
-        assert r["euler4"] == c4 - h8, (idx, c4, h8, r)
-        c8 = flood_count(pad, conn8=True)
-        h4 = flood_count(~pad, conn8=False) - 1
-        assert r["euler8"] == c8 - h4, (idx, c8, h4, r)
-        wt = np.arange(1, 32 * 32 + 1, dtype=np.int64).reshape(32, 32)
-        assert r["fg_checksum"] == int((b.astype(np.int64) * wt).sum())
-
-
-def test_integral_box_matches_numpy(spark, sf0001_dir):
-    got = {r["image_id"]: r for r in algebra.integral_box_stats(_tiles(spark, sf0001_dir)).collect()}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        r = got[f"img{idx:08d}"]
-        assert r["total_sum"] == int(z.sum())
-        sat = z.cumsum(axis=0).cumsum(axis=1)
-        assert r["sat_sum"] == int(sat.sum())
-        x0, y0 = (idx * 3) % 16, (idx * 5) % 16
-        assert r["box_sum"] == int(z[y0:y0 + 8, x0:x0 + 8].sum())
-        assert r["center_sum"] == int(z[12:20, 12:20].sum())
-
-
-def test_euler_integral_single_arrow_hop(spark, sf0001_dir):
-    for op in (algebra.euler_blobs, algebra.integral_box_stats):
-        plan = op(_tiles(spark, sf0001_dir))._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1, (op, plan)
-
-
-def test_ssim_pair_matches_numpy(spark, sf0001_dir):
-    im = spark.read.parquet(str(sf0001_dir / "images.parquet")).where(
-        geo.image_idx() < 64
-    )
-    pair = F.shiftright(geo.image_idx(), 1).alias("pair_id")
-    a = im.where(geo.image_idx() % 2 == 0).select(pair, "bytes", "fmt", "w", "h")
-    b = im.where(geo.image_idx() % 2 == 1).select(pair, "bytes", "fmt")
-    got = {r["pair_id"]: r for r in algebra.ssim_pair(a, b).collect()}
-    assert len(got) == 32
-    for p in range(32):
-        za = _ramp(2 * p).astype(np.float64)
-        zb = _ramp(2 * p + 1).astype(np.float64)
-        mua, mub = za.mean(), zb.mean()
-        va, vb = za.var(), zb.var()
-        cov = (za * zb).mean() - mua * mub
-        want = ((2 * mua * mub + algebra.SSIM_C1) * (2 * cov + algebra.SSIM_C2)) / (
-            (mua * mua + mub * mub + algebra.SSIM_C1)
-            * (va + vb + algebra.SSIM_C2)
-        )
-        r = got[p]
-        assert abs(r["ssim"] - want) < 1e-9, p
-        ia, ib = _ramp(2 * p).astype(np.int64), _ramp(2 * p + 1).astype(np.int64)
-        assert r["sum_a"] == ia.sum() and r["sum_b"] == ib.sum()
-        assert r["sum_ab"] == (ia * ib).sum()
-        assert r["sq_err"] == ((ia - ib) ** 2).sum()
-    # identical tiles -> ssim exactly 1
-    same = algebra.ssim_pair(a, a.select("pair_id", "bytes", "fmt", "w", "h"),
-                             key="pair_id")
-    assert all(r["ssim"] == 1.0 for r in same.collect())
-
-
-def test_rle_census_matches_numpy(spark, sf0001_dir):
-    got = {r["image_id"]: r for r in algebra.rle_census(_tiles(spark, sf0001_dir)).collect()}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        sh = np.ones_like(z, dtype=bool)
-        sh[:, 1:] = z[:, 1:] != z[:, :-1]
-        sv = np.ones_like(z, dtype=bool)
-        sv[1:, :] = z[1:, :] != z[:-1, :]
-        longest = 0
-        for row in range(32):
-            pos = np.flatnonzero(sh[row])
-            ends = np.append(pos[1:], 32)
-            longest = max(longest, int((ends - pos).max()))
-        r = got[f"img{idx:08d}"]
-        assert r["n_runs_h"] == int(sh.sum())
-        assert r["n_runs_v"] == int(sv.sum())
-        assert r["longest_run"] == longest
-        wt = np.arange(1, 32 * 32 + 1, dtype=np.int64).reshape(32, 32)
-        assert r["run_start_checksum"] == int((sh.astype(np.int64) * wt).sum())
-
-
-def test_block_motion_recovers_known_shift(spark):
-    """Construct b = a rolled by (+1, -2); the argmin must recover it
-    with SSD 0 on the overlap."""
-    from georaster_spark import oracle
-
-    rows_a, rows_b = [], []
-    for p in range(6):
-        za = oracle.ramp_tile(2 * p + 1, 32, 32).astype(np.uint8)  # coprime ramps
-        zb = np.roll(np.roll(za, 1, axis=0), -2, axis=1)
-        rows_a.append((p, bytearray(za.tobytes()), "raw", 32, 32))
-        rows_b.append((p, bytearray(zb.tobytes()), "raw"))
-    a = spark.createDataFrame(
-        rows_a, schema="pair_id long, bytes binary, fmt string, w int, h int"
-    )
-    b = spark.createDataFrame(rows_b, schema="pair_id long, bytes binary, fmt string")
-    got = {r["pair_id"]: r for r in algebra.block_motion(a, b).collect()}
-    for p in range(6):
-        r = got[p]
-        # convention: best (dy, dx) satisfies a(i,j) == b(i-dy, j-dx),
-        # so b rolled by (+1, -2) is recovered as (-1, +2)
-        assert (r["best_dy"], r["best_dx"]) == (-1, 2), r
-        assert r["best_ssd"] == 0
-        # overlap is roll-clean except the wrapped rows/cols, which are
-        # excluded by the overlap window -> SSD may not be 0 only if the
-        # ramp wraps identically; assert it beats the zero shift
-        assert r["best_score_ppm"] <= r["ssd_zero"] * 1_000_000 // 1024
-
-
-def test_block_motion_identical_tiles_zero_shift(spark, sf0001_dir):
-    im = spark.read.parquet(str(sf0001_dir / "images.parquet")).where(
-        geo.image_idx() < 20
-    )
-    pid = geo.image_idx().alias("pair_id")
-    a = im.select(pid, "bytes", "fmt", "w", "h")
-    b = im.select(pid, "bytes", "fmt")
-    for r in algebra.block_motion(a, b).collect():
-        # modular-linear ramps can tie at SSD 0 on several shifts (a
-        # shift adds a constant mod 256); the winner is then the
-        # lexicographically smallest zero-SSD shift. What identity DOES
-        # pin: the zero shift scores 0 and the winner can't beat it.
-        assert r["ssd_zero"] == 0
-        assert r["best_ssd"] == 0 and r["best_score_ppm"] == 0
-
-
-def test_laplacian_residual_matches_numpy(spark, sf0001_dir):
-    got = {r["image_id"]: r for r in algebra.laplacian_residual(_tiles(spark, sf0001_dir)).collect()}
-    for idx in range(0, 1000, 37):
-        z = _ramp(idx)
-        base = (z[0::2, 0::2] + z[0::2, 1::2] + z[1::2, 0::2] + z[1::2, 1::2]) // 4
-        lap = z - np.repeat(np.repeat(base, 2, axis=0), 2, axis=1)
-        wt = np.arange(1, 32 * 32 + 1, dtype=np.int64).reshape(32, 32)
-        r = got[f"img{idx:08d}"]
-        assert r["base_sum"] == int(base.sum())
-        assert r["lap_abs_sum"] == int(np.abs(lap).sum())
-        assert r["lap_max"] == int(np.abs(lap).max())
-        assert r["lap_checksum"] == int((lap * wt).sum())
-
-
-def test_census_transform_matches_numpy(spark, sf0001_dir):
-    tiles = geo.georegister(
-        spark.read.parquet(str(sf0001_dir / "images.parquet"))
-    ).limit(4)
-    got = {r["image_id"]: r for r in algebra.census_transform(tiles).collect()}
-    for r in tiles.collect():
-        z = oracle.decode_pixels(r["bytes"], r["w"], r["h"], r["fmt"]).astype(np.int64)
-        h, w = z.shape
-        code = np.zeros((h - 2, w - 2), dtype=np.int64)
-        pop = np.zeros_like(code)
-        for b, (di, dj) in enumerate(algebra._CENSUS_NBRS):
-            nb = z[1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-            gt = (nb > z[1:-1, 1:-1]).astype(np.int64)
-            code += gt << b
-            pop += gt
-        g = got[r["image_id"]]
-        assert g["n_interior"] == (h - 2) * (w - 2)
-        assert g["census_sum"] == code.sum()
-        assert g["popcount_sum"] == pop.sum()
-        assert g["n_uniform"] == ((code == 0) | (code == 255)).sum()
-        wt = (
-            np.arange(1, h - 1)[:, None] * w + np.arange(1, w - 1)[None, :] + 1
-        )
-        assert g["census_checksum"] == (code * wt).sum()
-
-
-def test_census_transform_constant_tile_is_all_uniform(spark):
-    import pandas as pd
-
-    z = np.full((8, 8), 42, dtype=np.uint8)
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"image_id": ["img0000000001"], "bytes": [z.tobytes()],
-             "w": [8], "h": [8], "fmt": ["raw"]}
-        )
-    )
-    row = algebra.census_transform(df).collect()[0]
-    assert row["census_sum"] == 0
-    assert row["n_uniform"] == 36  # every interior code is 0
-
-
-def test_demosaic_matches_numpy(spark, sf0001_dir):
-    tiles = geo.georegister(
-        spark.read.parquet(str(sf0001_dir / "images.parquet"))
-    ).limit(4)
-    got = {r["image_id"]: r for r in algebra.demosaic_bilinear(tiles).collect()}
-    for rr in tiles.collect():
-        z = oracle.decode_pixels(rr["bytes"], rr["w"], rr["h"], rr["fmt"]).astype(np.int64)
-        h, w = z.shape
-        r = np.zeros((h - 2, w - 2), dtype=np.int64)
-        g = np.zeros_like(r)
-        b = np.zeros_like(r)
-        for ii in range(1, h - 1):
-            for jj in range(1, w - 1):
-                c = z[ii, jj]
-                cross4 = (z[ii - 1, jj] + z[ii + 1, jj] + z[ii, jj - 1] + z[ii, jj + 1]) // 4
-                diag4 = (z[ii - 1, jj - 1] + z[ii - 1, jj + 1] + z[ii + 1, jj - 1] + z[ii + 1, jj + 1]) // 4
-                vert2 = (z[ii - 1, jj] + z[ii + 1, jj]) // 2
-                horz2 = (z[ii, jj - 1] + z[ii, jj + 1]) // 2
-                pi, pj = ii % 2, jj % 2
-                if (pi, pj) == (0, 0):
-                    rv, gv, bv = c, cross4, diag4
-                elif (pi, pj) == (0, 1):
-                    rv, gv, bv = horz2, c, vert2
-                elif (pi, pj) == (1, 0):
-                    rv, gv, bv = vert2, c, horz2
-                else:
-                    rv, gv, bv = diag4, cross4, c
-                r[ii - 1, jj - 1], g[ii - 1, jj - 1], b[ii - 1, jj - 1] = rv, gv, bv
-        got_r = got[rr["image_id"]]
-        assert got_r["sum_r"] == r.sum()
-        assert got_r["sum_g"] == g.sum()
-        assert got_r["sum_b"] == b.sum()
-        wt = np.arange(1, h - 1)[:, None] * w + np.arange(1, w - 1)[None, :] + 1
-        assert got_r["demosaic_checksum"] == ((r + 2 * g + 3 * b) * wt).sum()
-
-
-def test_demosaic_constant_tile_reconstructs_constant(spark):
-    import pandas as pd
-
-    z = np.full((8, 8), 100, dtype=np.uint8)
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"image_id": ["img0000000001"], "bytes": [z.tobytes()],
-             "w": [8], "h": [8], "fmt": ["raw"]}
-        )
-    )
-    row = algebra.demosaic_bilinear(df).collect()[0]
-    assert row["sum_r"] == row["sum_g"] == row["sum_b"] == 100 * 36
-
-
-def test_threshold_diffusion_smooths_but_preserves_edges(spark):
-    import pandas as pd
-
-    # step edge of height >= DIFF_K must be untouched; a small bump decays
-    z = np.zeros((8, 8), dtype=np.uint8)
-    z[:, 4:] = 200          # hard edge (|delta| = 200 >= K: no flux)
-    z[2, 2] = 10            # small bump (|delta| = 10 < K: diffuses)
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"image_id": ["img0000000001"], "bytes": [z.tobytes()],
-             "w": [8], "h": [8], "fmt": ["raw"]}
-        )
-    )
-    rows = {r["round"]: r for r in algebra.threshold_diffusion(df).collect()}
-    # round 1: only the bump and its 4-neighborhood change
-    assert rows[1]["abs_delta"] > 0
-    # the edge never moves: recompute and confirm columns 3/4 stay 0/200
-    cur = z.astype(np.int64)
-    for _ in range(algebra.DIFF_ROUNDS):
-        p = np.pad(cur, 1, mode="edge")
-        flux = np.zeros_like(cur)
-        for di, dj in ((-1, 0), (1, 0), (0, -1), (0, 1)):
-            d = p[1 + di:9 + di, 1 + dj:9 + dj] - cur
-            flux += np.where(np.abs(d) < algebra.DIFF_K,
-                             np.sign(d) * (np.abs(d) // 2), 0)
-        cur = cur + np.sign(flux) * (np.abs(flux) // 4)
-    assert (cur[:, 5:] == 200).all() and (cur[:2, :2] == 0).all()
-    wt = np.arange(1, 65, dtype=np.int64).reshape(8, 8)
-    assert rows[algebra.DIFF_ROUNDS]["diff_checksum"] == (cur * wt).sum()
-    assert rows[algebra.DIFF_ROUNDS]["sum_v"] == cur.sum()
-
-
-def test_bayer_dither_gradient_density_tracks_value(spark):
-    import pandas as pd
-
-    # a flat mid-gray tile dithers to a ~50% checkerboard-ish pattern
-    z = np.full((8, 8), 128, dtype=np.uint8)
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"image_id": ["img0000000001"], "bytes": [z.tobytes()],
-             "w": [8], "h": [8], "fmt": ["raw"]}
-        )
-    )
-    row = algebra.bayer_dither(df).collect()[0]
-    # thresholds for B=0..15 span ~0..239; v=128 exceeds those with B <= 8
-    bay = np.array(algebra._BAYER4, dtype=np.int64)
-    thr = (bay[np.arange(8)[:, None] % 4, np.arange(8)[None, :] % 4] * 255 + 8) // 16
-    want = (128 > thr).sum()
-    assert row["n_ones"] == want
-    assert 16 <= row["n_ones"] <= 48  # mid-gray is mid-density
-
-
-def test_haar_census_matches_numpy(spark, sf0001_dir):
-    tiles = geo.georegister(
-        spark.read.parquet(str(sf0001_dir / "images.parquet"))
-    ).limit(4)
-    got = {r["image_id"]: r for r in algebra.haar_census(tiles).collect()}
-    for r in tiles.collect():
-        z = oracle.decode_pixels(r["bytes"], r["w"], r["h"], r["fmt"]).astype(np.int64)[None]
-
-        def level(z):
-            sh = (z[:, :, 0::2] + z[:, :, 1::2]) // 2
-            dh = z[:, :, 0::2] - z[:, :, 1::2]
-            return (
-                (sh[:, 0::2] + sh[:, 1::2]) // 2,
-                sh[:, 0::2] - sh[:, 1::2],
-                dh[:, 0::2] + dh[:, 1::2],
-                dh[:, 0::2] - dh[:, 1::2],
-            )
-
-        ll1, lh1, hl1, hh1 = level(z)
-        ll2, lh2, hl2, hh2 = level(ll1)
-        g = got[r["image_id"]]
-        assert g["ll2_sum"] == ll2.sum()
-        assert g["e_lh1"] == np.abs(lh1).sum()
-        assert g["e_hh1"] == np.abs(hh1).sum()
-        assert g["e_l2"] == np.abs(lh2).sum() + np.abs(hl2).sum() + np.abs(hh2).sum()
 
 
 def test_cost_distance_dijkstra_parity(spark, sf0001_dir):

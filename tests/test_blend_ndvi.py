@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from georaster_spark import oracle
 from georaster_spark.operators import georegister as geo
@@ -127,72 +126,3 @@ def test_pansharpen_matches_numpy(spark, sf0001_dir):
             assert g["ps_min"] == ps.min()
             assert g["ps_max"] == ps.max()
             assert g["ps_checksum"] == (ps * wt).sum()
-
-
-def test_cutmix_checksum_hand_verified(spark):
-    """Two 8x8 pairs: pair 0 (unclipped-to-corner box) and pair 3
-    (s=7 box clipped at both edges); mixed values, box coords and
-    mix_area_ppm checked against a direct NumPy paste."""
-    import numpy as np
-
-    from georaster_spark.operators.algebra import CUTMIX_SMOD, cutmix_checksum
-
-    w = h = 8
-    rng_a = {0: 10, 3: 40}
-    rng_b = {0: 200, 3: 250}
-    rows_a, rows_b = [], []
-    for p in (0, 3):
-        A = np.full((h, w), rng_a[p], dtype=np.uint8)
-        B = np.full((h, w), rng_b[p], dtype=np.uint8)
-        rows_a.append((p, A.tobytes(), "raw", w, h))
-        rows_b.append((p, B.tobytes(), "raw"))
-    a = spark.createDataFrame(
-        rows_a, "pair_id long, bytes binary, fmt string, w int, h int"
-    )
-    b = spark.createDataFrame(rows_b, "pair_id long, bytes binary, fmt string")
-    got = {r["pair_id"]: r for r in cutmix_checksum(a, b).collect()}
-
-    pw = (np.arange(h * w, dtype=np.int64) + 1).reshape(h, w)
-    for p in (0, 3):
-        s = 4 + p % CUTMIX_SMOD
-        cy, cx = (p * 13) % h, (p * 7) % w
-        y0, y1 = max(0, cy - s), min(h, cy + s)
-        x0, x1 = max(0, cx - s), min(w, cx + s)
-        mixed = np.full((h, w), rng_a[p], dtype=np.int64)
-        mixed[y0:y1, x0:x1] = rng_b[p]
-        r = got[p]
-        assert (r["y0"], r["x0"], r["y1"], r["x1"]) == (y0, x0, y1, x1)
-        assert r["mix_area_ppm"] == (10**6 * (y1 - y0) * (x1 - x0)) // (w * h)
-        assert r["mixed_sum"] == mixed.sum()
-        assert r["mixed_checksum"] == (mixed * pw).sum()
-    # pair 0's box is corner-clipped (cy=cx=0, s=4 -> 4x4), pair 3's is
-    # s=7 centered at (7,5) -> rows [0,8) x cols [0,8) fully covering
-    assert (got[0]["y1"] - got[0]["y0"], got[0]["x1"] - got[0]["x0"]) == (4, 4)
-    assert got[3]["mix_area_ppm"] == 1_000_000
-
-
-def test_mixup_checksum_exact_floor_blend(spark):
-    import numpy as np
-
-    from georaster_spark.operators.algebra import MIXUP_WMOD, mixup_checksum
-
-    w = h = 4
-    A = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    B = (255 - np.arange(16, dtype=np.uint8)).reshape(4, 4)
-    rows_a = [(p, A.tobytes(), "raw", w, h) for p in (0, 2, 6)]
-    rows_b = [(p, B.tobytes(), "raw") for p in (0, 2, 6)]
-    a = spark.createDataFrame(
-        rows_a, "pair_id long, bytes binary, fmt string, w int, h int"
-    )
-    b = spark.createDataFrame(rows_b, "pair_id long, bytes binary, fmt string")
-    got = {r["pair_id"]: r for r in mixup_checksum(a, b).collect()}
-    pw = np.arange(1, 17, dtype=np.int64).reshape(4, 4)
-    for p in (0, 2, 6):
-        wa = 1 + p % MIXUP_WMOD
-        mixed = (wa * A.astype(np.int64) + (8 - wa) * B.astype(np.int64)) // 8
-        r = got[p]
-        assert r["w_a"] == wa
-        assert r["mixed_sum"] == mixed.sum()
-        assert r["mixed_checksum"] == (mixed * pw).sum()
-    # weights actually vary across the schedule
-    assert len({got[p]["w_a"] for p in (0, 2, 6)}) == 3

@@ -1,7 +1,8 @@
 """The query registry (contract.QUERY_TABLE) is well formed: one row per
 query name, every row either has an oracle builder or says why it is
-checked on rows only, and neither an operator module nor contract.py
-keeps a query or DuckDB twin that no row uses.  Needs no Spark session."""
+checked on rows only, and no operator module, contract.py or algebra.py
+keeps a query, DuckDB twin or kernel that no row uses.  Needs no Spark
+session."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import inspect
 from collections import Counter
 from types import CodeType, ModuleType
 
-from georaster_spark.operators import relational, textops, vectors
+from georaster_spark.operators import algebra, relational, textops, vectors
 from georaster_spark.plans import contract
 
 SCOREBOARD = 50  # the driver's correctness gate scores the first 50 rows
@@ -85,21 +86,51 @@ def _code_names(fn) -> set[str]:
     return names
 
 
+def _module_functions(mod: ModuleType) -> dict[str, object]:
+    return {
+        name: fn
+        for name, fn in vars(mod).items()
+        if inspect.isfunction(fn) and fn.__module__ == mod.__name__
+    }
+
+
+def _reached_from_rows() -> set:
+    """Every contract.py or algebra.py function some row reaches: by name
+    within the caller's own module, and from any caller into algebra.py
+    through a function-local `from ..operators import algebra` followed by
+    `algebra.<name>` (co_names holds both the module and the attribute)."""
+    scopes = {mod.__name__: _module_functions(mod) for mod in (contract, algebra)}
+    stack = [f for _, query, oracle in contract.QUERY_TABLE for f in (query, oracle) if callable(f)]
+    reached = set(stack)
+    while stack:
+        fn = stack.pop()
+        names = _code_names(fn)
+        callees = [scopes.get(fn.__module__, {})]
+        if "algebra" in names or "operators.algebra" in names:
+            callees.append(scopes[algebra.__name__])
+        for scope in callees:
+            for name in names & scope.keys():
+                if scope[name] not in reached:
+                    reached.add(scope[name])
+                    stack.append(scope[name])
+    return reached
+
+
 def test_every_contract_query_and_twin_is_reached_from_a_row():
     """A `q_*` or `_sql_*` in contract.py that no row reaches, directly or
     through other contract functions, is dead and must go with its row."""
-    defined = {
-        name: fn
-        for name, fn in vars(contract).items()
-        if inspect.isfunction(fn) and fn.__module__ == contract.__name__
-    }
-    stack = [f for _, query, oracle in contract.QUERY_TABLE for f in (query, oracle) if callable(f)]
-    reached = {name for name, fn in defined.items() if fn in stack}
-    while stack:
-        for name in _code_names(stack.pop()) & defined.keys() - reached:
-            reached.add(name)
-            stack.append(defined[name])
+    reached = _reached_from_rows()
     orphans = sorted(
-        name for name in defined if name.startswith(("q_", "_sql_")) and name not in reached
+        name
+        for name, fn in _module_functions(contract).items()
+        if name.startswith(("q_", "_sql_")) and fn not in reached
     )
+    assert not orphans, orphans
+
+
+def test_every_algebra_function_is_reached_from_a_row():
+    """algebra.py holds per-tile kernels only registry rows call; one no
+    row reaches, through contract.py or another algebra function, is dead."""
+    reached = _reached_from_rows()
+    orphans = sorted(name for name, fn in _module_functions(algebra).items() if fn not in reached)
     assert not orphans, orphans

@@ -245,8 +245,8 @@ def test_hilbert_rollup_locality_and_plan(spark, sf0001_dir):
 
 def test_round3_contract_vs_duckdb(spark):
     """sf0.001 parity for the round-3 batch: quadtree refinement,
-    geodesic assignment, OD matrix, payload audit, bilinear resize,
-    Hilbert range scan — the same compare the driver runs at sf0.01."""
+    geodesic assignment, OD matrix, payload audit, Hilbert range
+    scan — the same compare the driver runs at sf0.01."""
     import duckdb
 
     from georaster_spark.plans import contract as ct
@@ -260,7 +260,6 @@ def test_round3_contract_vs_duckdb(spark):
         ("geodesic_assign", ct.q_geodesic_assign, ct._sql_geodesic_assign(fx)),
         ("od_matrix", ct.q_od_matrix, ct._sql_od_matrix(fx)),
         ("payload_integrity", ct.q_payload_integrity, ct._sql_payload_integrity(fx)),
-        ("resize_bilinear", ct.q_resize_bilinear, ct._sql_resize_bilinear(fx)),
         (
             "hilbert_range_scan",
             ct.q_hilbert_range_scan,
