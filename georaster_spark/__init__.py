@@ -13,3 +13,7 @@ Layers:
 """
 
 __version__ = "0.1.0"
+
+from .zip_stamps import install_in_task
+
+install_in_task()  # inside a Python worker task: stop re-reading unchanged zips

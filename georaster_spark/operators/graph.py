@@ -10,7 +10,7 @@ What the module holds:
 - ``canonical_docs``: one survivor per component;
 - ``boruvka_msf``: minimum spanning forest (mst_boruvka, single_linkage);
 - ``_pin`` / ``_pin_lazy``: the bounded registry of checkpointed round
-  frames these loops and knn.py share.
+  frames these loops share.
 
 The reference has no graph operators (it is a raster library); this is
 part of the LLM-training-data-pipeline tier the task mandates: LSH
@@ -36,8 +36,7 @@ alternating large-star/small-star contraction (Kiveris et al.,
 which the per-round join shape here already accommodates.
 
 The per-round convergence check is a driver-side aggregate (one scalar
-per round, no data collected) — acceptable: it gates loop exit exactly
-like knn.py's frontier census.
+per round, no data collected) — acceptable: it only gates loop exit.
 """
 
 from __future__ import annotations

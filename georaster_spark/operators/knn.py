@@ -1,55 +1,169 @@
-"""Op E6 — cell-keyed kNN join (SURVEY §2.2).
+"""Op E6 — cell-keyed kNN join in one map-only Arrow pass (SURVEY §2.2).
 
 k nearest centers (e.g. zone centroids) per point.  Technique per the
 filter-refine + ring-expansion family (cf. distributed stream kNN-join
-literature, PAPERS.md): candidates come from an equi-join on cell keys
-within a Chebyshev ring around each point's cell; exact L2 refine +
-windowed top-k; a driver loop doubles the ring only for points whose
-current k-th candidate cannot yet be proven global.
+literature, PAPERS.md): the driver collects the dims-sized centers once
+and sorts them into a cell-keyed index; a `mapInArrow` kernel over the
+points takes each point's candidates from the cells within a Chebyshev
+ring around its own cell, refines them by exact L2 and keeps the top k.
+Within each Arrow batch the ring doubles only for the points whose k-th
+candidate cannot yet be proven global.
 
-Termination proof: after exploring all cells within Chebyshev distance
-R of the point's cell, every unexplored center is at world distance
->= R*s (s = cell edge).  So once a point holds >= k candidates with
-k-th squared distance <= (R*s)^2, its top-k is final.
+Termination proof (per batch, per point): after exploring all cells
+within Chebyshev distance R of the point's cell, every unexplored center
+is at world distance > R*s (s = cell edge).  So once a point holds >= k
+candidates with k-th squared distance <= (R*s)^2, its top-k is final.
+Once R*s reaches the domain the ring covers every cell, and the point
+takes all centers (as does every point when k >= the center count).
 
-Determinism: candidates rank by (d2, center_id) — total order, identical
-float64 arithmetic in the DuckDB oracle -> bit-for-bit reproducible
-across parallelism levels (north-rule).
-
-Scale notes: the per-round candidate join is an equi-join on cell_id; the
-centers side is broadcast when dims-sized, else shuffled.  Points that
-finish early leave the loop (anti-join), so ring growth touches only the
-starved tail (typically isolated points).  A final brute-force fallback
-covers pathological inputs (fewer centers than k in the whole domain) —
-bounded because it only sees the post-loop remainder.
+Determinism: candidates rank by (d2, center_id) — a total order; d2 is
+`(px-cx)*(px-cx) + (py-cy)*(py-cy)` in float64, the DuckDB oracle's
+expression -> bit-for-bit reproducible across parallelism levels
+(north-rule).  The kernel ranks by a center's POSITION in center_id
+order and returns positions; a broadcast hash join on position attaches
+the caller's center_id, whatever its type.
 
 Adaptive resolution: `r` is a CAP, not the working grid.  The working
 resolution is derived from the center count so a ring-1 neighborhood
-(9 cells) is expected to hold ~2k centers — i.e. cells ~ centers.  With
+(9 cells) is expected to hold ~4k centers — i.e. cells ~ centers.  With
 a fixed fine grid (e.g. 2^10 x 2^10 = 1M cells) and a dims-sized center
-table (64..1024 rows), ring-1 is almost surely EMPTY and the doubling
-loop must explode (2R+1)^2 cells per point out to R ~ 32+ before the
-k-th-candidate proof fires — billions of exploded rows at 10^6 points
-(measured 59.8 s at sf1; 4.4 s after this change).  Matching grid to
-density keeps every round's explode at 9 cells/point and the whole join
-one round for all but isolated stragglers.  The result is EXACT either
-way (the R*s termination bound holds for any cell edge s), so output
-hashes are identical across resolutions and parallelism levels.
+table (64..1024 rows), ring-1 is almost surely EMPTY and every point
+would double its ring out to R ~ 32+ before the k-th-candidate proof
+fires.  Matching grid to density keeps most points at ring 1 and the
+doubling to isolated stragglers.  The result is EXACT either way (the
+R*s termination bound holds for any cell edge s), so output hashes are
+identical across resolutions and parallelism levels.
+
+Scale notes: a call runs the centers collect, the broadcast of the
+(position, center_id) table and the result job; nothing shuffles, and
+the kernel runs at the points' own parallelism (an input scan that
+cannot split, such as a one-row-group parquet file, runs it in one
+task).  Per point the kernel
+examines the centers of its ring's cells — ~4k at ring 1, by the
+resolution above — and emits k rows, so the work is linear in the
+points and independent of the grid size.
+
+Missing coordinates: a center without them has d2 = NaN and ranks after
+every center with them.  A point with a null coordinate gets the k
+smallest center_ids with a null d2 (every d2 is unknown, so the
+center_id tie rule decides); a NaN coordinate gets the same ids with
+d2 = NaN.
 """
 
 from __future__ import annotations
 
+import math
+from functools import partial
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from ..constants import DOMAIN
-from ..functions import cells
 
 
-def _topk(cand: DataFrame, k: int, id_col: str, center_id: str) -> DataFrame:
-    win = Window.partitionBy(id_col).orderBy(F.col("d2").asc(), F.col(center_id).asc())
-    return cand.withColumn("rank", F.row_number().over(win)).where(F.col("rank") <= k)
+def _cells(v: np.ndarray, s: float, n: int) -> np.ndarray:
+    """Cell index of each coordinate on a grid of n cells of edge s;
+    outside the domain clamps to the edge cell, NaN to cell 0."""
+    c = np.nan_to_num(np.floor(v / s), nan=0.0, posinf=n - 1, neginf=0.0)
+    return np.clip(c, 0, n - 1).astype(np.int64)
+
+
+def _ragged_arange(counts: np.ndarray) -> np.ndarray:
+    """Concatenation of arange(c) for every c in counts."""
+    ends = np.cumsum(counts)
+    return np.arange(ends[-1] if counts.size else 0) - np.repeat(ends - counts, counts)
+
+
+class _Index:
+    """Centers given in center_id order, sorted by cell key (row-major on
+    an n x n grid of edge s); `pos` is each center's given position."""
+
+    def __init__(self, cx: np.ndarray, cy: np.ndarray, r: int):
+        self.n = 1 << r
+        self.s = float(DOMAIN >> r)
+        key = _cells(cy, self.s, self.n) * self.n + _cells(cx, self.s, self.n)
+        order = np.argsort(key)
+        self.key, self.pos, self.cx, self.cy = key[order], order, cx[order], cy[order]
+        self.row_lo = int(self.key[0] // self.n) if key.size else 0
+        self.row_hi = int(self.key[-1] // self.n) if key.size else -1
+
+    def ring(self, row: np.ndarray, col: np.ndarray, radius: int) -> tuple[np.ndarray, np.ndarray]:
+        """(point slot, center slot) of every center within Chebyshev
+        distance `radius` of the cells (row, col)."""
+        r0 = np.maximum(row - radius, self.row_lo)
+        nr = np.maximum(np.minimum(row + radius, self.row_hi) - r0 + 1, 0)
+        slot = np.repeat(np.arange(row.size), nr)
+        base = (np.repeat(r0, nr) + _ragged_arange(nr)) * self.n
+        lo = np.searchsorted(self.key, base + np.maximum(col[slot] - radius, 0), "left")
+        hi = np.searchsorted(self.key, base + np.minimum(col[slot] + radius, self.n - 1), "right")
+        cnt = hi - lo
+        return np.repeat(slot, cnt), np.repeat(lo, cnt) + _ragged_arange(cnt)
+
+
+def _rank(px, py, ix: _Index, k: int, slot: np.ndarray, cen: np.ndarray, m: int):
+    """Rank each point's candidates by (d2, pos) and keep the first k:
+    (slot, rank, center slot, d2) of the kept rows, plus each point's
+    candidate count and k-th d2 (inf below k candidates)."""
+    dx = px[slot] - ix.cx[cen]
+    dy = py[slot] - ix.cy[cen]
+    d2 = dx * dx + dy * dy
+    order = np.lexsort((ix.pos[cen], d2, slot))
+    slot, cen, d2 = slot[order], cen[order], d2[order]
+    ncand = np.bincount(slot, minlength=m)
+    first = np.cumsum(ncand) - ncand
+    rank = np.arange(slot.size) - first[slot]
+    dk = np.full(m, np.inf)
+    full = ncand >= k
+    dk[full] = d2[first[full] + k - 1]
+    keep = rank < k
+    return slot[keep], rank[keep], cen[keep], d2[keep], ncand, dk
+
+
+def _knn_batches(batches, ix: _Index, k: int):
+    """mapInArrow kernel: (id, x, y) batches -> (id, rank, _pos, d2)."""
+    c = ix.key.size
+    for b in batches:
+        x, y = b.column(1), b.column(2)
+        px = x.to_numpy(zero_copy_only=False)
+        py = y.to_numpy(zero_copy_only=False)
+        row, col = _cells(py, ix.s, ix.n), _cells(px, ix.s, ix.n)
+        parts = []
+        active = np.arange(b.num_rows) if k > 0 and c > 0 else np.arange(0)
+        radius = 1
+        while active.size:
+            m = active.size
+            apx, apy = px[active], py[active]
+            everything = k >= c or radius * ix.s >= DOMAIN
+            if everything:  # the ring covers every cell: take all centers
+                slot = np.repeat(np.arange(m), c)
+                cen = np.tile(np.arange(c), m)
+            else:
+                slot, cen = ix.ring(row[active], col[active], radius)
+            slot, rank, cen, d2, ncand, dk = _rank(apx, apy, ix, k, slot, cen, m)
+            done = np.ones(m, bool) if everything else (ncand >= k) & (dk <= (radius * ix.s) ** 2)
+            sel = done[slot]
+            parts.append((active[slot[sel]], rank[sel] + 1, ix.pos[cen[sel]], d2[sel]))
+            active = active[~done]
+            radius *= 2
+        if not parts:
+            continue
+        pt, rank, pos, d2 = (np.concatenate(p) for p in zip(*parts))
+        take = pa.array(pt)
+        nulls = pc.or_(x.is_null(), y.is_null()).take(take)
+        yield pa.RecordBatch.from_arrays(
+            [
+                b.column(0).take(take),
+                pa.array(rank.astype(np.int32)),
+                pa.array(pos.astype(np.int32)),
+                pa.array(d2, mask=nulls.to_numpy(zero_copy_only=False)),
+            ],
+            names=[b.schema.names[0], "rank", "_pos", "d2"],
+        )
 
 
 def knn_join(
@@ -63,113 +177,47 @@ def knn_join(
     center_id: str = "zone_id",
     cx_col: str = "cx",
     cy_col: str = "cy",
-    broadcast_centers: bool = True,
-    max_rounds: int = 6,
 ) -> DataFrame:
     """(id_col, rank, center_id, d2) — exact k nearest centers per point."""
+    # position = rank in center_id order (nulls first, as Spark sorts)
+    got = centers.select(center_id, cx_col, cy_col).collect()
+    rows = [q for q in got if q[0] is None] + sorted((q for q in got if q[0] is not None),
+                                                     key=lambda q: q[0])
     # Adaptive working resolution from CENTER DENSITY OVER THE OCCUPIED
-    # EXTENT (one agg over the centers side — planner metadata, the same
-    # single-pass bound as a broadcast build).  Pick cell edge s so a ring-1
-    # neighborhood (9 cells) is expected to hold ~4k centers:
+    # EXTENT.  Pick cell edge s so a ring-1 neighborhood (9 cells) is
+    # expected to hold ~4k centers:
     #     9 * s^2 * n / A  =  4k   =>   s = sqrt(4k * A / (9n))
     # where A is the centers' bounding-box area.  Density must use the
     # OCCUPIED extent, not the domain: the test corpus occupies ~1/40000 of
     # the world square, so a domain-uniform estimate is off by >4 bits of
-    # resolution in each axis (every center lands in ONE coarse cell and the
-    # candidate join degenerates to the cross product).  With s at this
+    # resolution in each axis (every center lands in ONE coarse cell and
+    # each point's candidates degenerate to all centers).  With s at this
     # target the expected k-th-candidate distance is ~0.7 * s, so most
-    # points PROVE their top-k in round 1 and the loop runs 1-2 rounds.
-    # Exactness never depends on this choice (the R*s termination bound
-    # holds for any s), so output hashes are identical across resolutions.
-    import math
-
-    crow = centers.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(cx_col).alias("x0"),
-        F.max(cx_col).alias("x1"),
-        F.min(cy_col).alias("y0"),
-        F.max(cy_col).alias("y1"),
-    ).collect()[0]
-    n_centers = int(crow["n"])
-    if n_centers > 0:
-        area = max(0.0, float(crow["x1"]) - float(crow["x0"])) * max(
-            0.0, float(crow["y1"]) - float(crow["y0"])
-        )
-        if area > 0.0:
-            s_target = math.sqrt(4.0 * max(1, k) * area / (9.0 * n_centers))
-            # floor on the exponent -> coarser-or-equal than the target edge
-            # (>= the target candidate count), clamped to the caller's cap
-            r = min(r, max(0, int(math.floor(math.log2(DOMAIN / s_target)))))
-    s = float(DOMAIN >> r)
-    cen = centers.select(
-        F.col(center_id),
-        F.col(cx_col).alias("_cx"),
-        F.col(cy_col).alias("_cy"),
-        cells.cell_encode(F.col(cx_col), F.col(cy_col), r).alias("_ccell"),
+    # points PROVE their top-k at ring 1.  Exactness never depends on this
+    # choice (the R*s termination bound holds for any s).
+    cx = np.array([q[1] for q in rows], dtype=np.float64)
+    cy = np.array([q[2] for q in rows], dtype=np.float64)
+    fx, fy = cx[~np.isnan(cx)], cy[~np.isnan(cy)]
+    area = np.ptp(fx) * np.ptp(fy) if fx.size and fy.size else 0.0
+    if area > 0.0:
+        s_target = math.sqrt(4.0 * max(1, k) * area / (9.0 * len(rows)))
+        # floor on the exponent -> coarser-or-equal than the target edge
+        # (>= the target candidate count), clamped to the caller's cap
+        r = min(r, max(0, int(math.floor(math.log2(DOMAIN / s_target)))))
+    ix = _Index(cx, cy, r)
+    out_schema = StructType([
+        points.schema[id_col],
+        StructField("rank", IntegerType(), False),
+        StructField("_pos", IntegerType(), False),
+        StructField("d2", DoubleType(), True),
+    ])
+    ranked = points.select(
+        F.col(id_col), F.col(x_col).cast("double"), F.col(y_col).cast("double")
+    ).mapInArrow(partial(_knn_batches, ix=ix, k=k), out_schema)
+    id_schema = StructType([StructField("_pos", IntegerType(), False), centers.schema[center_id]])
+    ids = points.sparkSession.createDataFrame(
+        pd.DataFrame({"_pos": np.arange(len(rows), dtype=np.int32),
+                      center_id: pd.Series([q[0] for q in rows], dtype=object)}),
+        id_schema,
     )
-    if broadcast_centers:
-        cen = F.broadcast(cen)
-
-    remaining = points.select(
-        F.col(id_col),
-        F.col(x_col).alias("_px"),
-        F.col(y_col).alias("_py"),
-        cells.cell_encode(F.col(x_col), F.col(y_col), r).alias("_pcell"),
-    )
-    # the explode+broadcast-join map work runs at the INPUT's parallelism;
-    # a small-sf single-split parquet would serialize the whole round on one
-    # task.  One cheap shuffle of the slim point projection restores it; at
-    # real scale the scan already has >= P splits and this is a no-op.
-    p_shuffle = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if remaining.rdd.getNumPartitions() < min(p_shuffle, 16):
-        remaining = remaining.repartition(p_shuffle)
-    # explicit multiplies, not pow(): bit-identical to the DuckDB oracle
-    d2 = (F.col("_px") - F.col("_cx")) * (F.col("_px") - F.col("_cx")) + (
-        F.col("_py") - F.col("_cy")
-    ) * (F.col("_py") - F.col("_cy"))
-
-    # Per-round frames are PINNED (localCheckpoint+cache, graph._pin — the
-    # FIFO-bounded registry): the returned union is lazy, so without the pin
-    # every `finished[i]` would re-derive round i's candidate join from
-    # scratch when the caller finally acts on the result — measured 3x the
-    # whole query.  Pinning `top` (<= k rows/point) and the shrinking
-    # frontier makes each round's work happen exactly once.
-    from .graph import _pin
-
-    finished = []
-    radius = 1
-    for _ in range(max_rounds):
-        ring = cells.cell_neighbors(F.col("_pcell"), r, ring=radius)
-        cand = (
-            remaining.withColumn("_rc", F.explode(ring))
-            .join(cen, F.col("_rc") == F.col("_ccell"))
-            .withColumn("d2", d2)
-        )
-        top = _pin(_topk(cand, k, id_col, center_id))
-        # a point is DONE iff it has k candidates and the k-th is provably
-        # global: d2_k <= (radius * s)^2
-        stats = top.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("_cnt"), F.max("d2").alias("_dk")
-        )
-        done_ids = stats.where(
-            (F.col("_cnt") >= k) & (F.col("_dk") <= F.lit((radius * s) ** 2))
-        ).select(id_col)
-        finished.append(
-            top.join(F.broadcast(done_ids), id_col).select(id_col, "rank", center_id, "d2")
-        )
-        remaining = _pin(remaining.join(done_ids, id_col, "left_anti"))
-        if remaining.isEmpty():
-            remaining = remaining.sparkSession.createDataFrame([], remaining.schema)
-            break
-        radius *= 2
-        if radius * s >= DOMAIN:
-            break
-
-    # brute-force remainder (rare: starved corners / k > total centers)
-    brute = remaining.crossJoin(cen).withColumn("d2", d2)
-    finished.append(_topk(brute, k, id_col, center_id).select(id_col, "rank", center_id, "d2"))
-
-    out = finished[0]
-    for f in finished[1:]:
-        out = out.unionByName(f)
-    return out
+    return ranked.join(F.broadcast(ids), "_pos").select(id_col, "rank", center_id, "d2")

@@ -371,7 +371,8 @@ def voronoi_assign(tiles: DataFrame, zones: DataFrame) -> DataFrame:
       groupBy(image_id) struct-min) shuffled |images| x |zones| rows
       on a unique key — 25.6M rows at sf0.1, the whole query's cost.
     - > 128 centroids: exact cell-routed nearest via knn_join(k=1) —
-      the ring-proof filter-refine join.  The scalar tier is O(n*c)
+      the ring-proof filter-refine kernel, one map-only Arrow pass
+      plus a broadcast id join.  The scalar tier is O(n*c)
       flops and past a few hundred centroids its projection outgrows
       what codegen inlines happily (1024 d2 columns + a 1024-arm CASE
       measured ~20 s on sf1's 1M x 1024; the routed tier does O(n*~9)

@@ -25,6 +25,7 @@ DEFAULT = [
     "zone_image_stats",   # flagship: broadcast PIP + fused pixel leg
     "value_at_coords",    # R12: dedup-first sampling, bytes join last
     "zonal_stats",        # E7: partial+final, pixel bytes never shuffle
+    "knn_zones",          # E6: one map-only Arrow pass + broadcast id join
     "focal_mosaic",       # halo exchange: strips shuffle, tiles co-partitioned
     "rasterize_burn",     # map-only burn, bytes pruned from scan
     "asof_clicks",        # one-exchange window as-of
@@ -69,7 +70,7 @@ DEFAULT = [
     "payload_integrity",  # A127: map-only flags, single-row agg, stack()
     "geodesic_assign",    # A128: map-only chord argmin, codegen
     "hilbert_range_scan", # A130: driver range plan + OR-of-BETWEENs prune
-    "voronoi_assign",     # A62 (round-3 replan): scalar least()+CASE argmin
+    "voronoi_assign",     # A62: scalar least()+CASE argmin; past 128 centroids the one-pass routed knn tier
     "zonal_majority",     # A50-family (round-3 replan): cached-decode hist partials
     "box_nms",            # A165: named-column greedy cascade, zero shuffle
     "segment_intersections",  # A172: grid bucket join + ccw refine

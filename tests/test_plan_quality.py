@@ -376,3 +376,29 @@ def test_dbscan_pair_join_no_nested_loop(spark):
     assert "cgx" in plan and "cgy" in plan
     # the full op still completes on the tiny sf (pair stage feeds CC)
     assert si.dbscan(pts).count() == 1000
+
+
+def test_knn_join_one_arrow_pass(spark, sf0001_dir):
+    """E6 answers in one map-only Arrow pass: no shuffle Exchange, one
+    BroadcastHashJoin (the id join on center position), and three jobs
+    per call: the centers collect, the id table's broadcast and the
+    result.  The ring-doubling driver loop it replaces ran 20."""
+    import re
+
+    from georaster_spark.operators.knn import knn_join
+
+    pts = spark.read.parquet(str(sf0001_dir / "points.parquet"))
+    zones = spark.read.parquet(str(sf0001_dir / "zones.parquet"))
+    sc = spark.sparkContext
+    group = "test_knn_join_one_arrow_pass"
+    sc.setJobGroup(group, group)
+    try:
+        q = knn_join(pts, zones, k=4)
+        assert len(q.collect()) == 4000
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = q._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert not re.search(r"(?<!Broadcast)Exchange", plan)
+    assert plan.count("BroadcastHashJoin") == 1
+    assert "MapInArrow" in plan
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
