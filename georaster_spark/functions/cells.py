@@ -154,17 +154,3 @@ def cell_neighbors(cell: Column, r: int, ring: int = 1) -> Column:
             )
         )
     )
-
-
-def morton_key(cell: Column, r: int) -> Column:
-    """Z-order interleave of (ix, iy) — a derived SORT key for
-    repartitionByRange spatial locality (SURVEY §4.3); never a correctness
-    surface.  Unrolled bit loop, still a single codegen'd expression."""
-    rest = cell - F.lit(r << RES_SHIFT)
-    ix = rest % F.lit(1 << r)
-    iy = F.floor(rest / F.lit(1 << r))
-    out = F.lit(0).cast("long")
-    for b in range(r):
-        out = out + F.shiftleft(F.shiftright(ix, b) % 2, 2 * b)
-        out = out + F.shiftleft(F.shiftright(iy, b) % 2, 2 * b + 1)
-    return out

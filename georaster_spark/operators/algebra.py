@@ -1,1817 +1,24 @@
-"""Raster map algebra beyond georaster's per-raster surface: change
-detection between two co-registered rasters; focal, terrain and
-hydrology kernels (focal statistics and median, proximity, slope and
-aspect, hillshade, curvature, TPI/TRI, openness, horizon shadow,
-viewshed, D8 flow direction, accumulation and length, watershed basins,
-accumulated cost distance); stretch, Otsu and crosstab classification
-with Sobel orientation; and the kernels of the rows INVENTORY.md lists
-as "unplaced" (chamfer and exact distance transforms, bilateral and
-Perona-Malik smoothing, adaptive and Schmitt thresholds, a homography
-warp, integer transforms, codec censuses, RLSA smearing, the structure
-tensor).  Reference analog: the NumPy a georaster user runs over loaded
-rasters' ``self.r`` arrays (`georaster/georaster.py ::
+"""Per-tile raster kernels of the rows INVENTORY.md lists as
+"unplaced": chamfer and exact Euclidean distance transforms, bilateral
+and Perona-Malik smoothing, adaptive and Schmitt thresholds, a
+homography warp, the H.264 integer transform, CDF 5/3, NTT, Hamming and
+PNG-filter censuses, RLSA smearing, block truncation coding and the
+structure tensor.  Reference analog: the NumPy a georaster user runs
+over loaded rasters' ``self.r`` arrays (`georaster/georaster.py ::
 SingleBandRaster.__init__` eager-load ≈L620-700 ⚠ UNVERIFIED, SURVEY
 §0), lifted to distributed passes over tile corpora.
 
-Scale shape: the change-detection pair join is a plain equi-join on the
-tile key, so at 100 TB both sides co-partition on that key and Catalyst
-picks SMJ/AQE; if both corpora are written as bucketed tables on the key
-(sources/bucketed.py) the join is SHUFFLE-FREE — neither side's pixel
-bytes ever move.  Every kernel is then ONE fused pandas UDF or
-``mapInPandas`` pass: pixels cross the JVM->Python Arrow boundary
-exactly once and only per-tile integer statistics come back, so nothing
-pixel-sized is materialized between stages.
+Scale shape: every kernel is ONE fused ``mapInPandas`` pass over the
+georegistered tiles, so pixels cross the JVM->Python Arrow boundary
+exactly once, only per-tile integer statistics come back, and nothing
+pixel-sized is shuffled or materialized between stages.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
-
-from .. import oracle
-
-_DIFF_SCHEMA = StructType(
-    [
-        StructField("n_changed", LongType()),
-        StructField("max_abs", LongType()),
-        StructField("sum_abs", LongType()),
-    ]
-)
-
-
-def diff_stats(
-    bytes_a: Column, bytes_b: Column, fmt_a: Column, fmt_b: Column
-) -> Column:
-    """Fused per-pair change statistics over two equal-shape payloads:
-    n_changed (pixels that differ), max_abs and sum_abs of the integer
-    difference.  Integer-exact (int64 arithmetic), so the DuckDB oracle
-    re-derives the same values from the pixel formulas.
-
-    Vectorized by byte-length group: equal-shaped pairs decode as two
-    (n, npix) blocks and reduce with three vectorized axis-1 ops — no
-    per-row Python loop.
-    """
-
-    @F.pandas_udf(_DIFF_SCHEMA)
-    def _diff(da: pd.Series, db: pd.Series, fa: pd.Series, fb: pd.Series) -> pd.DataFrame:
-        n = len(da)
-        n_changed = np.empty(n, dtype=np.int64)
-        max_abs = np.empty(n, dtype=np.int64)
-        sum_abs = np.empty(n, dtype=np.int64)
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        groups: dict[tuple, list[int]] = {}
-        for k in range(n):
-            if len(da.iat[k]) != len(db.iat[k]):
-                raise ValueError("diff_stats: payload shapes differ within a pair")
-            groups.setdefault((len(da.iat[k]), fa.iat[k], fb.iat[k]), []).append(k)
-        for (_, f_a, f_b), idx in groups.items():
-            a = np.frombuffer(b"".join(da.iat[k] for k in idx), dtype=dt[f_a]).reshape(len(idx), -1)
-            b = np.frombuffer(b"".join(db.iat[k] for k in idx), dtype=dt[f_b]).reshape(len(idx), -1)
-            d = np.abs(a.astype(np.int64) - b.astype(np.int64))
-            ii = np.asarray(idx)
-            n_changed[ii] = (d != 0).sum(axis=1)
-            max_abs[ii] = d.max(axis=1)
-            sum_abs[ii] = d.sum(axis=1)
-        return pd.DataFrame(
-            {"n_changed": n_changed, "max_abs": max_abs, "sum_abs": sum_abs}
-        )
-
-    return _diff(bytes_a, bytes_b, fmt_a, fmt_b)
-
-
-_FOCAL_SCHEMA = (
-    "image_id string, n_interior long, focal_checksum long, "
-    "grad_l1_sum long, grad_max long"
-)
-
-
-def focal_stats(tiles: DataFrame) -> DataFrame:
-    """Per-tile 3x3 focal map algebra (the neighborhood ops — focal sum /
-    gradient — a georaster user writes over ``self.r`` with scipy
-    ``uniform_filter``/``np.gradient``; upstream georaster is a
-    single-raster library, so focal semantics are per-tile with interior
-    pixels only — no cross-tile halo is defined for its jittered tiles).
-
-    One fused mapInPandas pass: pixels cross Arrow once per tile, all
-    levels of reduction happen in NumPy, output is 5 slim columns.
-    Integer-exact surfaces so the DuckDB oracle re-derives them from the
-    ramp formula:
-      n_interior     — (h-2)*(w-2)
-      focal_checksum — sum over interior of box3x3_sum(i,j) * ((i-1)*(w-2)+(j-1)+1)
-      grad_l1_sum    — sum over interior of |v[i,j+1]-v[i,j-1]| + |v[i+1,j]-v[i-1,j]|
-      grad_max       — max of that central-difference L1 gradient
-
-    Scale shape: map-only (no shuffle, no join); vectorized per
-    (byte-length, fmt-class) group as one (n, h, w) int64 block, so the
-    interior slicing + reductions are whole-block NumPy ops, never
-    per-pixel Python."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _focal(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "image_id": pdf["image_id"].to_numpy(dtype=object),
-                "n_interior": np.zeros(n, dtype=np.int64),
-                "focal_checksum": np.zeros(n, dtype=np.int64),
-                "grad_l1_sum": np.zeros(n, dtype=np.int64),
-                "grad_max": np.zeros(n, dtype=np.int64),
-            }
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue  # no interior; stats stay 0
-                blk = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                box = sum(
-                    blk[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    for di in (-1, 0, 1)
-                    for dj in (-1, 0, 1)
-                )
-                grad = np.abs(blk[:, 1:-1, 2:] - blk[:, 1:-1, :-2]) + np.abs(
-                    blk[:, 2:, 1:-1] - blk[:, :-2, 1:-1]
-                )
-                wt = np.arange(1, (h - 2) * (w - 2) + 1, dtype=np.int64).reshape(
-                    h - 2, w - 2
-                )
-                ii = np.asarray(idx)
-                out["n_interior"][ii] = (h - 2) * (w - 2)
-                out["focal_checksum"][ii] = (box * wt).sum(axis=(1, 2))
-                out["grad_l1_sum"][ii] = grad.sum(axis=(1, 2))
-                out["grad_max"][ii] = grad.max(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_focal, schema=_FOCAL_SCHEMA)
-
-
-_TERRAIN_SCHEMA = (
-    "image_id string, n_interior long, slope_sq_sum long, slope_sq_max long, "
-    "slope_checksum long, n_flat long, n_east long, n_north long, "
-    "n_west long, n_south long"
-)
-
-
-def terrain_stats(tiles: DataFrame) -> DataFrame:
-    """Per-tile terrain analysis over the interior pixels: Horn (1981)
-    3x3 slope/aspect — the DEM derivative a georaster user computes over
-    ``self.r`` with `gdaldem slope/aspect` or `np.gradient` (upstream
-    georaster exposes the raw array; `georaster/georaster.py ::
-    SingleBandRaster.r` ≈L600-780 ⚠ UNVERIFIED, SURVEY §0) — here as a
-    distributed map-only pass with integer-exact surfaces so the DuckDB
-    oracle re-derives every value from the ramp formula.
-
-    Horn kernel (integer, unnormalized — the 1/(8*cellsize) factor is a
-    constant scale that only matters for degrees conversion):
-      gx = (z[-1,+1] + 2 z[0,+1] + z[+1,+1]) - (z[-1,-1] + 2 z[0,-1] + z[+1,-1])
-      gy = (z[+1,-1] + 2 z[+1,0] + z[+1,+1]) - (z[-1,-1] + 2 z[-1,0] + z[-1,+1])
-
-    Surfaces (all int64-exact):
-      slope_sq_sum / slope_sq_max — sum/max of gx^2 + gy^2
-      slope_checksum — sum of (gx^2+gy^2) * ((i-1)*(w-2)+(j-1)+1)
-      n_flat  — gx = 0 AND gy = 0
-      n_east  — gx >  |gy| (steepest ascent due +x)
-      n_west  — -gx > |gy|
-      n_north — -gy > |gx| (row index grows southward)
-      n_south — gy >  |gx|
-    Strict comparisons make the compass classes exact and unambiguous;
-    exact diagonals fall in none (recoverable as interior - others).
-
-    Scale shape: map-only fused mapInPandas (no shuffle, no join);
-    vectorized per (w,h,fmt) group as one (n,h,w) int64 block."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _terrain(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = (
-            "n_interior", "slope_sq_sum", "slope_sq_max", "slope_checksum",
-            "n_flat", "n_east", "n_north", "n_west", "n_south",
-        )
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                gx = (
-                    z[:, :-2, 2:] + 2 * z[:, 1:-1, 2:] + z[:, 2:, 2:]
-                    - z[:, :-2, :-2] - 2 * z[:, 1:-1, :-2] - z[:, 2:, :-2]
-                )
-                gy = (
-                    z[:, 2:, :-2] + 2 * z[:, 2:, 1:-1] + z[:, 2:, 2:]
-                    - z[:, :-2, :-2] - 2 * z[:, :-2, 1:-1] - z[:, :-2, 2:]
-                )
-                s2 = gx * gx + gy * gy
-                ax, ay = np.abs(gx), np.abs(gy)
-                wt = np.arange(1, (h - 2) * (w - 2) + 1, dtype=np.int64).reshape(
-                    h - 2, w - 2
-                )
-                ii = np.asarray(idx)
-                out["n_interior"][ii] = (h - 2) * (w - 2)
-                out["slope_sq_sum"][ii] = s2.sum(axis=(1, 2))
-                out["slope_sq_max"][ii] = s2.max(axis=(1, 2))
-                out["slope_checksum"][ii] = (s2 * wt).sum(axis=(1, 2))
-                out["n_flat"][ii] = ((gx == 0) & (gy == 0)).sum(axis=(1, 2))
-                out["n_east"][ii] = (gx > ay).sum(axis=(1, 2))
-                out["n_west"][ii] = (-gx > ay).sum(axis=(1, 2))
-                out["n_north"][ii] = (-gy > ax).sum(axis=(1, 2))
-                out["n_south"][ii] = (gy > ax).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_terrain, schema=_TERRAIN_SCHEMA)
-
-
-_HILLSHADE_SCHEMA = (
-    "image_id string, n_interior long, shade_sum long, shade_min long, "
-    "shade_max long, n_shadow long, shade_checksum long"
-)
-
-
-def hillshade_stats(
-    tiles: DataFrame, lx: int = -3, ly: int = 4, lz: int = 12
-) -> DataFrame:
-    """Integer-exact hillshade (`gdaldem hillshade` analog, A37): the
-    Lambertian illumination NUMERATOR over interior pixels.
-
-    With the Horn gradients gx, gy of terrain_stats, the (unnormalized)
-    surface normal is n = (-gx, -gy, 8) (unit cell, z up; 8 = Horn kernel
-    weight sum).  For an integer light vector L = (lx, ly, lz) the shade
-    numerator is
-
-        shade = L . n = -lx*gx - ly*gy + 8*lz            (int64-exact)
-
-    True hillshade is shade / (|L| |n|); the positive scale |L||n| never
-    changes the SIGN, so lit-vs-shadow classification (n_shadow: shade
-    <= 0) matches the normalized value exactly, and the raw numerator
-    stats are bit-reproducible across engines — the same
-    integer-surface discipline as terrain_stats (which a float
-    cos/sin hillshade could not satisfy cross-engine).  Default L =
-    (-3, 4, 12) (|L| = 13): light from the ESE at ~67 deg elevation.
-
-    Scale shape: identical to terrain_stats — map-only fused
-    mapInPandas, vectorized per (w,h,fmt) group, no shuffle."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _shade(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = (
-            "n_interior", "shade_sum", "shade_min", "shade_max",
-            "n_shadow", "shade_checksum",
-        )
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                gx = (
-                    z[:, :-2, 2:] + 2 * z[:, 1:-1, 2:] + z[:, 2:, 2:]
-                    - z[:, :-2, :-2] - 2 * z[:, 1:-1, :-2] - z[:, 2:, :-2]
-                )
-                gy = (
-                    z[:, 2:, :-2] + 2 * z[:, 2:, 1:-1] + z[:, 2:, 2:]
-                    - z[:, :-2, :-2] - 2 * z[:, :-2, 1:-1] - z[:, :-2, 2:]
-                )
-                shade = -lx * gx - ly * gy + 8 * lz
-                wt = np.arange(1, (h - 2) * (w - 2) + 1, dtype=np.int64).reshape(
-                    h - 2, w - 2
-                )
-                ii = np.asarray(idx)
-                out["n_interior"][ii] = (h - 2) * (w - 2)
-                out["shade_sum"][ii] = shade.sum(axis=(1, 2))
-                out["shade_min"][ii] = shade.min(axis=(1, 2))
-                out["shade_max"][ii] = shade.max(axis=(1, 2))
-                out["n_shadow"][ii] = (shade <= 0).sum(axis=(1, 2))
-                out["shade_checksum"][ii] = (shade * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_shade, schema=_HILLSHADE_SCHEMA)
-
-
-def change_detect(a: DataFrame, b: DataFrame, key: str = "image_id") -> DataFrame:
-    """Join two co-registered tile corpora on `key` and emit per-tile
-    change statistics.  Columns taken from each side: bytes, fmt (plus
-    the key).  Output: key, n_changed, max_abs, sum_abs."""
-    lhs = a.select(key, F.col("bytes").alias("_ba"), F.col("fmt").alias("_fa"))
-    rhs = b.select(key, F.col("bytes").alias("_bb"), F.col("fmt").alias("_fb"))
-    joined = lhs.join(rhs, key)
-    d = diff_stats(F.col("_ba"), F.col("_bb"), F.col("_fa"), F.col("_fb"))
-    return joined.withColumn("_d", d).select(
-        key, "_d.n_changed", "_d.max_abs", "_d.sum_abs"
-    )
-
-
-_STRIP_SCHEMA = (
-    "tid long, own int, di int, dj int, w int, h int, fmt string, data binary"
-)
-_FOCAL_M_SCHEMA = (
-    "tile_id long, n_interior long, focal_checksum long, "
-    "grad_l1_sum long, grad_max long"
-)
-
-
-def focal_mosaic(mosaic: DataFrame, ntx: int, nty: int) -> DataFrame:
-    """3x3 focal map algebra over a TILED COMMON-GRID mosaic with
-    inter-tile HALO EXCHANGE — the distributed focal case per-tile ops
-    can't express: pixels on interior tile seams need their neighbors'
-    edge pixels, so each tile ships 1-px strips (edges + corners, ~2% of
-    its payload) to its 8 neighbors, and the focal window is evaluated
-    over the (h+2, w+2) halo-padded array.  Seam pixels come out
-    bit-identical to a single-array evaluation of the whole mosaic (the
-    DuckDB oracle computes exactly that, via separable 3-row + 3-col
-    window sums over the global pixel relation).
-
-    Input: warp.reproject output (tile_id = ty*ntx + tx, uniform w/h,
-    north-up common grid).  Mosaic-boundary pixels are excluded (global
-    interior only), matching the per-tile focal_stats interior rule
-    lifted to the mosaic level.
-
-    Scale shape: ONE shuffle of strip rows (keyed to the receiving tile)
-    plus the co-partitioning pass of the tiles themselves — and the tile
-    side arrives already hash-partitioned on tile_id from the warp's
-    groupBy, so in the composed reproject->focal plan only the strips
-    move.  Stats: same integer-exact surfaces as focal_stats, with
-    GLOBAL pixel weights (gi * W_mosaic + gj + 1)."""
-    slim = mosaic.select("tile_id", "bytes", "w", "h", "fmt")
-
-    def _emit(batches):
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("tid", "own", "di", "dj", "w", "h", "fmt", "data")}
-
-            def put(tid, own, di, dj, w, h, fmt, data):
-                out["tid"].append(int(tid)); out["own"].append(own)
-                out["di"].append(di); out["dj"].append(dj)
-                out["w"].append(w); out["h"].append(h)
-                out["fmt"].append(fmt); out["data"].append(data)
-
-            for t in pdf.itertuples(index=False):
-                w, h = int(t.w), int(t.h)
-                tx, ty = int(t.tile_id) % ntx, int(t.tile_id) // ntx
-                put(t.tile_id, 1, 0, 0, w, h, t.fmt, t.bytes)
-                arr = None
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if (dx, dy) == (0, 0):
-                            continue
-                        nx_, ny_ = tx + dx, ty + dy
-                        if not (0 <= nx_ < ntx and 0 <= ny_ < nty):
-                            continue
-                        if arr is None:
-                            arr = oracle.decode_pixels(t.bytes, w, h, t.fmt)
-                        rs = (slice(h - 1, h) if dy == 1
-                              else slice(0, 1) if dy == -1 else slice(None))
-                        cs = (slice(w - 1, w) if dx == 1
-                              else slice(0, 1) if dx == -1 else slice(None))
-                        strip = np.ascontiguousarray(arr[rs, cs])
-                        put(ny_ * ntx + nx_, 0, dy, dx,
-                            strip.shape[1], strip.shape[0], t.fmt,
-                            strip.tobytes())
-            yield pd.DataFrame(out)
-
-    parts = slim.mapInPandas(_emit, schema=_STRIP_SCHEMA)
-
-    def _assemble(key, pdf: pd.DataFrame):
-        tid = int(key[0])
-        own = pdf[pdf["own"] == 1]
-        if len(own) != 1:
-            raise ValueError(f"focal_mosaic: tile {tid} has {len(own)} payload rows")
-        o = own.iloc[0]
-        w, h = int(o["w"]), int(o["h"])
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}[o["fmt"]]
-        arr = np.frombuffer(o["data"], dtype=dt).reshape(h, w)
-        pad = np.zeros((h + 2, w + 2), dtype=np.int64)
-        pad[1 : h + 1, 1 : w + 1] = arr
-        for s in pdf[pdf["own"] == 0].itertuples(index=False):
-            sd = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}[s.fmt]
-            sa = np.frombuffer(s.data, dtype=sd).reshape(int(s.h), int(s.w))
-            # sender direction (di=dy, dj=dx); it sits on our (-dy,-dx) side
-            rs = (slice(0, 1) if s.di == 1 else slice(h + 1, h + 2)
-                  if s.di == -1 else slice(1, h + 1))
-            cs = (slice(0, 1) if s.dj == 1 else slice(w + 1, w + 2)
-                  if s.dj == -1 else slice(1, w + 1))
-            pad[rs, cs] = sa
-        box = sum(
-            pad[1 + di : h + 1 + di, 1 + dj : w + 1 + dj]
-            for di in (-1, 0, 1)
-            for dj in (-1, 0, 1)
-        )
-        grad = np.abs(pad[1 : h + 1, 2 : w + 2] - pad[1 : h + 1, 0:w]) + np.abs(
-            pad[2 : h + 2, 1 : w + 1] - pad[0:h, 1 : w + 1]
-        )
-        # global-interior mask + global weights
-        tx, ty = tid % ntx, tid // ntx
-        GW, GH = w * ntx, h * nty
-        gi = ty * h + np.arange(h, dtype=np.int64)[:, None]
-        gj = tx * w + np.arange(w, dtype=np.int64)[None, :]
-        interior = (gi >= 1) & (gi <= GH - 2) & (gj >= 1) & (gj <= GW - 2)
-        wt = gi * GW + gj + 1
-        n_int = int(interior.sum())
-        return pd.DataFrame(
-            {
-                "tile_id": [tid],
-                "n_interior": [n_int],
-                "focal_checksum": [int((box * wt * interior).sum())],
-                "grad_l1_sum": [int((grad * interior).sum())],
-                "grad_max": [int(grad[interior].max()) if n_int else 0],
-            }
-        )
-
-    return parts.groupBy("tid").applyInPandas(_assemble, schema=_FOCAL_M_SCHEMA)
-
-
-_D8_SCHEMA = (
-    "image_id string, n_interior long, n_flat long, "
-    + ", ".join(f"n_d{c} long" for c in (1, 2, 4, 8, 16, 32, 64, 128))
-    + ", d8_checksum long"
-)
-
-# ESRI D8 codes in PRIORITY order (ties resolve to the first):
-# E=1, SE=2, S=4, SW=8, W=16, NW=32, N=64, NE=128
-_D8_DIRS = (
-    (1, 0, 1, 2), (2, 1, 1, 1), (4, 1, 0, 2), (8, 1, -1, 1),
-    (16, 0, -1, 2), (32, -1, -1, 1), (64, -1, 0, 2), (128, -1, 1, 1),
-)  # (code, di, dj, score_mult): cardinal drops score 2*drop², diagonal drop²
-
-
-def flow_direction_stats(tiles: DataFrame) -> DataFrame:
-    """D8 flow direction (the ArcGIS/GRASS hydrology primitive) on an
-    integer-exact surface: each interior pixel flows toward the
-    steepest-descent neighbor.  The 1/√2 diagonal distance is folded
-    into the INTEGER score ``s = mult·drop²`` (mult 2 for cardinals, 1
-    for diagonals, drops ≤ 0 excluded): for positive drops,
-    drop_c/1 > drop_d/√2  ⇔  2·drop_c² > drop_d², so the integer argmax
-    equals the float steepest-descent rule exactly.  Ties resolve in
-    fixed ESRI code order (E, SE, S, SW, W, NW, N, NE); no positive
-    drop ⇒ flat/pit (code 0).
-
-    Emits per-tile direction counts and the position-weighted code
-    checksum.  Map-only fused Arrow pass, zero shuffle."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-    count_cols = [f"n_d{c}" for c, *_ in _D8_DIRS]
-
-    def _d8(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ["n_interior", "n_flat", *count_cols, "d8_checksum"]:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                c0 = z[:, 1:-1, 1:-1]
-                scores = []
-                for _, di, dj, mult in _D8_DIRS:
-                    nb = z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    drop = c0 - nb
-                    scores.append(np.where(drop > 0, mult * drop * drop, -1))
-                stack = np.stack(scores)  # priority order: argmax -> first max
-                best = stack.max(axis=0)
-                pick = stack.argmax(axis=0)
-                codes = np.array([c for c, *_ in _D8_DIRS], dtype=np.int64)
-                code = np.where(best > 0, codes[pick], 0)
-                wt = np.arange(1, code[0].size + 1, dtype=np.int64).reshape(
-                    h - 2, w - 2
-                )
-                ii = np.asarray(idx)
-                out["n_interior"][ii] = (h - 2) * (w - 2)
-                out["n_flat"][ii] = (code == 0).sum(axis=(1, 2))
-                for ci, (c, *_rest) in enumerate(_D8_DIRS):
-                    out[f"n_d{c}"][ii] = (code == c).sum(axis=(1, 2))
-                out["d8_checksum"][ii] = (code * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_d8, schema=_D8_SCHEMA)
-
-
-_PROX_SCHEMA = (
-    "tile_id long, n_feat long, n_reached long, sum_d2 long, d2_checksum long"
-)
-
-
-def proximity_mosaic(
-    mosaic: DataFrame, ntx: int, nty: int, radius: int = 4, threshold: int = 250
-) -> DataFrame:
-    """Windowed proximity raster (``gdal_proximity.py -maxdist`` analog,
-    GDAL's distance-to-feature transform; reference analog: the
-    ``scipy.ndimage.distance_transform_edt`` call a georaster user runs
-    on a loaded ``self.r`` array — SURVEY §0 ⚠, nothing on disk) over a
-    TILED COMMON-GRID mosaic with an R-pixel HALO EXCHANGE.
-
-    Per pixel: the minimum SQUARED euclidean distance to any feature
-    pixel (value >= threshold) within the (2R+1)^2 Chebyshev window,
-    else the sentinel ``2R^2+1`` (strictly greater than any in-window
-    squared distance).  Squared distances keep every compared value an
-    exact integer — the same cross-engine discipline as focal_mosaic.
-
-    Distribution: distance search crosses tile seams, so each tile ships
-    R-px strips (edges + R x R corners) to its 8 neighbors — the focal
-    halo generalized from 1 to R pixels — and the transform is evaluated
-    on the (h+2R, w+2R) padded array as (2R+1)^2 vectorized shifted-mask
-    min passes.  Missing neighbors (mosaic edge or sourceless grid
-    tiles) pad as 0 = non-feature, matching the oracle's coalesce(v,0).
-
-    Scale shape: ONE shuffle of strip rows (~2R/h of the payload) keyed
-    to the receiving tile; the tile side arrives hash-partitioned on
-    tile_id from the warp's groupBy, so composed reproject->proximity
-    moves only strips.  Emits per tile: feature count, reached count,
-    sum of reached d^2, and the global-position-weighted d^2 checksum
-    pinning every pixel's value."""
-    if threshold < 1:
-        raise ValueError("proximity_mosaic: threshold must be >= 1 (padding is 0)")
-    R = int(radius)
-    sent = 2 * R * R + 1
-    slim = mosaic.select("tile_id", "bytes", "w", "h", "fmt")
-
-    def _emit(batches):
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("tid", "own", "di", "dj", "w", "h", "fmt", "data")}
-
-            def put(tid, own, di, dj, w, h, fmt, data):
-                out["tid"].append(int(tid)); out["own"].append(own)
-                out["di"].append(di); out["dj"].append(dj)
-                out["w"].append(w); out["h"].append(h)
-                out["fmt"].append(fmt); out["data"].append(data)
-
-            for t in pdf.itertuples(index=False):
-                w, h = int(t.w), int(t.h)
-                if R > min(w, h):
-                    raise ValueError("proximity_mosaic: radius exceeds tile size")
-                tx, ty = int(t.tile_id) % ntx, int(t.tile_id) // ntx
-                put(t.tile_id, 1, 0, 0, w, h, t.fmt, t.bytes)
-                arr = None
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if (dx, dy) == (0, 0):
-                            continue
-                        nx_, ny_ = tx + dx, ty + dy
-                        if not (0 <= nx_ < ntx and 0 <= ny_ < nty):
-                            continue
-                        if arr is None:
-                            arr = oracle.decode_pixels(t.bytes, w, h, t.fmt)
-                        rs = (slice(h - R, h) if dy == 1
-                              else slice(0, R) if dy == -1 else slice(None))
-                        cs = (slice(w - R, w) if dx == 1
-                              else slice(0, R) if dx == -1 else slice(None))
-                        strip = np.ascontiguousarray(arr[rs, cs])
-                        put(ny_ * ntx + nx_, 0, dy, dx,
-                            strip.shape[1], strip.shape[0], t.fmt,
-                            strip.tobytes())
-            yield pd.DataFrame(out)
-
-    parts = slim.mapInPandas(_emit, schema=_STRIP_SCHEMA)
-
-    def _assemble(key, pdf: pd.DataFrame):
-        tid = int(key[0])
-        own = pdf[pdf["own"] == 1]
-        if len(own) != 1:
-            raise ValueError(
-                f"proximity_mosaic: tile {tid} has {len(own)} payload rows")
-        o = own.iloc[0]
-        w, h = int(o["w"]), int(o["h"])
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}[o["fmt"]]
-        arr = np.frombuffer(o["data"], dtype=dt).reshape(h, w)
-        pad = np.zeros((h + 2 * R, w + 2 * R), dtype=np.int64)
-        pad[R : h + R, R : w + R] = arr
-        for s in pdf[pdf["own"] == 0].itertuples(index=False):
-            sd = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}[s.fmt]
-            sa = np.frombuffer(s.data, dtype=sd).reshape(int(s.h), int(s.w))
-            # sender direction (di=dy, dj=dx); it sits on our (-dy,-dx) side
-            rs = (slice(0, R) if s.di == 1 else slice(h + R, h + 2 * R)
-                  if s.di == -1 else slice(R, h + R))
-            cs = (slice(0, R) if s.dj == 1 else slice(w + R, w + 2 * R)
-                  if s.dj == -1 else slice(R, w + R))
-            pad[rs, cs] = sa
-        feat = pad >= threshold
-        d2 = np.full((h, w), sent, dtype=np.int64)
-        for di in range(-R, R + 1):
-            for dj in range(-R, R + 1):
-                dd = di * di + dj * dj
-                m = feat[R + di : R + di + h, R + dj : R + dj + w]
-                np.minimum(d2, np.where(m, dd, sent), out=d2)
-        tx, ty = tid % ntx, tid // ntx
-        GW = w * ntx
-        gi = ty * h + np.arange(h, dtype=np.int64)[:, None]
-        gj = tx * w + np.arange(w, dtype=np.int64)[None, :]
-        wt = gi * GW + gj + 1
-        reached = d2 < sent
-        return pd.DataFrame(
-            {
-                "tile_id": [tid],
-                "n_feat": [int(feat[R : h + R, R : w + R].sum())],
-                "n_reached": [int(reached.sum())],
-                "sum_d2": [int(d2[reached].sum())],
-                "d2_checksum": [int((d2 * wt).sum())],
-            }
-        )
-
-    return parts.groupBy("tid").applyInPandas(_assemble, schema=_PROX_SCHEMA)
-
-
-_FLOW_ACC_SCHEMA = (
-    "image_id string, n_interior long, n_sources long, n_outlets long, "
-    "total_acc long, max_acc long, acc_checksum long"
-)
-
-
-def flow_accumulation_stats(tiles: DataFrame, k: int = 4) -> DataFrame:
-    """Bounded D8 flow accumulation (ArcGIS Flow Accumulation / GRASS
-    r.watershed analog; reference analog: the hydrology post-processing a
-    georaster user runs on a loaded DEM array — SURVEY §0 ⚠, nothing on
-    disk): for each interior pixel, the number of interior pixels whose
-    D8 steepest-descent path reaches it in <= k steps (self included, so
-    acc >= 1).  k bounds the transitive closure, making the operator a
-    fixed-depth iteration with an exactly SQL-expressible oracle
-    (recursive CTE with a depth counter) — the unbounded fixpoint is the
-    same loop run to quiescence.
-
-    D8 codes come from the identical integer steepest-descent rule as
-    flow_direction_stats (2·drop² cardinal vs drop² diagonal, ESRI tie
-    order); flow into the 1-px boundary ring leaves the tile (the pixel
-    is an outlet), flat/pit pixels (code 0) also terminate paths.
-
-    Emits per tile: interior count, source count (acc == 1: no upstream
-    inflow within k), outlet count, total/max accumulation, and the
-    position-weighted accumulation checksum pinning every pixel.
-
-    Distribution: map-only fused Arrow pass — the k-step scatter-add
-    iteration runs batched across ALL tiles of a (w,h,fmt) group on one
-    flat index (np.add.at), zero shuffle, no per-pixel Python."""
-    if k < 1:
-        raise ValueError("flow_accumulation_stats: k must be >= 1")
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _acc(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "n_sources", "n_outlets",
-                      "total_acc", "max_acc", "acc_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                c0 = z[:, 1:-1, 1:-1]
-                scores = []
-                for _, di, dj, mult in _D8_DIRS:
-                    nb = z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    drop = c0 - nb
-                    scores.append(np.where(drop > 0, mult * drop * drop, -1))
-                stack = np.stack(scores)
-                best = stack.max(axis=0)
-                pick = stack.argmax(axis=0)
-                # interior (0-based) coordinates + D8 step per pixel
-                dis = np.array([d[1] for d in _D8_DIRS], dtype=np.int64)
-                djs = np.array([d[2] for d in _D8_DIRS], dtype=np.int64)
-                ii = np.broadcast_to(
-                    np.arange(ih, dtype=np.int64)[None, :, None], (b, ih, iw))
-                jj = np.broadcast_to(
-                    np.arange(iw, dtype=np.int64)[None, None, :], (b, ih, iw))
-                ti = ii + dis[pick]
-                tj = jj + djs[pick]
-                flows = best > 0
-                in_bounds = (ti >= 0) & (ti < ih) & (tj >= 0) & (tj < iw)
-                valid = flows & in_bounds          # edge stays inside interior
-                outlet = flows & ~in_bounds        # drains into the boundary ring
-                bb = np.broadcast_to(
-                    np.arange(b, dtype=np.int64)[:, None, None], (b, ih, iw))
-                src = (bb * ih * iw + ii * iw + jj)[valid]
-                tgt = (bb * ih * iw + ti * iw + tj)[valid]
-                acc = np.ones(b * ih * iw, dtype=np.int64)
-                for _ in range(k):
-                    contrib = np.zeros(b * ih * iw, dtype=np.int64)
-                    np.add.at(contrib, tgt, acc[src])
-                    acc = 1 + contrib
-                acc3 = acc.reshape(b, ih, iw)
-                wt = ((ii * iw) + jj + 1)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["n_sources"][rows] = (acc3 == 1).sum(axis=(1, 2))
-                out["n_outlets"][rows] = outlet.sum(axis=(1, 2))
-                out["total_acc"][rows] = acc3.sum(axis=(1, 2))
-                out["max_acc"][rows] = acc3.max(axis=(1, 2))
-                out["acc_checksum"][rows] = (acc3 * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_acc, schema=_FLOW_ACC_SCHEMA)
-
-
-_TPI_SCHEMA = (
-    "image_id string, n_interior long, n_ridge long, n_valley long, "
-    "sum_tpi long, sum_tri long, sum_rough long, tpi_checksum long"
-)
-
-_N8 = ((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1))
-
-
-def tpi_terrain_stats(tiles: DataFrame) -> DataFrame:
-    """TPI / TRI / roughness terrain metrics (gdaldem TPI/TRI/roughness
-    analogs; reference analog: the terrain derivatives a georaster user
-    computes from a loaded DEM — SURVEY §0 ⚠, nothing on disk), on the
-    integer-exact surface:
-
-    - tpi_num = 8·center − Σ(8 neighbours)   (8× the usual TPI — keeps
-      the mean-of-neighbours comparison in exact integers)
-    - tri     = Σ|center − neighbour|        (8× Wilson TRI mean)
-    - rough   = max(3×3) − min(3×3)          (gdaldem roughness exactly)
-
-    Per tile: interior count, ridge/valley counts (tpi_num >/< 0),
-    Σtpi_num, Σtri, Σrough, and the position-weighted tpi checksum.
-    Map-only fused Arrow pass, zero shuffle, batched across each
-    (w,h,fmt) group."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _tpi(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "n_ridge", "n_valley", "sum_tpi",
-                      "sum_tri", "sum_rough", "tpi_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                c0 = z[:, 1:-1, 1:-1]
-                tpi = 8 * c0
-                tri = np.zeros_like(c0)
-                mx = c0.copy()
-                mn = c0.copy()
-                for di, dj in _N8:
-                    nb = z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    tpi -= nb
-                    tri += np.abs(c0 - nb)
-                    np.maximum(mx, nb, out=mx)
-                    np.minimum(mn, nb, out=mn)
-                rough = mx - mn
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["n_ridge"][rows] = (tpi > 0).sum(axis=(1, 2))
-                out["n_valley"][rows] = (tpi < 0).sum(axis=(1, 2))
-                out["sum_tpi"][rows] = tpi.sum(axis=(1, 2))
-                out["sum_tri"][rows] = tri.sum(axis=(1, 2))
-                out["sum_rough"][rows] = rough.sum(axis=(1, 2))
-                out["tpi_checksum"][rows] = (tpi * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_tpi, schema=_TPI_SCHEMA)
-
-
-_XTAB_SCHEMA = "pair_id long, class_a int, class_b int, n_px long"
-
-
-def crosstab_stats(a: DataFrame, b: DataFrame, key: str, bins: int = 4) -> DataFrame:
-    """Zonal crosstab / tabulate-area between two co-registered rasters
-    (ArcGIS TabulateArea / GRASS r.stats -c two-map analog; reference
-    analog: the `np.histogram2d` a georaster user runs over two loaded
-    ``self.r`` arrays — SURVEY §0 ⚠, nothing on disk): per pair, the
-    categorical contingency table n_px[class_a][class_b] where each
-    pixel's class is v // (256/bins).
-
-    Same join shape as change_detect (equi-join on the pair key —
-    shuffle-free when both corpora are bucketed on it); then ONE fused
-    Arrow pass per pair computes the whole (bins x bins) table as a
-    single vectorized offset-bincount (bincount of bins*ca+cb with
-    per-row offsets), never a Python loop over pixels or classes.
-    Emits one row per non-empty (pair, class_a, class_b) cell."""
-    if not 1 <= bins <= 256:
-        raise ValueError("crosstab_stats: bins must be in [1, 256]")
-    width = 256 // bins
-    j = a.select(key, F.col("bytes").alias("ba"), F.col("fmt").alias("fa")).join(
-        b.select(key, F.col("bytes").alias("bb"), F.col("fmt").alias("fb")), key
-    )
-
-    def _xtab(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        for pdf in batches:
-            n = len(pdf)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                if len(pdf["ba"].iat[k]) // (2 if pdf["fa"].iat[k] == "raw16" else 1) != len(
-                    pdf["bb"].iat[k]
-                ) // (2 if pdf["fb"].iat[k] == "raw16" else 1):
-                    raise ValueError("crosstab_stats: pixel counts differ within a pair")
-                groups.setdefault(
-                    (len(pdf["ba"].iat[k]), pdf["fa"].iat[k], pdf["fb"].iat[k]), []
-                ).append(k)
-            keys_out, ca_out, cb_out, n_out = [], [], [], []
-            for (_, f_a, f_b), idx in groups.items():
-                m = len(idx)
-                va = np.frombuffer(
-                    b"".join(pdf["ba"].iat[k] for k in idx), dtype=dt[f_a]
-                ).reshape(m, -1).astype(np.int64)
-                vb = np.frombuffer(
-                    b"".join(pdf["bb"].iat[k] for k in idx), dtype=dt[f_b]
-                ).reshape(m, -1).astype(np.int64)
-                cell = (va // width) * bins + (vb // width)
-                # one flat bincount across the whole group: row r's cells
-                # live at offset r*bins*bins
-                flat = (
-                    np.arange(m, dtype=np.int64)[:, None] * (bins * bins) + cell
-                ).ravel()
-                counts = np.bincount(flat, minlength=m * bins * bins).reshape(
-                    m, bins, bins
-                )
-                rr, aa, bb2 = np.nonzero(counts)
-                keys_out.append(pdf[key].to_numpy()[np.asarray(idx)[rr]])
-                ca_out.append(aa)
-                cb_out.append(bb2)
-                n_out.append(counts[rr, aa, bb2])
-            if keys_out:
-                yield pd.DataFrame(
-                    {
-                        "pair_id": np.concatenate(keys_out).astype(np.int64),
-                        "class_a": np.concatenate(ca_out).astype(np.int32),
-                        "class_b": np.concatenate(cb_out).astype(np.int32),
-                        "n_px": np.concatenate(n_out).astype(np.int64),
-                    }
-                )
-
-    return j.mapInPandas(_xtab, schema=_XTAB_SCHEMA)
-
-
-_SOBEL_SCHEMA = (
-    "image_id string, n_interior long, n_flat long, "
-    "n_o0 long, n_o1 long, n_o2 long, n_o3 long, n_o4 long, "
-    "n_o5 long, n_o6 long, n_o7 long, grad_l1_sum long, orient_checksum long"
-)
-
-
-def sobel_orientation_stats(tiles: DataFrame) -> DataFrame:
-    """Sobel gradient-orientation census (HOG-lite feature extraction —
-    the per-image edge/orientation descriptor a training-data curation
-    pipeline computes before clustering; reference analog: the
-    `scipy.ndimage.sobel` a georaster user runs over ``self.r`` —
-    SURVEY §0 ⚠, nothing on disk).
-
-    Integer Sobel gx/gy over the interior, then each pixel is binned
-    into one of 8 exact 45-degree octants of atan2(gy, gx) using only
-    integer sign/magnitude comparisons (no float angles anywhere):
-    normalize to the upper half-plane (flip both signs, +4) so
-    theta in [0,180), then sector 0..3 by {gx>0 & gy<gx; gx>0;
-    gy>-gx; else}.  gx==gy==0 is 'flat' and joins no octant.
-
-    Per tile: interior count, flat count, 8 octant counts, L1 gradient
-    energy sum, and the position-weighted (octant+1) checksum pinning
-    every pixel's bin.  Map-only fused Arrow pass, zero shuffle,
-    batched per (w,h,fmt) group."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _sobel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            cols = ["n_interior", "n_flat"] + [f"n_o{o}" for o in range(8)] + [
-                "grad_l1_sum", "orient_checksum"]
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-
-                def sh(di, dj):
-                    return z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-
-                gx = (sh(-1, 1) + 2 * sh(0, 1) + sh(1, 1)) - (
-                    sh(-1, -1) + 2 * sh(0, -1) + sh(1, -1)
-                )
-                gy = (sh(1, -1) + 2 * sh(1, 0) + sh(1, 1)) - (
-                    sh(-1, -1) + 2 * sh(-1, 0) + sh(-1, 1)
-                )
-                flat = (gx == 0) & (gy == 0)
-                flip = (gy < 0) | ((gy == 0) & (gx < 0))
-                nx = np.where(flip, -gx, gx)
-                ny = np.where(flip, -gy, gy)
-                sector = np.where(
-                    (nx > 0) & (ny < nx), 0,
-                    np.where(nx > 0, 1, np.where(ny > -nx, 2, 3)),
-                )
-                octant = sector + np.where(flip, 4, 0)
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["n_flat"][rows] = flat.sum(axis=(1, 2))
-                for o in range(8):
-                    out[f"n_o{o}"][rows] = (~flat & (octant == o)).sum(axis=(1, 2))
-                out["grad_l1_sum"][rows] = (np.abs(gx) + np.abs(gy)).sum(axis=(1, 2))
-                out["orient_checksum"][rows] = (
-                    np.where(flat, 0, octant + 1) * wt
-                ).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_sobel, schema=_SOBEL_SCHEMA)
-
-
-_OTSU_SCHEMA = (
-    "image_id string, otsu_t int, n_below long, n_above long, "
-    "sum_below long, sum_above long"
-)
-
-
-def otsu_stats(tiles: DataFrame) -> DataFrame:
-    """Per-tile Otsu threshold (the classic global-binarization step a
-    georaster user runs on ``self.r`` via skimage ``threshold_otsu``
-    before polygonizing — SURVEY §0 ⚠, nothing on disk), made
-    bit-for-bit checkable across engines.
-
-    Otsu maximizes the between-class variance
-        f(t) = (sT*w0(t) - N*s0(t))^2 / (w0(t)*(N - w0(t)))
-    over thresholds t (class "below" = v <= t).  All quantities are
-    integers except the quotient, so instead of float math each t gets
-    the EXACT order-preserving integer key
-
-        key(t) = floor(a(t)^2 * K / b(t)),   K = (N^2 // 4)^2
-
-    where a = sT*w0 - N*s0 and b = w0*(N-w0) <= N^2/4.  Distinct
-    fractions differ by >= 1/(b1*b2) >= 1/K, so their keys differ —
-    the argmax (first-max tie-break => smallest t) is identical in
-    arbitrary-precision Python ints here and HUGEINT in the DuckDB
-    oracle.  a^2 exceeds int64 for 64x64 tiles, hence object-dtype
-    (Python-int) NumPy arithmetic over the tiny (tiles x 256) grid —
-    never over pixels.
-
-    Scale shape: map-only fused Arrow pass (pixels cross once, output is
-    6 slim columns); the 256-bin histogram per tile is one vectorized
-    offset-bincount per (w,h,fmt) group.  raw16 inputs are right-shifted
-    to 8 bits first (the standard 256-bin Otsu reduction)."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _otsu(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "image_id": pdf["image_id"].to_numpy(dtype=object),
-                "otsu_t": np.full(n, -1, dtype=np.int32),
-            }
-            for c in ("n_below", "n_above", "sum_below", "sum_above"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                b = len(idx)
-                N = w * h
-                z = np.frombuffer(
-                    b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                ).reshape(b, N)
-                if fmt == "raw16":
-                    z = z >> 8
-                z = z.astype(np.int64)
-                # (b, 256) histogram as ONE flat bincount with row offsets
-                flat = np.arange(b, dtype=np.int64)[:, None] * 256 + z
-                cnt = np.bincount(flat.ravel(), minlength=b * 256).reshape(b, 256)
-                w0 = np.cumsum(cnt, axis=1)                      # (b, 256)
-                s0 = np.cumsum(cnt * np.arange(256), axis=1)
-                sT = s0[:, -1:]
-                a = sT * w0 - N * s0                             # |a| <= 255*N^2
-                bden = w0 * (N - w0)
-                K = (N * N // 4) ** 2
-                # exact keys on the valid range t in [0, 254], b(t) > 0
-                A = a[:, :255].astype(object)
-                B = bden[:, :255].astype(object)
-                valid = bden[:, :255] > 0
-                keys = np.where(valid, A * A * K, -1)
-                keys = np.where(valid, keys // np.where(valid, B, 1), -1)
-                best = np.argmax(keys, axis=1)                   # first max = smallest t
-                rows = np.asarray(idx)
-                any_valid = valid.any(axis=1)
-                bi = np.arange(b)
-                out["otsu_t"][rows] = np.where(any_valid, best, -1).astype(np.int32)
-                out["n_below"][rows] = np.where(any_valid, w0[bi, best], 0)
-                out["sum_below"][rows] = np.where(any_valid, s0[bi, best], 0)
-                out["n_above"][rows] = np.where(any_valid, N - w0[bi, best], 0)
-                out["sum_above"][rows] = np.where(
-                    any_valid, sT[:, 0] - s0[bi, best], 0
-                )
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_otsu, schema=_OTSU_SCHEMA)
-
-
-_MEDIAN_SCHEMA = (
-    "image_id string, n_interior long, sum_med long, n_changed long, "
-    "med_checksum long"
-)
-
-
-def focal_median_stats(tiles: DataFrame) -> DataFrame:
-    """3x3 focal-median census (salt-and-pepper denoise — scipy
-    ``median_filter`` over a loaded ``self.r``; SURVEY §0 ⚠).  The
-    median of 9 integers is the 5th order statistic — an exact integer,
-    so the DuckDB oracle re-derives it as list_sort([...])[5] over the
-    ramp formula.  Per tile: interior count, sum of medians, count of
-    pixels the filter changes, position-weighted median checksum.
-
-    Scale shape: map-only fused Arrow pass; the 9-element sort runs as
-    ONE np.sort over a (tiles, 9, ih, iw) block per (w,h,fmt) group —
-    no per-pixel Python."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _med(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "sum_med", "n_changed", "med_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                stack = np.stack(
-                    [
-                        z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                        for di in (-1, 0, 1)
-                        for dj in (-1, 0, 1)
-                    ],
-                    axis=1,
-                )  # (b, 9, ih, iw)
-                stack.sort(axis=1)
-                med = stack[:, 4]
-                c0 = z[:, 1:-1, 1:-1]
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["sum_med"][rows] = med.sum(axis=(1, 2))
-                out["n_changed"][rows] = (med != c0).sum(axis=(1, 2))
-                out["med_checksum"][rows] = (med * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_med, schema=_MEDIAN_SCHEMA)
-
-
-_OPEN_SCHEMA = (
-    "image_id string, dir int, horizon_k int, horizon_num long, "
-    "n_rising long, ray_checksum long"
-)
-
-
-def openness_stats(tiles: DataFrame) -> DataFrame:
-    """8-ray topographic-openness / horizon-angle census (Yokoyama et
-    al. 2002 positive openness; gdaldem has no direct analog — a
-    georaster user derives it from a loaded DEM.  SURVEY §0 ⚠).
-
-    From the tile center z0 = z[h//2, w//2], along each of the 8
-    principal directions, steps k = 1..L (L = distance to the nearest
-    edge): the horizon is the step maximizing the elevation angle
-    (z_k - z0)/k.  Along a principal ray the per-step ground distance is
-    k times a constant (1 or sqrt(2)) which CANCELS inside the ray, so
-    the argmax is a pure rational compare — made an exact int64 sort key
-    by multiplying through the common denominator D = lcm(1..L):
-
-        key(k) = (z_k - z0) * (D // k)          |key| <= 255 * D < 2^63
-
-    First-max tie-break = smallest k, identical in NumPy and the DuckDB
-    oracle's row_number ordering.  No division of signed ints anywhere
-    (DuckDB `//` truncates toward zero, Python floors — keys dodge the
-    mismatch entirely).
-
-    Output: one row per (tile, dir) with the horizon step, its rise
-    z_hor - z0, the count of rising steps, and the rise-weighted ray
-    checksum.  Map-only fused Arrow pass."""
-    import math
-
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _open(batches):
-        for pdf in batches:
-            groups: dict[tuple, list[int]] = {}
-            for r in range(len(pdf)):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            cols: dict[str, list] = {c: [] for c in (
-                "image_id", "dir", "horizon_k", "horizon_num", "n_rising",
-                "ray_checksum")}
-            for (w, h, fmt), idx in groups.items():
-                ci, cj = h // 2, w // 2
-                L = min(ci, cj, h - 1 - ci, w - 1 - cj)
-                if L < 1:
-                    continue
-                D = math.lcm(*range(1, L + 1))
-                m = np.array([D // k for k in range(1, L + 1)], dtype=np.int64)
-                ks = np.arange(1, L + 1, dtype=np.int64)
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                z0 = z[:, ci, cj][:, None]
-                ids = pdf["image_id"].to_numpy(dtype=object)[np.asarray(idx)]
-                for d, (di, dj) in enumerate(_N8):
-                    p = (
-                        z[:, ci + ks * di, cj + ks * dj] - z0
-                    )  # (b, L) rises along the ray
-                    keys = p * m
-                    hor = np.argmax(keys, axis=1)  # first max = smallest k
-                    bi = np.arange(b)
-                    cols["image_id"].extend(ids)
-                    cols["dir"].extend([d] * b)
-                    cols["horizon_k"].extend((hor + 1).astype(np.int32))
-                    cols["horizon_num"].extend(p[bi, hor])
-                    cols["n_rising"].extend((p > 0).sum(axis=1))
-                    cols["ray_checksum"].extend((p * ks).sum(axis=1))
-            yield pd.DataFrame(cols) if cols["image_id"] else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-
-    return slim.mapInPandas(_open, schema=_OPEN_SCHEMA)
-
-
-_VIEW_SCHEMA = (
-    "image_id string, dir int, n_visible long, furthest_k int, "
-    "first_blocked int, vis_checksum long"
-)
-
-VIEWSHED_OBS_H = 2  # observer height above the center cell (elevation units)
-
-
-def viewshed_stats(tiles: DataFrame) -> DataFrame:
-    """8-ray line-of-sight viewshed census (gdal_viewshed analog; the
-    classic DEM visibility op a georaster user derives next after
-    openness — SURVEY §0 ⚠).  Observer at the tile center, eye level
-    zo = z[h//2, w//2] + VIEWSHED_OBS_H; along each principal ray the
-    cell at step k is VISIBLE iff its elevation angle strictly exceeds
-    every earlier angle on the ray:
-
-        (z_k - zo)/k  >  max_{j<k} (z_j - zo)/j      (k = 1 always seen)
-
-    The per-step ground-distance constant cancels inside a ray (same
-    argument as openness_stats), so the compare is exact int64 after
-    multiplying through D = lcm(1..L): key(k) = (z_k - zo) * (D // k)
-    and visibility is a running-max compare — no signed division
-    anywhere, bit-identical in NumPy and the DuckDB window oracle.
-
-    Output per (tile, dir): n_visible, furthest_k (last visible step),
-    first_blocked (smallest hidden step; 0 = ray fully visible) and the
-    step-weighted visibility checksum pinning the exact visible set.
-    Map-only fused Arrow pass, zero shuffle."""
-    import math
-
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _vs(batches):
-        for pdf in batches:
-            groups: dict[tuple, list[int]] = {}
-            for r in range(len(pdf)):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            cols: dict[str, list] = {c: [] for c in (
-                "image_id", "dir", "n_visible", "furthest_k", "first_blocked",
-                "vis_checksum")}
-            for (w, h, fmt), idx in groups.items():
-                ci, cj = h // 2, w // 2
-                L = min(ci, cj, h - 1 - ci, w - 1 - cj)
-                if L < 1:
-                    continue
-                D = math.lcm(*range(1, L + 1))
-                m = np.array([D // k for k in range(1, L + 1)], dtype=np.int64)
-                ks = np.arange(1, L + 1, dtype=np.int64)
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                zo = z[:, ci, cj][:, None] + VIEWSHED_OBS_H
-                ids = pdf["image_id"].to_numpy(dtype=object)[np.asarray(idx)]
-                for d, (di, dj) in enumerate(_N8):
-                    p = z[:, ci + ks * di, cj + ks * dj] - zo  # (b, L)
-                    keys = p * m
-                    run = np.maximum.accumulate(keys, axis=1)
-                    vis = np.empty(keys.shape, dtype=bool)
-                    vis[:, 0] = True
-                    vis[:, 1:] = keys[:, 1:] > run[:, :-1]
-                    inv = ~vis
-                    fb = np.where(inv.any(axis=1), inv.argmax(axis=1) + 1, 0)
-                    # last visible step: vis[:, 0] is always True
-                    fur = L - vis[:, ::-1].argmax(axis=1)
-                    cols["image_id"].extend(ids)
-                    cols["dir"].extend([d] * b)
-                    cols["n_visible"].extend(vis.sum(axis=1))
-                    cols["furthest_k"].extend(fur.astype(np.int32))
-                    cols["first_blocked"].extend(fb.astype(np.int32))
-                    cols["vis_checksum"].extend((vis * ks).sum(axis=1))
-            yield pd.DataFrame(cols) if cols["image_id"] else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-
-    return slim.mapInPandas(_vs, schema=_VIEW_SCHEMA)
-
-
-_STRETCH_SCHEMA = (
-    "image_id string, lo long, hi long, n_sat_lo long, n_sat_hi long, "
-    "out_sum long, out_checksum long"
-)
-
-STRETCH_P_LO = 2   # lower percentile (exact order statistic, not interpolated)
-STRETCH_P_HI = 98
-
-
-def stretch_stats(tiles: DataFrame) -> DataFrame:
-    """Percentile contrast stretch (the `gdal_translate -scale` /
-    QGIS "cumulative count cut 2–98%" default a georaster user applies
-    before display — SURVEY §0 ⚠).  Bounds are EXACT order statistics:
-    lo = sorted(v)[n·2//100], hi = sorted(v)[n·98//100] (0-indexed), so
-    both engines pick the identical pixel — no interpolated quantile.
-    Stretch on an all-integer surface:
-
-        out = 0                         v <= lo   (or hi == lo)
-            = 255                       v >= hi
-            = (v - lo)·255 // (hi - lo) otherwise
-
-    Emits per image the bounds, saturated-pixel counts and the
-    position-weighted checksum pinning every stretched value.
-    Map-only fused Arrow pass, zero shuffle; the sort is per-tile
-    (n = w·h pixels) inside the executor, never a Spark sort."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _st(batches):
-        for pdf in batches:
-            groups: dict[tuple, list[int]] = {}
-            for r in range(len(pdf)):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            cols: dict[str, list] = {c: [] for c in (
-                "image_id", "lo", "hi", "n_sat_lo", "n_sat_hi", "out_sum",
-                "out_checksum")}
-            for (w, h, fmt), idx in groups.items():
-                n = w * h
-                klo, khi = n * STRETCH_P_LO // 100, n * STRETCH_P_HI // 100
-                b = len(idx)
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, n)
-                    .astype(np.int64)
-                )
-                srt = np.sort(z, axis=1)
-                lo, hi = srt[:, klo][:, None], srt[:, khi][:, None]
-                rng = hi - lo
-                out = np.zeros_like(z)
-                mid = (z > lo) & (z < hi) & (rng > 0)
-                np.floor_divide((z - lo) * 255, rng, out=out, where=mid)
-                out[(z >= hi) & (rng > 0)] = 255
-                wt = np.arange(1, n + 1, dtype=np.int64)
-                ids = pdf["image_id"].to_numpy(dtype=object)[np.asarray(idx)]
-                cols["image_id"].extend(ids)
-                cols["lo"].extend(lo[:, 0])
-                cols["hi"].extend(hi[:, 0])
-                cols["n_sat_lo"].extend((z <= lo).sum(axis=1))
-                cols["n_sat_hi"].extend(((z >= hi) & (rng > 0)).sum(axis=1))
-                cols["out_sum"].extend(out.sum(axis=1))
-                cols["out_checksum"].extend((out * wt).sum(axis=1))
-            yield pd.DataFrame(cols) if cols["image_id"] else pd.DataFrame(
-                {c: [] for c in cols}
-            )
-
-    return slim.mapInPandas(_st, schema=_STRETCH_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Watershed basin labeling (round 3) — D8 pointer jumping
-# ---------------------------------------------------------------------------
-
-_WSHED_SCHEMA = (
-    "image_id string, n_interior long, n_basins long, "
-    "n_interior_sinks long, n_outlet_sinks long, max_basin long, "
-    "label_checksum long"
-)
-
-
-def watershed_basins(tiles: DataFrame) -> DataFrame:
-    """Watershed / basin delineation (ArcGIS Watershed, GRASS
-    r.watershed basins output): every interior pixel is labeled with
-    the TERMINAL of its D8 steepest-descent path — an interior flat/pit
-    (code 0) or the boundary-ring pixel it drains into.  Labels are
-    full-image flat indices i*w + j, so the label set is the basin
-    partition.  The D8 rule is the same integer steepest-descent as
-    flow_direction_stats (2·drop² cardinal vs drop² diagonal, ESRI tie
-    order); values strictly decrease along paths, so they are acyclic
-    and <= 255 steps.
-
-    Per tile: basin count, interior-sink vs outlet-sink split, largest
-    basin size, and the position-weighted label checksum pinning every
-    pixel's basin.
-
-    Plan: map-only fused Arrow pass; the path resolution is POINTER
-    JUMPING (ptr = ptr[ptr], ⌈log2 path⌉ = 10 rounds) on one flat
-    array batched across all tiles of a (w,h,fmt) group — O(P log P)
-    work, no per-pixel Python, zero shuffle."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _wshed(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "n_basins", "n_interior_sinks",
-                      "n_outlet_sinks", "max_basin", "label_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                c0 = z[:, 1:-1, 1:-1]
-                scores = []
-                for _, di, dj, mult in _D8_DIRS:
-                    nb = z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    drop = c0 - nb
-                    scores.append(np.where(drop > 0, mult * drop * drop, -1))
-                stack = np.stack(scores)
-                best = stack.max(axis=0)
-                pick = stack.argmax(axis=0)
-                dis = np.array([d[1] for d in _D8_DIRS], dtype=np.int64)
-                djs = np.array([d[2] for d in _D8_DIRS], dtype=np.int64)
-                # full-image coordinates of interior pixels + their targets
-                ii = np.broadcast_to(
-                    np.arange(1, h - 1, dtype=np.int64)[None, :, None], (b, ih, iw))
-                jj = np.broadcast_to(
-                    np.arange(1, w - 1, dtype=np.int64)[None, None, :], (b, ih, iw))
-                flows = best > 0
-                ti = np.where(flows, ii + dis[pick], ii)
-                tj = np.where(flows, jj + djs[pick], jj)
-                # one flat pointer array across the batch: boundary and
-                # flat/pit pixels point at themselves (terminals)
-                ptr = np.arange(b * h * w, dtype=np.int64).reshape(b, h, w)
-                bb = np.broadcast_to(
-                    np.arange(b, dtype=np.int64)[:, None, None], (b, ih, iw))
-                ptr[:, 1:-1, 1:-1] = bb * h * w + ti * w + tj
-                ptr = ptr.ravel()
-                for _ in range(10):  # 2^10 = 1024 >= any acyclic path here
-                    ptr = ptr[ptr]
-                lab = ptr.reshape(b, h, w)[:, 1:-1, 1:-1]
-                lab_local = lab - (np.arange(b, dtype=np.int64) * h * w)[:, None, None]
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["label_checksum"][rows] = (lab_local * wt).sum(axis=(1, 2))
-                for k in range(b):
-                    labs, cnts = np.unique(lab_local[k], return_counts=True)
-                    is_int = (
-                        (labs // w >= 1) & (labs // w <= h - 2)
-                        & (labs % w >= 1) & (labs % w <= w - 2)
-                    )
-                    out["n_basins"][idx[k]] = len(labs)
-                    out["n_interior_sinks"][idx[k]] = int(is_int.sum())
-                    out["n_outlet_sinks"][idx[k]] = int((~is_int).sum())
-                    out["max_basin"][idx[k]] = int(cnts.max())
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_wshed, schema=_WSHED_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Downstream flow length (round 3) — D8 pointer jumping with additive weights
-# ---------------------------------------------------------------------------
-
-_FLOWLEN_SCHEMA = (
-    "image_id string, n_interior long, n_zero long, "
-    "max_len long, sum_len long, len_checksum long"
-)
-
-
-def flow_length_stats(tiles: DataFrame) -> DataFrame:
-    """Downstream flow length (ArcGIS FlowLength / GRASS r.flow
-    lgU — the hydrological drainage-path metric): for every interior
-    pixel, the INTEGER length of its D8 steepest-descent path to its
-    terminal, with cardinal steps costing 5 and diagonal steps 7
-    (5:7 is the classic integer chamfer surrogate for 1:√2 — exact
-    integers keep the whole statistic bit-reproducible; upstream
-    FlowLength reports cellsize·(1,√2) floats, SURVEY §2.1 ⚠).
-
-    Same D8 rule as flow_direction_stats/watershed_basins (2·drop²
-    cardinal vs drop² diagonal, ESRI tie order), so all three
-    hydrology ops agree on the drainage graph.
-
-    Per tile: interior count, zero-length pixels (terminals: interior
-    flats/pits), the longest drainage path, total length, and the
-    position-weighted checksum pinning every pixel's length.
-
-    Plan: map-only fused Arrow pass; POINTER JUMPING with additive
-    weights (dist += dist[ptr]; ptr = ptr[ptr], 10 rounds) over one
-    flat array batched across each (w,h,fmt) group — O(P log P) work,
-    zero shuffle, no per-pixel Python."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-
-    def _flen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_interior", "n_zero", "max_len", "sum_len",
-                      "len_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for r in range(n):
-                key = (int(pdf["w"].iat[r]), int(pdf["h"].iat[r]), pdf["fmt"].iat[r])
-                groups.setdefault(key, []).append(r)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                b = len(idx)
-                ih, iw = h - 2, w - 2
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[r] for r in idx), dtype=dt[fmt]
-                    )
-                    .reshape(b, h, w)
-                    .astype(np.int64)
-                )
-                c0 = z[:, 1:-1, 1:-1]
-                scores = []
-                for _, di, dj, mult in _D8_DIRS:
-                    nb = z[:, 1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-                    drop = c0 - nb
-                    scores.append(np.where(drop > 0, mult * drop * drop, -1))
-                stack = np.stack(scores)
-                best = stack.max(axis=0)
-                pick = stack.argmax(axis=0)
-                dis = np.array([d[1] for d in _D8_DIRS], dtype=np.int64)
-                djs = np.array([d[2] for d in _D8_DIRS], dtype=np.int64)
-                # chamfer step cost: cardinal (score mult 2) = 5, diagonal = 7
-                costs = np.array(
-                    [5 if d[3] == 2 else 7 for d in _D8_DIRS], dtype=np.int64)
-                ii = np.broadcast_to(
-                    np.arange(1, h - 1, dtype=np.int64)[None, :, None], (b, ih, iw))
-                jj = np.broadcast_to(
-                    np.arange(1, w - 1, dtype=np.int64)[None, None, :], (b, ih, iw))
-                flows = best > 0
-                ti = np.where(flows, ii + dis[pick], ii)
-                tj = np.where(flows, jj + djs[pick], jj)
-                ptr = np.arange(b * h * w, dtype=np.int64).reshape(b, h, w)
-                bb = np.broadcast_to(
-                    np.arange(b, dtype=np.int64)[:, None, None], (b, ih, iw))
-                ptr[:, 1:-1, 1:-1] = bb * h * w + ti * w + tj
-                ptr = ptr.ravel()
-                dist = np.zeros(b * h * w, dtype=np.int64).reshape(b, h, w)
-                dist[:, 1:-1, 1:-1] = np.where(flows, costs[pick], 0)
-                dist = dist.ravel()
-                for _ in range(10):  # doubles covered path length per round
-                    dist = dist + dist[ptr]
-                    ptr = ptr[ptr]
-                fl = dist.reshape(b, h, w)[:, 1:-1, 1:-1]
-                wt = np.arange(1, ih * iw + 1, dtype=np.int64).reshape(ih, iw)
-                rows = np.asarray(idx)
-                out["n_interior"][rows] = ih * iw
-                out["n_zero"][rows] = (fl == 0).sum(axis=(1, 2))
-                out["max_len"][rows] = fl.max(axis=(1, 2))
-                out["sum_len"][rows] = fl.sum(axis=(1, 2))
-                out["len_checksum"][rows] = (fl * wt).sum(axis=(1, 2))
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_flen, schema=_FLOWLEN_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Fixed-point bilinear resize (round 3) — gdalwarp -r bilinear upsample
-# ---------------------------------------------------------------------------
-
-
-_CURV_SCHEMA = (
-    "image_id string, n_interior long, lap_sum long, lap_abs_sum long, "
-    "n_convex long, n_concave long, zxy_sq_sum long, lap_checksum long"
-)
-
-
-def curvature_stats(tiles: DataFrame) -> DataFrame:
-    """Zevenbergen & Thorne (1987) second-derivative terrain curvature
-    (`gdaldem`-family analog; upstream georaster exposes only the raw
-    array — SURVEY §2.1 ⚠) as integer-exact per-tile surfaces the
-    DuckDB oracle re-derives from the ramp formula.
-
-    Interior stencils (unnormalized numerators — the cellsize^2 factor
-    is a constant scale):
-      zxx  = z[i,j-1] - 2 z[i,j] + z[i,j+1]
-      zyy  = z[i-1,j] - 2 z[i,j] + z[i+1,j]
-      zxy4 = z[i+1,j+1] + z[i-1,j-1] - z[i-1,j+1] - z[i+1,j-1]
-      lap  = zxx + zyy        (Laplacian = -2 * Z-T general curvature)
-
-    Surfaces (all int64-exact): lap_sum, lap_abs_sum, strict-sign
-    convex/concave censuses (lap < 0 / lap > 0), zxy_sq_sum, and the
-    position-weighted lap_checksum pinning every interior value.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle; stencils in
-    int16/int32 (bandwidth-bound kernels), sums accumulate int64."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _curv(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = (
-            "n_interior", "lap_sum", "lap_abs_sum", "n_convex",
-            "n_concave", "zxy_sq_sum", "lap_checksum",
-        )
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                if w < 3 or h < 3:
-                    continue
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int16)
-                )
-                c = z[:, 1:-1, 1:-1].astype(np.int32)
-                zxx = z[:, 1:-1, :-2] - 2 * c + z[:, 1:-1, 2:]
-                zyy = z[:, :-2, 1:-1] - 2 * c + z[:, 2:, 1:-1]
-                zxy4 = (
-                    z[:, 2:, 2:].astype(np.int32) + z[:, :-2, :-2]
-                    - z[:, :-2, 2:] - z[:, 2:, :-2]
-                )
-                lap = zxx + zyy
-                wt = np.arange(1, (h - 2) * (w - 2) + 1, dtype=np.int64).reshape(
-                    h - 2, w - 2
-                )
-                ii = np.asarray(idx)
-                out["n_interior"][ii] = (h - 2) * (w - 2)
-                out["lap_sum"][ii] = lap.sum(axis=(1, 2), dtype=np.int64)
-                out["lap_abs_sum"][ii] = np.abs(lap).sum(axis=(1, 2), dtype=np.int64)
-                out["n_convex"][ii] = (lap < 0).sum(axis=(1, 2))
-                out["n_concave"][ii] = (lap > 0).sum(axis=(1, 2))
-                out["zxy_sq_sum"][ii] = (
-                    (zxy4.astype(np.int64) ** 2).sum(axis=(1, 2))
-                )
-                out["lap_checksum"][ii] = np.einsum(
-                    "bij,ij->b", lap.astype(np.int64), wt
-                )
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_curv, schema=_CURV_SCHEMA)
-
-
-_HORIZON_SCHEMA = (
-    "image_id string, n_px long, n_shadow long, shadow_checksum long"
-)
-
-# Sun ray tangent NUM/DEN (rise per 1-px westward step needed to shadow).
-HORIZON_NUM = 3
-HORIZON_DEN = 2
-
-
-def horizon_shadow_stats(tiles: DataFrame) -> DataFrame:
-    """Cast-shadow census along the west->east sun ray (GRASS
-    `r.horizon` / `r.sun` shadow test; upstream georaster users run it
-    over ``self.r`` — SURVEY §2.1 ⚠), integer-exact: pixel (i, j) is
-    shadowed iff some pixel k < j on its row rises above the sun ray,
-    i.e. (z[i,k] - z[i,j]) * DEN > (j - k) * NUM.
-
-    The test linearizes: with s = z*DEN + col*NUM it is exactly
-    ``max_{k<j} s[i,k] > s[i,j]`` — a running maximum, O(w) per row
-    (np.maximum.accumulate), and a plain window MAX OVER (... ROWS
-    UNBOUNDED PRECEDING TO 1 PRECEDING) on the oracle side.  No pair
-    blowup on either engine.
-
-    Scale shape: map-only fused mapInPandas — zero shuffle."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _horizon(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in ("n_px", "n_shadow", "shadow_checksum"):
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int32)
-                )
-                s = z * HORIZON_DEN + np.arange(w, dtype=np.int32) * HORIZON_NUM
-                runmax = np.maximum.accumulate(s, axis=2)
-                shadowed = np.zeros_like(s, dtype=bool)
-                shadowed[:, :, 1:] = runmax[:, :, :-1] > s[:, :, 1:]
-                wt = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
-                ii = np.asarray(idx)
-                out["n_px"][ii] = h * w
-                out["n_shadow"][ii] = shadowed.sum(axis=(1, 2))
-                out["shadow_checksum"][ii] = np.einsum(
-                    "bij,ij->b", shadowed.astype(np.int64), wt
-                )
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(_horizon, schema=_HORIZON_SCHEMA)
-
-
-# --- 2-level Haar S-transform census ---------------------------------------------
-
-
-# --- bounded-round cost distance ---------------------------------------------------
-COST_ROUNDS = 4
-COST_INF = 1 << 40
-
-
-def cost_distance(tiles: DataFrame) -> DataFrame:
-    """Bounded-round accumulated-cost distance (ArcGIS CostDistance /
-    GRASS r.cost, 4-connected min-plus form): from a seed at the tile
-    center, COST_ROUNDS rounds of dist = min(dist, min_nbr(dist) +
-    v + 1) — entering a pixel costs its value + 1, so the relaxation is
-    a Bellman-Ford step on the grid graph and after k rounds exactly
-    the k-hop cost-ball is settled (bounded-round Bellman-Ford,
-    per-tile).
-
-    Census per tile: pixels reached, Σ accumulated cost, max reached
-    cost, and the position checksum over reached pixels.
-
-    Scale shape: map-only fused mapInPandas — each relaxation round is
-    five vectorized shifted-slice mins on the whole batch block; zero
-    shuffle."""
-    slim = tiles.select("image_id", "bytes", "w", "h", "fmt")
-
-    def _cost(batches):
-        dt = {"raw": np.uint8, "qnt": np.uint8, "raw16": "<u2"}
-        cols = ("n_reached", "cost_sum", "cost_max", "cost_checksum")
-        for pdf in batches:
-            n = len(pdf)
-            out = {"image_id": pdf["image_id"].to_numpy(dtype=object)}
-            for c in cols:
-                out[c] = np.zeros(n, dtype=np.int64)
-            groups: dict[tuple, list[int]] = {}
-            for k in range(n):
-                key = (int(pdf["w"].iat[k]), int(pdf["h"].iat[k]), pdf["fmt"].iat[k])
-                groups.setdefault(key, []).append(k)
-            for (w, h, fmt), idx in groups.items():
-                z = (
-                    np.frombuffer(
-                        b"".join(pdf["bytes"].iat[k] for k in idx), dtype=dt[fmt]
-                    )
-                    .reshape(len(idx), h, w)
-                    .astype(np.int64)
-                )
-                enter = z + 1
-                d = np.full_like(z, COST_INF)
-                d[:, h // 2, w // 2] = 0
-                for _ in range(COST_ROUNDS):
-                    p = np.pad(d, ((0, 0), (1, 1), (1, 1)), constant_values=COST_INF)
-                    best = d
-                    for di, dj in ((-1, 0), (1, 0), (0, -1), (0, 1)):
-                        nb = p[:, 1 + di : 1 + di + h, 1 + dj : 1 + dj + w]
-                        best = np.minimum(best, nb + enter)
-                    d = best
-                reached = d < COST_INF
-                ii = np.asarray(idx)
-                wt = (
-                    np.arange(h, dtype=np.int64)[:, None] * w
-                    + np.arange(w, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["n_reached"][ii] = reached.sum(axis=(1, 2))
-                out["cost_sum"][ii] = np.where(reached, d, 0).sum(axis=(1, 2))
-                out["cost_max"][ii] = np.where(reached, d, 0).max(axis=(1, 2))
-                out["cost_checksum"][ii] = np.einsum(
-                    "bij,ij->b", np.where(reached, d, 0), wt
-                )
-            yield pd.DataFrame(out)
-
-    return slim.mapInPandas(
-        _cost,
-        schema=(
-            "image_id string, n_reached long, cost_sum long, cost_max long, "
-            "cost_checksum long"
-        ),
-    )
-
+from pyspark.sql import DataFrame
 
 # --- chamfer 3-4 distance transform ----------------------------------------------------
 

@@ -2,7 +2,7 @@
 deduplication (pairs -> clusters -> canonical doc election).
 
 What the module holds:
-- ``connected_components``: min-label propagation (dedup, regions);
+- ``connected_components``: min-label propagation (dedup);
 - ``connected_components_star``: large-star/small-star contraction with
   an optional ``forest_contract`` local pre-pass (dedup, dbscan,
   zone_dissolve, single_linkage); its round count is read as

@@ -10,8 +10,8 @@ UNVERIFIED, SURVEY §0) — here the two standard data-curation filters a
   a blurry or constant tile has near-zero high-frequency response, so
   its Laplacian variance collapses.  We keep the INTEGER variance
   numerator ``n*Σx² − (Σx)²`` instead of the float variance, so the
-  metric is bit-reproducible across engines (same integer-surface
-  discipline as algebra.terrain_stats).
+  metric is bit-reproducible across engines (the integer-surface
+  discipline of the algebra.py kernels).
 * **Shannon entropy** of the 256-bin pixel histogram (information
   content — near-zero entropy means a synthetic/empty/single-color
   tile).  Entropy is the one float here; it is reduced over ≤256

@@ -88,22 +88,3 @@ def salted_equi_join(
         ),
     )
     return bigs.join(smalls, [key, "_salt"], how).drop("_salt")
-
-
-def repartition_spatial(
-    df: DataFrame, cell_col: str, r: int, num_partitions: int | None = None
-) -> DataFrame:
-    """Range-partition by the Morton key of `cell_col` so spatially
-    adjacent cells co-locate (helps kNN ring reuse + zonal locality).
-    The Morton key is a derived sort key only — never a correctness
-    surface (SURVEY §1.2)."""
-    from ..functions import cells
-
-    mk = cells.morton_key(F.col(cell_col), r)
-    df = df.withColumn("_mk", mk)
-    out = (
-        df.repartitionByRange(num_partitions, "_mk")
-        if num_partitions
-        else df.repartitionByRange("_mk")
-    )
-    return out.drop("_mk")

@@ -137,19 +137,6 @@ def cell_cover(xmin, xmax, ymin, ymax, r: int):
     return out
 
 
-def morton_key(cell):
-    """Z-order interleave of (ix, iy) — a derived SORT key for range
-    partitioning only, never a correctness surface (SURVEY.md §1.2)."""
-    r, ix, iy = cell_decode(cell)
-    ix = np.asarray(ix, dtype=np.uint64)
-    iy = np.asarray(iy, dtype=np.uint64)
-    out = np.zeros_like(ix)
-    for b in range(26):
-        out |= ((ix >> np.uint64(b)) & np.uint64(1)) << np.uint64(2 * b)
-        out |= ((iy >> np.uint64(b)) & np.uint64(1)) << np.uint64(2 * b + 1)
-    return out.astype(np.int64)
-
-
 # ---------------------------------------------------------------------------
 # Deterministic fixture synthesis (FIXTURES.md) — georegistration E1.
 # Pure integer arithmetic in idx so DuckDB SQL reproduces it exactly.

@@ -437,135 +437,6 @@ def q_mosaic_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _reproject_df(spark, sf_dir, "average")
 
 
-def q_focal_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed focal over the warped mosaic (algebra.focal_mosaic):
-    q_reproject's 4x4 target grid, then 3x3 box-sum + gradient with
-    1-px HALO EXCHANGE between mosaic tiles — seam pixels must equal the
-    oracle's single-array evaluation of the whole mosaic."""
-    from .. import oracle as orc
-    from ..operators import algebra, warp
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(geo.image_idx() < 1000)
-    lon0, lat0 = orc.mercator_to_lonlat(0.0, 0.0)
-    lon1, lat1 = orc.mercator_to_lonlat(514_000.0, 2_300.0)
-    n = 256
-    grid = warp.TargetGrid(
-        crs="EPSG:4326", x0=float(lon0), y0=float(lat1),
-        xres=float(lon1 - lon0) / n, yres=float(lat1 - lat0) / n,
-        nx=n, ny=n, tile_w=64, tile_h=64,
-    )
-    mosaic = warp.reproject(tiles, grid, method="nearest")
-    return (
-        algebra.focal_mosaic(mosaic, ntx=4, nty=4)
-        .repartition(1).sortWithinPartitions("tile_id")
-    )
-
-
-PROX_R = 4
-PROX_T = 250
-
-
-def q_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed distance transform over the warped mosaic
-    (algebra.proximity_mosaic, the gdal_proximity analog): per pixel the
-    min SQUARED euclidean distance to a feature pixel (value >= 250)
-    within the Chebyshev-4 window, sentinel 2R^2+1 beyond — computed
-    distributed with a 4-px halo exchange; seam pixels must equal the
-    oracle's single-relation evaluation of the whole mosaic."""
-    from .. import oracle as orc
-    from ..operators import algebra, warp
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(geo.image_idx() < 1000)
-    lon0, lat0 = orc.mercator_to_lonlat(0.0, 0.0)
-    lon1, lat1 = orc.mercator_to_lonlat(514_000.0, 2_300.0)
-    n = 256
-    grid = warp.TargetGrid(
-        crs="EPSG:4326", x0=float(lon0), y0=float(lat1),
-        xres=float(lon1 - lon0) / n, yres=float(lat1 - lat0) / n,
-        nx=n, ny=n, tile_w=64, tile_h=64,
-    )
-    mosaic = warp.reproject(tiles, grid, method="nearest")
-    return (
-        algebra.proximity_mosaic(mosaic, ntx=4, nty=4, radius=PROX_R, threshold=PROX_T)
-        .repartition(1).sortWithinPartitions("tile_id")
-    )
-
-
-def q_mosaic_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed connected components over the warped mosaic
-    (regions.mosaic_region_components): per-tile run-based union-find,
-    then seam label strips + min-label propagation merge fragments
-    across tile boundaries.  Components must be identical to labeling
-    the 256x256 mosaic as one array — the oracle recomputes both levels
-    with recursive-CTE closures over the global pixel graph."""
-    from .. import oracle as orc
-    from ..operators import regions, warp
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(geo.image_idx() < 1000)
-    lon0, lat0 = orc.mercator_to_lonlat(0.0, 0.0)
-    lon1, lat1 = orc.mercator_to_lonlat(514_000.0, 2_300.0)
-    n = 256
-    grid = warp.TargetGrid(
-        crs="EPSG:4326", x0=float(lon0), y0=float(lat1),
-        xres=float(lon1 - lon0) / n, yres=float(lat1 - lat0) / n,
-        nx=n, ny=n, tile_w=64, tile_h=64,
-    )
-    mosaic = warp.reproject(tiles, grid, method="nearest")
-    return (
-        regions.mosaic_region_components(mosaic, ntx=4, nty=4)
-        .repartition(1).sortWithinPartitions("component")
-    )
-
-
-def _sql_mosaic_regions(fx: Path) -> str:
-    """DuckDB twin of q_mosaic_regions: the warped mosaic as one global
-    pixel relation, then TWO recursive min-label closures — one over all
-    4-adjacency edges (global components) and one over same-tile edges
-    only (tile-local fragments) — so n_frags checks the seam-merge
-    bookkeeping, not just the final partition."""
-    from ..operators.regions import MOSAIC_THRESHOLD
-
-    ctes, _ = _warp_mosaic_ctes(fx)
-    return ctes.replace("WITH ", "WITH RECURSIVE ", 1) + f""",
-mos AS (
-  SELECT (p.tid // 4) * 64 + p.i AS gi, (p.tid % 4) * 64 + p.j AS gj,
-         COALESCE(v.v, 0) AS v
-  FROM px p LEFT JOIN val v ON v.tid = p.tid AND v.i = p.i AND v.j = p.j
-),
-fg AS (
-  SELECT gi * 256 + gj AS pid, (gi // 64) * 4 + (gj // 64) AS tid
-  FROM mos WHERE v >= {MOSAIC_THRESHOLD}
-),
-eg AS (
-  SELECT a.pid AS u, b.pid AS v, a.tid AS ta, b.tid AS tb
-  FROM fg a JOIN fg b ON b.pid = a.pid + 1 AND a.pid % 256 <> 255
-  UNION ALL
-  SELECT a.pid, b.pid, a.tid, b.tid
-  FROM fg a JOIN fg b ON b.pid = a.pid + 256
-),
-symg AS (SELECT u, v FROM eg UNION SELECT v, u FROM eg),
-syml AS (SELECT u, v FROM eg WHERE ta = tb
-         UNION SELECT v, u FROM eg WHERE ta = tb),
-reachg(pid, r) AS (
-  SELECT pid, pid FROM fg
-  UNION
-  SELECT e.v, reachg.r FROM reachg JOIN symg e ON e.u = reachg.pid
-),
-reachl(pid, r) AS (
-  SELECT pid, pid FROM fg
-  UNION
-  SELECT e.v, reachl.r FROM reachl JOIN syml e ON e.u = reachl.pid
-),
-gl AS (SELECT pid, MIN(r) AS gcomp FROM reachg GROUP BY pid),
-ll AS (SELECT pid, MIN(r) AS lcomp FROM reachl GROUP BY pid)
-SELECT gcomp AS component,
-       CAST(COUNT(*) AS BIGINT) AS n_px,
-       CAST(COUNT(DISTINCT lcomp) AS BIGINT) AS n_frags
-FROM gl JOIN ll USING (pid)
-GROUP BY gcomp ORDER BY component
-"""
-
-
 _DS_MOD = 101
 _DS_K = 2
 
@@ -636,27 +507,6 @@ def q_pixel_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DIFF_LIM = 2048
-
-
-def q_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raster map algebra / change detection (operators/algebra): pair
-    consecutive scenes (idx 2p vs 2p+1) as two co-registered epochs,
-    equi-join on pair key, ONE fused Arrow hop for integer-exact diff
-    stats.  At scale both corpora would be bucketed on the key
-    (sources/bucketed.py) making the join shuffle-free."""
-    from ..operators import algebra
-
-    im = _images(spark, sf_dir).where(geo.image_idx() < _DIFF_LIM)
-    pair = F.shiftright(geo.image_idx(), 1).alias("pair_id")
-    a = im.where(geo.image_idx() % 2 == 0).select(pair, "bytes", "fmt")
-    b = im.where(geo.image_idx() % 2 == 1).select(pair, "bytes", "fmt")
-    return (
-        algebra.change_detect(a, b, key="pair_id")
-        .repartition(1).sortWithinPartitions("pair_id")
-    )
-
-
 def q_bitplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bit-plane slicing census (raster_stats.bitplane_census): per
     (image, plane) the set-bit count and position-weighted checksum --
@@ -687,202 +537,6 @@ SELECT image_id, CAST(gp.plane AS INT) AS plane,
        CAST(SUM(((v >> gp.plane) & 1) * pw) AS BIGINT) AS pos_checksum
 FROM px, generate_series(0, 7) AS gp(plane)
 GROUP BY image_id, gp.plane ORDER BY image_id, gp.plane
-"""
-
-
-_FOCAL_MOD = 101
-
-
-def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3x3 focal map algebra (operators/algebra.focal_stats): interior
-    box-sum checksum + central-difference L1 gradient per tile, one fused
-    Arrow pass, map-only plan (no shuffle).  Integer-exact, so the DuckDB
-    oracle re-derives every value from the ramp formula."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _FOCAL_MOD == 0
-    )
-    return (
-        algebra.focal_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-_TERRAIN_MOD = 97
-
-
-def q_terrain_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Horn 3x3 slope/aspect terrain analysis (operators/algebra.
-    terrain_stats — `gdaldem slope/aspect` analog): integer-exact
-    slope-squared stats + strict-compare compass classes per tile, one
-    fused map-only Arrow pass, oracle re-derived from the ramp formula."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _TERRAIN_MOD == 0
-    )
-    return (
-        algebra.terrain_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_terrain_slope(fx: Path, w: int) -> str:
-    """DuckDB twin of q_terrain_slope: Horn gx/gy evaluated directly from
-    the ramp formula at each interior pixel."""
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    gx = (
-        f"({rv(-1, 1)} + 2*{rv(0, 1)} + {rv(1, 1)}"
-        f" - {rv(-1, -1)} - 2*{rv(0, -1)} - {rv(1, -1)})"
-    )
-    gy = (
-        f"({rv(1, -1)} + 2*{rv(1, 0)} + {rv(1, 1)}"
-        f" - {rv(-1, -1)} - 2*{rv(-1, 0)} - {rv(-1, 1)})"
-    )
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, {gx} AS gx, {gy} AS gy
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_TERRAIN_MOD} = 0
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(gx*gx + gy*gy) AS BIGINT) AS slope_sq_sum,
-       CAST(MAX(gx*gx + gy*gy) AS BIGINT) AS slope_sq_max,
-       CAST(SUM((gx*gx + gy*gy) * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS slope_checksum,
-       CAST(SUM(CASE WHEN gx = 0 AND gy = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_flat,
-       CAST(SUM(CASE WHEN gx > abs(gy) THEN 1 ELSE 0 END) AS BIGINT) AS n_east,
-       CAST(SUM(CASE WHEN -gy > abs(gx) THEN 1 ELSE 0 END) AS BIGINT) AS n_north,
-       CAST(SUM(CASE WHEN -gx > abs(gy) THEN 1 ELSE 0 END) AS BIGINT) AS n_west,
-       CAST(SUM(CASE WHEN gy > abs(gx) THEN 1 ELSE 0 END) AS BIGINT) AS n_south
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-_REGION_MOD = 997
-
-
-def q_raster_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected-component region labeling of the >=128 threshold mask
-    (operators/regions — gdal_sieve / ConnectedComponents analog):
-    run-based union-find per tile, map-only fused Arrow pass.  Labels are
-    content-derived (min linear pixel index), so the DuckDB oracle can
-    re-derive every surface via a recursive-CTE transitive closure over
-    the ramp-formula pixel graph."""
-    from ..operators import regions
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _REGION_MOD == 0
-    )
-    return (
-        regions.region_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _region_label_ctes(fx: Path, w: int) -> str:
-    """Shared CTE prefix for the per-tile region oracles: foreground
-    pixels from the ramp formula, directed 4-adjacency edges (right +
-    down, each once), min-label via recursive closure."""
-    from ..operators.regions import DEFAULT_THRESHOLD
-
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    return f"""
-WITH RECURSIVE {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i * {w} + gj.j AS pid
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_REGION_MOD} = 0 AND CAST({ramp} AS BIGINT) >= {DEFAULT_THRESHOLD}
-),
-edges AS (
-  SELECT a.image_id, a.pid AS u, b.pid AS v
-  FROM px a JOIN px b ON b.image_id = a.image_id
-   AND (b.pid = a.pid + {w}
-        OR (b.pid = a.pid + 1 AND a.pid % {w} <> {w - 1}))
-),
-sym AS (SELECT image_id, u, v FROM edges
-        UNION SELECT image_id, v, u FROM edges),
-reach(image_id, pid, r) AS (
-  SELECT image_id, pid, pid FROM px
-  UNION
-  SELECT e.image_id, e.v, reach.r
-  FROM reach JOIN sym e ON e.image_id = reach.image_id AND e.u = reach.pid
-),
-labels AS (
-  SELECT image_id, pid, MIN(r) AS comp FROM reach GROUP BY image_id, pid
-)"""
-
-
-def _sql_raster_regions(fx: Path, w: int) -> str:
-    """DuckDB twin of q_raster_regions: per-image rollup of the shared
-    region-label closure (the pixel-granularity version of the
-    _sql_dedup_components idiom)."""
-    return f"""{_region_label_ctes(fx, w)},
-comps AS (
-  SELECT image_id, comp, COUNT(*) AS sz FROM labels GROUP BY image_id, comp
-),
-agg AS (
-  SELECT image_id, SUM(sz) AS n_fg, COUNT(*) AS n_regions,
-         MAX(sz) AS max_region, SUM((comp + 1) * sz) AS region_checksum
-  FROM comps GROUP BY image_id
-)
-SELECT t.image_id,
-       CAST(COALESCE(a.n_fg, 0) AS BIGINT) AS n_fg,
-       CAST(COALESCE(a.n_regions, 0) AS BIGINT) AS n_regions,
-       CAST(COALESCE(a.max_region, 0) AS BIGINT) AS max_region,
-       CAST(COALESCE(a.region_checksum, 0) AS BIGINT) AS region_checksum
-FROM (SELECT image_id FROM tiles WHERE idx % {_REGION_MOD} = 0) t
-LEFT JOIN agg a USING (image_id) ORDER BY t.image_id
-"""
-
-
-def q_region_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygonize-lite (regions.region_geometry): one row per connected
-    region with integer bbox, size, and exposed-boundary perimeter."""
-    from ..operators import regions
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _REGION_MOD == 0
-    )
-    return (
-        regions.region_geometry(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "label")
-    )
-
-
-def _sql_region_geometry(fx: Path, w: int) -> str:
-    """DuckDB twin of q_region_geometry: per-region aggregates over the
-    shared label closure; perimeter = 4*size - 2*internal adjacencies
-    (each directed right/down edge counted once)."""
-    return f"""{_region_label_ctes(fx, w)},
-geom AS (
-  SELECT image_id, comp AS label, COUNT(*) AS n_px,
-         MIN(pid // {w}) AS imin, MAX(pid // {w}) AS imax,
-         MIN(pid % {w}) AS jmin, MAX(pid % {w}) AS jmax
-  FROM labels GROUP BY image_id, comp
-),
-adj AS (
-  SELECT e.image_id, lu.comp AS label, COUNT(*) AS n_adj
-  FROM edges e
-  JOIN labels lu ON lu.image_id = e.image_id AND lu.pid = e.u
-  GROUP BY e.image_id, lu.comp
-)
-SELECT g.image_id,
-       CAST(g.label AS BIGINT) AS label,
-       CAST(g.n_px AS BIGINT) AS n_px,
-       CAST(g.imin AS BIGINT) AS imin, CAST(g.imax AS BIGINT) AS imax,
-       CAST(g.jmin AS BIGINT) AS jmin, CAST(g.jmax AS BIGINT) AS jmax,
-       CAST(4 * g.n_px - 2 * COALESCE(a.n_adj, 0) AS BIGINT) AS perimeter
-FROM geom g LEFT JOIN adj a ON a.image_id = g.image_id AND a.label = g.label
-ORDER BY g.image_id, g.label
 """
 
 
@@ -1266,59 +920,6 @@ ranked AS (
 SELECT zone_id, CAST(bin AS BIGINT) AS majority_val, CAST(cnt AS BIGINT) AS majority_cnt,
        CAST(n_variety AS BIGINT) AS n_variety, CAST(n_pixels AS BIGINT) AS n_pixels
 FROM ranked WHERE rn = 1 ORDER BY zone_id
-"""
-
-
-def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact hillshade (algebra.hillshade_stats — `gdaldem
-    hillshade` analog): Lambertian illumination numerator L.n over Horn
-    normals, integer light vector L=(-3,4,12); lit-vs-shadow counts and
-    numerator stats are bit-reproducible (same map-only fused shape as
-    terrain_slope)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _TERRAIN_MOD == 0
-    )
-    return (
-        algebra.hillshade_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_hillshade(fx: Path, w: int) -> str:
-    """DuckDB twin of q_hillshade: Horn gx/gy from the ramp formula,
-    shade = -lx*gx - ly*gy + 8*lz with L=(-3,4,12) -> 3*gx - 4*gy + 96."""
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    gx = (
-        f"({rv(-1, 1)} + 2*{rv(0, 1)} + {rv(1, 1)}"
-        f" - {rv(-1, -1)} - 2*{rv(0, -1)} - {rv(1, -1)})"
-    )
-    gy = (
-        f"({rv(1, -1)} + 2*{rv(1, 0)} + {rv(1, 1)}"
-        f" - {rv(-1, -1)} - 2*{rv(-1, 0)} - {rv(-1, 1)})"
-    )
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         3 * {gx} - 4 * {gy} + 96 AS shade
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_TERRAIN_MOD} = 0
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(shade) AS BIGINT) AS shade_sum,
-       CAST(MIN(shade) AS BIGINT) AS shade_min,
-       CAST(MAX(shade) AS BIGINT) AS shade_max,
-       CAST(SUM(CASE WHEN shade <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_shadow,
-       CAST(SUM(shade * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS shade_checksum
-FROM px GROUP BY image_id ORDER BY image_id
 """
 
 
@@ -1713,344 +1314,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_input,
        CAST(SUM(CASE WHEN sharp AND informative AND NOT is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_survivors,
        CAST(SUM(CASE WHEN sharp AND informative AND NOT is_dup THEN idx END) AS BIGINT) AS survivor_checksum
 FROM j
-"""
-
-
-_D8_MOD = 67
-
-
-def q_flow_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D8 flow direction (algebra.flow_direction_stats — the hydrology
-    primitive): integer-exact steepest-descent codes (2·drop² vs drop²
-    folds the 1/√2 diagonal into the integer argmax), ESRI-order ties.
-    Map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _D8_MOD == 0
-    )
-    return (
-        algebra.flow_direction_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_flow_direction(fx: Path, w: int) -> str:
-    from ..operators.algebra import _D8_DIRS
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    c0 = rv(0, 0)
-    scores = []
-    for code, di, dj, mult in _D8_DIRS:
-        drop = f"({c0} - {rv(di, dj)})"
-        scores.append(
-            (code, f"(CASE WHEN {drop} > 0 THEN {mult} * {drop} * {drop} ELSE -1 END)")
-        )
-    score_sel = ", ".join(f"{e} AS s{code}" for code, e in scores)
-    best = "greatest(" + ", ".join(f"s{code}" for code, _ in scores) + ")"
-    dir_case = "CASE WHEN " + best + " <= 0 THEN 0"
-    for code, _ in scores:
-        dir_case += f" WHEN s{code} = {best} THEN {code}"
-    dir_case += " END"
-    iw = w - 2
-    dir_counts = ",\n       ".join(
-        f"CAST(SUM(CASE WHEN code = {code} THEN 1 ELSE 0 END) AS BIGINT) AS n_d{code}"
-        for code, _ in scores
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-sc AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, {score_sel}
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_D8_MOD} = 0
-),
-px AS (SELECT image_id, i, j, {dir_case} AS code FROM sc)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(CASE WHEN code = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_flat,
-       {dir_counts},
-       CAST(SUM(code * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS d8_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-_FA_MOD = 73
-_FA_K = 4
-
-
-def q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded D8 flow accumulation (algebra.flow_accumulation_stats):
-    k-step transitive-closure pixel counts via a batched scatter-add
-    iteration — the hydrology step AFTER flow_direction.  Map-only
-    fused Arrow pass; oracle is a depth-bounded recursive CTE over the
-    same integer steepest-descent graph."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _FA_MOD == 0
-    )
-    return (
-        algebra.flow_accumulation_stats(tiles, k=_FA_K)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_flow_accum(fx: Path, w: int) -> str:
-    from ..operators.algebra import _D8_DIRS
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    c0 = rv(0, 0)
-    scores = []
-    for code, di, dj, mult in _D8_DIRS:
-        drop = f"({c0} - {rv(di, dj)})"
-        scores.append(
-            (code, f"(CASE WHEN {drop} > 0 THEN {mult} * {drop} * {drop} ELSE -1 END)")
-        )
-    score_sel = ", ".join(f"{e} AS s{code}" for code, e in scores)
-    best = "greatest(" + ", ".join(f"s{code}" for code, _ in scores) + ")"
-    dir_case = "CASE WHEN " + best + " <= 0 THEN 0"
-    for code, _ in scores:
-        dir_case += f" WHEN s{code} = {best} THEN {code}"
-    dir_case += " END"
-    di_case = "CASE code " + " ".join(
-        f"WHEN {c} THEN {di}" for c, di, dj, _ in _D8_DIRS) + " END"
-    dj_case = "CASE code " + " ".join(
-        f"WHEN {c} THEN {dj}" for c, di, dj, _ in _D8_DIRS) + " END"
-    lo, hi = 1, w - 2
-    iw = w - 2
-    return f"""
-WITH RECURSIVE {osql.georegister_cte(str(fx / 'images.parquet'))},
-sc AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, {score_sel}
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_FA_MOD} = 0
-),
-px AS MATERIALIZED (SELECT image_id, i, j, {dir_case} AS code FROM sc),
--- MATERIALIZED: DuckDB otherwise inlines px/edges into the iedges
--- BETWEEN filter, and predicate pushdown through the nested giant CASE
--- expressions blows the expression tree up past the memory limit.
-edges AS MATERIALIZED (
-  SELECT image_id, i, j, i + ({di_case}) AS ti, j + ({dj_case}) AS tj
-  FROM px WHERE code <> 0
-),
-iedges AS (
-  SELECT * FROM edges
-  WHERE ti BETWEEN {lo} AND {hi} AND tj BETWEEN {lo} AND {hi}
-),
-walk(image_id, i, j, depth) AS (
-  SELECT image_id, i, j, 0 FROM px
-  UNION ALL
-  SELECT e.image_id, e.ti, e.tj, wk.depth + 1
-  FROM walk wk JOIN iedges e
-    ON e.image_id = wk.image_id AND e.i = wk.i AND e.j = wk.j
-  WHERE wk.depth < {_FA_K}
-),
-acc AS (
-  SELECT image_id, i, j, COUNT(*) AS a FROM walk GROUP BY image_id, i, j
-),
-outs AS (
-  SELECT image_id, COUNT(*) AS n_outlets FROM edges
-  WHERE ti < {lo} OR ti > {hi} OR tj < {lo} OR tj > {hi}
-  GROUP BY image_id
-)
-SELECT acc.image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(CASE WHEN a = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_sources,
-       CAST(COALESCE(ANY_VALUE(outs.n_outlets), 0) AS BIGINT) AS n_outlets,
-       CAST(SUM(a) AS BIGINT) AS total_acc,
-       CAST(MAX(a) AS BIGINT) AS max_acc,
-       CAST(SUM(a * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS acc_checksum
-FROM acc LEFT JOIN outs ON outs.image_id = acc.image_id
-GROUP BY acc.image_id ORDER BY acc.image_id
-"""
-
-
-_TPI_MOD = 59
-
-
-def q_tpi_terrain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPI / TRI / roughness focal terrain metrics
-    (algebra.tpi_terrain_stats — gdaldem TPI/TRI/roughness analogs) on
-    the integer-exact surface.  Map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _TPI_MOD == 0
-    )
-    return (
-        algebra.tpi_terrain_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_tpi_terrain(fx: Path, w: int) -> str:
-    from ..operators.algebra import _N8
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    c0 = rv(0, 0)
-    nbs = [rv(di, dj) for di, dj in _N8]
-    tpi = f"(8 * {c0} - (" + " + ".join(nbs) + "))"
-    tri = "(" + " + ".join(f"abs({c0} - {nb})" for nb in nbs) + ")"
-    rough = (
-        "(greatest(" + ", ".join([c0] + nbs) + ")"
-        " - least(" + ", ".join([c0] + nbs) + "))"
-    )
-    lo, hi = 1, w - 2
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         {tpi} AS tpi, {tri} AS tri, {rough} AS rough
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_TPI_MOD} = 0
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(CASE WHEN tpi > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_ridge,
-       CAST(SUM(CASE WHEN tpi < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_valley,
-       CAST(SUM(tpi) AS BIGINT) AS sum_tpi,
-       CAST(SUM(tri) AS BIGINT) AS sum_tri,
-       CAST(SUM(rough) AS BIGINT) AS sum_rough,
-       CAST(SUM(tpi * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS tpi_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-_XTAB_LIM = 2048
-_XTAB_BINS = 4
-
-
-def q_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zonal crosstab / tabulate-area (algebra.crosstab_stats — ArcGIS
-    TabulateArea analog): categorical contingency between consecutive
-    scenes paired as two co-registered epochs.  Equi-join on the pair
-    key (bucketed-table shuffle-free at scale) + ONE fused Arrow pass
-    computing each pair's whole bins x bins table as one vectorized
-    offset-bincount."""
-    from ..operators import algebra
-
-    im = _images(spark, sf_dir).where(geo.image_idx() < _XTAB_LIM)
-    pair = F.shiftright(geo.image_idx(), 1).alias("pair_id")
-    a = im.where(geo.image_idx() % 2 == 0).select(pair, "bytes", "fmt")
-    b = im.where(geo.image_idx() % 2 == 1).select(pair, "bytes", "fmt")
-    return (
-        algebra.crosstab_stats(a, b, key="pair_id", bins=_XTAB_BINS)
-        .repartition(1).sortWithinPartitions("pair_id", "class_a", "class_b")
-    )
-
-
-def _sql_crosstab(fx: Path, w: int) -> str:
-    width = 256 // _XTAB_BINS
-    va = osql.ramp_value_expr("gi.i", "gj.j", idx="ia", fmt="fmt_a")
-    vb = osql.ramp_value_expr("gi.i", "gj.j", idx="ib", fmt="fmt_b")
-    return f"""
-WITH img AS (
-  SELECT CAST(substr(image_id, 4, 10) AS BIGINT) AS idx, fmt
-  FROM read_parquet('{fx / 'images.parquet'}')
-),
-pairs AS (
-  SELECT a.idx // 2 AS pair_id, a.idx AS ia, b.idx AS ib,
-         a.fmt AS fmt_a, b.fmt AS fmt_b
-  FROM img a JOIN img b ON b.idx = a.idx + 1
-  WHERE a.idx % 2 = 0 AND a.idx < {_XTAB_LIM}
-),
-px AS (
-  SELECT pair_id,
-         CAST({va} AS BIGINT) // {width} AS class_a,
-         CAST({vb} AS BIGINT) // {width} AS class_b
-  FROM pairs,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-)
-SELECT pair_id, CAST(class_a AS INTEGER) AS class_a,
-       CAST(class_b AS INTEGER) AS class_b,
-       CAST(COUNT(*) AS BIGINT) AS n_px
-FROM px GROUP BY pair_id, class_a, class_b
-ORDER BY pair_id, class_a, class_b
-"""
-
-
-_SOBEL_MOD = 61
-
-
-def q_sobel_orient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sobel gradient-orientation census (algebra.
-    sobel_orientation_stats — HOG-lite): 8 exact 45-degree octants from
-    integer sign/magnitude comparisons only.  Map-only fused Arrow
-    pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _SOBEL_MOD == 0
-    )
-    return (
-        algebra.sobel_orientation_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_sobel_orient(fx: Path, w: int) -> str:
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    gx = (
-        f"(({rv(-1, 1)} + 2*{rv(0, 1)} + {rv(1, 1)})"
-        f" - ({rv(-1, -1)} + 2*{rv(0, -1)} + {rv(1, -1)}))"
-    )
-    gy = (
-        f"(({rv(1, -1)} + 2*{rv(1, 0)} + {rv(1, 1)})"
-        f" - ({rv(-1, -1)} + 2*{rv(-1, 0)} + {rv(-1, 1)}))"
-    )
-    lo, hi = 1, w - 2
-    iw = w - 2
-    octs = ",\n       ".join(
-        f"CAST(SUM(CASE WHEN NOT flat AND octant = {o} THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_o{o}"
-        for o in range(8)
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
--- MATERIALIZED: keep DuckDB from inlining the giant Sobel expressions
--- into every downstream CASE (see flow_accum).
-g AS MATERIALIZED (
-  SELECT image_id, gi.i AS i, gj.j AS j, {gx} AS gx, {gy} AS gy
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_SOBEL_MOD} = 0
-),
-oct AS MATERIALIZED (
-  SELECT image_id, i, j, gx, gy,
-         (gx = 0 AND gy = 0) AS flat,
-         (gy < 0 OR (gy = 0 AND gx < 0)) AS flip,
-         CASE WHEN gy < 0 OR (gy = 0 AND gx < 0) THEN -gx ELSE gx END AS nx,
-         CASE WHEN gy < 0 OR (gy = 0 AND gx < 0) THEN -gy ELSE gy END AS ny
-  FROM g
-),
-px AS MATERIALIZED (
-  SELECT image_id, i, j, gx, gy, flat,
-         (CASE WHEN nx > 0 AND ny < nx THEN 0
-               WHEN nx > 0 THEN 1
-               WHEN ny > -nx THEN 2 ELSE 3 END)
-         + CASE WHEN flip THEN 4 ELSE 0 END AS octant
-  FROM oct
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(CASE WHEN flat THEN 1 ELSE 0 END) AS BIGINT) AS n_flat,
-       {octs},
-       CAST(SUM(abs(gx) + abs(gy)) AS BIGINT) AS grad_l1_sum,
-       CAST(SUM((CASE WHEN flat THEN 0 ELSE octant + 1 END)
-                * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS orient_checksum
-FROM px GROUP BY image_id ORDER BY image_id
 """
 
 
@@ -3628,8 +2891,7 @@ ORDER BY image_id
 
 def _warp_mosaic_ctes(fx: Path, method: str = "nearest") -> tuple[str, dict]:
     """Shared CTE prefix for the warped-mosaic oracles (_sql_reproject,
-    _sql_reproject_bilinear, _sql_mosaic_blend, _sql_mosaic_regions,
-    _sql_proximity and _sql_focal_mosaic): grid enumeration,
+    _sql_reproject_bilinear and _sql_mosaic_blend): grid enumeration,
     inverse-mapped pixel centers, first-valid source hit, and the gathered
     ramp value per target pixel.  Returns (cte_text, grid_constants)."""
     from .. import oracle as orc
@@ -3799,95 +3061,6 @@ SELECT a.tid AS tile_id, 64 AS w, 64 AS h, a.n_filled,
        CAST(s.n_sources AS INT) AS n_sources, a.checksum
 FROM agg a JOIN nsrc s ON s.tid = a.tid
 ORDER BY tile_id
-"""
-
-
-def _sql_proximity(fx: Path) -> str:
-    """DuckDB twin of q_proximity: the same global mosaic pixel relation
-    (unfilled = 0), features = pixels >= threshold, and per pixel the min
-    squared euclidean distance over a LEFT band-join against features
-    within the Chebyshev window (sentinel when empty) — the seam-free
-    single-relation evaluation the engine's R-px halo must reproduce.
-    Output tiles restricted to grid tiles with >= 1 source, exactly the
-    tiles warp.reproject emits."""
-    R, T = PROX_R, PROX_T
-    sent = 2 * R * R + 1
-    ctes, _ = _warp_mosaic_ctes(fx)
-    return ctes + f""",
-pxv AS (
-  SELECT p.tid, (p.tid // 4) * 64 + p.i AS gi, (p.tid % 4) * 64 + p.j AS gj,
-         COALESCE(v.v, 0) AS pv
-  FROM px p LEFT JOIN val v ON v.tid = p.tid AND v.i = p.i AND v.j = p.j
-),
-feat AS (SELECT gi, gj FROM pxv WHERE pv >= {T}),
-d AS (
-  SELECT p.tid, p.gi, p.gj,
-         COALESCE(MIN((p.gi - f.gi) * (p.gi - f.gi)
-                      + (p.gj - f.gj) * (p.gj - f.gj)), {sent}) AS d2
-  FROM pxv p LEFT JOIN feat f
-    ON f.gi BETWEEN p.gi - {R} AND p.gi + {R}
-   AND f.gj BETWEEN p.gj - {R} AND p.gj + {R}
-  GROUP BY p.tid, p.gi, p.gj
-),
-agg AS (
-  SELECT tid,
-         CAST(SUM(CASE WHEN d2 < {sent} THEN 1 ELSE 0 END) AS BIGINT) AS n_reached,
-         CAST(SUM(CASE WHEN d2 < {sent} THEN d2 ELSE 0 END) AS BIGINT) AS sum_d2,
-         CAST(SUM(d2 * (gi * 256 + gj + 1)) AS BIGINT) AS d2_checksum
-  FROM d GROUP BY tid
-),
-nf AS (
-  SELECT tid, CAST(SUM(CASE WHEN pv >= {T} THEN 1 ELSE 0 END) AS BIGINT) AS n_feat
-  FROM pxv GROUP BY tid
-)
-SELECT a.tid AS tile_id, nf.n_feat, a.n_reached, a.sum_d2, a.d2_checksum
-FROM agg a JOIN nf ON nf.tid = a.tid JOIN nsrc s ON s.tid = a.tid
-ORDER BY tile_id
-"""
-
-
-def _sql_focal_mosaic(fx: Path) -> str:
-    """DuckDB twin of q_focal_mosaic: materialize the whole warped mosaic
-    as ONE global pixel relation (the same val CTE the reproject oracle
-    gathers from, unfilled pixels = 0 exactly as the engine encodes them),
-    then evaluate the 3x3 box sum SEPARABLY (3-row window sum, then 3-col
-    window sum of that) and the central-difference gradient via lag/lead —
-    i.e., the seam-free single-array evaluation the engine's halo exchange
-    must reproduce bit-for-bit."""
-    ctes, _ = _warp_mosaic_ctes(fx)
-    return ctes + """,
-mos AS (
-  SELECT (p.tid // 4) * 64 + p.i AS gi, (p.tid % 4) * 64 + p.j AS gj,
-         COALESCE(v.v, 0) AS v
-  FROM px p LEFT JOIN val v ON v.tid = p.tid AND v.i = p.i AND v.j = p.j
-),
-h3 AS (
-  SELECT gi, gj, v,
-         SUM(v) OVER (PARTITION BY gi ORDER BY gj
-                      ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS s3h,
-         ABS(LEAD(v) OVER (PARTITION BY gi ORDER BY gj)
-             - LAG(v) OVER (PARTITION BY gi ORDER BY gj)) AS gx
-  FROM mos
-),
-v3 AS (
-  SELECT gi, gj, gx,
-         SUM(s3h) OVER (PARTITION BY gj ORDER BY gi
-                        ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS fsum,
-         ABS(LEAD(v) OVER (PARTITION BY gj ORDER BY gi)
-             - LAG(v) OVER (PARTITION BY gj ORDER BY gi)) AS gy
-  FROM h3
-),
-inter AS (
-  SELECT (gi // 64) * 4 + (gj // 64) AS tile_id, gi, gj,
-         fsum, gx + gy AS grad
-  FROM v3 WHERE gi BETWEEN 1 AND 254 AND gj BETWEEN 1 AND 254
-)
-SELECT tile_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(fsum * (gi * 256 + gj + 1)) AS BIGINT) AS focal_checksum,
-       CAST(SUM(grad) AS BIGINT) AS grad_l1_sum,
-       CAST(MAX(grad) AS BIGINT) AS grad_max
-FROM inter GROUP BY tile_id ORDER BY tile_id
 """
 
 
@@ -4236,69 +3409,6 @@ ORDER BY s.image_id
 """
 
 
-def _sql_focal_stats(fx: Path, w: int) -> str:
-    """DuckDB twin of q_focal_stats: the 9-point box sum and 4-point
-    central-difference gradient evaluated directly from the ramp formula
-    at each interior pixel."""
-    box = " + ".join(
-        f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-        for di in (-1, 0, 1)
-        for dj in (-1, 0, 1)
-    )
-    grad = (
-        f"ABS(CAST({osql.ramp_value_expr('gi.i', 'gj.j + 1')} AS BIGINT)"
-        f" - CAST({osql.ramp_value_expr('gi.i', 'gj.j - 1')} AS BIGINT))"
-        f" + ABS(CAST({osql.ramp_value_expr('gi.i + 1', 'gj.j')} AS BIGINT)"
-        f" - CAST({osql.ramp_value_expr('gi.i - 1', 'gj.j')} AS BIGINT))"
-    )
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         ({box}) AS fsum, ({grad}) AS grad
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_FOCAL_MOD} = 0
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(fsum * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS focal_checksum,
-       CAST(SUM(grad) AS BIGINT) AS grad_l1_sum,
-       CAST(MAX(grad) AS BIGINT) AS grad_max
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-def _sql_change_detect(fx: Path, w: int) -> str:
-    """DuckDB twin of q_change_detect: both sides' pixels re-derived from
-    their own ramp formulas, diffed as BIGINTs."""
-    va = osql.ramp_value_expr("gi.i", "gj.j", idx="ia", fmt="fmt_a")
-    vb = osql.ramp_value_expr("gi.i", "gj.j", idx="ib", fmt="fmt_b")
-    return f"""
-WITH img AS (
-  SELECT CAST(substr(image_id, 4, 10) AS BIGINT) AS idx, fmt
-  FROM read_parquet('{fx / 'images.parquet'}')
-),
-pairs AS (
-  SELECT a.idx // 2 AS pair_id, a.idx AS ia, b.idx AS ib,
-         a.fmt AS fmt_a, b.fmt AS fmt_b
-  FROM img a JOIN img b ON b.idx = a.idx + 1
-  WHERE a.idx % 2 = 0 AND a.idx < {_DIFF_LIM}
-),
-px AS (
-  SELECT pair_id, abs(CAST({va} AS BIGINT) - CAST({vb} AS BIGINT)) AS d
-  FROM pairs,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-)
-SELECT pair_id,
-       CAST(SUM(CASE WHEN d <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-       CAST(MAX(d) AS BIGINT) AS max_abs,
-       CAST(SUM(d) AS BIGINT) AS sum_abs
-FROM px GROUP BY pair_id ORDER BY pair_id
-"""
-
-
 def _sql_pixel_quantiles(fx: Path, w: int) -> str:
     vals = ", ".join(f"({q})" for q in _HIST_QS)
     return f"""
@@ -4466,106 +3576,6 @@ FROM px GROUP BY media_id ORDER BY media_id
 """
 
 
-_CURV_MOD = 89
-
-
-def q_terrain_curvature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zevenbergen-Thorne second-derivative curvature (operators/algebra.
-    curvature_stats — `gdaldem`-family DEM analysis): integer-exact
-    Laplacian / cross-derivative surfaces per tile, one fused map-only
-    Arrow pass, oracle re-derived from the ramp formula."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _CURV_MOD == 0
-    )
-    return (
-        algebra.curvature_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_terrain_curvature(fx: Path, w: int) -> str:
-    """DuckDB twin of q_terrain_curvature: the Z-T stencils evaluated
-    directly from the ramp formula at each interior pixel."""
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    zxx = f"({rv(0, -1)} - 2*{rv(0, 0)} + {rv(0, 1)})"
-    zyy = f"({rv(-1, 0)} - 2*{rv(0, 0)} + {rv(1, 0)})"
-    zxy4 = f"({rv(1, 1)} + {rv(-1, -1)} - {rv(-1, 1)} - {rv(1, -1)})"
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         {zxx} + {zyy} AS lap, {zxy4} AS zxy4
-  FROM tiles,
-       generate_series(1, {w - 2}) AS gi(i), generate_series(1, {w - 2}) AS gj(j)
-  WHERE idx % {_CURV_MOD} = 0
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(lap) AS BIGINT) AS lap_sum,
-       CAST(SUM(abs(lap)) AS BIGINT) AS lap_abs_sum,
-       CAST(SUM(CASE WHEN lap < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_convex,
-       CAST(SUM(CASE WHEN lap > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_concave,
-       CAST(SUM(zxy4 * zxy4) AS BIGINT) AS zxy_sq_sum,
-       CAST(SUM(lap * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS lap_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-_HORIZON_MOD = 83
-
-
-def q_horizon_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cast-shadow census along the west->east sun ray (operators/
-    algebra.horizon_shadow_stats — GRASS r.horizon / r.sun analog): the
-    per-pixel over-the-ray test linearized to a running maximum, so both
-    engines are O(pixels), not O(pixels x width)."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _HORIZON_MOD == 0
-    )
-    return (
-        algebra.horizon_shadow_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_horizon_shadow(fx: Path, w: int) -> str:
-    """DuckDB twin of q_horizon_shadow: s = v*DEN + j*NUM, shadowed iff
-    the window MAX over columns 0..j-1 of the same row exceeds s."""
-    from ..operators.algebra import HORIZON_DEN, HORIZON_NUM
-
-    v = osql.ramp_value_expr("gi.i", "gj.j")
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         CAST({v} AS BIGINT) * {HORIZON_DEN} + gj.j * {HORIZON_NUM} AS s
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_HORIZON_MOD} = 0
-),
-sh AS (
-  SELECT image_id, i, j, s,
-         MAX(s) OVER (PARTITION BY image_id, i ORDER BY j
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS m
-  FROM px
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_px,
-       CAST(SUM(CASE WHEN m > s THEN 1 ELSE 0 END) AS BIGINT) AS n_shadow,
-       CAST(SUM(CASE WHEN m > s THEN i * {w} + j + 1 ELSE 0 END) AS BIGINT)
-         AS shadow_checksum
-FROM sh GROUP BY image_id ORDER BY image_id
-"""
-
-
 _SEAM_MOD = 149
 
 
@@ -4651,245 +3661,6 @@ SELECT component,
        CAST(MAX(floor(rymax + 0.5)) AS BIGINT) AS dymax
 FROM comp JOIN b USING (zone_id)
 GROUP BY component ORDER BY component
-"""
-
-
-# --- round-2 batch: otsu / focal median / openness / dhash ------------------
-
-_OTSU_MOD = 53
-
-
-def q_otsu(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-tile Otsu threshold (algebra.otsu_stats — skimage
-    threshold_otsu analog) on the exact integer-key surface.  Map-only
-    fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _OTSU_MOD == 0
-    )
-    return (
-        algebra.otsu_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_otsu(fx: Path, w: int) -> str:
-    n_px = w * w
-    K = (n_px * n_px // 4) ** 2
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, CAST({ramp} AS BIGINT) AS v
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_OTSU_MOD} = 0
-),
-hist AS (
-  SELECT image_id, v, CAST(COUNT(*) AS BIGINT) AS c
-  FROM px GROUP BY image_id, v
-),
-cum AS (
-  SELECT image_id, v AS t,
-         SUM(c) OVER (PARTITION BY image_id ORDER BY v) AS w0,
-         SUM(v * c) OVER (PARTITION BY image_id ORDER BY v) AS s0,
-         SUM(c) OVER (PARTITION BY image_id) AS n,
-         SUM(v * c) OVER (PARTITION BY image_id) AS s_tot
-  FROM hist
-),
-scored AS (
-  SELECT image_id, t, w0, s0, n, s_tot,
-         (s_tot::HUGEINT * w0 - n::HUGEINT * s0) AS a,
-         (w0::HUGEINT * (n - w0)) AS b
-  FROM cum WHERE w0 > 0 AND w0 < n
-),
-best AS (
-  SELECT image_id, t, w0, s0, n, s_tot,
-         row_number() OVER (
-           PARTITION BY image_id
-           ORDER BY (a * a * {K}::HUGEINT) // b DESC, t ASC) AS rn
-  FROM scored
-)
-SELECT image_id, CAST(t AS INTEGER) AS otsu_t,
-       CAST(w0 AS BIGINT) AS n_below,
-       CAST(n - w0 AS BIGINT) AS n_above,
-       CAST(s0 AS BIGINT) AS sum_below,
-       CAST(s_tot - s0 AS BIGINT) AS sum_above
-FROM best WHERE rn = 1 ORDER BY image_id
-"""
-
-
-_MEDF_MOD = 67
-
-
-def q_focal_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3x3 focal-median census (algebra.focal_median_stats — scipy
-    median_filter / salt-and-pepper denoise analog).  Map-only fused
-    Arrow pass; median of 9 ints is the exact 5th order statistic."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _MEDF_MOD == 0
-    )
-    return (
-        algebra.focal_median_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_focal_median(fx: Path, w: int) -> str:
-    def rv(di: int, dj: int) -> str:
-        return (
-            f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-        )
-
-    nine = ", ".join(rv(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1))
-    lo, hi = 1, w - 2
-    iw = w - 2
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j,
-         list_sort([{nine}])[5] AS med,
-         {rv(0, 0)} AS c0
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_MEDF_MOD} = 0
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(med) AS BIGINT) AS sum_med,
-       CAST(SUM(CASE WHEN med <> c0 THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-       CAST(SUM(med * ((i - 1) * {iw} + (j - 1) + 1)) AS BIGINT) AS med_checksum
-FROM px GROUP BY image_id ORDER BY image_id
-"""
-
-
-_OPEN_MOD = 47
-
-
-def q_openness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-ray topographic-openness / horizon census (algebra.
-    openness_stats — Yokoyama positive-openness analog) on the exact
-    lcm-scaled rational-angle surface.  Map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _OPEN_MOD == 0
-    )
-    return (
-        algebra.openness_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "dir")
-    )
-
-
-def _sql_openness(fx: Path, w: int) -> str:
-    import math
-
-    ci = w // 2
-    L = min(ci, w - 1 - ci)
-    D = math.lcm(*range(1, L + 1))
-    z0 = osql.ramp_value_expr(str(ci), str(ci))
-    zk = osql.ramp_value_expr(f"{ci} + k.k * d.di", f"{ci} + k.k * d.dj")
-    dirs = ",".join(
-        f"({i},{di},{dj})"
-        for i, (di, dj) in enumerate(
-            ((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1))
-        )
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-rays AS (
-  SELECT image_id, d.dir, k.k,
-         CAST({zk} AS BIGINT) - CAST({z0} AS BIGINT) AS p
-  FROM tiles,
-       (VALUES {dirs}) AS d(dir, di, dj),
-       generate_series(1, {L}) AS k(k)
-  WHERE idx % {_OPEN_MOD} = 0
-),
-scored AS (SELECT *, p * ({D} // k) AS skey FROM rays),
-agg AS (
-  SELECT image_id, dir,
-         CAST(SUM(CASE WHEN p > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_rising,
-         CAST(SUM(p * k) AS BIGINT) AS ray_checksum
-  FROM scored GROUP BY image_id, dir
-),
-hor AS (
-  SELECT image_id, dir, k, p,
-         row_number() OVER (
-           PARTITION BY image_id, dir ORDER BY skey DESC, k ASC) AS rn
-  FROM scored
-)
-SELECT h.image_id, CAST(h.dir AS INTEGER) AS dir,
-       CAST(h.k AS INTEGER) AS horizon_k, CAST(h.p AS BIGINT) AS horizon_num,
-       a.n_rising, a.ray_checksum
-FROM hor h JOIN agg a USING (image_id, dir)
-WHERE h.rn = 1 ORDER BY h.image_id, h.dir
-"""
-
-
-_VIEW_MOD = 53
-
-
-def q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-ray line-of-sight viewshed census (algebra.viewshed_stats —
-    gdal_viewshed analog) with running-max visibility on the exact
-    lcm-scaled rational-angle surface.  Map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _VIEW_MOD == 0
-    )
-    return (
-        algebra.viewshed_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "dir")
-    )
-
-
-def _sql_viewshed(fx: Path, w: int) -> str:
-    import math
-
-    from ..operators.algebra import VIEWSHED_OBS_H
-
-    ci = w // 2
-    L = min(ci, w - 1 - ci)
-    D = math.lcm(*range(1, L + 1))
-    z0 = osql.ramp_value_expr(str(ci), str(ci))
-    zk = osql.ramp_value_expr(f"{ci} + k.k * d.di", f"{ci} + k.k * d.dj")
-    dirs = ",".join(
-        f"({i},{di},{dj})"
-        for i, (di, dj) in enumerate(
-            ((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1))
-        )
-    )
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-rays AS (
-  SELECT image_id, d.dir, k.k,
-         CAST({zk} AS BIGINT) - CAST({z0} AS BIGINT) - {VIEWSHED_OBS_H} AS p
-  FROM tiles,
-       (VALUES {dirs}) AS d(dir, di, dj),
-       generate_series(1, {L}) AS k(k)
-  WHERE idx % {_VIEW_MOD} = 0
-),
-scored AS (SELECT *, p * ({D} // k) AS skey FROM rays),
-vis AS (
-  SELECT image_id, dir, k,
-         CASE WHEN k = 1 THEN 1
-              WHEN skey > MAX(skey) OVER (
-                  PARTITION BY image_id, dir ORDER BY k
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              THEN 1 ELSE 0 END AS v
-  FROM scored
-)
-SELECT image_id, CAST(dir AS INTEGER) AS dir,
-       CAST(SUM(v) AS BIGINT) AS n_visible,
-       CAST(MAX(CASE WHEN v = 1 THEN k END) AS INTEGER) AS furthest_k,
-       CAST(COALESCE(MIN(CASE WHEN v = 0 THEN k END), 0) AS INTEGER)
-           AS first_blocked,
-       CAST(SUM(v * k) AS BIGINT) AS vis_checksum
-FROM vis GROUP BY image_id, dir ORDER BY image_id, dir
 """
 
 
@@ -5005,70 +3776,6 @@ SELECT image_id, CAST(b.cls AS INTEGER) AS cls,
 FROM px JOIN (VALUES {breaks}) AS b(cls, lo, hi)
   ON px.v >= b.lo AND px.v <= b.hi
 GROUP BY image_id, b.cls ORDER BY image_id, cls
-"""
-
-
-_STRETCH_MOD = 43
-
-
-def q_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percentile contrast stretch (algebra.stretch_stats — the
-    gdal_translate -scale / QGIS 2–98% cumulative-cut default) on
-    rank-exact order-statistic bounds.  Map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _STRETCH_MOD == 0
-    )
-    return (
-        algebra.stretch_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_stretch(fx: Path, w: int) -> str:
-    from ..operators.algebra import STRETCH_P_HI, STRETCH_P_LO
-
-    n = w * w
-    klo, khi = n * STRETCH_P_LO // 100, n * STRETCH_P_HI // 100
-    v = osql.ramp_value_expr("gi.i", "gj.j")
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-px AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, CAST({v} AS BIGINT) AS v
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_STRETCH_MOD} = 0
-),
-ranked AS (
-  SELECT image_id, v,
-         row_number() OVER (PARTITION BY image_id ORDER BY v) AS rn
-  FROM px
-),
-bounds AS (
-  SELECT image_id,
-         MAX(CASE WHEN rn = {klo + 1} THEN v END) AS lo,
-         MAX(CASE WHEN rn = {khi + 1} THEN v END) AS hi
-  FROM ranked GROUP BY image_id
-),
-s AS (
-  SELECT p.image_id, p.v, b.lo, b.hi,
-         CASE WHEN b.hi = b.lo THEN 0
-              WHEN p.v <= b.lo THEN 0
-              WHEN p.v >= b.hi THEN 255
-              ELSE ((p.v - b.lo) * 255) // (b.hi - b.lo) END AS o,
-         p.i * {w} + p.j + 1 AS wt
-  FROM px p JOIN bounds b USING (image_id)
-)
-SELECT image_id,
-       CAST(MAX(lo) AS BIGINT) AS lo,
-       CAST(MAX(hi) AS BIGINT) AS hi,
-       CAST(SUM(CASE WHEN v <= lo THEN 1 ELSE 0 END) AS BIGINT) AS n_sat_lo,
-       CAST(SUM(CASE WHEN hi > lo AND v >= hi THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_sat_hi,
-       CAST(SUM(o) AS BIGINT) AS out_sum,
-       CAST(SUM(o * wt) AS BIGINT) AS out_checksum
-FROM s GROUP BY image_id ORDER BY image_id
 """
 
 
@@ -5724,188 +4431,6 @@ def _sql_transect_profile(fx: Path) -> str:
     return osql.value_at_coords_sql(
         str(fx / "images.parquet"), "", pts_sql=pts
     )
-
-
-# --- round-3: watershed basin labeling ---------------------------------------
-
-_WSHED_MOD = 211
-
-
-def q_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watershed basin labeling (algebra.watershed_basins): D8 paths
-    resolved by pointer jumping; per tile the basin partition census.
-    Oracle follows the identical integer steepest-descent graph with a
-    recursive CTE to each path's terminal."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _WSHED_MOD == 0
-    )
-    return (
-        algebra.watershed_basins(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_watershed(fx: Path, w: int) -> str:
-    from ..operators.algebra import _D8_DIRS
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    c0 = rv(0, 0)
-    scores = []
-    for code, di, dj, mult in _D8_DIRS:
-        drop = f"({c0} - {rv(di, dj)})"
-        scores.append(
-            (code, f"(CASE WHEN {drop} > 0 THEN {mult} * {drop} * {drop} ELSE -1 END)")
-        )
-    score_sel = ", ".join(f"{e} AS s{code}" for code, e in scores)
-    best = "greatest(" + ", ".join(f"s{code}" for code, _ in scores) + ")"
-    dir_case = "CASE WHEN " + best + " <= 0 THEN 0"
-    for code, _ in scores:
-        dir_case += f" WHEN s{code} = {best} THEN {code}"
-    dir_case += " END"
-    di_case = "CASE code " + " ".join(
-        f"WHEN {c} THEN {di}" for c, di, dj, _ in _D8_DIRS) + " END"
-    dj_case = "CASE code " + " ".join(
-        f"WHEN {c} THEN {dj}" for c, di, dj, _ in _D8_DIRS) + " END"
-    lo, hi = 1, w - 2
-    iw = w - 2
-    return f"""
-WITH RECURSIVE {osql.georegister_cte(str(fx / 'images.parquet'))},
-sc AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, {score_sel}
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_WSHED_MOD} = 0
-),
-px AS MATERIALIZED (SELECT image_id, i, j, {dir_case} AS code FROM sc),
-edges AS MATERIALIZED (
-  SELECT image_id, i, j, i + ({di_case}) AS ti, j + ({dj_case}) AS tj
-  FROM px WHERE code <> 0
-),
-walk(image_id, pos, ci, cj) AS (
-  SELECT image_id, (i - {lo}) * {iw} + (j - {lo}) + 1, i, j FROM px
-  UNION ALL
-  SELECT wk.image_id, wk.pos, e.ti, e.tj
-  FROM walk wk JOIN edges e
-    ON e.image_id = wk.image_id AND e.i = wk.ci AND e.j = wk.cj
-),
--- terminal = the walk row with no outgoing edge (exactly one per pixel:
--- paths are deterministic and strictly descending, hence acyclic)
-term AS MATERIALIZED (
-  SELECT wk.image_id, wk.pos, wk.ci * {w} + wk.cj AS lab
-  FROM walk wk LEFT JOIN edges e
-    ON e.image_id = wk.image_id AND e.i = wk.ci AND e.j = wk.cj
-  WHERE e.i IS NULL
-),
-basins AS (
-  SELECT image_id, lab, COUNT(*) AS sz FROM term GROUP BY image_id, lab
-)
-SELECT t.image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(ANY_VALUE(b.n_basins) AS BIGINT) AS n_basins,
-       CAST(ANY_VALUE(b.n_int) AS BIGINT) AS n_interior_sinks,
-       CAST(ANY_VALUE(b.n_out) AS BIGINT) AS n_outlet_sinks,
-       CAST(ANY_VALUE(b.mx) AS BIGINT) AS max_basin,
-       CAST(SUM(t.lab * t.pos) AS BIGINT) AS label_checksum
-FROM term t JOIN (
-  SELECT image_id, COUNT(*) AS n_basins,
-         SUM(CASE WHEN lab // {w} BETWEEN {lo} AND {hi}
-                   AND lab % {w} BETWEEN {lo} AND {hi} THEN 1 ELSE 0 END) AS n_int,
-         SUM(CASE WHEN lab // {w} BETWEEN {lo} AND {hi}
-                   AND lab % {w} BETWEEN {lo} AND {hi} THEN 0 ELSE 1 END) AS n_out,
-         MAX(sz) AS mx
-  FROM basins GROUP BY image_id) b USING (image_id)
-GROUP BY t.image_id ORDER BY t.image_id
-"""
-
-
-_FLOWLEN_MOD = 223
-
-
-def q_flow_length(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Downstream flow length (algebra.flow_length_stats — ArcGIS
-    FlowLength analog): integer 5/7-chamfer D8 path lengths resolved by
-    pointer jumping with additive weights.  Oracle accumulates the same
-    step costs along the identical drainage graph with a recursive
-    CTE."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _FLOWLEN_MOD == 0
-    )
-    return (
-        algebra.flow_length_stats(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_flow_length(fx: Path, w: int) -> str:
-    from ..operators.algebra import _D8_DIRS
-
-    def rv(di: int, dj: int) -> str:
-        return f"CAST({osql.ramp_value_expr(f'gi.i + {di}', f'gj.j + {dj}')} AS BIGINT)"
-
-    c0 = rv(0, 0)
-    scores = []
-    for code, di, dj, mult in _D8_DIRS:
-        drop = f"({c0} - {rv(di, dj)})"
-        scores.append(
-            (code, f"(CASE WHEN {drop} > 0 THEN {mult} * {drop} * {drop} ELSE -1 END)")
-        )
-    score_sel = ", ".join(f"{e} AS s{code}" for code, e in scores)
-    best = "greatest(" + ", ".join(f"s{code}" for code, _ in scores) + ")"
-    dir_case = "CASE WHEN " + best + " <= 0 THEN 0"
-    for code, _ in scores:
-        dir_case += f" WHEN s{code} = {best} THEN {code}"
-    dir_case += " END"
-    di_case = "CASE code " + " ".join(
-        f"WHEN {c} THEN {di}" for c, di, dj, _ in _D8_DIRS) + " END"
-    dj_case = "CASE code " + " ".join(
-        f"WHEN {c} THEN {dj}" for c, di, dj, _ in _D8_DIRS) + " END"
-    # chamfer: cardinal (score mult 2) steps cost 5, diagonals 7
-    cost_case = "CASE code " + " ".join(
-        f"WHEN {c} THEN {5 if mult == 2 else 7}"
-        for c, _, _, mult in _D8_DIRS) + " END"
-    lo, hi = 1, w - 2
-    iw = w - 2
-    return f"""
-WITH RECURSIVE {osql.georegister_cte(str(fx / 'images.parquet'))},
-sc AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, {score_sel}
-  FROM tiles,
-       generate_series({lo}, {hi}) AS gi(i), generate_series({lo}, {hi}) AS gj(j)
-  WHERE idx % {_FLOWLEN_MOD} = 0
-),
-px AS MATERIALIZED (SELECT image_id, i, j, {dir_case} AS code FROM sc),
-edges AS MATERIALIZED (
-  SELECT image_id, i, j, i + ({di_case}) AS ti, j + ({dj_case}) AS tj,
-         {cost_case} AS cost
-  FROM px WHERE code <> 0
-),
-walk(image_id, pos, ci, cj, acc) AS (
-  SELECT image_id, (i - {lo}) * {iw} + (j - {lo}) + 1, i, j, 0 FROM px
-  UNION ALL
-  SELECT wk.image_id, wk.pos, e.ti, e.tj, wk.acc + e.cost
-  FROM walk wk JOIN edges e
-    ON e.image_id = wk.image_id AND e.i = wk.ci AND e.j = wk.cj
-),
-term AS (
-  SELECT wk.image_id, wk.pos, wk.acc
-  FROM walk wk LEFT JOIN edges e
-    ON e.image_id = wk.image_id AND e.i = wk.ci AND e.j = wk.cj
-  WHERE e.i IS NULL
-)
-SELECT image_id,
-       CAST(COUNT(*) AS BIGINT) AS n_interior,
-       CAST(SUM(CASE WHEN acc = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-       CAST(MAX(acc) AS BIGINT) AS max_len,
-       CAST(SUM(acc) AS BIGINT) AS sum_len,
-       CAST(SUM(acc * pos) AS BIGINT) AS len_checksum
-FROM term GROUP BY image_id ORDER BY image_id
-"""
 
 
 def q_adaptive_quadtree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6812,63 +5337,6 @@ FROM d ORDER BY media_id, frame_no
 """
 
 
-_COST_MOD = 163
-
-
-def q_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round accumulated-cost distance (algebra.cost_distance —
-    ArcGIS CostDistance / r.cost min-plus relaxation from the tile
-    center), map-only fused Arrow pass."""
-    from ..operators import algebra
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _COST_MOD == 0
-    )
-    return (
-        algebra.cost_distance(tiles)
-        .repartition(1).sortWithinPartitions("image_id")
-    )
-
-
-def _sql_cost_distance(fx: Path, w: int) -> str:
-    from ..operators.algebra import COST_INF, COST_ROUNDS
-
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    rounds = []
-    prev = "d0"
-    for r in range(1, COST_ROUNDS + 1):
-        rounds.append(f"""
-d{r} AS (
-  SELECT a.image_id, a.i, a.j, a.v,
-         LEAST(a.d, COALESCE(MIN(b.d), {COST_INF}) + a.v + 1) AS d
-  FROM {prev} a
-  CROSS JOIN (VALUES (-1, 0), (1, 0), (0, -1), (0, 1)) o(di, dj)
-  LEFT JOIN {prev} b
-    ON b.image_id = a.image_id AND b.i = a.i + o.di AND b.j = a.j + o.dj
-  GROUP BY a.image_id, a.i, a.j, a.v, a.d
-)""")
-        prev = f"d{r}"
-    return f"""
-WITH {osql.georegister_cte(str(fx / 'images.parquet'))},
-d0 AS (
-  SELECT image_id, gi.i AS i, gj.j AS j, CAST({ramp} AS BIGINT) AS v,
-         CASE WHEN gi.i = {w // 2} AND gj.j = {w // 2}
-              THEN 0 ELSE {COST_INF} END AS d
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_COST_MOD} = 0
-),
-{", ".join(r.lstrip() for r in rounds)}
-SELECT image_id,
-       CAST(SUM(CASE WHEN d < {COST_INF} THEN 1 ELSE 0 END) AS BIGINT) AS n_reached,
-       CAST(SUM(CASE WHEN d < {COST_INF} THEN d ELSE 0 END) AS BIGINT) AS cost_sum,
-       CAST(MAX(CASE WHEN d < {COST_INF} THEN d ELSE 0 END) AS BIGINT) AS cost_max,
-       CAST(SUM(CASE WHEN d < {COST_INF} THEN d * (i * {w} + j + 1) ELSE 0 END) AS BIGINT)
-         AS cost_checksum
-FROM {prev} GROUP BY image_id ORDER BY image_id
-"""
-
-
 def q_tone_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer tone census (multimodal.tone_census — Goertzel-style
     single-bin DFT power with inlined integer trig tables) over the
@@ -7070,83 +5538,6 @@ SELECT f.c_nationkey,
        CAST(f.cents = m.cents_merged AS BIGINT) AS rev_ok
 FROM full_v f JOIN merged m ON f.c_nationkey = m.c_nationkey
 ORDER BY f.c_nationkey
-"""
-
-
-def q_percolation_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Site-percolation threshold sweep (regions.percolation_sweep):
-    cluster-size trajectory across 4 occupancy levels, decode-once
-    map-only pass; oracle = the region-label recursive closure run per
-    threshold."""
-    from ..operators import regions
-
-    tiles = geo.georegister(_images(spark, sf_dir)).where(
-        geo.image_idx() % _REGION_MOD == 0
-    )
-    return (
-        regions.percolation_sweep(tiles)
-        .repartition(1).sortWithinPartitions("image_id", "threshold")
-    )
-
-
-def _sql_percolation_sweep(fx: Path, w: int) -> str:
-    from ..operators.regions import PERC_THRESHOLDS
-
-    ramp = osql.ramp_value_expr("gi.i", "gj.j")
-    arms = []
-    for t in PERC_THRESHOLDS:
-        arms.append(f"""
-px{t} AS (
-  SELECT image_id, gi.i * {w} + gj.j AS pid
-  FROM tiles,
-       generate_series(0, {w - 1}) AS gi(i), generate_series(0, {w - 1}) AS gj(j)
-  WHERE idx % {_REGION_MOD} = 0 AND CAST({ramp} AS BIGINT) >= {t}
-),
-edges{t} AS (
-  SELECT a.image_id, a.pid AS u, b.pid AS v
-  FROM px{t} a JOIN px{t} b ON b.image_id = a.image_id
-   AND (b.pid = a.pid + {w}
-        OR (b.pid = a.pid + 1 AND a.pid % {w} <> {w - 1}))
-),
-sym{t} AS (SELECT image_id, u, v FROM edges{t}
-           UNION SELECT image_id, v, u FROM edges{t}),
-reach{t}(image_id, pid, r) AS (
-  SELECT image_id, pid, pid FROM px{t}
-  UNION
-  SELECT e.image_id, e.v, reach{t}.r
-  FROM reach{t} JOIN sym{t} e
-    ON e.image_id = reach{t}.image_id AND e.u = reach{t}.pid
-),
-labels{t} AS (
-  SELECT image_id, pid, MIN(r) AS comp FROM reach{t} GROUP BY image_id, pid
-),
-comps{t} AS (
-  SELECT image_id, comp, COUNT(*) AS sz FROM labels{t} GROUP BY image_id, comp
-),
-agg{t} AS (
-  SELECT image_id, {t} AS threshold, SUM(sz) AS n_fg, COUNT(*) AS n_regions,
-         MAX(sz) AS max_region, SUM((comp + 1) * sz) AS region_checksum
-  FROM comps{t} GROUP BY image_id
-)""")
-    union = " UNION ALL ".join(
-        f"SELECT * FROM agg{t}" for t in PERC_THRESHOLDS
-    )
-    grid = " UNION ALL ".join(
-        f"SELECT image_id, {t} AS threshold FROM sel" for t in PERC_THRESHOLDS
-    )
-    return f"""
-WITH RECURSIVE {osql.georegister_cte(str(fx / 'images.parquet'))},
-sel AS (SELECT image_id FROM tiles WHERE idx % {_REGION_MOD} = 0),
-{", ".join(a.lstrip() for a in arms)},
-u AS ({union}),
-g AS ({grid})
-SELECT g.image_id, CAST(g.threshold AS BIGINT) AS threshold,
-       CAST(COALESCE(u.n_fg, 0) AS BIGINT) AS n_fg,
-       CAST(COALESCE(u.n_regions, 0) AS BIGINT) AS n_regions,
-       CAST(COALESCE(u.max_region, 0) AS BIGINT) AS max_region,
-       CAST(COALESCE(u.region_checksum, 0) AS BIGINT) AS region_checksum
-FROM g LEFT JOIN u ON u.image_id = g.image_id AND u.threshold = g.threshold
-ORDER BY g.image_id, g.threshold
 """
 
 
@@ -13501,14 +11892,11 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("mosaic_blend", q_mosaic_blend, lambda fx, *_: _sql_mosaic_blend(fx)),
     ("band_ndvi", q_band_ndvi, lambda fx, w, *_: _sql_band_ndvi(fx, w)),
     ("pansharpen", q_pansharpen, lambda fx, w, *_: _sql_pansharpen(fx, w)),
-    ("viewshed", q_viewshed, lambda fx, w, *_: _sql_viewshed(fx, w)),
-    ("stretch", q_stretch, lambda fx, w, *_: _sql_stretch(fx, w)),
     ("reclassify", q_reclassify, lambda fx, w, *_: _sql_reclassify(fx, w)),
     ("coverage_audit", q_coverage_audit, lambda fx, *_: _sql_coverage_audit(fx)),
     ("compaction_plan", q_compaction_plan, lambda fx, *_: _sql_compaction_plan(fx)),
     ("pixel_histogram", q_pixel_histogram, lambda fx, w, *_: _sql_pixel_histogram(fx, w)),
     ("pixel_quantiles", q_pixel_quantiles, lambda fx, w, *_: _sql_pixel_quantiles(fx, w)),
-    ("change_detect", q_change_detect, lambda fx, w, *_: _sql_change_detect(fx, w)),
     ("bitplane_census", q_bitplane, lambda fx, w, *_: _sql_bitplane(fx, w)),
     ("randaugment_census", q_randaugment, lambda fx, w, *_: _sql_randaugment(fx, w)),
     ("d4_transforms", q_d4_transforms, lambda fx, w, *_: _sql_d4_transforms(fx, w)),
@@ -13516,20 +11904,12 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("chroma_subsample", q_chroma_subsample, lambda fx, w, *_: _sql_chroma_subsample(fx, w)),
     ("gray_world", q_gray_world, lambda fx, w, *_: _sql_gray_world(fx, w)),
     ("pyramid_checksums", q_pyramid_checksums, lambda fx, w, *_: _sql_pyramid_checksums(fx, w)),
-    ("focal_stats", q_focal_stats, lambda fx, w, *_: _sql_focal_stats(fx, w)),
-    ("focal_mosaic", q_focal_mosaic, lambda fx, *_: _sql_focal_mosaic(fx)),
-    ("proximity", q_proximity, lambda fx, *_: _sql_proximity(fx)),
-    ("terrain_slope", q_terrain_slope, lambda fx, w, *_: _sql_terrain_slope(fx, w)),
-    ("raster_regions", q_raster_regions, lambda fx, w, *_: _sql_raster_regions(fx, w)),
-    ("region_geometry", q_region_geometry, lambda fx, w, *_: _sql_region_geometry(fx, w)),
-    ("mosaic_regions", q_mosaic_regions, lambda fx, *_: _sql_mosaic_regions(fx)),
     ("rasterize_burn", q_rasterize, lambda fx, w, *_: _sql_rasterize(fx, w)),
     ("equalize", q_equalize, lambda fx, w, *_: _sql_equalize(fx, w)),
     ("hist_match", q_hist_match, lambda fx, w, *_: _sql_hist_match(fx, w)),
     ("stratified_sample", q_stratified_sample, lambda *_: _sql_stratified_sample()),
     ("zonal_quantiles", q_zonal_quantiles, lambda fx, w, *_: _sql_zonal_quantiles(fx, w)),
     ("zonal_majority", q_zonal_majority, lambda fx, w, *_: _sql_zonal_majority(fx, w)),
-    ("hillshade", q_hillshade, lambda fx, w, *_: _sql_hillshade(fx, w)),
     ("tile_entropy", q_tile_entropy, lambda fx, w, *_: _sql_tile_entropy(fx, w)),
     ("caption_conflict", q_caption_conflict, lambda fx, *_: _sql_caption_conflict(fx)),
     ("xyz_quadkey", q_xyz_quadkey, lambda fx, *_: _sql_xyz_quadkey(fx)),
@@ -13540,16 +11920,8 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("temporal_trend", q_temporal_trend, lambda fx, w, *_: _sql_temporal_trend(fx, w)),
     ("idw_interpolate", q_idw, lambda fx, *_: _sql_idw(fx)),
     ("glcm_texture", q_glcm, lambda fx, w, *_: _sql_glcm(fx, w)),
-    ("flow_direction", q_flow_direction, lambda fx, w, *_: _sql_flow_direction(fx, w)),
-    ("flow_accum", q_flow_accum, lambda fx, w, *_: _sql_flow_accum(fx, w)),
-    ("tpi_terrain", q_tpi_terrain, lambda fx, w, *_: _sql_tpi_terrain(fx, w)),
-    ("crosstab", q_crosstab, lambda fx, w, *_: _sql_crosstab(fx, w)),
-    ("sobel_orient", q_sobel_orient, lambda fx, w, *_: _sql_sobel_orient(fx, w)),
     ("moran_lattice", q_moran, lambda fx, w, *_: _sql_moran(fx, w)),
     ("geary_lattice", q_geary, lambda fx, w, *_: _sql_geary(fx, w)),
-    ("otsu_threshold", q_otsu, lambda fx, w, *_: _sql_otsu(fx, w)),
-    ("focal_median", q_focal_median, lambda fx, w, *_: _sql_focal_median(fx, w)),
-    ("openness", q_openness, lambda fx, w, *_: _sql_openness(fx, w)),
     ("dhash_compute", q_dhash_compute, lambda fx, w, *_: _sql_dhash_compute(fx, w)),
     ("dhash_near_dup", q_dhash_near_dup, lambda fx, w, *_: _sql_dhash_near_dup(fx, w)),
     ("kdop_support", q_kdop, lambda fx, w, *_: _sql_kdop(fx, w)),
@@ -13605,15 +11977,11 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("route_burn", q_route_burn, lambda fx, *_: _sql_route_burn(fx)),
     ("kde_heatmap", q_kde_heatmap, lambda fx, *_: _sql_kde_heatmap(fx)),
     ("transect_profile", q_transect_profile, lambda fx, *_: _sql_transect_profile(fx)),
-    ("watershed", q_watershed, lambda fx, w, *_: _sql_watershed(fx, w)),
-    ("flow_length", q_flow_length, lambda fx, w, *_: _sql_flow_length(fx, w)),
     ("adaptive_quadtree", q_adaptive_quadtree, lambda fx, *_: _sql_adaptive_quadtree(fx)),
     ("geodesic_assign", q_geodesic_assign, lambda fx, *_: _sql_geodesic_assign(fx)),
     ("payload_integrity", q_payload_integrity, lambda fx, *_: _sql_payload_integrity(fx)),
     ("od_matrix", q_od_matrix, lambda fx, *_: _sql_od_matrix(fx)),
     ("hilbert_range_scan", q_hilbert_range_scan, lambda fx, *_: _sql_hilbert_range_scan(fx)),
-    ("terrain_curvature", q_terrain_curvature, lambda fx, w, *_: _sql_terrain_curvature(fx, w)),
-    ("horizon_shadow", q_horizon_shadow, lambda fx, w, *_: _sql_horizon_shadow(fx, w)),
     ("zone_dissolve", q_zone_dissolve, lambda fx, *_: _sql_zone_dissolve(fx)),
     ("segment_snap", q_segment_snap, lambda fx, *_: _sql_segment_snap(fx)),
     ("box_iou", q_box_iou, lambda fx, *_: _sql_box_iou(fx)),
@@ -13621,7 +11989,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("segment_intersections", q_segment_intersections,
      lambda fx, *_: _sql_segment_intersections(fx)),
     ("shot_detect", q_shot_detect, lambda fx, *_: _sql_shot_detect(fx)),
-    ("cost_distance", q_cost_distance, lambda fx, w, *_: _sql_cost_distance(fx, w)),
     ("tone_census", q_tone_census, lambda fx, *_: _sql_tone_census(fx)),
     ("partition_skew_audit", q_partition_skew_audit, lambda fx, *_: _sql_partition_skew_audit(fx)),
     ("ivm_audit", q_ivm_audit, lambda *_: _sql_ivm_audit()),
@@ -13640,7 +12007,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("frechet_pairs", q_frechet_pairs, lambda fx, *_: _sql_frechet_pairs(fx)),
     ("polyline_simplify", q_polyline_simplify, lambda fx, *_: _sql_polyline_simplify(fx)),
     ("convex_hull", q_convex_hull, lambda fx, *_: _sql_convex_hull(fx)),
-    ("percolation_sweep", q_percolation_sweep, lambda fx, w, *_: _sql_percolation_sweep(fx, w)),
     ("zone_adjacency", q_zone_adjacency, lambda fx, *_: _sql_zone_adjacency(fx)),
     ("nn_zones", q_nn_zones, lambda fx, *_: _sql_nn_zones(fx)),
     ("pyramid_gap_census", q_pyramid_gap_census, lambda fx, *_: _sql_pyramid_gap_census(fx)),

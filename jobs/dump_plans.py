@@ -26,36 +26,28 @@ DEFAULT = [
     "value_at_coords",    # R12: dedup-first sampling, bytes join last
     "zonal_stats",        # E7: partial+final, pixel bytes never shuffle
     "knn_zones",          # E6: one map-only Arrow pass + broadcast id join
-    "focal_mosaic",       # halo exchange: strips shuffle, tiles co-partitioned
     "rasterize_burn",     # map-only burn, bytes pruned from scan
     "asof_clicks",        # one-exchange window as-of
     "minhash_lsh_pairs",  # D3: bounded band join
     "equalize",           # two-pass: O(256) LUT + broadcast remap
-    "terrain_slope",      # A15: map-only fused Arrow pass (Horn kernel)
-    "mosaic_regions",     # A17: seam strips + fragment-graph CC rounds
     "zonal_quantiles",    # A23: histogram partials, O(pairs*values) shuffle
     "cell_rollup",        # A19: aggregates-of-aggregates up the cell tree
     "zone_overlap",       # A26: cell-prefiltered pair join, no cross join
     "image_augment",      # A32: one fused Arrow hop, bytes never emitted
-    "region_geometry",    # A33: map-only per-region geometry
     "radius_join",        # A46: cell filter-refine, no cross join
     "str_pack",           # A45: distributed rank, no unpartitioned window
     "geohash_rollup",     # A49: 40-term interleave in one codegen Project
     "image_quality",      # A41: map-only fused Laplacian pass
     "idw_interpolate",    # A52: filter-refine neighbor candidates
-    "flow_direction",     # A58: map-only fused D8 pass
     "curation_pipeline",  # A59: composed gates, no pixel shuffle
     "zonal_frac",         # A89: fractional-coverage zonal, fused partials
     "pansharpen",         # A92: map-only fused Brovey pass
-    "viewshed",           # A93: map-only fused ray pass
-    "stretch",            # A94: per-tile executor sort, no Spark sort
     "reclassify",         # A96: census Arrow hop + broadcast range join
     "coverage_audit",     # A97: broadcast dim + tiny census LEFT join
     "geary_lattice",      # A99: co-located lattice join, two tiny aggs
     "semivariogram",      # A101: filter-refine pair join, slim bin agg
     "kde_heatmap",        # A103: cover-explode x anchor-cell equi-join
     "getis_ord",          # A104: co-located lattice join + 2-scalar bcast
-    "watershed",          # A107: map-only pointer-jumping pass
     "mst_boruvka",        # R3b: per-round min-struct agg + star contraction
     "merkle_cells",       # R3b: one Arrow decode + sorted md5 folds
     "pip_raycast",        # R3b: broadcast edges + parity groupBy
@@ -64,7 +56,6 @@ DEFAULT = [
     "ann_ivfpq",          # A114: bucket-pruned compressed-domain scan
     "kmeans_embed",       # A115: map-only assign + K-row driver update
     "dedup_components_star",  # A116: star-contraction CC rounds
-    "flow_length",        # A118: pointer jumping with additive weights
     "adaptive_quadtree",  # A121: per-level census + bounded hot broadcasts
     "od_matrix",          # A122: one user-key window + OD-pair agg
     "payload_integrity",  # A127: map-only flags, single-row agg, stack()
@@ -113,7 +104,7 @@ def main() -> None:
 
     from georaster_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     from georaster_spark.plans import contract
 
     queries = contract.spatial_queries()

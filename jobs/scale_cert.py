@@ -3,8 +3,10 @@
 exponents (VERDICT r3 item 2).
 
 For the headline job and the named queries, measure warm wall time at
-sf0.1 and sf1 (one decade apart) in the SAME local[32] session and
-report the per-query scaling exponent
+sf0.1 and sf1 (one decade apart) in the SAME session, which get_spark
+sizes to the host (the BASELINE.md heading names its
+spark.sparkContext.master, e.g. local[4]), and report the per-query
+scaling exponent
 
     alpha = log10(t_sf1 / t_sf0.1)
 
@@ -75,7 +77,8 @@ def main() -> int:
     from georaster_spark.plans import contract
 
     qmap = contract.spatial_queries()
-    spark = get_spark(master="local[32]", app_name="scale-cert")
+    spark = get_spark(app_name="scale-cert")
+    master = spark.sparkContext.master
     rows = []
     try:
         # headline at both scales (warm: one untimed run first)
@@ -136,7 +139,7 @@ def main() -> int:
         md = REPO / "BENCH" / "BASELINE.md"
         with md.open("a") as f:
             f.write("\n### sf0.1 -> sf1 scaling exponents "
-                    "(jobs/scale_cert.py, warm, local[32])\n\n")
+                    f"(jobs/scale_cert.py, warm, {master})\n\n")
             f.write("| query | t(sf0.1) | t(sf1) | alpha |\n|---|---|---|---|\n")
             for n, a, b, c in rows:
                 f.write(f"| {n} | {a:.1f}s | {b:.1f}s | "

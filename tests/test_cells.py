@@ -136,14 +136,3 @@ def test_cover2_fast_path_matches_general(spark):
     ).collect()
     for row in rows:
         assert list(row["fast"]) == list(row["general"])
-
-
-def test_morton_key_spark_matches_numpy(spark):
-    rng = np.random.default_rng(13)
-    x = rng.uniform(0, DOMAIN, 500)
-    y = rng.uniform(0, DOMAIN, 500)
-    c = oracle.cell_encode(x, y, 13)
-    expect = oracle.morton_key(c)
-    df = spark.createDataFrame([(int(v),) for v in c], "cell_id long")
-    got = df.select(cells.morton_key(F.col("cell_id"), 13).alias("m")).toPandas()["m"].to_numpy()
-    assert np.array_equal(got.astype(np.int64), expect)

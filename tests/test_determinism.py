@@ -15,11 +15,11 @@ REPO = Path(__file__).resolve().parent.parent
 
 QUERIES = [
     "tile_assign", "knn_zones", "zonal_stats", "minhash_lsh_pairs",
-    "cell_join_salted", "focal_mosaic", "asof_clicks",
+    "cell_join_salted", "asof_clicks",
     # round-3 additions: one per new operator family (shuffly shapes
     # where partition count could plausibly leak into the result)
     "box_nms", "segment_intersections",
-    "mst_boruvka", "ann_binary_hamming", "percolation_sweep",
+    "mst_boruvka", "ann_binary_hamming",
     # a 3-way join with a distributed top-k, and a cross-partition NTILE
     "shipping_priority", "ntile_deciles",
 ]

@@ -249,14 +249,6 @@ def test_rasterize_prunes_bytes_and_has_no_shuffle(spark, sf0001_dir):
     assert "Exchange" not in _plan(q)
 
 
-def test_focal_stats_is_map_only(spark, sf0001_dir):
-    """The focal pass is per-tile: no Exchange anywhere in the plan."""
-    from georaster_spark.operators import algebra
-
-    tiles = geo.georegister(spark.read.parquet(str(sf0001_dir / "images.parquet")))
-    assert "Exchange" not in _plan(algebra.focal_stats(tiles))
-
-
 def test_asof_join_single_shuffle(spark):
     """The union-and-carry as-of plan must shuffle exactly once (the
     window partition) — one Exchange node, keyed on the join key."""
@@ -302,15 +294,6 @@ def test_zonal_histogram_partials_are_slim(spark, sf0001_dir):
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "bytes" not in m.group(1)
     assert "BroadcastExchange" in plan  # zones side broadcast
-
-
-def test_terrain_stats_single_arrow_pass(spark, sf0001_dir):
-    from georaster_spark.operators import algebra
-
-    imgs = geo.georegister(spark.read.parquet(str(sf0001_dir / "images.parquet")))
-    plan = _plan(algebra.terrain_stats(imgs))
-    assert "Exchange" not in plan
-    assert plan.count("MapInPandas") + plan.count("ArrowEvalPython") == 1
 
 
 def test_pip_nonbroadcast_path_is_shuffled(spark, sf0001_dir):
