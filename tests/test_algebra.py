@@ -89,3 +89,34 @@ def test_bilateral_matches_numpy(spark, sf0001_dir):
         assert g["sum_out"] == o.sum()
         assert g["n_changed"] == (o != c0).sum()
         assert g["out_checksum"] == (o * wt).sum()
+
+
+_KERNELS = (
+    algebra.chamfer_stats,
+    algebra.bilateral_stats,
+    algebra.aniso_stats,
+    algebra.adaptive_threshold_stats,
+    algebra.homography_stats,
+    algebra.edt_stats,
+    algebra.int_transform_stats,
+    algebra.cdf53_census,
+    algebra.ntt_census,
+    algebra.hamming_code_census,
+    algebra.png_filter_census,
+    algebra.rlsa_smear,
+    algebra.btc_encode,
+    algebra.schmitt_census,
+    algebra.structure_tensor,
+)
+
+
+def test_new_ops_single_arrow_hop(spark, sf0001_dir):
+    """Every kernel of the module is one fused pass: pixels cross the
+    JVM->Python Arrow boundary exactly once."""
+    tiles = geo.georegister(spark.read.parquet(str(sf0001_dir / "images.parquet")))
+    for op in _KERNELS:
+        plan = op(tiles)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1, (
+            op.__name__,
+            plan,
+        )

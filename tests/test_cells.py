@@ -136,3 +136,32 @@ def test_cover2_fast_path_matches_general(spark):
     ).collect()
     for row in rows:
         assert list(row["fast"]) == list(row["general"])
+
+
+def test_morton_key_spark_matches_numpy(spark):
+    """The Z-order key of the curve-locality census, fed Spark's lattice
+    coords of r = 13 cells, equals a NumPy bit interleave of the oracle's
+    decoded (ix, iy)."""
+    from georaster_spark.operators.spatial_index import morton_key
+
+    r = 13
+    rng = np.random.default_rng(13)
+    x = rng.uniform(0, DOMAIN, 500)
+    y = rng.uniform(0, DOMAIN, 500)
+    _, ix, iy = oracle.cell_decode(oracle.cell_encode(x, y, r))
+    expect = np.zeros_like(ix)
+    for b in range(r):
+        expect |= ((ix >> b) & 1) << (2 * b)
+        expect |= ((iy >> b) & 1) << (2 * b + 1)
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(x, y)], "x double, y double"
+    )
+    got = (
+        df.select(
+            morton_key(cells.cell_ix(F.col("x"), r), cells.cell_iy(F.col("y"), r), r)
+            .alias("m")
+        )
+        .toPandas()["m"]
+        .to_numpy()
+    )
+    assert np.array_equal(got.astype(np.int64), expect)

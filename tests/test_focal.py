@@ -1,68 +1,27 @@
-"""3x3 focal map algebra (operators/algebra.focal_stats)."""
+"""3x3 focal kernels of operators/algebra on tiles without an interior."""
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import functions as F
+import pandas as pd
 
 from georaster_spark import oracle
 from georaster_spark.operators import algebra
-from georaster_spark.operators import georegister as geo
-
-
-def test_focal_stats_vs_numpy(spark, sf0001_dir):
-    tiles = geo.georegister(
-        spark.read.parquet(str(sf0001_dir / "images.parquet"))
-    ).where(geo.image_idx() < 6)
-    rows = {r["image_id"]: r for r in algebra.focal_stats(tiles).collect()}
-    assert len(rows) == 6
-    meta = {
-        r["image_id"]: r
-        for r in spark.read.parquet(str(sf0001_dir / "images.parquet"))
-        .select("image_id", "w", "h", "fmt")
-        .where(F.substring("image_id", 4, 10).cast("long") < 6)
-        .collect()
-    }
-    for iid, r in rows.items():
-        m = meta[iid]
-        idx = int(iid[3:])
-        want = _expect_fmt(idx, int(m["w"]), int(m["h"]), m["fmt"])
-        for k, v in want.items():
-            assert r[k] == v, (iid, k, r[k], v)
-
-
-def _expect_fmt(idx: int, w: int, h: int, fmt: str):
-    arr = oracle.ramp_tile(idx, w, h).astype(np.int64)
-    if fmt == "qnt":
-        arr = (arr // 4) * 4 + 2
-    box = sum(
-        arr[1 + di : h - 1 + di, 1 + dj : w - 1 + dj]
-        for di in (-1, 0, 1)
-        for dj in (-1, 0, 1)
-    )
-    grad = np.abs(arr[1:-1, 2:] - arr[1:-1, :-2]) + np.abs(
-        arr[2:, 1:-1] - arr[:-2, 1:-1]
-    )
-    wt = np.arange(1, (h - 2) * (w - 2) + 1, dtype=np.int64).reshape(h - 2, w - 2)
-    return {
-        "n_interior": (h - 2) * (w - 2),
-        "focal_checksum": int((box * wt).sum()),
-        "grad_l1_sum": int(grad.sum()),
-        "grad_max": int(grad.max()),
-    }
 
 
 def test_focal_stats_degenerate_tile(spark):
-    """w < 3 has no interior: all stats zero, no crash."""
-    import pandas as pd
-
+    """w < 3 has no interior: the interior-only 3x3 kernels emit one row
+    of zero stats, no crash."""
     raw = oracle.ramp_tile(5, 2, 2).tobytes()
     pdf = pd.DataFrame(
         {"image_id": ["img0000000005"], "bytes": [raw], "w": [2], "h": [2],
          "fmt": ["raw"]}
     )
     df = spark.createDataFrame(pdf)
-    r = algebra.focal_stats(df).collect()[0]
-    assert (r["n_interior"], r["focal_checksum"], r["grad_l1_sum"], r["grad_max"]) == (
+    (b,) = algebra.bilateral_stats(df).collect()
+    assert (b["n_interior"], b["sum_out"], b["n_changed"], b["out_checksum"]) == (
         0, 0, 0, 0,
+    )
+    (s,) = algebra.structure_tensor(df).collect()
+    assert (s["n_interior"], s["jxx"], s["jyy"], s["jxy"], s["anisotropy2"]) == (
+        0, 0, 0, 0, 0,
     )

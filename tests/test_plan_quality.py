@@ -249,6 +249,21 @@ def test_rasterize_prunes_bytes_and_has_no_shuffle(spark, sf0001_dir):
     assert "Exchange" not in _plan(q)
 
 
+def test_focal_stats_is_map_only(spark, sf0001_dir):
+    """The windowed (focal) kernels are per-tile: no Exchange anywhere
+    in their plans."""
+    from georaster_spark.operators import algebra
+
+    tiles = geo.georegister(spark.read.parquet(str(sf0001_dir / "images.parquet")))
+    for op in (
+        algebra.bilateral_stats,
+        algebra.aniso_stats,
+        algebra.adaptive_threshold_stats,
+        algebra.structure_tensor,
+    ):
+        assert "Exchange" not in _plan(op(tiles)), op.__name__
+
+
 def test_asof_join_single_shuffle(spark):
     """The union-and-carry as-of plan must shuffle exactly once (the
     window partition) — one Exchange node, keyed on the join key."""

@@ -1,12 +1,11 @@
-"""Region labeling (operators/regions) vs a brute-force flood fill."""
+"""4-connected region labeling of tile masks as a pixel-adjacency graph
+(operators/graph.connected_components_star) vs a brute-force flood fill."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from georaster_spark import oracle
-from georaster_spark.operators import georegister as geo
-from georaster_spark.operators import regions
+from georaster_spark.operators import graph
 
 
 def _flood_stats(mask: np.ndarray) -> tuple[int, int, int, int]:
@@ -39,16 +38,51 @@ def _flood_stats(mask: np.ndarray) -> tuple[int, int, int, int]:
     return n_fg, n_regions, max_region, checksum
 
 
-def test_label_tile_random_masks():
+def _label_stats(spark, masks: list[np.ndarray]) -> list[tuple[int, int, int, int]]:
+    """Label all masks in ONE connected-components run: pixel p of mask k
+    is vertex k * stride + p, edges join 4-adjacent foreground pixels, so
+    a component's id (its min vertex) is k * stride + the region's first
+    pixel in raster order."""
+    stride = max(m.size for m in masks)
+    verts, edges = [], []
+    for k, mask in enumerate(masks):
+        h, w = mask.shape
+        ids = k * stride + np.arange(h * w, dtype=np.int64).reshape(h, w)
+        verts += ids[mask].tolist()
+        right = mask[:, :-1] & mask[:, 1:]
+        down = mask[:-1, :] & mask[1:, :]
+        edges += zip(ids[:, :-1][right].tolist(), ids[:, 1:][right].tolist())
+        edges += zip(ids[:-1, :][down].tolist(), ids[1:, :][down].tolist())
+    v = spark.createDataFrame([(i,) for i in verts], "doc_id long")
+    e = spark.createDataFrame(edges, "a_id long, b_id long")
+    sizes: list[dict[int, int]] = [{} for _ in masks]
+    for r in graph.connected_components_star(e, v).collect():
+        k, first = divmod(r["component"], stride)
+        sizes[k][first] = sizes[k].get(first, 0) + 1
+    return [
+        (
+            sum(s.values()),
+            len(s),
+            max(s.values(), default=0),
+            sum((first + 1) * n for first, n in s.items()),
+        )
+        for s in sizes
+    ]
+
+
+def test_label_tile_random_masks(spark):
     rng = np.random.default_rng(7)
-    for density in (0.0, 0.2, 0.5, 0.8, 1.0):
-        for _ in range(8):
-            mask = rng.random((13, 17)) < density
-            assert regions._label_tile(mask, 17) == _flood_stats(mask)
+    masks = [
+        rng.random((13, 17)) < density
+        for density in (0.0, 0.2, 0.5, 0.8, 1.0)
+        for _ in range(8)
+    ]
+    assert _label_stats(spark, masks) == [_flood_stats(m) for m in masks]
 
 
-def test_label_tile_serpentine():
-    # long snake: worst case for iterative propagation, easy for union-find
+def test_label_tile_serpentine(spark):
+    # long snake: worst case for iterative propagation, O(log n) rounds
+    # for star contraction
     mask = np.zeros((16, 16), dtype=bool)
     for r in range(16):
         mask[r, :] = True
@@ -56,70 +90,4 @@ def test_label_tile_serpentine():
             mask[r, 0] = r % 4 != 0
         else:
             mask[r, 15] = (r + 1) % 4 != 0
-    assert regions._label_tile(mask, 16) == _flood_stats(mask)
-
-
-def test_region_stats_matches_flood(spark, sf0001_dir):
-    lim = 32
-    tiles = geo.georegister(
-        spark.read.parquet(str(sf0001_dir / "images.parquet"))
-    ).where(geo.image_idx() < lim)
-    got = {r["image_id"]: r for r in regions.region_stats(tiles).collect()}
-    assert len(got) == lim
-    for idx in range(lim):
-        z = oracle.ramp_tile(idx, 32, 32).astype(np.int64)
-        if idx % 10 == 3:
-            z = oracle.quantize(z)
-        ref = _flood_stats(z >= regions.DEFAULT_THRESHOLD)
-        r = got[f"img{idx:08d}"]
-        assert (r["n_fg"], r["n_regions"], r["max_region"], r["region_checksum"]) == ref
-
-
-def test_region_stats_map_only_plan(spark, sf0001_dir):
-    tiles = geo.georegister(spark.read.parquet(str(sf0001_dir / "images.parquet")))
-    plan = regions.region_stats(tiles)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-
-def test_mosaic_region_components_seam_exact(spark):
-    """2x2 synthetic mosaic: distributed two-level union-find must equal
-    single-array labeling of the stitched mosaic (seam merges exact)."""
-    rng = np.random.default_rng(11)
-    th, tw, ntx, nty = 16, 16, 2, 2
-    GW, GH = tw * ntx, th * nty
-    mosaic_arr = (rng.random((GH, GW)) * 256).astype(np.uint8)
-    rows = []
-    for ty in range(nty):
-        for tx in range(ntx):
-            sub = mosaic_arr[ty * th:(ty + 1) * th, tx * tw:(tx + 1) * tw]
-            rows.append((ty * ntx + tx, sub.tobytes(), tw, th, "raw"))
-    mosaic = spark.createDataFrame(
-        rows, "tile_id long, bytes binary, w int, h int, fmt string"
-    )
-    got = sorted(
-        (r["component"], r["n_px"], r["n_frags"])
-        for r in regions.mosaic_region_components(
-            mosaic, ntx=ntx, nty=nty, threshold=128
-        ).collect()
-    )
-
-    # reference: single-array labeling of the stitched mosaic
-    lbl = regions._label_image(mosaic_arr >= 128, GW)
-    labels, sizes = np.unique(lbl[lbl >= 0], return_counts=True)
-    # fragment count per component: label each tile separately, count
-    # distinct (tile, local label) pairs mapping into each global comp
-    frags: dict[int, set] = {}
-    for ty in range(nty):
-        for tx in range(ntx):
-            sub = mosaic_arr[ty * th:(ty + 1) * th, tx * tw:(tx + 1) * tw]
-            ll = regions._label_image(sub >= 128, tw)
-            for loc in np.unique(ll[ll >= 0]):
-                i, j = divmod(int(loc), tw)
-                gi, gj = ty * th + i, tx * tw + j
-                comp = int(lbl[gi, gj])
-                frags.setdefault(comp, set()).add((ty, tx, int(loc)))
-    want = sorted(
-        (int(lab), int(sz), len(frags[int(lab)]))
-        for lab, sz in zip(labels, sizes)
-    )
-    assert got == want and len(got) > 0
+    assert _label_stats(spark, [mask]) == [_flood_stats(mask)]
