@@ -14,7 +14,7 @@ What the module holds:
 
 The reference has no graph operators (it is a raster library); this is
 part of the LLM-training-data-pipeline tier the task mandates: LSH
-near-dup joins (textops MinHash/SimHash, vectors V1-V4) emit PAIRS, but dedup
+near-dup joins (textops MinHash/SimHash, vectors V1) emit PAIRS, but dedup
 needs per-document CLUSTER ids so exactly one canonical survives per
 duplicate group.
 

@@ -11955,21 +11955,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("shipping_priority", rel.shipping_priority, lambda *_: rel.shipping_priority_sql()),
     ("events_pivot", rel.events_pivot, lambda *_: rel.events_pivot_sql()),
     ("rolling_hour", rel.rolling_user_value, lambda *_: rel.rolling_user_value_sql()),
-    ("ann_topk_brute", vectors.ann_topk_brute, lambda *_: vectors.ann_topk_brute_sql()),
-    ("ann_lsh", vectors.ann_lsh, lambda *_: vectors.ann_lsh_sql()),
-    ("ann_sq8", vectors.ann_sq8, lambda *_: vectors.ann_sq8_sql()),
-    ("semdedup", vectors.semdedup, lambda *_: vectors.semdedup_sql()),
-    ("ann_pq", vectors.ann_pq, lambda *_: vectors.ann_pq_sql()),
-    ("ann_ivfpq", vectors.ann_ivfpq, lambda *_: vectors.ann_ivfpq_sql()),
-    ("kmeans_embed", vectors.kmeans_embed, lambda *_: vectors.kmeans_embed_sql()),
-    ("jl_projection", vectors.jl_projection, lambda *_: vectors.jl_projection_sql()),
-    ("dim_truncation_recall", vectors.dim_truncation_recall,
-     lambda *_: vectors.dim_truncation_recall_sql()),
-    ("ivf_nprobe_sweep", vectors.ivf_nprobe_sweep, lambda *_: vectors.ivf_nprobe_sweep_sql()),
-    ("ann_binary_hamming", vectors.ann_binary_hamming, lambda *_: vectors.ann_binary_hamming_sql()),
-    ("ivf_cell_purity", vectors.ivf_cell_purity, lambda *_: vectors.ivf_cell_purity_sql()),
-    ("mmr_rerank", vectors.mmr_rerank, lambda *_: vectors.mmr_rerank_sql()),
-    ("hard_negatives", vectors.hard_negative_mining, lambda *_: vectors.hard_negative_mining_sql()),
     ("semivariogram", q_semivariogram, lambda fx, *_: _sql_semivariogram(fx)),
     ("ripley_k", q_ripley_k, lambda fx, *_: _sql_ripley_k(fx)),
     ("dedup_components_star", q_dedup_components_star, lambda *_: _sql_dedup_components()),
@@ -12065,7 +12050,6 @@ QUERY_TABLE: tuple[tuple[str, QueryFn, OracleBuilder | str], ...] = (
     ("ring_centroid", q_ring_centroid, lambda fx, *_: _sql_ring_centroid(fx)),
     ("zone_diameter", q_zone_diameter, lambda fx, *_: _sql_zone_diameter(fx)),
     ("btc_encode", q_btc_encode, lambda fx, w, *_: _sql_btc_encode(fx, w)),
-    ("hubness_census", vectors.hubness_census, lambda *_: vectors.hubness_census_sql()),
     ("stream_topn", q_stream_topn, lambda fx, *_: _sql_stream_topn(fx)),
     ("kdtree_balance", q_kdtree_balance, lambda fx, *_: _sql_kdtree_balance(fx)),
     ("schmitt_census", q_schmitt_census, lambda fx, w, *_: _sql_schmitt_census(fx, w)),

@@ -52,9 +52,6 @@ DEFAULT = [
     "merkle_cells",       # R3b: one Arrow decode + sorted md5 folds
     "pip_raycast",        # R3b: broadcast edges + parity groupBy
     "route_burn",         # A108: broadcast waypoint join + codegen DDA
-    "semdedup",           # A112: IVF-cell groupBy applyInPandas GEMM
-    "ann_ivfpq",          # A114: bucket-pruned compressed-domain scan
-    "kmeans_embed",       # A115: map-only assign + K-row driver update
     "dedup_components_star",  # A116: star-contraction CC rounds
     "adaptive_quadtree",  # A121: per-level census + bounded hot broadcasts
     "od_matrix",          # A122: one user-key window + OD-pair agg
@@ -65,7 +62,6 @@ DEFAULT = [
     "zonal_majority",     # A50-family (round-3 replan): cached-decode hist partials
     "box_nms",            # A165: named-column greedy cascade, zero shuffle
     "segment_intersections",  # A172: grid bucket join + ccw refine
-    "ivf_nprobe_sweep",   # A186: probe-once candidates + GEMM truth
     "ivm_audit",          # A201: delta-partition scan + dims outer merge
     "partition_skew_audit",   # A192: cell census + p99 order statistic
 ]

@@ -19,7 +19,7 @@ QUERIES = [
     # round-3 additions: one per new operator family (shuffly shapes
     # where partition count could plausibly leak into the result)
     "box_nms", "segment_intersections",
-    "mst_boruvka", "ann_binary_hamming",
+    "mst_boruvka", "ann_ivf",
     # a 3-way join with a distributed top-k, and a cross-partition NTILE
     "shipping_priority", "ntile_deciles",
 ]

@@ -1,14 +1,16 @@
 """The query registry (contract.QUERY_TABLE) is well formed: one row per
 query name, every row either has an oracle builder or says why it is
-checked on rows only, and no operator module, contract.py or algebra.py
-keeps a query, DuckDB twin or kernel that no row uses.  Needs no Spark
-session."""
+checked on rows only, and no operator module, contract.py, algebra.py or
+vectors.py keeps a query, DuckDB twin or kernel that no row uses.  Needs
+no Spark session."""
 
 from __future__ import annotations
 
 import inspect
 from collections import Counter
 from types import CodeType, ModuleType
+
+import pytest
 
 from georaster_spark.operators import algebra, relational, textops, vectors
 from georaster_spark.plans import contract
@@ -94,20 +96,27 @@ def _module_functions(mod: ModuleType) -> dict[str, object]:
     }
 
 
+KERNEL_MODULES = (algebra, vectors)  # modules that only registry rows call
+
+
 def _reached_from_rows() -> set:
-    """Every contract.py or algebra.py function some row reaches: by name
-    within the caller's own module, and from any caller into algebra.py
-    through a function-local `from ..operators import algebra` followed by
-    `algebra.<name>` (co_names holds both the module and the attribute)."""
-    scopes = {mod.__name__: _module_functions(mod) for mod in (contract, algebra)}
+    """Every contract.py, algebra.py or vectors.py function some row
+    reaches: by name within the caller's own module, and from any caller
+    into a kernel module through `algebra.<name>` or `vectors.<name>`,
+    whether the module is imported at module level (contract.py's oracle
+    lambdas) or function-locally (co_names holds both the module and the
+    attribute)."""
+    scopes = {mod.__name__: _module_functions(mod) for mod in (contract, *KERNEL_MODULES)}
     stack = [f for _, query, oracle in contract.QUERY_TABLE for f in (query, oracle) if callable(f)]
     reached = set(stack)
     while stack:
         fn = stack.pop()
         names = _code_names(fn)
         callees = [scopes.get(fn.__module__, {})]
-        if "algebra" in names or "operators.algebra" in names:
-            callees.append(scopes[algebra.__name__])
+        for mod in KERNEL_MODULES:
+            short = mod.__name__.rsplit(".", 1)[-1]
+            if short in names or f"operators.{short}" in names:
+                callees.append(scopes[mod.__name__])
         for scope in callees:
             for name in names & scope.keys():
                 if scope[name] not in reached:
@@ -128,9 +137,11 @@ def test_every_contract_query_and_twin_is_reached_from_a_row():
     assert not orphans, orphans
 
 
-def test_every_algebra_function_is_reached_from_a_row():
-    """algebra.py holds per-tile kernels only registry rows call; one no
-    row reaches, through contract.py or another algebra function, is dead."""
+@pytest.mark.parametrize("mod", KERNEL_MODULES, ids=lambda m: m.__name__.rsplit(".", 1)[-1])
+def test_every_algebra_function_is_reached_from_a_row(mod):
+    """algebra.py and vectors.py hold kernels, helpers and twins only
+    registry rows call; one no row reaches, through contract.py or another
+    function of its module, is dead."""
     reached = _reached_from_rows()
-    orphans = sorted(name for name, fn in _module_functions(algebra).items() if fn not in reached)
+    orphans = sorted(name for name, fn in _module_functions(mod).items() if fn not in reached)
     assert not orphans, orphans

@@ -43,35 +43,3 @@ def test_stratified_rates_respected(spark):
            docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert got["en"] == tot["en"]  # 1000 per mille keeps everything
     assert "de" not in got  # 0 per mille keeps nothing
-
-
-def test_jl_projection_distortion_near_unity(spark):
-    """The ±1 JL estimator is unbiased: E[||Δy||²·D/P] = ||Δx||².
-    Individual pair distortions concentrate around 1e6 ppm within the
-    JL deviation band for P=16."""
-    from georaster_spark.operators.vectors import jl_projection
-
-    rows = jl_projection(spark, "/root/testdata/sf0.001").collect()
-    assert len(rows) > 5
-    for r in rows:
-        assert 100_000 <= r["distortion_ppm"] <= 5_000_000, r
-    mean = sum(r["distortion_ppm"] for r in rows) / len(rows)
-    assert 500_000 <= mean <= 2_000_000
-
-
-def test_ivf_nprobe_sweep_monotone(spark):
-    """More probes can only add candidates and hits — the tuning curve
-    is monotone in nprobe, and recall is a valid fraction."""
-    from georaster_spark.operators.vectors import ivf_nprobe_sweep
-
-    rows = sorted(
-        ivf_nprobe_sweep(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["nprobe"],
-    )
-    assert [r["nprobe"] for r in rows] == [1, 2, 3]
-    for a, b in zip(rows, rows[1:]):
-        assert b["n_candidates"] >= a["n_candidates"]
-        assert b["n_hits"] >= a["n_hits"]
-    for r in rows:
-        assert 0 <= r["recall_ppm"] <= 1_000_000
-        assert r["n_hits"] <= 5 * r["n_queries"]

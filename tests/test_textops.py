@@ -21,13 +21,7 @@ CASES = [
     ("minhash_lsh", textops.minhash_lsh_pairs, textops.minhash_lsh_pairs_sql()),
     ("simhash", textops.simhash_pairs, textops.simhash_pairs_sql()),
     ("cosine_near_dup", vectors.cosine_near_dup, vectors.cosine_near_dup_sql()),
-    ("ann_topk_brute", vectors.ann_topk_brute, vectors.ann_topk_brute_sql()),
-    ("ann_lsh", vectors.ann_lsh, vectors.ann_lsh_sql()),
-    ("ann_sq8", vectors.ann_sq8, vectors.ann_sq8_sql()),
-    ("ann_pq", vectors.ann_pq, vectors.ann_pq_sql()),
-    ("kmeans_embed", vectors.kmeans_embed, vectors.kmeans_embed_sql()),
-    ("ann_ivfpq", vectors.ann_ivfpq, vectors.ann_ivfpq_sql()),
-    ("semdedup", vectors.semdedup, vectors.semdedup_sql()),
+    ("ann_ivf", vectors.ann_ivf, vectors.ann_ivf_sql()),
 ]
 
 
@@ -57,7 +51,7 @@ def test_nontrivial_outputs(spark, duck):
     must actually produce pairs/dups at sf0.001."""
     assert textops.minhash_lsh_pairs(spark, SF_DIR).count() > 0
     assert textops.dedup_exact(spark, SF_DIR).count() > 0
-    assert vectors.ann_topk_brute(spark, SF_DIR).count() > 0
+    assert vectors.ann_ivf(spark, SF_DIR).count() > 0
 
 
 def test_minhash_lsh_pairs_equal_exact_jaccard_pairs(spark, duck):
@@ -80,44 +74,3 @@ WHERE len(list_intersect(a.sh, b.sh))
 """).fetchall())
     assert exact
     assert got == exact
-
-
-def test_ann_sq8_accounts_for_every_query(spark, duck):
-    """The recall histogram must cover the whole query set and the SQ8
-    codes must rank well enough that SOME queries get perfect overlap —
-    a quantizer regression (wrong range, off-by-one in the code map)
-    drags the histogram mass down and flips the hash row red anyway."""
-    sdf = vectors.ann_sq8(spark, SF_DIR)
-    rows = {r["overlap"]: (r["n_queries"], r["query_checksum"]) for r in sdf.collect()}
-    nq, qsum = duck.execute(
-        f"SELECT COUNT(*), SUM(vec_id) FROM embeddings WHERE vec_id % {vectors.QUERY_MOD} = 0"
-    ).fetchone()
-    assert sum(n for n, _ in rows.values()) == nq
-    assert sum(s for _, s in rows.values()) == qsum
-    assert max(rows) == vectors.TOPK  # at least one perfect-recall query
-
-
-def test_ann_pq_recall_against_exact(spark):
-    """PQ with data-independent codebooks still has to retrieve real
-    neighbors: mean top-5 overlap with the exact cosine ranking must
-    clear a floor (guards against degenerate all-same codes)."""
-    exact = {}
-    for r in vectors.ann_topk_brute(spark, SF_DIR).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    pq = {}
-    for r in vectors.ann_pq(spark, SF_DIR).collect():
-        pq.setdefault(r["query_id"], set()).add(r["vec_id"])
-    assert set(pq) == set(exact)
-    hits = sum(len(pq[q] & exact[q]) for q in exact)
-    total = sum(len(pq[q]) for q in pq)  # recall@5 against the exact top-10
-    assert hits / total > 0.3
-    assert all(len(v) == 5 for v in pq.values())
-
-
-def test_kmeans_partitions_corpus(spark):
-    rows = vectors.kmeans_embed(spark, SF_DIR).collect()
-    assert len(rows) == vectors.KM_K
-    assert sum(r["n_members"] for r in rows) == 500
-    assert all(r["inertia"] >= 0 for r in rows)
-    # a real clustering, not one catch-all bucket
-    assert sum(1 for r in rows if r["n_members"] > 0) >= 4
