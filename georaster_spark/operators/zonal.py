@@ -145,7 +145,10 @@ def zonal_stats(tiles: DataFrame, zones: DataFrame) -> DataFrame:
             F.max("mx").alias("max_val"),
             F.round(F.sum("s") / F.sum("cnt"), 6).alias("mean_val"),
         )
-        .orderBy("zone_id")
+        # one row per zone: a local sort of the coalesced result gives the
+        # order without orderBy's range-bounds sampling job and shuffle
+        .coalesce(1)
+        .sortWithinPartitions("zone_id")
     )
 
 

@@ -2082,11 +2082,12 @@ def q_stream_cell_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_checkpoint_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op E9 surfaced to the oracle gate: checkpointed partitioned write
-    (per-unit manifests, dynamic overwrite) of a slim tile projection
-    keyed by the res-6 parent cell, read back through the
-    manifest-committed filter, and rolled up — the oracle computes the
-    same rollup straight from the georegister formulas, so the driver
-    hash proves the checkpoint round-trip loses/duplicates nothing.
+    (per-unit manifests, one append write that replaces each written
+    unit's older files) of a slim tile projection keyed by the
+    `_CKPT_RES` parent cell, read back through the manifest-committed
+    filter, and rolled up — the oracle computes the same rollup straight
+    from the georegister formulas, so the driver hash proves the
+    checkpoint round-trip loses/duplicates nothing.
     (Kill/resume behavior itself is pinned in tests/test_scale_machinery.)"""
     import tempfile
 

@@ -400,3 +400,97 @@ def test_knn_join_one_arrow_pass(spark, sf0001_dir):
     assert plan.count("BroadcastHashJoin") == 1
     assert "MapInArrow" in plan
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def _group_jobs(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn ran) inside job group `group`."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpointed_write_is_one_spark_write(spark, sf0001_dir, tmp_path):
+    """E9: a fresh checkpointed_write and a resume each run one Spark
+    write (the unit shuffle's map stage and the write: <= 2 jobs), with
+    no units job, no read-back and no session-wide overwrite-mode flip.
+    The dynamic-overwrite version ran 7 jobs per call."""
+    from georaster_spark.constants import DEFAULT_RES
+    from georaster_spark.functions.cells import cell_parent_chain
+    from georaster_spark.plans import checkpoint as ckpt
+
+    imgs = spark.read.parquet(str(sf0001_dir / "images.parquet")).select("image_id", "w", "h")
+    work = geo.georegister(imgs).select(
+        "image_id", "w", cell_parent_chain(F.col("cell_id"), DEFAULT_RES, 9).alias("unit"))
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    out = tmp_path / "ck"
+
+    rep, jobs = _group_jobs(spark, "test_ckpt_write", lambda: ckpt.checkpointed_write(
+        work, out, "unit", input_snapshot="v0"))
+    assert len(rep.processed_units) > 2 and jobs <= 2
+    dropped = rep.processed_units[::2]
+    for u in dropped:
+        (out / "_manifest" / f"{u}.json").unlink()
+    rep2, jobs2 = _group_jobs(spark, "test_ckpt_resume", lambda: ckpt.checkpointed_write(
+        work, out, "unit", input_snapshot="v0"))
+    assert rep2.processed_units == dropped and jobs2 <= 2
+    assert spark.conf.get(key) == mode
+
+
+def test_zonal_stats_has_no_range_shuffle(spark, sf0001_dir):
+    """E7's per-zone result is ordered by a local sort of one coalesced
+    partition: no orderBy range-bounds sampling job, no rangepartitioning
+    exchange, <= 3 jobs (was 5)."""
+    from georaster_spark.operators import zonal
+
+    tiles = geo.georegister(spark.read.parquet(str(sf0001_dir / "images.parquet")))
+    zones = spark.read.parquet(str(sf0001_dir / "zones.parquet"))
+    q = zonal.zonal_stats(tiles, zones)
+    rows, jobs = _group_jobs(spark, "test_zonal_stats_jobs", q.collect)
+    ids = [r["zone_id"] for r in rows]
+    assert ids and ids == sorted(ids)
+    assert "rangepartitioning" not in _plan(q)
+    assert jobs <= 3
+
+
+def _plan_nodes(plan):
+    """Every node of an executed plan, descending adaptive plans and
+    query stages."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+        return
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_sampling_candidates_broadcast_points(spark, sf0001_dir):
+    """R12: value_at_coords finds its candidates with a BroadcastHashJoin
+    on cell_id whose build side is the points, so the tile side stays a
+    map-only scan; perfbench's sampling.candidates counter reads that
+    join's output rows."""
+    from georaster_spark.operators import sampling
+
+    pts = spark.read.parquet(str(sf0001_dir / "points.parquet"))
+    tiles = geo.georegister(spark.read.parquet(str(sf0001_dir / "images.parquet")))
+    q = sampling.value_at_coords(pts, tiles)
+    q.collect()
+    joins = [
+        n for n in _plan_nodes(q._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "BroadcastHashJoin" and "cell_id" in n.leftKeys().toString()
+    ]
+    assert len(joins) == 1
+    bhj = joins[0]
+    build = bhj.right() if bhj.buildSide().toString() == "BuildRight" else bhj.left()
+    probe = bhj.left() if build.equals(bhj.right()) else bhj.right()
+    assert "point_id" in build.output().toString()
+    assert "point_id" not in probe.output().toString()

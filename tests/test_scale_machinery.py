@@ -5,7 +5,9 @@ icelite snapshot pinning (SURVEY §7.1 M4)."""
 from __future__ import annotations
 
 import json
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from georaster_spark.constants import DEFAULT_RES
@@ -83,6 +85,99 @@ def test_checkpoint_resume_exact(spark, sf0001_dir, tmp_path):
     # idempotent no-op on a complete output
     rep3 = ckpt.checkpointed_write(work, out_b, "unit", input_snapshot="v0")
     assert not rep3.processed_units
+
+
+def _entries(out, unit) -> set[str]:
+    return set(os.listdir(out / "data" / f"unit={unit}"))
+
+
+def _manifest(out, name) -> dict:
+    return json.loads((out / "_manifest" / f"{name}.json").read_text())
+
+
+def test_checkpoint_new_snapshot_rewrites_unit(spark, tmp_path):
+    """A unit whose manifest names another snapshot is written again from
+    the new input, and its older files (and their .crc siblings) are gone."""
+    out = tmp_path / "ck"
+    v0 = spark.createDataFrame([(i, i % 2) for i in range(6)], "id long, unit long")
+    ckpt.checkpointed_write(v0, out, "unit", input_snapshot="v0")
+    old = {u: _entries(out, u) for u in (0, 1)}
+    assert all(any(e.endswith(".crc") for e in es) for es in old.values())
+
+    v1 = spark.createDataFrame([(i, i % 2) for i in range(10, 14)], "id long, unit long")
+    rep = ckpt.checkpointed_write(v1, out, "unit", input_snapshot="v1")
+    assert (rep.processed_units, rep.skipped_units, rep.rows_written) == ([0, 1], [], 4)
+    for u in (0, 1):
+        assert _entries(out, u) and not _entries(out, u) & old[u]
+        assert _manifest(out, u)["input_snapshot"] == "v1"
+    back = sorted(map(tuple, ckpt.read_checkpointed(spark, out).collect()))
+    assert back == sorted((i, i % 2) for i in range(10, 14))
+
+
+def test_checkpoint_unit_missing_from_new_input_is_kept(spark, tmp_path):
+    """A unit with an older snapshot's manifest that the new input lacks
+    keeps its files and its manifest."""
+    out = tmp_path / "ck"
+    v0 = spark.createDataFrame([(i, i % 3) for i in range(9)], "id long, unit long")
+    ckpt.checkpointed_write(v0, out, "unit", input_snapshot="v0")
+    kept_files, kept_manifest = _entries(out, 2), _manifest(out, 2)
+
+    v1 = spark.createDataFrame([(i, i % 2) for i in range(10, 14)], "id long, unit long")
+    rep = ckpt.checkpointed_write(v1, out, "unit", input_snapshot="v1")
+    assert rep.processed_units == [0, 1]
+    assert _entries(out, 2) == kept_files and _manifest(out, 2) == kept_manifest
+    back = ckpt.read_checkpointed(spark, out).where(F.col("unit") == 2)
+    assert sorted(r["id"] for r in back.collect()) == [2, 5, 8]
+
+
+def test_checkpoint_metric_aggs_land_in_manifests(spark, tmp_path):
+    out = tmp_path / "ck"
+    df = spark.createDataFrame([(i, i % 3) for i in range(10)], "id long, unit long")
+    rep = ckpt.checkpointed_write(
+        df, out, "unit", metric_aggs={"max_id": F.max("id"), "n": F.count(F.lit(1))},
+        input_snapshot="v0",
+    )
+    assert rep.rows_written == 10
+    for u, ids in {0: [0, 3, 6, 9], 1: [1, 4, 7], 2: [2, 5, 8]}.items():
+        m = _manifest(out, u)
+        assert m["rows"] == len(ids) and m["metrics"] == {"max_id": max(ids), "n": len(ids)}
+
+
+def test_checkpoint_string_units_round_trip(spark, tmp_path):
+    """String units come back from Spark's escaped directory names: `/`,
+    `=` and `%` survive a write, a resume and the read-back."""
+    out = tmp_path / "ck"
+    units = ["a/b=c", "x%41", "plain"]
+    rows = [(i, units[i % 3]) for i in range(9)]
+    df = spark.createDataFrame(rows, "id long, unit string")
+    rep = ckpt.checkpointed_write(df, out, "unit", input_snapshot="v0")
+    assert rep.processed_units == sorted(units) and rep.rows_written == 9
+    assert ckpt.completed_units(out, "v0") == set(units)
+
+    (out / "_manifest" / "a%2Fb%3Dc.json").unlink()
+    rep2 = ckpt.checkpointed_write(df, out, "unit", input_snapshot="v0")
+    assert rep2.processed_units == ["a/b=c"] and rep2.skipped_units == ["plain", "x%41"]
+    assert sorted(map(tuple, ckpt.read_checkpointed(spark, out).collect())) == sorted(rows)
+
+    # units that all look numeric still read back as the strings written
+    digits = spark.createDataFrame([(1, "007"), (2, "010")], "id long, unit string")
+    ckpt.checkpointed_write(digits, tmp_path / "digits", "unit", input_snapshot="v0")
+    back = ckpt.read_checkpointed(spark, tmp_path / "digits").collect()
+    assert sorted(map(tuple, back)) == [(1, "007"), (2, "010")]
+
+
+def test_checkpoint_rejects_float_and_null_units(spark, tmp_path):
+    out = tmp_path / "ck"
+    floats = spark.createDataFrame([(1, 0.5)], "id long, cell double")
+    with pytest.raises(ValueError, match="'cell'"):
+        ckpt.checkpointed_write(floats, out, "cell")
+    assert not out.exists()
+
+    nulls = spark.createDataFrame([(1, 7), (2, None)], "id long, cell long")
+    with pytest.raises(ValueError, match="'cell'.*null"):
+        ckpt.checkpointed_write(nulls, out, "cell")
+    assert ckpt.completed_units(out) == set()
+    assert [d for d in os.listdir(out / "data") if d.startswith("cell=")] == ["cell=7"]
 
 
 def test_icelite_snapshot_pinning(spark, tmp_path):
